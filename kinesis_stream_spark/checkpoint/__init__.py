@@ -16,18 +16,22 @@ sinks (see ``kinesis_stream_spark.streaming``).
 
 from kinesis_stream_spark.checkpoint.tracker import (
     CheckpointConfig,
+    CheckpointTimeoutError,
     CheckpointTracker,
     SequenceNumber,
     ShardCheckpointTracker,
+    ShardSnapshot,
     ShutdownException,
     TrackerInactiveError,
 )
 
 __all__ = [
     "CheckpointConfig",
+    "CheckpointTimeoutError",
     "CheckpointTracker",
     "SequenceNumber",
     "ShardCheckpointTracker",
+    "ShardSnapshot",
     "ShutdownException",
     "TrackerInactiveError",
 ]

@@ -24,6 +24,15 @@ This is a deliberately dependency-free, synchronous re-expression: the
 reference serializes mutations through a per-shard actor; here each shard
 tracker is single-owner state guarded by a lock (Spark partitions are
 single-threaded per task, the lock only matters for foreachBatch fan-in).
+
+Cost model: every public call takes the shard lock exactly once; an ack
+(``process``) is O(1), plus an O(tracked) completeness check while a
+completion watcher waits; a checkpoint costs O(1) plus O(1) amortized
+per committed number, since the prefix scan stops at the first gap and
+each number is scanned into one commit and released once. The
+per-element scan and release run in C (``takewhile``,
+``set.difference_update``). The lock is re-entrant because watcher
+callbacks run under it and may call back into the tracker.
 """
 
 from __future__ import annotations
@@ -33,6 +42,7 @@ import time
 from collections import deque
 from collections.abc import Callable, Iterable
 from dataclasses import dataclass, field
+from itertools import repeat, starmap, takewhile
 from typing import NamedTuple
 
 
@@ -59,6 +69,12 @@ class TrackerInactiveError(RuntimeError):
     track before Create fails — `CheckpointTrackerActorSpec.scala:48-56`)."""
 
 
+class CheckpointTimeoutError(TimeoutError):
+    """A checkpoint call overran ``CheckpointConfig.timeout_s`` — FATAL
+    (`CheckpointTracker.CheckpointTimeoutException`, rethrown at
+    `RecordProcessorImpl.scala:131-133`)."""
+
+
 class ShutdownException(RuntimeError):
     """Tracker was shut down while a completion watcher was pending
     (`ShardCheckpointTrackerActorSpec` shutdown-before-completion case)."""
@@ -73,9 +89,18 @@ class CheckpointConfig:
     max_duration_s: float = 60.0
     completion_timeout_s: float = 30.0
     # ask-timeout for a single checkpoint call (`reference.conf:16`
-    # checkpoint.timeout, default 20s); exceeding it is FATAL per the O7
-    # taxonomy (streaming/errors.py: CheckpointTimeoutError → FAIL)
+    # checkpoint.timeout, default 20s); a call that overruns it raises
+    # CheckpointTimeoutError, FATAL per the O7 taxonomy (streaming/errors.py)
     timeout_s: float = 20.0
+
+
+class ShardSnapshot(NamedTuple):
+    """One shard tracker's state at one instant (:meth:`ShardCheckpointTracker.snapshot`)."""
+
+    tracked: int  # sequence numbers tracked and not yet checkpointed
+    pending: int  # acks held that the next checkpoint cannot commit yet
+    last_checkpoint: SequenceNumber | None
+    since_checkpoint_s: float  # since the last checkpoint, or since start
 
 
 class ShardCheckpointTracker:
@@ -125,41 +150,39 @@ class ShardCheckpointTracker:
         """Register in-flight sequence numbers (must arrive in shard order,
         as KCL delivers them). Returns the number tracked."""
         with self._lock:
-            self._ensure_active()
-            n = 0
-            for s in seqs:
-                self._tracked.append(s)
-                n += 1
-            return n
+            if not self._active:
+                raise self._inactive()
+            n = len(self._tracked)
+            self._tracked.extend(seqs)
+            return len(self._tracked) - n
 
     def process(self, seq: SequenceNumber) -> None:
         """Mark one sequence number processed (the ``markProcessed`` ack,
         `Record.scala:33-34`). Acks at/below the last checkpoint are
         ignored — they were already durably committed (`:35-37`)."""
         with self._lock:
-            self._ensure_active()
-            if self._last_checkpoint is not None and seq <= self._last_checkpoint:
+            if not self._active:
+                raise self._inactive()
+            last = self._last_checkpoint
+            if last is not None and seq <= last:
                 return
             self._processed.add(seq)
-            self._notify_if_complete()
+            # only an ack can complete the shard (a checkpoint releases
+            # processed numbers alone), so watchers are woken here
+            if self._watchers and self._complete():
+                watchers, self._watchers = self._watchers, []
+                for w in watchers:
+                    w(None)
 
     def checkpointable(self) -> list[SequenceNumber]:
         """Longest processed prefix of the tracked queue (`:86`)."""
         with self._lock:
-            out: list[SequenceNumber] = []
-            for s in self._tracked:
-                if s not in self._processed:
-                    break
-                out.append(s)
-            return out
+            return self._prefix()
 
     def should_checkpoint(self) -> bool:
         """Trigger policy (`:90-94`): buffer full or duration elapsed."""
         with self._lock:
-            return (
-                len(self._tracked) >= self.config.max_buffer_size
-                or (self._clock() - self._last_checkpoint_time) >= self.config.max_duration_s
-            )
+            return self._due()
 
     def checkpoint_if_needed(
         self,
@@ -169,23 +192,34 @@ class ShardCheckpointTracker:
     ) -> SequenceNumber | None:
         """Checkpoint the highest contiguous processed number if the trigger
         policy (or ``force``) says so. Returns the checkpointed number, or
-        None when nothing was checkpointable / thresholds unmet."""
+        None when nothing was checkpointable / thresholds unmet.
+
+        A ``checkpointer`` call that raises, or that overruns
+        ``config.timeout_s`` on the tracker's clock
+        (:class:`CheckpointTimeoutError`), leaves the state untouched."""
         with self._lock:
-            self._ensure_active()
-            if not (force or self.should_checkpoint()):
+            if not self._active:
+                raise self._inactive()
+            if not (force or self._due()):
                 return None
-            prefix = self.checkpointable()
+            prefix = self._prefix()
             if not prefix:
                 # force with a gap at the head still checkpoints nothing
                 return None
             highest = prefix[-1]
-            checkpointer(highest)  # may raise; state untouched on failure
-            for s in prefix:
-                self._tracked.popleft()
-                self._processed.discard(s)
+            start = self._clock()
+            checkpointer(highest)
+            now = self._clock()
+            if now - start > self.config.timeout_s:
+                raise CheckpointTimeoutError(
+                    f"shard {self.shard_id}: checkpoint at {highest} took {now - start:.3f}s"
+                    f" > {self.config.timeout_s}s"
+                )
+            # n poplefts in C (the itertools ``consume`` recipe)
+            deque(starmap(self._tracked.popleft, repeat((), len(prefix))), maxlen=0)
+            self._processed.difference_update(prefix)
             self._last_checkpoint = highest
-            self._last_checkpoint_time = self._clock()
-            self._notify_if_complete()
+            self._last_checkpoint_time = now
             return highest
 
     def checkpoint(self, checkpointer: Callable[[SequenceNumber], None]) -> SequenceNumber | None:
@@ -197,14 +231,26 @@ class ShardCheckpointTracker:
     def is_complete(self) -> bool:
         """Nothing in flight (`ShardCheckpointTrackerActor.scala:111`)."""
         with self._lock:
-            return not self._tracked or all(s in self._processed for s in self._tracked)
+            return self._complete()
+
+    def snapshot(self) -> ShardSnapshot:
+        """Read-only view of the shard's state (the observability half of
+        the actor's ``Get``). ``pending`` counts acks held beyond the
+        checkpointable prefix: behind a gap, or not yet tracked."""
+        with self._lock:
+            return ShardSnapshot(
+                tracked=len(self._tracked),
+                pending=len(self._processed) - len(self._prefix()),
+                last_checkpoint=self._last_checkpoint,
+                since_checkpoint_s=self._clock() - self._last_checkpoint_time,
+            )
 
     def watch_completion(self, callback: Callable[[BaseException | None], None]) -> None:
         """Invoke ``callback(None)`` once all tracked records are processed,
         or ``callback(ShutdownException(...))`` if shut down first. Fires
         immediately if already complete."""
         with self._lock:
-            if self.is_complete:
+            if self._complete():
                 callback(None)
                 return
             self._watchers.append(callback)
@@ -239,16 +285,21 @@ class ShardCheckpointTracker:
         for w in watchers:
             w(err)
 
-    # -- internals -------------------------------------------------------------
-    def _ensure_active(self) -> None:
-        if not self._active:
-            raise TrackerInactiveError(f"tracker for shard {self.shard_id} is inactive")
+    # -- internals: callers hold the lock ---------------------------------------
+    def _inactive(self) -> TrackerInactiveError:
+        return TrackerInactiveError(f"tracker for shard {self.shard_id} is inactive")
 
-    def _notify_if_complete(self) -> None:
-        if self._watchers and self.is_complete:
-            watchers, self._watchers = self._watchers, []
-            for w in watchers:
-                w(None)
+    def _due(self) -> bool:
+        return (
+            len(self._tracked) >= self.config.max_buffer_size
+            or (self._clock() - self._last_checkpoint_time) >= self.config.max_duration_s
+        )
+
+    def _prefix(self) -> list[SequenceNumber]:
+        return list(takewhile(self._processed.__contains__, self._tracked))
+
+    def _complete(self) -> bool:
+        return all(map(self._processed.__contains__, self._tracked))
 
 
 @dataclass
@@ -291,7 +342,7 @@ class CheckpointTracker:
 
     def process(self, shard_id: str, seq: SequenceNumber) -> None:
         tracker = self._shards.get(shard_id)
-        if tracker is None or not tracker.is_active:
+        if tracker is None or not tracker._active:
             return  # benign: ack for a shard whose lease is gone
         tracker.process(seq)
 
@@ -303,6 +354,12 @@ class CheckpointTracker:
         force: bool = False,
     ) -> SequenceNumber | None:
         return self._get(shard_id).checkpoint_if_needed(checkpointer, force=force)
+
+    def snapshot(self) -> dict[str, ShardSnapshot]:
+        """:meth:`ShardCheckpointTracker.snapshot` of every active shard."""
+        with self._lock:
+            shards = [t for t in self._shards.values() if t.is_active]
+        return {t.shard_id: t.snapshot() for t in shards}
 
     def shutdown_shard(self, shard_id: str) -> None:
         """Shard lease lost / shard end (`StreamScheduler.scala:115-125`)."""

@@ -32,16 +32,13 @@ import threading
 import time
 from collections.abc import Callable
 
+# raised by the tracker when a checkpoint call overruns its timeout
+from kinesis_stream_spark.checkpoint.tracker import CheckpointTimeoutError
+
 log = logging.getLogger(__name__)
 
 
 # --- exception taxonomy (KCL analogs) ----------------------------------------
-
-
-class CheckpointTimeoutError(TimeoutError):
-    """Checkpoint did not complete in time — FATAL
-    (`CheckpointTracker.CheckpointTimeoutException`, rethrown at
-    `RecordProcessorImpl.scala:131-133`)."""
 
 
 class ThrottlingError(Exception):

@@ -7,16 +7,23 @@ case from the reference specs (semantics only, no code):
 
 from __future__ import annotations
 
+import random
+import sys
+import threading
+
 import pytest
 
 from kinesis_stream_spark.checkpoint import (
     CheckpointConfig,
+    CheckpointTimeoutError,
     CheckpointTracker,
     SequenceNumber,
     ShardCheckpointTracker,
+    ShardSnapshot,
     ShutdownException,
     TrackerInactiveError,
 )
+from kinesis_stream_spark.streaming import errors
 
 
 def sq(*nums: int) -> list[SequenceNumber]:
@@ -225,6 +232,186 @@ def test_failed_checkpointer_leaves_state_intact(clock):
     assert t.tracked == tuple(sq(1))
     cp = RecordingCheckpointer()
     assert t.checkpoint_if_needed(cp) == SequenceNumber(1)  # retry succeeds
+
+
+def test_checkpoint_overrunning_timeout_is_fatal_and_leaves_state(clock):
+    # reference.conf:16 checkpoint.timeout; the overrun is timed on the
+    # tracker's clock and fails like a raising checkpointer
+    t = ShardCheckpointTracker(
+        "shardId-000", CheckpointConfig(max_buffer_size=1, timeout_s=20.0), clock=clock
+    )
+    t.track(sq(1))
+    t.process(SequenceNumber(1))
+    calls: list[SequenceNumber] = []
+
+    def slow(seq: SequenceNumber) -> None:
+        calls.append(seq)
+        clock.advance(20.5)
+
+    with pytest.raises(CheckpointTimeoutError) as info:
+        t.checkpoint_if_needed(slow)
+    assert calls == sq(1)
+    assert errors.classify(info.value) is errors.Disposition.FAIL
+    assert errors.CheckpointTimeoutError is CheckpointTimeoutError
+    assert t.tracked == tuple(sq(1)) and t.last_checkpoint is None
+    assert t.snapshot().since_checkpoint_s == 20.5  # the clock was not reset
+
+    def at_limit(seq: SequenceNumber) -> None:
+        clock.advance(20.0)  # exactly the timeout is not an overrun
+
+    assert t.checkpoint_if_needed(at_limit) == SequenceNumber(1)
+    assert t.tracked == ()
+
+
+# --- snapshot() against the spec cases ---------------------------------------
+
+
+def test_snapshot_tracked_but_unprocessed(clock):
+    # spec :53-63
+    t = make(clock)
+    t.track(sq(1, 2, 3))
+    clock.advance(4.0)
+    assert t.snapshot() == ShardSnapshot(
+        tracked=3, pending=0, last_checkpoint=None, since_checkpoint_s=4.0
+    )
+
+
+def test_snapshot_counts_acks_behind_a_gap(clock):
+    # spec :100-123 — 2 and 3 wait behind 1; acking 1 frees the whole prefix
+    t = make(clock)
+    t.track(sq(1, 2, 3))
+    t.process(SequenceNumber(3))
+    t.process(SequenceNumber(2))
+    assert t.snapshot()[:2] == (3, 2)
+    t.process(SequenceNumber(1))
+    assert t.snapshot()[:2] == (3, 0)
+
+
+def test_snapshot_after_checkpoint_drops_prefix(clock):
+    # spec :183-206, plus an ack before its track and a late re-ack
+    t = make(clock, buffer=2)
+    t.track(sq(1, 2, 3))
+    t.process(SequenceNumber(1))
+    t.process(SequenceNumber(2))
+    t.process(SequenceNumber(4))  # not tracked yet: held, not checkpointable
+    clock.advance(7.0)
+    assert t.checkpoint_if_needed(RecordingCheckpointer()) == SequenceNumber(2)
+    t.process(SequenceNumber(1))  # below the checkpoint: ignored
+    clock.advance(1.5)
+    assert t.snapshot() == ShardSnapshot(
+        tracked=1, pending=1, last_checkpoint=SequenceNumber(2), since_checkpoint_s=1.5
+    )
+
+
+def test_registry_snapshot_covers_active_shards(clock):
+    reg = CheckpointTracker("worker-1", clock=clock)
+    reg.start_shard("shard-a")
+    reg.start_shard("shard-b")
+    reg.track("shard-a", sq(1, 2))
+    reg.process("shard-a", SequenceNumber(2))
+    reg.shutdown_shard("shard-b")
+    assert reg.snapshot() == {
+        "shard-a": ShardSnapshot(
+            tracked=2, pending=1, last_checkpoint=None, since_checkpoint_s=0.0
+        )
+    }
+
+
+# --- concurrency: one lock acquisition per call -------------------------------
+
+
+def test_concurrent_acks_checkpoints_and_waiters():
+    """Ack threads, a checkpoint thread and completion waiters on one shard.
+    The last number is acked only after the others have drained, so every
+    waiter must still be pending then and be woken by that last ack."""
+    n, n_ackers, n_waiters = 6_000, 6, 3
+    t = ShardCheckpointTracker("shard-c", CheckpointConfig(max_buffer_size=50))
+    seqs = [SequenceNumber(i) for i in range(n)]
+    t.track(seqs)
+    order = seqs[:-1]
+    random.Random(7).shuffle(order)
+    commits: list[SequenceNumber] = []
+    outcomes: list[BaseException | None] = []
+    acking = threading.Event()
+    acking.set()
+
+    def checkpoint_loop() -> None:
+        while acking.is_set():
+            t.checkpoint_if_needed(commits.append)
+
+    def waiter() -> None:
+        try:
+            t.wait_for_completion(timeout_s=60.0)
+            outcomes.append(None)
+        except BaseException as exc:  # noqa: BLE001 — recorded and asserted
+            outcomes.append(exc)
+
+    def ack(part: list[SequenceNumber]) -> None:
+        for s in part:
+            t.process(s)
+
+    ackers = [threading.Thread(target=ack, args=(order[i::n_ackers],), daemon=True) for i in range(n_ackers)]
+    checkpointer = threading.Thread(target=checkpoint_loop, daemon=True)
+    waiters = [threading.Thread(target=waiter, daemon=True) for _ in range(n_waiters)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for thread in (checkpointer, *ackers, *waiters):
+            thread.start()
+        for a in ackers:
+            a.join(timeout=60.0)
+            assert not a.is_alive()
+        acking.clear()
+        checkpointer.join(timeout=60.0)
+        assert not checkpointer.is_alive()
+        assert outcomes == []  # the last number is still in flight
+        t.process(seqs[-1])
+        for w in waiters:
+            w.join(timeout=60.0)
+            assert not w.is_alive()
+    finally:
+        acking.clear()
+        sys.setswitchinterval(switch)
+    assert outcomes == [None] * n_waiters
+    assert t.checkpoint(commits.append) == seqs[-1]
+    assert commits == sorted(set(commits))
+    assert t.tracked == () and t._processed == set() and t.is_complete
+
+
+def test_watcher_racing_the_completing_ack_is_never_lost():
+    """A watcher registers while the ack that completes the shard lands.
+    The long queue makes the completeness check slow, so without one lock
+    around check and register the ack would fall between them."""
+    rounds, n = 100, 2_000
+    seqs = [SequenceNumber(i) for i in range(n)]
+    trackers = []
+    for _ in range(rounds):
+        t = ShardCheckpointTracker("shard-w")
+        t.track(seqs)
+        for s in seqs[:-1]:
+            t.process(s)
+        trackers.append(t)
+    fired: list[list[BaseException | None]] = [[] for _ in range(rounds)]
+    go = threading.Barrier(2, timeout=60.0)
+
+    def register() -> None:
+        for t, f in zip(trackers, fired):
+            go.wait()
+            t.watch_completion(f.append)
+
+    watcher = threading.Thread(target=register, daemon=True)
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        watcher.start()
+        for t in trackers:
+            go.wait()
+            t.process(seqs[-1])
+        watcher.join(timeout=60.0)
+        assert not watcher.is_alive()
+    finally:
+        sys.setswitchinterval(switch)
+    assert fired == [[None]] * rounds
 
 
 # --- CheckpointTrackerActorSpec (registry) cases -----------------------------
