@@ -24,14 +24,25 @@ The operator is a drop-in for ``connected_components`` — same
 recursive-CTE DuckDB oracle verifies it unchanged, and equality with
 the propagation twin is pinned by test on fixtures, fuzz graphs, and a
 long-chain round-count case.
+
+Why both kernels stay: each wins one kind of traffic. On the
+``dedup_connected_components`` chain-copy edges at sf0.1 (11,124 edges;
+shallow near-clique clusters), min-label propagation takes 1.9–2.6 s
+and 23 jobs per call after the first, large/small-star 4.2–5.1 s and
+44–45 jobs (6 interleaved reps, local[4] on a 4-vCPU host, edges
+cached, each call counted to completion). On long chains only
+large/small-star converges within its cap — propagation needs a round
+per hop and raises past ``max_iterations``. Deleting either kernel
+regresses one of the two; merging them needs pointer jumping
+(comp := comp(comp)) so one kernel is fast on both.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kinesis_stream_spark.operators.dedup import _release_local_checkpoint
+from kinesis_stream_spark.operators.lineage import pin_observed, release
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -99,38 +110,24 @@ def connected_components_bigstar(
     clusters — wrong components mean wrong keep-decisions downstream.
     """
     raw = edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-    obs0 = Observation()
-    cur = (
-        raw.where(F.col("u") != F.col("v"))
-        .distinct()
-        .observe(obs0, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
-    )
-    cur_count = int(obs0.get["n"] or 0)
-    converged = False
+    n_rows = F.count(F.lit(1)).alias("n")
+    cur, m = pin_observed(raw.where(F.col("u") != F.col("v")).distinct(), n_rows)
+    cur_count = int(m["n"] or 0)
     for _ in range(max_rounds):
         # row count rides the checkpoint materialization (r12): the
         # former nxt.count() job per round is gone; the subtract still
         # runs only on count-equality (normally just the final round)
-        obs = Observation()
-        nxt = (
-            _small_star(_large_star(cur))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()
-        )
-        nxt_count = int(obs.get["n"] or 0)
+        nxt, m = pin_observed(_small_star(_large_star(cur)), n_rows)
+        nxt_count = int(m["n"] or 0)
         # fixpoint ⇔ equal edge SETS; both sides are distinct, so two
         # one-sided subtracts reduce to count-equality plus one subtract
         # (counts are carried on the driver — no recount of cur's frame)
-        if nxt_count == cur_count and nxt.subtract(cur).count() == 0:
-            _release_local_checkpoint(cur)
-            cur = nxt
-            converged = True
+        converged = nxt_count == cur_count and nxt.subtract(cur).count() == 0
+        release(cur)
+        cur, cur_count = nxt, nxt_count
+        if converged:
             break
-        _release_local_checkpoint(cur)
-        cur = nxt
-        cur_count = nxt_count
-    if not converged:
+    else:
         raise ValueError(
             f"connected_components_bigstar: no fixpoint in {max_rounds} rounds"
         )

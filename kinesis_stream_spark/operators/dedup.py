@@ -30,7 +30,7 @@ the pipeline end-to-end, not just row counts.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from kinesis_stream_spark.functions.hashing import (
@@ -40,6 +40,7 @@ from kinesis_stream_spark.functions.hashing import (
     sql_tokens,
     tokens,
 )
+from kinesis_stream_spark.operators.lineage import pin, pin_observed, release
 from kinesis_stream_spark.sources.batch import spread
 
 DEFAULT_NUM_HASHES = 16
@@ -509,24 +510,6 @@ def exact_dedup_incremental(
 # --- duplicate-cluster resolution (connected components) ----------------------
 
 
-def _release_local_checkpoint(df: DataFrame) -> None:
-    """Free the block-manager storage behind a ``localCheckpoint()``-ed
-    DataFrame whose data has been fully consumed downstream.
-
-    ``Dataset.unpersist()`` only covers cache-manager entries (verified:
-    it leaves localCheckpoint blocks resident), so reach through the
-    plan's ``LogicalRDD`` to the persisted RDD itself. Best-effort by
-    design — py4j internals; a miss just leaves the blocks held until
-    session end, which is the pre-fix behavior.
-    """
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getName().endswith("LogicalRDD"):
-            plan.rdd().unpersist(False)
-    except Exception:
-        pass
-
-
 def _label_sum() -> Column:
     """The monotone convergence metric of :func:`connected_components`:
     SUM of all labels in DECIMAL(38,0) (min-label propagation only ever
@@ -541,7 +524,6 @@ def connected_components(
     src_col: str = "id_a",
     dst_col: str = "id_b",
     max_iterations: int = 25,
-    convergence_check_interval: int = 2,
 ) -> DataFrame:
     """Resolve pairwise duplicate edges into clusters: each vertex gets
     the MINIMUM vertex id reachable from it (the canonical document).
@@ -564,25 +546,26 @@ def connected_components(
     instead). Convergence is a driver-side scalar read from an
     Observation riding the round's own materialization (labels only
     ever decrease, so an unchanged label-sum means the round was a
-    no-op); ``max_iterations`` stays the hard bound.
+    no-op). ``max_iterations`` is a hard bound: a run that has not
+    reached the fixpoint by then raises instead of returning partial
+    labels — wrong components mean wrong keep-decisions downstream
+    (the :func:`~kinesis_stream_spark.operators.components.connected_components_bigstar`
+    contract; that kernel is the one for long chains).
 
     Returns (v, component) — component = min id of the vertex's cluster.
     """
     # Materialize the edge list ONCE. Each round joins against `sym`;
     # without this the (possibly very expensive) upstream pair pipeline
     # re-executes every iteration — measured 64s → ~8s at sf0.1.
-    sym = (
+    sym = pin(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .unionAll(edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")))
-        .localCheckpoint()
     )
-    obs0 = Observation()
-    labels = (
+    labels, m = pin_observed(
         sym.select(F.col("src").alias("v"))
         .distinct()
-        .select("v", F.col("v").alias("comp"))
-        .observe(obs0, _label_sum())
-        .localCheckpoint()
+        .select("v", F.col("v").alias("comp")),
+        _label_sum(),
     )
     # convergence is read from an Observation riding the round's own
     # checkpoint materialization (r12): labels only ever DECREASE
@@ -592,11 +575,8 @@ def connected_components(
     # counts) compared on the driver, no extra job, and the loop can
     # afford to check EVERY round (earlier exit, same labels —
     # post-convergence rounds were no-ops).
-    # convergence_check_interval is retained for API compatibility but
-    # no longer skips checks; it never affected results.
-    del convergence_check_interval
-    prev_sum = obs0.get["label_sum"]
-    for i in range(max_iterations):
+    prev_sum = m["label_sum"]
+    for _ in range(max_iterations):
         # One round = min(own, neighbor min) per vertex, as ONE
         # shuffle-joined neighbor stream UNIONed with the vertex's own
         # (v, comp) row feeding a single min aggregate — the former
@@ -604,27 +584,30 @@ def connected_components(
         # exchanges per round) computed the identical values: every
         # vertex appears in `labels`, so the union branch supplies the
         # own-label operand coalesce/least used to.
-        obs = Observation()
-        new_labels = (
+        # the pin truncates lineage (the plan must not grow per round);
+        # the superseded round's blocks are released once the new
+        # labels are materialized, or the block manager holds
+        # O(iterations) label copies for the session
+        new_labels, m = pin_observed(
             sym.join(labels, sym.dst == labels.v)
             .select(F.col("src").alias("v"), "comp")
             .unionAll(labels.select("v", "comp"))
             .groupBy("v")
-            .agg(F.min("comp").alias("comp"))
-            .observe(obs, _label_sum())
-            .localCheckpoint()  # truncate lineage: plan must not grow per round
+            .agg(F.min("comp").alias("comp")),
+            _label_sum(),
         )
-        new_sum = obs.get["label_sum"]
-        # localCheckpoint() is eager, so the superseded round's blocks are
-        # fully consumed once new_labels materializes — release them, or the
-        # block manager holds O(iterations) label copies for the session.
-        _release_local_checkpoint(labels)
+        release(labels)
         labels = new_labels
-        if new_sum == prev_sum:
+        if m["label_sum"] == prev_sum:
             break
-        prev_sum = new_sum
+        prev_sum = m["label_sum"]
+    else:
+        release(labels, sym)
+        raise ValueError(
+            f"connected_components: no fixpoint in {max_iterations} rounds"
+        )
     # returned labels are self-contained (checkpointed); edge blocks are dead
-    _release_local_checkpoint(sym)
+    release(sym)
     return labels
 
 

@@ -38,40 +38,71 @@ bounded and known.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kinesis_stream_spark.operators.dedup import _release_local_checkpoint
+from kinesis_stream_spark.operators.lineage import (
+    advance,
+    pin,
+    pin_observed,
+    release,
+)
 
 PR_SCALE = 1 << 40
+
+
+def _directed_edges(
+    edges: DataFrame, src_col: str, dst_col: str
+) -> DataFrame:
+    """Non-null distinct (src, dst) edges, pinned — the directed view
+    shared by the PageRank family, HITS and the degree statistics.
+    Callers release it when done."""
+    return pin(
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
+        .distinct()
+    )
+
+
+def _nodes(e: DataFrame) -> DataFrame:
+    """Every endpoint of a :func:`_directed_edges` frame as ``v``,
+    pinned."""
+    return pin(
+        e.select(F.col("src").alias("v"))
+        .unionAll(e.select(F.col("dst").alias("v")))
+        .distinct()
+    )
+
+
+def _canonical_edges(
+    edges: DataFrame, src_col: str, dst_col: str
+) -> DataFrame:
+    """The undirected simple graph as distinct (a, b) pairs with a < b:
+    NULL endpoints and self-loops drop, each edge appears once. Lazy —
+    :func:`triangle_stats` and :func:`modularity` pin it as it is,
+    :func:`_undirected_edges` pins its doubled form."""
+    uu, vv = F.col(src_col), F.col(dst_col)
+    return (
+        edges.where(uu.isNotNull() & vv.isNotNull())
+        .where(uu != vv)
+        .select(F.least(uu, vv).alias("a"), F.greatest(uu, vv).alias("b"))
+        .distinct()
+    )
 
 
 def _undirected_edges(
     edges: DataFrame, src_col: str, dst_col: str
 ) -> DataFrame:
-    """Cleaned, doubled, deduped adjacency, checkpoint-pinned: NULL
-    endpoints and self-loops drop; every undirected edge appears as
-    both (a, b) and (b, a). Shared by the fixed-round operators
-    (:func:`kcore`, :func:`label_propagation`) so the graph-cleaning
-    invariant lives in exactly one place — callers release the
-    returned checkpoint when done."""
-    e = (
-        edges.where(F.col(src_col).isNotNull() & F.col(dst_col).isNotNull())
-        .where(F.col(src_col) != F.col(dst_col))
-        # canonicalize BEFORE the dedup (r12): distinct runs over |E|
-        # canonical pairs instead of 2|E| doubled rows — half the
-        # dedup shuffle — and doubling afterwards cannot re-introduce
-        # duplicates (self-loops are gone, so (u,v) != (v,u))
-        .select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-        )
-        .distinct()
-    )
-    return (
-        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .localCheckpoint(eager=True)
-    )
+    """Cleaned, doubled, deduped adjacency, pinned: every undirected
+    edge appears as both (a, b) and (b, a). Shared by the fixed-round
+    operators (:func:`kcore`, :func:`label_propagation`, the BFS) —
+    callers release the returned checkpoint when done. Canonicalizing
+    BEFORE the dedup (r12) runs the distinct over |E| canonical pairs
+    instead of 2|E| doubled rows — half the dedup shuffle — and
+    doubling afterwards cannot re-introduce duplicates (self-loops are
+    gone, so (u,v) != (v,u))."""
+    e = _canonical_edges(edges, src_col, dst_col)
+    return pin(e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))))
 
 
 def _pagerank_round(
@@ -80,12 +111,16 @@ def _pagerank_round(
     outdeg: DataFrame,
     nn: DataFrame,
     r: DataFrame,
+    seedset: DataFrame | None = None,
 ) -> DataFrame:
     """One power-iteration round (module docstring for the integer
     semantics) — factored out so plan tests can pin the round SHAPE
     (broadcast scalars, hash joins, no cartesian) directly: inside
     :func:`pagerank` every round's output is an eager checkpoint, which
-    truncates the explainable plan."""
+    truncates the explainable plan. With ``seedset`` — (v, is_seed)
+    for the seed nodes, ``nn`` then holding the seed count — the
+    teleport and dangling mass land on the seeds only: the
+    :func:`personalized_pagerank` round."""
     contribs = (
         e.join(r.select(F.col("v").alias("src"), "r"), "src")
         .join(outdeg.select(F.col("v").alias("src"), "deg"), "src")
@@ -96,20 +131,49 @@ def _pagerank_round(
     dang = r.join(outdeg, "v", "left_anti").agg(
         F.coalesce(F.sum("r"), F.lit(0)).cast("long").alias("ds")
     )
+    nxt = nodes.join(contribs, "v", "left")
+    teleport = f"(3 * {PR_SCALE}) div (20 * n) + (17 * ds) div (20 * n)"
+    if seedset is not None:
+        nxt = nxt.join(seedset, "v", "left")
+        teleport = f"case when is_seed = 1 then {teleport} else 0 end"
     return (
-        nodes.join(contribs, "v", "left")
-        .crossJoin(F.broadcast(dang))
+        nxt.crossJoin(F.broadcast(dang))
         .crossJoin(F.broadcast(nn))
         .select(
             "v",
-            F.expr(
-                f"(3 * {PR_SCALE}) div (20 * n)"
-                " + (17 * ds) div (20 * n)"
-                " + coalesce(csum, 0)"
-            )
-            .cast("long")
-            .alias("r"),
+            F.expr(f"{teleport} + coalesce(csum, 0)").cast("long").alias("r"),
         )
+    )
+
+
+def _out_degrees(e: DataFrame) -> DataFrame:
+    """(v, deg) per source, pinned: out-degrees feed two joins per
+    round, so they are aggregated once instead of up to twice per
+    round."""
+    return pin(
+        e.groupBy(F.col("src").alias("v")).agg(F.count(F.lit(1)).alias("deg"))
+    )
+
+
+def _power_iterate(
+    e: DataFrame,
+    nodes: DataFrame,
+    outdeg: DataFrame,
+    nn: DataFrame,
+    r: DataFrame,
+    iterations: int,
+    seedset: DataFrame | None = None,
+) -> DataFrame:
+    """Run the rounds of :func:`pagerank` / :func:`personalized_pagerank`
+    from the pinned initial ranks ``r``, release every input checkpoint,
+    and project the final ranks to (node, rank_fx, rank)."""
+    for _ in range(iterations):
+        r = advance(r, _pagerank_round(e, nodes, outdeg, nn, r, seedset))
+    release(e, nodes, outdeg, seedset)
+    return r.select(
+        F.col("v").alias("node"),
+        F.col("r").alias("rank_fx"),
+        (F.col("r").cast("double") / PR_SCALE).alias("rank"),
     )
 
 
@@ -135,42 +199,15 @@ def pagerank(
     corpus-sized edge checkpoint. The cost is that construction runs
     the computation (standard for the iterative operators here;
     connected_components does the same)."""
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-        .localCheckpoint()
-    )
-    nodes = (
-        e.select(F.col("src").alias("v"))
-        .unionAll(e.select(F.col("dst").alias("v")))
-        .distinct()
-        .localCheckpoint()
-    )
+    e = _directed_edges(edges, src_col, dst_col)
+    nodes = _nodes(e)
     nn = nodes.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    # out-degrees feed two joins per round; checkpoint once instead of
-    # re-aggregating the edge list up to 2x per round
-    outdeg = (
-        e.groupBy(F.col("src").alias("v"))
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .localCheckpoint()
-    )
-    r = (
+    outdeg = _out_degrees(e)
+    r = pin(
         nodes.crossJoin(F.broadcast(nn))
         .select("v", F.expr(f"{PR_SCALE} div n").alias("r"))
-        .localCheckpoint()
     )
-    for _ in range(iterations):
-        prev = r
-        r = _pagerank_round(e, nodes, outdeg, nn, prev).localCheckpoint()
-        _release_local_checkpoint(prev)
-    for frame in (e, nodes, outdeg):
-        _release_local_checkpoint(frame)
-    return r.select(
-        F.col("v").alias("node"),
-        F.col("r").alias("rank_fx"),
-        (F.col("r").cast("double") / PR_SCALE).alias("rank"),
-    )
+    return _power_iterate(e, nodes, outdeg, nn, r, iterations)
 
 
 def sql_pagerank(
@@ -267,20 +304,17 @@ def kcore(
     for _ in range(rounds):
         deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("degree"))
         keep = deg.where(F.col("degree") >= k).select("a")
-        prev = und
-        und = (
+        und = advance(
+            und,
             und.join(keep, "a", "left_semi")
             .join(keep.select(F.col("a").alias("b")), "b", "left_semi")
-            .select("a", "b")
-            .localCheckpoint(eager=True)
+            .select("a", "b"),
         )
-        _release_local_checkpoint(prev)
-    out = (
+    return (
         und.groupBy("a")
         .agg(F.count(F.lit(1)).alias("degree"))
         .select(F.col("a").alias("node"), "degree")
     )
-    return out
 
 
 def sql_kcore(
@@ -351,18 +385,16 @@ def label_propagation(
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
     und = _undirected_edges(edges, src_col, dst_col)
-    lab = (
+    lab = pin(
         und.select(F.col("a").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("label"))
-        .localCheckpoint(eager=True)
     )
     for _ in range(rounds):
         nbr = und.join(
             lab.select(F.col("node").alias("b"), "label"), "b"
         ).select(F.col("a").alias("node"), "label")
         cnts = nbr.groupBy("node", "label").agg(F.count(F.lit(1)).alias("c"))
-        prev = lab
         # argmax-by-(count desc, label asc) as ONE combinable aggregate:
         # min(struct(-c, label)) — struct order compares -c first
         # (largest count wins), then takes the MIN label among ties.
@@ -371,20 +403,19 @@ def label_propagation(
         # re-executed the edge-sized cnts subtree on both join inputs
         # — two neighbor joins + three exchanges per round instead of
         # one join + two combinable aggregations (r12).
-        lab = (
+        lab = advance(
+            lab,
             cnts.groupBy("node")
             .agg(
                 F.min(
                     F.struct((-F.col("c")).alias("nc"), F.col("label"))
                 ).alias("w")
             )
-            .select("node", F.col("w.label").alias("label"))
-            .localCheckpoint(eager=True)
+            .select("node", F.col("w.label").alias("label")),
         )
-        _release_local_checkpoint(prev)
     # the returned labels are checkpointed, so the adjacency block is
     # no longer reachable — release it (the pagerank discipline)
-    _release_local_checkpoint(und)
+    release(und)
     return lab
 
 
@@ -449,31 +480,24 @@ def triangle_stats(
     swapping the comparator is a one-line deployment knob. The edge
     list is checkpointed once and reused by all three join legs and
     the degree count."""
-    uu, vv = F.col(src_col), F.col(dst_col)
-    e = (
-        edges.where(uu.isNotNull() & vv.isNotNull())
-        .where(uu != vv)
-        .select(F.least(uu, vv).alias("u"), F.greatest(uu, vv).alias("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = pin(_canonical_edges(edges, src_col, dst_col))
     deg = (
-        e.select(F.col("u").alias("node"))
-        .union(e.select(F.col("v").alias("node")))
+        e.select(F.col("a").alias("node"))
+        .union(e.select(F.col("b").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("degree"))
     )
     e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
     tri = (
-        e1.join(e2, F.col("e2.u") == F.col("e1.v"))
+        e1.join(e2, F.col("e2.a") == F.col("e1.b"))
         .join(
             e3,
-            (F.col("e3.u") == F.col("e1.u")) & (F.col("e3.v") == F.col("e2.v")),
+            (F.col("e3.a") == F.col("e1.a")) & (F.col("e3.b") == F.col("e2.b")),
         )
         .select(
-            F.col("e1.u").alias("a"),
-            F.col("e1.v").alias("b"),
-            F.col("e2.v").alias("c"),
+            F.col("e1.a").alias("a"),
+            F.col("e1.b").alias("b"),
+            F.col("e2.b").alias("c"),
         )
     )
     per_node = (
@@ -534,6 +558,24 @@ def sql_triangle_stats(edges_cte: str) -> str:
     """
 
 
+def _sources_at_zero(
+    und: DataFrame, sources: DataFrame, node_col: str, name: str
+) -> DataFrame:
+    """The graph nodes of ``sources`` at distance 0 in column ``name``,
+    pinned — the first frontier of the relaxation loops. Sources that
+    aren't graph nodes drop in the semi join."""
+    return pin(
+        und.select(F.col("a").alias("node"))
+        .distinct()
+        .join(
+            sources.select(F.col(node_col).alias("node")).distinct(),
+            "node",
+            "left_semi",
+        )
+        .select("node", F.lit(0).cast("long").alias(name))
+    )
+
+
 def bfs_hops(
     edges: DataFrame,
     sources: DataFrame,
@@ -580,16 +622,7 @@ def bfs_hops(
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
     und = _undirected_edges(edges, src_col, dst_col)
-    nodes = und.select(F.col("a").alias("node")).distinct()
-    frontier = (
-        nodes.join(
-            sources.select(F.col(node_col).alias("node")).distinct(),
-            "node",
-            "left_semi",
-        )
-        .select("node", F.lit(0).cast("long").alias("dist"))
-        .localCheckpoint(eager=True)
-    )
+    frontier = _sources_at_zero(und, sources, node_col, "dist")
     dist = frontier
     # r12 loop shape: ONE job per hop instead of three. The frontier
     # row count rides the checkpoint materialization as an Observation
@@ -609,25 +642,20 @@ def bfs_hops(
             .select(F.col("b").alias("node"))
             .distinct()
         )
-        obs = Observation()
-        new_frontier = (
+        frontier, m = pin_observed(
             candidates.join(dist, "node", "left_anti")
-            .select("node", F.lit(hop).cast("long").alias("dist"))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+            .select("node", F.lit(hop).cast("long").alias("dist")),
+            F.count(F.lit(1)).alias("n"),
         )
-        frontiers.append(new_frontier)
-        dist = dist.unionAll(new_frontier)
-        frontier = new_frontier
-        n_new = int(obs.get["n"] or 0)
+        frontiers.append(frontier)
+        dist = dist.unionAll(frontier)
+        n_new = int(m["n"] or 0)
         if frontier_sizes is not None:
             frontier_sizes.append(n_new)
         if n_new == 0:
             break
-    out = dist.localCheckpoint(eager=True)
-    for f in frontiers:
-        _release_local_checkpoint(f)
-    _release_local_checkpoint(und)
+    out = pin(dist)
+    release(*frontiers, und)
     return out
 
 
@@ -697,35 +725,21 @@ def personalized_pagerank(
     Scale shape: identical to :func:`pagerank` (edge-sized join +
     dst-keyed sum per round, broadcast 1-row scalars, eager round
     checkpoints with release); the seed flag rides as one extra
-    node-sized left join per round."""
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-        .localCheckpoint()
-    )
-    nodes = (
-        e.select(F.col("src").alias("v"))
-        .unionAll(e.select(F.col("dst").alias("v")))
-        .distinct()
-        .localCheckpoint()
-    )
-    seedset = (
+    node-sized left join per round (:func:`_pagerank_round` with a
+    seed set)."""
+    e = _directed_edges(edges, src_col, dst_col)
+    nodes = _nodes(e)
+    seedset = pin(
         nodes.join(
             seeds.select(F.col(node_col).alias("v")).distinct(),
             "v",
             "left_semi",
         )
         .select("v", F.lit(1).alias("is_seed"))
-        .localCheckpoint()
     )
     ns = seedset.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    outdeg = (
-        e.groupBy(F.col("src").alias("v"))
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .localCheckpoint()
-    )
-    r = (
+    outdeg = _out_degrees(e)
+    r = pin(
         nodes.join(seedset, "v", "left")
         .crossJoin(F.broadcast(ns))
         .select(
@@ -736,46 +750,8 @@ def personalized_pagerank(
             .cast("long")
             .alias("r"),
         )
-        .localCheckpoint()
     )
-    for _ in range(iterations):
-        contribs = (
-            e.join(r.select(F.col("v").alias("src"), "r"), "src")
-            .join(outdeg.select(F.col("v").alias("src"), "deg"), "src")
-            .select("dst", F.expr("(17 * r) div (20 * deg)").alias("c"))
-            .groupBy(F.col("dst").alias("v"))
-            .agg(F.sum("c").alias("csum"))
-        )
-        dang = r.join(outdeg, "v", "left_anti").agg(
-            F.coalesce(F.sum("r"), F.lit(0)).cast("long").alias("ds")
-        )
-        prev = r
-        r = (
-            nodes.join(contribs, "v", "left")
-            .join(seedset, "v", "left")
-            .crossJoin(F.broadcast(dang))
-            .crossJoin(F.broadcast(ns))
-            .select(
-                "v",
-                F.expr(
-                    f"case when is_seed = 1 then"
-                    f" (3 * {PR_SCALE}) div (20 * n)"
-                    " + (17 * ds) div (20 * n) else 0 end"
-                    " + coalesce(csum, 0)"
-                )
-                .cast("long")
-                .alias("r"),
-            )
-            .localCheckpoint()
-        )
-        _release_local_checkpoint(prev)
-    for frame in (e, nodes, outdeg, seedset):
-        _release_local_checkpoint(frame)
-    return r.select(
-        F.col("v").alias("node"),
-        F.col("r").alias("rank_fx"),
-        (F.col("r").cast("double") / PR_SCALE).alias("rank"),
-    )
+    return _power_iterate(e, nodes, outdeg, ns, r, iterations, seedset)
 
 
 def sql_personalized_pagerank(
@@ -909,23 +885,12 @@ def cheapest_path(
             F.col(weight_col).cast("long").alias("w"),
         )
     )
-    und = (
+    und = pin(
         e.unionAll(e.select(F.col("b").alias("a"), F.col("a").alias("b"), "w"))
         .groupBy("a", "b")
         .agg(F.min("w").alias("w"))
-        .localCheckpoint(eager=True)
     )
-    nodes = und.select(F.col("a").alias("node")).distinct()
-    frontier = (
-        nodes.join(
-            sources.select(F.col(node_col).alias("node")).distinct(),
-            "node",
-            "left_semi",
-        )
-        .select("node", F.lit(0).cast("long").alias("cost"))
-        .localCheckpoint(eager=True)
-    )
-    cost = frontier
+    frontier = cost = _sources_at_zero(und, sources, node_col, "cost")
     if frontier_sizes is not None:
         frontier_sizes.append(frontier.count())
     for _ in range(rounds):
@@ -943,42 +908,32 @@ def cheapest_path(
         # improved-count rides the checkpoint materialization as an
         # Observation metric (r12) — the former frontier.count() job
         # per round is gone
-        obs = Observation()
-        improved = (
+        improved, m = pin_observed(
             candidates.join(
                 cost.select("node", F.col("cost").alias("old")),
                 "node",
                 "left",
             )
             .where(F.col("old").isNull() | (F.col("cand") < F.col("old")))
-            .select("node", F.col("cand").alias("cost"))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+            .select("node", F.col("cand").alias("cost")),
+            F.count(F.lit(1)).alias("n"),
         )
-        n_improved = int(obs.get["n"] or 0)
-        prev_cost, prev_frontier = cost, frontier
-        frontier = improved
+        n_improved = int(m["n"] or 0)
         if frontier_sizes is not None:
             frontier_sizes.append(n_improved)
         if n_improved == 0:
             # nothing improved: cost is already the fixpoint — skip
             # rebuilding (and re-materializing) an identical frame
-            _release_local_checkpoint(improved)
-            if prev_cost is not prev_frontier:
-                _release_local_checkpoint(prev_frontier)
-            frontier = prev_cost
+            release(improved)
             break
-        cost = (
-            cost.join(improved, "node", "left_anti")
-            .unionAll(improved)
-            .localCheckpoint(eager=True)
-        )
-        if prev_cost is not prev_frontier:
-            _release_local_checkpoint(prev_cost)
-        _release_local_checkpoint(prev_frontier)
-    if frontier is not cost:
-        _release_local_checkpoint(frontier)
-    _release_local_checkpoint(und)
+        prev_cost = cost
+        cost = pin(cost.join(improved, "node", "left_anti").unionAll(improved))
+        # the first round's frontier IS the initial cost frame; release
+        # takes each frame once
+        release(prev_cost, frontier)
+        frontier = improved
+    # when no round improved anything, frontier IS the returned cost
+    release(None if frontier is cost else frontier, und)
     return cost
 
 
@@ -1068,11 +1023,10 @@ def link_prediction_ra(
     # aggregate and the join, and the capped ew frame feeds BOTH sides
     # of the src-keyed self-join — without them the upstream edge build
     # runs 3× and the degree cap twice (intra-query, recomputed per call)
-    e = (
+    e = pin(
         edges.select(F.col(src_col).alias("w"), F.col(dst_col).alias("v"))
         .where(F.col("w").isNotNull() & F.col("v").isNotNull())
         .distinct()
-        .localCheckpoint(eager=True)
     )
     deg = (
         e.groupBy("w")
@@ -1080,7 +1034,7 @@ def link_prediction_ra(
         .where(F.col("deg") <= max_intermediate_degree)
         .select("w", F.expr("1000000 div deg").alias("quantum"))
     )
-    ew = e.join(deg, "w").localCheckpoint(eager=True)
+    ew = pin(e.join(deg, "w"))
     l, r = ew.alias("l"), ew.alias("r")
     pairs = (
         l.join(
@@ -1160,12 +1114,7 @@ def degree_profile(
     joined broadcast — no window, no iteration."""
     # e feeds four consumers (per role: the degree bucketing and the
     # role total) — checkpoint so the edge build + distinct runs once
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _directed_edges(edges, src_col, dst_col)
     d38 = "decimal(38,0)"
     out = []
     for role, node in (("out", "src"), ("in", "dst")):
@@ -1263,12 +1212,7 @@ def degree_assortativity(
     d19, d38 = "decimal(19,0)", "decimal(38,0)"
     # e feeds both degree aggregates and the per-edge join — checkpoint
     # so the upstream edge build + distinct runs once, not three times
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _directed_edges(edges, src_col, dst_col)
     outd = e.groupBy("src").agg(
         F.count(F.lit(1)).cast("long").alias("x")
     )
@@ -1467,23 +1411,34 @@ def sql_reciprocity(edges_cte: str) -> str:
 HITS_SCALE = 1 << 20
 
 
-def _hits_l1_normalize(raw_ck: DataFrame, t: int) -> DataFrame:
-    """(v, raw) → (v, s) with Σs ≈ HITS_SCALE: s = raw·2^20 div Σraw —
-    exact integer floor division on both engines (all-zero total ⇒ all
-    zeros by contract, never a divide by zero). ``t`` is the exact
-    BIGINT Σraw, read driver-side from an Observation riding the raw
-    frame's own checkpoint materialization (r12) — the former
-    1-row-aggregate + broadcast crossJoin form computed the identical
-    integers but re-executed the edge-join-plus-sum subtree on both
-    branches, doubling the per-half-round edge work."""
+def _hits_half_round(
+    e: DataFrame, s: DataFrame, on: str, to: str
+) -> tuple[DataFrame, DataFrame]:
+    """One HITS half-round: raw(v) = Σ s over the edges joined on
+    ``on`` and grouped by ``to``, pinned, then L1-normalized to (v, s)
+    with Σs ≈ HITS_SCALE: s = raw·2^20 div Σraw — exact integer floor
+    division on both engines (all-zero total ⇒ all zeros by contract,
+    never a divide by zero). Returns (raw checkpoint, normalized lazy
+    projection over it). Σraw is read driver-side from an Observation
+    riding the raw frame's own checkpoint materialization (r12) — the
+    former 1-row-aggregate + broadcast crossJoin form computed the
+    identical integers but re-executed the edge-join-plus-sum subtree
+    on both branches, doubling the per-half-round edge work."""
+    raw, m = pin_observed(
+        e.join(s.select(F.col("v").alias(on), "s"), on)
+        .groupBy(F.col(to).alias("v"))
+        .agg(F.sum("s").cast("long").alias("raw")),
+        F.coalesce(F.sum("raw"), F.lit(0)).cast("long").alias("t"),
+    )
+    t = m["t"]
     if t > 0:
-        s = F.expr(
+        norm = F.expr(
             f"cast(cast(raw as decimal(38,0)) * {HITS_SCALE} div {t}"
             " as long)"
         )
     else:
-        s = F.lit(0).cast("long")
-    return raw_ck.select("v", s.alias("s"))
+        norm = F.lit(0).cast("long")
+    return raw, raw.select("v", norm.alias("s"))
 
 
 def hits_scores(
@@ -1531,23 +1486,11 @@ def hits_scores(
     0-round HITS state — the uniform init is a hub-only frame)."""
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-        .localCheckpoint()
-    )
-    nodes = (
-        e.select(F.col("src").alias("v"))
-        .unionAll(e.select(F.col("dst").alias("v")))
-        .distinct()
-        .localCheckpoint()
-    )
-    h_ck = nodes.select(
-        "v", F.lit(HITS_SCALE).cast("long").alias("s")
-    ).localCheckpoint()
+    e = _directed_edges(edges, src_col, dst_col)
+    nodes = _nodes(e)
+    h_ck = pin(nodes.select("v", F.lit(HITS_SCALE).cast("long").alias("s")))
     h = h_ck
-    a = a_ck = None
+    a_ck = None
     # per half-round the RAW edge sum is checkpointed with the L1 total
     # riding the same materialization as an Observation; normalization
     # is then a lazy projection over the checkpointed blocks with the
@@ -1555,38 +1498,13 @@ def hits_scores(
     # (the former broadcast-total crossJoin re-ran the edge sum on its
     # aggregate branch), and no extra job for the total (r12).
     for _ in range(iterations):
-        obs_a = Observation()
-        araw = (
-            e.join(h.select(F.col("v").alias("src"), "s"), "src")
-            .groupBy(F.col("dst").alias("v"))
-            .agg(F.sum("s").cast("long").alias("raw"))
-            .observe(
-                obs_a,
-                F.coalesce(F.sum("raw"), F.lit(0)).cast("long").alias("t"),
-            )
-            .localCheckpoint()
-        )
-        prev_a_ck = a_ck
-        a_ck = araw
-        a = _hits_l1_normalize(araw, obs_a.get["t"])
-        if prev_a_ck is not None:
-            _release_local_checkpoint(prev_a_ck)
-        obs_h = Observation()
-        hraw = (
-            e.join(a.select(F.col("v").alias("dst"), "s"), "dst")
-            .groupBy(F.col("src").alias("v"))
-            .agg(F.sum("s").cast("long").alias("raw"))
-            .observe(
-                obs_h,
-                F.coalesce(F.sum("raw"), F.lit(0)).cast("long").alias("t"),
-            )
-            .localCheckpoint()
-        )
-        prev_h_ck = h_ck
-        h_ck = hraw
-        h = _hits_l1_normalize(hraw, obs_h.get["t"])
-        _release_local_checkpoint(prev_h_ck)
-    out = (
+        prev_ck = a_ck
+        a_ck, a = _hits_half_round(e, h, "src", "dst")
+        release(prev_ck)
+        prev_ck = h_ck
+        h_ck, h = _hits_half_round(e, a, "dst", "src")
+        release(prev_ck)
+    out = pin(
         nodes.join(h.withColumnRenamed("s", "h"), "v", "left")
         .join(a.withColumnRenamed("s", "a"), "v", "left")
         .select(
@@ -1594,10 +1512,8 @@ def hits_scores(
             F.coalesce(F.col("h"), F.lit(0)).cast("long").alias("hub_fx"),
             F.coalesce(F.col("a"), F.lit(0)).cast("long").alias("auth_fx"),
         )
-        .localCheckpoint()
     )
-    for frame in (e, nodes, h_ck, a_ck):
-        _release_local_checkpoint(frame)
+    release(e, nodes, h_ck, a_ck)
     return out.select(
         "node",
         "hub_fx",
@@ -1711,14 +1627,7 @@ def modularity(
     adds one edge-sized join pass. Measured at sf0.1 in the full-suite
     min-of-2 bench: 9.9 s, vs 6.7 s for the bare LPA query on the same
     graph (both under local[32] full-suite contention)."""
-    uu, vv = F.col(src_col), F.col(dst_col)
-    ce = (
-        edges.where(uu.isNotNull() & vv.isNotNull())
-        .where(uu != vv)
-        .select(F.least(uu, vv).alias("a"), F.greatest(uu, vv).alias("b"))
-        .distinct()
-        .localCheckpoint()
-    )
+    ce = pin(_canonical_edges(edges, src_col, dst_col))
     lbl = label_propagation(
         edges, rounds=rounds, src_col=src_col, dst_col=dst_col
     )

@@ -25,7 +25,7 @@ forever after.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: bits interleaved per dimension (2·BITS ≤ 62 keeps the key BIGINT)
@@ -41,12 +41,6 @@ def _interleave_expr(x: str, y: str, bits: int = ZBITS) -> str:
         terms.append(f"((({x} >> {i}) & 1) * {1 << (2 * i)})")
         terms.append(f"((({y} >> {i}) & 1) * {1 << (2 * i + 1)})")
     return "(" + " + ".join(terms) + ")"
-
-
-def zorder_key(x: str, y: str, *, bits: int = ZBITS) -> Column:
-    """Morton key of two non-negative integer columns (Spark side;
-    column NAMES — the expression compiles into whole-stage codegen)."""
-    return F.expr(_interleave_expr(x, y, bits))
 
 
 def zorder_census(

@@ -4,6 +4,7 @@ covers the query wrappers; these exercise the knobs the wrappers don't).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from kinesis_stream_spark.operators.dedup import ngram_jaccard_pairs
@@ -168,10 +169,8 @@ def test_connected_components_releases_checkpoint_blocks(spark):
     # every intermediate localCheckpoint except the returned labels must
     # be unpersisted — at scale a leaked per-round label copy holds
     # O(iterations × |V|) block-manager storage for the session
-    from kinesis_stream_spark.operators.dedup import (
-        _release_local_checkpoint,
-        connected_components,
-    )
+    from kinesis_stream_spark.operators.dedup import connected_components
+    from kinesis_stream_spark.operators.lineage import release
 
     sc = spark.sparkContext
     before = {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
@@ -183,26 +182,24 @@ def test_connected_components_releases_checkpoint_blocks(spark):
     leaked = {i.id() for i in sc._jsc.sc().getRDDStorageInfo()} - before
     # only the returned labels' own checkpoint may remain resident
     assert len(leaked) <= 1, leaked
-    _release_local_checkpoint(labels)
+    release(labels)
     remaining = {i.id() for i in sc._jsc.sc().getRDDStorageInfo()} - before
     assert not remaining, remaining
 
 
-def test_convergence_interval_one_matches_default(spark):
+def test_connected_components_raises_instead_of_partial_output(spark):
+    # a 41-vertex path needs 40 propagation rounds; with a cap of 5 the
+    # loop must refuse to return labels that are still mid-propagation
     from kinesis_stream_spark.operators.dedup import connected_components
 
     edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11)], "id_a long, id_b long"
+        [(i, i + 1) for i in range(1, 41)], "id_a long, id_b long"
     )
-    every = {
-        r.v: r.comp
-        for r in connected_components(edges, convergence_check_interval=1).collect()
-    }
-    sparse = {
-        r.v: r.comp
-        for r in connected_components(edges, convergence_check_interval=3).collect()
-    }
-    assert every == sparse == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
+    with pytest.raises(ValueError, match="no fixpoint"):
+        connected_components(edges, max_iterations=5)
+    # the same path with room to converge labels everything 1
+    comp = {r.v: r.comp for r in connected_components(edges, max_iterations=41).collect()}
+    assert comp == {v: 1 for v in range(1, 42)}
 
 
 def test_exact_dedup_incremental_edges(spark):
