@@ -15,14 +15,19 @@ ack is documented honestly here: a crash mid-batch loses that whole batch
 
 ``foreach_batch_commit_flow`` additionally threads the parity
 CheckpointTracker through a batch, reproducing the reference's
-track→process→checkpoint ack path per shard inside one micro-batch.
+track→process→checkpoint ack path per shard inside one micro-batch:
+the per-shard range summary and its ``track`` calls run alongside the
+user's processing (as KCL's thread tracks while the stream threads
+process), and only the acks and checkpoints wait for both.
 """
 
 from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -120,6 +125,13 @@ def run_at_most_once(
             return  # replay of a batch whose work already started: drop it
         with open(marker, "w") as f:
             f.write("begun")  # commit intent durably, THEN process
+            f.flush()
+            os.fsync(f.fileno())
+        dir_fd = os.open(marker_dir, os.O_RDONLY)
+        try:
+            os.fsync(dir_fd)  # the marker's directory entry too
+        finally:
+            os.close(dir_fd)
         batch_fn(df, batch_id)
 
     writer = (
@@ -179,6 +191,17 @@ def foreach_batch_commit_flow(
     (`RecordProcessorImpl.scala:42-53`), with the micro-batch as the unit.
     ``checkpointer(shard_id)`` supplies the per-shard durable-commit callable.
 
+    Cycle: (range summary + track) ∥ process, then ack and checkpoint.
+    The summary and its ``track`` calls run on a per-batch helper thread
+    while ``process_fn`` runs on the calling thread — as the reference's
+    KCL thread tracks batch N+1 while the stream threads process batch
+    N (`RecordProcessorImpl.scala:42-64`). Track and process both
+    precede every ack. A micro-batch thus keeps two jobs in flight; the
+    helper inherits the calling thread's Spark job group, description
+    and tags, so ``query.stop()`` cancels both. On any failure the
+    helper is joined before the error is raised: no Spark job of the
+    batch outlives the batch function.
+
     Scale note: the driver collects one ``(shard, min, max, count)``
     RANGE SUMMARY per shard — a fixed-width aggregate row, O(shards)
     regardless of batch row count (pinned by test) — and feeds the
@@ -189,7 +212,10 @@ def foreach_batch_commit_flow(
     max either way; per-RECORD granularity remains available in the
     tracker itself (the O4 suites drive it directly), this flow just
     feeds it a batch-granular range. The durable commit at scale is
-    Spark's offset log (run_at_least_once).
+    Spark's offset log (run_at_least_once). A sequence number wider
+    than ``_SEQ_PAD_WIDTH`` fails the summary, and so the batch, with
+    nothing acked or checkpointed — but only after ``process_fn`` has
+    run, so its side effects replay with the batch (at-least-once).
 
     Checkpoint failures go through the O7 taxonomy
     (`RecordProcessorImpl.scala:126-148` via streaming/errors.py):
@@ -207,17 +233,22 @@ def foreach_batch_commit_flow(
     """
 
     def run(df: DataFrame, batch_id: int) -> None:
-        shard_seqs = _shard_range_summaries(df)
-
         def seqs_of(row) -> list[SequenceNumber]:
             lo = SequenceNumber(int(row["lo"]["seq"]), int(row["lo"]["sub"]))
             hi = SequenceNumber(int(row["hi"]["seq"]), int(row["hi"]["sub"]))
             return [lo] if lo == hi else [lo, hi]
 
-        for row in shard_seqs:
-            tracker.start_shard(row["shardId"])
-            tracker.track(row["shardId"], seqs_of(row))
-        process_fn(df)
+        def summarize_and_track() -> list:
+            rows = _shard_range_summaries(df)
+            for row in rows:
+                tracker.start_shard(row["shardId"])
+                tracker.track(row["shardId"], seqs_of(row))
+            return rows
+
+        with ThreadPoolExecutor(max_workers=1) as helper:
+            summary = helper.submit(inheritable_thread_target(df.sparkSession)(summarize_and_track))
+            process_fn(df)
+            shard_seqs = summary.result()
 
         def ack_cycle(row) -> None:
             shard = row["shardId"]
@@ -233,8 +264,6 @@ def foreach_batch_commit_flow(
             for row in shard_seqs:
                 ack_cycle(row)
         else:
-            from concurrent.futures import ThreadPoolExecutor
-
             with ThreadPoolExecutor(max_workers=parallelism) as pool:
                 futures = [pool.submit(ack_cycle, row) for row in shard_seqs]
                 errors = [f.exception() for f in futures]

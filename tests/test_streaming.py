@@ -12,6 +12,9 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import stat
+import threading
+import time
 import uuid
 
 import pytest
@@ -26,6 +29,7 @@ from kinesis_stream_spark.streaming import (
     events_to_envelope,
     source,
 )
+from kinesis_stream_spark.streaming import delivery
 from kinesis_stream_spark.streaming.delivery import (
     foreach_batch_commit_flow,
     run_at_least_once,
@@ -260,6 +264,29 @@ def test_at_most_once_skips_begun_batch(spark, stream_dir, tmp_path):
     assert sum(redone) == 0
 
 
+def test_at_most_once_marker_is_durable_before_the_batch_runs(
+    spark, stream_dir, tmp_path, monkeypatch
+):
+    """At-most-once commits its intent durably THEN processes: the
+    marker file and its directory entry are fsync'd before every call
+    of the batch function."""
+    events: list[str] = []
+    real_fsync = os.fsync
+
+    def recording_fsync(fd: int) -> None:
+        events.append("dir" if stat.S_ISDIR(os.fstat(fd).st_mode) else "file")
+        real_fsync(fd)
+
+    monkeypatch.setattr(os, "fsync", recording_fsync)
+    cfg = _config(stream_dir, tmp_path)
+    q = run_at_most_once(source(spark, cfg), cfg, lambda df, bid: events.append("batch"))
+    q.awaitTermination(120)
+    batches = [i for i, e in enumerate(events) if e == "batch"]
+    assert batches, events
+    for i in batches:
+        assert events[i - 2 : i] == ["file", "dir"], events
+
+
 def test_foreach_batch_commit_flow_acks_every_shard(spark, stream_dir, tmp_path):
     """commitFlow parity (CommitGraphStages.scala:16-17): every shard in the
     batch is tracked, processed, and checkpointed at its highest sequence."""
@@ -409,6 +436,132 @@ def test_commit_flow_fatal_checkpoint_fails_query(spark, stream_dir, tmp_path):
     q = run_at_least_once(source(spark, cfg), cfg, batch_fn)
     with pytest.raises(Exception, match="durable store corrupt"):
         q.awaitTermination(120)
+
+
+def _range_batch(spark, rows):
+    """A static micro-batch with the columns the commit flow reads."""
+    return spark.createDataFrame(
+        rows, "shardId string, sequenceNumber string, subSequenceNumber int"
+    )
+
+
+def _recording_checkpointer(committed: dict, asked: list):
+    def checkpointer(shard_id: str):
+        asked.append(shard_id)
+        return lambda seq: committed.__setitem__(shard_id, seq)
+
+    return checkpointer
+
+
+def test_commit_flow_runs_range_summary_alongside_process(spark, monkeypatch):
+    """The range summary runs while ``process_fn`` does, not before it:
+    here the summary waits for ``process_fn`` to start, which a flow
+    that summarizes first would never let happen."""
+    started = threading.Event()
+    real = delivery._shard_range_summaries
+
+    def summary_after_process_starts(df):
+        assert started.wait(20), "range summary did not run alongside process_fn"
+        return real(df)
+
+    monkeypatch.setattr(delivery, "_shard_range_summaries", summary_after_process_starts)
+    committed: dict[str, SequenceNumber] = {}
+
+    def process(df) -> None:
+        started.set()
+        df.count()
+
+    batch_fn = foreach_batch_commit_flow(
+        CheckpointTracker("w"), process, _recording_checkpointer(committed, [])
+    )
+    batch_fn(_range_batch(spark, [("s0", "5", 0), ("s0", "7", 0), ("s1", "3", 1)]), 0)
+    assert committed == {"s0": SequenceNumber(7, 0), "s1": SequenceNumber(3, 1)}
+
+
+def test_commit_flow_process_failure_joins_summary_and_checkpoints_nothing(
+    spark, monkeypatch
+):
+    """If ``process_fn`` raises, its error surfaces, nothing is
+    checkpointed, and the range summary still running beside it has
+    finished — with its jobs in the caller's job group — by the time
+    the batch function returns."""
+
+    class Boom(Exception):
+        pass
+
+    started, summary_done = threading.Event(), threading.Event()
+    real = delivery._shard_range_summaries
+
+    def slow_summary(df):
+        started.wait(20)
+        time.sleep(0.5)  # still running when process_fn raises
+        rows = real(df)
+        summary_done.set()
+        return rows
+
+    def process(df) -> None:
+        started.set()
+        raise Boom("user processing failed")
+
+    monkeypatch.setattr(delivery, "_shard_range_summaries", slow_summary)
+    committed: dict[str, SequenceNumber] = {}
+    asked: list[str] = []
+    batch_fn = foreach_batch_commit_flow(
+        CheckpointTracker("w"), process, _recording_checkpointer(committed, asked)
+    )
+    sc = spark.sparkContext
+    group = f"commit-flow-failure-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(Boom, match="user processing failed"):
+            batch_fn(_range_batch(spark, [("s0", "5", 0), ("s1", "3", 0)]), 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert summary_done.is_set()
+    status = sc.statusTracker()
+    jobs = status.getJobIdsForGroup(group)
+    assert jobs  # the summary's jobs inherited the caller's group
+    assert all(status.getJobInfo(j).status != "RUNNING" for j in jobs)
+    assert asked == [] and committed == {}
+
+
+def test_commit_flow_oversize_sequence_number_fails_batch_after_process(spark):
+    """A sequence number wider than the pad trips the summary's guard:
+    the batch fails with nothing checkpointed, after ``process_fn`` has
+    run (its side effects replay with the batch — at-least-once)."""
+    processed: list[int] = []
+    committed: dict[str, SequenceNumber] = {}
+    asked: list[str] = []
+    batch_fn = foreach_batch_commit_flow(
+        CheckpointTracker("w"),
+        lambda df: processed.append(df.count()),
+        _recording_checkpointer(committed, asked),
+    )
+    wide = "1" * (delivery._SEQ_PAD_WIDTH + 1)
+    with pytest.raises(Exception, match="sequenceNumber wider than pad"):
+        batch_fn(_range_batch(spark, [("s0", "5", 0), ("s1", wide, 0)]), 0)
+    assert processed == [2]
+    assert asked == [] and committed == {}
+
+
+def test_commit_flow_jobs_stay_in_the_stream_job_group(spark, stream_dir, tmp_path):
+    """Every job of a drained micro-batch — the range summary's on its
+    helper thread included — carries the stream's job group, so
+    ``query.stop()`` cancels them all: no ungrouped job appears."""
+    cfg = _config(stream_dir, tmp_path)
+    src = source(spark, cfg)
+    committed: dict[str, SequenceNumber] = {}
+    batch_fn = foreach_batch_commit_flow(
+        CheckpointTracker(cfg.worker_id, cfg.checkpoint),
+        lambda df: df.count(),
+        _recording_checkpointer(committed, []),
+    )
+    status = spark.sparkContext.statusTracker()
+    before = set(status.getJobIdsForGroup(None))
+    q = run_at_least_once(src, cfg, batch_fn)
+    q.awaitTermination(120)
+    assert len(committed) == 4
+    assert set(status.getJobIdsForGroup(None)) - before == set()
 
 
 def test_stream_session_equals_batch(spark, sf_dir, stream_dir, tmp_path):
