@@ -35,6 +35,18 @@ large/small-star converges within its cap — propagation needs a round
 per hop and raises past ``max_iterations``. Deleting either kernel
 regresses one of the two; merging them needs pointer jumping
 (comp := comp(comp)) so one kernel is fast on both.
+
+Pointer jumping is blocked on ``lineage.pin``, not on the algorithm: it
+converged a 64-node path in 7 rounds (both id orders) and matched
+union-find on 13 shape and fuzz graphs. But a pinned frame inherits its
+source plan's ``sizeInBytes`` estimate, and a round that joins the
+labels with themselves (``comp := labels[prop(v)]``) squares it. On a
+200-edge path the estimate's bit length after rounds 1–7 was 191, 444,
+950, 1962, 3987, 8036, 16133 (min-label rounds: 128, 191, 254 … 507,
+about +63 bits a round), and a 200-node path with shuffled ids stalled
+for more than 10 minutes with the driver inside ``BigInteger.multiply``
+in Catalyst's join statistics. ``lineage.pin`` must drop the inherited
+estimate before that merge is tried.
 """
 
 from __future__ import annotations

@@ -304,12 +304,9 @@ def embedding_drift(
     fit = kmeans_fit(
         emb_a, k=k, dim=dim, iterations=iterations, id_col=id_col, vec_col=vec_col
     )
-    # k rows, already a materialized local relation (kmeans_fit is
-    # driver-iterated since r12 — the former lineage-cut checkpoint was
-    # a leftover); carry the driver-side rows memo through the select
-    # so both assignment passes skip the k-row collect job.
+    # k rows in a local relation: both assignment passes collect them
+    # without a job
     cents = fit.select("cid", "centroid")
-    cents._ksp_cent_rows = getattr(fit, "_ksp_cent_rows", None)
     a_counts = (
         assign_to_centroids(emb_a, cents, id_col=id_col, vec_col=vec_col)
         .groupBy("cid")

@@ -13,11 +13,11 @@ Spark-first shapes, same determinism discipline as the rest of the
 repo (everything replayable by a DuckDB oracle when this graduates to
 the query inventory):
 
-- **train**: M independent :func:`~kinesis_stream_spark.operators.
-  similarity.kmeans_fit` runs, one per subspace slice — md5-derived
-  seeding, exact fixed-point dots, floor-fixed-point centroid means.
-  M is a small constant, so the per-subspace loop unrolls at plan
-  time; nothing iterates over data on the driver.
+- **train**: the shared Lloyd loop (:func:`~kinesis_stream_spark.
+  operators.similarity.lloyd_rows`, whose one-subspace case is flat
+  k-means) runs all M subspaces in one driver-iterated chain —
+  md5-derived seeding, exact fixed-point dots, floor-fixed-point
+  centroid means.
 - **encode**: explode each vector into its M subvectors (M rows per
   vector), broadcast the (M·ksub)-row codebook, per-(vector, subspace)
   argmax window, fold the winning ids back into one ``array<int>``.
@@ -70,18 +70,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from kinesis_stream_spark.functions.hashing import md5_int64
 from kinesis_stream_spark.functions.vectors import SCALE, _fixed_sum, dot_decimal
 from kinesis_stream_spark.operators.similarity import (
-    _centroid_mean_array,
-    _centroid_sum_cols,
     _cents_array_expr,
+    _exploded_subvectors,
+    _subvector,
     argmax_cid,
-    attach_cent_rows,
+    artifact_frame,
     best_centroid_struct,
-    centroid_rows_sql_array,
     collect_cent_rows,
-    kmeans_centroid_rows,
+    lloyd_rows,
 )
 
 
@@ -90,99 +88,6 @@ def _dot_fx(a: Column, b: Column) -> Column:
     aggregation sums these exactly — summing the per-subspace DOUBLE
     contributions instead would be partition-order-sensitive."""
     return _fixed_sum(F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")))
-
-
-def _subvector(vec: Column, sub: int, subdim: int) -> Column:
-    """Slice subspace ``sub`` (0-based) out of a flat embedding array —
-    1-based ``slice``, pure JVM, no explode."""
-    return F.slice(vec, sub * subdim + 1, subdim)
-
-
-def pq_train_rows(
-    emb: DataFrame,
-    *,
-    m: int = 4,
-    ksub: int = 4,
-    dim: int = 64,
-    iterations: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[tuple[int, int, int, list[float]]]:
-    """Driver-iterated PQ training, all M subspaces fused into ONE
-    Lloyd chain: per round, one map-only pass over the exploded
-    (sub, subv) frame assigns every subvector against its subspace's
-    literal centroids, and a single (sub, cid)-grouped aggregate
-    (M·ksub rows, collected — O(m·ksub·dim/m) doubles, corpus-
-    independent) produces the next round's codebooks. Replaces M
-    independent :func:`kmeans_fit` chains that each re-scanned the
-    corpus and shuffled it (×ksub) through a row_number window per
-    iteration.
-
-    Arithmetic is unchanged: the seed ids are the ksub smallest
-    (md5(id), id) rows — identical for every subspace, exactly as the
-    per-subspace TakeOrdered produced (md5 depends only on the id) —
-    seed centroids are the plain slices of those vectors, assignment is
-    the dbl-domain argmax of ``2·v·c − c·c`` with ties to the lower
-    cid, and the means are the same floor-fixed-point sums, so every
-    subspace's codebook is bit-identical to the sequential form the
-    oracle replays.
-
-    Returns the final iteration's [(sub, cid, n_members, centroid)].
-    """
-    assert dim % m == 0, "dim must split evenly into m subspaces"
-    subdim = dim // m
-    seed_rows = (
-        emb.select(
-            F.col(id_col).alias("sid"),
-            F.col(vec_col).alias("sv"),
-            md5_int64(F.col(id_col).cast("string")).alias("_h"),
-        )
-        .orderBy("_h", "sid")
-        .limit(ksub)
-        .collect()
-    )
-    books: dict[int, list[tuple[int, list[float]]]] = {
-        j: [
-            (i, [float(x) for x in r["sv"]][j * subdim : (j + 1) * subdim])
-            for i, r in enumerate(seed_rows)
-        ]
-        for j in range(m)
-    }
-    sub_rows = _exploded_subvectors(emb, m, subdim, id_col, vec_col).select(
-        "sub", "subv"
-    )
-    last: list = []
-    for _ in range(iterations):
-        # books are all-empty or all-nonempty together: every corpus row
-        # assigns to exactly one cluster per subspace, so a subspace can
-        # only lose every cluster when the corpus is empty — in which
-        # case the seeds were empty too
-        if not any(books[j] for j in range(m)):
-            return []
-        books_arr = F.expr(
-            "array(%s)"
-            % ", ".join(centroid_rows_sql_array(books[j]) for j in range(m))
-        )
-        cid = argmax_cid(F.get(books_arr, F.col("sub")), F.col("subv"))
-        assigned = sub_rows.select("sub", cid.alias("cid"), "subv").where(
-            F.col("cid").isNotNull()
-        )
-        stats = (
-            assigned.groupBy("sub", "cid")
-            .agg(F.count(F.lit(1)).alias("n"), *_centroid_sum_cols(subdim, "subv"))
-            .select("sub", "cid", "n", _centroid_mean_array(subdim).alias("centroid"))
-        )
-        last = sorted(
-            (
-                (r["sub"], r["cid"], r["n"], [float(x) for x in r["centroid"]])
-                for r in stats.collect()
-            ),
-            key=lambda t: (t[0], t[1]),
-        )
-        books = {
-            j: [(c, cent) for s, c, _n, cent in last if s == j] for j in range(m)
-        }
-    return last
 
 
 def pq_train(
@@ -196,55 +101,29 @@ def pq_train(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Train the PQ codebook: (sub, cid, n_members, centroid) with one
-    deterministic Lloyd run per subspace (all M fused into one driver-
-    iterated chain since r12 — :func:`pq_train_rows`). At 100 TB train
+    deterministic Lloyd run per subspace, all M in one driver-iterated
+    chain (:func:`~kinesis_stream_spark.operators.similarity.
+    lloyd_rows`). Every subspace's codebook is bit-identical to a
+    separate flat k-means on its slice. At 100 TB train
     on a hash sample (``stratified_sample``) exactly as the IVF runbook
     prescribes — the codebook is M·ksub rows regardless of corpus
-    size, returned as a materialized local relation (the training
-    artifact a deployment would write to a table), so downstream
-    consumers no longer need lineage cuts."""
-    rows = pq_train_rows(
-        emb, m=m, ksub=ksub, dim=dim, iterations=iterations,
-        id_col=id_col, vec_col=vec_col,
+    size, returned as an :func:`~kinesis_stream_spark.operators.
+    similarity.artifact_frame` (the training artifact a deployment
+    would write to a table): downstream consumers need no lineage cut
+    and collect it without a job."""
+    rows = lloyd_rows(
+        emb, m=m, k=ksub, dim=dim, iterations=iterations, id_col=id_col, vec_col=vec_col
     )
-    return _attach_book_rows(
-        emb.sparkSession.createDataFrame(
-            [(int(s), int(c), int(n), list(cent)) for s, c, n, cent in rows],
-            "sub int, cid int, n_members bigint, centroid array<double>",
-        ),
-        [(s, c, cent) for s, c, _n, cent in rows],
+    return artifact_frame(
+        emb.sparkSession, "sub int, cid int, n_members bigint, centroid array<double>", rows
     )
-
-
-def _collect_cents(cents: DataFrame) -> list[tuple[int, list[float]]]:
-    """(cid, centroid) rows sorted by cid — free when ``cents`` carries
-    the rows the training functions memoize on their returned local
-    relation (attach_cent_rows), otherwise one k-row collect job."""
-    return collect_cent_rows(cents)
-
-
-def _attach_book_rows(
-    df: DataFrame, rows: list[tuple[int, int, list[float]]]
-) -> DataFrame:
-    """The codebook twin of
-    :func:`~kinesis_stream_spark.operators.similarity.attach_cent_rows`:
-    memoize (sub, cid, centroid) rows, pre-shaped as the
-    :func:`_collect_books` dict, on the local-relation codebook frame a
-    training function returns, so consumers skip the collect job."""
-    books: dict[int, list[tuple[int, list[float]]]] = {}
-    for s, c, cent in sorted(rows, key=lambda t: (t[0], t[1])):
-        books.setdefault(int(s), []).append((int(c), [float(x) for x in cent]))
-    df._ksp_book_rows = books
-    return df
 
 
 def _collect_books(codebook: DataFrame) -> dict[int, list[tuple[int, list[float]]]]:
     """sub → [(cid, centroid)] sorted, from a (sub, cid, centroid)
-    codebook frame — free when the frame carries the
-    :func:`_attach_book_rows` memo."""
-    memo = getattr(codebook, "_ksp_book_rows", None)
-    if memo is not None:
-        return memo
+    codebook frame — no job when it is (a projection of) the
+    :func:`~kinesis_stream_spark.operators.similarity.artifact_frame` a
+    trainer returns."""
     books: dict[int, list[tuple[int, list[float]]]] = {}
     for r in sorted(
         codebook.select("sub", "cid", "centroid").collect(),
@@ -254,32 +133,6 @@ def _collect_books(codebook: DataFrame) -> dict[int, list[tuple[int, list[float]
             (r["cid"], [float(x) for x in r["centroid"]])
         )
     return books
-
-
-def _exploded_subvectors(
-    corpus: DataFrame,
-    m: int,
-    subdim: int,
-    id_col: str,
-    vec_col: str,
-    passthrough: tuple[str, ...] = (),
-) -> DataFrame:
-    """(vid, *passthrough, sub, subv): M rows per vector, built with one
-    explode over a plan-time array of slices. ``passthrough`` columns
-    ride along unchanged — the single place the subspace-slicing
-    convention lives (an OPQ-style rotation would change only this)."""
-    subs = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("sub"),
-                _subvector(F.col(vec_col), j, subdim).alias("subv"),
-            )
-            for j in range(m)
-        ]
-    )
-    return corpus.select(
-        F.col(id_col).alias("vid"), *passthrough, F.explode(subs).alias("s")
-    ).select("vid", *passthrough, "s.sub", "s.subv")
 
 
 def pq_encode(
@@ -301,8 +154,8 @@ def pq_encode(
     shuffle; ``passthrough`` columns ride the same projection."""
     assert dim % m == 0
     subdim = dim // m
-    # r12 shape: the broadcast-sized codebook is collected (free for
-    # the local relation pq_train returns) and injected as literal
+    # r12 shape: the broadcast-sized codebook is collected (no job for
+    # the artifact frame pq_train returns) and injected as literal
     # arrays, so the per-(vector, subspace) argmax is a pure projection
     # — encode shuffles NOTHING (the previous form shuffled N·M rows
     # through a max_by aggregate and N·M again through the code fold).
@@ -604,45 +457,32 @@ def ivfpq_train(
     Returns (coarse, book): the k_coarse-row centroid frame and the
     (m·ksub)-row residual codebook. Both are broadcast-sized regardless
     of corpus size; at 100 TB train on a sample, exactly as the IVF
-    runbook prescribes. Since r12 both come back as materialized local
-    relations (driver-iterated training — no lineage cuts needed), and
+    runbook prescribes. Both come back as artifact frames (local
+    relations consumers collect without a job), and
     the residual frame feeding PQ training is a map-only projection
     against the literal coarse centroids instead of a windowed
     assignment + centroid re-join."""
     spark = emb.sparkSession
-    coarse_stats = kmeans_centroid_rows(
-        emb, k=k_coarse, dim=dim, iterations=iterations,
+    coarse_stats = lloyd_rows(
+        emb, m=1, k=k_coarse, dim=dim, iterations=iterations,
         id_col=id_col, vec_col=vec_col,
     )
-    coarse_rows = [(c, cent) for c, _n, cent in coarse_stats]
-    coarse = attach_cent_rows(
-        spark.createDataFrame(
-            [(int(c), list(cent)) for c, cent in coarse_rows],
-            "cid int, centroid array<double>",
-        ),
-        coarse_rows,
-    )
+    coarse_rows = [(c, cent) for _s, c, _n, cent in coarse_stats]
+    coarse = artifact_frame(spark, "cid int, centroid array<double>", coarse_rows)
+    book_schema = "sub int, cid int, centroid array<double>"
     if not coarse_rows:
-        book = _attach_book_rows(
-            spark.createDataFrame([], "sub int, cid int, centroid array<double>"),
-            [],
-        )
-        return coarse, book
+        return coarse, artifact_frame(spark, book_schema, [])
     win = best_centroid_struct(_cents_array_expr(coarse_rows), F.col(vec_col))
     residuals = emb.select(
         F.col(id_col).alias(id_col),
         _residual(F.col(vec_col), win["centroid"]).alias(vec_col),
     )
-    book_rows = pq_train_rows(
-        residuals, m=m, ksub=ksub, dim=dim, iterations=iterations,
+    book_rows = lloyd_rows(
+        residuals, m=m, k=ksub, dim=dim, iterations=iterations,
         id_col=id_col, vec_col=vec_col,
     )
-    book = _attach_book_rows(
-        spark.createDataFrame(
-            [(int(s), int(c), list(cent)) for s, c, _n, cent in book_rows],
-            "sub int, cid int, centroid array<double>",
-        ),
-        [(s, c, cent) for s, c, _n, cent in book_rows],
+    book = artifact_frame(
+        spark, book_schema, [(s, c, cent) for s, c, _n, cent in book_rows]
     )
     return coarse, book
 
@@ -662,7 +502,7 @@ def ivfpq_encode(
     assignment, residual, and all M code argmaxes into ONE projection
     over the corpus scan — zero joins, zero shuffles; the
     full-precision vector is read once and never stored."""
-    coarse_rows = _collect_cents(coarse)
+    coarse_rows = collect_cent_rows(coarse)
     v = corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
     if not coarse_rows:
         # empty quantizer: the old windowed assignment produced no rows
@@ -714,7 +554,7 @@ def ivfpq_topk(
     q = queries.select(
         F.col(query_id_col).alias("qid"), F.col(query_vec_col).alias("qv")
     )
-    qlist = _route_queries(q, _collect_cents(coarse), nprobe=nprobe)
+    qlist = _route_queries(q, collect_cent_rows(coarse), nprobe=nprobe)
     return _adc_topk(
         index, qlist, _collect_books(book), k=k, m=m, subdim=subdim,
         query_id_col=query_id_col,
@@ -947,7 +787,7 @@ def ivfpq_topk_sweep(
         F.col(query_id_col).alias("qid"), F.col(query_vec_col).alias("qv")
     )
     qlist = _route_queries(
-        q, _collect_cents(coarse), nprobe=max(nprobes), with_rank=True
+        q, collect_cent_rows(coarse), nprobe=max(nprobes), with_rank=True
     )
     scored = _adc_scored(
         index,
@@ -1015,7 +855,7 @@ def ivfpq_topk_pruned(
     # enough that the probed-list collect and the scoring join each
     # just re-run it (the old windowed routing needed a localCheckpoint
     # to avoid replaying its exchange twice).
-    qlist = _route_queries(q, _collect_cents(coarse), nprobe=nprobe)
+    qlist = _route_queries(q, collect_cent_rows(coarse), nprobe=nprobe)
     probed = sorted(
         r.list_id for r in qlist.select("list_id").distinct().collect()
     )

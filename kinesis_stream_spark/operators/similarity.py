@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from functools import lru_cache
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -581,6 +581,31 @@ def _cents_array_expr(cents: list[tuple[int, list[float]]]) -> Column:
     return F.expr(centroid_rows_sql_array(cents))
 
 
+_ARTIFACT_LITERALS = {
+    "int": str,
+    "bigint": lambda n: f"{n}L",
+    "array<double>": lambda v: "array(%s)" % ", ".join(_double_lit(float(x)) for x in v),
+}
+
+
+def artifact_frame(spark: SparkSession, schema: str, rows: list[tuple]) -> DataFrame:
+    """A trained artifact (centroids, codebooks) as an inline ``VALUES``
+    table over ``schema`` (``"name type, ..."``). Spark plans it as a
+    LocalRelation and folds projections into it, so collecting it — also
+    after a ``.select`` — runs no job, and the doubles come back
+    bit-exact (:func:`_double_lit`). An inline table cannot be empty, so
+    an empty artifact is one typed NULL row under ``LIMIT 0``."""
+    cols = [c.split(" ", 1) for c in schema.split(", ")]
+    values = [
+        "(%s)" % ", ".join(_ARTIFACT_LITERALS[t](x) for (_n, t), x in zip(cols, row))
+        for row in rows
+    ] or ["(%s)" % ", ".join(f"CAST(NULL AS {t})" for _n, t in cols)]
+    return spark.sql(
+        "SELECT * FROM VALUES %s AS t(%s)%s"
+        % (", ".join(values), ", ".join(n for n, _t in cols), "" if rows else " LIMIT 0")
+    )
+
+
 def best_centroid_struct(cents_arr: Column, v: Column) -> Column:
     """The winning (score, nc, centroid) struct for vector ``v`` over a
     centroid struct-array: score is the training metric
@@ -610,69 +635,126 @@ def argmax_cid(cents_arr: Column, v: Column) -> Column:
     return (-best_centroid_struct(cents_arr, v)["nc"]).cast("int")
 
 
-def kmeans_centroid_rows(
+def _subvector(vec: Column, sub: int, subdim: int) -> Column:
+    """Slice subspace ``sub`` (0-based) out of a flat embedding array —
+    1-based ``slice``, pure JVM, no explode."""
+    return F.slice(vec, sub * subdim + 1, subdim)
+
+
+def _exploded_subvectors(
+    corpus: DataFrame,
+    m: int,
+    subdim: int,
+    id_col: str,
+    vec_col: str,
+    passthrough: tuple[str, ...] = (),
+) -> DataFrame:
+    """(vid, *passthrough, sub, subv): M rows per vector, built with one
+    explode over a plan-time array of slices. ``passthrough`` columns
+    ride along unchanged — the single place the subspace-slicing
+    convention lives (an OPQ-style rotation would change only this)."""
+    subs = F.array(
+        *[
+            F.struct(
+                F.lit(j).alias("sub"),
+                _subvector(F.col(vec_col), j, subdim).alias("subv"),
+            )
+            for j in range(m)
+        ]
+    )
+    return corpus.select(
+        F.col(id_col).alias("vid"), *passthrough, F.explode(subs).alias("s")
+    ).select("vid", *passthrough, "s.sub", "s.subv")
+
+
+def lloyd_rows(
     emb: DataFrame,
     *,
-    k: int = 4,
-    dim: int = 64,
-    iterations: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[tuple[int, int, list[float]]]:
-    """Driver-iterated deterministic Lloyd's k-means: the MLlib shape —
-    per round ONE map-only assignment pass over the corpus feeding one
-    k-row aggregate that is collected to the driver (O(k·dim) doubles,
-    corpus-independent) and re-injected as literals for the next round.
+    m: int,
+    k: int,
+    dim: int,
+    iterations: int,
+    id_col: str,
+    vec_col: str,
+) -> list[tuple[int, int, int, list[float]]]:
+    """Driver-iterated deterministic Lloyd's k-means in each of the ``m``
+    subspaces of ``dim``-wide vectors: flat k-means is ``m=1``, and
+    product quantization trains its ``m`` codebooks in this one chain.
+    The MLlib shape — per round ONE map-only assignment pass over the
+    corpus feeding one (sub, cid)-grouped aggregate that is collected to
+    the driver (m·k rows, O(k·dim) doubles, corpus-independent) and
+    re-injected as literals for the next round. No per-round corpus
+    shuffle, no lineage growth.
 
-    Arithmetic is unchanged from the lazy-plan form this replaced
-    (r12): md5-seeded init via TakeOrdered, assignment argmax of
-    ``2·v·c − c·c`` with exact fixed-point dots and ties to the lower
-    cid, floor-fixed-point centroid means — the collected doubles
-    round-trip exactly (py4j doubles are IEEE-exact both ways), so
-    every score, assignment, and mean is bit-identical to the oracle
-    replay. What changed is the PLAN: the per-iteration broadcast
-    join + N·k-row row_number window (a corpus-sized sort exchange,
-    plus multiplicative lineage growth that forced localCheckpoints
-    downstream) became scan → map argmax → partially-aggregated k-row
-    collect. Empty clusters simply produce no stats row and drop out
-    of the next literal array — identical shrink semantics.
+    Everything an RNG would decide is md5-derived, so the oracles replay
+    it bit for bit:
 
-    Returns the final iteration's [(cid, n_members, centroid)], sorted
-    by cid.
+    - seeds: the k rows with the smallest (md5(id), id) —
+      TakeOrderedAndProject, never a global sort; cid = rank order, and
+      every subspace seeds from slices of the same rows;
+    - assignment: argmax of ``2·v·c − c·c`` with exact fixed-point dots,
+      ties to the lower cid (:func:`best_centroid_struct`);
+    - update: floor-fixed-point means; the collected doubles round-trip
+      exactly (py4j doubles are IEEE-exact both ways).
+
+    Empty clusters produce no stats row and drop out of the next round's
+    literal array (k shrinks). With ``m=1`` each vector is assigned
+    whole: no explode, no per-row pick of the subspace's centroids.
+
+    Returns the final iteration's [(sub, cid, n_members, centroid)]
+    sorted by (sub, cid); [] for an empty corpus.
     """
-    # init: the k vectors with the smallest (md5(id), id) —
-    # TakeOrderedAndProject, never a global sort; cid = rank order.
+    assert dim % m == 0, "dim must split evenly into m subspaces"
+    subdim = dim // m
     seed_rows = (
         emb.select(
             F.col(id_col).alias("sid"),
-            F.col(vec_col).alias("centroid"),
+            F.col(vec_col).alias("sv"),
             md5_int64(F.col(id_col).cast("string")).alias("_h"),
         )
         .orderBy("_h", "sid")
         .limit(k)
         .collect()
     )
-    cents: list[tuple[int, list[float]]] = [
-        (i, [float(x) for x in r["centroid"]]) for i, r in enumerate(seed_rows)
-    ]
-    v = emb.select(F.col(vec_col).alias("v"))
-    stats_rows: list[tuple[int, int, list[float]]] = []
+    seeds = [[float(x) for x in r["sv"]] for r in seed_rows]
+    books = {
+        j: [(i, sv[j * subdim : (j + 1) * subdim]) for i, sv in enumerate(seeds)]
+        for j in range(m)
+    }
+    if m == 1:
+        points = emb.select(F.lit(0).alias("sub"), F.col(vec_col).alias("subv"))
+    else:
+        points = _exploded_subvectors(emb, m, subdim, id_col, vec_col).select(
+            "sub", "subv"
+        )
+    rows: list[tuple[int, int, int, list[float]]] = []
     for _ in range(iterations):
-        if not cents:
+        # every corpus row assigns to one cluster per subspace, so the
+        # books run dry only for an empty corpus, whose seeds were empty
+        if not books[0]:
             return []
-        cid = argmax_cid(_cents_array_expr(cents), F.col("v"))
-        assigned = v.select(cid.alias("cid"), "v").where(F.col("cid").isNotNull())
+        arrays = [centroid_rows_sql_array(books[j]) for j in range(m)]
+        if m == 1:
+            cents = F.expr(arrays[0])
+        else:
+            cents = F.get(F.expr("array(%s)" % ", ".join(arrays)), F.col("sub"))
+        cid = argmax_cid(cents, F.col("subv"))
         stats = (
-            assigned.groupBy("cid")
-            .agg(F.count(F.lit(1)).alias("n"), *_centroid_sum_cols(dim, "v"))
-            .select("cid", "n", _centroid_mean_array(dim).alias("centroid"))
+            points.select("sub", cid.alias("cid"), "subv")
+            .where(F.col("cid").isNotNull())
+            .groupBy("sub", "cid")
+            .agg(F.count(F.lit(1)).alias("n"), *_centroid_sum_cols(subdim, "subv"))
+            .select("sub", "cid", "n", _centroid_mean_array(subdim).alias("centroid"))
         )
-        stats_rows = sorted(
-            ((r["cid"], r["n"], [float(x) for x in r["centroid"]]) for r in stats.collect()),
-            key=lambda t: t[0],
+        rows = sorted(
+            (
+                (r["sub"], r["cid"], r["n"], [float(x) for x in r["centroid"]])
+                for r in stats.collect()
+            ),
+            key=lambda t: (t[0], t[1]),
         )
-        cents = [(c, cent) for c, _, cent in stats_rows]
-    return stats_rows
+        books = {j: [(c, cent) for s, c, _n, cent in rows if s == j] for j in range(m)}
+    return rows
 
 
 def kmeans_fit(
@@ -701,53 +783,30 @@ def kmeans_fit(
       (CENTROID_SCALE — tie-free, unlike a double→DECIMAL cast).
 
     Fixed ``iterations`` (no convergence check) keeps the computation
-    finite and oracle-replayable. Since r12 the iteration is driven
-    from the driver (:func:`kmeans_centroid_rows` — MLlib's shape):
-    each round is one map-only assignment + k-row collected aggregate,
-    so there is NO per-round corpus shuffle and the result frame is a
-    small materialized local relation instead of a deeply nested lazy
-    plan (the nested form cost ~8 s of driver-side plan construction
-    per fit at sf0.1 and forced localCheckpoints on every consumer).
-    Empty clusters drop out (k shrinks), identically on both engines.
+    finite and oracle-replayable. The iteration is driven from the
+    driver (:func:`lloyd_rows` — MLlib's shape): each round is one
+    map-only assignment + k-row collected aggregate, so there is NO
+    per-round corpus shuffle, and the result is an
+    :func:`artifact_frame` — a local relation that consumers collect
+    without a job. Empty clusters drop out (k shrinks), identically on
+    both engines.
 
     Returns (cid, n_members, centroid) from the final iteration.
     """
-    rows = kmeans_centroid_rows(
-        emb, k=k, dim=dim, iterations=iterations, id_col=id_col, vec_col=vec_col
+    rows = lloyd_rows(
+        emb, m=1, k=k, dim=dim, iterations=iterations, id_col=id_col, vec_col=vec_col
     )
-    return attach_cent_rows(
-        emb.sparkSession.createDataFrame(
-            [(int(c), int(n), list(cent)) for c, n, cent in rows],
-            "cid int, n_members bigint, centroid array<double>",
-        ),
-        [(c, cent) for c, _n, cent in rows],
+    return artifact_frame(
+        emb.sparkSession,
+        "cid int, n_members bigint, centroid array<double>",
+        [(c, n, cent) for _s, c, n, cent in rows],
     )
-
-
-def attach_cent_rows(
-    df: DataFrame, rows: list[tuple[int, list[float]]]
-) -> DataFrame:
-    """Memoize the driver-side (cid, centroid) rows a training function
-    ALREADY holds onto the local-relation frame it returns, so
-    :func:`collect_cent_rows` reads them back without a collect job.
-    Pure overhead removal — the memo is by construction exactly what
-    collecting the frame yields, and it rides only the returned object:
-    any transformation produces a new DataFrame without the attribute
-    and falls back to the real collect."""
-    df._ksp_cent_rows = sorted(
-        ((int(c), [float(x) for x in v]) for c, v in rows),
-        key=lambda t: t[0],
-    )
-    return df
 
 
 def collect_cent_rows(cents: DataFrame) -> list[tuple[int, list[float]]]:
-    """(cid, centroid) rows sorted by cid — free when ``cents`` carries
-    the :func:`attach_cent_rows` memo (the local relation the training
-    functions return), otherwise one k-row collect job."""
-    rows = getattr(cents, "_ksp_cent_rows", None)
-    if rows is not None:
-        return rows
+    """(cid, centroid) rows sorted by cid — no job when ``cents`` is (a
+    projection of) an :func:`artifact_frame`, otherwise one k-row
+    collect job."""
     return sorted(
         (
             (r["cid"], [float(x) for x in r["centroid"]])
@@ -769,9 +828,9 @@ def assign_to_centroids(
     lower cid) — the shared step between IVF indexing and semantic
     dedup. Returns (vid, v, cid).
 
-    r12 shape: the k-row centroid frame is collected (free when it is
-    the local relation :func:`kmeans_fit` now returns; otherwise one
-    k-row job) and injected as a literal array, making assignment a
+    r12 shape: the k-row centroid frame is collected (no job when it is
+    the artifact frame :func:`kmeans_fit` returns; otherwise one k-row
+    job) and injected as a literal array, making assignment a
     map-only projection — the previous broadcast join + N·k-row
     row_number window shuffled the whole corpus (×k, carrying the
     vectors) into a sort at every call site. Same winner per row: the

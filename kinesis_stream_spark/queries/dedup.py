@@ -285,9 +285,9 @@ _SQL_CHAIN_COPIES = f"""
 """
 
 
-@_q(
-    "dedup_connected_components",
-    f"""
+#: components of the chain-copy near-dup graph by a recursive walk —
+#: membership is algorithm-independent, so both Spark kernels answer to it
+_SQL_CHAIN_CLUSTERS = f"""
     WITH RECURSIVE edges AS (
       SELECT id_a AS a, id_b AS b
       FROM ({_sql_minhash_pipeline(_SQL_CHAIN_COPIES, 0.9)})
@@ -302,8 +302,27 @@ _SQL_CHAIN_COPIES = f"""
     SELECT comp AS canonical_id, COUNT(*) AS cluster_size, MAX(v) AS max_id
     FROM comp GROUP BY comp
     ORDER BY canonical_id
-    """,
-)
+    """
+
+
+def _chain_copy_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash-LSH near-dup pairs (J ≥ 0.9) over documents ∪ their
+    trunc-3 and trunc-6 copies: A~B and B~C edges exist where A~C may
+    not — the transitive case pairwise dedup alone gets wrong."""
+    docs = load_table(spark, sf_dir, "documents")
+    toks = F.split(F.col("text"), WS_RUN)
+
+    def trunc(n: int) -> DataFrame:
+        cut = F.array_join(F.slice(toks, 1, F.greatest(F.size(toks) - n, F.lit(1))), " ")
+        return docs.select(
+            (F.col("doc_id") + n // 3 * COPY_OFFSET).alias("doc_id"), cut.alias("text")
+        )
+
+    docs3 = docs.select("doc_id", "text").unionAll(trunc(3)).unionAll(trunc(6))
+    return near_duplicates_minhash(docs3, threshold=0.9)
+
+
+@_q("dedup_connected_components", _SQL_CHAIN_CLUSTERS)
 def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-CLUSTER resolution: MinHash-LSH near-dup pairs (J ≥ 0.9
     over doc ∪ trunc-3 ∪ trunc-6 chain copies) collapsed into connected
@@ -319,39 +338,10 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays the identical minhash pipeline, then computes the
     same components with a recursive CTE — cluster membership, not just
     counts, must agree."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), WS_RUN)
-
-    def trunc(n: int) -> DataFrame:
-        cut = F.array_join(F.slice(toks, 1, F.greatest(F.size(toks) - n, F.lit(1))), " ")
-        return docs.select(
-            (F.col("doc_id") + n // 3 * COPY_OFFSET).alias("doc_id"), cut.alias("text")
-        )
-
-    docs3 = docs.select("doc_id", "text").unionAll(trunc(3)).unionAll(trunc(6))
-    edges = near_duplicates_minhash(docs3, threshold=0.9)
-    return duplicate_clusters(edges).orderBy("canonical_id")
+    return duplicate_clusters(_chain_copy_edges(spark, sf_dir)).orderBy("canonical_id")
 
 
-@_q(
-    "dedup_clusters_bigstar",
-    f"""
-    WITH RECURSIVE edges AS (
-      SELECT id_a AS a, id_b AS b
-      FROM ({_sql_minhash_pipeline(_SQL_CHAIN_COPIES, 0.9)})
-    ),
-    sym AS (SELECT a AS src, b AS dst FROM edges UNION ALL SELECT b, a FROM edges),
-    walk(v, l) AS (
-      SELECT DISTINCT src, src FROM sym
-      UNION
-      SELECT s.dst, w.l FROM walk w JOIN sym s ON s.src = w.v
-    ),
-    comp AS (SELECT v, MIN(l) AS comp FROM walk GROUP BY v)
-    SELECT comp AS canonical_id, COUNT(*) AS cluster_size, MAX(v) AS max_id
-    FROM comp GROUP BY comp
-    ORDER BY canonical_id
-    """,
-)
+@_q("dedup_clusters_bigstar", _SQL_CHAIN_CLUSTERS)
 def dedup_clusters_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SCALE variant of ``dedup_connected_components``: identical
     edge pipeline (MinHash-LSH J ≥ 0.9 over the chain-copy corpus) and
@@ -364,18 +354,7 @@ def dedup_clusters_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame:
     win on a long-chain graph are pinned in tests/test_components.py."""
     from kinesis_stream_spark.operators.components import duplicate_clusters_bigstar
 
-    docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), WS_RUN)
-
-    def trunc(n: int) -> DataFrame:
-        cut = F.array_join(F.slice(toks, 1, F.greatest(F.size(toks) - n, F.lit(1))), " ")
-        return docs.select(
-            (F.col("doc_id") + n // 3 * COPY_OFFSET).alias("doc_id"), cut.alias("text")
-        )
-
-    docs3 = docs.select("doc_id", "text").unionAll(trunc(3)).unionAll(trunc(6))
-    edges = near_duplicates_minhash(docs3, threshold=0.9)
-    return duplicate_clusters_bigstar(edges).orderBy("canonical_id")
+    return duplicate_clusters_bigstar(_chain_copy_edges(spark, sf_dir)).orderBy("canonical_id")
 
 
 @_q(

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import datetime as dt
 import enum
+import os
 import uuid
 from dataclasses import dataclass, field
 
@@ -344,7 +345,37 @@ def _duration_s(value) -> float:
     return float(text)
 
 
-def source(spark: SparkSession, config: ConsumerConfig, *, start_cutoff=None) -> DataFrame:
+def write_durably(path: str, text: str) -> None:
+    """Write ``text`` to ``path`` and fsync the file and its directory
+    entry, so the write survives a crash once this returns."""
+    with open(path, "w") as f:
+        f.write(text)
+        f.flush()
+        os.fsync(f.fileno())
+    dir_fd = os.open(os.path.dirname(path), os.O_RDONLY)
+    try:
+        os.fsync(dir_fd)
+    finally:
+        os.close(dir_fd)
+
+
+def _latest_cutoff(checkpoint_location: str) -> dt.datetime:
+    """The LATEST cutoff of the app at ``checkpoint_location``: the time
+    of its first start, persisted next to the checkpoint. It is reused
+    only while Spark's offset log exists — a fresh checkpoint is a new
+    app and gets a new cutoff."""
+    path = checkpoint_location + "_latest_cutoff"
+    offsets = os.path.join(checkpoint_location, "offsets")
+    if os.path.exists(path) and os.path.isdir(offsets) and os.listdir(offsets):
+        with open(path) as f:
+            return dt.datetime.fromisoformat(f.read())
+    cutoff = dt.datetime.now(dt.timezone.utc)
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    write_durably(path, cutoff.isoformat())
+    return cutoff
+
+
+def source(spark: SparkSession, config: ConsumerConfig) -> DataFrame:
     """Streaming source of envelope Records (reference O1).
 
     Initial-position semantics on the file transport:
@@ -353,9 +384,11 @@ def source(spark: SparkSession, config: ConsumerConfig, *, start_cutoff=None) ->
     - AT_TIMESTAMP: skip records whose arrival timestamp predates
       ``position_timestamp`` (`Consumer.scala:79`, at-timestamp parse
       `:135-141`).
-    - LATEST: skip records that arrived before the query started
-      (``start_cutoff``, defaulting to now) — files already in the
-      directory are "the past" for a stream that begins at latest.
+    - LATEST: skip records that arrived before the app's first start —
+      files already in the directory are "the past" for a stream that
+      begins at latest. The first start's time is persisted next to
+      ``config.checkpoint_location`` and reused on every restart, so
+      records that arrive while the app is down are still delivered.
 
     Position only applies to a NEW app (no checkpoint yet); on restart
     Spark resumes from the offset log, same as KCL resuming from DynamoDB.
@@ -372,6 +405,6 @@ def source(spark: SparkSession, config: ConsumerConfig, *, start_cutoff=None) ->
             F.col("approximateArrivalTimestamp") >= F.lit(config.position_timestamp)
         )
     elif config.initial_position is InitialPosition.LATEST:
-        cutoff = start_cutoff if start_cutoff is not None else dt.datetime.now(dt.timezone.utc)
+        cutoff = _latest_cutoff(config.checkpoint_location)
         records = records.where(F.col("approximateArrivalTimestamp") >= F.lit(cutoff))
     return records

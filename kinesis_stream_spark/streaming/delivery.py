@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kinesis_stream_spark.checkpoint import CheckpointTracker, SequenceNumber
-from kinesis_stream_spark.streaming.consumer import ConsumerConfig
+from kinesis_stream_spark.streaming.consumer import ConsumerConfig, write_durably
 from kinesis_stream_spark.streaming.errors import checkpoint_with_taxonomy
 
 BatchFn = Callable[[DataFrame, int], None]
@@ -123,15 +123,7 @@ def run_at_most_once(
         marker = os.path.join(marker_dir, str(batch_id))
         if os.path.exists(marker):
             return  # replay of a batch whose work already started: drop it
-        with open(marker, "w") as f:
-            f.write("begun")  # commit intent durably, THEN process
-            f.flush()
-            os.fsync(f.fileno())
-        dir_fd = os.open(marker_dir, os.O_RDONLY)
-        try:
-            os.fsync(dir_fd)  # the marker's directory entry too
-        finally:
-            os.close(dir_fd)
+        write_durably(marker, "begun")  # commit intent durably, THEN process
         batch_fn(df, batch_id)
 
     writer = (

@@ -35,6 +35,7 @@ from kinesis_stream_spark.streaming.delivery import (
     run_at_least_once,
     run_at_most_once,
 )
+from kinesis_stream_spark.streaming.envelope import RECORD_SCHEMA
 from kinesis_stream_spark.streaming.windows import tumbling_window_agg
 
 EPOCH = dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)
@@ -97,6 +98,40 @@ def test_initial_position_trim_horizon_vs_latest(spark, stream_dir, tmp_path):
         counts[pos] = sum(n)
     assert counts[InitialPosition.TRIM_HORIZON] > 0
     assert counts[InitialPosition.LATEST] == 0  # 2024 data is all "the past"
+
+
+def test_latest_restart_delivers_records_that_arrived_while_stopped(spark, tmp_path):
+    """LATEST applies to the app's first start only: a restart on the same
+    checkpoint keeps the first start's cutoff, so records written while
+    the app was stopped are delivered, not filtered as "the past"."""
+    in_dir = str(tmp_path / "latest_in")
+
+    def write_records(n: int, arrived: dt.datetime) -> None:
+        rows = [(f"k{i}", b"x", str(i), 0, "shardId-0", arrived) for i in range(n)]
+        spark.createDataFrame(rows, RECORD_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(in_dir)
+
+    now = dt.datetime.now(dt.timezone.utc)
+    write_records(3, now - dt.timedelta(hours=1))
+    cfg = _config(in_dir, tmp_path, InitialPosition.LATEST)
+    first: list[int] = []
+    q = run_at_least_once(source(spark, cfg), cfg, lambda df, bid: first.append(df.count()))
+    q.awaitTermination(120)
+    assert first and sum(first) == 0  # the hour-old file is "the past"
+
+    write_records(5, dt.datetime.now(dt.timezone.utc))  # arrives while stopped
+    second: list[int] = []
+    q2 = run_at_least_once(source(spark, cfg), cfg, lambda df, bid: second.append(df.count()))
+    q2.awaitTermination(120)
+    assert sum(second) == 5
+
+    # a fresh checkpoint is a new app: everything so far is the past
+    fresh = _config(in_dir, tmp_path, InitialPosition.LATEST)
+    third: list[int] = []
+    q3 = run_at_least_once(source(spark, fresh), fresh, lambda df, bid: third.append(df.count()))
+    q3.awaitTermination(120)
+    assert sum(third) == 0
 
 
 def test_initial_position_at_timestamp(spark, sf_dir, stream_dir, tmp_path):

@@ -10,6 +10,10 @@ untimed all-table noop warm-up, fixed sorted execution order, min-of-N
 reps (default 2) of an end-to-end noop-sink materialization per query,
 gc between queries, one JSON line + a detail file.
 
+Each rep runs under its own Spark job group, so the detail file also
+records, per query, the jobs the first rep ran (building the frame and
+writing it) and the distinct stage ids of those jobs.
+
 Usage:
     SPARK_GRAFT_SF_DIR=/root/testdata_scaled/sf1 SPARK_GRAFT_CPUS=32 \
         python tools_scalebench.py --only q1,q2,... --out OUT.json
@@ -52,22 +56,34 @@ def main() -> None:
         load_table(spark, sf_dir, t).write.format("noop").mode("overwrite").save()
 
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2")))
+    sc = spark.sparkContext
+    status = sc.statusTracker()
     timings: dict[str, float] = {}
+    counts: dict[str, dict[str, int]] = {}
     failures: dict[str, str] = {}
     for name in sorted(names):
         fn = registry[name]
-        spark.sparkContext.setJobDescription(f"scalebench: {name}")
         best = None
-        for _ in range(reps):
+        for rep in range(reps):
+            group = f"scalebench:{name}:{rep}"
+            sc.setJobGroup(group, f"scalebench: {name}")
             t0 = time.perf_counter()
             try:
                 fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                dt = time.perf_counter() - t0
             except Exception as exc:
                 failures[name] = f"{type(exc).__name__}: {exc}"[:200]
                 best = None
                 break
-            dt = time.perf_counter() - t0
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
             best = dt if best is None else min(best, dt)
+            if rep == 0:
+                jobs = status.getJobIdsForGroup(group)
+                stages = {
+                    s for j in jobs if (info := status.getJobInfo(j)) for s in info.stageIds
+                }
+                counts[name] = {"jobs": len(jobs), "stages": len(stages)}
         if best is not None:
             timings[name] = round(best, 3)
         gc.collect()
@@ -77,6 +93,7 @@ def main() -> None:
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
+        "counts": counts,
         "sf_dir": sf_dir,
         "cpus": int(cpus),
         "n_queries": len(timings),
