@@ -94,7 +94,7 @@ def dedup_pipeline(
     # near-dup stage and the final keep-list anti-join, and without the
     # cut each consumer re-runs the input union + digest aggregate +
     # winners join. Intra-query lineage cut, recomputed every call.
-    survivors = docs.join(winners, id_col).select(id_col, text_col).localCheckpoint()
+    survivors = pin(docs.join(winners, id_col).select(id_col, text_col))
     # near_duplicates_minhash shares ONE checkpointed tokenization pass
     # across signatures and both verify sides since r13 (guide §2.4 —
     # see its docstring; 1.7× on this composed query when it landed)
@@ -291,9 +291,10 @@ def near_duplicates_minhash(
     connected-components edge source). The shared ``(id, sh)`` frame is
     lazily checkpointed because it feeds all three consumers; derived
     data, recomputed from the input on every invocation."""
-    sh = _shingle_frame(
-        docs, text_col=text_col, id_col=id_col, shingle_n=shingle_n
-    ).localCheckpoint(eager=False)
+    sh = pin(
+        _shingle_frame(docs, text_col=text_col, id_col=id_col, shingle_n=shingle_n),
+        eager=False,
+    )
     cands = _candidates_from_sigs(
         _signatures_from_shingles(sh, num_hashes=num_hashes),
         num_hashes=num_hashes,
@@ -397,7 +398,7 @@ def _simhash_blocked_pairs(
     # no shuffle for ReuseExchange to dedupe). The checkpoint is two
     # columns (id, bigint) per doc — the block explode recomputed per
     # side is four shift-and-masks. Intra-query cut, recomputed per call.
-    sims = simhash(docs, text_col=text_col, id_col=id_col).localCheckpoint()
+    sims = pin(simhash(docs, text_col=text_col, id_col=id_col))
     blocked = sims.select(
         "id",
         "simhash",
@@ -631,26 +632,62 @@ def duplicate_clusters(
 # --- n-gram Jaccard within bounded groups -------------------------------------
 
 
-def _cap_gram_df(
-    exploded: DataFrame,
+def _set_overlap_pairs(
+    docs: DataFrame,
     group_cols: list[str],
-    gram_col: str,
+    doc_set: Column,
+    *,
+    text_col: str,
+    id_col: str,
     max_df: int | None,
 ) -> DataFrame:
-    """The shared ``max_df`` hot-gram knob of :func:`ngram_jaccard_pairs`
-    and :func:`containment_pairs`: drop rows whose gram appears in more
-    than ``max_df`` documents of its group (streams are per-document
-    distinct, so the row count per (group, gram) IS document frequency).
-    One extra shuffle on (group, gram) — cheap next to the quadratic
-    pair blowup the cap prevents. ``None`` passes through untouched."""
-    if max_df is None:
-        return exploded
-    w_df = Window.partitionBy(*group_cols, gram_col)
-    return (
-        exploded.withColumn("_df", F.count(F.lit(1)).over(w_df))
-        .where(F.col("_df") <= max_df)
-        .drop("_df")
+    """The sparse set-overlap kernel of :func:`ngram_jaccard_pairs` and
+    :func:`containment_pairs`: one row (group…, id_a < id_b, inter,
+    sz_a, sz_b) per pair of documents in a group that share an element
+    of ``doc_set`` (a per-document distinct array built from
+    ``text_col``). ``inter`` = |A∩B| is a count over the (group, gram)
+    equi-join; the sizes are the uncapped set sizes.
+
+    ``max_df`` drops rows whose gram appears in more than ``max_df``
+    documents of its group from the join side (sets are per-document
+    distinct, so the row count per (group, gram) IS document
+    frequency): one extra shuffle on (group, gram) — cheap next to the
+    quadratic pair blowup the cap prevents. ``None`` passes through."""
+    # base feeds four consumers (both gram self-join sides, both size
+    # joins) — checkpoint so the set build runs once. The df-cap window
+    # stays OUTSIDE the cut (per-side) so the capped plan keeps the cap
+    # visibly before the self-join.
+    base = pin(
+        spread(
+            docs.select(*group_cols, F.col(id_col).alias("id"), F.col(text_col)), "id"
+        ).select(*group_cols, "id", doc_set.alias("set"))
     )
+    sizes = base.select(*group_cols, "id", F.size("set").alias("sz"))
+    gram = base.select(*group_cols, "id", F.explode("set").alias("g"))
+    if max_df is not None:
+        gram = (
+            gram.withColumn(
+                "_df", F.count(F.lit(1)).over(Window.partitionBy(*group_cols, "g"))
+            )
+            .where(F.col("_df") <= max_df)
+            .drop("_df")
+        )
+    x, y = gram.alias("x"), gram.alias("y")
+    cond = (F.col("x.id") < F.col("y.id")) & (F.col("x.g") == F.col("y.g"))
+    for c in group_cols:
+        cond = cond & (F.col(f"x.{c}") == F.col(f"y.{c}"))
+    inter = (
+        x.join(y, cond)
+        .groupBy(
+            *[F.col(f"x.{c}").alias(c) for c in group_cols],
+            F.col("x.id").alias("id_a"),
+            F.col("y.id").alias("id_b"),
+        )
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
+    sz_a = sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a"))
+    sz_b = sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b"))
+    return inter.join(sz_a, "id_a").join(sz_b, "id_b")
 
 
 def ngram_jaccard_pairs(
@@ -687,49 +724,17 @@ def ngram_jaccard_pairs(
     AQE broadcasts them anyway, and at 100 TB the sizes table is
     O(n_docs) and must NOT be a driver-side broadcast (r1 finding).
     """
-    # base feeds four consumers (both gram self-join sides via `tok`,
-    # both size joins) — checkpoint so the regex tokenization runs once.
-    base = spread(
-        docs.select(*group_cols, F.col(id_col).alias("id"), F.col(text_col)), "id"
-    ).select(
-        *group_cols,
-        "id",
-        F.array_distinct(tokens(F.col(text_col))).alias("toks"),
-    ).localCheckpoint()
-    sizes = base.select(*group_cols, "id", F.size("toks").alias("sz"))
-    tok = _cap_gram_df(
-        base.select(*group_cols, "id", F.explode("toks").alias("t")),
+    pairs = _set_overlap_pairs(
+        docs,
         group_cols,
-        "t",
-        max_df,
+        F.array_distinct(tokens(F.col(text_col))),
+        text_col=text_col,
+        id_col=id_col,
+        max_df=max_df,
     )
-    x, y = tok.alias("x"), tok.alias("y")
-    cond = (F.col("x.id") < F.col("y.id")) & (F.col("x.t") == F.col("y.t"))
-    for c in group_cols:
-        cond = cond & (F.col(f"x.{c}") == F.col(f"y.{c}"))
-    inter = (
-        x.join(y, cond)
-        .groupBy(
-            *[F.col(f"x.{c}").alias(c) for c in group_cols],
-            F.col("x.id").alias("id_a"),
-            F.col("y.id").alias("id_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sz_a = sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a"))
-    sz_b = sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b"))
-    return (
-        inter.join(sz_a, "id_a")
-        .join(sz_b, "id_b")
-        .select(
-            *group_cols,
-            "id_a",
-            "id_b",
-            (
-                F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter"))
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
+    jaccard = F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter"))
+    return pairs.select(*group_cols, "id_a", "id_b", jaccard.alias("jaccard")).where(
+        F.col("jaccard") >= threshold
     )
 
 
@@ -785,48 +790,18 @@ def containment_pairs(
     shuffling the pair table twice more — worth revisiting if the pair
     stage ever dominates a real profile.
     """
-    from kinesis_stream_spark.functions.hashing import shingles
-
-    # base feeds four consumers (both gram self-join sides via `gram`,
-    # both size joins) — checkpoint so the shingle build runs once. The
-    # df-cap window stays OUTSIDE the cut (per-side) so the capped plan
-    # keeps the cap visibly before the self-join.
-    base = spread(
-        docs.select(*group_cols, F.col(id_col).alias("id"), F.col(text_col)), "id"
-    ).select(*group_cols, "id", shingles(F.col(text_col), n).alias("sh")).localCheckpoint()
-    sizes = base.select(*group_cols, "id", F.size("sh").alias("sz"))
-    gram = _cap_gram_df(
-        base.select(*group_cols, "id", F.explode("sh").alias("g")),
+    pairs = _set_overlap_pairs(
+        docs,
         group_cols,
-        "g",
-        max_df,
+        shingles(F.col(text_col), n),
+        text_col=text_col,
+        id_col=id_col,
+        max_df=max_df,
     )
-    x, y = gram.alias("x"), gram.alias("y")
-    cond = (F.col("x.id") < F.col("y.id")) & (F.col("x.g") == F.col("y.g"))
-    for c in group_cols:
-        cond = cond & (F.col(f"x.{c}") == F.col(f"y.{c}"))
-    inter = (
-        x.join(y, cond)
-        .groupBy(
-            *[F.col(f"x.{c}").alias(c) for c in group_cols],
-            F.col("x.id").alias("id_a"),
-            F.col("y.id").alias("id_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sz_a = sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a"))
-    sz_b = sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b"))
-    return (
-        inter.join(sz_a, "id_a")
-        .join(sz_b, "id_b")
-        .select(
-            *group_cols,
-            "id_a",
-            "id_b",
-            (F.col("inter") / F.least("sz_a", "sz_b")).alias("containment"),
-        )
-        .where(F.col("containment") >= threshold)
-    )
+    containment = F.col("inter") / F.least("sz_a", "sz_b")
+    return pairs.select(
+        *group_cols, "id_a", "id_b", containment.alias("containment")
+    ).where(F.col("containment") >= threshold)
 
 
 # --- C4-style duplicated-span (chunk) removal ---------------------------------
@@ -1072,13 +1047,12 @@ def lsh_pair_recall(
     Returns one row: n_truth, n_candidates, n_matched, recall,
     precision (NULL when the denominator set is empty).
     """
-    grams = (
+    grams = pin(  # computed once, read by both pipelines
         spread(
             docs.select(*group_cols, F.col(id_col).alias("id"), F.col(text_col)),
             "id",
         )
         .select(*group_cols, "id", F.explode(shingles(F.col(text_col), shingle_n)).alias("g"))
-        .localCheckpoint()  # computed once, read by both pipelines
     )
     sizes = grams.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
     pairs = (
@@ -1245,7 +1219,9 @@ def rare_term_cosine_pairs(
             ),
         ).otherwise(F.array(F.array_join(toks, " "))),
     )
-    tf = (
+    # tf feeds the df aggregate and the rare-subspace join —
+    # checkpoint so the gram explode + tf aggregate runs once
+    tf = pin(
         docs.where(F.col(text_col).isNotNull())
         .select(
             F.col(id_col).alias("doc"),
@@ -1254,17 +1230,14 @@ def rare_term_cosine_pairs(
         .where(F.col("tok") != "")
         .groupBy("doc", "tok")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-        # tf feeds the df aggregate and the rare-subspace join —
-        # checkpoint so the gram explode + tf aggregate runs once
-        .localCheckpoint(eager=True)
     )
     dfc = tf.groupBy("tok").agg(F.count(F.lit(1)).cast("long").alias("df"))
     # rare feeds three consumers (norms + both pair-join sides) —
     # checkpoint so the df prune join runs once (intra-query cuts,
     # recomputed per call)
-    rare = tf.join(
+    rare = pin(tf.join(
         dfc.where(F.col("df") <= max_df).select("tok"), "tok"
-    ).localCheckpoint(eager=True)
+    ))
     norms = rare.groupBy("doc").agg(
         F.sum((F.col("tf").cast(d38) * F.col("tf")).cast(d38))
         .cast("long")

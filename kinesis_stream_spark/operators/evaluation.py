@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from kinesis_stream_spark.functions.vectors import SCALE
+from kinesis_stream_spark.operators.lineage import pin
 from kinesis_stream_spark.operators.quantization import _dot_fx, _residual
 
 #: fixed-point scale for the metric lookup tables (same 2^40 the vector
@@ -231,11 +232,10 @@ def ivfpq_recall_sweep(
     # "read the index table / truth table you wrote" — without the cut
     # the corpus-sized exact scoring would re-execute once per sweep
     # point plus once for the totals
-    index = ivfpq_encode(emb, coarse, book, m=m, dim=dim).localCheckpoint()
-    exact = (
+    index = pin(ivfpq_encode(emb, coarse, book, m=m, dim=dim))
+    exact = pin(
         exact_score_topk(emb, queries, k=k)
         .select(F.col("query_id"), F.col("vec_id"))
-        .localCheckpoint()
     )
     totals = exact.agg(F.count(F.lit(1)).alias("n_exact"))
     topks = ivfpq_topk_sweep(

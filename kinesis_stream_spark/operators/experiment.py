@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kinesis_stream_spark.functions.hashing import md5_int64, sql_md5_int64
+from kinesis_stream_spark.operators.lineage import pin
 
 
 def ab_conversion_ztest(
@@ -1684,7 +1685,7 @@ def bootstrap_ci(
     # (guide §2.4). The B-row result is checkpointed because it feeds
     # two branches (means → summary, base) that would otherwise each
     # re-run the ×B explode + 64 md5 draws.
-    per_b = (
+    per_b = pin(
         repl.select("b", "xfx", w.alias("w"))
         .groupBy("b")
         .agg(
@@ -1697,7 +1698,6 @@ def bootstrap_ci(
             F.count(F.lit(1)).cast("long").alias("c_b"),
             F.sum(F.col("xfx").cast(d38)).cast(d38).alias("sx_b"),
         )
-        .localCheckpoint()
     )
     means = per_b.select(
         F.when(

@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kinesis_stream_spark.operators.lineage import pin
+
 
 def default_block(col: Column) -> Column:
     """First whitespace-delimited token — the default block key."""
@@ -191,13 +193,12 @@ def fuzzy_pair_histogram(
     # consumers (intra, both cross join sides) that would each re-run
     # the corpus aggregate; string-distinct-sized, recomputed from the
     # input on every invocation (kmv_set_ops precedent)
-    names = (
+    names = pin(
         side.groupBy("block_key", "s", "slen")
         .agg(
             F.count(F.lit(1)).cast("long").alias("cnt"),
             F.min("id").alias("mn"),
         )
-        .localCheckpoint()
     )
     # second-smallest id per duplicated string — needed only for the
     # intra (dist 0) sample_id_b; one corpus-keyed equi-join, partial

@@ -1654,7 +1654,7 @@ def modularity(
         .agg(F.count(F.lit(1)).cast("long").alias("l_c"))
     )
     d38 = "decimal(38,0)"
-    per = (
+    per = pin(
         dc.join(lc, "label", "left")
         .crossJoin(F.broadcast(m))
         .select(
@@ -1669,8 +1669,8 @@ def modularity(
                 " - cast(d_c as decimal(38,0)) * d_c as decimal(38,0))"
             ).alias("num"),
             "m",
-        )
-        .localCheckpoint(eager=False)
+        ),
+        eager=False,
     )
     q = F.when(
         F.col("m") > 0,

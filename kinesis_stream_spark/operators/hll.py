@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kinesis_stream_spark.functions.hashing import md5_int64, sql_md5_int64
+from kinesis_stream_spark.operators.lineage import pin
 
 #: register-index bits: m = 2^P registers
 HLL_P = 10
@@ -163,10 +164,9 @@ def hll_distinct(df: DataFrame, cols: list[str]) -> DataFrame:
         .select("p.c", "p.v")
         .where(F.col("v").isNotNull())
     )
-    dv = (
+    dv = pin(
         pairs.groupBy("c", "v")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .localCheckpoint()
     )
     h = md5_int64(F.col("v"))
     w = F.expr(f"shiftright(h, {HLL_P})")
@@ -235,6 +235,35 @@ def hll_distinct(df: DataFrame, cols: list[str]) -> DataFrame:
     )
 
 
+def exact_set_counts(a: DataFrame, col_a: str, b: DataFrame, col_b: str) -> DataFrame:
+    """One row (x_a, x_b, x_u, x_i): the exact distinct counts of the
+    non-NULL values of ``a.col_a`` and ``b.col_b`` and of their union
+    and intersection — the grading columns of :func:`hll_set_ops` and
+    :func:`~kinesis_stream_spark.operators.kmv.kmv_set_ops` (dropped at
+    deployment scale)."""
+    # each distinct-value frame feeds FOUR branches (own count, union,
+    # semi-join probe/build): distinct-key-sized, each with its own
+    # shuffle, so materialize once instead of re-running the corpus
+    # distinct per consumer. Intra-query cuts, recomputed every call.
+    av, bv = (
+        pin(df.where(F.col(c).isNotNull()).select(F.col(c).alias("v")).distinct())
+        for df, c in ((a, col_a), (b, col_b))
+    )
+    return (
+        av.agg(F.count(F.lit(1)).cast("long").alias("x_a"))
+        .crossJoin(bv.agg(F.count(F.lit(1)).cast("long").alias("x_b")))
+        .crossJoin(
+            av.unionAll(bv)
+            .distinct()
+            .agg(F.count(F.lit(1)).cast("long").alias("x_u"))
+        )
+        .crossJoin(
+            av.join(bv, "v", "left_semi")
+            .agg(F.count(F.lit(1)).cast("long").alias("x_i"))
+        )
+    )
+
+
 def hll_set_ops(
     a: DataFrame,
     b: DataFrame,
@@ -261,14 +290,12 @@ def hll_set_ops(
     counts are one distinct + one semi-join distinct (dropped at
     deployment scale — they exist to grade the sketch)."""
     # each register frame feeds TWO branches (the full-outer merge and
-    # its own sketch row) and each distinct-value frame FOUR (own
-    # count, union, semi-join probe/build) — without a cut every
-    # branch re-runs the input scan + aggregate (measured: 166
-    # Exchanges / 224 HashAggregates in the composed plan, r12). The
-    # checkpointed frames are sketch-sized (≤ HLL_M registers) or
-    # distinct-key-sized; the kmv_set_ops twin set this precedent.
-    ra = _hll_registers(a, col_a).localCheckpoint()
-    rb = _hll_registers(b, col_b).localCheckpoint()
+    # its own sketch row) — without a cut every branch re-runs the
+    # input scan + aggregate (measured with exact_set_counts' frames:
+    # 166 Exchanges / 224 HashAggregates in the uncut composed plan).
+    # The checkpointed frames are sketch-sized (≤ HLL_M registers).
+    ra = pin(_hll_registers(a, col_a))
+    rb = pin(_hll_registers(b, col_b))
     merged = (
         ra.select("j", F.col("m").alias("ma"))
         .join(rb.select("j", F.col("m").alias("mb")), "j", "full")
@@ -288,31 +315,7 @@ def hll_set_ops(
     _, _, _, est_a = _hll_estimate("_a")
     _, _, _, est_b = _hll_estimate("_b")
     _, _, _, est_u = _hll_estimate("_u")
-    av = (
-        a.where(F.col(col_a).isNotNull())
-        .select(F.col(col_a).alias("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    bv = (
-        b.where(F.col(col_b).isNotNull())
-        .select(F.col(col_b).alias("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    exact = (
-        av.agg(F.count(F.lit(1)).cast("long").alias("x_a"))
-        .crossJoin(bv.agg(F.count(F.lit(1)).cast("long").alias("x_b")))
-        .crossJoin(
-            av.unionAll(bv)
-            .distinct()
-            .agg(F.count(F.lit(1)).cast("long").alias("x_u"))
-        )
-        .crossJoin(
-            av.join(bv, "v", "left_semi")
-            .agg(F.count(F.lit(1)).cast("long").alias("x_i"))
-        )
-    )
+    exact = exact_set_counts(a, col_a, b, col_b)
     est_i = est_a + est_b - est_u
     base = rows.crossJoin(exact)
 

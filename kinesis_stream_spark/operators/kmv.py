@@ -46,7 +46,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kinesis_stream_spark.functions.hashing import md5_int64
-from kinesis_stream_spark.operators.hll import sql_h_expr
+from kinesis_stream_spark.operators.hll import exact_set_counts, sql_h_expr
+from kinesis_stream_spark.operators.lineage import pin
 
 #: sketch size: bottom-k retains this many distinct hashes
 KMV_K = 256
@@ -112,7 +113,7 @@ def kmv_distinct(df: DataFrame, cols: list[str]) -> DataFrame:
         .select("p.c", "p.v")
         .where(F.col("v").isNotNull())
     )
-    hv = pairs.distinct().localCheckpoint()
+    hv = pin(pairs.distinct())
     outs = []
     for c in cols:
         mine = hv.where(F.col("c") == c)
@@ -228,11 +229,9 @@ def kmv_set_ops(
     TakeOrderedAndProject each), a ≤ 2k-row merge + re-limit, two ≤
     k-row semi-joins; the exact columns (distinct + semi-join counts)
     exist to grade the sketch and drop at deployment scale."""
-    ka = _bottom_k(a, col_a).localCheckpoint()
-    kb = _bottom_k(b, col_b).localCheckpoint()
-    ku = (
-        ka.unionAll(kb).distinct().orderBy("h").limit(KMV_K).localCheckpoint()
-    )
+    ka = pin(_bottom_k(a, col_a))
+    kb = pin(_bottom_k(b, col_b))
+    ku = pin(ka.unionAll(kb).distinct().orderBy("h").limit(KMV_K))
     sk = (
         ku.agg(
             F.count(F.lit(1)).cast("long").alias("nu"),
@@ -256,36 +255,12 @@ def kmv_set_ops(
             .agg(F.count(F.lit(1)).cast("long").alias("m"))
         )
     )
-    # The distinct-value frames feed THREE branches each (own count,
-    # union, semi-join) — the hll_set_ops cut (§ the r12 report): each
-    # is distinct-key-sized with its own shuffle, so materialize once
-    # instead of re-running the corpus distinct per consumer. Intra-
-    # query lineage cuts, recomputed from parquet every call.
-    av = a.where(F.col(col_a).isNotNull()).select(
-        F.col(col_a).alias("v")
-    ).distinct().localCheckpoint()
-    bv = b.where(F.col(col_b).isNotNull()).select(
-        F.col(col_b).alias("v")
-    ).distinct().localCheckpoint()
-    exact = (
-        av.agg(F.count(F.lit(1)).cast("long").alias("x_a"))
-        .crossJoin(bv.agg(F.count(F.lit(1)).cast("long").alias("x_b")))
-        .crossJoin(
-            av.unionAll(bv)
-            .distinct()
-            .agg(F.count(F.lit(1)).cast("long").alias("x_u"))
-        )
-        .crossJoin(
-            av.join(bv, "v", "left_semi").agg(
-                F.count(F.lit(1)).cast("long").alias("x_i")
-            )
-        )
-    )
+    exact = exact_set_counts(a, col_a, b, col_b)
     # ONE row × 8 columns — and the 5-row output union below re-executes
     # its whole subtree once per row without this cut (5× every sketch
     # and exact aggregate; 60 parquet scans in the composed query plan).
     # The cheapest checkpoint in the repo buys the largest dedup factor.
-    base = sk.crossJoin(exact).localCheckpoint()
+    base = pin(sk.crossJoin(exact))
 
     def _est(n_col, h_col):
         return F.when(

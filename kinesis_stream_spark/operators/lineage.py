@@ -1,15 +1,30 @@
-"""Checkpoint lifecycle of the iterative operators: pin, advance, release.
+"""Every lineage cut in the package: pin, advance, release.
+
+The rule: no other module calls ``localCheckpoint`` or ``checkpoint``;
+it calls :func:`pin`, so the choice between lineage and checkpoint is
+made here, in one place (*Discretized Streams*, SOSP 2013).
+``tests/test_lineage.py`` fails when a call elsewhere appears.
+
+Two forms of cut:
+
+- eager, ``pin(df)``: materialize now;
+- lazy, ``pin(df, eager=False)``: materialize on the first action that
+  reads the frame, and let later readers reuse the blocks. The call
+  runs no job, except that adaptive execution (on in the package
+  session) runs the shuffle stages below the cut to plan the stage
+  above them.
 
 The loop operators (operators/graph.py, operators/components.py and
-dedup.connected_components) cut their lineage once per round so the plan
-does not grow with the round count, and free each superseded round's
-blocks so a finished call holds one result-sized block, not one per
-round. Every such cut goes through this module, so the choice between
-lineage and checkpoint is made in one place (*Discretized Streams*,
-SOSP 2013): the cut is an eager ``localCheckpoint``, whose blocks live
-in executor block managers and are lost with the executor. Making the
-loops survive executor loss is one edit here — ``pin`` becomes
-``df.checkpoint(eager=True)`` under ``setCheckpointDir`` on durable
+dedup.connected_components) also free each superseded round's blocks
+(:func:`advance`, :func:`release`) so a finished call holds one
+result-sized block, not one per round. A one-shot cut inside an
+operator is not released: the operator returns a lazy frame that still
+reads it.
+
+The cut is a ``localCheckpoint``, whose blocks live in executor block
+managers and are lost with the executor. Making every cut survive
+executor loss is one edit here — ``pin`` becomes
+``df.checkpoint(eager=eager)`` under ``setCheckpointDir`` on durable
 storage — with ``release`` unchanged (a reliable checkpoint's RDD
 unpersists the same way).
 """
@@ -19,9 +34,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Observation
 
 
-def pin(df: DataFrame) -> DataFrame:
-    """Materialize ``df`` now (one job) and cut its lineage."""
-    return df.localCheckpoint(eager=True)
+def pin(df: DataFrame, *, eager: bool = True) -> DataFrame:
+    """Cut ``df``'s lineage: materialize it now, or with ``eager=False``
+    on the first action that reads it."""
+    return df.localCheckpoint(eager=eager)
 
 
 def pin_observed(df: DataFrame, *metrics: Column) -> tuple[DataFrame, dict]:

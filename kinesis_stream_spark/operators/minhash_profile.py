@@ -34,6 +34,7 @@ from kinesis_stream_spark.operators.dedup import (
     lsh_band_hashes,
     minhash_signatures,
 )
+from kinesis_stream_spark.operators.lineage import pin
 
 
 def minhash_agreement_histogram(
@@ -57,10 +58,10 @@ def minhash_agreement_histogram(
     then derived from the checkpointed signatures directly (the same
     band join ``minhash_lsh_candidates`` runs, minus its from-text
     signature recompute)."""
-    sigs = minhash_signatures(
+    sigs = pin(minhash_signatures(
         docs, text_col=text_col, id_col=id_col,
         num_hashes=num_hashes, shingle_n=shingle_n,
-    ).localCheckpoint()
+    ))
     banded = sigs.select(
         "id",
         F.explode(

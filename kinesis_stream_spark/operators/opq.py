@@ -44,6 +44,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kinesis_stream_spark.functions.vectors import _fixed_sum, SCALE
+from kinesis_stream_spark.operators.lineage import pin
 
 
 @lru_cache(maxsize=8)
@@ -189,9 +190,9 @@ def rrpq_topk_adc(
     # re-runs the dim² fixed-point rotation (measured 23.5 s → 9 s at
     # sf0.1). At 100 TB this line is "write the rotated corpus once",
     # the same deployment-artifact argument as the encoded index.
-    rot_c = rotate_embeddings(
+    rot_c = pin(rotate_embeddings(
         corpus, dim=dim, id_col=id_col, vec_col=vec_col, seed=seed
-    ).localCheckpoint()
+    ))
     rot_q = rotate_embeddings(
         queries, dim=dim, id_col=query_id_col, vec_col=vec_col, seed=seed
     )

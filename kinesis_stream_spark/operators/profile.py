@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from kinesis_stream_spark.operators.lineage import pin
+
 D38 = "decimal(38,0)"
 
 
@@ -1632,7 +1634,7 @@ def quality_scorecard(
     # consumer (the distributed_cumsums device; 1 row, costless)
     one = df.agg(*aggs)
     if refs:
-        one = one.localCheckpoint(eager=False)
+        one = pin(one, eager=False)
     # Spark's parser (escapedStringLiterals=false default) also eats
     # backslash escapes that DuckDB's standard literals keep — double
     # them here so check_name round-trips identically on both engines

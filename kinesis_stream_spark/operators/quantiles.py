@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from kinesis_stream_spark.operators.lineage import pin
+
 
 def histogram_quantiles(
     df: DataFrame,
@@ -91,14 +93,14 @@ def histogram_quantiles(
     # cum is a ≤bins-row frame consumed once per requested quantile —
     # checkpoint so the corpus histogram pass runs once, not once per
     # quantile (intra-query cut, recomputed per call)
-    cum = hist.select(
+    cum = pin(hist.select(
         "bin",
         "lo",
         "hi",
         "n",
         "cnt",
         F.sum("cnt").over(w).cast("long").alias("cum"),
-    ).localCheckpoint(eager=True)
+    ))
     # exact rank lookup frame: the k-th smallest x for each target k —
     # ONE pass with row_number is rank-exact on both engines
     outs = []

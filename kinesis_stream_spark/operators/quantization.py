@@ -71,6 +71,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from kinesis_stream_spark.functions.vectors import SCALE, _fixed_sum, dot_decimal
+from kinesis_stream_spark.operators.lineage import pin
 from kinesis_stream_spark.operators.similarity import (
     _cents_array_expr,
     _exploded_subvectors,
@@ -789,14 +790,14 @@ def ivfpq_topk_sweep(
     qlist = _route_queries(
         q, collect_cent_rows(coarse), nprobe=max(nprobes), with_rank=True
     )
-    scored = _adc_scored(
+    scored = pin(_adc_scored(
         index,
         qlist,
         _collect_books(book),
         m=m,
         subdim=dim // m,
         extra_cols=("probe_rank",),
-    ).localCheckpoint()
+    ))
     return {
         p: _topk_from_scored(
             scored.where(F.col("probe_rank") <= p).drop("probe_rank"),

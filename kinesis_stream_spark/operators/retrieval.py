@@ -65,6 +65,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from kinesis_stream_spark.functions.hashing import tokens
+from kinesis_stream_spark.operators.lineage import pin
 from kinesis_stream_spark.operators.skew import distributed_cumsum
 
 #: fixed-point scale for per-term BM25 contributions (2^20 — scores are
@@ -353,13 +354,13 @@ def phrase_search(
     if not phrases:
         raise ValueError("phrases must be non-empty")
     words = sorted({w for p in phrases for w in p.split()})
-    post = (
+    post = pin(
         docs.select(
             F.col(id_col).alias("doc"),
             F.posexplode(tokens(F.col(text_col))).alias("pos", "tok"),
         )
-        .where(F.col("tok").isin(words))
-        .localCheckpoint(eager=False)
+        .where(F.col("tok").isin(words)),
+        eager=False,
     )
     outs = []
     for phrase in phrases:

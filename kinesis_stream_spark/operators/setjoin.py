@@ -73,6 +73,7 @@ from kinesis_stream_spark.functions.hashing import (
     sql_md5_int64,
     sql_shingles,
 )
+from kinesis_stream_spark.operators.lineage import pin
 
 
 def prefix_filter_jaccard_pairs(
@@ -116,7 +117,7 @@ def prefix_filter_jaccard_pairs(
     # map stage, and a single-row-group corpus file would run it in
     # a handful of tasks (measured: 7.6 s on 4 tasks at sf1); no-op
     # on well-partitioned inputs.
-    sh_sets = (
+    sh_sets = pin(
         spread(docs.select(F.col(id_col).alias("id"), F.col(text_col)), "id")
         .select(
             "id",
@@ -124,12 +125,10 @@ def prefix_filter_jaccard_pairs(
                 shingles(F.col(text_col), shingle_n), lambda s: md5_int64(s)
             ).alias("sh"),
         )
-        .where(F.size("sh") > 0)
-        .localCheckpoint(eager=False)
+        .where(F.size("sh") > 0),
+        eager=False,
     )
-    ex = sh_sets.select("id", F.explode("sh").alias("tok")).localCheckpoint(
-        eager=False
-    )
+    ex = pin(sh_sets.select("id", F.explode("sh").alias("tok")), eager=False)
     dfc = ex.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     # shingles() is distinct, so per-id token count == set size; derive
     # sizes from the checkpointed explode rather than from sh_sets,
@@ -138,13 +137,13 @@ def prefix_filter_jaccard_pairs(
     sizes = ex.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
     w = Window.partitionBy("id").orderBy("df", "tok")
     ordered = ex.join(dfc, "tok").withColumn("pos", F.row_number().over(w))
-    prefix = (
+    prefix = pin(
         ordered.join(sizes, "id")
         .where(
             F.col("pos")
             <= F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + F.lit(1)
-        )
-        .localCheckpoint(eager=False)
+        ),
+        eager=False,
     )
     # candidate aggregate WITH the PPJoin positional filter: for a
     # pair first meeting in its prefixes, total overlap is bounded by

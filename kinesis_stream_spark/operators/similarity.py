@@ -29,6 +29,7 @@ from pyspark.sql.window import Window
 
 from kinesis_stream_spark.functions.hashing import md5_int64
 from kinesis_stream_spark.functions.vectors import dot_decimal, norm_decimal
+from kinesis_stream_spark.operators.lineage import pin
 
 
 def cosine_pairs(
@@ -502,10 +503,10 @@ def ivf_recall_sweep(
     # sweep point plus once for the totals, and each topk_ivf call
     # re-aggregates the centroids for its broadcast. Intra-query
     # lineage cuts, recomputed from parquet every call.
-    exact = topk_bruteforce(
+    exact = pin(topk_bruteforce(
         corpus, queries, k=k, id_col=id_col, vec_col=vec_col, query_id_col=query_id_col
-    ).select("query_id", "neighbor_id").localCheckpoint()
-    cents = label_centroids(corpus, dim=dim).localCheckpoint()
+    ).select("query_id", "neighbor_id"))
+    cents = pin(label_centroids(corpus, dim=dim))
     totals = exact.agg(F.count(F.lit(1)).alias("n_exact"))
     parts = []
     for nprobe in nprobes:

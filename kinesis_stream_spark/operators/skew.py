@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from kinesis_stream_spark.functions.hashing import md5_int64
+from kinesis_stream_spark.operators.lineage import pin
 
 DEC = "decimal(27,6)"
 
@@ -139,7 +140,7 @@ def distributed_cumsums(
     )
     for i, (val, _) in enumerate(cols):
         part = part.withColumn(f"_ds_val{i}", val)
-    part = part.localCheckpoint(eager=False)
+    part = pin(part, eager=False)
     w_local = (
         Window.partitionBy("_ds_pid")
         .orderBy(*order_cols)

@@ -13,9 +13,13 @@ comparison near a bucket boundary can round differently (see
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from kinesis_stream_spark.operators.lineage import pin
 from kinesis_stream_spark.queries._util import DEC, dsum
 
 #: microseconds per hour / per day
@@ -1395,6 +1399,56 @@ def sql_active_user_windows(
     """
 
 
+def _lag_correlations(
+    pairs_at: Callable[[int], DataFrame], lags: range, *keys: str
+) -> DataFrame:
+    """(keys…, lag, n_pairs, r) for each lag: Pearson r of the aligned
+    BIGINT fx pairs (x, y) of ``pairs_at(lag)``, per ``keys`` — the
+    moment chain :func:`lead_lag_correlation` and
+    :func:`autocorrelation` share. The five moment sums accumulate as
+    DECIMAL(38,0) (products of DECIMAL(19,0) operands), the finals are
+    two correctly-rounded sqrts + one divide; r is NULL when fewer than
+    2 pairs align or either aligned series is constant. The lags
+    UNION in order."""
+    d19, d38 = "decimal(19,0)", "decimal(38,0)"
+    outs = []
+    for lag in lags:
+        m = pairs_at(lag).groupBy(*keys).agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.sum("x").cast(d38).alias("sx"),
+            F.sum("y").cast(d38).alias("sy"),
+            F.sum((F.col("x").cast(d19) * F.col("y").cast(d19)).cast(d38))
+            .cast(d38)
+            .alias("sxy"),
+            F.sum((F.col("x").cast(d19) * F.col("x").cast(d19)).cast(d38))
+            .cast(d38)
+            .alias("sxx"),
+            F.sum((F.col("y").cast(d19) * F.col("y").cast(d19)).cast(d38))
+            .cast(d38)
+            .alias("syy"),
+        )
+        n_d = F.col("n").cast(d38)
+        num = n_d * F.col("sxy") - F.col("sx") * F.col("sy")
+        vx = n_d * F.col("sxx") - F.col("sx") * F.col("sx")
+        vy = n_d * F.col("syy") - F.col("sy") * F.col("sy")
+        r = F.when(
+            (F.col("n") < 2) | (vx == 0) | (vy == 0),
+            F.lit(None).cast("double"),
+        ).otherwise(
+            num.cast("double")
+            / (F.sqrt(vx.cast("double")) * F.sqrt(vy.cast("double")))
+        )
+        outs.append(
+            m.select(
+                *keys,
+                F.lit(lag).cast("int").alias("lag"),
+                F.col("n").alias("n_pairs"),
+                r.alias("r"),
+            )
+        )
+    return reduce(DataFrame.unionAll, outs)
+
+
 def lead_lag_correlation(
     events: DataFrame,
     *,
@@ -1432,7 +1486,7 @@ def lead_lag_correlation(
     if max_lag < 0:
         raise ValueError(f"max_lag must be >= 0, got {max_lag}")
     s = float(1 << scale_bits)
-    daily = (
+    daily = pin(
         events.where(
             F.col(ts_col).isNotNull()
             & F.col(type_col).isin([type_a, type_b])
@@ -1449,8 +1503,8 @@ def lead_lag_correlation(
         # a bucket whose events all carry NULL values has no
         # observation (vfx NULL): drop it, or COUNT(*) in the moment
         # aggregate would count pairs the NULL-skipping SUMs exclude
-        .where(F.col("vfx").isNotNull())
-        .localCheckpoint(eager=False)
+        .where(F.col("vfx").isNotNull()),
+        eager=False,
     )
     a = daily.where(F.col("t") == type_a).select(
         F.col("bucket").alias("ab"), F.col("vfx").alias("x")
@@ -1458,46 +1512,10 @@ def lead_lag_correlation(
     b = daily.where(F.col("t") == type_b).select(
         F.col("bucket").alias("bb"), F.col("vfx").alias("y")
     )
-    d19, d38 = "decimal(19,0)", "decimal(38,0)"
-    outs = []
-    for lag in range(-max_lag, max_lag + 1):
-        pairs = a.join(b, F.col("ab") + lag == F.col("bb"))
-        m = pairs.agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("x").cast(d38).alias("sx"),
-            F.sum("y").cast(d38).alias("sy"),
-            F.sum((F.col("x").cast(d19) * F.col("y").cast(d19)).cast(d38))
-            .cast(d38)
-            .alias("sxy"),
-            F.sum((F.col("x").cast(d19) * F.col("x").cast(d19)).cast(d38))
-            .cast(d38)
-            .alias("sxx"),
-            F.sum((F.col("y").cast(d19) * F.col("y").cast(d19)).cast(d38))
-            .cast(d38)
-            .alias("syy"),
-        )
-        n_d = F.col("n").cast(d38)
-        num = n_d * F.col("sxy") - F.col("sx") * F.col("sy")
-        vx = n_d * F.col("sxx") - F.col("sx") * F.col("sx")
-        vy = n_d * F.col("syy") - F.col("sy") * F.col("sy")
-        r = F.when(
-            (F.col("n") < 2) | (vx == 0) | (vy == 0),
-            F.lit(None).cast("double"),
-        ).otherwise(
-            num.cast("double")
-            / (F.sqrt(vx.cast("double")) * F.sqrt(vy.cast("double")))
-        )
-        outs.append(
-            m.select(
-                F.lit(lag).cast("int").alias("lag"),
-                F.col("n").alias("n_pairs"),
-                r.alias("r"),
-            )
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionAll(o)
-    return out
+    return _lag_correlations(
+        lambda lag: a.join(b, F.col("ab") + lag == F.col("bb")),
+        range(-max_lag, max_lag + 1),
+    )
 
 
 def sql_lead_lag_correlation(
@@ -2142,7 +2160,7 @@ def autocorrelation(
     if max_lag < 1:
         raise ValueError(f"max_lag must be >= 1, got {max_lag}")
     s = float(1 << scale_bits)
-    daily = (
+    daily = pin(
         events.where(F.col(ts_col).isNotNull())
         .groupBy(
             F.col(key_col).alias("key"),
@@ -2154,52 +2172,16 @@ def autocorrelation(
             "bucket",
             F.floor(F.col("v") * F.lit(s)).cast("long").alias("vfx"),
         )
-        .where(F.col("vfx").isNotNull())
-        .localCheckpoint(eager=False)
+        .where(F.col("vfx").isNotNull()),
+        eager=False,
     )
     a = daily.select("key", F.col("bucket").alias("ab"), F.col("vfx").alias("x"))
     b = daily.select("key", F.col("bucket").alias("bb"), F.col("vfx").alias("y"))
-    d19, d38 = "decimal(19,0)", "decimal(38,0)"
-    outs = []
-    for lag in range(1, max_lag + 1):
-        pairs = a.join(b, ["key"]).where(F.col("ab") + lag == F.col("bb"))
-        m = pairs.groupBy("key").agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("x").cast(d38).alias("sx"),
-            F.sum("y").cast(d38).alias("sy"),
-            F.sum((F.col("x").cast(d19) * F.col("y").cast(d19)).cast(d38))
-            .cast(d38)
-            .alias("sxy"),
-            F.sum((F.col("x").cast(d19) * F.col("x").cast(d19)).cast(d38))
-            .cast(d38)
-            .alias("sxx"),
-            F.sum((F.col("y").cast(d19) * F.col("y").cast(d19)).cast(d38))
-            .cast(d38)
-            .alias("syy"),
-        )
-        n_d = F.col("n").cast(d38)
-        num = n_d * F.col("sxy") - F.col("sx") * F.col("sy")
-        vx = n_d * F.col("sxx") - F.col("sx") * F.col("sx")
-        vy = n_d * F.col("syy") - F.col("sy") * F.col("sy")
-        r = F.when(
-            (F.col("n") < 2) | (vx == 0) | (vy == 0),
-            F.lit(None).cast("double"),
-        ).otherwise(
-            num.cast("double")
-            / (F.sqrt(vx.cast("double")) * F.sqrt(vy.cast("double")))
-        )
-        outs.append(
-            m.select(
-                "key",
-                F.lit(lag).cast("int").alias("lag"),
-                F.col("n").alias("n_pairs"),
-                r.alias("r"),
-            )
-        )
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionAll(o)
-    return out
+    return _lag_correlations(
+        lambda lag: a.join(b, ["key"]).where(F.col("ab") + lag == F.col("bb")),
+        range(1, max_lag + 1),
+        "key",
+    )
 
 
 def sql_autocorrelation(
@@ -2865,10 +2847,9 @@ def markov_stationary(
             F.col("from_state").isNotNull() & F.col("to_state").isNotNull()
         )
     )
-    counts = (
+    counts = pin(
         steps.groupBy("from_state", "to_state")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .localCheckpoint(eager=True)
     )
     states = (
         counts.select(F.col("from_state").alias("s"))
@@ -2905,7 +2886,13 @@ def markov_stationary(
             pi.join(outs, "s", "left_anti")
             .agg(F.coalesce(F.sum("pi_fx"), F.lit(0)).cast("long").alias("ds"))
         )
-        pi = (
+        # lazy lineage cut: without it each round's plan nests the
+        # previous round's twice (contribs + dang), exploding
+        # optimizer time exponentially in rounds. Blocks are
+        # |states|-sized and bounded by the fixed round count, so
+        # no release pass is needed (unlike the node-sized
+        # PageRank checkpoints).
+        pi = pin(
             states.join(contribs, "s", "left")
             .crossJoin(F.broadcast(dang))
             .crossJoin(F.broadcast(kk))
@@ -2914,14 +2901,8 @@ def markov_stationary(
                 F.expr("ds div k + coalesce(csum, 0)")
                 .cast("long")
                 .alias("pi_fx"),
-            )
-            # lazy lineage cut: without it each round's plan nests the
-            # previous round's twice (contribs + dang), exploding
-            # optimizer time exponentially in rounds. Blocks are
-            # |states|-sized and bounded by the fixed round count, so
-            # no release pass is needed (unlike the node-sized
-            # PageRank checkpoints).
-            .localCheckpoint(eager=False)
+            ),
+            eager=False,
         )
     s = float(MARKOV_SCALE)
     return pi.select(

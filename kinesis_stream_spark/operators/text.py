@@ -37,6 +37,7 @@ from kinesis_stream_spark.functions.hashing import (
     sql_tokens,
     tokens,
 )
+from kinesis_stream_spark.operators.lineage import pin
 from kinesis_stream_spark.sources.batch import spread
 
 # --- language ID -------------------------------------------------------------
@@ -1585,14 +1586,14 @@ def lm_plausibility(
     # consumers (bigram counts, vocabulary, scoring side) that each
     # re-ran it. One spread pass, evaluated once per invocation:
     # 9.1 → 3.2 s at sf1.
-    base = (
+    base = pin(
         spread(docs.select(F.col(id_col), F.col(text_col)), id_col)
         .select(
             F.col(id_col).alias("doc"),
             (F.col(id_col) % 2 == 0).alias("is_train"),
             bigrams.alias("bgs"),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        eager=False,
     )
     train_b = (
         base.where("is_train")

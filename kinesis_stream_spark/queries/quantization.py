@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kinesis_stream_spark.operators.lineage import pin
 from kinesis_stream_spark.queries._emb_family import (
     emb_scan,
     guard_oracles,
@@ -225,9 +226,7 @@ def similarity_ivfpq_route_census(spark: SparkSession, sf_dir: str) -> DataFrame
     # NOT stop it). The lazy checkpoint evaluates the encode projection
     # exactly once per invocation and the census reads concrete rows:
     # 19.5 → 0.6 s at sf1. Index-sized, rebuilt from parquet every call.
-    index = ivfpq_encode(emb, coarse, book, m=M, dim=DIM).localCheckpoint(
-        eager=False
-    )
+    index = pin(ivfpq_encode(emb, coarse, book, m=M, dim=DIM), eager=False)
     return (
         index.select("list_id", F.posexplode("codes").alias("sub", "code"))
         .groupBy("list_id", "sub", "code")

@@ -268,12 +268,12 @@ def foreach_batch_commit_flow(
 
 def run_upsert_latest(
     records: DataFrame,
+    config: ConsumerConfig,
     *,
     keys: list[str],
     order_cols: list[str],
     value_cols: list[str],
     state_root: str,
-    checkpoint_location: str,
     available_now: bool = True,
 ):
     """Streaming SCD1 maintenance: keep a "latest row per key" table
@@ -295,6 +295,11 @@ def run_upsert_latest(
     keyed struct-max agg) is exactly what a MERGE executes anyway.
     Snapshot size is O(|keys|), not O(stream) — the state self-compacts
     every batch.
+
+    Spark's offset log lives at ``config.checkpoint_location``, the same
+    location a LATEST :func:`~kinesis_stream_spark.streaming.consumer.source`
+    keys its persisted cutoff to, so a restart keeps the first start's
+    cutoff like the other delivery modes.
     """
     ordered = [*order_cols, *value_cols]
 
@@ -317,7 +322,7 @@ def run_upsert_latest(
     writer = (
         records.writeStream.foreachBatch(upsert)
         .outputMode("update")
-        .option("checkpointLocation", checkpoint_location)
+        .option("checkpointLocation", config.checkpoint_location)
     )
     if available_now:
         writer = writer.trigger(availableNow=True)

@@ -1,9 +1,13 @@
-"""The loop operators' checkpoint lifecycle (operators/lineage.py): pin,
-pin_observed, advance and release on their own, then the block-release
-contract of every iterative graph loop — a finished call holds at most
-its result's checkpoint, and releasing the result frees that too."""
+"""The checkpoint lifecycle (operators/lineage.py): no lineage cut
+outside it, then pin, pin_observed, advance and release on their own,
+then the block-release contract of every iterative graph loop — a
+finished call holds at most its result's checkpoint, and releasing the
+result frees that too."""
 
 from __future__ import annotations
+
+import ast
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,8 +21,62 @@ from kinesis_stream_spark.operators.lineage import (
 )
 
 
+PACKAGE = Path(__file__).resolve().parents[1] / "kinesis_stream_spark"
+
+
 def _stored(spark) -> set[int]:
     return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def _jobs(spark, group, fn):
+    """``fn()`` and the number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_every_lineage_cut_goes_through_lineage():
+    # the local-vs-durable choice is made in lineage.pin alone: a
+    # checkpoint call anywhere else would escape a switch made there
+    modules = sorted(PACKAGE.rglob("*.py"))
+    assert len(modules) > 50  # the scan sees the package
+    cuts = []
+    for path in modules:
+        if path == PACKAGE / "operators" / "lineage.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("localCheckpoint", "checkpoint")
+            ):
+                cuts.append(f"{path.relative_to(PACKAGE)}:{node.lineno}")
+    assert cuts == []
+
+
+@pytest.mark.parametrize("shuffles", [0, 1])
+def test_lazy_pin_runs_no_job_until_read_then_holds_blocks(spark, shuffles):
+    # a lazy cut runs nothing at the call — except, under adaptive
+    # execution (on in the package session), the shuffle stages below
+    # it, which AQE runs to plan the stage above them
+    before = _stored(spark)
+    df = spark.range(300).select((F.col("id") % 11).alias("k"))
+    want = sorted(i % 11 for i in range(300))
+    if shuffles:
+        df, want = df.distinct(), list(range(11))
+    lazy, n_at_call = _jobs(
+        spark, f"lineage-test-lazy-pin-{shuffles}", lambda: pin(df, eager=False)
+    )
+    assert n_at_call == shuffles
+    assert not _stored(spark) - before
+    assert sorted(r.k for r in lazy.collect()) == want
+    assert len(_stored(spark) - before) == 1
+    release(lazy)
+    assert not _stored(spark) - before
 
 
 def test_advance_result_survives_release_of_prev(spark):
@@ -47,19 +105,10 @@ def test_release_tolerates_none_unpinned_and_repeats(spark):
 
 
 def test_pin_observed_returns_metric_and_adds_no_job(spark):
-    sc = spark.sparkContext
     df = spark.range(200).select((F.col("id") % 7).alias("k")).distinct()
-
-    def jobs(group, fn):
-        sc.setJobGroup(group, group)
-        try:
-            out = fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-    plain, n_plain = jobs("lineage-test-pin", lambda: pin(df))
-    (observed, m), n_observed = jobs(
+    plain, n_plain = _jobs(spark, "lineage-test-pin", lambda: pin(df))
+    (observed, m), n_observed = _jobs(
+        spark,
         "lineage-test-pin-observed",
         lambda: pin_observed(
             df, F.count(F.lit(1)).alias("n"), F.sum("k").alias("s")

@@ -100,27 +100,29 @@ def test_initial_position_trim_horizon_vs_latest(spark, stream_dir, tmp_path):
     assert counts[InitialPosition.LATEST] == 0  # 2024 data is all "the past"
 
 
+def _write_records(spark, in_dir: str, n: int, arrived: dt.datetime) -> None:
+    """Append one file of ``n`` envelope records (keys k0…) that arrived at ``arrived``."""
+    rows = [(f"k{i}", b"x", str(i), 0, "shardId-0", arrived) for i in range(n)]
+    spark.createDataFrame(rows, RECORD_SCHEMA).coalesce(1).write.mode(
+        "append"
+    ).parquet(in_dir)
+
+
 def test_latest_restart_delivers_records_that_arrived_while_stopped(spark, tmp_path):
     """LATEST applies to the app's first start only: a restart on the same
     checkpoint keeps the first start's cutoff, so records written while
     the app was stopped are delivered, not filtered as "the past"."""
     in_dir = str(tmp_path / "latest_in")
 
-    def write_records(n: int, arrived: dt.datetime) -> None:
-        rows = [(f"k{i}", b"x", str(i), 0, "shardId-0", arrived) for i in range(n)]
-        spark.createDataFrame(rows, RECORD_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(in_dir)
-
     now = dt.datetime.now(dt.timezone.utc)
-    write_records(3, now - dt.timedelta(hours=1))
+    _write_records(spark, in_dir, 3, now - dt.timedelta(hours=1))
     cfg = _config(in_dir, tmp_path, InitialPosition.LATEST)
     first: list[int] = []
     q = run_at_least_once(source(spark, cfg), cfg, lambda df, bid: first.append(df.count()))
     q.awaitTermination(120)
     assert first and sum(first) == 0  # the hour-old file is "the past"
 
-    write_records(5, dt.datetime.now(dt.timezone.utc))  # arrives while stopped
+    _write_records(spark, in_dir, 5, dt.datetime.now(dt.timezone.utc))  # arrives while stopped
     second: list[int] = []
     q2 = run_at_least_once(source(spark, cfg), cfg, lambda df, bid: second.append(df.count()))
     q2.awaitTermination(120)
@@ -132,6 +134,39 @@ def test_latest_restart_delivers_records_that_arrived_while_stopped(spark, tmp_p
     q3 = run_at_least_once(source(spark, fresh), fresh, lambda df, bid: third.append(df.count()))
     q3.awaitTermination(120)
     assert sum(third) == 0
+
+
+def test_upsert_latest_restart_keeps_records_that_arrived_while_stopped(spark, tmp_path):
+    """The upsert sink keeps Spark's offset log at
+    ``config.checkpoint_location``, where a LATEST source keeps its
+    cutoff, so the LATEST restart contract holds for it too: records
+    written while the app was stopped reach the snapshot."""
+    from kinesis_stream_spark.streaming.delivery import _latest_snapshot, run_upsert_latest
+
+    in_dir = str(tmp_path / "latest_in")
+    state = str(tmp_path / "latest_state")
+    _write_records(spark, in_dir, 3, dt.datetime.now(dt.timezone.utc) - dt.timedelta(hours=1))
+    cfg = _config(in_dir, tmp_path, InitialPosition.LATEST)
+
+    def drain() -> None:
+        run_upsert_latest(
+            source(spark, cfg),
+            cfg,
+            keys=["partitionKey"],
+            order_cols=["sequenceNumber"],
+            value_cols=["shardId"],
+            state_root=state,
+        ).awaitTermination(120)
+
+    def snapshot_keys() -> set[str]:
+        latest = _latest_snapshot(state)
+        return {r.partitionKey for r in spark.read.parquet(latest).collect()} if latest else set()
+
+    drain()
+    assert snapshot_keys() == set()  # the hour-old file is "the past"
+    _write_records(spark, in_dir, 5, dt.datetime.now(dt.timezone.utc))  # arrives while stopped
+    drain()
+    assert snapshot_keys() == {f"k{i}" for i in range(5)}
 
 
 def test_initial_position_at_timestamp(spark, sf_dir, stream_dir, tmp_path):
@@ -974,15 +1009,17 @@ def test_run_upsert_latest_maintains_scd1_across_batches(spark, tmp_path):
             rows, "user_id string, ts timestamp, status string"
         ).coalesce(1).write.mode("append").parquet(src)
 
+    cfg = _config(src, tmp_path)
+
     def drain():
         s = spark.readStream.schema("user_id string, ts timestamp, status string").parquet(src)
         run_upsert_latest(
             s,
+            cfg,
             keys=["user_id"],
             order_cols=["ts"],
             value_cols=["status"],
             state_root=state,
-            checkpoint_location=str(tmp_path / "up_ckpt"),
         ).awaitTermination(180)
 
     def snapshot():
