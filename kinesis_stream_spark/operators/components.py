@@ -33,20 +33,23 @@ and 23 jobs per call after the first, large/small-star 4.2–5.1 s and
 cached, each call counted to completion). On long chains only
 large/small-star converges within its cap — propagation needs a round
 per hop and raises past ``max_iterations``. Deleting either kernel
-regresses one of the two; merging them needs pointer jumping
-(comp := comp(comp)) so one kernel is fast on both.
+regresses one of the two; merging them needs one kernel that is fast
+on both.
 
-Pointer jumping is blocked on ``lineage.pin``, not on the algorithm: it
-converged a 64-node path in 7 rounds (both id orders) and matched
-union-find on 13 shape and fuzz graphs. But a pinned frame inherits its
-source plan's ``sizeInBytes`` estimate, and a round that joins the
-labels with themselves (``comp := labels[prop(v)]``) squares it. On a
-200-edge path the estimate's bit length after rounds 1–7 was 191, 444,
-950, 1962, 3987, 8036, 16133 (min-label rounds: 128, 191, 254 … 507,
-about +63 bits a round), and a 200-node path with shuffled ids stalled
-for more than 10 minutes with the driver inside ``BigInteger.multiply``
-in Catalyst's join statistics. ``lineage.pin`` must drop the inherited
-estimate before that merge is tried.
+Naive pointer jumping (a min-label round, then ``comp := comp[comp]``)
+is not that kernel: its round count is O(diameter) for arbitrary id
+orders. Probed with the jump as one key-partitioned window over the
+union of ask rows (k=comp, v) and answer rows (k=v, ans=comp), so no
+self-join and no stall, it reaches a fixpoint on a 64-node path in 7
+rounds with ascending or descending ids but in 33 with ids shuffled by
+``random.Random(7)``, and a 200-node shuffled path has no fixpoint
+within 60 rounds. Ordered ids were the easy case: a jump only shortens
+pointer chains that already point downhill. A merge needs a hooking
+scheme with a proven round bound (the large/small-star rewiring here,
+or Shiloach–Vishkin-style conditional hooking), not only a fix to
+``lineage.pin``'s inherited size estimate — although a pinned frame
+still inherits its source plan's ``sizeInBytes``, which grows by about
+64 bits a round under the min-label join.
 """
 
 from __future__ import annotations

@@ -26,6 +26,9 @@ from kinesis_stream_spark.operators.lineage import pin
 
 D38 = "decimal(38,0)"
 
+#: fixed-point scale the Pearson and Spearman correlations quantize to
+CORR_SCALE = 1 << 20
+
 
 def profile_columns(df: DataFrame, cols: list[str], *, exact: bool = True) -> DataFrame:
     """Per-column profile: (column_name, n_nulls, n_distinct).
@@ -204,15 +207,13 @@ def sql_fd_profile(table: str, pairs: list[tuple[str, str]]) -> str:
     return " UNION ALL ".join(selects)
 
 
-def numeric_correlations(
-    df: DataFrame, pairs: list[tuple[str, str]], *, scale_bits: int = 20
-) -> DataFrame:
+def numeric_correlations(df: DataFrame, pairs: list[tuple[str, str]]) -> DataFrame:
     """Pearson correlation for a list of numeric column pairs, in the
     engine's exact fixed-point discipline: values quantize to
-    ⌊x·2^scale_bits⌋ BIGINTs (one exact power-of-two multiply), the
-    five moment sums accumulate EXACTLY (per-row cross products as
-    DECIMAL(38,0) — a wide column squared at 2^20 overflows BIGINT
-    per-row), and
+    ⌊x·2^20⌋ BIGINTs (:data:`CORR_SCALE`, one exact power-of-two
+    multiply), the five moment sums accumulate EXACTLY (per-row cross
+    products as DECIMAL(38,0) — a wide column squared at 2^20
+    overflows BIGINT per-row), and
 
         r = (n·Σxy − Σx·Σy) / (sqrt(n·Σx² − (Σx)²) · sqrt(n·Σy² − (Σy)²))
 
@@ -220,8 +221,7 @@ def numeric_correlations(
     correctly-rounded sqrts, one multiply, one divide). The result is
     the correlation of the QUANTIZED columns — a deterministic,
     engine-independent contract (Pearson is invariant to linear maps,
-    so quantization error is the only deviation from the real-valued r
-    and shrinks with scale_bits).
+    so quantization error is the only deviation from the real-valued r).
 
     Output per pair: (col_x, col_y, n, r) — r NULL when either column
     is constant (zero variance). Rows where either column is NULL are
@@ -230,7 +230,7 @@ def numeric_correlations(
     UNION branches are independent and parallel."""
     if not pairs:
         raise ValueError("pairs must be non-empty")
-    s = float(1 << scale_bits)
+    s = float(CORR_SCALE)
     outs = []
     for cx, cy in pairs:
         both = df.where(F.col(cx).isNotNull() & F.col(cy).isNotNull()).select(
@@ -276,12 +276,10 @@ def numeric_correlations(
     return out
 
 
-def sql_numeric_correlations(
-    table: str, pairs: list[tuple[str, str]], *, scale_bits: int = 20
-) -> str:
+def sql_numeric_correlations(table: str, pairs: list[tuple[str, str]]) -> str:
     """DuckDB oracle twin of :func:`numeric_correlations` — identical
     quantization, HUGEINT-exact moments, pinned-order final floats."""
-    s = float(1 << scale_bits)
+    s = float(CORR_SCALE)
     selects = []
     for cx, cy in pairs:
         selects.append(
@@ -1159,7 +1157,6 @@ def spearman_correlation(
     group_col: str,
     x_col: str,
     y_col: str,
-    scale_bits: int = 20,
 ) -> DataFrame:
     """Per-group Spearman rank correlation ρ between two numeric
     columns — the monotone-association companion to
@@ -1169,7 +1166,7 @@ def spearman_correlation(
     linear r that the rank statistic refuses to see).
 
     ρ = Pearson on the rank vectors, with ties taking average ranks.
-    Exactness: values quantize to ⌊x·2^scale_bits⌋ BIGINTs (the
+    Exactness: values quantize to ⌊x·2^20⌋ BIGINTs (the
     numeric_correlations contract — ranks only ever compare, so
     quantization is the ONLY approximation); midranks are EXACT
     integers at 2× scale (midrank2 = 2·#smaller + #equal + 1, the
@@ -1198,7 +1195,7 @@ def spearman_correlation(
     from pyspark.sql import Window
     from kinesis_stream_spark.operators.skew import distributed_cumsums
 
-    s = float(1 << scale_bits)
+    s = float(CORR_SCALE)
     d19 = "decimal(19,0)"
     rows = df.where(
         F.col(group_col).isNotNull()
@@ -1275,13 +1272,12 @@ def sql_spearman_correlation(
     group_col: str,
     x_col: str,
     y_col: str,
-    scale_bits: int = 20,
 ) -> str:
     """DuckDB oracle twin of :func:`spearman_correlation` — identical
     quantization, exact 2×-midranks (plain per-group windows; the
     prefix-sum exchange is the Spark-side scale device, not a
     semantic), HUGEINT moments, VARCHAR-routed casts, pinned finals."""
-    s = float(1 << scale_bits)
+    s = float(CORR_SCALE)
     return f"""
     WITH rows_ AS (
       SELECT {group_col} AS grp,

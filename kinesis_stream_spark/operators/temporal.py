@@ -1,14 +1,33 @@
-"""Temporal reshaping operators: time-grid gap fill and SCD2 interval
-compaction (SURVEY.md §2.3 extension rows; no counterpart in the
-reference — kinesis-stream hands decoded records to user code and the
-time-series shaping happens downstream; these are that downstream,
-re-expressed declaratively).
+"""Temporal operators: time-grid gap fill, SCD2 interval compaction and
+the per-key period-series family — smoothing, drift, trend,
+changepoint, correlation and forecast-skill statistics (SURVEY.md §2.3
+extension rows; no counterpart in the reference — kinesis-stream hands
+decoded records to user code and the time-series shaping happens
+downstream; these are that downstream, re-expressed declaratively).
 
-Both operators key every computation on integer epoch indexes
+Every operator keys its computation on integer epoch indexes
 (``EPOCH_US // unit``), not timestamps: integer floor-division is exact
 and identical on every engine, while a float divide or an interval
 comparison near a bucket boundary can round differently (see
 ``queries/_util.py`` on cross-engine float discipline).
+
+**The period series** (:func:`_period_fx`) is what the series family
+folds, fits and correlates — one tumbling-window aggregate per key:
+
+- a period is one ``(key, bucket)`` cell, ``bucket`` the integer
+  index above;
+- rows with a NULL timestamp are excluded (a NULL bucket has no
+  position on the grid, and engines disagree on where NULLs sort — the
+  oracles apply the same WHERE);
+- the period value is the exact DECIMAL(27,6) sum of the cell's values
+  (order-free, so any partitioning gives the same sum);
+- ``vfx`` is that sum floored into 2^20 (:data:`EWMA_SCALE`)
+  fixed-point BIGINT — one power-of-two double multiply (an exponent
+  shift, no rounding), so every engine derives the same integers. A
+  cell whose values are all NULL has a NULL ``vfx``.
+
+From ``vfx`` on, each operator runs integer or DECIMAL arithmetic and
+ends in pinned-order IEEE steps that its oracle twin replays.
 """
 
 from __future__ import annotations
@@ -33,6 +52,96 @@ def _bucket(ts_col: str, unit_us: int) -> Column:
     return F.expr(f"unix_micros(cast({ts_col} as timestamp)) div {unit_us}")
 
 
+#: fixed-point scale of the period series (2^20 fractional bits)
+EWMA_SCALE = 1 << 20
+
+
+def _period_fx(
+    events: DataFrame, key_col: str, ts_col: str, value_col: str, unit_us: int
+) -> DataFrame:
+    """The period series of the module docstring: ``(key, bucket, vfx)``,
+    one row per occupied (key, bucket) cell. It is the one corpus-sized
+    pass of the series family, a map-side-combinable aggregate, so
+    everything downstream runs on a frame bounded by keys × buckets."""
+    return (
+        events.where(F.col(ts_col).isNotNull())
+        .groupBy(
+            F.col(key_col).alias("key"), _bucket(ts_col, unit_us).alias("bucket")
+        )
+        .agg(dsum(value_col, "v"))
+        .select(
+            "key",
+            "bucket",
+            F.floor(F.col("v") * F.lit(float(EWMA_SCALE))).cast("long").alias("vfx"),
+        )
+    )
+
+
+def _period_lists(per: DataFrame) -> DataFrame:
+    """``(key, s, n_periods)``: each key's periods as one bucket-sorted
+    array ``s`` of (bucket, vfx) structs. The fold operators walk it
+    inside one row; its length is bounded by the bucket grid, not by
+    event count."""
+    return (
+        per.select("key", F.struct("bucket", "vfx").alias("p"))
+        .groupBy("key")
+        .agg(
+            F.array_sort(F.collect_list("p")).alias("s"),
+            F.count(F.lit(1)).alias("n_periods"),
+        )
+    )
+
+
+def _first_and_rest() -> tuple[Column, Column]:
+    """The first period's ``vfx`` of a :func:`_period_lists` array (the
+    fold seed) and the array of the remaining ``vfx`` values."""
+    rest = F.transform(F.slice(F.col("s"), 2, F.size("s") - 1), lambda x: x["vfx"])
+    return F.element_at(F.col("s"), 1)["vfx"], rest
+
+
+def _x_offsets(per: DataFrame) -> DataFrame:
+    """``(key, bucket, x, yfx)``: the period series with x the bucket
+    offset from the key's first occupied bucket (0-based, gaps kept).
+    x is grid-sized, not epoch-sized, so products x·yfx fit BIGINT."""
+    return per.select(
+        "key",
+        "bucket",
+        (F.col("bucket") - F.min("bucket").over(Window.partitionBy("key")))
+        .cast("long")
+        .alias("x"),
+        F.col("vfx").alias("yfx"),
+    )
+
+
+def _dense_grid(
+    events: DataFrame, key_col: str, ts_col: str, value_col: str, unit_us: int
+) -> DataFrame:
+    """``(key, bucket, n_events, bucket_sum)`` on each key's dense bucket
+    range, from its first to its last occupied bucket. Empty buckets
+    carry NULL ``n_events`` and ``bucket_sum``.
+
+    The raw scan collapses FIRST (one shuffle on (key, bucket), partial
+    aggregation map-side), so the grid join runs on ~|keys|×|buckets|
+    rows, not on raw events. The grid is generated per key with
+    ``sequence()``: no driver loop, no cross join."""
+    occupied = (
+        events.select(
+            F.col(key_col).alias("key"),
+            _bucket(ts_col, unit_us).alias("bucket"),
+            F.col(value_col).alias("v"),
+        )
+        .groupBy("key", "bucket")
+        .agg(F.count(F.lit(1)).alias("n_events"), dsum(F.col("v"), "bucket_sum"))
+    )
+    spans = occupied.groupBy("key").agg(
+        F.min("bucket").alias("b0"), F.max("bucket").alias("b1")
+    )
+    grid = spans.select(
+        "key", F.explode(F.sequence("b0", "b1")).alias("bucket")
+    )
+    return grid.join(occupied, ["key", "bucket"], "left")
+
+
 def gap_fill_forward(
     events: DataFrame,
     *,
@@ -53,44 +162,23 @@ def gap_fill_forward(
     across empty buckets (``last(..., ignorenulls)`` over an
     unbounded-preceding row frame).
 
-    Scale shape: the raw scan collapses FIRST (one shuffle on
-    (key, bucket) — partial aggregation map-side), so the window and
-    grid join run on ~|keys|×|buckets| rows, not on raw events. The
-    dense grid is generated per key with ``sequence()`` — no driver
-    loop, no cross join. The fill window partitions by key: parallel
-    across keys, and at 100 TB a year of hourly buckets is ~9k rows
-    per key — trivially in-memory per partition. Buckets are integer
-    indexes; callers convert back to timestamps at the edge.
+    Scale shape: :func:`_dense_grid`'s, and the fill window partitions
+    by key: parallel across keys, and at 100 TB a year of hourly
+    buckets is ~9k rows per key — trivially in-memory per partition.
+    Buckets are integer indexes; callers convert back to timestamps at
+    the edge.
     """
-    occupied = (
-        events.select(
-            F.col(key_col).alias("key"),
-            _bucket(ts_col, unit_us).alias("bucket"),
-            F.col(value_col).alias("v"),
-        )
-        .groupBy("key", "bucket")
-        .agg(F.count(F.lit(1)).alias("n_events"), dsum(F.col("v"), "bucket_sum"))
-    )
-    spans = occupied.groupBy("key").agg(
-        F.min("bucket").alias("b0"), F.max("bucket").alias("b1")
-    )
-    grid = spans.select(
-        "key", F.explode(F.sequence("b0", "b1")).alias("bucket")
-    )
     w = (
         Window.partitionBy("key")
         .orderBy("bucket")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    return (
-        grid.join(occupied, ["key", "bucket"], "left")
-        .select(
-            F.col("key"),
-            F.col("bucket"),
-            F.coalesce("n_events", F.lit(0)).alias("n_events"),
-            F.col("n_events").isNull().alias("is_gap"),
-            F.last("bucket_sum", ignorenulls=True).over(w).alias("filled_sum"),
-        )
+    return _dense_grid(events, key_col, ts_col, value_col, unit_us).select(
+        F.col("key"),
+        F.col("bucket"),
+        F.coalesce("n_events", F.lit(0)).alias("n_events"),
+        F.col("n_events").isNull().alias("is_gap"),
+        F.last("bucket_sum", ignorenulls=True).over(w).alias("filled_sum"),
     )
 
 
@@ -493,8 +581,10 @@ def mann_kendall(
     window), not by event count — the classic way MK stays tractable:
     coarsen ``unit_us`` as the horizon grows. Keys with one period
     have no pairs and classify 'flat'. NULL timestamps are excluded
-    by contract (the family convention shared with ewma/cusum/holt —
-    a NULL bucket is not a period)."""
+    (the period-series contract in the module docstring)."""
+    # Not _period_fx: S compares the DECIMAL sums themselves, with no
+    # double cast and no 2^20 floor, so two sums that differ only past
+    # double precision (or below 2^-20) still sign correctly.
     daily = (
         events.where(F.col(ts_col).isNotNull())
         .groupBy(
@@ -532,10 +622,6 @@ def mann_kendall(
     )
 
 
-#: fixed-point scale for EWMA state (2^20 fractional bits)
-EWMA_SCALE = 1 << 20
-
-
 def ewma(
     events: DataFrame,
     *,
@@ -553,37 +639,20 @@ def ewma(
     double divide is exact, and floor — unlike integer ``DIV`` — agrees
     across engines on negative inputs too).
 
-    Exactness chain: period sums are DECIMAL(27,6) (order-free), the
-    2^20 scale-up is a power-of-two double multiply (exponent shift,
-    no rounding), and the fold is integers thereafter — bit-identical
-    on any engine, any partitioning.
+    Exactness chain: the period series (module docstring) is exact
+    integers, and the fold is integers thereafter — bit-identical on
+    any engine, any partitioning.
 
-    Scale shape: one map-side-combinable (key, bucket) aggregate, then
-    one per-key collect of the PERIOD list — bounded by the bucket
-    grid (e.g. days in window), never by event count; the fold is a
-    per-row array op on that bounded list. The sequential recurrence
-    lives entirely inside one row — no cross-row window, no
-    serialized global pass.
-
-    NULL timestamps are excluded by contract (a NULL bucket has no
-    position in the fold order, and engines disagree on where NULLs
-    sort — the oracle applies the same WHERE)."""
-    daily = events.where(F.col(ts_col).isNotNull()).groupBy(
-        F.col(key_col).alias("key"), _bucket(ts_col, unit_us).alias("bucket")
-    ).agg(dsum(value_col, "v"))
-    vfx = F.floor(F.col("v") * F.lit(float(EWMA_SCALE))).cast("long")
-    per_key = daily.select("key", F.struct("bucket", vfx.alias("vfx")).alias("p")).groupBy(
-        "key"
-    ).agg(
-        F.array_sort(F.collect_list("p")).alias("s"),
-        F.count(F.lit(1)).alias("n_periods"),
-    )
-    rest = F.transform(
-        F.slice(F.col("s"), 2, F.size("s") - 1), lambda x: x["vfx"]
-    )
+    Scale shape: the period-series aggregate, then one per-key collect
+    of the PERIOD list — bounded by the bucket grid (e.g. days in
+    window), never by event count; the fold is a per-row array op on
+    that bounded list. The sequential recurrence lives entirely inside
+    one row — no cross-row window, no serialized global pass."""
+    per_key = _period_lists(_period_fx(events, key_col, ts_col, value_col, unit_us))
+    first, rest = _first_and_rest()
     folded = F.aggregate(
         rest,
-        F.element_at(F.col("s"), 1)["vfx"],
+        first,
         lambda acc, x: F.floor((3 * acc + x) / F.lit(4.0)).cast("long"),
     )
     return per_key.select(
@@ -616,28 +685,20 @@ def cusum(
     count, and max excursions — every column BIGINT fixed point
     (2^20), so cross-engine parity is trivial.
 
-    Exactness chain (the :func:`ewma` discipline): DECIMAL(27,6)
-    period sums, one exact power-of-two double multiply into 2^20
-    fixed point, then integers only. μ uses ``FLOOR(sum/n)`` via a
-    deterministic IEEE divide of exactly-cast integers — identical in
-    any engine; everything after is integer compare/add/max.
+    Exactness chain: the period series (module docstring), then
+    integers only. μ uses ``FLOOR(sum/n)`` via a deterministic IEEE
+    divide of exactly-cast integers — identical in any engine;
+    everything after is integer compare/add/max.
 
-    Scale shape: one map-side-combinable (key, bucket) aggregate over
-    the corpus; the center/scale pass and the fold run on the
-    PERIOD-grid-bounded frame (two small aggregates + one per-row
-    array fold) — the sequential recurrence lives inside one row, no
-    cross-row window, no serialized pass. State is a 5-long BIGINT
-    array; headroom: |x−μ| ≤ 2·max|v|·2^20 and the fold caps S at
-    max excursion ≤ Σ|x−μ| ≤ P·2^42-ish for bounded values — far
-    inside BIGINT for any bucket grid.
-
-    NULL timestamps are excluded by contract (:func:`ewma`'s rule —
-    a NULL bucket has no defined fold position)."""
-    daily = events.where(F.col(ts_col).isNotNull()).groupBy(
-        F.col(key_col).alias("key"), _bucket(ts_col, unit_us).alias("bucket")
-    ).agg(dsum(value_col, "v"))
-    vfx = F.floor(F.col("v") * F.lit(float(EWMA_SCALE))).cast("long")
-    per = daily.select("key", "bucket", vfx.alias("vfx"))
+    Scale shape: the period-series aggregate over the corpus; the
+    center/scale pass and the fold run on the PERIOD-grid-bounded
+    frame (two small aggregates + one per-row array fold) — the
+    sequential recurrence lives inside one row, no cross-row window,
+    no serialized pass. State is a 5-long BIGINT array; headroom:
+    |x−μ| ≤ 2·max|v|·2^20 and the fold caps S at max excursion ≤
+    Σ|x−μ| ≤ P·2^42-ish for bounded values — far inside BIGINT for
+    any bucket grid."""
+    per = _period_fx(events, key_col, ts_col, value_col, unit_us)
     center = per.groupBy("key").agg(
         F.floor(
             F.sum("vfx").cast("double") / F.count(F.lit(1))
@@ -657,16 +718,7 @@ def cusum(
             .alias("mad_fx"),
         )
     )
-    arr = (
-        per.select("key", F.struct("bucket", "vfx").alias("p"))
-        .groupBy("key")
-        .agg(
-            F.array_sort(F.collect_list("p")).alias("s"),
-            F.count(F.lit(1)).alias("n_periods"),
-        )
-        .join(center, "key")
-        .join(scale, "key")
-    )
+    arr = _period_lists(per).join(center, "key").join(scale, "key")
     vals = F.transform(F.col("s"), lambda x: x["vfx"])
     mu, mad = F.col("mu_fx"), F.col("mad_fx")
     k = F.floor(mad / F.lit(2.0)).cast("long")
@@ -716,31 +768,15 @@ def holt(
     forecast is l + b. Output per key: n_periods, level_fx, trend_fx,
     forecast_fx (2^20 fixed point BIGINTs) plus the three as doubles.
 
-    Exactness chain and scale shape are :func:`cusum`'s: DECIMAL
-    period sums, one exact power-of-two double multiply into fixed
-    point, then an integer 2-state fold over the grid-bounded period
-    list inside one row — ``FLOOR(x / 4.0)`` divides (power-of-two
-    double divide is exact; floor agrees across engines on
-    negatives). Headroom: l tracks the data range and b its per-step
-    delta — both bounded by max|v|·2^21-ish, far inside BIGINT.
-
-    NULL timestamps are excluded by contract (:func:`ewma`'s rule —
-    a NULL bucket has no defined fold position)."""
-    daily = events.where(F.col(ts_col).isNotNull()).groupBy(
-        F.col(key_col).alias("key"), _bucket(ts_col, unit_us).alias("bucket")
-    ).agg(dsum(value_col, "v"))
-    vfx = F.floor(F.col("v") * F.lit(float(EWMA_SCALE))).cast("long")
-    per_key = (
-        daily.select("key", F.struct("bucket", vfx.alias("vfx")).alias("p"))
-        .groupBy("key")
-        .agg(
-            F.array_sort(F.collect_list("p")).alias("s"),
-            F.count(F.lit(1)).alias("n_periods"),
-        )
-    )
-    rest = F.transform(
-        F.slice(F.col("s"), 2, F.size("s") - 1), lambda x: x["vfx"]
-    )
+    Exactness chain and scale shape are :func:`ewma`'s: the period
+    series (module docstring), then an integer 2-state fold over the
+    grid-bounded period list inside one row — ``FLOOR(x / 4.0)``
+    divides (power-of-two double divide is exact; floor agrees across
+    engines on negatives). Headroom: l tracks the data range and b its
+    per-step delta — both bounded by max|v|·2^21-ish, far inside
+    BIGINT."""
+    per_key = _period_lists(_period_fx(events, key_col, ts_col, value_col, unit_us))
+    first, rest = _first_and_rest()
     zero = F.lit(0).cast("long")
 
     def _step(acc, x):
@@ -748,11 +784,7 @@ def holt(
         tr = F.floor(((lvl - acc[0]) + 3 * acc[1]) / F.lit(4.0)).cast("long")
         return F.array(lvl, tr)
 
-    st = F.aggregate(
-        rest,
-        F.array(F.element_at(F.col("s"), 1)["vfx"], zero),
-        _step,
-    )
+    st = F.aggregate(rest, F.array(first, zero), _step)
     fc = st[0] + st[1]
     return per_key.select(
         "key",
@@ -923,29 +955,18 @@ def linear_trend(
     for gapped keys). Single-period keys emit NULL slope (den = 0) by
     contract.
 
-    Exactness chain: the :func:`ewma` discipline — DECIMAL(27,6)
-    period sums, one exact power-of-two multiply into 2^20 BIGINT fx.
-    Centering x on the key's min bucket keeps x grid-sized (not
-    epoch-sized), so per-row products x·yfx fit BIGINT; the four
+    Exactness chain: the period series (module docstring) as yfx, with
+    x centered on the key's min bucket (:func:`_x_offsets`); the four
     moment sums accumulate as DECIMAL(38,0) (order-free), the
     slope/intercept arithmetic runs in DECIMAL(38,0) exactly, and the
     ONLY floats are the final pinned-order divides (correctly-rounded
     casts on both engines).
 
-    Scale shape: one map-side-combinable (key, bucket) aggregate over
-    the corpus, a key-partitioned MIN window on the period frame, then
-    one combinable moment aggregate per key — no per-row state, no
-    iteration, no driver math. NULL timestamps are excluded by
-    contract (:func:`ewma`'s rule)."""
-    daily = events.where(F.col(ts_col).isNotNull()).groupBy(
-        F.col(key_col).alias("key"), _bucket(ts_col, unit_us).alias("bucket")
-    ).agg(dsum(value_col, "v"))
-    w0 = Window.partitionBy("key")
-    per = daily.select(
-        "key",
-        (F.col("bucket") - F.min("bucket").over(w0)).cast("long").alias("x"),
-        F.floor(F.col("v") * F.lit(float(EWMA_SCALE))).cast("long").alias("yfx"),
-    )
+    Scale shape: the period-series aggregate over the corpus, a
+    key-partitioned MIN window on the period frame, then one
+    combinable moment aggregate per key — no per-row state, no
+    iteration, no driver math."""
+    per = _x_offsets(_period_fx(events, key_col, ts_col, value_col, unit_us))
     d38 = "decimal(38,0)"
     m = per.groupBy("key").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -1459,7 +1480,6 @@ def lead_lag_correlation(
     ts_col: str = "ts",
     value_col: str = "value",
     unit_us: int = DAY_US,
-    scale_bits: int = 20,
 ) -> DataFrame:
     """Lead–lag cross-correlation between two event types' daily value
     series: Pearson r of (a[t], b[t + lag]) for lag ∈ [−max_lag,
@@ -1467,8 +1487,8 @@ def lead_lag_correlation(
     purchases by a day?"). A positive-lag peak means ``type_a`` LEADS
     ``type_b``.
 
-    Exactness chain: per-(type, bucket) DECIMAL(27,6) sums quantize to
-    2^scale_bits BIGINT fx; each lag's five moment sums accumulate as
+    Exactness chain: the period series (module docstring) keyed by
+    type; each lag's five moment sums accumulate as
     DECIMAL(38,0) over the aligned bucket pairs (the
     :func:`~kinesis_stream_spark.operators.profile.numeric_correlations`
     discipline), finals are two correctly-rounded sqrts + one pinned
@@ -1481,24 +1501,16 @@ def lead_lag_correlation(
     Scale shape: ONE combinable (type, bucket) aggregate over the
     corpus collapses everything to two grid-bounded series; the lag
     loop is a workload constant (2·max_lag + 1 equi-joins on the
-    bucket, each grid-sized); no windows, no corpus re-scan. NULL
-    timestamps are excluded by contract (:func:`ewma`'s rule)."""
+    bucket, each grid-sized); no windows, no corpus re-scan."""
     if max_lag < 0:
         raise ValueError(f"max_lag must be >= 0, got {max_lag}")
-    s = float(1 << scale_bits)
     daily = pin(
-        events.where(
-            F.col(ts_col).isNotNull()
-            & F.col(type_col).isin([type_a, type_b])
-        )
-        .groupBy(
-            F.col(type_col).alias("t"), _bucket(ts_col, unit_us).alias("bucket")
-        )
-        .agg(dsum(value_col, "v"))
-        .select(
-            "t",
-            "bucket",
-            F.floor(F.col("v") * F.lit(s)).cast("long").alias("vfx"),
+        _period_fx(
+            events.where(F.col(type_col).isin([type_a, type_b])),
+            type_col,
+            ts_col,
+            value_col,
+            unit_us,
         )
         # a bucket whose events all carry NULL values has no
         # observation (vfx NULL): drop it, or COUNT(*) in the moment
@@ -1506,10 +1518,10 @@ def lead_lag_correlation(
         .where(F.col("vfx").isNotNull()),
         eager=False,
     )
-    a = daily.where(F.col("t") == type_a).select(
+    a = daily.where(F.col("key") == type_a).select(
         F.col("bucket").alias("ab"), F.col("vfx").alias("x")
     )
-    b = daily.where(F.col("t") == type_b).select(
+    b = daily.where(F.col("key") == type_b).select(
         F.col("bucket").alias("bb"), F.col("vfx").alias("y")
     )
     return _lag_correlations(
@@ -1528,10 +1540,9 @@ def sql_lead_lag_correlation(
     ts_col: str = "ts",
     value_col: str = "value",
     unit_us: int = DAY_US,
-    scale_bits: int = 20,
 ) -> str:
     """DuckDB oracle twin of :func:`lead_lag_correlation`."""
-    s = float(1 << scale_bits)
+    s = float(EWMA_SCALE)
     selects = []
     for lag in range(-max_lag, max_lag + 1):
         selects.append(
@@ -2136,7 +2147,6 @@ def autocorrelation(
     ts_col: str = "ts",
     value_col: str = "value",
     unit_us: int = DAY_US,
-    scale_bits: int = 20,
 ) -> DataFrame:
     """Per-key autocorrelation function (ACF): Pearson r of
     (v[t], v[t + lag]) over the key's own daily value series for
@@ -2144,12 +2154,11 @@ def autocorrelation(
     before fitting any forecaster (a strong lag-7 spike says weekly
     shape; fast decay says the EWMA family suffices). The self-series
     twin of :func:`lead_lag_correlation`, sharing its exactness chain:
-    DECIMAL(27,6) daily sums quantized to 2^scale_bits BIGINT fx,
-    moment sums in DECIMAL(38,0), two correctly-rounded sqrts + one
-    pinned divide per output; r is NULL when fewer than 2 pairs align
-    or the aligned series is constant. Missing buckets are excluded
-    pairwise (gap days carry no observation). NULL timestamps are
-    excluded by contract.
+    the period series (module docstring), moment sums in
+    DECIMAL(38,0), two correctly-rounded sqrts + one pinned divide per
+    output; r is NULL when fewer than 2 pairs align or the aligned
+    series is constant. Missing buckets are excluded pairwise (gap
+    days carry no observation).
 
     Output: (key, lag, n_pairs, r), one row per key per lag.
 
@@ -2159,20 +2168,10 @@ def autocorrelation(
     workload constant, never a corpus re-scan."""
     if max_lag < 1:
         raise ValueError(f"max_lag must be >= 1, got {max_lag}")
-    s = float(1 << scale_bits)
     daily = pin(
-        events.where(F.col(ts_col).isNotNull())
-        .groupBy(
-            F.col(key_col).alias("key"),
-            _bucket(ts_col, unit_us).alias("bucket"),
-        )
-        .agg(dsum(value_col, "v"))
-        .select(
-            "key",
-            "bucket",
-            F.floor(F.col("v") * F.lit(s)).cast("long").alias("vfx"),
-        )
-        .where(F.col("vfx").isNotNull()),
+        _period_fx(events, key_col, ts_col, value_col, unit_us).where(
+            F.col("vfx").isNotNull()
+        ),
         eager=False,
     )
     a = daily.select("key", F.col("bucket").alias("ab"), F.col("vfx").alias("x"))
@@ -2192,11 +2191,10 @@ def sql_autocorrelation(
     ts_col: str = "ts",
     value_col: str = "value",
     unit_us: int = DAY_US,
-    scale_bits: int = 20,
 ) -> str:
     """DuckDB oracle twin of :func:`autocorrelation` (identical fx
     quantization, HUGEINT moments, VARCHAR-routed double casts)."""
-    s = float(1 << scale_bits)
+    s = float(EWMA_SCALE)
     selects = []
     for lag in range(1, max_lag + 1):
         selects.append(
@@ -2523,40 +2521,25 @@ def theil_sen_trend(
     monitoring pipelines fit Theil-Sen next to OLS and alarm on
     disagreement.
 
-    Exactness chain: period sums take the :func:`linear_trend` fx
-    encoding (DECIMAL(27,6) exact sum → one power-of-two multiply →
-    BIGINT 2^20 fixed point); each pairwise slope is ONE pinned IEEE
-    divide of two exactly-cast BIGINTs (Δyfx / Δx); the median is
-    order-statistic selection (no accumulation), and an even pair
-    count averages the two middle slopes with one more pinned IEEE
-    step. Keys with a single occupied bucket have no pairs and are
-    absent by contract. NULL timestamps are excluded (:func:`ewma`'s
-    family rule).
+    Exactness chain: the period series (module docstring); each
+    pairwise slope is ONE pinned IEEE divide of two exactly-cast
+    BIGINTs (Δyfx / Δx); the median is order-statistic selection (no
+    accumulation), and an even pair count averages the two middle
+    slopes with one more pinned IEEE step. Keys with a single occupied
+    bucket have no pairs and are absent by contract.
 
     Output per key: (key, n_periods, n_pairs, sen_slope_fx, sen_slope)
     — sen_slope in value units per period (exact power-of-two divide
     of the fx median).
 
-    Scale shape: the corpus-sized pass is the map-side-combinable
-    (key, bucket) aggregate; the pairwise self-join runs on the
-    GRID-BOUNDED period frame (≤ calendar-days² rows per key — time
-    buckets, not events, so corpus growth adds rows per bucket, not
-    pairs), and the median window is key-partitioned. The oracle
-    replays the identical pair frame and selection."""
-    daily = (
-        events.where(F.col(ts_col).isNotNull())
-        .groupBy(
-            F.col(key_col).alias("key"),
-            _bucket(ts_col, unit_us).alias("bucket"),
-        )
-        .agg(dsum(F.col(value_col), "v"))
-        .select(
-            "key",
-            F.col("bucket").cast("long").alias("x"),
-            F.floor(F.col("v") * F.lit(float(EWMA_SCALE)))
-            .cast("long")
-            .alias("yfx"),
-        )
+    Scale shape: the corpus-sized pass is the period-series
+    aggregate; the pairwise self-join runs on the GRID-BOUNDED period
+    frame (≤ calendar-days² rows per key — time buckets, not events,
+    so corpus growth adds rows per bucket, not pairs), and the median
+    window is key-partitioned. The oracle replays the identical pair
+    frame and selection."""
+    daily = _period_fx(events, key_col, ts_col, value_col, unit_us).select(
+        "key", F.col("bucket").alias("x"), F.col("vfx").alias("yfx")
     )
     a, b = daily.alias("a"), daily.alias("b")
     pairs = a.join(
@@ -3002,8 +2985,8 @@ def changepoint(
     that a drift happened; this LOCATES the single break ("which day
     did the metric change regime").
 
-    Cross-engine exactness: period sums in the :func:`linear_trend` fx
-    encoding (BIGINT); prefix sums S_l ride a key-partitioned window
+    Cross-engine exactness: the period series (module docstring);
+    prefix sums S_l ride a key-partitioned window
     in exact DECIMAL(38,0); the contrast numerator n_r·S_l − n_l·S_r
     stays DECIMAL(38,0) exact; its square would overflow any integer
     width, so the score is ONE pinned per-row IEEE chain
@@ -3011,35 +2994,22 @@ def changepoint(
     identical inputs, identical instructions, identical doubles. The
     argmax is a row_number selection on (score DESC, t ASC) — a
     deterministic order on deterministic doubles. Keys with < 2
-    occupied buckets have no valid split and are absent; NULL
-    timestamps are excluded by the family contract.
+    occupied buckets have no valid split and are absent.
 
     Output per key: (key, n_periods, cp_index, cp_bucket, mean_before,
     mean_after, score) — cp_index = periods in the left segment (split
     is AFTER position cp_index), cp_bucket = the bucket id of the last
     pre-break period; means in value units (exact fx divides).
 
-    Scale shape: one map-side-combinable (key, bucket) aggregate over
-    the corpus, then key-PARTITIONED windows on the grid-bounded
-    period frame (≤ calendar buckets per key) — no self-join (the
-    prefix-sum identity S_r = S − S_l does the work the pairwise
-    Theil-Sen join needs), no global window, no driver math."""
+    Scale shape: the period-series aggregate over the corpus, then
+    key-PARTITIONED windows on the grid-bounded period frame (≤
+    calendar buckets per key) — no self-join (the prefix-sum identity
+    S_r = S − S_l does the work the pairwise Theil-Sen join needs), no
+    global window, no driver math."""
     d38 = "decimal(38,0)"
-    daily = (
-        events.where(F.col(ts_col).isNotNull())
-        .groupBy(
-            F.col(key_col).alias("key"),
-            _bucket(ts_col, unit_us).alias("bucket"),
-        )
-        .agg(dsum(F.col(value_col), "v"))
-        .select(
-            "key",
-            F.col("bucket").cast("long").alias("bucket"),
-            F.floor(F.col("v") * F.lit(float(EWMA_SCALE)))
-            .cast("long")
-            .alias("yfx"),
-        )
-    )
+    daily = _period_fx(
+        events, key_col, ts_col, value_col, unit_us
+    ).withColumnRenamed("vfx", "yfx")
     w_ord = Window.partitionBy("key").orderBy("bucket")
     w_all = Window.partitionBy("key")
     per = daily.select(
@@ -3182,12 +3152,12 @@ def anomaly_episodes(
     islands over the flagged frame, the gaps-and-islands id that
     needs no lag chain.
 
-    Flagging is integer-exact: period fx sums (the :func:`ewma`
-    encoding), and the threshold compare runs as
+    Flagging is integer-exact: the period series (module docstring),
+    and the threshold compare runs as
     den·n·yfx > num·Σy in DECIMAL(38,0) cross-multiplication — no
     mean is ever materialized, no division anywhere in the predicate.
     Peak value is the episode's max fx, exact power-of-two divide to
-    value units. NULL timestamps are excluded by the family contract.
+    value units.
     Keys whose total is non-positive flag nothing (a mean-multiple
     threshold is meaningless below zero — the MAD family handles
     those; lazily-guarded on both engines).
@@ -3195,29 +3165,17 @@ def anomaly_episodes(
     Output per episode: (key, start_bucket, end_bucket, n_periods,
     peak_value).
 
-    Scale shape: one map-side-combinable (key, bucket) aggregate, a
-    broadcastable per-key totals join, a key-partitioned rank window
-    over the FLAGGED subset only, one combinable island reduce."""
+    Scale shape: the period-series aggregate, a broadcastable per-key
+    totals join, a key-partitioned rank window over the FLAGGED subset
+    only, one combinable island reduce."""
     if ratio_num <= 0 or ratio_den <= 0:
         raise ValueError(
             f"ratio must be positive, got {ratio_num}/{ratio_den}"
         )
     d38 = "decimal(38,0)"
-    daily = (
-        events.where(F.col(ts_col).isNotNull())
-        .groupBy(
-            F.col(key_col).alias("key"),
-            _bucket(ts_col, unit_us).alias("bucket"),
-        )
-        .agg(dsum(F.col(value_col), "v"))
-        .select(
-            "key",
-            F.col("bucket").cast("long").alias("bucket"),
-            F.floor(F.col("v") * F.lit(float(EWMA_SCALE)))
-            .cast("long")
-            .alias("yfx"),
-        )
-    )
+    daily = _period_fx(
+        events, key_col, ts_col, value_col, unit_us
+    ).withColumnRenamed("vfx", "yfx")
     tot = daily.groupBy("key").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(F.col("yfx").cast(d38)).cast(d38).alias("s"),
@@ -3572,36 +3530,26 @@ def rolling_regression(
     time grid, not row number), so a key silent for a month doesn't
     fake a gentle slope.
 
-    Exactness chain: :func:`linear_trend`'s — DECIMAL(27,6) period
-    sums, one exact power-of-two multiply into 2^20 BIGINT fx, per-row
-    BIGINT products x·yfx and x·x BEFORE the window, exact BIGINT
-    window sums, DECIMAL(38,0) closed-form numerator/denominator, and
-    ONLY then the pinned divides (num/den, then the 2^-20 rescale).
-    The oracle replays the identical frame (ROWS BETWEEN n−1 PRECEDING
-    AND CURRENT ROW over x, which is unique per key — tie-free).
-    Windows holding a single row emit NULL slope (den = 0) by
-    contract; NULL timestamps are excluded (:func:`ewma`'s rule).
+    Exactness chain: :func:`linear_trend`'s — the period series and
+    its x offsets, per-row BIGINT products x·yfx and x·x BEFORE the
+    window, exact BIGINT window sums, DECIMAL(38,0) closed-form
+    numerator/denominator, and ONLY then the pinned divides (num/den,
+    then the 2^-20 rescale). The oracle replays the identical frame
+    (ROWS BETWEEN n−1 PRECEDING AND CURRENT ROW over x, which is
+    unique per key — tie-free). Windows holding a single row emit NULL
+    slope (den = 0) by contract.
 
     Output per (key, bucket): (key, bucket, n_win, window_sum_fx,
     slope) — slope in value units per period.
 
-    Scale shape: one map-side-combinable (key, bucket) aggregate over
-    the corpus, then two windows over the PERIOD frame (days × keys
-    rows, corpus-independent): the key-partitioned MIN for offsets and
-    the rolling moment sums. No self-join, no per-row state, no
-    second corpus pass. Headroom: x is grid-sized (≤ days of history),
+    Scale shape: the period-series aggregate over the corpus, then two
+    windows over the PERIOD frame (days × keys rows,
+    corpus-independent): the key-partitioned MIN for offsets and the
+    rolling moment sums. No self-join, no per-row state, no second
+    corpus pass. Headroom: x is grid-sized (≤ days of history),
     yfx ≤ 2^20·Σ|value|/day — x·yfx stays inside BIGINT to ~10^4 days
     of ~10^14-fx daily mass."""
-    daily = events.where(F.col(ts_col).isNotNull()).groupBy(
-        F.col(key_col).alias("key"), _bucket(ts_col, unit_us).alias("bucket")
-    ).agg(dsum(value_col, "v"))
-    w0 = Window.partitionBy("key")
-    per = daily.select(
-        "key",
-        "bucket",
-        (F.col("bucket") - F.min("bucket").over(w0)).cast("long").alias("x"),
-        F.floor(F.col("v") * F.lit(float(EWMA_SCALE))).cast("long").alias("yfx"),
-    ).select(
+    per = _x_offsets(_period_fx(events, key_col, ts_col, value_col, unit_us)).select(
         "key",
         "bucket",
         "x",
@@ -3835,8 +3783,8 @@ def runs_test(
     a sensor alternating between two calibrations). Works on signs
     only, so it is insensitive to the value scale.
 
-    Mechanics: daily period sums (the :func:`ewma` DECIMAL → 2^20 fx
-    discipline), day-over-day differences per key, zero differences
+    Mechanics: the period series (module docstring), day-over-day
+    differences per key, zero differences
     DROPPED (the standard treatment — a tie is neither rise nor fall),
     then R = 1 + (number of sign alternations). Under randomness R is
     approximately normal with
@@ -3849,28 +3797,20 @@ def runs_test(
     2 > n ≥ 1, no rises, or no falls yield NULL z by contract (σ = 0);
     keys with ZERO scorable moves (single-day or flat series — every
     diff zero or absent) emit NO row at all (nothing to test; join an
-    expected-key list to see them). NULL timestamps are excluded
-    (:func:`ewma`'s rule).
+    expected-key list to see them).
 
     Output per key: (key, n_moves, n_up, n_down, n_runs, z_runs).
 
-    Scale shape: one map-side-combinable (key, bucket) aggregate, then
-    two key-partitioned windows over the period frame (days×keys
-    rows): the lag for differences and the lag for alternation counts.
-    No joins, no corpus-sized window."""
-    daily = events.where(F.col(ts_col).isNotNull()).groupBy(
-        F.col(key_col).alias("key"), _bucket(ts_col, unit_us).alias("bucket")
-    ).agg(dsum(value_col, "v"))
+    Scale shape: the period-series aggregate, then two key-partitioned
+    windows over the period frame (days×keys rows): the lag for
+    differences and the lag for alternation counts. No joins, no
+    corpus-sized window."""
+    daily = _period_fx(events, key_col, ts_col, value_col, unit_us)
     w = Window.partitionBy("key").orderBy("bucket")
     diffs = daily.select(
         "key",
         "bucket",
-        (
-            F.floor(F.col("v") * F.lit(float(EWMA_SCALE))).cast("long")
-            - F.lag(
-                F.floor(F.col("v") * F.lit(float(EWMA_SCALE))).cast("long")
-            ).over(w)
-        ).alias("d"),
+        (F.col("vfx") - F.lag("vfx").over(w)).alias("d"),
     ).where(F.col("d").isNotNull() & (F.col("d") != 0))
     signs = diffs.select(
         "key",
@@ -4018,28 +3958,11 @@ def linear_interpolation(
     through the fill windows so a NULL-sum observation can never
     pair one row's bucket with another row's value.
 
-    Scale shape — identical to :func:`gap_fill_forward`: the raw scan
-    collapses FIRST (one map-side-combinable shuffle on (key,
-    bucket)), the per-key grid comes from ``sequence()`` (no driver
-    loop, no cross join), and both fill windows partition by key —
+    Scale shape — identical to :func:`gap_fill_forward`: the grid is
+    :func:`_dense_grid`'s, and both fill windows partition by key —
     parallel across keys, ~9k rows/key/year of hourly buckets. At
     100 TB the only change is the grid join's key count; nothing
     row-scaled sits in one partition."""
-    occupied = (
-        events.select(
-            F.col(key_col).alias("key"),
-            _bucket(ts_col, unit_us).alias("bucket"),
-            F.col(value_col).alias("v"),
-        )
-        .groupBy("key", "bucket")
-        .agg(F.count(F.lit(1)).alias("n_events"), dsum(F.col("v"), "bucket_sum"))
-    )
-    spans = occupied.groupBy("key").agg(
-        F.min("bucket").alias("b0"), F.max("bucket").alias("b1")
-    )
-    grid = spans.select(
-        "key", F.explode(F.sequence("b0", "b1")).alias("bucket")
-    )
     wp = (
         Window.partitionBy("key")
         .orderBy("bucket")
@@ -4050,7 +3973,7 @@ def linear_interpolation(
         .orderBy("bucket")
         .rowsBetween(Window.currentRow, Window.unboundedFollowing)
     )
-    j = grid.join(occupied, ["key", "bucket"], "left").select(
+    j = _dense_grid(events, key_col, ts_col, value_col, unit_us).select(
         "key",
         "bucket",
         "n_events",
@@ -4161,8 +4084,8 @@ def seasonal_naive(
 
     Lags are CALENDAR joins (bucket = t − season on the bucketed
     grid), not array offsets — a key with missing days lags to the
-    true calendar slot or not at all. NULL timestamps and NULL
-    values are excluded by contract (no place on the grid / no
+    true calendar slot or not at all. Beyond the period-series
+    contract (module docstring), NULL values are excluded too (no
     measurable error). Keys need no minimum history: n_eval_* = 0
     yields NULL MAEs (nothing evaluable), NULL mase_ppm when the
     naive MAE is 0 or unevaluable.
@@ -4171,27 +4094,19 @@ def seasonal_naive(
     mae_snaive_fx, mae_naive_fx, mase_ppm, forecast_next_fx,
     forecast_next).
 
-    Scale shape: ONE combinable (key, bucket) aggregate over the
-    corpus, then everything runs on the keys×periods grid frame —
-    two self-equi-joins of that frame (hash, grid-sized), one grouped
+    Scale shape: the period-series aggregate over the corpus, then
+    everything runs on the keys×periods grid frame — two
+    self-equi-joins of that frame (hash, grid-sized), one grouped
     reduction, one keys-sized max join. No window over raw events,
     no skew surface beyond the grid."""
     if season < 1:
         raise ValueError(f"season must be >= 1, got {season}")
-    daily = (
-        events.where(F.col(ts_col).isNotNull() & F.col(value_col).isNotNull())
-        .groupBy(
-            F.col(key_col).alias("key"),
-            _bucket(ts_col, unit_us).alias("bucket"),
-        )
-        .agg(dsum(value_col, "v"))
-        .select(
-            "key",
-            "bucket",
-            F.floor(F.col("v") * F.lit(float(EWMA_SCALE)))
-            .cast("long")
-            .alias("vfx"),
-        )
+    daily = _period_fx(
+        events.where(F.col(value_col).isNotNull()),
+        key_col,
+        ts_col,
+        value_col,
+        unit_us,
     )
     sn = daily.select(
         "key",

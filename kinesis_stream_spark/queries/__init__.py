@@ -1,7 +1,8 @@
 """Declared query inventory (the driver contract surface).
 
 Each submodule exposes ``QUERIES: dict[str, Callable[(spark, sf_dir), DataFrame]]``
-and ``ORACLE: dict[str, str]`` (DuckDB ANSI SQL). ``all_queries()`` /
+and ``ORACLE: dict[str, str]`` (DuckDB ANSI SQL), filled by its
+``_q = make_q(QUERIES, ORACLE)`` decorator. ``all_queries()`` /
 ``all_oracle_sql()`` merge them for ``__spark_entry__.py``.
 """
 
@@ -345,6 +346,21 @@ _PRIORITY = (
     "udf_scalar_price_band",
 )
 
+
+def make_q(queries: dict, oracle: dict) -> Callable:
+    """Module-local ``@_q(name, sql)`` registration decorator bound to
+    the caller's QUERIES / ORACLE dicts."""
+
+    def _q(name: str, sql: str | None = None):
+        def deco(fn):
+            queries[name] = fn
+            if sql is not None:
+                oracle[name] = sql
+            return fn
+
+        return deco
+
+    return _q
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -1,21 +1,15 @@
 """Shared boilerplate for embeddings-table query modules.
 
-``queries/quantization.py`` and ``queries/evaluation.py`` both need the
-same three pieces the similarity module pioneered: a ``_q`` decorator
-registering (query, oracle) pairs, the corrupt-vector guard at the scan
-edge, and the oracle-side rewrite that threads the same guard through
-every ``embeddings`` reference. Defined once here so a guard fix lands
-everywhere at once. ``queries/similarity.py`` keeps its original local
-copies deliberately — its queries carry driver-verified rows from
-earlier rounds and rewiring their import path would stale them for no
-behavioral change; fold it in whenever its whole family is in a
-verification window anyway.
+``queries/similarity.py``, ``queries/quantization.py`` and
+``queries/evaluation.py`` all need the same two pieces: the
+corrupt-vector guard at the scan edge, and the oracle-side rewrite that
+threads the same guard through every ``embeddings`` reference. Defined
+once here so a guard fix lands everywhere at once.
 """
 
 from __future__ import annotations
 
 import re
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -24,22 +18,6 @@ from kinesis_stream_spark.functions.vectors import sql_valid_vector, valid_vecto
 from kinesis_stream_spark.sources.batch import load_table, spread
 
 DIM = 64
-
-
-def make_q(queries: dict, oracle: dict) -> Callable:
-    """Module-local ``@_q(name, sql)`` registration decorator bound to
-    the caller's QUERIES / ORACLE dicts."""
-
-    def _q(name: str, sql: str | None = None):
-        def deco(fn):
-            queries[name] = fn
-            if sql is not None:
-                oracle[name] = sql
-            return fn
-
-        return deco
-
-    return _q
 
 
 def emb_scan(spark: SparkSession, sf_dir: str, dim: int = DIM) -> DataFrame:

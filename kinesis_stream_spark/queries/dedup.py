@@ -38,6 +38,7 @@ from kinesis_stream_spark.operators.setjoin import (
     sql_prefix_filter_jaccard_pairs,
 )
 from kinesis_stream_spark.operators.similarity import cosine_pairs
+from kinesis_stream_spark.queries import make_q
 from kinesis_stream_spark.sources.batch import load_table
 
 QUERIES = {}
@@ -46,14 +47,7 @@ ORACLE = {}
 COPY_OFFSET = 100_000
 
 
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
+_q = make_q(QUERIES, ORACLE)
 
 
 def _with_exact_copies(docs: DataFrame) -> DataFrame:

@@ -17,7 +17,7 @@ from kinesis_stream_spark.operators.fuzzy import (
     fuzzy_pair_histogram,
     sql_fuzzy_pair_histogram,
 )
-from kinesis_stream_spark.queries._emb_family import make_q
+from kinesis_stream_spark.queries import make_q
 from kinesis_stream_spark.sources.batch import load_table
 
 QUERIES = {}

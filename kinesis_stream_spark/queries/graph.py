@@ -31,7 +31,7 @@ from kinesis_stream_spark.operators.graph import (
     sql_triangle_stats,
     triangle_stats,
 )
-from kinesis_stream_spark.queries._emb_family import make_q
+from kinesis_stream_spark.queries import make_q
 from kinesis_stream_spark.sources.batch import load_table
 
 QUERIES = {}

@@ -16,7 +16,7 @@ from kinesis_stream_spark.operators.minhash_profile import (
     minhash_agreement_histogram,
     sql_minhash_agreement_histogram,
 )
-from kinesis_stream_spark.queries._emb_family import make_q
+from kinesis_stream_spark.queries import make_q
 from kinesis_stream_spark.queries.dedup import (
     SQL_TRUNCATED_COPIES,
     _with_truncated_copies,

@@ -18,6 +18,7 @@ from kinesis_stream_spark.operators.multimodal import (
     frame_sample,
     media_from_documents,
 )
+from kinesis_stream_spark.queries import make_q
 from kinesis_stream_spark.queries._util import sql_davg
 from kinesis_stream_spark.sources.batch import load_table
 
@@ -25,14 +26,7 @@ QUERIES = {}
 ORACLE = {}
 
 
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
+_q = make_q(QUERIES, ORACLE)
 
 
 # DuckDB replay of media_from_documents (hex string side; payload = UNHEX)

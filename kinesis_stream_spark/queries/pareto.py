@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from kinesis_stream_spark.operators.pareto import skyline_2d, sql_skyline_2d
-from kinesis_stream_spark.queries._emb_family import make_q
+from kinesis_stream_spark.queries import make_q
 from kinesis_stream_spark.sources.batch import load_table
 
 QUERIES = {}

@@ -28,10 +28,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kinesis_stream_spark.operators.lineage import pin
+from kinesis_stream_spark.queries import make_q
 from kinesis_stream_spark.queries._emb_family import (
     emb_scan,
     guard_oracles,
-    make_q,
     queries_df,
 )
 from kinesis_stream_spark.operators.quantization import (

@@ -37,6 +37,7 @@ from kinesis_stream_spark.operators.skew import (
     sql_key_concentration_deciles,
     sql_quantile_normalize,
 )
+from kinesis_stream_spark.queries import make_q
 from kinesis_stream_spark.queries._util import davg, dsum, sql_davg, sql_dsum
 from kinesis_stream_spark.sources.batch import load_table
 
@@ -44,14 +45,7 @@ QUERIES = {}
 ORACLE = {}
 
 
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
+_q = make_q(QUERIES, ORACLE)
 
 
 # ---------------------------------------------------------------------------

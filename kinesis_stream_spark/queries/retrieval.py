@@ -27,7 +27,7 @@ from kinesis_stream_spark.operators.retrieval_sql import (
     sql_rsj_topk,
     sql_vocab_coverage,
 )
-from kinesis_stream_spark.queries._emb_family import make_q
+from kinesis_stream_spark.queries import make_q
 from kinesis_stream_spark.sources.batch import load_table
 
 QUERIES = {}

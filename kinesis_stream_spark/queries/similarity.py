@@ -19,11 +19,11 @@ from kinesis_stream_spark.operators.similarity import (
     topk_ivf,
     topk_lsh,
 )
+from kinesis_stream_spark.queries import make_q
 from kinesis_stream_spark.queries._emb_family import (
     DIM,
     emb_scan,
     guard_oracles,
-    make_q,
     queries_df,
 )
 
@@ -33,10 +33,6 @@ ORACLE = {}
 N_QUERIES = 5
 K = 10
 
-# Folded onto the shared _emb_family helpers (guard, registration,
-# oracle rewrite) in the round-7 window — the whole family carries
-# fresh rows this round, so the rewire and the guard change land
-# together as one re-verified unit.
 _q = make_q(QUERIES, ORACLE)
 
 

@@ -15,20 +15,14 @@ from kinesis_stream_spark.operators.hll import (
 )
 from kinesis_stream_spark.operators.kmv import sql_kmv_distinct
 from kinesis_stream_spark.operators.quantiles import sql_histogram_quantiles
+from kinesis_stream_spark.queries import make_q
 from kinesis_stream_spark.sources.batch import load_table
 
 QUERIES = {}
 ORACLE = {}
 
 
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
+_q = make_q(QUERIES, ORACLE)
 
 
 _HLL_COLS = ["l_orderkey", "l_partkey", "l_suppkey"]

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from kinesis_stream_spark.queries import make_q
 from kinesis_stream_spark.queries._util import sql_dsum
 from kinesis_stream_spark.sources.batch import load_table
 from kinesis_stream_spark.streaming.windows import (
@@ -32,14 +33,7 @@ QUERIES = {}
 ORACLE = {}
 
 
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
+_q = make_q(QUERIES, ORACLE)
 
 
 # epoch-second bucket arithmetic (not time_bucket): Spark's window() is

@@ -35,6 +35,7 @@ from kinesis_stream_spark.operators.text import (
 )
 from kinesis_stream_spark.functions.hashing import sql_md5_int64, sql_shingles, sql_tokens
 from kinesis_stream_spark.operators.cms import cm_heavy_hitters, sql_cm_heavy_hitters
+from kinesis_stream_spark.queries import make_q
 from kinesis_stream_spark.sources.batch import load_table
 
 QUERIES = {}
@@ -43,14 +44,7 @@ ORACLE = {}
 _TOKS = sql_tokens("text")
 
 
-def _q(name: str, sql: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if sql is not None:
-            ORACLE[name] = sql
-        return fn
-
-    return deco
+_q = make_q(QUERIES, ORACLE)
 
 
 @_q(

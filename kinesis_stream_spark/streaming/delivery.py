@@ -85,6 +85,21 @@ def _shard_range_summaries(df: DataFrame) -> list:
     )
 
 
+def _start(writer, config: ConsumerConfig, output_mode: str, available_now: bool):
+    """Start a delivery mode's query: Spark's offset log at
+    ``config.checkpoint_location``, ``output_mode``, and an
+    ``availableNow`` trigger when asked. Every mode starts here, so
+    every mode keeps its offset log where a LATEST
+    :func:`~kinesis_stream_spark.streaming.consumer.source` keys its
+    persisted cutoff."""
+    writer = writer.option("checkpointLocation", config.checkpoint_location).outputMode(
+        output_mode
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def run_at_least_once(
     records: DataFrame,
     config: ConsumerConfig,
@@ -96,14 +111,7 @@ def run_at_least_once(
     only after ``batch_fn`` returns, so a crash replays the batch.
     Duplicates are possible, loss is not — identical to the reference's
     commit-after-processing placement."""
-    writer = (
-        records.writeStream.foreachBatch(batch_fn)
-        .option("checkpointLocation", config.checkpoint_location)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(records.writeStream.foreachBatch(batch_fn), config, "append", available_now)
 
 
 def run_at_most_once(
@@ -126,14 +134,7 @@ def run_at_most_once(
         write_durably(marker, "begun")  # commit intent durably, THEN process
         batch_fn(df, batch_id)
 
-    writer = (
-        records.writeStream.foreachBatch(guarded)
-        .option("checkpointLocation", config.checkpoint_location)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(records.writeStream.foreachBatch(guarded), config, "append", available_now)
 
 
 def run_to_parquet(
@@ -155,17 +156,10 @@ def run_to_parquet(
     path; ``partition_by`` (e.g. event date) keeps downstream scans
     partition-pruned.
     """
-    writer = (
-        records.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", config.checkpoint_location)
-        .outputMode("append")
-    )
+    writer = records.writeStream.format("parquet").option("path", output_dir)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(writer, config, "append", available_now)
 
 
 def foreach_batch_commit_flow(
@@ -319,14 +313,7 @@ def run_upsert_latest(
         )
         out.write.mode("overwrite").parquet(os.path.join(state_root, f"v{batch_id}"))
 
-    writer = (
-        records.writeStream.foreachBatch(upsert)
-        .outputMode("update")
-        .option("checkpointLocation", config.checkpoint_location)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(records.writeStream.foreachBatch(upsert), config, "update", available_now)
 
 
 def _latest_snapshot(state_root: str, *, before: int | None = None) -> str | None:

@@ -405,6 +405,62 @@ def test_fold_operators_exclude_null_timestamps(spark):
         assert a == b, op.__name__
 
 
+def test_period_fx_matches_python_replay(spark):
+    """The period-series contract the temporal family builds on, against
+    a plain-Python replay: integer day buckets, NULL timestamps form no
+    period, exact sums floored into 2^20 fixed point (negative sums
+    included), and a bucket whose values are all NULL has a NULL vfx.
+    Values are exact in binary and in 6 decimals, so the DECIMAL(27,6)
+    accumulation loses nothing the replay keeps."""
+    import math
+    from decimal import Decimal
+
+    from kinesis_stream_spark.operators.temporal import (
+        DAY_US,
+        EWMA_SCALE,
+        _period_fx,
+    )
+
+    def ts(d: int, h: int) -> dt.datetime:
+        return dt.datetime(2024, 1, d, h, tzinfo=dt.timezone.utc)
+
+    rows = [
+        ("a", ts(1, 1), 1.5),
+        ("a", ts(1, 23), -0.25),
+        ("a", ts(2, 0), -3.125),
+        ("a", ts(2, 12), 0.015625),
+        ("a", ts(4, 6), 2.75),       # day 3 is a gap
+        ("a", None, 1000.0),         # NULL timestamp: no period
+        ("b", ts(1, 5), -7.5),
+        ("b", ts(3, 2), None),       # day 3 of b: every value NULL
+        ("b", ts(3, 9), None),
+        ("b", ts(5, 9), 0.5),
+        ("b", ts(5, 10), None),      # a NULL beside a value is skipped
+        ("c", None, 4.0),            # a key with only NULL timestamps
+    ]
+    df = spark.createDataFrame(rows, "k string, ts timestamp, v double")
+
+    cells: dict = {}
+    for k, t, v in rows:
+        if t is None:
+            continue
+        cells.setdefault((k, int(t.timestamp() * 1_000_000) // DAY_US), []).append(v)
+    want = {}
+    for cell, vs in cells.items():
+        vals = [Decimal(repr(v)) for v in vs if v is not None]
+        want[cell] = math.floor(float(sum(vals)) * EWMA_SCALE) if vals else None
+
+    out = _period_fx(df, "k", "ts", "v", DAY_US)
+    assert out.columns == ["key", "bucket", "vfx"]
+    assert dict(out.dtypes)["bucket"] == "bigint" and dict(out.dtypes)["vfx"] == "bigint"
+    got = {(r.key, r.bucket): r.vfx for r in out.collect()}
+    assert got == want
+    assert sum(1 for k, _ in got if k == "a") == 3 and not any(k == "c" for k, _ in got)
+    assert [v for (k, _), v in sorted(got.items()) if k == "b"] == [
+        -7_864_320, None, 524_288
+    ]
+
+
 def test_cusum_hand_traced_fold(spark):
     """Python replay of the integer fold on a hand-built series with a
     level shift — the alarm must fire after the shift, and every state
