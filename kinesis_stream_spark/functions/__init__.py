@@ -15,10 +15,9 @@ from kinesis_stream_spark.functions.hashing import (
     sql_tokens,
     tokens,
 )
-from kinesis_stream_spark.functions.vectors import cosine_similarity, dot_decimal, sql_cosine
+from kinesis_stream_spark.functions.vectors import dot_decimal, sql_cosine
 
 __all__ = [
-    "cosine_similarity",
     "dot_decimal",
     "md5_int64",
     "shingles",

@@ -67,12 +67,6 @@ def norm_decimal(a: Column) -> Column:
     return F.sqrt(_fixed_sum(sq).cast("double") / SCALE)
 
 
-def cosine_similarity(a: Column, b: Column) -> Column:
-    """Cosine similarity with exact fixed-point accumulation; the final
-    divide/sqrt are single IEEE ops (deterministic everywhere)."""
-    return dot_decimal(a, b) / (norm_decimal(a) * norm_decimal(b))
-
-
 # --- DuckDB twins ------------------------------------------------------------
 
 
@@ -99,7 +93,9 @@ def sql_norm(a: str) -> str:
 
 
 def sql_cosine(a: str, b: str) -> str:
-    """DuckDB twin of :func:`cosine_similarity`."""
+    """Cosine similarity of two DuckDB list expressions: :func:`sql_dot`
+    over the product of the :func:`sql_norm` terms — exact fixed-point
+    accumulation, then single IEEE divide/sqrt ops."""
     return f"({sql_dot(a, b)} / ({sql_norm(a)} * {sql_norm(b)}))"
 
 

@@ -45,15 +45,17 @@ from pyspark.sql import functions as F
 
 from kinesis_stream_spark.queries._util import dsum
 
-#: default lookback window: 7 days of microseconds
+#: the event type that is a conversion; every other type is a touch
+CONVERSION_TYPE = "purchase"
+#: lookback window: 7 days of microseconds
 LOOKBACK_US = 7 * 24 * 3600 * 1_000_000
+#: lag bucket of :func:`conversion_lag_histogram`: one hour
+LAG_BUCKET_US = 3_600_000_000
 
 
 def _tagged_frame(
     events: DataFrame,
     *,
-    conversion_type: str,
-    lookback_us: int,
     entity_col: str,
     type_col: str,
     ts_col: str,
@@ -76,7 +78,7 @@ def _tagged_frame(
     base = events.where(
         F.col(entity_col).isNotNull() & F.col(ts_col).isNotNull()
     ).select(*cols)
-    is_conv = F.col("etype") == conversion_type
+    is_conv = F.col("etype") == CONVERSION_TYPE
     out = [
         "ent",
         "us",
@@ -98,7 +100,7 @@ def _tagged_frame(
     w = (
         Window.partitionBy("ent")
         .orderBy("us")
-        .rangeBetween(-lookback_us, 0)
+        .rangeBetween(-LOOKBACK_US, 0)
     )
     return tagged, w
 
@@ -106,8 +108,6 @@ def _tagged_frame(
 def first_last_touch(
     events: DataFrame,
     *,
-    conversion_type: str = "purchase",
-    lookback_us: int = LOOKBACK_US,
     entity_col: str = "user_id",
     type_col: str = "event_type",
     ts_col: str = "ts",
@@ -115,8 +115,8 @@ def first_last_touch(
     value_col: str = "value",
 ) -> DataFrame:
     """Per-touch-type attribution report: for every conversion (an
-    event of ``conversion_type``), find the entity's touches (any
-    other event type) with ``conv_us − lookback_us ≤ touch_us ≤
+    event of ``CONVERSION_TYPE``), find the entity's touches (any
+    other event type) with ``conv_us − LOOKBACK_US ≤ touch_us ≤
     conv_us``, credit the earliest to the first-touch model and the
     latest to the last-touch model, and aggregate per touch type:
 
@@ -133,8 +133,6 @@ def first_last_touch(
     join + ROW_NUMBER (identical results, independent plans)."""
     tagged, w = _tagged_frame(
         events,
-        conversion_type=conversion_type,
-        lookback_us=lookback_us,
         entity_col=entity_col,
         type_col=type_col,
         ts_col=ts_col,
@@ -183,8 +181,6 @@ def first_last_touch(
 def sql_first_last_touch(
     *,
     table: str = "events",
-    conversion_type: str = "purchase",
-    lookback_us: int = LOOKBACK_US,
     entity_col: str = "user_id",
     type_col: str = "event_type",
     ts_col: str = "ts",
@@ -201,15 +197,15 @@ def sql_first_last_touch(
       WHERE {entity_col} IS NOT NULL AND {ts_col} IS NOT NULL),
     conv AS (
       SELECT ent, eid AS conv_id, us AS conv_us, val AS conv_val
-      FROM base WHERE etype = '{conversion_type}'),
+      FROM base WHERE etype = '{CONVERSION_TYPE}'),
     touch AS (
       SELECT ent, etype AS touch_type, us AS touch_us, eid AS touch_id
-      FROM base WHERE etype <> '{conversion_type}'),
+      FROM base WHERE etype <> '{CONVERSION_TYPE}'),
     cand AS (
       SELECT c.conv_id, c.conv_val, t.touch_type, t.touch_us, t.touch_id
       FROM conv c JOIN touch t USING (ent)
       WHERE t.touch_us <= c.conv_us
-        AND t.touch_us >= c.conv_us - {lookback_us}),
+        AND t.touch_us >= c.conv_us - {LOOKBACK_US}),
     ranked AS (
       SELECT conv_id, conv_val, touch_type,
              ROW_NUMBER() OVER (PARTITION BY conv_id
@@ -237,16 +233,13 @@ def sql_first_last_touch(
 def conversion_lag_histogram(
     events: DataFrame,
     *,
-    conversion_type: str = "purchase",
-    lookback_us: int = LOOKBACK_US,
-    bucket_us: int = 3_600_000_000,
     entity_col: str = "user_id",
     type_col: str = "event_type",
     ts_col: str = "ts",
     id_col: str = "event_id",
 ) -> DataFrame:
     """Time-to-convert distribution: for every conversion, the lag from
-    the entity's FIRST in-window touch, bucketed (hours by default) —
+    the entity's FIRST in-window touch, bucketed by the hour —
     the funnel-velocity readout next to :func:`first_last_touch`
     (who gets credit) answering the other question (how long the path
     takes). Conversions with NO in-window touch land in the
@@ -254,15 +247,13 @@ def conversion_lag_histogram(
     operator's output leaves open.
 
     Output: (lag_bucket, n_conversions), integer end to end
-    (lag_bucket = ⌊(conv_us − first_touch_us) / bucket_us⌋).
+    (lag_bucket = ⌊(conv_us − first_touch_us) / LAG_BUCKET_US⌋).
 
     Scale shape: the shared :func:`_tagged_frame` value-RANGE window
     (no join — cost accounting in the module docstring), then one
     combinable bucket count."""
     tagged, w = _tagged_frame(
         events,
-        conversion_type=conversion_type,
-        lookback_us=lookback_us,
         entity_col=entity_col,
         type_col=type_col,
         ts_col=ts_col,
@@ -277,7 +268,7 @@ def conversion_lag_histogram(
     ).where(F.col("is_conv"))
     bucket = F.when(
         F.col("first_us").isNotNull(),
-        F.expr(f"(us - first_us) div {bucket_us}"),
+        F.expr(f"(us - first_us) div {LAG_BUCKET_US}"),
     ).otherwise(F.lit(-1))
     return (
         conv_rows.select(bucket.cast("long").alias("lag_bucket"))
@@ -289,9 +280,6 @@ def conversion_lag_histogram(
 def sql_conversion_lag_histogram(
     *,
     table: str = "events",
-    conversion_type: str = "purchase",
-    lookback_us: int = LOOKBACK_US,
-    bucket_us: int = 3_600_000_000,
     entity_col: str = "user_id",
     type_col: str = "event_type",
     ts_col: str = "ts",
@@ -306,9 +294,9 @@ def sql_conversion_lag_histogram(
       FROM {table}
       WHERE {entity_col} IS NOT NULL AND {ts_col} IS NOT NULL),
     conv AS (SELECT ent, eid AS conv_id, us AS conv_us FROM base
-             WHERE etype = '{conversion_type}'),
+             WHERE etype = '{CONVERSION_TYPE}'),
     touch AS (SELECT ent, us AS touch_us FROM base
-              WHERE etype <> '{conversion_type}'),
+              WHERE etype <> '{CONVERSION_TYPE}'),
     firsts AS (
       -- grouped by conv_id: two purchases sharing (ent, us) are TWO
       -- conversions, exactly as the Spark side counts them
@@ -316,10 +304,10 @@ def sql_conversion_lag_histogram(
       FROM conv c LEFT JOIN touch t
         ON t.ent = c.ent
        AND t.touch_us <= c.conv_us
-       AND t.touch_us >= c.conv_us - {lookback_us}
+       AND t.touch_us >= c.conv_us - {LOOKBACK_US}
       GROUP BY 1, 2)
     SELECT CASE WHEN first_us IS NOT NULL
-                THEN (conv_us - first_us) // {bucket_us}
+                THEN (conv_us - first_us) // {LAG_BUCKET_US}
                 ELSE -1 END AS lag_bucket,
            CAST(COUNT(*) AS BIGINT) AS n_conversions
     FROM firsts GROUP BY 1

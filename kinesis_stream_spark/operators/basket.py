@@ -250,7 +250,6 @@ def item_cosine(
     basket_col: str = "basket",
     item_col: str = "item",
     min_common: int = 2,
-    top_k: int = 30,
 ) -> DataFrame:
     """Item-item cosine similarity over basket co-membership — the
     OTHER classic item-based-CF kernel (Sarwar et al. WWW 2001 §3.1):
@@ -261,7 +260,7 @@ def item_cosine(
     Jaccard (:func:`item_jaccard`) penalizes popularity via the union;
     cosine via the geometric mean — rankings disagree exactly on
     popular-vs-niche pairs, which is why recommenders ship both and
-    compare. Output: global top ``top_k`` pairs (item_a < item_b) by
+    compare. Output: global top 30 pairs (item_a < item_b) by
     (cosine desc, item_a, item_b) with common/deg/cosine columns.
 
     Cross-engine exactness: counts exact; deg_a·deg_b in
@@ -316,14 +315,13 @@ def item_cosine(
     )
     return scored.orderBy(
         F.desc("cosine"), F.asc("item_a"), F.asc("item_b")
-    ).limit(top_k)
+    ).limit(30)
 
 
 def sql_item_cosine(
     *,
     baskets_cte: str,
     min_common: int = 2,
-    top_k: int = 30,
 ) -> str:
     """DuckDB oracle twin of :func:`item_cosine`. ``baskets_cte``
     must yield (b, i) rows."""
@@ -348,5 +346,5 @@ def sql_item_cosine(
       JOIN deg b ON p.ib = b.i)
     SELECT * FROM scored
     ORDER BY cosine DESC, item_a, item_b
-    LIMIT {top_k}
+    LIMIT 30
     """

@@ -70,7 +70,6 @@ def exact_dedup(docs: DataFrame, *, text_col: str = "text", id_col: str = "doc_i
 def dedup_pipeline(
     docs: DataFrame,
     *,
-    threshold: float = 0.5,
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
@@ -99,7 +98,7 @@ def dedup_pipeline(
     # across signatures and both verify sides since r13 (guide §2.4 —
     # see its docstring; 1.7× on this composed query when it landed)
     edges = near_duplicates_minhash(
-        survivors, threshold=threshold, text_col=text_col, id_col=id_col
+        survivors, threshold=0.5, text_col=text_col, id_col=id_col
     )
     comp = connected_components(edges.select("id_a", "id_b"))
     dropped = comp.where(F.col("v") != F.col("comp")).select(
@@ -131,31 +130,28 @@ def _shingle_frame(
     *,
     text_col: str = "text",
     id_col: str = "doc_id",
-    shingle_n: int = 3,
 ) -> DataFrame:
-    """(id, sh array<string>) — the tokenization pass every MinHash
+    """(id, sh array<string>) of 3-token shingles — the tokenization pass every MinHash
     stage derives from. ``spread``: shingling is the expensive map
     stage; a single-row-group scan would run it all in one task."""
     return spread(
         docs.select(F.col(id_col).alias("id"), F.col(text_col)), "id"
-    ).select("id", shingles(F.col(text_col), shingle_n).alias("sh"))
+    ).select("id", shingles(F.col(text_col), 3).alias("sh"))
 
 
-def _signatures_from_shingles(
-    sh_df: DataFrame, *, num_hashes: int = DEFAULT_NUM_HASHES
-) -> DataFrame:
+def _signatures_from_shingles(sh_df: DataFrame) -> DataFrame:
     """Signatures from an (id, sh) frame (see :func:`minhash_signatures`)."""
     sh = sh_df.select("id", F.explode("sh").alias("s")).select(
         "id", (md5_int64(F.col("s")) % MINHASH_MOD).alias("h")
     )
     aggs = [
         F.min((F.col("h") * a + b) % MINHASH_MOD).alias(f"m{j}")
-        for j, (a, b) in enumerate(minhash_perm_coeffs(num_hashes))
+        for j, (a, b) in enumerate(minhash_perm_coeffs())
     ]
     return (
         sh.groupBy("id")
         .agg(*aggs)
-        .select("id", F.array(*[f"m{j}" for j in range(num_hashes)]).alias("sig"))
+        .select("id", F.array(*[f"m{j}" for j in range(DEFAULT_NUM_HASHES)]).alias("sig"))
     )
 
 
@@ -164,8 +160,6 @@ def minhash_signatures(
     *,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """(id, sig array<bigint>): sig[j] = min over shingles of
     (a_j * md5(shingle) + b_j) mod P.
@@ -176,17 +170,14 @@ def minhash_signatures(
     composed under Catalyst's project collapsing, recomputes the whole
     shingle pipeline per signature element — measured 50× slower.
     """
-    return _signatures_from_shingles(
-        _shingle_frame(docs, text_col=text_col, id_col=id_col, shingle_n=shingle_n),
-        num_hashes=num_hashes,
-    )
+    return _signatures_from_shingles(_shingle_frame(docs, text_col=text_col, id_col=id_col))
 
 
-def lsh_band_hashes(sig: Column, *, bands: int = DEFAULT_BANDS, rows: int | None = None) -> Column:
-    """Band the signature: array of (band_id, band_hash) structs. Two docs
-    collide on a band iff that slice of their signatures is identical."""
-    if rows is None:
-        rows = DEFAULT_NUM_HASHES // bands
+def lsh_band_hashes(sig: Column) -> Column:
+    """Band the signature: array of ``DEFAULT_BANDS`` (band_id, band_hash)
+    structs. Two docs collide on a band iff that slice of their
+    signatures is identical."""
+    rows = DEFAULT_NUM_HASHES // DEFAULT_BANDS
     return F.array(
         *[
             F.struct(
@@ -198,40 +189,16 @@ def lsh_band_hashes(sig: Column, *, bands: int = DEFAULT_BANDS, rows: int | None
                     )
                 ).alias("band_hash"),
             )
-            for b in range(bands)
+            for b in range(DEFAULT_BANDS)
         ]
     )
 
 
-def minhash_lsh_candidates(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    bands: int = DEFAULT_BANDS,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """Candidate pairs (id_a < id_b) sharing at least one LSH band."""
-    sigs = minhash_signatures(
-        docs, text_col=text_col, id_col=id_col, num_hashes=num_hashes, shingle_n=shingle_n
-    )
-    return _candidates_from_sigs(sigs, num_hashes=num_hashes, bands=bands)
-
-
-def _candidates_from_sigs(
-    sigs: DataFrame,
-    *,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    bands: int = DEFAULT_BANDS,
-) -> DataFrame:
-    """LSH band join over an (id, sig) frame (see
-    :func:`minhash_lsh_candidates`)."""
+def _candidates_from_sigs(sigs: DataFrame) -> DataFrame:
+    """Candidate pairs (id_a < id_b) of an (id, sig) frame that share at
+    least one LSH band (:func:`near_duplicates_minhash`)."""
     banded = sigs.select(
-        "id",
-        F.explode(
-            lsh_band_hashes(F.col("sig"), bands=bands, rows=num_hashes // bands)
-        ).alias("b"),
+        "id", F.explode(lsh_band_hashes(F.col("sig"))).alias("b")
     ).select("id", "b.band_id", "b.band_hash")
     left = banded.alias("x")
     right = banded.alias("y")
@@ -247,19 +214,9 @@ def _candidates_from_sigs(
     )
 
 
-def jaccard_on_shingles(
-    pairs: DataFrame, docs: DataFrame, *, text_col: str = "text", id_col: str = "doc_id",
-    shingle_n: int = 3,
-) -> DataFrame:
-    """Exact shingle-set Jaccard for candidate pairs (integer set sizes →
-    one double division: engine-independent)."""
-    sh = _shingle_frame(docs, text_col=text_col, id_col=id_col, shingle_n=shingle_n)
-    return _jaccard_from_shingles(pairs, sh)
-
-
 def _jaccard_from_shingles(pairs: DataFrame, sh: DataFrame) -> DataFrame:
-    """Jaccard verify over an (id, sh) frame (see
-    :func:`jaccard_on_shingles`)."""
+    """Exact shingle-set Jaccard for candidate pairs over an (id, sh)
+    frame (integer set sizes → one double division: engine-independent)."""
     return (
         pairs.join(sh.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}), "id_a")
         .join(sh.withColumnsRenamed({"id": "id_b", "sh": "sh_b"}), "id_b")
@@ -278,9 +235,6 @@ def near_duplicates_minhash(
     threshold: float = 0.9,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    bands: int = DEFAULT_BANDS,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """Full near-dup pipeline: shingle → minhash → LSH bands → candidate
     join → exact-Jaccard verify ≥ threshold.
@@ -291,15 +245,8 @@ def near_duplicates_minhash(
     connected-components edge source). The shared ``(id, sh)`` frame is
     lazily checkpointed because it feeds all three consumers; derived
     data, recomputed from the input on every invocation."""
-    sh = pin(
-        _shingle_frame(docs, text_col=text_col, id_col=id_col, shingle_n=shingle_n),
-        eager=False,
-    )
-    cands = _candidates_from_sigs(
-        _signatures_from_shingles(sh, num_hashes=num_hashes),
-        num_hashes=num_hashes,
-        bands=bands,
-    )
+    sh = pin(_shingle_frame(docs, text_col=text_col, id_col=id_col), eager=False)
+    cands = _candidates_from_sigs(_signatures_from_shingles(sh))
     return _jaccard_from_shingles(cands, sh).where(
         F.col("jaccard") >= threshold
     )
@@ -743,13 +690,12 @@ def containment_pairs(
     group_cols: list[str],
     *,
     threshold: float = 0.9,
-    n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
     max_df: int | None = None,
 ) -> DataFrame:
     """Shingle CONTAINMENT near-dup: |S(A) ∩ S(B)| / min(|S(A)|, |S(B)|)
-    over n-gram shingle sets, within blocking groups. This is the
+    over 3-gram shingle sets, within blocking groups. This is the
     substring-duplication detector Jaccard systematically misses: a
     document wholly contained in a longer one (quote + commentary, page
     + boilerplate wrapper, truncated re-crawl) has containment ≈ 1 but
@@ -793,7 +739,7 @@ def containment_pairs(
     pairs = _set_overlap_pairs(
         docs,
         group_cols,
-        shingles(F.col(text_col), n),
+        shingles(F.col(text_col), 3),
         text_col=text_col,
         id_col=id_col,
         max_df=max_df,
@@ -1017,8 +963,6 @@ def lsh_pair_recall(
     docs: DataFrame,
     group_cols: list[str],
     *,
-    threshold: float = 0.5,
-    shingle_n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
@@ -1029,7 +973,7 @@ def lsh_pair_recall(
     fraction of surfaced same-block pairs are true?).
 
     Ground truth is the exhaustive within-block shingle-Jaccard pair
-    set at ``threshold``; candidates are the banded pairs restricted to
+    set at Jaccard ≥ 0.5; candidates are the banded pairs restricted to
     the same blocks, so recall is measured inside the universe the
     truth covers. Blocking keeps exhaustive truth affordable; at 100 TB
     this runs on a sampled block subset and the measured recall
@@ -1052,7 +996,7 @@ def lsh_pair_recall(
             docs.select(*group_cols, F.col(id_col).alias("id"), F.col(text_col)),
             "id",
         )
-        .select(*group_cols, "id", F.explode(shingles(F.col(text_col), shingle_n)).alias("g"))
+        .select(*group_cols, "id", F.explode(shingles(F.col(text_col), 3)).alias("g"))
     )
     sizes = grams.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
     pairs = (
@@ -1076,7 +1020,7 @@ def lsh_pair_recall(
         .join(sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b")), "id_b")
         .where(
             F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter"))
-            >= threshold
+            >= 0.5
         )
         .select("id_a", "id_b")
     )
@@ -1092,12 +1036,7 @@ def lsh_pair_recall(
         .select("id", F.array(*[f"m{j}" for j in range(DEFAULT_NUM_HASHES)]).alias("sig"))
     )
     banded = sigs.select(
-        "id",
-        F.explode(
-            lsh_band_hashes(
-                F.col("sig"), bands=DEFAULT_BANDS, rows=DEFAULT_NUM_HASHES // DEFAULT_BANDS
-            )
-        ).alias("b"),
+        "id", F.explode(lsh_band_hashes(F.col("sig"))).alias("b")
     ).select("id", "b.band_id", "b.band_hash")
     cand_pairs = (
         banded.alias("x")
@@ -1156,13 +1095,12 @@ def rare_term_cosine_pairs(
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
-    ngram: int = 3,
     max_df: int = 20,
     min_cosine_ppm: int = 500_000,
     top_k: int = 50,
 ) -> DataFrame:
     """Document-pair cosine similarity over the DISCRIMINATIVE term
-    subspace — term-frequency cosine over word ``ngram`` phrases whose
+    subspace — term-frequency cosine over word-trigram phrases whose
     document frequency is ≤ ``max_df``, with high-df phrases excluded
     from both the dot product and the norms. The textbook tf-idf
     cosine downweights common terms smoothly; the hard df cutoff is
@@ -1197,8 +1135,6 @@ def rare_term_cosine_pairs(
     containment max_df discipline); norms join back per-doc;
     TakeOrderedAndProject top-k. Never all-pairs, never a global
     sort."""
-    if ngram < 1:
-        raise ValueError(f"ngram must be >= 1, got {ngram}")
     if max_df < 1:
         raise ValueError(f"max_df must be >= 1, got {max_df}")
     if not 0 < min_cosine_ppm <= 1_000_000:
@@ -1212,10 +1148,10 @@ def rare_term_cosine_pairs(
     grams = bind_once(
         tokens(F.col(text_col)),
         lambda toks: F.when(
-            F.size(toks) >= ngram,
+            F.size(toks) >= 3,
             F.transform(
-                F.sequence(F.lit(1), F.size(toks) - (ngram - 1)),
-                lambda i: F.array_join(F.slice(toks, i, ngram), " "),
+                F.sequence(F.lit(1), F.size(toks) - 2),
+                lambda i: F.array_join(F.slice(toks, i, 3), " "),
             ),
         ).otherwise(F.array(F.array_join(toks, " "))),
     )
@@ -1304,7 +1240,6 @@ def sql_rare_term_cosine_pairs(
     table: str = "documents",
     id_col: str = "doc_id",
     text_col: str = "text",
-    ngram: int = 3,
     max_df: int = 20,
     min_cosine_ppm: int = 500_000,
     top_k: int = 50,
@@ -1317,9 +1252,9 @@ def sql_rare_term_cosine_pairs(
       FROM {table} WHERE {text_col} IS NOT NULL),
     tok AS (
       SELECT doc,
-             UNNEST(CASE WHEN LEN(toks) >= {ngram} THEN
-               [ARRAY_TO_STRING(toks[i:i+{ngram - 1}], ' ')
-                FOR i IN RANGE(1, LEN(toks) - {ngram - 2})]
+             UNNEST(CASE WHEN LEN(toks) >= 3 THEN
+               [ARRAY_TO_STRING(toks[i:i+2], ' ')
+                FOR i IN RANGE(1, LEN(toks) - 1)]
              ELSE [ARRAY_TO_STRING(toks, ' ')] END) AS tok
       FROM d),
     tf AS (

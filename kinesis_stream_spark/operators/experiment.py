@@ -894,7 +894,6 @@ def ab_delta_ratio(
     unit_col: str = "user_id",
     value_col: str = "value",
     type_col: str = "event_type",
-    numerator_type: str = "purchase",
 ) -> DataFrame:
     """Delta-method z-test on a RATIO metric (revenue per event) under
     the same deterministic md5 50/50 split as the other A/B tests —
@@ -908,7 +907,7 @@ def ab_delta_ratio(
 
         Var(X̄/Ȳ) ≈ (s²_x − 2·r·s_xy + r²·s²_y) / (n·ȳ²)
 
-    Per unit: x = exact-decimal value total of ``numerator_type``
+    Per unit: x = exact-decimal value total of ``'purchase'``
     events (2^20 fx), y = total event count; units with no numerator
     events carry x = 0 (absence is signal, the Welch rule); NULL
     units are excluded. The five arm moments (Σx, Σy, Σx², Σy², Σxy)
@@ -934,7 +933,7 @@ def ab_delta_ratio(
             F.coalesce(
                 F.sum(
                     F.when(
-                        F.col(type_col) == numerator_type, F.col(value_col)
+                        F.col(type_col) == "purchase", F.col(value_col)
                     ).cast("decimal(27,6)")
                 ),
                 F.lit(0).cast("decimal(27,6)"),
@@ -1037,7 +1036,6 @@ def sql_ab_delta_ratio(
     unit_col: str = "user_id",
     value_col: str = "value",
     type_col: str = "event_type",
-    numerator_type: str = "purchase",
 ) -> str:
     """DuckDB oracle twin of :func:`ab_delta_ratio` — identical split,
     fx quantization, HUGEINT moments, VARCHAR-routed pinned finals."""
@@ -1045,7 +1043,7 @@ def sql_ab_delta_ratio(
     return f"""
     WITH per_unit AS (
       SELECT CAST(FLOOR(CAST(COALESCE(SUM(CASE WHEN {type_col}
-                     = '{numerator_type}' THEN CAST({value_col}
+                     = 'purchase' THEN CAST({value_col}
                      AS DECIMAL(27,6)) END), 0) AS DOUBLE) * {s!r})
                AS BIGINT) AS x,
              CAST(COUNT(*) AS BIGINT) AS y,

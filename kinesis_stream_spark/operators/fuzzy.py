@@ -3,13 +3,14 @@
 Record-linkage / entity-resolution primitive: find all pairs of rows
 whose string field is within edit distance ``max_dist``, without the
 all-pairs O(n²) cross join. Candidate generation is BLOCKING — only
-rows sharing a cheap deterministic block key (default: the first
-whitespace token) are compared — followed by a length-band prefilter
-(|len(a) − len(b)| ≤ d is a necessary condition for distance ≤ d) and
-the exact banded Levenshtein with early-exit threshold. The blocking
-is part of the operator's declared semantics (pairs WITHIN A BLOCK at
-distance ≤ d), as in every production linkage pipeline; recall beyond
-the block is a knob (pick a coarser key), not a correctness gap.
+rows sharing a cheap deterministic block key (the first whitespace
+token, :func:`default_block`) are compared — followed by a
+length-band prefilter (|len(a) − len(b)| ≤ d is a necessary condition
+for distance ≤ d) and the exact banded Levenshtein with early-exit
+threshold. The blocking is part of the operator's declared semantics
+(pairs WITHIN A BLOCK at distance ≤ d), as in every production linkage
+pipeline; recall beyond the block is a property of the key, not a
+correctness gap.
 
 Reference scope note: the reference (`500px/kinesis-stream`) ships no
 query operators (`Record.scala:15` — opaque payloads); this extends
@@ -23,8 +24,8 @@ Scale shape:
 - the distance itself is Spark's built-in ``levenshtein(l, r, d)``
   with the threshold argument — the banded O(d·min(m,n)) DP that
   bails out early, not the full O(m·n) matrix; JVM codegen, no UDF;
-- hot blocks are the skew hazard: mitigate with a finer ``block_expr``
-  (more leading tokens) — the knob trades recall for balance.
+- hot blocks are the skew hazard, which ``salt_buckets`` spreads over
+  more tasks.
 
 Cross-engine parity: Levenshtein is exact integer arithmetic; Spark's
 threshold variant returns −1 past the cap and is filtered out, which
@@ -45,7 +46,7 @@ from kinesis_stream_spark.operators.lineage import pin
 
 
 def default_block(col: Column) -> Column:
-    """First whitespace-delimited token — the default block key."""
+    """First whitespace-delimited token — the block key."""
     return F.substring_index(col, " ", 1)
 
 
@@ -60,7 +61,6 @@ def fuzzy_pairs(
     id_col: str,
     text_col: str,
     max_dist: int,
-    block: Column | None = None,
     salt_buckets: int = 32,
 ) -> DataFrame:
     """All (id_a < id_b) pairs sharing a block key with
@@ -80,7 +80,7 @@ def fuzzy_pairs(
         raise ValueError(f"max_dist must be >= 0, got {max_dist}")
     if salt_buckets < 1:
         raise ValueError(f"salt_buckets must be >= 1, got {salt_buckets}")
-    blk = block if block is not None else default_block(F.col(text_col))
+    blk = default_block(F.col(text_col))
     side = df.select(
         blk.alias("block_key"),
         F.col(id_col).alias("id"),
@@ -142,7 +142,6 @@ def fuzzy_pair_histogram(
     id_col: str,
     text_col: str,
     max_dist: int,
-    block: Column | None = None,
     salt_buckets: int = 32,
 ) -> DataFrame:
     """(block_key, dist, n_pairs, sample_id_a, sample_id_b) — the
@@ -178,7 +177,7 @@ def fuzzy_pair_histogram(
         raise ValueError(f"max_dist must be >= 0, got {max_dist}")
     if salt_buckets < 1:
         raise ValueError(f"salt_buckets must be >= 1, got {salt_buckets}")
-    blk = block if block is not None else default_block(F.col(text_col))
+    blk = default_block(F.col(text_col))
     side = df.select(
         blk.alias("block_key"),
         F.col(id_col).alias("id"),

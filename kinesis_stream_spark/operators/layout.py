@@ -49,7 +49,6 @@ def zorder_census(
     x_col: str,
     y_col: str,
     bucket_bits: int = 20,
-    bits: int = ZBITS,
 ) -> DataFrame:
     """Bucket rows by their Morton key's high bits (``z div
     2^bucket_bits`` — what a file boundary would be after an OPTIMIZE
@@ -63,10 +62,10 @@ def zorder_census(
     bucket span the whole domain and y-predicates prune nothing.
 
     Output: (zbucket, n_rows, x_min, x_max, y_min, y_max), all BIGINT.
-    Inputs must be non-negative and < 2^bits (caller maps/clamps —
+    Inputs must be non-negative and < 2^ZBITS (caller maps/clamps —
     same contract as any space-filling-curve index)."""
     zbucket = F.expr(
-        f"cast({_interleave_expr(x_col, y_col, bits)} as bigint)"
+        f"cast({_interleave_expr(x_col, y_col, ZBITS)} as bigint)"
         f" div {1 << bucket_bits}"
     )
     return (
@@ -90,11 +89,10 @@ def sql_zorder_census(
     *,
     source_cte: str,
     bucket_bits: int = 20,
-    bits: int = ZBITS,
 ) -> str:
     """DuckDB oracle twin of :func:`zorder_census`. ``source_cte``
     must yield non-negative integer columns (x, y)."""
-    z = _interleave_expr("x", "y", bits)
+    z = _interleave_expr("x", "y", ZBITS)
     return f"""
     WITH src AS ({source_cte}),
     keyed AS (

@@ -26,13 +26,7 @@ from kinesis_stream_spark.operators.dedup import (
 )
 
 
-def sql_minhash_candidate_ctes(
-    input_cte: str,
-    *,
-    num_hashes: int = DEFAULT_NUM_HASHES,
-    bands: int = DEFAULT_BANDS,
-    shingle_n: int = 3,
-) -> str:
+def sql_minhash_candidate_ctes(input_cte: str) -> str:
     """CTE chain (comma-joined, no leading WITH) over
     ``input_cte → docs(doc_id, text)``, ending in:
 
@@ -40,17 +34,10 @@ def sql_minhash_candidate_ctes(
     - ``sig(doc_id, sig)`` — MinHash signatures
     - ``cands(id_a, id_b)`` — distinct LSH candidate pairs
     """
-    if num_hashes % bands != 0:
-        # a bare assert is stripped under `python -O`, silently
-        # truncating the band slices — fail loudly instead
-        raise ValueError(
-            f"bands ({bands}) must divide num_hashes ({num_hashes}) "
-            f"evenly"
-        )
-    rows = num_hashes // bands
+    rows = DEFAULT_NUM_HASHES // DEFAULT_BANDS
     sig_elems = ", ".join(
         f"MIN((h * {a} + {b}) % {MINHASH_MOD})"
-        for a, b in minhash_perm_coeffs(num_hashes)
+        for a, b in minhash_perm_coeffs()
     )
     band_rows = " UNION ALL ".join(
         f"""SELECT doc_id, {b} AS band_id,
@@ -58,11 +45,11 @@ def sql_minhash_candidate_ctes(
                 "ARRAY_TO_STRING(LIST_TRANSFORM("
                 f"sig[{b * rows + 1}:{b * rows + rows}], x -> CAST(x AS VARCHAR)), ',')"
             )} AS band_hash FROM sig"""
-        for b in range(bands)
+        for b in range(DEFAULT_BANDS)
     )
     return f"""
     docs AS ({input_cte}),
-    sh AS (SELECT doc_id, {sql_shingles('text', shingle_n)} AS sh FROM docs),
+    sh AS (SELECT doc_id, {sql_shingles('text', 3)} AS sh FROM docs),
     shh AS (SELECT doc_id, {sql_md5_int64('t.s')} % {MINHASH_MOD} AS h
             FROM sh, UNNEST(sh) AS t(s)),
     sig AS (SELECT doc_id, [{sig_elems}] AS sig FROM shh GROUP BY doc_id),

@@ -25,11 +25,10 @@ Scale design (100 TB):
 - Metadata predicates (kind/dims/duration) prune BEFORE decode —
   filter pushdown on the scalar/struct columns means the parquet scan
   never materializes payloads of skipped rows (parquet column chunks).
-- Real codecs (PIL/librosa/av) are not in this container: ``decode_*``
-  raise ``NotImplementedError`` when asked for real decoding and provide
-  a deterministic fake (payload-byte interpretation) so the Spark-side
-  plumbing — schema, batching, partitioning — is fully exercised and
-  oracle-checked.
+- Real codecs (PIL/librosa/av) are not dependencies of the package:
+  :func:`decode_features` is a deterministic fake (payload-byte
+  interpretation), so the Spark-side plumbing — schema, batching,
+  partitioning — is fully exercised and oracle-checked.
 
 The test media table is derived deterministically from ``documents``
 (payload = md5-chain bytes of the text), so the DuckDB oracle can rebuild
@@ -148,15 +147,19 @@ def exact_dedup_assets(
     )
 
 
-def hex_shingle_text(hex_col: Column, *, n_bytes: int = 4) -> Column:
-    """Space-joined sliding ``n_bytes``-byte shingles of a hex-encoded
+#: shingle width of the binary near-dup path, in bytes
+SHINGLE_BYTES = 4
+
+
+def hex_shingle_text(hex_col: Column) -> Column:
+    """Space-joined sliding ``SHINGLE_BYTES``-byte shingles of a hex-encoded
     payload — the byte-level analogue of word shingles, feeding the
     text SimHash machinery so binary NEAR-dup reuses the blocked join
     path verbatim. JVM-side only (substring slices over the hex string;
     no Python, no byte array materialization)."""
-    width = n_bytes * 2
-    count = (F.length(hex_col) / 2).cast("int") - (n_bytes - 1)
-    # payloads shorter than n_bytes produce NO shingles (empty text) —
+    width = SHINGLE_BYTES * 2
+    count = (F.length(hex_col) / 2).cast("int") - (SHINGLE_BYTES - 1)
+    # payloads shorter than SHINGLE_BYTES produce NO shingles (empty text) —
     # guarded explicitly because Spark's sequence(1, count<=0) counts
     # DOWN, while the DuckDB twin's RANGE is empty; NULL input stays
     # NULL (no otherwise-branch), matching SQL semantics
@@ -170,15 +173,12 @@ def hex_shingle_text(hex_col: Column, *, n_bytes: int = 4) -> Column:
 def payload_near_duplicates(
     media: DataFrame,
     *,
-    max_hamming: int = 3,
-    blocks: int = 4,
-    n_bytes: int = 4,
     id_col: str = "media_id",
     payload_col: str = "payload",
 ) -> DataFrame:
     """Binary-asset NEAR-dup without decoding: 60-bit SimHash over
     sliding byte shingles of the raw payload, 15-bit block-equality
-    candidates, exact Hamming verify — catches re-encoded-with-tweaks /
+    candidates, exact Hamming ≤ 3 verify — catches re-encoded-with-tweaks /
     bit-flipped / header-patched copies that content-hash exact dedup
     (:func:`exact_dedup_assets`) misses, while staying codec-agnostic
     (a perceptual hash needs decode; byte shingles don't). Same scale
@@ -193,7 +193,7 @@ def payload_near_duplicates(
 
     docs_like = media.select(
         F.col(id_col).alias("doc_id"),
-        hex_shingle_text(F.hex(F.col(payload_col)), n_bytes=n_bytes).alias("text"),
+        hex_shingle_text(F.hex(F.col(payload_col))).alias("text"),
     # payloads too short to shingle (or NULL) are excluded BEFORE
     # fingerprinting: their empty text would tokenize to a single ''
     # token, giving every tiny asset the SAME SimHash and an O(n²)
@@ -202,19 +202,19 @@ def payload_near_duplicates(
     # identical tiny payloads.
     ).where(F.length("text") > 0)
     return near_duplicates_simhash(
-        docs_like, max_hamming=max_hamming, blocks=blocks
+        docs_like, max_hamming=3, blocks=4
     )
 
 
-def frame_sample(media: DataFrame, *, stride: int = 10) -> DataFrame:
+def frame_sample(media: DataFrame) -> DataFrame:
     """Frame sampling plan for video rows: one output row per sampled
-    frame index (0, stride, 2*stride, …) with its timestamp. Pure JVM
+    frame index (every 10th: 0, 10, 20, …) with its timestamp. Pure JVM
     sequence+explode — the downstream decode operator receives
     (media_id, frame_idx) work units, which is what distributes frame
     extraction at scale."""
     v = media.where(F.col("kind") == "video")
     idx = F.explode(
-        F.sequence(F.lit(0), F.col("meta.n_frames") - 1, F.lit(stride))
+        F.sequence(F.lit(0), F.col("meta.n_frames") - 1, F.lit(10))
     ).alias("frame_idx")
     return v.select("media_id", F.col("meta.fps").alias("fps"), F.col("meta.n_frames").alias("n_frames"), idx).select(
         "media_id",
@@ -235,22 +235,14 @@ _DECODE_SCHEMA = StructType(
 )
 
 
-def decode_features(media: DataFrame, *, real_decode: bool = False, batch_size: int = 256) -> DataFrame:
+def decode_features(media: DataFrame) -> DataFrame:
     """Decode + feature-extract via ``mapInPandas`` (Arrow-batched).
 
-    ``real_decode=True`` is the production path (PIL/soundfile/av) —
-    STUBBED: raises ``NotImplementedError`` in this container. The
-    default deterministic fake treats payload bytes as the decoded
-    samples/pixels (n_units = byte count, mean_value = byte mean,
-    feature_sig = hex of the 4 leading bytes), so schema, batch shape,
-    and partition behavior are real and oracle-checkable.
+    The decode is a deterministic fake that treats payload bytes as the
+    decoded samples/pixels (n_units = byte count, mean_value = byte
+    mean, feature_sig = hex of the 4 leading bytes), so schema, batch
+    shape, and partition behavior are real and oracle-checkable.
     """
-    if real_decode:
-        raise NotImplementedError(
-            "real codecs (PIL/soundfile/av) are not available in this "
-            "environment; use the deterministic fake decode"
-        )
-
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             payloads = pdf["payload"]

@@ -106,7 +106,6 @@ def rotate_embeddings(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: str = "rrpq-v1",
 ) -> DataFrame:
     """Apply the fixed orthonormal rotation to every vector:
     (id, rotated ``vec_col``). Map-only, no shuffle.
@@ -128,7 +127,7 @@ def rotate_embeddings(
     rotate to NULL (the visible outcome the Catalyst fold gave NaN
     inputs) instead of flowing an undefined float→int64 cast downstream
     as plausible-looking numbers."""
-    R = rotation_matrix(dim, seed)
+    R = rotation_matrix(dim)
 
     @F.pandas_udf("array<double>")
     def _rot(vecs: pd.Series) -> pd.Series:
@@ -170,7 +169,6 @@ def rrpq_topk_adc(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    seed: str = "rrpq-v1",
 ) -> DataFrame:
     """Rotated-PQ search end-to-end: rotate corpus and queries with the
     SAME matrix, then train/encode/ADC-rank with the flat-PQ operators
@@ -191,10 +189,10 @@ def rrpq_topk_adc(
     # sf0.1). At 100 TB this line is "write the rotated corpus once",
     # the same deployment-artifact argument as the encoded index.
     rot_c = pin(rotate_embeddings(
-        corpus, dim=dim, id_col=id_col, vec_col=vec_col, seed=seed
+        corpus, dim=dim, id_col=id_col, vec_col=vec_col
     ))
     rot_q = rotate_embeddings(
-        queries, dim=dim, id_col=query_id_col, vec_col=vec_col, seed=seed
+        queries, dim=dim, id_col=query_id_col, vec_col=vec_col
     )
     book = pq_train(
         rot_c, m=m, ksub=ksub, dim=dim, iterations=iterations,

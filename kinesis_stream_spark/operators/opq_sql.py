@@ -34,9 +34,9 @@ def _sql_rot_coord(row: tuple[float, ...]) -> str:
     return f"(CAST({_sql_fixed_sum(prods)} AS DOUBLE) / {SCALE})"
 
 
-def sql_rotate_cte(dim: int = 64, seed: str = "rrpq-v1") -> str:
+def sql_rotate_cte(dim: int = 64) -> str:
     """``rv(vec_id, v)``: the rotated corpus over CTE ``ev(vec_id, v)``."""
-    R = rotation_matrix(dim, seed)
+    R = rotation_matrix(dim)
     coords = ", ".join(_sql_rot_coord(row) for row in R)
     return f"rv AS (SELECT vec_id, [{coords}] AS v FROM ev)"
 
@@ -49,7 +49,6 @@ def sql_rrpq_adc_topk(
     iterations: int = 2,
     n_queries: int = 3,
     k: int = 8,
-    seed: str = "rrpq-v1",
 ) -> str:
     """Rotated-PQ oracle: rotate → train → encode → ADC top-k. Queries
     are corpus rows, so one rotated CTE serves both sides (exactly as
@@ -63,14 +62,13 @@ def sql_rrpq_adc_topk(
         n_queries=n_queries, k=k,
         src_ctes=(
             "ev AS (SELECT vec_id, embedding AS v FROM embeddings)",
-            sql_rotate_cte(dim, seed),
+            sql_rotate_cte(dim),
         ),
         src="rv",
     )
 
 
-def sql_subspace_variance(*, m: int = 4, dim: int = 64, rotated: bool = False,
-                          seed: str = "rrpq-v1") -> str:
+def sql_subspace_variance(*, m: int = 4, dim: int = 64, rotated: bool = False) -> str:
     """Per-subspace variance shares over the (optionally rotated)
     corpus — twin of ``subspace_variance``: exact fixed-point first and
     second moments, identical per-dimension E[x²] − E[x]² op order,
@@ -87,7 +85,7 @@ def sql_subspace_variance(*, m: int = 4, dim: int = 64, rotated: bool = False,
     src_ctes = ["ev AS (SELECT vec_id, embedding AS v FROM embeddings)"]
     src = "ev"
     if rotated:
-        src_ctes.append(sql_rotate_cte(dim, seed))
+        src_ctes.append(sql_rotate_cte(dim))
         src = "rv"
     q_sums = ", ".join(
         f"SUM(CAST(FLOOR(CAST(v[{i + 1}] AS DOUBLE) * CAST(v[{i + 1}] AS DOUBLE)"

@@ -7,10 +7,7 @@ Scale shape: ONE scan. All per-column aggregates run in a single
 ``agg`` (null counts are plain conditional sums; exact distincts share
 one Expand — Spark plans N distinct aggregates over one pass with an
 N-way expand, not N scans), then the single result row unpivots with
-``stack``. At 100 TB switch ``exact=False``: HyperLogLog++ distinct
-estimates drop the expand entirely and the whole profile is one
-codegen'd aggregate — the exact path exists because the test oracle
-needs replayable integers.
+``stack``. Distincts are exact because the oracle replays integers.
 
 No reference-file citation applies: the reference (500px/kinesis-stream)
 delegates all data processing to its host framework; profiling is part
@@ -30,13 +27,10 @@ D38 = "decimal(38,0)"
 CORR_SCALE = 1 << 20
 
 
-def profile_columns(df: DataFrame, cols: list[str], *, exact: bool = True) -> DataFrame:
-    """Per-column profile: (column_name, n_nulls, n_distinct).
-
-    ``exact=True`` uses COUNT(DISTINCT) (oracle-replayable);
-    ``exact=False`` uses approx_count_distinct (the 100 TB setting —
-    same output schema, ±2% cardinalities, no Expand in the plan).
-    NULL does not count toward n_distinct on either engine.
+def profile_columns(df: DataFrame, cols: list[str]) -> DataFrame:
+    """Per-column profile: (column_name, n_nulls, n_distinct), the
+    distincts by exact COUNT(DISTINCT). NULL does not count toward
+    n_distinct on either engine.
     """
     aggs = []
     for c in cols:
@@ -48,12 +42,7 @@ def profile_columns(df: DataFrame, cols: list[str], *, exact: bool = True) -> Da
             .cast("long")
             .alias(f"_n_{c}")
         )
-        distinct = (
-            F.countDistinct(F.col(c))
-            if exact
-            else F.approx_count_distinct(c, rsd=0.02)
-        )
-        aggs.append(distinct.alias(f"_d_{c}"))
+        aggs.append(F.countDistinct(F.col(c)).alias(f"_d_{c}"))
     row = df.agg(*aggs)
     stack_args = ", ".join(f"'{c}', _n_{c}, _d_{c}" for c in cols)
     return row.select(
@@ -848,8 +837,6 @@ def cramers_v(
     df: DataFrame,
     col_x: str,
     col_y: str,
-    *,
-    pair: str | None = None,
 ) -> DataFrame:
     """Cramér's V association strength between two categorical columns
     — the [0, 1] normalization of the chi-square statistic
@@ -878,8 +865,9 @@ def cramers_v(
     adds it back). Degenerate pairs (either column constant, or an
     empty table) emit NULL cramers_v with chi2 = 0 by contract.
 
-    Output: ONE row (pair, n_rows, n_cells, r_levels, c_levels,
-    chi2_fx, chi2, dof, cramers_v) — n_cells is the DENSE r·c grid.
+    Output: ONE row (pair = '<col_x>~<col_y>', n_rows, n_cells,
+    r_levels, c_levels, chi2_fx, chi2, dof, cramers_v) — n_cells is the
+    DENSE r·c grid.
 
     Scale shape: one combinable contingency aggregate, two cell-frame
     marginal reductions, a broadcast r×c cross-join + broadcast left
@@ -936,7 +924,7 @@ def cramers_v(
         ),
     ).otherwise(F.lit(None).cast("double"))
     return agg.select(
-        F.lit(pair or f"{col_x}~{col_y}").alias("pair"),
+        F.lit(f"{col_x}~{col_y}").alias("pair"),
         "n_rows",
         "n_cells",
         "r_levels",
@@ -957,8 +945,6 @@ def sql_cramers_v(
     table: str,
     col_x: str,
     col_y: str,
-    *,
-    pair: str | None = None,
 ) -> str:
     """DuckDB oracle twin of :func:`cramers_v`."""
     exp = (
@@ -996,7 +982,7 @@ def sql_cramers_v(
                AS c_levels,
              COALESCE(CAST(SUM(term_fx) AS BIGINT), 0) AS chi2_fx
       FROM terms)
-    SELECT '{pair or f"{col_x}~{col_y}"}' AS pair,
+    SELECT '{col_x}~{col_y}' AS pair,
            n_rows, n_cells, r_levels, c_levels, chi2_fx,
            CAST(chi2_fx AS DOUBLE) / {float(CRAMER_SCALE)!r} AS chi2,
            GREATEST(r_levels - 1, 0) * GREATEST(c_levels - 1, 0) AS dof,

@@ -207,13 +207,16 @@ def rsj_topk(
     )
 
 
+#: coverage thresholds of :func:`vocab_coverage`, in percent
+COVERAGE_PCTS = (50, 90, 99)
+
+
 def vocab_coverage(
     docs: DataFrame,
     *,
-    thresholds: tuple[int, ...] = (50, 90, 99),
     text_col: str = "text",
 ) -> DataFrame:
-    """Tokenizer vocabulary sizing: for each percent threshold, the
+    """Tokenizer vocabulary sizing: for each ``COVERAGE_PCTS`` threshold, the
     smallest top-k vocabulary (terms ranked by frequency desc, term asc)
     whose occurrences cover ≥ that share of all token occurrences.
 
@@ -244,7 +247,7 @@ def vocab_coverage(
     )
     per = cum.select(
         "cum",
-        F.explode(F.array(*[F.lit(p) for p in thresholds])).alias("pct"),
+        F.explode(F.array(*[F.lit(p) for p in COVERAGE_PCTS])).alias("pct"),
     ).crossJoin(F.broadcast(tot))
     covered = F.min(
         F.when(F.col("cum") * 100 >= F.col("pct") * F.col("total_tokens"), F.col("cum"))
@@ -282,16 +285,15 @@ def rrf_fuse(
     rankings: list[DataFrame],
     *,
     k: int = 10,
-    k_rrf: int = RRF_K,
 ) -> DataFrame:
     """Reciprocal-rank fusion of N retrieval rankings (hybrid
-    sparse + dense retrieval): fused score = Σ_lists 1/(k_rrf + rank),
+    sparse + dense retrieval): fused score = Σ_lists 1/(RRF_K + rank),
     the score-free rank combiner that needs NO calibration between
     heterogeneous scorers (BM25 scores and cosine similarities are not
     comparable; their RANKS are).
 
     Each input frame carries (query_id, item_id, rank). The reciprocal
-    is computed as exact integer floor division ``2^40 div (k_rrf +
+    is computed as exact integer floor division ``2^40 div (RRF_K +
     rank)`` — no float division, so the fused ordering is bit-identical
     in any engine and under any partitioning; the final score is one
     scale-back divide. An item missing from a list simply contributes
@@ -306,7 +308,7 @@ def rrf_fuse(
     allr = rankings[0].select("query_id", "item_id", "rank")
     for r in rankings[1:]:
         allr = allr.unionAll(r.select("query_id", "item_id", "rank"))
-    contrib = F.expr(f"{RRF_SCALE} div ({k_rrf} + rank)")
+    contrib = F.expr(f"{RRF_SCALE} div ({RRF_K} + rank)")
     fused = allr.groupBy("query_id", "item_id").agg(
         F.sum(contrib).alias("sfx"),
         F.count(F.lit(1)).alias("n_lists"),

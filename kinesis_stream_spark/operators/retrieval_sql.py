@@ -11,7 +11,7 @@ doc_id asc) tie rule. Parity validates the computation end to end.
 from __future__ import annotations
 
 from kinesis_stream_spark.functions.hashing import sql_tokens
-from kinesis_stream_spark.operators.retrieval import BM25_SCALE
+from kinesis_stream_spark.operators.retrieval import BM25_SCALE, COVERAGE_PCTS
 
 
 def sql_bm25_topk(
@@ -159,7 +159,6 @@ def sql_rsj_topk(
 
 def sql_vocab_coverage(
     *,
-    thresholds: tuple[int, ...] = (50, 90, 99),
     table: str = "documents",
     text_col: str = "text",
 ) -> str:
@@ -169,7 +168,7 @@ def sql_vocab_coverage(
     scale-out); values match the distributed prefix sum because the
     order key (n desc, term asc) is unique per row."""
     toks = sql_tokens(text_col)
-    values = ", ".join(f"({p})" for p in thresholds)
+    values = ", ".join(f"({p})" for p in COVERAGE_PCTS)
     return f"""
     WITH counts AS (
       SELECT term, CAST(COUNT(*) AS BIGINT) AS n

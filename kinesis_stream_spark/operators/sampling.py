@@ -44,7 +44,6 @@ def weighted_priority_sample(
     id_col: str,
     weight_col: str,
     k: int,
-    seed: int | None = None,
 ) -> DataFrame:
     """Reproducible weighted-priority sample of ``k`` rows per group:
     each row draws the deterministic 31-bit hash u = md5(id) mod 2^31
@@ -96,7 +95,7 @@ def weighted_priority_sample(
         )
         .cast("long")
         .alias("weight_fx"),
-        (md5_int64(F.col(id_col).cast("string"), seed) % U_MOD).alias("u"),
+        (md5_int64(F.col(id_col).cast("string")) % U_MOD).alias("u"),
     ).where(F.col("weight_fx") > 0)
     pri = base.select(
         "group_key",
@@ -126,11 +125,10 @@ def sql_weighted_priority_sample(
     id_col: str,
     weight_col: str,
     k: int,
-    seed: int | None = None,
 ) -> str:
     """DuckDB oracle twin of :func:`weighted_priority_sample` —
     identical hash, quantization, priority floor, and tie-break."""
-    u = sql_md5_int64(f"CAST({id_col} AS VARCHAR)", seed)
+    u = sql_md5_int64(f"CAST({id_col} AS VARCHAR)")
     return f"""
     WITH base AS (
       SELECT {group_col} AS group_key, {id_col} AS id,

@@ -80,7 +80,6 @@ def prefix_filter_jaccard_pairs(
     docs: DataFrame,
     *,
     threshold: float = 0.5,
-    shingle_n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
@@ -122,7 +121,7 @@ def prefix_filter_jaccard_pairs(
         .select(
             "id",
             F.transform(
-                shingles(F.col(text_col), shingle_n), lambda s: md5_int64(s)
+                shingles(F.col(text_col), 3), lambda s: md5_int64(s)
             ).alias("sh"),
         )
         .where(F.size("sh") > 0),
@@ -227,7 +226,6 @@ def sql_prefix_filter_jaccard_pairs(
     input_cte: str,
     *,
     threshold: float = 0.5,
-    shingle_n: int = 3,
 ) -> str:
     """DuckDB replay of :func:`prefix_filter_jaccard_pairs` over
     ``input_cte → docs(doc_id, text)`` — same rarity order (df, md5,
@@ -237,7 +235,7 @@ def sql_prefix_filter_jaccard_pairs(
     t = repr(float(threshold))
     return f"""
     WITH docs AS ({input_cte}),
-    ss AS (SELECT doc_id AS id, {sql_shingles('text', shingle_n)} AS sh FROM docs),
+    ss AS (SELECT doc_id AS id, {sql_shingles('text', 3)} AS sh FROM docs),
     ssn AS (SELECT id, sh FROM ss WHERE LEN(sh) > 0),
     ex AS (SELECT id, t.tok FROM ssn, UNNEST(sh) AS t(tok)),
     dfc AS (SELECT tok, COUNT(*) AS df FROM ex GROUP BY tok),

@@ -39,31 +39,25 @@ def cosine_pairs(
     threshold: float,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    vectorized: bool = True,
     max_group_vectorized: int | None = 100_000,
 ) -> DataFrame:
     """All-pairs cosine ≥ threshold within blocking groups.
 
-    Two physical strategies for the same exact arithmetic:
+    One ``applyInPandas`` per group: the pairwise scoring runs as
+    numpy block operations (Arrow batch in, int64 fixed-point
+    accumulation, one IEEE divide per pair). Dense all-pairs scoring is
+    a SIMD kernel problem, and the interpreted JVM higher-order-function
+    path pays ~4× for it (measured at sf0.1: 7.9s → 1.9s). Only N
+    vectors cross into Python — the P pairs are formed inside the
+    kernel, never materialized as exchange rows. numpy's float64
+    multiply/floor/sqrt/divide are the same IEEE-754 ops as the JVM's,
+    so results are bit-identical to the JVM kernel
+    (:func:`_cosine_pairs_jvm`) and to the DuckDB oracle (verified at
+    sf0.01).
 
-    - ``vectorized=True`` (default): one ``applyInPandas`` per group —
-      the pairwise scoring runs as numpy block operations (Arrow batch
-      in, int64 fixed-point accumulation, one IEEE divide per pair).
-      Dense all-pairs scoring is a SIMD kernel problem, and the
-      interpreted JVM higher-order-function path pays ~4× for it
-      (measured at sf0.1: 7.9s → 1.9s). Only N vectors cross into
-      Python — the P pairs are formed inside the kernel, never
-      materialized as exchange rows. numpy's float64 multiply/floor/
-      sqrt/divide are the same IEEE-754 ops as the JVM's, so results
-      are bit-identical to the JVM path and to the DuckDB oracle
-      (verified at sf0.01).
-    - ``vectorized=False``: pure-JVM self-join + fixed-point
-      higher-order fns — no Python dependency in the plan; useful where
-      Arrow workers are unavailable.
-
-    Scale note (both paths): work is proportional to sum of group-size²;
-    the blocking key bounds it. The vectorized path additionally needs
-    one group's vectors to fit one worker's memory, so it is guarded:
+    Scale note: work is proportional to sum of group-size²; the
+    blocking key bounds it. The numpy kernel also needs one group's
+    vectors to fit one worker's memory, so it is guarded:
     groups above ``max_group_vectorized`` vectors are routed to the
     spill-safe JVM join path instead (an unexpectedly hot blocking key
     must degrade to a slower plan, not OOM an executor). The group
@@ -79,41 +73,33 @@ def cosine_pairs(
     Norms are computed once per vector, not per pair. cosine =
     dot/(na*nb) with single-IEEE-op tails — bit-identical everywhere.
     """
-    if vectorized:
-        base = emb.select(*group_cols, id_col, vec_col).repartition(*group_cols)
-        if max_group_vectorized is None:
-            return _cosine_pairs_vectorized(
-                base,
-                group_cols=group_cols,
-                threshold=threshold,
-                id_col=id_col,
-                vec_col=vec_col,
-            )
-        gn = F.count(F.lit(1)).over(Window.partitionBy(*group_cols))
-        tagged = base.withColumn("_gn", gn)
-        small = tagged.where(F.col("_gn") <= max_group_vectorized).drop("_gn")
-        big = tagged.where(F.col("_gn") > max_group_vectorized).drop("_gn")
+    base = emb.select(*group_cols, id_col, vec_col).repartition(*group_cols)
+    if max_group_vectorized is None:
         return _cosine_pairs_vectorized(
-            small,
+            base,
             group_cols=group_cols,
             threshold=threshold,
             id_col=id_col,
             vec_col=vec_col,
-        ).unionByName(
-            _cosine_pairs_jvm(
-                big,
-                group_cols=group_cols,
-                threshold=threshold,
-                id_col=id_col,
-                vec_col=vec_col,
-            )
         )
-    return _cosine_pairs_jvm(
-        emb,
+    gn = F.count(F.lit(1)).over(Window.partitionBy(*group_cols))
+    tagged = base.withColumn("_gn", gn)
+    small = tagged.where(F.col("_gn") <= max_group_vectorized).drop("_gn")
+    big = tagged.where(F.col("_gn") > max_group_vectorized).drop("_gn")
+    return _cosine_pairs_vectorized(
+        small,
         group_cols=group_cols,
         threshold=threshold,
         id_col=id_col,
         vec_col=vec_col,
+    ).unionByName(
+        _cosine_pairs_jvm(
+            big,
+            group_cols=group_cols,
+            threshold=threshold,
+            id_col=id_col,
+            vec_col=vec_col,
+        )
     )
 
 
@@ -271,25 +257,27 @@ def topk_bruteforce(
     )
 
 
-def hyperplane_signature(
-    vec, *, num_planes: int = 8, dim: int = 64, seed: str = "hp"
-):
-    """r-bit LSH signature string: bit_p = sign(<v, plane_p>) with ±1
+#: hyperplane-LSH signature bits
+NUM_PLANES = 8
+
+
+def hyperplane_signature(vec, *, dim: int = 64):
+    """``NUM_PLANES``-bit LSH signature string: bit_p = sign(<v, plane_p>) with ±1
     plane components derived from md5 parity — fully deterministic and
     engine-replayable (no RNG, no stored plane matrix).
 
-    sign component i of plane p = +1 if md5_int64("{seed}|p_i") is even.
+    sign component i of plane p = +1 if md5_int64("hp|p_i") is even.
     The dot with a ±1 plane is an exact float sum in double (each term a
     float promoted exactly), folded sequentially like functions/vectors.
 
     Implementation: plane = one array<double> literal, dot = zip_with +
     sequential aggregate. The fold order (((0+t0)+t1)+...) is identical
-    to a chained-add expression, but the plan is num_planes small nodes
-    instead of num_planes*dim chained Adds — the chained form blew past
+    to a chained-add expression, but the plan is NUM_PLANES small nodes
+    instead of NUM_PLANES*dim chained Adds — the chained form blew past
     codegen method limits and fell back to interpreted projection.
     """
     bits = []
-    for p, signs in enumerate(plane_signs(seed, num_planes, dim)):
+    for p, signs in enumerate(plane_signs(dim)):
         prods = F.zip_with(vec, F.lit(signs), lambda x, s: x.cast("double") * s)
         acc = F.aggregate(prods, F.lit(0.0), lambda a, t: a + t)
         bits.append(F.when(acc >= 0, "1").otherwise("0"))
@@ -299,17 +287,17 @@ def hyperplane_signature(
 import hashlib  # noqa: E402
 
 
-def _plane_sign(seed: str, p: int, i: int) -> bool:
+def _plane_sign(p: int, i: int) -> bool:
     """Python-side mirror of md5-parity plane components (used to build
     both the Spark expression and the DuckDB oracle)."""
-    h = hashlib.md5(f"{seed}|{p}_{i}".encode()).hexdigest()
+    h = hashlib.md5(f"hp|{p}_{i}".encode()).hexdigest()
     return int(h[:15], 16) % 2 == 0
 
 
-def plane_signs(seed: str = "hp", num_planes: int = 8, dim: int = 64) -> list[list[float]]:
+def plane_signs(dim: int = 64) -> list[list[float]]:
     return [
-        [1.0 if _plane_sign(seed, p, i) else -1.0 for i in range(dim)]
-        for p in range(num_planes)
+        [1.0 if _plane_sign(p, i) else -1.0 for i in range(dim)]
+        for p in range(NUM_PLANES)
     ]
 
 
@@ -318,7 +306,6 @@ def topk_lsh(
     queries: DataFrame,
     *,
     k: int = 10,
-    num_planes: int = 8,
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -332,7 +319,7 @@ def topk_lsh(
     tunable via fewer planes / multi-probe; this is the documented
     accuracy/cost dial vs topk_bruteforce.
     """
-    sig = lambda c: hyperplane_signature(c, num_planes=num_planes, dim=dim)  # noqa: E731
+    sig = lambda c: hyperplane_signature(c, dim=dim)  # noqa: E731
     corp = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
@@ -855,7 +842,6 @@ def cluster_balance(
     *,
     k: int = 4,
     dim: int = 64,
-    iterations: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -868,10 +854,10 @@ def cluster_balance(
     the even-split estimate, and the fix (re-train with larger k, or
     split hot lists) is decided from exactly this table.
 
-    Shape: train + assign (the operators above), then one k-row count
-    aggregate; the totals are a single-row aggregate of the k-row frame
-    cross-joined back — everything after the assignment argmax is
-    driver-trivial (≤ k rows). Arithmetic: integer counts, Σn² as an
+    Shape: train (2 Lloyd rounds) + assign (the operators above), then
+    one k-row count aggregate; the totals are a single-row aggregate of
+    the k-row frame cross-joined back — everything after the assignment
+    argmax is driver-trivial (≤ k rows). Arithmetic: integer counts, Σn² as an
     exact order-independent DECIMAL(38,0) sum (a BIGINT n² would wrap
     past n ≈ 3·10⁹ members in one list — reachable under 100 TB skew;
     DuckDB's HUGEINT sum is the same exact integer), then the ratio in
@@ -879,7 +865,7 @@ def cluster_balance(
     float ops on both engines, no divergence surface.
     """
     cents = kmeans_fit(
-        emb, k=k, dim=dim, iterations=iterations, id_col=id_col, vec_col=vec_col
+        emb, k=k, dim=dim, iterations=2, id_col=id_col, vec_col=vec_col
     ).select("cid", "centroid")
     sizes = (
         assign_to_centroids(emb, cents, id_col=id_col, vec_col=vec_col)
@@ -910,15 +896,14 @@ def cluster_balance(
 def semantic_dedup(
     emb: DataFrame,
     *,
-    kclusters: int = 4,
-    iterations: int = 2,
     threshold: float = 0.3,
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023, public):
-    cluster the embedding space with deterministic k-means, score cosine
+    cluster the embedding space with deterministic k-means (4 clusters,
+    2 Lloyd rounds), score cosine
     pairs ONLY within clusters, collapse the pair graph into connected
     components, and mark every non-canonical member droppable. Returns
     (vec_id, canonical_id) — the drop list; survivors are everything
@@ -944,7 +929,7 @@ def semantic_dedup(
     from kinesis_stream_spark.operators.dedup import connected_components
 
     cents = kmeans_fit(
-        emb, k=kclusters, dim=dim, iterations=iterations, id_col=id_col, vec_col=vec_col
+        emb, k=4, dim=dim, iterations=2, id_col=id_col, vec_col=vec_col
     ).select("cid", "centroid")
     assigned = assign_to_centroids(emb, cents, id_col=id_col, vec_col=vec_col)
     # guard window skipped: k-means clusters are size-bounded by
@@ -970,31 +955,29 @@ def topk_ivf_trained(
     queries: DataFrame,
     *,
     k: int = 10,
-    nprobe: int = 2,
-    kclusters: int = 4,
-    iterations: int = 2,
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
 ) -> DataFrame:
     """IVF search over a TRAINED index: k-means centroids from
-    :func:`kmeans_fit` replace the label partitions of :func:`topk_ivf`
-    — the full train → assign → route → scan loop of a real deployment.
+    :func:`kmeans_fit` (4 clusters, 2 Lloyd rounds) replace the label
+    partitions of :func:`topk_ivf` — the full train → assign → route →
+    scan loop of a real deployment.
 
     The corpus is assigned to its nearest trained centroid (same
     fixed-point argmax rule as training, so the index is exactly the
     clustering the final Lloyd round produced); each query routes to
-    its ``nprobe`` best centroids by the same metric and scans only
+    its 2 best centroids by the same metric and scans only
     those inverted lists. At 100 TB the assignment is written once
     (partition the corpus by cid) and only this search path runs per
     query batch.
     """
     cents = kmeans_fit(
         corpus,
-        k=kclusters,
+        k=4,
         dim=dim,
-        iterations=iterations,
+        iterations=2,
         id_col=id_col,
         vec_col=vec_col,
     ).select("cid", "centroid")
@@ -1011,7 +994,7 @@ def topk_ivf_trained(
         q.join(F.broadcast(cents))
         .select(F.col("query_id"), F.col("v").alias("qv"), "cid", score)
         .withColumn("pr", F.row_number().over(w_route))
-        .where(F.col("pr") <= nprobe)
+        .where(F.col("pr") <= 2)
         .select("query_id", "qv", "cid", norm_decimal(F.col("qv")).alias("nq"))
     )
     scored = (

@@ -282,7 +282,6 @@ def quantile_normalize(
     *,
     id_col: str,
     val_col: str,
-    num_partitions: int = 32,
 ) -> DataFrame:
     """Quantile (rank) normalization of a numeric column: map every
     value to its empirical CDF position in integer ppm — the
@@ -311,7 +310,7 @@ def quantile_normalize(
         [F.col("_qn_v").asc()],
         "_qn_cnt",
         "_qn_cum",
-        num_partitions=num_partitions,
+        num_partitions=32,
     )
     tot = vc.agg(F.sum("_qn_cnt").cast("long").alias("_qn_total"))
     cdf = cum.crossJoin(F.broadcast(tot)).select(
@@ -359,13 +358,11 @@ def abc_classification(
     *,
     key_col: str,
     value_expr: str,
-    a_ppm: int = 800_000,
-    b_ppm: int = 950_000,
 ) -> DataFrame:
     """ABC / Pareto classification: rank keys by descending exact
     revenue, take the running cumulative share, and classify — A while
-    the running share is ≤ ``a_ppm`` (the "vital few" holding the
-    first 80%), B to ``b_ppm``, C after (the long tail) — the
+    the running share is ≤ 800,000 ppm (the "vital few" holding the
+    first 80%), B to 950,000 ppm, C after (the long tail) — the
     inventory/catalog segmentation every ops team runs, and the
     concentration profile's per-key companion
     (:func:`key_concentration_deciles` answers "how skewed"; this
@@ -415,8 +412,8 @@ def abc_classification(
         "key",
         F.col("rev_u").cast("long").alias("revenue_u"),
         ppm.alias("cum_ppm"),
-        F.when(ppm <= a_ppm, "A")
-        .when(ppm <= b_ppm, "B")
+        F.when(ppm <= 800_000, "A")
+        .when(ppm <= 950_000, "B")
         .otherwise("C")
         .alias("abc_class"),
     )
@@ -425,8 +422,6 @@ def abc_classification(
 def sql_abc_classification(
     *,
     facts_cte: str,
-    a_ppm: int = 800_000,
-    b_ppm: int = 950_000,
 ) -> str:
     """DuckDB oracle twin of :func:`abc_classification` (single-node
     window replay of the distributed running sum). ``facts_cte`` must
@@ -447,9 +442,9 @@ def sql_abc_classification(
     SELECT key, CAST(rev_u AS BIGINT) AS revenue_u,
            CASE WHEN grand_u > 0 THEN
              CAST(cum_u * 1000000 // grand_u AS BIGINT) END AS cum_ppm,
-           CASE WHEN CAST(cum_u * 1000000 // grand_u AS BIGINT) <= {a_ppm}
+           CASE WHEN CAST(cum_u * 1000000 // grand_u AS BIGINT) <= 800000
                   THEN 'A'
-                WHEN CAST(cum_u * 1000000 // grand_u AS BIGINT) <= {b_ppm}
+                WHEN CAST(cum_u * 1000000 // grand_u AS BIGINT) <= 950000
                   THEN 'B'
                 ELSE 'C' END AS abc_class
     FROM cum

@@ -14,8 +14,8 @@ comparison near a bucket boundary can round differently (see
 **The period series** (:func:`_period_fx`) is what the series family
 folds, fits and correlates — one tumbling-window aggregate per key:
 
-- a period is one ``(key, bucket)`` cell, ``bucket`` the integer
-  index above;
+- a period is one ``(key, bucket)`` cell, ``bucket`` the integer day
+  index above (``EPOCH_US // DAY_US``);
 - rows with a NULL timestamp are excluded (a NULL bucket has no
   position on the grid, and engines disagree on where NULLs sort — the
   oracles apply the same WHERE);
@@ -56,9 +56,7 @@ def _bucket(ts_col: str, unit_us: int) -> Column:
 EWMA_SCALE = 1 << 20
 
 
-def _period_fx(
-    events: DataFrame, key_col: str, ts_col: str, value_col: str, unit_us: int
-) -> DataFrame:
+def _period_fx(events: DataFrame, key_col: str, ts_col: str, value_col: str) -> DataFrame:
     """The period series of the module docstring: ``(key, bucket, vfx)``,
     one row per occupied (key, bucket) cell. It is the one corpus-sized
     pass of the series family, a map-side-combinable aggregate, so
@@ -66,7 +64,7 @@ def _period_fx(
     return (
         events.where(F.col(ts_col).isNotNull())
         .groupBy(
-            F.col(key_col).alias("key"), _bucket(ts_col, unit_us).alias("bucket")
+            F.col(key_col).alias("key"), _bucket(ts_col, DAY_US).alias("bucket")
         )
         .agg(dsum(value_col, "v"))
         .select(
@@ -113,11 +111,9 @@ def _x_offsets(per: DataFrame) -> DataFrame:
     )
 
 
-def _dense_grid(
-    events: DataFrame, key_col: str, ts_col: str, value_col: str, unit_us: int
-) -> DataFrame:
-    """``(key, bucket, n_events, bucket_sum)`` on each key's dense bucket
-    range, from its first to its last occupied bucket. Empty buckets
+def _dense_grid(events: DataFrame, key_col: str, ts_col: str, value_col: str) -> DataFrame:
+    """``(key, bucket, n_events, bucket_sum)`` on each key's dense hour
+    bucket range, from its first to its last occupied bucket. Empty buckets
     carry NULL ``n_events`` and ``bucket_sum``.
 
     The raw scan collapses FIRST (one shuffle on (key, bucket), partial
@@ -127,7 +123,7 @@ def _dense_grid(
     occupied = (
         events.select(
             F.col(key_col).alias("key"),
-            _bucket(ts_col, unit_us).alias("bucket"),
+            _bucket(ts_col, HOUR_US).alias("bucket"),
             F.col(value_col).alias("v"),
         )
         .groupBy("key", "bucket")
@@ -148,14 +144,13 @@ def gap_fill_forward(
     key_col: str = "event_type",
     ts_col: str = "ts",
     value_col: str = "value",
-    unit_us: int = HOUR_US,
 ) -> DataFrame:
     """Regularize an event stream onto a dense per-key time grid and
     forward-fill observation gaps — the resample + ffill step every
     time-series feature pipeline needs before windowed training data
     can be cut.
 
-    Per key: aggregate raw events to one row per occupied bucket
+    Per key: aggregate raw events to one row per occupied hour bucket
     (count + exact-decimal sum), build the dense bucket range between
     the key's first and last occupied bucket, left-join the
     observations onto it, and carry the last observed sum forward
@@ -173,7 +168,7 @@ def gap_fill_forward(
         .orderBy("bucket")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    return _dense_grid(events, key_col, ts_col, value_col, unit_us).select(
+    return _dense_grid(events, key_col, ts_col, value_col).select(
         F.col("key"),
         F.col("bucket"),
         F.coalesce("n_events", F.lit(0)).alias("n_events"),
@@ -188,7 +183,6 @@ def scd2_compact(
     key_col: str = "user_id",
     ts_col: str = "ts",
     status_col: str = "event_type",
-    unit_us: int = DAY_US,
 ) -> DataFrame:
     """Slowly-changing-dimension (type 2) compaction: collapse a stream
     of per-key status observations into effective-dated intervals
@@ -211,7 +205,7 @@ def scd2_compact(
     after the first shuffle everything is narrow. Day buckets are
     integer epoch-day indexes (exact; see module docstring).
     """
-    day = _bucket(ts_col, unit_us)
+    day = _bucket(ts_col, DAY_US)
     # NULL timestamps carry no temporal meaning and (worse) sort
     # differently across engines (Spark NULLS FIRST vs DuckDB NULLS
     # LAST in ascending windows) — excluded by contract.
@@ -362,18 +356,10 @@ def multires_rollup(
     )
 
 
-def _pct(col: str, p: float, approx_accuracy: int | None):
-    """Percentile aggregate for the outlier family: exact two-pass
-    ``percentile`` when ``approx_accuracy`` is None (the oracle-
-    replayable contract), else single-pass mergeable
-    ``approx_percentile`` — the documented 100 TB swap (one corpus
-    pass, map-side-combinable Greenwald-Khanna summaries, rank error
-    ≤ 1/accuracy). Approx results carry no cross-engine hash contract
-    (the sketch is Spark-specific), so ``*_approx`` registrations are
-    rows-only; tests pin exact ≈ approx at sf0.1."""
-    if approx_accuracy is None:
-        return F.expr(f"percentile({col}, {p!r})")
-    return F.expr(f"approx_percentile({col}, {p!r}, {approx_accuracy})")
+def _pct(col: str, p: float):
+    """Exact two-pass ``percentile`` aggregate for the outlier family —
+    the oracle-replayable contract (DuckDB ``QUANTILE_CONT``)."""
+    return F.expr(f"percentile({col}, {p!r})")
 
 
 def winsorize_stats(
@@ -381,12 +367,9 @@ def winsorize_stats(
     *,
     key_col: str = "event_type",
     value_col: str = "value",
-    p_low: float = 0.05,
-    p_high: float = 0.95,
-    approx_accuracy: int | None = None,
 ) -> DataFrame:
     """Per-key winsorization: clamp values into the exact
-    [p_low, p_high] percentile band and report, per key, how many rows
+    [5%, 95%] percentile band and report, per key, how many rows
     clamped on each side plus the winsorized sum/mean — the standard
     robust-feature step before training on heavy-tailed metrics (one
     sensor glitch or whale user otherwise owns the feature's scale).
@@ -394,9 +377,8 @@ def winsorize_stats(
     Shape mirrors :func:`mad_outliers`: one exact-percentile aggregate
     per key, the tiny bounds frame broadcast back to the row scan
     (rows never shuffle), then one per-key aggregate with exact
-    DECIMAL accumulation for the winsorized sum. At 100 TB swap the
-    exact percentiles for ``approx_percentile`` — the clamp and the
-    aggregate shapes are unchanged. NULL values pass through untouched:
+    DECIMAL accumulation for the winsorized sum. NULL values pass
+    through untouched:
     excluded from the percentile fit, the clamp counts, and the sums,
     identically on both engines.
 
@@ -413,8 +395,8 @@ def winsorize_stats(
     before the clamp.
     """
     bounds = events.groupBy(key_col).agg(
-        _pct(value_col, p_low, approx_accuracy).alias("lo"),
-        _pct(value_col, p_high, approx_accuracy).alias("hi"),
+        _pct(value_col, 0.05).alias("lo"),
+        _pct(value_col, 0.95).alias("hi"),
     )
     v = F.col(value_col)
     clamped = events.join(F.broadcast(bounds), key_col).select(
@@ -459,11 +441,9 @@ def mad_outliers(
     key_col: str = "event_type",
     id_col: str = "event_id",
     value_col: str = "value",
-    k: float = 3.0,
-    approx_accuracy: int | None = None,
 ) -> DataFrame:
     """Robust per-key outlier detection via median absolute deviation:
-    flag rows with |x − median| > k·MAD. Median/MAD resist the exact
+    flag rows with |x − median| > 3·MAD. Median/MAD resist the exact
     failure mode that breaks mean/stddev monitoring — the outliers
     being hunted drag the mean toward themselves; a 3σ rule misses
     the very spikes it exists for when a burst of them widens σ.
@@ -471,9 +451,7 @@ def mad_outliers(
     Two aggregation passes over the fact table (median, then the median
     of deviations — exact MAD is inherently two-pass), each a per-key
     exact percentile; per-key stats broadcast back to the row scan, so
-    rows never shuffle. At 100 TB swap the exact percentiles for
-    ``approx_percentile`` (one pass, mergeable sketches) — the flagging
-    join shape is unchanged. The only float ops per row are one
+    rows never shuffle. The only float ops per row are one
     subtract/abs/compare chain: single IEEE ops, deterministic
     everywhere; percentile interpolation parity is pinned by the
     relational percentile oracles. Keys whose MAD is 0 flag nothing
@@ -481,20 +459,20 @@ def mad_outliers(
     ANSI double/0 error path).
     """
     med = events.groupBy(key_col).agg(
-        _pct(value_col, 0.5, approx_accuracy).alias("med")
+        _pct(value_col, 0.5).alias("med")
     )
     dev = (
         events.join(F.broadcast(med), key_col)
         .select(key_col, F.abs(F.col(value_col) - F.col("med")).alias("adev"))
         .groupBy(key_col)
-        .agg(_pct("adev", 0.5, approx_accuracy).alias("mad"))
+        .agg(_pct("adev", 0.5).alias("mad"))
     )
     stats = med.join(dev, key_col)
     return (
         events.join(F.broadcast(stats), key_col)
         .where(
             (F.col("mad") > 0)
-            & (F.abs(F.col(value_col) - F.col("med")) > k * F.col("mad"))
+            & (F.abs(F.col(value_col) - F.col("med")) > 3.0 * F.col("mad"))
         )
         .select(
             id_col,
@@ -559,7 +537,6 @@ def mann_kendall(
     key_col: str = "user_id",
     ts_col: str = "ts",
     value_col: str = "value",
-    unit_us: int = DAY_US,
 ) -> DataFrame:
     """Mann-Kendall trend statistic per key: S = Σ_{i<j} sign(v_j − v_i)
     over the key's bucketed period sums — the standard non-parametric
@@ -579,7 +556,7 @@ def mann_kendall(
     ALREADY-COLLAPSED period frame on key, and per-key work is
     P·(P−1)/2 with P bounded by the bucketing grid (days in the data
     window), not by event count — the classic way MK stays tractable:
-    coarsen ``unit_us`` as the horizon grows. Keys with one period
+    coarsen the bucket as the horizon grows. Keys with one period
     have no pairs and classify 'flat'. NULL timestamps are excluded
     (the period-series contract in the module docstring)."""
     # Not _period_fx: S compares the DECIMAL sums themselves, with no
@@ -589,7 +566,7 @@ def mann_kendall(
         events.where(F.col(ts_col).isNotNull())
         .groupBy(
             F.col(key_col).alias("key"),
-            _bucket(ts_col, unit_us).alias("bucket"),
+            _bucket(ts_col, DAY_US).alias("bucket"),
         )
         .agg(F.sum(F.col(value_col).cast(DEC)).alias("v"))
     )
@@ -628,7 +605,6 @@ def ewma(
     key_col: str = "user_id",
     ts_col: str = "ts",
     value_col: str = "value",
-    unit_us: int = DAY_US,
 ) -> DataFrame:
     """Per-key exponentially-weighted moving average (α = 1/4) over the
     bucketed period sums, in exact integer fixed point: the recurrence
@@ -648,7 +624,7 @@ def ewma(
     window), never by event count; the fold is a per-row array op on
     that bounded list. The sequential recurrence lives entirely inside
     one row — no cross-row window, no serialized global pass."""
-    per_key = _period_lists(_period_fx(events, key_col, ts_col, value_col, unit_us))
+    per_key = _period_lists(_period_fx(events, key_col, ts_col, value_col))
     first, rest = _first_and_rest()
     folded = F.aggregate(
         rest,
@@ -669,7 +645,6 @@ def cusum(
     key_col: str = "user_id",
     ts_col: str = "ts",
     value_col: str = "value",
-    unit_us: int = DAY_US,
 ) -> DataFrame:
     """Per-key two-sided CUSUM drift detection (Page 1954) over the
     bucketed period sums, in exact integer fixed point: with per-key
@@ -698,7 +673,7 @@ def cusum(
     |x−μ| ≤ 2·max|v|·2^20 and the fold caps S at max excursion ≤
     Σ|x−μ| ≤ P·2^42-ish for bounded values — far inside BIGINT for
     any bucket grid."""
-    per = _period_fx(events, key_col, ts_col, value_col, unit_us)
+    per = _period_fx(events, key_col, ts_col, value_col)
     center = per.groupBy("key").agg(
         F.floor(
             F.sum("vfx").cast("double") / F.count(F.lit(1))
@@ -755,7 +730,6 @@ def holt(
     key_col: str = "user_id",
     ts_col: str = "ts",
     value_col: str = "value",
-    unit_us: int = DAY_US,
 ) -> DataFrame:
     """Per-key Holt linear (double-exponential) smoothing of the
     bucketed period sums — the trend-aware upgrade of :func:`ewma`,
@@ -775,7 +749,7 @@ def holt(
     engines on negatives). Headroom: l tracks the data range and b its
     per-step delta — both bounded by max|v|·2^21-ish, far inside
     BIGINT."""
-    per_key = _period_lists(_period_fx(events, key_col, ts_col, value_col, unit_us))
+    per_key = _period_lists(_period_fx(events, key_col, ts_col, value_col))
     first, rest = _first_and_rest()
     zero = F.lit(0).cast("long")
 
@@ -935,7 +909,6 @@ def linear_trend(
     key_col: str = "user_id",
     ts_col: str = "ts",
     value_col: str = "value",
-    unit_us: int = DAY_US,
 ) -> DataFrame:
     """Per-key ordinary-least-squares linear trend of the bucketed
     period sums: slope and intercept of yfx ~ x where x is the BUCKET
@@ -966,7 +939,7 @@ def linear_trend(
     key-partitioned MIN window on the period frame, then one
     combinable moment aggregate per key — no per-row state, no
     iteration, no driver math."""
-    per = _x_offsets(_period_fx(events, key_col, ts_col, value_col, unit_us))
+    per = _x_offsets(_period_fx(events, key_col, ts_col, value_col))
     d38 = "decimal(38,0)"
     m = per.groupBy("key").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -1004,7 +977,6 @@ def sql_linear_trend(
     key_col: str = "user_id",
     ts_col: str = "ts",
     value_col: str = "value",
-    unit_us: int = DAY_US,
 ) -> str:
     """DuckDB oracle twin of :func:`linear_trend` — identical fx
     encoding, DECIMAL(38,0) moments, and pinned-order final divides."""
@@ -1016,7 +988,7 @@ def sql_linear_trend(
       -- agree even for pre-epoch timestamps; pinned by
       -- tests/test_round11_review_fixes.py::TestPreEpochBucketParity
       SELECT {key_col} AS key,
-             EPOCH_US({ts_col}) // {unit_us} AS bucket,
+             EPOCH_US({ts_col}) // {DAY_US} AS bucket,
              CAST(SUM(CAST({value_col} AS DECIMAL(27,6))) AS DOUBLE) AS v
       FROM {table} WHERE {ts_col} IS NOT NULL GROUP BY 1, 2),
     per AS (
@@ -1154,7 +1126,6 @@ def survival_curve(
     *,
     unit_col: str = "user_id",
     ts_col: str = "ts",
-    unit_us: int = DAY_US,
 ) -> DataFrame:
     """Kaplan-Meier survival curve of unit lifetimes (Kaplan & Meier
     1958) — the churn/retention estimator that handles CENSORING
@@ -1184,8 +1155,8 @@ def survival_curve(
         events.where(F.col(ts_col).isNotNull() & F.col(unit_col).isNotNull())
         .groupBy(F.col(unit_col).alias("unit"))
         .agg(
-            F.min(_bucket(ts_col, unit_us)).alias("fd"),
-            F.max(_bucket(ts_col, unit_us)).alias("ld"),
+            F.min(_bucket(ts_col, DAY_US)).alias("fd"),
+            F.max(_bucket(ts_col, DAY_US)).alias("ld"),
         )
     )
     horizon = per_unit.agg(F.max("ld").alias("horizon"))
@@ -1243,7 +1214,6 @@ def sql_survival_curve(
     table: str = "events",
     unit_col: str = "user_id",
     ts_col: str = "ts",
-    unit_us: int = DAY_US,
 ) -> str:
     """DuckDB oracle twin of :func:`survival_curve` — identical grid,
     at-risk prefix arithmetic, and fx fold (LIST_REDUCE with the
@@ -1251,8 +1221,8 @@ def sql_survival_curve(
     return f"""
     WITH per_unit AS (
       SELECT {unit_col} AS unit,
-             MIN(EPOCH_US({ts_col}) // {unit_us}) AS fd,
-             MAX(EPOCH_US({ts_col}) // {unit_us}) AS ld
+             MIN(EPOCH_US({ts_col}) // {DAY_US}) AS fd,
+             MAX(EPOCH_US({ts_col}) // {DAY_US}) AS ld
       FROM {table}
       WHERE {ts_col} IS NOT NULL AND {unit_col} IS NOT NULL
       GROUP BY 1),
@@ -1302,7 +1272,6 @@ def active_user_windows(
     unit_col: str = "user_id",
     ts_col: str = "ts",
     window_days: int = 7,
-    unit_us: int = DAY_US,
 ) -> DataFrame:
     """Rolling distinct active units per day: for every day in the
     corpus, the exact count of distinct units active that day (DAU)
@@ -1336,7 +1305,7 @@ def active_user_windows(
         events.where(F.col(ts_col).isNotNull() & F.col(unit_col).isNotNull())
         .select(
             F.col(unit_col).alias("unit"),
-            _bucket(ts_col, unit_us).alias("day"),
+            _bucket(ts_col, DAY_US).alias("day"),
         )
         .distinct()
     )
@@ -1388,14 +1357,13 @@ def sql_active_user_windows(
     unit_col: str = "user_id",
     ts_col: str = "ts",
     window_days: int = 7,
-    unit_us: int = DAY_US,
 ) -> str:
     """DuckDB oracle twin of :func:`active_user_windows` — identical
     contribution-explode identity."""
     return f"""
     WITH act AS (
       SELECT DISTINCT {unit_col} AS unit,
-             EPOCH_US({ts_col}) // {unit_us} AS day
+             EPOCH_US({ts_col}) // {DAY_US} AS day
       FROM {table}
       WHERE {ts_col} IS NOT NULL AND {unit_col} IS NOT NULL),
     span AS (SELECT MIN(day) AS d0, MAX(day) AS d1 FROM act),
@@ -1479,7 +1447,6 @@ def lead_lag_correlation(
     type_col: str = "event_type",
     ts_col: str = "ts",
     value_col: str = "value",
-    unit_us: int = DAY_US,
 ) -> DataFrame:
     """Lead–lag cross-correlation between two event types' daily value
     series: Pearson r of (a[t], b[t + lag]) for lag ∈ [−max_lag,
@@ -1510,7 +1477,6 @@ def lead_lag_correlation(
             type_col,
             ts_col,
             value_col,
-            unit_us,
         )
         # a bucket whose events all carry NULL values has no
         # observation (vfx NULL): drop it, or COUNT(*) in the moment
@@ -1539,7 +1505,6 @@ def sql_lead_lag_correlation(
     type_col: str = "event_type",
     ts_col: str = "ts",
     value_col: str = "value",
-    unit_us: int = DAY_US,
 ) -> str:
     """DuckDB oracle twin of :func:`lead_lag_correlation`."""
     s = float(EWMA_SCALE)
@@ -1580,7 +1545,7 @@ def sql_lead_lag_correlation(
     body = " UNION ALL ".join(selects)
     return f"""
     WITH daily AS (
-      SELECT {type_col} AS t, EPOCH_US({ts_col}) // {unit_us} AS bucket,
+      SELECT {type_col} AS t, EPOCH_US({ts_col}) // {DAY_US} AS bucket,
              CAST(FLOOR(CAST(SUM(CAST({value_col} AS DECIMAL(27,6)))
                              AS DOUBLE) * {s!r}) AS BIGINT) AS vfx
       FROM {table}
@@ -1596,14 +1561,13 @@ def strict_funnel(
     events: DataFrame,
     steps: list[str],
     *,
-    step_budget_us: int = DAY_US,
     unit_col: str = "user_id",
     type_col: str = "event_type",
     ts_col: str = "ts",
 ) -> DataFrame:
     """Strictly-ordered funnel with a PER-STEP time budget: a unit
     reaches step k+1 only with an event of that type STRICTLY AFTER
-    its step-k completion and within ``step_budget_us`` of it — the
+    its step-k completion and within one day of it — the
     conversion readout where "signed up, then purchased a month later"
     must NOT count. Earliest-completion semantics: each step binds to
     the unit's EARLIEST qualifying event (greedy, deterministic; the
@@ -1639,7 +1603,7 @@ def strict_funnel(
             .join(prev.select("unit", F.col("t").alias("pt")), "unit")
             .where(
                 (F.col("us") > F.col("pt"))
-                & (F.col("us") <= F.col("pt") + step_budget_us)
+                & (F.col("us") <= F.col("pt") + DAY_US)
             )
             .groupBy("unit")
             .agg(F.min("us").alias("t"))
@@ -1674,7 +1638,6 @@ def sql_strict_funnel(
     *,
     table: str = "events",
     steps: list[str],
-    step_budget_us: int = DAY_US,
     unit_col: str = "user_id",
     type_col: str = "event_type",
     ts_col: str = "ts",
@@ -1695,7 +1658,7 @@ def sql_strict_funnel(
       SELECT b.unit, MIN(b.us) AS t
       FROM base b JOIN r{i - 1} p USING (unit)
       WHERE b.et = '{step}' AND b.us > p.t
-        AND b.us <= p.t + {step_budget_us}
+        AND b.us <= p.t + {DAY_US}
       GROUP BY b.unit)"""
         )
     ctes.append(
@@ -1725,7 +1688,6 @@ def ohlc_bars(
     ts_col: str = "ts",
     value_col: str = "value",
     id_col: str = "event_id",
-    unit_us: int = DAY_US,
 ) -> DataFrame:
     """OHLC candlestick downsampling: per (key, bucket) the Open
     (value at the earliest event), High, Low, Close (value at the
@@ -1747,7 +1709,7 @@ def ohlc_bars(
         events.where(F.col(ts_col).isNotNull())
         .select(
             F.col(key_col).alias("key"),
-            _bucket(ts_col, unit_us).alias("bucket"),
+            _bucket(ts_col, DAY_US).alias("bucket"),
             us.alias("us"),
             F.col(id_col).alias("eid"),
             F.col(value_col).alias("v"),
@@ -1771,12 +1733,11 @@ def sql_ohlc_bars(
     ts_col: str = "ts",
     value_col: str = "value",
     id_col: str = "event_id",
-    unit_us: int = DAY_US,
 ) -> str:
     """DuckDB oracle twin of :func:`ohlc_bars` (identical struct
     extrema and decimal volume)."""
     return f"""
-    SELECT {key_col} AS key, EPOCH_US({ts_col}) // {unit_us} AS bucket,
+    SELECT {key_col} AS key, EPOCH_US({ts_col}) // {DAY_US} AS bucket,
            CAST(COUNT(*) AS BIGINT) AS n_events,
            (MIN({{'us': EPOCH_US({ts_col}), 'eid': {id_col},
                   'v': {value_col}}})).v AS open,
@@ -1798,12 +1759,10 @@ def seasonal_residual_outliers(
     id_col: str = "event_id",
     ts_col: str = "ts",
     value_col: str = "value",
-    k: float = 3.0,
-    approx_accuracy: int | None = None,
 ) -> DataFrame:
     """Seasonally-adjusted robust outliers: subtract each row's
     (key, weekday-slot) baseline mean, then flag rows whose RESIDUAL
-    deviates more than k·MAD from the key's median residual — the
+    deviates more than 3·MAD from the key's median residual — the
     upgrade of :func:`mad_outliers` for metrics with calendar shape,
     where a plain MAD rule either misses weekday anomalies or
     false-alarms every weekend (the Monday spike is normal; the
@@ -1818,8 +1777,7 @@ def seasonal_residual_outliers(
 
     Scale shape: one combinable (key, slot) aggregate for baselines
     (broadcast back — rows never shuffle), two per-key exact
-    percentile passes on the residual (the documented
-    approx_percentile swap at 100 TB), one broadcast flag join. NULL
+    percentile passes on the residual, one broadcast flag join. NULL
     timestamps are excluded by contract; keys whose MAD is 0 flag
     nothing (degenerate scale — the mad_outliers convention)."""
     base = events.where(F.col(ts_col).isNotNull()).select(
@@ -1843,13 +1801,13 @@ def seasonal_residual_outliers(
         (F.col("v") - F.col("baseline")).alias("res"),
     )
     med = resid.groupBy("key").agg(
-        _pct("res", 0.5, approx_accuracy).alias("med_res")
+        _pct("res", 0.5).alias("med_res")
     )
     mad = (
         resid.join(F.broadcast(med), "key")
         .select("key", F.abs(F.col("res") - F.col("med_res")).alias("adev"))
         .groupBy("key")
-        .agg(_pct("adev", 0.5, approx_accuracy).alias("mad_res"))
+        .agg(_pct("adev", 0.5).alias("mad_res"))
     )
     stats = med.join(mad, "key")
     return (
@@ -1862,7 +1820,7 @@ def seasonal_residual_outliers(
             (F.col("mad_res") > 0)
             & (
                 F.abs(F.col("res") - F.col("med_res"))
-                > F.lit(k) * F.col("mad_res")
+                > F.lit(3.0) * F.col("mad_res")
             )
         )
         .select(
@@ -1888,7 +1846,6 @@ def sql_seasonal_residual_outliers(
     id_col: str = "event_id",
     ts_col: str = "ts",
     value_col: str = "value",
-    k: float = 3.0,
 ) -> str:
     """DuckDB oracle twin of :func:`seasonal_residual_outliers`."""
     return f"""
@@ -1919,7 +1876,7 @@ def sql_seasonal_residual_outliers(
            (r.res - s.med_res) / s.mad_res AS score
     FROM resid r JOIN stats s USING (key)
     WHERE s.mad_res > 0
-      AND ABS(r.res - s.med_res) > {k!r} * s.mad_res
+      AND ABS(r.res - s.med_res) > 3.0 * s.mad_res
     """
 
 
@@ -2146,7 +2103,6 @@ def autocorrelation(
     key_col: str = "event_type",
     ts_col: str = "ts",
     value_col: str = "value",
-    unit_us: int = DAY_US,
 ) -> DataFrame:
     """Per-key autocorrelation function (ACF): Pearson r of
     (v[t], v[t + lag]) over the key's own daily value series for
@@ -2169,7 +2125,7 @@ def autocorrelation(
     if max_lag < 1:
         raise ValueError(f"max_lag must be >= 1, got {max_lag}")
     daily = pin(
-        _period_fx(events, key_col, ts_col, value_col, unit_us).where(
+        _period_fx(events, key_col, ts_col, value_col).where(
             F.col("vfx").isNotNull()
         ),
         eager=False,
@@ -2190,7 +2146,6 @@ def sql_autocorrelation(
     key_col: str = "event_type",
     ts_col: str = "ts",
     value_col: str = "value",
-    unit_us: int = DAY_US,
 ) -> str:
     """DuckDB oracle twin of :func:`autocorrelation` (identical fx
     quantization, HUGEINT moments, VARCHAR-routed double casts)."""
@@ -2230,7 +2185,7 @@ def sql_autocorrelation(
       -- agree even for pre-epoch timestamps; pinned by
       -- tests/test_round11_review_fixes.py::TestPreEpochBucketParity
       SELECT {key_col} AS key,
-             EPOCH_US({ts_col}) // {unit_us} AS bucket,
+             EPOCH_US({ts_col}) // {DAY_US} AS bucket,
              CAST(FLOOR(CAST(SUM(CAST({value_col} AS DECIMAL(27,6)))
                              AS DOUBLE) * {s!r}) AS BIGINT) AS vfx
       FROM {table}
@@ -2359,7 +2314,6 @@ def sql_interarrival_burstiness(
 def rfm_segments(
     events: DataFrame,
     *,
-    conversion_type: str = "purchase",
     entity_col: str = "user_id",
     type_col: str = "event_type",
     ts_col: str = "ts",
@@ -2392,7 +2346,7 @@ def rfm_segments(
     count, not event count), both broadcast back — rows never
     shuffle after the per-entity collapse."""
     conv = events.where(
-        (F.col(type_col) == conversion_type)
+        (F.col(type_col) == "purchase")
         & F.col(entity_col).isNotNull()
         & F.col(ts_col).isNotNull()
     ).select(
@@ -2451,7 +2405,6 @@ def rfm_segments(
 def sql_rfm_segments(
     *,
     table: str = "events",
-    conversion_type: str = "purchase",
     entity_col: str = "user_id",
     type_col: str = "event_type",
     ts_col: str = "ts",
@@ -2482,7 +2435,7 @@ def sql_rfm_segments(
       SELECT {entity_col} AS ent, EPOCH_US({ts_col}) AS us,
              {value_col} AS val
       FROM {table}
-      WHERE {type_col} = '{conversion_type}'
+      WHERE {type_col} = 'purchase'
         AND {entity_col} IS NOT NULL AND {ts_col} IS NOT NULL),
     per_ent AS (
       SELECT ent, MAX(us) AS last_us,
@@ -2511,7 +2464,6 @@ def theil_sen_trend(
     key_col: str = "event_type",
     ts_col: str = "ts",
     value_col: str = "value",
-    unit_us: int = DAY_US,
 ) -> DataFrame:
     """Per-key Theil-Sen robust trend (Theil 1950 / Sen 1968): the
     MEDIAN of all pairwise slopes between the key's bucketed period
@@ -2538,7 +2490,7 @@ def theil_sen_trend(
     so corpus growth adds rows per bucket, not pairs), and the median
     window is key-partitioned. The oracle replays the identical pair
     frame and selection."""
-    daily = _period_fx(events, key_col, ts_col, value_col, unit_us).select(
+    daily = _period_fx(events, key_col, ts_col, value_col).select(
         "key", F.col("bucket").alias("x"), F.col("vfx").alias("yfx")
     )
     a, b = daily.alias("a"), daily.alias("b")
@@ -2602,7 +2554,6 @@ def sql_theil_sen_trend(
     key_col: str = "event_type",
     ts_col: str = "ts",
     value_col: str = "value",
-    unit_us: int = DAY_US,
 ) -> str:
     """DuckDB oracle twin of :func:`theil_sen_trend` — identical fx
     pair frame, identical middle-element selection."""
@@ -2610,7 +2561,7 @@ def sql_theil_sen_trend(
     return f"""
     WITH daily AS (
       SELECT {key_col} AS key,
-             CAST(EPOCH_US({ts_col}) // {unit_us} AS BIGINT) AS x,
+             CAST(EPOCH_US({ts_col}) // {DAY_US} AS BIGINT) AS x,
              CAST(FLOOR(CAST(SUM(CAST({value_col} AS DECIMAL(27,6)))
                              AS DOUBLE) * {s!r}) AS BIGINT) AS yfx
       FROM {table} WHERE {ts_col} IS NOT NULL GROUP BY 1, 2),
@@ -2971,7 +2922,6 @@ def changepoint(
     key_col: str = "event_type",
     ts_col: str = "ts",
     value_col: str = "value",
-    unit_us: int = DAY_US,
 ) -> DataFrame:
     """Per-key single-changepoint detection (binary segmentation, the
     first split of Scott & Knott / standard BinSeg): over the key's
@@ -3008,7 +2958,7 @@ def changepoint(
     global window, no driver math."""
     d38 = "decimal(38,0)"
     daily = _period_fx(
-        events, key_col, ts_col, value_col, unit_us
+        events, key_col, ts_col, value_col
     ).withColumnRenamed("vfx", "yfx")
     w_ord = Window.partitionBy("key").orderBy("bucket")
     w_all = Window.partitionBy("key")
@@ -3082,7 +3032,6 @@ def sql_changepoint(
     key_col: str = "event_type",
     ts_col: str = "ts",
     value_col: str = "value",
-    unit_us: int = DAY_US,
 ) -> str:
     """DuckDB oracle twin of :func:`changepoint` — identical fx
     encoding, HUGEINT prefix sums, pinned score chain, same argmax."""
@@ -3090,7 +3039,7 @@ def sql_changepoint(
     return f"""
     WITH daily AS (
       SELECT {key_col} AS key,
-             CAST(EPOCH_US({ts_col}) // {unit_us} AS BIGINT) AS bucket,
+             CAST(EPOCH_US({ts_col}) // {DAY_US} AS BIGINT) AS bucket,
              CAST(FLOOR(CAST(SUM(CAST({value_col} AS DECIMAL(27,6)))
                              AS DOUBLE) * {s!r}) AS BIGINT) AS yfx
       FROM {table} WHERE {ts_col} IS NOT NULL GROUP BY 1, 2),
@@ -3137,12 +3086,9 @@ def anomaly_episodes(
     key_col: str = "event_type",
     ts_col: str = "ts",
     value_col: str = "value",
-    unit_us: int = DAY_US,
-    ratio_num: int = 3,
-    ratio_den: int = 2,
 ) -> DataFrame:
     """Per-key anomaly EPISODES: maximal runs of consecutive periods
-    whose value sum exceeds ``ratio_num/ratio_den`` × the key's mean
+    whose value sum exceeds 3/2 × the key's mean
     period sum — the detector outputs an incident LIST (start, end,
     duration, peak), which is what gets paged on and post-mortemed;
     the point detectors (:func:`mad_outliers`,
@@ -3154,7 +3100,7 @@ def anomaly_episodes(
 
     Flagging is integer-exact: the period series (module docstring),
     and the threshold compare runs as
-    den·n·yfx > num·Σy in DECIMAL(38,0) cross-multiplication — no
+    2·n·yfx > 3·Σy in DECIMAL(38,0) cross-multiplication — no
     mean is ever materialized, no division anywhere in the predicate.
     Peak value is the episode's max fx, exact power-of-two divide to
     value units.
@@ -3168,13 +3114,9 @@ def anomaly_episodes(
     Scale shape: the period-series aggregate, a broadcastable per-key
     totals join, a key-partitioned rank window over the FLAGGED subset
     only, one combinable island reduce."""
-    if ratio_num <= 0 or ratio_den <= 0:
-        raise ValueError(
-            f"ratio must be positive, got {ratio_num}/{ratio_den}"
-        )
     d38 = "decimal(38,0)"
     daily = _period_fx(
-        events, key_col, ts_col, value_col, unit_us
+        events, key_col, ts_col, value_col
     ).withColumnRenamed("vfx", "yfx")
     tot = daily.groupBy("key").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -3183,8 +3125,8 @@ def anomaly_episodes(
     flagged = daily.join(tot, "key").where(
         (F.col("s") > 0)
         & (
-            F.col("yfx").cast(d38) * F.col("n") * ratio_den
-            > F.col("s") * ratio_num
+            F.col("yfx").cast(d38) * F.col("n") * 2
+            > F.col("s") * 3
         )
     )
     w = Window.partitionBy("key").orderBy("bucket")
@@ -3210,16 +3152,13 @@ def sql_anomaly_episodes(
     key_col: str = "event_type",
     ts_col: str = "ts",
     value_col: str = "value",
-    unit_us: int = DAY_US,
-    ratio_num: int = 3,
-    ratio_den: int = 2,
 ) -> str:
     """DuckDB oracle twin of :func:`anomaly_episodes`."""
     s = float(EWMA_SCALE)
     return f"""
     WITH daily AS (
       SELECT {key_col} AS key,
-             CAST(EPOCH_US({ts_col}) // {unit_us} AS BIGINT) AS bucket,
+             CAST(EPOCH_US({ts_col}) // {DAY_US} AS BIGINT) AS bucket,
              CAST(FLOOR(CAST(SUM(CAST({value_col} AS DECIMAL(27,6)))
                              AS DOUBLE) * {s!r}) AS BIGINT) AS yfx
       FROM {table} WHERE {ts_col} IS NOT NULL GROUP BY 1, 2),
@@ -3231,8 +3170,8 @@ def sql_anomaly_episodes(
       SELECT d.key, d.bucket, d.yfx
       FROM daily d JOIN tot t ON d.key = t.key
       WHERE t.s > 0
-        AND CAST(d.yfx AS HUGEINT) * t.n * {ratio_den}
-            > t.s * {ratio_num}),
+        AND CAST(d.yfx AS HUGEINT) * t.n * 2
+            > t.s * 3),
     runs AS (
       SELECT key, bucket, yfx,
              bucket - ROW_NUMBER() OVER (
@@ -3251,12 +3190,10 @@ WEEK_US = 7 * DAY_US
 def cohort_ltv(
     events: DataFrame,
     *,
-    conversion_type: str = "purchase",
     entity_col: str = "user_id",
     type_col: str = "event_type",
     ts_col: str = "ts",
     value_col: str = "value",
-    unit_us: int = WEEK_US,
 ) -> DataFrame:
     """Cohort lifetime-value curve: entities cohorted by their FIRST
     conversion week, each cohort's per-age revenue and its running
@@ -3281,12 +3218,12 @@ def cohort_ltv(
     rows)."""
     d38 = "decimal(38,0)"
     conv = events.where(
-        (F.col(type_col) == conversion_type)
+        (F.col(type_col) == "purchase")
         & F.col(entity_col).isNotNull()
         & F.col(ts_col).isNotNull()
     ).select(
         F.col(entity_col).alias("ent"),
-        _bucket(ts_col, unit_us).cast("long").alias("week"),
+        _bucket(ts_col, WEEK_US).cast("long").alias("week"),
         F.col(value_col).alias("val"),
     )
     first = conv.groupBy("ent").agg(F.min("week").alias("cohort_week"))
@@ -3327,22 +3264,19 @@ def cohort_ltv(
 def sql_cohort_ltv(
     *,
     table: str = "events",
-    conversion_type: str = "purchase",
     entity_col: str = "user_id",
     type_col: str = "event_type",
     ts_col: str = "ts",
     value_col: str = "value",
-    unit_us: int = WEEK_US,
 ) -> str:
     """DuckDB oracle twin of :func:`cohort_ltv`."""
-    ctype = conversion_type.replace("'", "''")
     return f"""
     WITH conv AS (
       SELECT {entity_col} AS ent,
-             CAST(EPOCH_US({ts_col}) // {unit_us} AS BIGINT) AS week,
+             CAST(EPOCH_US({ts_col}) // {WEEK_US} AS BIGINT) AS week,
              {value_col} AS val
       FROM {table}
-      WHERE {type_col} = '{ctype}'
+      WHERE {type_col} = 'purchase'
         AND {entity_col} IS NOT NULL AND {ts_col} IS NOT NULL),
     first AS (SELECT ent, MIN(week) AS cohort_week FROM conv GROUP BY 1),
     aged AS (
@@ -3365,13 +3299,16 @@ def sql_cohort_ltv(
     """
 
 
+#: idle gap that ends a session in :func:`session_stats` (30 minutes)
+SESSION_GAP_US = 30 * 60 * 1_000_000
+
+
 def session_stats(
     events: DataFrame,
     *,
     key_col: str = "user_id",
     ts_col: str = "ts",
     id_col: str = "event_id",
-    gap_us: int = 30 * 60 * 1_000_000,
 ) -> DataFrame:
     """Daily session-quality rollup from idle-gap sessionization: per
     day (of session start), session count, bounce count and rate
@@ -3379,7 +3316,7 @@ def session_stats(
     per session — the landing-page dashboard row. The BATCH twin of
     the streaming session_window path (streaming/windows.py), built on
     the repo's standard lag chain: a session breaks after
-    ``gap_us`` of silence, sessions are numbered per entity by a
+    ``SESSION_GAP_US`` of silence, sessions are numbered per entity by a
     running sum of break flags.
 
     Cross-engine exactness: everything is integer microseconds and
@@ -3396,8 +3333,6 @@ def session_stats(
     (lag flag + running session number — same partitioning); the
     per-session reduce and the per-day reduce are combinable. No
     self-join, no global window."""
-    if gap_us < 1:
-        raise ValueError(f"gap_us must be >= 1, got {gap_us}")
     d38 = "decimal(38,0)"
     w = Window.partitionBy("ent").orderBy("us", F.col("eid").asc_nulls_last())
     ev = events.where(
@@ -3413,7 +3348,7 @@ def session_stats(
         "eid",
         F.when(
             F.lag("us").over(w).isNull()
-            | (F.col("us") - F.lag("us").over(w) > gap_us),
+            | (F.col("us") - F.lag("us").over(w) > SESSION_GAP_US),
             1,
         )
         .otherwise(0)
@@ -3462,7 +3397,6 @@ def sql_session_stats(
     key_col: str = "user_id",
     ts_col: str = "ts",
     id_col: str = "event_id",
-    gap_us: int = 30 * 60 * 1_000_000,
 ) -> str:
     """DuckDB oracle twin of :func:`session_stats`."""
     return f"""
@@ -3474,7 +3408,7 @@ def sql_session_stats(
     flagged AS (
       SELECT ent, us, eid,
              CASE WHEN LAG(us) OVER w IS NULL
-                    OR us - LAG(us) OVER w > {gap_us}
+                    OR us - LAG(us) OVER w > {SESSION_GAP_US}
                   THEN 1 ELSE 0 END AS brk
       FROM ev
       WINDOW w AS (PARTITION BY ent ORDER BY us, eid NULLS LAST)),
@@ -3514,7 +3448,6 @@ def rolling_regression(
     ts_col: str = "ts",
     value_col: str = "value",
     window_rows: int = 7,
-    unit_us: int = DAY_US,
 ) -> DataFrame:
     """Per-key ROLLING ordinary-least-squares trend: at every occupied
     bucket, the OLS slope of the key's last ``window_rows`` occupied
@@ -3549,7 +3482,7 @@ def rolling_regression(
     corpus pass. Headroom: x is grid-sized (≤ days of history),
     yfx ≤ 2^20·Σ|value|/day — x·yfx stays inside BIGINT to ~10^4 days
     of ~10^14-fx daily mass."""
-    per = _x_offsets(_period_fx(events, key_col, ts_col, value_col, unit_us)).select(
+    per = _x_offsets(_period_fx(events, key_col, ts_col, value_col)).select(
         "key",
         "bucket",
         "x",
@@ -3598,7 +3531,6 @@ def sql_rolling_regression(
     ts_col: str = "ts",
     value_col: str = "value",
     window_rows: int = 7,
-    unit_us: int = DAY_US,
 ) -> str:
     """DuckDB oracle twin of :func:`rolling_regression` (HUGEINT
     num/den routed through VARCHAR for the correctly-rounded double —
@@ -3610,7 +3542,7 @@ def sql_rolling_regression(
       -- agree even for pre-epoch timestamps; pinned by
       -- tests/test_round11_review_fixes.py::TestPreEpochBucketParity
       SELECT {key_col} AS key,
-             EPOCH_US({ts_col}) // {unit_us} AS bucket,
+             EPOCH_US({ts_col}) // {DAY_US} AS bucket,
              CAST(SUM(CAST({value_col} AS DECIMAL(27,6))) AS DOUBLE) AS v
       FROM {table} WHERE {ts_col} IS NOT NULL GROUP BY 1, 2),
     per AS (
@@ -3654,7 +3586,6 @@ def growth_accounting(
     unit_col: str = "user_id",
     ts_col: str = "ts",
     dormancy_days: int = 7,
-    unit_us: int = DAY_US,
 ) -> DataFrame:
     """Daily growth accounting — the new / retained / resurrected /
     churned decomposition every growth dashboard opens with, built
@@ -3686,7 +3617,7 @@ def growth_accounting(
         )
         .select(
             F.col(unit_col).alias("unit"),
-            _bucket(ts_col, unit_us).cast("long").alias("day"),
+            _bucket(ts_col, DAY_US).cast("long").alias("day"),
         )
         .distinct()
     )
@@ -3734,14 +3665,13 @@ def sql_growth_accounting(
     unit_col: str = "user_id",
     ts_col: str = "ts",
     dormancy_days: int = 7,
-    unit_us: int = DAY_US,
 ) -> str:
     """DuckDB oracle twin of :func:`growth_accounting`."""
     r = int(dormancy_days)
     return f"""
     WITH act AS (
       SELECT DISTINCT {unit_col} AS unit,
-             CAST(EPOCH_US({ts_col}) // {unit_us} AS BIGINT) AS day
+             CAST(EPOCH_US({ts_col}) // {DAY_US} AS BIGINT) AS day
       FROM {table}
       WHERE {unit_col} IS NOT NULL AND {ts_col} IS NOT NULL),
     per AS (
@@ -3773,7 +3703,6 @@ def runs_test(
     key_col: str = "event_type",
     ts_col: str = "ts",
     value_col: str = "value",
-    unit_us: int = DAY_US,
 ) -> DataFrame:
     """Wald–Wolfowitz runs test on each key's daily up/down moves —
     the randomness audit beside the trend tests: Mann-Kendall asks "is
@@ -3805,7 +3734,7 @@ def runs_test(
     windows over the period frame (days×keys rows): the lag for
     differences and the lag for alternation counts. No joins, no
     corpus-sized window."""
-    daily = _period_fx(events, key_col, ts_col, value_col, unit_us)
+    daily = _period_fx(events, key_col, ts_col, value_col)
     w = Window.partitionBy("key").orderBy("bucket")
     diffs = daily.select(
         "key",
@@ -3864,7 +3793,6 @@ def sql_runs_test(
     key_col: str = "event_type",
     ts_col: str = "ts",
     value_col: str = "value",
-    unit_us: int = DAY_US,
 ) -> str:
     """DuckDB oracle twin of :func:`runs_test`."""
     return f"""
@@ -3874,7 +3802,7 @@ def sql_runs_test(
       -- agree even for pre-epoch timestamps; pinned by
       -- tests/test_round11_review_fixes.py::TestPreEpochBucketParity
       SELECT {key_col} AS key,
-             EPOCH_US({ts_col}) // {unit_us} AS bucket,
+             EPOCH_US({ts_col}) // {DAY_US} AS bucket,
              CAST(SUM(CAST({value_col} AS DECIMAL(27,6))) AS DOUBLE) AS v
       FROM {table} WHERE {ts_col} IS NOT NULL GROUP BY 1, 2),
     fx AS (
@@ -3929,7 +3857,6 @@ def linear_interpolation(
     key_col: str = "event_type",
     ts_col: str = "ts",
     value_col: str = "value",
-    unit_us: int = HOUR_US,
 ) -> DataFrame:
     """Regularize an event stream onto a dense per-key time grid and
     LINEARLY interpolate observation gaps — the `interpolate()`
@@ -3973,7 +3900,7 @@ def linear_interpolation(
         .orderBy("bucket")
         .rowsBetween(Window.currentRow, Window.unboundedFollowing)
     )
-    j = _dense_grid(events, key_col, ts_col, value_col, unit_us).select(
+    j = _dense_grid(events, key_col, ts_col, value_col).select(
         "key",
         "bucket",
         "n_events",
@@ -4013,13 +3940,12 @@ def sql_linear_interpolation(
     key_col: str = "event_type",
     ts_col: str = "ts",
     value_col: str = "value",
-    unit_us: int = HOUR_US,
 ) -> str:
     """DuckDB oracle twin of :func:`linear_interpolation` — identical
     grid, struct-carried neighbors, and pinned interpolation chain."""
     return f"""
     WITH occ AS (
-      SELECT {key_col} AS key, EPOCH_US({ts_col}) // {unit_us} AS bucket,
+      SELECT {key_col} AS key, EPOCH_US({ts_col}) // {HOUR_US} AS bucket,
              COUNT(*) AS n_events,
              CAST(SUM(CAST({value_col} AS DECIMAL(27,6))) AS DOUBLE)
                AS bucket_sum
@@ -4059,7 +3985,6 @@ def seasonal_naive(
     key_col: str = "event_type",
     ts_col: str = "ts",
     value_col: str = "value",
-    unit_us: int = DAY_US,
     season: int = 7,
 ) -> DataFrame:
     """Per-key seasonal-naive forecast skill — the missing member of
@@ -4106,7 +4031,6 @@ def seasonal_naive(
         key_col,
         ts_col,
         value_col,
-        unit_us,
     )
     sn = daily.select(
         "key",
@@ -4189,7 +4113,6 @@ def sql_seasonal_naive(
     key_col: str = "event_type",
     ts_col: str = "ts",
     value_col: str = "value",
-    unit_us: int = DAY_US,
     season: int = 7,
 ) -> str:
     """DuckDB oracle twin of :func:`seasonal_naive` — identical grid,
@@ -4202,7 +4125,7 @@ def sql_seasonal_naive(
       -- agree even for pre-epoch timestamps; pinned by
       -- tests/test_round11_review_fixes.py::TestPreEpochBucketParity
       SELECT {key_col} AS key,
-             EPOCH_US({ts_col}) // {unit_us} AS bucket,
+             EPOCH_US({ts_col}) // {DAY_US} AS bucket,
              CAST(FLOOR(CAST(SUM(CAST({value_col} AS DECIMAL(27,6)))
                              AS DOUBLE) * {s!r}) AS BIGINT) AS vfx
       FROM {table}
@@ -4251,7 +4174,6 @@ def rolling_distinct(
     *,
     id_col: str = "user_id",
     ts_col: str = "ts",
-    unit_us: int = DAY_US,
     window: int = 7,
 ) -> DataFrame:
     """Exact rolling distinct-count engagement curve — per grid day d:
@@ -4282,7 +4204,7 @@ def rolling_distinct(
         events.where(F.col(ts_col).isNotNull() & F.col(id_col).isNotNull())
         .select(
             F.col(id_col).alias("id"),
-            _bucket(ts_col, unit_us).alias("bucket"),
+            _bucket(ts_col, DAY_US).alias("bucket"),
         )
         .distinct()
     )
@@ -4329,7 +4251,6 @@ def sql_rolling_distinct(
     table: str = "events",
     id_col: str = "user_id",
     ts_col: str = "ts",
-    unit_us: int = DAY_US,
     window: int = 7,
 ) -> str:
     """DuckDB oracle twin of :func:`rolling_distinct` — identical
@@ -4338,7 +4259,7 @@ def sql_rolling_distinct(
     WITH pairs AS (
       -- integer // truncates like Spark div: sql_seasonal_naive's note
       SELECT DISTINCT {id_col} AS id,
-             EPOCH_US({ts_col}) // {unit_us} AS bucket
+             EPOCH_US({ts_col}) // {DAY_US} AS bucket
       FROM {table}
       WHERE {ts_col} IS NOT NULL AND {id_col} IS NOT NULL),
     dau AS (

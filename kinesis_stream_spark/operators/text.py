@@ -179,18 +179,21 @@ def rolling_fingerprint(
     return docs.select(F.col(id_col), fp.alias("fingerprint"))
 
 
+#: winnowing: tokens per gram, grams per window
+WINNOW_K = 3
+WINNOW_WINDOW = 4
+
+
 def winnowed_fingerprints(
     docs: DataFrame,
     *,
     text_col: str = "text",
     id_col: str = "doc_id",
-    k: int = 3,
-    window: int = 4,
 ) -> DataFrame:
-    """Winnowing (MOSS-style): hash every k-token gram, take the min hash
-    of each sliding window of `window` grams, emit the distinct sorted
-    mins. Robust to local edits; the standard plagiarism/near-dup
-    fingerprint. Output is array<bigint> per doc.
+    """Winnowing (MOSS-style): hash every ``WINNOW_K``-token gram, take
+    the min hash of each sliding window of ``WINNOW_WINDOW`` grams, emit
+    the distinct sorted mins. Robust to local edits; the standard
+    plagiarism/near-dup fingerprint. Output is array<bigint> per doc.
 
     NULL-text documents carry no token sequence and are DROPPED (the
     posexplode emits no rows for them) — callers wanting a row per doc
@@ -212,29 +215,29 @@ def winnowed_fingerprints(
         "id",
         F.posexplode(tokens(F.col(text_col))).alias("pos", "tok"),
     )
-    # gram at pos p = hash of tokens p..p+k-1 (short tail rows filtered:
-    # only pos <= max(n_tokens - k, 0) is a gram start, which also keeps
+    # gram at pos p = hash of tokens p..p+K-1 (short tail rows filtered:
+    # only pos <= max(n_tokens - K, 0) is a gram start, which also keeps
     # the single short-doc gram = join of all tokens, as slice() did)
     gram = (
         tok.select(
             "id",
             "pos",
             md5_int64(
-                F.concat_ws(" ", "tok", *[F.lead("tok", j).over(order) for j in range(1, k)])
+                F.concat_ws(" ", "tok", *[F.lead("tok", j).over(order) for j in range(1, WINNOW_K)])
             ).alias("gram_h"),
             F.count(F.lit(1)).over(whole).alias("n_toks"),
         )
-        .where(F.col("pos") <= F.greatest(F.col("n_toks") - k, F.lit(0)))
+        .where(F.col("pos") <= F.greatest(F.col("n_toks") - WINNOW_K, F.lit(0)))
         .drop("n_toks")
     )
     win_min = (
         gram.select(
             "id",
             "pos",
-            F.min("gram_h").over(order.rowsBetween(0, window - 1)).alias("wmin"),
+            F.min("gram_h").over(order.rowsBetween(0, WINNOW_WINDOW - 1)).alias("wmin"),
             F.count(F.lit(1)).over(whole).alias("n_grams"),
         )
-        .where(F.col("pos") <= F.greatest(F.col("n_grams") - window, F.lit(0)))
+        .where(F.col("pos") <= F.greatest(F.col("n_grams") - WINNOW_WINDOW, F.lit(0)))
     )
     return (
         win_min.groupBy("id")
@@ -249,11 +252,10 @@ def term_stats_topk(
     text_col: str = "text",
     id_col: str = "doc_id",
     group_col: str = "lang",
-    top_k: int = 5,
-    min_df: int = 2,
 ) -> DataFrame:
-    """Per-group top-k terms by collection frequency, with document
-    frequency. Integer counts only (no idf-log — cross-engine exact).
+    """Per-group top-5 terms by collection frequency among the terms in
+    at least 2 documents, with document frequency. Integer counts only
+    (no idf-log — cross-engine exact).
 
     Scale: explode → two-level aggregate; Catalyst plans partial counts
     map-side so the (group, token) shuffle carries pre-combined rows.
@@ -268,9 +270,9 @@ def term_stats_topk(
     )
     w = Window.partitionBy("grp").orderBy(F.desc("tf"), F.asc("token"))
     return (
-        stats.where(F.col("df") >= min_df)
+        stats.where(F.col("df") >= 2)
         .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= top_k)
+        .where(F.col("rank") <= 5)
         .select(F.col("grp").alias(group_col), "token", "tf", "df", "rank")
     )
 
@@ -351,12 +353,10 @@ def boilerplate_fraction(
     *,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n: int = 3,
-    df_threshold: int = 5,
 ) -> DataFrame:
     """Corpus-level boilerplate measurement: per document, the fraction
-    of its distinct n-gram shingles that are HIGH-document-frequency
-    across the whole corpus (df ≥ threshold). High fractions flag
+    of its distinct 3-gram shingles that are HIGH-document-frequency
+    across the whole corpus (df ≥ 5). High fractions flag
     template/boilerplate-dominated documents — the cross-document
     complement of the within-document repetition filters, and the
     measurement behind "remove documents that are mostly site chrome".
@@ -371,7 +371,7 @@ def boilerplate_fraction(
     from kinesis_stream_spark.functions.hashing import shingles
 
     grams = spread(docs.select(id_col, text_col), id_col).select(
-        F.col(id_col), F.explode(shingles(F.col(text_col), n)).alias("g")
+        F.col(id_col), F.explode(shingles(F.col(text_col), 3)).alias("g")
     )  # shingles() emits the distinct set per doc
     gram_df = grams.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
     return (
@@ -380,7 +380,7 @@ def boilerplate_fraction(
         .agg(
             F.count(F.lit(1)).alias("n_grams"),
             F.sum(
-                F.when(F.col("df") >= df_threshold, 1).otherwise(0)
+                F.when(F.col("df") >= 5, 1).otherwise(0)
             ).alias("n_boilerplate"),
         )
         .select(
@@ -463,7 +463,6 @@ def pii_scrub(
     *,
     text_col: str = "text",
     id_col: str = "doc_id",
-    patterns: dict[str, str] = PII_PATTERNS,
 ) -> DataFrame:
     """Detect-and-mask PII spans: per document, the match count for each
     pattern plus the scrubbed text (every match replaced by a
@@ -482,7 +481,7 @@ def pii_scrub(
     """
     out_cols = [F.col(id_col)]
     scrubbed = F.col(text_col)
-    for name, pat in sorted(patterns.items()):
+    for name, pat in sorted(PII_PATTERNS.items()):
         out_cols.append(
             F.size(F.regexp_extract_all(scrubbed, F.lit(pat), F.lit(0))).alias(
                 f"n_{name}"
@@ -496,15 +495,13 @@ def pii_scrub(
     )
 
 
-def sql_pii_scrub_columns(
-    text_expr: str, patterns: dict[str, str] = PII_PATTERNS
-) -> tuple[str, str]:
+def sql_pii_scrub_columns(text_expr: str) -> tuple[str, str]:
     """DuckDB twins of :func:`pii_scrub`'s count columns and scrubbed
     expression (same patterns, same sorted replacement order, counts
     against the same progressively scrubbed value)."""
     count_cols = []
     scrubbed = text_expr
-    for name, pat in sorted(patterns.items()):
+    for name, pat in sorted(PII_PATTERNS.items()):
         count_cols.append(f"LEN(REGEXP_EXTRACT_ALL({scrubbed}, '{pat}')) AS n_{name}")
         scrubbed = f"REGEXP_REPLACE({scrubbed}, '{pat}', '<{name.upper()}>', 'g')"
     return ", ".join(count_cols), scrubbed
@@ -519,10 +516,9 @@ def decontaminate_ngram_overlap(
     *,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n: int = 5,
 ) -> DataFrame:
     """Benchmark decontamination: per corpus document, the fraction of its
-    distinct n-grams that appear in ANY probe (eval-set) document.
+    distinct 5-grams that appear in ANY probe (eval-set) document.
 
     The standard pre-training hygiene op: drop or flag training docs that
     contain eval-set n-grams. Shape: probe n-grams are a DISTINCT set —
@@ -537,11 +533,11 @@ def decontaminate_ngram_overlap(
     from kinesis_stream_spark.functions.hashing import shingles
 
     probe_grams = (
-        probe.select(F.explode(shingles(F.col(text_col), n)).alias("g")).distinct()
+        probe.select(F.explode(shingles(F.col(text_col), 5)).alias("g")).distinct()
     )
     corpus_grams = corpus.select(
         F.col(id_col),
-        F.explode(shingles(F.col(text_col), n)).alias("g"),  # already distinct
+        F.explode(shingles(F.col(text_col), 5)).alias("g"),  # already distinct
     )
     hit = F.broadcast(probe_grams.withColumn("hit", F.lit(1)))
     return (
@@ -560,31 +556,35 @@ def decontaminate_ngram_overlap(
     )
 
 
+#: hash buckets of the sampling and mixing rules: rates and weights
+#: quantize to 1/1000
+MIX_BUCKETS = 1000
+
+
 def stratified_sample(
     docs: DataFrame,
     rates: dict[str, float],
     *,
     stratum_col: str = "lang",
     id_col: str = "doc_id",
-    default_rate: float = 1.0,
-    buckets: int = 1000,
 ) -> DataFrame:
     """Deterministic per-stratum sampling — the data-mixing primitive
     (e.g. upweight rare languages, downsample boilerplate sources).
 
-    Keep rule: md5(id) mod buckets < rate[stratum] * buckets. Pure
+    Keep rule: md5(id) mod MIX_BUCKETS < rate[stratum] * MIX_BUCKETS; a
+    stratum without a rate keeps every doc. Pure
     map-side filter: reproducible across engines/runs/partitionings,
     stable under appends (a doc's fate never changes when others arrive),
     and auditable (the keep-set is recomputable from the rule alone) —
-    everything df.sample's RNG is not. Rates quantize to 1/buckets.
+    everything df.sample's RNG is not.
     """
-    bucket = md5_int64(F.col(id_col).cast("string")) % buckets
+    bucket = md5_int64(F.col(id_col).cast("string")) % MIX_BUCKETS
     keep = F.lit(False)
     for stratum, rate in sorted(rates.items()):
         keep = F.when(
-            F.col(stratum_col) == stratum, bucket < int(rate * buckets)
+            F.col(stratum_col) == stratum, bucket < int(rate * MIX_BUCKETS)
         ).otherwise(keep)
-    keep = F.coalesce(keep, bucket < int(default_rate * buckets))
+    keep = F.coalesce(keep, bucket < MIX_BUCKETS)
     return docs.where(keep)
 
 
@@ -729,17 +729,17 @@ def sql_rolling_fingerprint(text_expr: str) -> str:
     return f"(CASE WHEN ({text_expr}) IS NULL THEN NULL ELSE {fold} END)"
 
 
-def sql_winnowed_fingerprints(text_expr: str, *, k: int = 3, window: int = 4) -> str:
+def sql_winnowed_fingerprints(text_expr: str) -> str:
     """DuckDB twin of :func:`winnowed_fingerprints`."""
     toks = sql_tokens(text_expr)
-    gram_hash = sql_md5_int64(f"ARRAY_TO_STRING(({toks})[i:i+{k - 1}], ' ')")
+    gram_hash = sql_md5_int64(f"ARRAY_TO_STRING(({toks})[i:i+{WINNOW_K - 1}], ' ')")
     grams = (
         f"[{gram_hash} "
-        f"FOR i IN RANGE(1, GREATEST(LEN({toks}) - {k - 1}, 1) + 1)]"
+        f"FOR i IN RANGE(1, GREATEST(LEN({toks}) - {WINNOW_K - 1}, 1) + 1)]"
     )
     mins = (
-        f"[LIST_MIN(g[j:j+{window - 1}]) "
-        f"FOR j IN RANGE(1, GREATEST(LEN(g) - {window - 1}, 1) + 1)]"
+        f"[LIST_MIN(g[j:j+{WINNOW_WINDOW - 1}]) "
+        f"FOR j IN RANGE(1, GREATEST(LEN(g) - {WINNOW_WINDOW - 1}, 1) + 1)]"
     )
     return f"(SELECT LIST_SORT(LIST_DISTINCT({mins})) FROM (SELECT {grams} AS g) _w)"
 
@@ -821,8 +821,6 @@ def weighted_mixture(
     *,
     stratum_col: str = "source",
     id_col: str = "doc_id",
-    default_weight: float = 1.0,
-    buckets: int = 1000,
 ) -> DataFrame:
     """Source-weighted data mixing WITH up-sampling — the epoch-style
     repeat-factor generalization of :func:`stratified_sample` (which can
@@ -832,28 +830,28 @@ def weighted_mixture(
     specified (sampling proportions per corpus, weights routinely > 1
     for high-quality sources).
 
-    ``n_copies = floor(w) + (md5(id) mod buckets < frac(w)*buckets)``,
+    ``n_copies = floor(w) + (md5(id) mod MIX_BUCKETS < frac(w)*MIX_BUCKETS)``,
     then one ``explode(sequence(1, n_copies))`` emits the copies with a
     ``copy_idx`` so downstream shuffles/packing see distinct rows. Pure
     map + explode: no shuffle, no RNG, append-stable (a doc's copy count
     never changes when other docs arrive), and the realized mix is
-    auditable from the rule alone. Weights quantize to 1/buckets.
+    auditable from the rule alone. A source without a weight has weight 1.
 
     At 100 TB the explode multiplies only the *kept* rows (output-sized
     cost, same as writing the mixed corpus), and rows with n_copies = 0
     are filtered before the explode — a 0.01-weight source never
     materializes 99% dead rows.
     """
-    bucket = md5_int64(F.col(id_col).cast("string")) % buckets
+    bucket = md5_int64(F.col(id_col).cast("string")) % MIX_BUCKETS
+
+    def copies(w: float) -> Column:
+        whole, frac_b = int(w), int(round((w - int(w)) * MIX_BUCKETS))
+        return F.lit(whole) + F.when(bucket < frac_b, 1).otherwise(0)
+
     n_copies = F.lit(None).cast("long")
     for stratum, w in sorted(weights.items()):
-        whole, frac_b = int(w), int(round((w - int(w)) * buckets))
-        cnt = F.lit(whole) + F.when(bucket < frac_b, 1).otherwise(0)
-        n_copies = F.when(F.col(stratum_col) == stratum, cnt).otherwise(n_copies)
-    dwhole, dfrac = int(default_weight), int(round((default_weight - int(default_weight)) * buckets))
-    n_copies = F.coalesce(
-        n_copies, F.lit(dwhole) + F.when(bucket < dfrac, 1).otherwise(0)
-    )
+        n_copies = F.when(F.col(stratum_col) == stratum, copies(w)).otherwise(n_copies)
+    n_copies = F.coalesce(n_copies, copies(1.0))
     return (
         docs.select(id_col, stratum_col, n_copies.alias("n_copies"))
         .where(F.col("n_copies") > 0)
@@ -929,9 +927,6 @@ def leakage_safe_split(
     *,
     id_col: str = "doc_id",
     cluster_col: str = "cluster_id",
-    train_pct: int = 80,
-    val_pct: int = 10,
-    seed: int = 23,
 ) -> DataFrame:
     """Train/val/test assignment that cannot leak duplicates across
     splits: the split decision hashes the CLUSTER id, not the document
@@ -945,7 +940,8 @@ def leakage_safe_split(
     clusters — the operator composes with all of them. Unclustered
     documents (left-join miss) form singleton clusters keyed by their
     own id. The split rule is the same seeded-md5 modulus used across
-    this repo: map-only, reproducible, append-stable.
+    this repo (seed 23; buckets 0–79 train, 80–89 val, 90–99 test):
+    map-only, reproducible, append-stable.
     """
     from kinesis_stream_spark.functions.hashing import md5_int64
 
@@ -953,12 +949,12 @@ def leakage_safe_split(
         F.col(id_col),
         F.coalesce(F.col(cluster_col), F.col(id_col)).alias("cluster_id"),
     )
-    bucket = md5_int64(F.col("cluster_id").cast("string"), seed) % 100
+    bucket = md5_int64(F.col("cluster_id").cast("string"), 23) % 100
     return joined.select(
         id_col,
         "cluster_id",
-        F.when(bucket < train_pct, "train")
-        .when(bucket < train_pct + val_pct, "val")
+        F.when(bucket < 80, "train")
+        .when(bucket < 90, "val")
         .otherwise("test")
         .alias("split"),
     )

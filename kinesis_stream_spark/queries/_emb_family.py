@@ -53,7 +53,7 @@ _EMB_REF = re.compile(r"\bembeddings\b", re.IGNORECASE)
 _EMB_TABLE_POS = re.compile(r"(\b(?:FROM|JOIN)\s+)embeddings\b", re.IGNORECASE)
 
 
-def guard_oracles(oracle: dict, dim: int = DIM) -> dict:
+def guard_oracles(oracle: dict) -> dict:
     """Oracle-side twin of :func:`emb_scan`: every reference to the
     embeddings table reads through the validity filter.
 
@@ -62,7 +62,7 @@ def guard_oracles(oracle: dict, dim: int = DIM) -> dict:
     an oracle mentioning the word anywhere else (string literal, alias,
     comment) fails loudly at registration time instead of being silently
     rewritten into a different query."""
-    subq = f"(SELECT * FROM embeddings WHERE {sql_valid_vector('embedding', dim)})"
+    subq = f"(SELECT * FROM embeddings WHERE {sql_valid_vector('embedding', DIM)})"
     out = {}
     for name, sql in oracle.items():
         guarded, n_table = _EMB_TABLE_POS.subn(lambda m: m.group(1) + subq, sql)

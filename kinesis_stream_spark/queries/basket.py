@@ -86,7 +86,6 @@ from kinesis_stream_spark.operators.basket import sql_item_cosine  # noqa: E402
     sql_item_cosine(
         baskets_cte="SELECT basket AS b, item AS i FROM (" + _BASKETS_CTE + ")",
         min_common=2,
-        top_k=30,
     ),
 )
 def basket_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -101,4 +100,4 @@ def basket_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     baskets = li.join(F.broadcast(p), li.l_partkey == p.p_partkey).select(
         F.col("l_orderkey").alias("basket"), F.col("p_brand").alias("item")
     )
-    return item_cosine(baskets, min_common=2, top_k=30)
+    return item_cosine(baskets, min_common=2)

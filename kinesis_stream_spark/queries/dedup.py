@@ -91,7 +91,7 @@ def _sql_minhash_pipeline(input_cte: str, threshold: float) -> str:
     from kinesis_stream_spark.operators.minhash_sql import sql_minhash_candidate_ctes
 
     return f"""
-    WITH {sql_minhash_candidate_ctes(input_cte, shingle_n=3)}
+    WITH {sql_minhash_candidate_ctes(input_cte)}
     SELECT c.id_a, c.id_b,
            LEN(LIST_INTERSECT(a.sh, b.sh)) / LEN(LIST_DISTINCT(a.sh || b.sh)) AS jaccard
     FROM cands c
@@ -451,7 +451,7 @@ def dedup_pipeline_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    return dedup_pipeline(docs3, threshold=0.5).orderBy("doc_id")
+    return dedup_pipeline(docs3).orderBy("doc_id")
 
 
 # Hot-gram cap for the containment query. 3 is deliberately tight for
@@ -520,7 +520,7 @@ def dedup_containment_prefix_copies(spark: SparkSession, sf_dir: str) -> DataFra
     )
     both = docs.select("lang", "source", "doc_id", "text").unionAll(half)
     return containment_pairs(
-        both, ["lang", "source"], threshold=0.9, n=3, max_df=_CONTAIN_MAX_DF
+        both, ["lang", "source"], threshold=0.9, max_df=_CONTAIN_MAX_DF
     ).orderBy("lang", "source", "id_a", "id_b")
 
 
@@ -822,7 +822,7 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             trunc.alias("text"),
         )
     )
-    return lsh_pair_recall(corpus, ["lang", "source"], threshold=0.5)
+    return lsh_pair_recall(corpus, ["lang", "source"])
 
 # Corrupt-vector guard for the embedding-cosine oracle (twin of the
 # valid_vector filter on the Spark side); the shared helper restricts
@@ -830,7 +830,7 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 from kinesis_stream_spark.queries._emb_family import guard_oracles as _guard
 
 ORACLE["dedup_embedding_cosine_pairs"] = _guard(
-    {"dedup_embedding_cosine_pairs": ORACLE["dedup_embedding_cosine_pairs"]}, 64
+    {"dedup_embedding_cosine_pairs": ORACLE["dedup_embedding_cosine_pairs"]}
 )["dedup_embedding_cosine_pairs"]
 
 
@@ -846,7 +846,6 @@ def dedup_rare_term_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return rare_term_cosine_pairs(
         load_table(spark, sf_dir, "documents"),
-        ngram=3,
         max_df=20,
         min_cosine_ppm=500_000,
         top_k=50,
@@ -858,5 +857,5 @@ from kinesis_stream_spark.operators.dedup import (  # noqa: E402
 )
 
 ORACLE["dedup_rare_term_cosine"] = sql_rare_term_cosine_pairs(
-    ngram=3, max_df=20, min_cosine_ppm=500_000, top_k=50
+    max_df=20, min_cosine_ppm=500_000, top_k=50
 )

@@ -128,7 +128,7 @@ def similarity_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE = guard_oracles(ORACLE, DIM)
+ORACLE = guard_oracles(ORACLE)
 
 
 from kinesis_stream_spark.operators.evaluation import (  # noqa: E402
@@ -154,8 +154,7 @@ ORACLE["similarity_label_inertia"] = guard_oracles(
     {
         "similarity_label_inertia": sql_label_inertia()
         + " ORDER BY label_key"
-    },
-    DIM,
+    }
 )["similarity_label_inertia"]
 
 
@@ -182,8 +181,7 @@ ORACLE["similarity_silhouette"] = guard_oracles(
     {
         "similarity_silhouette": sql_simplified_silhouette()
         + " ORDER BY label_key"
-    },
-    DIM,
+    }
 )["similarity_silhouette"]
 
 
@@ -211,6 +209,5 @@ ORACLE["similarity_centroid_confusion"] = guard_oracles(
     {
         "similarity_centroid_confusion": sql_centroid_confusion()
         + " ORDER BY label_key, assigned_key"
-    },
-    DIM,
+    }
 )["similarity_centroid_confusion"]

@@ -126,7 +126,7 @@ def multimodal_frame_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video frame-sample planning: every 10th frame index + timestamp,
     one row per (media, frame) work unit. sequence+explode, no Python."""
     media = media_from_documents(load_table(spark, sf_dir, "documents"))
-    return frame_sample(media, stride=10).orderBy("media_id", "frame_idx")
+    return frame_sample(media).orderBy("media_id", "frame_idx")
 
 
 @_q(
@@ -239,5 +239,5 @@ def multimodal_payload_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("payload"),
     )
     return payload_near_duplicates(
-        media.unionAll(corrupted), max_hamming=3, blocks=4, n_bytes=4
+        media.unionAll(corrupted)
     ).orderBy("id_a", "id_b")

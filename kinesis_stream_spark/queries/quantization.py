@@ -326,4 +326,4 @@ def similarity_subspace_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return flat.unionAll(rotated).orderBy("space", "sub")
 
 
-ORACLE = guard_oracles(ORACLE, DIM)
+ORACLE = guard_oracles(ORACLE)

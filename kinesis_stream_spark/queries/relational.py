@@ -1450,8 +1450,7 @@ def profile_orders_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct cardinality per column) — the trust-but-verify pass an
     ingestion pipeline runs on every new data drop. One scan, one
     aggregate (the N exact distincts share a single Expand), stack
-    unpivot; the 100 TB variant flips to HLL estimates
-    (operators/profile.py, ``exact=False``)."""
+    unpivot."""
     from kinesis_stream_spark.operators.profile import profile_columns
 
     orders = load_table(spark, sf_dir, "orders")

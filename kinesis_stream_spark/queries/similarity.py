@@ -74,13 +74,12 @@ def similarity_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     return topk_bruteforce(emb, _queries_df(emb), k=K).orderBy("query_id", "rank")
 
 
-def _sql_signature(vec_expr: str, *, num_planes: int = 8) -> str:
+def _sql_signature(vec_expr: str) -> str:
     """DuckDB replay of hyperplane_signature: left-assoc ±1 dot folds."""
-    signs = plane_signs("hp", num_planes, DIM)
     bits = []
-    for p in range(num_planes):
+    for signs in plane_signs(DIM):
         terms = " + ".join(
-            f"CAST({vec_expr}[{i + 1}] AS DOUBLE) * {signs[p][i]:.1f}" for i in range(DIM)
+            f"CAST({vec_expr}[{i + 1}] AS DOUBLE) * {signs[i]:.1f}" for i in range(DIM)
         )
         bits.append(f"CASE WHEN (0.0 + {terms}) >= 0 THEN '1' ELSE '0' END")
     return "CONCAT(" + ", ".join(bits) + ")"
@@ -115,7 +114,7 @@ def similarity_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (≈1/256 of pairs scored), exact cosine re-ranks. The oracle replays
     the same deterministic planes, so approximation error matches exactly."""
     emb = _emb(spark, sf_dir)
-    return topk_lsh(emb, _queries_df(emb), k=K, num_planes=8, dim=DIM).orderBy(
+    return topk_lsh(emb, _queries_df(emb), k=K, dim=DIM).orderBy(
         "query_id", "rank"
     )
 
@@ -225,7 +224,7 @@ def similarity_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
     q = _queries_df(emb)
     exact = topk_bruteforce(emb, q, k=K)
-    approx = topk_lsh(emb, q, k=K, num_planes=8, dim=DIM)
+    approx = topk_lsh(emb, q, k=K, dim=DIM)
     return ann_recall(approx, exact, k=K).orderBy("query_id")
 
 
@@ -465,7 +464,7 @@ def similarity_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _emb(spark, sf_dir)
     return semantic_dedup(
-        emb, kclusters=4, iterations=2, threshold=0.4, dim=DIM
+        emb, threshold=0.4, dim=DIM
     ).orderBy("vec_id")
 
 
@@ -481,7 +480,7 @@ def similarity_topk_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _emb(spark, sf_dir)
     return topk_ivf_trained(
-        emb, _queries_df(emb), k=K, nprobe=2, kclusters=4, iterations=2, dim=DIM
+        emb, _queries_df(emb), k=K, dim=DIM
     ).orderBy("query_id", "rank")
 
 
@@ -567,7 +566,7 @@ def similarity_cluster_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kinesis_stream_spark.operators.similarity import cluster_balance
 
     emb = _emb(spark, sf_dir)
-    return cluster_balance(emb, k=4, dim=DIM, iterations=2).orderBy("cid")
+    return cluster_balance(emb, k=4, dim=DIM).orderBy("cid")
 
 
 
@@ -606,4 +605,4 @@ def similarity_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Corrupt-vector guard, oracle side: every reference to the embeddings
 # table reads through the validity filter (twin of _emb above).
-ORACLE = guard_oracles(ORACLE, DIM)
+ORACLE = guard_oracles(ORACLE)

@@ -75,7 +75,7 @@ def events_gap_fill_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutting training windows. See operators/temporal.py for the scale
     shape (collapse-first, per-key sequence grid, keyed fill window)."""
     ev = load_table(spark, sf_dir, "events")
-    return gap_fill_forward(ev, unit_us=HOUR_US)
+    return gap_fill_forward(ev)
 
 
 @_q("events_linear_interpolation")
@@ -88,16 +88,14 @@ def events_linear_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kinesis_stream_spark.operators.temporal import linear_interpolation
 
     ev = load_table(spark, sf_dir, "events")
-    return linear_interpolation(ev, unit_us=HOUR_US)
+    return linear_interpolation(ev)
 
 
 from kinesis_stream_spark.operators.temporal import (  # noqa: E402
     sql_linear_interpolation,
 )
 
-ORACLE["events_linear_interpolation"] = sql_linear_interpolation(
-    unit_us=HOUR_US
-)
+ORACLE["events_linear_interpolation"] = sql_linear_interpolation()
 
 
 @_q(
@@ -136,7 +134,7 @@ def events_scd2_status_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     status string as tiebreak (deterministic under exact-tie
     timestamps on both engines)."""
     ev = load_table(spark, sf_dir, "events")
-    return scd2_compact(ev, unit_us=DAY_US)
+    return scd2_compact(ev)
 
 
 @_q(
@@ -265,18 +263,6 @@ def events_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return winsorize_stats(load_table(spark, sf_dir, "events")).orderBy("event_type")
 
 
-# The *_approx sketch twins (approx_percentile, Greenwald-Khanna —
-# the documented 100 TB swap) live as the ``approx_accuracy``
-# parameter on the operators themselves (operators/temporal.py:
-# winsorize_stats / mad_outliers / seasonal_residual_outliers), NOT
-# as queries() registrations: the sketch is Spark-specific, so no
-# cross-engine hash can exist, and registering oracle-less entries
-# put `err: no_oracle` rows in the round-9 driver ledger. The exact
-# registrations above carry the hash oracle; tests/test_temporal.py
-# pins exact ≈ approx on the sf0.1 corpus through those same
-# operator entry points.
-
-
 @_q(
     "events_user_diversity",
     """
@@ -348,7 +334,7 @@ def events_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal period sums (operator docstring for the P-bounded pair-join
     scale shape)."""
     ev = load_table(spark, sf_dir, "events")
-    return mann_kendall(ev, unit_us=DAY_US).orderBy("key")
+    return mann_kendall(ev).orderBy("key")
 
 
 @_q(
@@ -381,7 +367,7 @@ def events_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identically in the oracle (operator docstring for the
     bounded-period scale shape)."""
     ev = load_table(spark, sf_dir, "events")
-    return ewma(ev, unit_us=DAY_US).orderBy("key")
+    return ewma(ev).orderBy("key")
 
 
 @_q(
@@ -453,7 +439,7 @@ def events_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     and h = 4·MAD alarm threshold (operator docstring for the
     exactness chain and bounded-fold scale shape)."""
     ev = load_table(spark, sf_dir, "events")
-    return cusum(ev, unit_us=DAY_US).orderBy("key")
+    return cusum(ev).orderBy("key")
 
 
 @_q(
@@ -497,7 +483,7 @@ def events_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     trend-aware EWMA whose 2-state integer fold replays bit-identically
     in the oracle (operator docstring)."""
     ev = load_table(spark, sf_dir, "events")
-    return holt(ev, unit_us=DAY_US).orderBy("key")
+    return holt(ev).orderBy("key")
 
 
 _SESSION_US = 15 * 60 * 1_000_000
@@ -579,7 +565,7 @@ def events_linear_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     moments with pinned-order final divides (operator docstring for
     the grid-bounded centering and the combinable moment shape)."""
     ev = load_table(spark, sf_dir, "events")
-    return linear_trend(ev, unit_us=DAY_US).orderBy("key")
+    return linear_trend(ev).orderBy("key")
 
 
 @_q(
@@ -602,7 +588,7 @@ def events_survival_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct lifetime: at-risk, deaths, censored, and the exact 2^30
     fixed-point survival fold (operator docstring)."""
     ev = load_table(spark, sf_dir, "events")
-    return survival_curve(ev, unit_us=DAY_US).orderBy("t")
+    return survival_curve(ev).orderBy("t")
 
 
 @_q(
@@ -639,7 +625,7 @@ _FUNNEL_STEPS = ["signup", "view", "purchase"]
 
 @_q(
     "events_strict_funnel",
-    sql_strict_funnel(steps=_FUNNEL_STEPS, step_budget_us=DAY_US)
+    sql_strict_funnel(steps=_FUNNEL_STEPS)
     + " ORDER BY step_idx",
 )
 def events_strict_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -648,7 +634,7 @@ def events_strict_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     cohort size and integer-ppm conversion against step 1 (operator
     docstring for the unit-sized join chain)."""
     ev = load_table(spark, sf_dir, "events")
-    return strict_funnel(ev, _FUNNEL_STEPS, step_budget_us=DAY_US).orderBy(
+    return strict_funnel(ev, _FUNNEL_STEPS).orderBy(
         "step_idx"
     )
 
@@ -659,7 +645,7 @@ def events_ohlc_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     struct extrema with (epoch, id) tiebreaks, exact-decimal volume —
     ONE combinable aggregate, no window (operator docstring)."""
     ev = load_table(spark, sf_dir, "events")
-    return ohlc_bars(ev, unit_us=DAY_US).orderBy("key", "bucket")
+    return ohlc_bars(ev).orderBy("key", "bucket")
 
 
 @_q(
@@ -1264,7 +1250,7 @@ def events_seasonal_naive_forecast(
     from kinesis_stream_spark.operators.temporal import seasonal_naive
 
     ev = load_table(spark, sf_dir, "events")
-    return seasonal_naive(ev, unit_us=DAY_US, season=7).orderBy("key")
+    return seasonal_naive(ev, season=7).orderBy("key")
 
 
 from kinesis_stream_spark.operators.temporal import (  # noqa: E402
@@ -1272,7 +1258,7 @@ from kinesis_stream_spark.operators.temporal import (  # noqa: E402
 )
 
 ORACLE["events_seasonal_naive_forecast"] = (
-    sql_seasonal_naive(unit_us=DAY_US, season=7) + " ORDER BY key"
+    sql_seasonal_naive(season=7) + " ORDER BY key"
 )
 
 
@@ -1286,7 +1272,7 @@ def events_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kinesis_stream_spark.operators.temporal import rolling_distinct
 
     ev = load_table(spark, sf_dir, "events")
-    return rolling_distinct(ev, unit_us=DAY_US, window=7).orderBy(
+    return rolling_distinct(ev, window=7).orderBy(
         "day_bucket"
     )
 
@@ -1296,5 +1282,5 @@ from kinesis_stream_spark.operators.temporal import (  # noqa: E402
 )
 
 ORACLE["events_rolling_distinct"] = (
-    sql_rolling_distinct(unit_us=DAY_US, window=7) + " ORDER BY day_bucket"
+    sql_rolling_distinct(window=7) + " ORDER BY day_bucket"
 )

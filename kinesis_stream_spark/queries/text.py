@@ -211,7 +211,7 @@ def text_top_terms_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Collection-frequency top-5 terms per language with document
     frequency (integer-only tf/df — no idf log, so cross-engine exact)."""
     docs = load_table(spark, sf_dir, "documents")
-    return term_stats_topk(docs, group_col="lang", top_k=5, min_df=2).orderBy("lang", "rank")
+    return term_stats_topk(docs, group_col="lang").orderBy("lang", "rank")
 
 
 def _sql_curation_pipeline(threshold: float = 0.65) -> str:
@@ -353,7 +353,7 @@ def text_decontaminate_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     probe = docs.where(F.col("doc_id") < _PROBE_MAX_ID)
     corpus = docs.where(F.col("doc_id") >= _PROBE_MAX_ID)
-    return decontaminate_ngram_overlap(corpus, probe, n=5).orderBy("doc_id")
+    return decontaminate_ngram_overlap(corpus, probe).orderBy("doc_id")
 
 
 _MIX_RATES = {"de": 0.25, "en": 0.5, "es": 0.1, "fr": 0.75, "zh": 1.0}
@@ -559,7 +559,7 @@ def text_boilerplate_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kinesis_stream_spark.operators.text import boilerplate_fraction
 
     docs = load_table(spark, sf_dir, "documents")
-    return boilerplate_fraction(docs, n=3, df_threshold=5).orderBy("doc_id")
+    return boilerplate_fraction(docs).orderBy("doc_id")
 
 
 @_q(

@@ -359,14 +359,22 @@ def write_durably(path: str, text: str) -> None:
         os.close(dir_fd)
 
 
+def _is_restart(checkpoint_location: str) -> bool:
+    """Whether a start at ``checkpoint_location`` resumes an app rather
+    than begins a new one: Spark's offset log there has an entry. Spark
+    writes a batch's offset entry before the batch runs, so every app
+    that began a batch has one; a deleted or fresh checkpoint does not.
+    State kept next to the checkpoint counts only on a restart."""
+    offsets = os.path.join(checkpoint_location, "offsets")
+    return os.path.isdir(offsets) and bool(os.listdir(offsets))
+
+
 def _latest_cutoff(checkpoint_location: str) -> dt.datetime:
     """The LATEST cutoff of the app at ``checkpoint_location``: the time
-    of its first start, persisted next to the checkpoint. It is reused
-    only while Spark's offset log exists — a fresh checkpoint is a new
-    app and gets a new cutoff."""
+    of its first start, persisted next to the checkpoint and reused on
+    a restart (:func:`_is_restart`) — a new app gets a new cutoff."""
     path = checkpoint_location + "_latest_cutoff"
-    offsets = os.path.join(checkpoint_location, "offsets")
-    if os.path.exists(path) and os.path.isdir(offsets) and os.listdir(offsets):
+    if os.path.exists(path) and _is_restart(checkpoint_location):
         with open(path) as f:
             return dt.datetime.fromisoformat(f.read())
     cutoff = dt.datetime.now(dt.timezone.utc)

@@ -24,6 +24,7 @@ process), and only the acks and checkpoints wait for both.
 from __future__ import annotations
 
 import os
+import shutil
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 
@@ -32,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kinesis_stream_spark.checkpoint import CheckpointTracker, SequenceNumber
-from kinesis_stream_spark.streaming.consumer import ConsumerConfig, write_durably
+from kinesis_stream_spark.streaming.consumer import ConsumerConfig, _is_restart, write_durably
 from kinesis_stream_spark.streaming.errors import checkpoint_with_taxonomy
 
 BatchFn = Callable[[DataFrame, int], None]
@@ -123,8 +124,11 @@ def run_at_most_once(
 ):
     """source → commit → process (`README.md:42`): progress is persisted
     BEFORE side effects, so a replayed batch is skipped, not re-run. Loss
-    is possible (crash mid-batch), duplicates are not."""
+    is possible (crash mid-batch), duplicates are not. The batch markers
+    count only on a restart; a new app at the same location clears them."""
     marker_dir = config.checkpoint_location + "_committed"
+    if not _is_restart(config.checkpoint_location):
+        shutil.rmtree(marker_dir, ignore_errors=True)
     os.makedirs(marker_dir, exist_ok=True)
 
     def guarded(df: DataFrame, batch_id: int) -> None:

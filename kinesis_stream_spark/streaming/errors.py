@@ -29,7 +29,6 @@ from __future__ import annotations
 import enum
 import logging
 import threading
-import time
 from collections.abc import Callable
 
 # raised by the tracker when a checkpoint call overruns its timeout
@@ -97,44 +96,30 @@ def checkpoint_with_taxonomy(
     shard_id: str,
     *,
     on_stop_shard: Callable[[str], None] | None = None,
-    max_transient_retries: int = 0,
-    backoff_s: float = 0.0,
-    sleep: Callable[[float], None] = time.sleep,
 ) -> bool:
     """Run a checkpoint attempt under the reference's error taxonomy.
 
     Returns ``True`` if the shard should keep processing, ``False`` if it
     must stop (lease lost). Fatal errors propagate to the caller — inside
     ``foreachBatch`` that fails the micro-batch and hence the query, which
-    is the kill-switch path.
-
-    ``max_transient_retries`` generalizes the reference's log-and-continue
-    for transient errors: retry the checkpoint up to N times with linear
-    backoff before giving up for this cycle (the reference retries on the
-    next record batch instead; N=0 reproduces that exactly).
+    is the kill-switch path. A transient error is logged and the shard
+    continues; the next batch's checkpoint retries, as in the reference.
     """
-    attempt = 0
-    while True:
-        try:
-            checkpoint_call()
-            return True
-        except BaseException as exc:  # noqa: BLE001 — taxonomy decides
-            disp = classify(exc)
-            if disp is Disposition.CONTINUE:
-                log.error("transient checkpoint failure on %s: %r", shard_id, exc)
-                if attempt < max_transient_retries:
-                    attempt += 1
-                    if backoff_s:
-                        sleep(backoff_s * attempt)
-                    continue
-                return True  # give up for THIS cycle; next batch retries
-            if disp is Disposition.STOP_SHARD:
-                log.error("lease lost on %s; stopping shard: %r", shard_id, exc)
-                if on_stop_shard is not None:
-                    on_stop_shard(shard_id)
-                return False
-            log.error("fatal checkpoint failure on %s: %r", shard_id, exc)
-            raise
+    try:
+        checkpoint_call()
+        return True
+    except BaseException as exc:  # noqa: BLE001 — taxonomy decides
+        disp = classify(exc)
+        if disp is Disposition.CONTINUE:
+            log.error("transient checkpoint failure on %s: %r", shard_id, exc)
+            return True  # next batch retries
+        if disp is Disposition.STOP_SHARD:
+            log.error("lease lost on %s; stopping shard: %r", shard_id, exc)
+            if on_stop_shard is not None:
+                on_stop_shard(shard_id)
+            return False
+        log.error("fatal checkpoint failure on %s: %r", shard_id, exc)
+        raise
 
 
 # --- kill switch + termination watch -----------------------------------------

@@ -140,7 +140,7 @@ class TestRareTermCosine:
             "doc_id long, text string",
         )
         out = rare_term_cosine_pairs(
-            docs, ngram=3, max_df=2, min_cosine_ppm=100_000, top_k=10
+            docs, max_df=2, min_cosine_ppm=100_000, top_k=10
         ).collect()
         pairs = {(r["id_a"], r["id_b"]): r for r in out}
         assert (1, 2) in pairs
@@ -160,7 +160,7 @@ class TestRareTermCosine:
         )
         assert (
             rare_term_cosine_pairs(
-                docs, ngram=3, max_df=3, min_cosine_ppm=100_000
+                docs, max_df=3, min_cosine_ppm=100_000
             ).count()
             == 0
         )
@@ -179,7 +179,7 @@ class TestRareTermCosine:
             "doc_id long, text string",
         )
         out = rare_term_cosine_pairs(
-            docs, ngram=3, max_df=5, min_cosine_ppm=100_000, top_k=10
+            docs, max_df=5, min_cosine_ppm=100_000, top_k=10
         ).collect()
         pairs = {(r["id_a"], r["id_b"]): r for r in out}
         assert pairs[(1, 2)]["dot"] == 4

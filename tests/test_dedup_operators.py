@@ -371,7 +371,7 @@ def test_lsh_pair_recall_counts_on_known_corpus(spark):
         ],
         "doc_id int, grp string, text string",
     )
-    row = lsh_pair_recall(docs, ["grp"], threshold=0.5).collect()[0]
+    row = lsh_pair_recall(docs, ["grp"]).collect()[0]
     assert row.n_truth == 1 and row.n_matched == 1
     assert row.recall == 1.0
     assert row.n_candidates >= 1 and 0 < row.precision <= 1.0

@@ -49,20 +49,6 @@ def test_transient_logs_and_continues():
     assert checkpoint_with_taxonomy(boom, "shard-1") is True
 
 
-def test_transient_retry_then_success():
-    calls = {"n": 0}
-
-    def flaky():
-        calls["n"] += 1
-        if calls["n"] < 3:
-            raise ThrottlingError()
-
-    ok = checkpoint_with_taxonomy(
-        flaky, "shard-1", max_transient_retries=5, backoff_s=0.01, sleep=lambda s: None
-    )
-    assert ok is True and calls["n"] == 3
-
-
 def test_shutdown_stops_shard_only():
     # `RecordProcessorImpl.scala:141-143`: lease lost → stop THIS shard
     stopped = []

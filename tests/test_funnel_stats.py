@@ -13,7 +13,6 @@ import pytest
 
 from kinesis_stream_spark.operators.profile import chisq_independence
 from kinesis_stream_spark.operators.temporal import (
-    DAY_US,
     lead_lag_correlation,
     strict_funnel,
 )
@@ -45,7 +44,6 @@ def test_strict_funnel_budget_and_order(spark):
         r.step_idx: r
         for r in strict_funnel(
             _ev(spark, rows), ["signup", "view", "purchase"],
-            step_budget_us=DAY_US,
         ).collect()
     }
     assert got[1].n_units == 3 and got[1].conversion_ppm == 1_000_000
@@ -71,7 +69,6 @@ def test_strict_funnel_earliest_binding_is_greedy(spark):
         r.step_idx: r.n_units
         for r in strict_funnel(
             _ev(spark, rows), ["signup", "view", "purchase"],
-            step_budget_us=DAY_US,
         ).collect()
     }
     assert got == {1: 1, 2: 1, 3: 0}

@@ -370,7 +370,7 @@ def test_gap_fill_vs_python_replay(spark):
     out = {
         (r.key, r.bucket): (r.n_events, r.is_gap, round(r.filled_sum, 6))
         for r in gap_fill_forward(
-            ev, key_col="key", ts_col="ts", value_col="value", unit_us=HOUR_US
+            ev, key_col="key", ts_col="ts", value_col="value"
         ).collect()
     }
     assert out == expect

@@ -4,7 +4,7 @@ identical results (the two paths share exact fixed-point arithmetic)."""
 
 from __future__ import annotations
 
-from kinesis_stream_spark.operators.similarity import cosine_pairs
+from kinesis_stream_spark.operators.similarity import _cosine_pairs_jvm, cosine_pairs
 
 
 def _emb(spark):
@@ -33,7 +33,9 @@ def test_forced_large_group_falls_back_and_matches(spark):
     guarded = cosine_pairs(
         emb, group_cols=["grp"], threshold=0.1, max_group_vectorized=3
     )
-    jvm = cosine_pairs(emb, group_cols=["grp"], threshold=0.1, vectorized=False)
+    jvm = _cosine_pairs_jvm(
+        emb, group_cols=["grp"], threshold=0.1, id_col="vec_id", vec_col="embedding"
+    )
     vec = cosine_pairs(emb, group_cols=["grp"], threshold=0.1)  # guard not hit
     got = _collect(guarded)
     assert got == _collect(jvm) == _collect(vec)
@@ -46,7 +48,9 @@ def test_guard_zero_routes_everything_to_jvm(spark):
     guarded = cosine_pairs(
         emb, group_cols=["grp"], threshold=0.1, max_group_vectorized=0
     )
-    jvm = cosine_pairs(emb, group_cols=["grp"], threshold=0.1, vectorized=False)
+    jvm = _cosine_pairs_jvm(
+        emb, group_cols=["grp"], threshold=0.1, id_col="vec_id", vec_col="embedding"
+    )
     assert _collect(guarded) == _collect(jvm)
 
 

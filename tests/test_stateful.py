@@ -9,7 +9,6 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from kinesis_stream_spark.operators.multimodal import decode_features, media_from_documents
 from kinesis_stream_spark.sources.batch import load_table
 from kinesis_stream_spark.streaming.stateful import high_watermark_tracker, running_totals
 
@@ -98,14 +97,6 @@ def test_high_watermark_tracker_fills_gaps(spark, tmp_path):
     # landed in one batch, which maxFilesPerTrigger=1 prevents)
     s1_rows = [(r.checkpointable, r.n_pending) for r in rows if r.shard_id == "s1"]
     assert (1, 2) in s1_rows
-
-
-def test_decode_features_real_path_is_stubbed(spark, sf_dir):
-    """The real-codec path is explicitly unimplemented (no codec libs in
-    this environment) — the gate is a loud error, not a silent fake."""
-    media = media_from_documents(load_table(spark, sf_dir, "documents"))
-    with pytest.raises(NotImplementedError):
-        decode_features(media, real_decode=True)
 
 
 def _has_protobuf() -> bool:

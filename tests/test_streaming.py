@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import shutil
 import stat
 import threading
 import time
@@ -355,6 +356,22 @@ def test_at_most_once_marker_is_durable_before_the_batch_runs(
     assert batches, events
     for i in batches:
         assert events[i - 2 : i] == ["file", "dir"], events
+
+
+def test_at_most_once_fresh_checkpoint_ignores_stale_markers(spark, stream_dir, tmp_path):
+    """A deleted checkpoint is a new app: its batches run even though the
+    old app's markers (``<checkpoint>_committed``) name the same ids."""
+    cfg = _config(stream_dir, tmp_path)
+    rows = spark.read.schema(RECORD_SCHEMA).parquet(stream_dir).count()
+    first: list[int] = []
+    q = run_at_most_once(source(spark, cfg), cfg, lambda df, bid: first.append(df.count()))
+    q.awaitTermination(120)
+    assert sum(first) == rows
+    shutil.rmtree(cfg.checkpoint_location)  # reset the app; its markers stay behind
+    again: list[int] = []
+    q2 = run_at_most_once(source(spark, cfg), cfg, lambda df, bid: again.append(df.count()))
+    q2.awaitTermination(120)
+    assert sum(again) == rows
 
 
 def test_foreach_batch_commit_flow_acks_every_shard(spark, stream_dir, tmp_path):

@@ -78,8 +78,7 @@ def test_guard_oracles_rewrites_table_positions():
         {
             "q": "SELECT a FROM embeddings e JOIN embeddings f ON e.id = f.id",
             "q2": "WITH c AS (SELECT * from embeddings) SELECT * FROM c",
-        },
-        DIM,
+        }
     )
     assert out["q"].count("SELECT * FROM embeddings WHERE") == 2
     assert "from (SELECT * FROM embeddings WHERE" in out["q2"]
@@ -87,6 +86,6 @@ def test_guard_oracles_rewrites_table_positions():
 
 def test_guard_oracles_fails_loudly_on_non_table_reference():
     with pytest.raises(ValueError, match="outside FROM/JOIN"):
-        guard_oracles({"bad": "SELECT 'embeddings' AS label FROM t"}, DIM)
+        guard_oracles({"bad": "SELECT 'embeddings' AS label FROM t"})
     with pytest.raises(ValueError, match="outside FROM/JOIN"):
-        guard_oracles({"bad": "SELECT embeddings.vec_id FROM embeddings"}, DIM)
+        guard_oracles({"bad": "SELECT embeddings.vec_id FROM embeddings"})
