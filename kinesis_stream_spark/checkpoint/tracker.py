@@ -20,19 +20,33 @@ Semantics preserved 1:1 from the reference (file:line cites are into
 - defaults: buffer 10_000, duration 60 s (`CheckpointTracker.scala:142-147`,
   `reference.conf:15-18`).
 
-This is a deliberately dependency-free, synchronous re-expression: the
-reference serializes mutations through a per-shard actor; here each shard
-tracker is single-owner state guarded by a lock (Spark partitions are
-single-threaded per task, the lock only matters for foreachBatch fan-in).
+This is a deliberately dependency-free, synchronous re-expression of the
+actor. As in the reference, an ack is a message: ``process`` appends it
+to the shard's inbox (a ``deque``), and the contiguous-prefix state
+changes only when the tracker reads its mailbox. Every call that reads
+the processed set (``checkpoint_if_needed`` once it is due or forced,
+``checkpointable``, ``is_complete``, ``snapshot``, ``watch_completion``)
+first drains the inbox under the shard lock, dropping acks at or below
+``last_checkpoint`` (`:35-37`). As messages queue in the actor's
+mailbox behind a slow checkpoint, acks sent during a checkpointer call
+wait in the inbox and are applied by the next read; the sender never
+waits for it.
 
-Cost model: every public call takes the shard lock exactly once; an ack
-(``process``) is O(1), plus an O(tracked) completeness check while a
-completion watcher waits; a checkpoint costs O(1) plus O(1) amortized
-per committed number, since the prefix scan stops at the first gap and
-each number is scanned into one commit and released once. The
-per-element scan and release run in C (``takewhile``,
-``set.difference_update``). The lock is re-entrant because watcher
-callbacks run under it and may call back into the tracker.
+Cost model: an ack is an O(1) append that takes no lock, unless a
+completion watcher waits: then the ack drains the inbox under the lock
+and runs an O(tracked) completeness check. A drain costs O(1) per ack,
+in C (``popleft`` through ``starmap``, ``filter``, ``set.update``).
+``track`` drains once the inbox holds more than ``max_buffer_size``
+acks, which bounds it. A checkpoint costs O(1) plus O(1) amortized per
+committed number, since the prefix scan stops at the first gap and each
+number is scanned into one commit and released once; the scan and
+release run in C too (``takewhile``, ``set.difference_update``). The
+lock covers reads, checkpoints and the rare watcher wake; it is
+re-entrant because watcher callbacks run under it and may call back
+into the tracker. Only a drain pops the inbox, always under the lock,
+and producers only append, so a drain of the ``len(inbox)`` acks it saw
+is safe against concurrent acks, also without a global interpreter
+lock.
 """
 
 from __future__ import annotations
@@ -126,6 +140,8 @@ class ShardCheckpointTracker:
         self._lock = threading.RLock()
         self._tracked: deque[SequenceNumber] = deque()
         self._processed: set[SequenceNumber] = set()
+        # acks not yet applied to ``_processed``; only ``_drain`` pops it
+        self._inbox: deque[SequenceNumber] = deque()
         self._last_checkpoint: SequenceNumber | None = None
         self._last_checkpoint_time: float = clock()
         self._watchers: list[Callable[[BaseException | None], None]] = []
@@ -152,31 +168,29 @@ class ShardCheckpointTracker:
         with self._lock:
             if not self._active:
                 raise self._inactive()
+            if len(self._inbox) > self.config.max_buffer_size:
+                self._drain()
             n = len(self._tracked)
             self._tracked.extend(seqs)
             return len(self._tracked) - n
 
     def process(self, seq: SequenceNumber) -> None:
         """Mark one sequence number processed (the ``markProcessed`` ack,
-        `Record.scala:33-34`). Acks at/below the last checkpoint are
-        ignored — they were already durably committed (`:35-37`)."""
-        with self._lock:
-            if not self._active:
-                raise self._inactive()
-            last = self._last_checkpoint
-            if last is not None and seq <= last:
-                return
-            self._processed.add(seq)
-            # only an ack can complete the shard (a checkpoint releases
-            # processed numbers alone), so watchers are woken here
-            if self._watchers and self._complete():
-                watchers, self._watchers = self._watchers, []
-                for w in watchers:
-                    w(None)
+        `Record.scala:33-34`): post it to the shard's inbox. Acks at/below
+        the last checkpoint are dropped when the inbox is drained — they
+        were already durably committed (`:35-37`)."""
+        if not self._active:
+            raise self._inactive()
+        self._inbox.append(seq)
+        # only an ack can complete the shard (a checkpoint releases
+        # processed numbers alone), so a waiting watcher is woken here
+        if self._watchers:
+            self._wake_watchers()
 
     def checkpointable(self) -> list[SequenceNumber]:
         """Longest processed prefix of the tracked queue (`:86`)."""
         with self._lock:
+            self._drain()
             return self._prefix()
 
     def should_checkpoint(self) -> bool:
@@ -196,12 +210,14 @@ class ShardCheckpointTracker:
 
         A ``checkpointer`` call that raises, or that overruns
         ``config.timeout_s`` on the tracker's clock
-        (:class:`CheckpointTimeoutError`), leaves the state untouched."""
+        (:class:`CheckpointTimeoutError`), commits nothing: the state is as
+        if every ack sent before the call had been applied."""
         with self._lock:
             if not self._active:
                 raise self._inactive()
             if not (force or self._due()):
                 return None
+            self._drain()
             prefix = self._prefix()
             if not prefix:
                 # force with a gap at the head still checkpoints nothing
@@ -231,6 +247,7 @@ class ShardCheckpointTracker:
     def is_complete(self) -> bool:
         """Nothing in flight (`ShardCheckpointTrackerActor.scala:111`)."""
         with self._lock:
+            self._drain()
             return self._complete()
 
     def snapshot(self) -> ShardSnapshot:
@@ -238,6 +255,7 @@ class ShardCheckpointTracker:
         the actor's ``Get``). ``pending`` counts acks held beyond the
         checkpointable prefix: behind a gap, or not yet tracked."""
         with self._lock:
+            self._drain()
             return ShardSnapshot(
                 tracked=len(self._tracked),
                 pending=len(self._processed) - len(self._prefix()),
@@ -250,10 +268,10 @@ class ShardCheckpointTracker:
         or ``callback(ShutdownException(...))`` if shut down first. Fires
         immediately if already complete."""
         with self._lock:
-            if self._complete():
-                callback(None)
-                return
+            # registered before the drain: an ack that lands after the
+            # drain sees the watcher and wakes it
             self._watchers.append(callback)
+            self._wake_watchers()
 
     def wait_for_completion(self, timeout_s: float | None = None) -> None:
         """Blocking drain (the façade's ``watchCompletion`` +
@@ -285,9 +303,26 @@ class ShardCheckpointTracker:
         for w in watchers:
             w(err)
 
-    # -- internals: callers hold the lock ---------------------------------------
+    # -- internals: callers hold the lock (_wake_watchers takes it) -----------
     def _inactive(self) -> TrackerInactiveError:
         return TrackerInactiveError(f"tracker for shard {self.shard_id} is inactive")
+
+    def _drain(self) -> None:
+        """Apply the acks in the inbox: ``len(inbox)`` poplefts in C,
+        dropping acks at or below the last checkpoint."""
+        inbox = self._inbox
+        acks = starmap(inbox.popleft, repeat((), len(inbox)))
+        last = self._last_checkpoint
+        self._processed.update(acks if last is None else filter(last.__lt__, acks))
+
+    def _wake_watchers(self) -> None:
+        """Apply the inbox; if the shard is complete, fire every watcher."""
+        with self._lock:
+            self._drain()
+            if self._watchers and self._complete():
+                watchers, self._watchers = self._watchers, []
+                for w in watchers:
+                    w(None)
 
     def _due(self) -> bool:
         return (
@@ -344,7 +379,10 @@ class CheckpointTracker:
         tracker = self._shards.get(shard_id)
         if tracker is None or not tracker._active:
             return  # benign: ack for a shard whose lease is gone
-        tracker.process(seq)
+        # ShardCheckpointTracker.process inlined: this is the per-record path
+        tracker._inbox.append(seq)
+        if tracker._watchers:
+            tracker._wake_watchers()
 
     def checkpoint_if_needed(
         self,

@@ -846,6 +846,8 @@ def weighted_mixture(
 
     def copies(w: float) -> Column:
         whole, frac_b = int(w), int(round((w - int(w)) * MIX_BUCKETS))
+        if frac_b == 0:  # the bucket is never negative: no extra copy
+            return F.lit(whole)
         return F.lit(whole) + F.when(bucket < frac_b, 1).otherwise(0)
 
     n_copies = F.lit(None).cast("long")

@@ -216,10 +216,12 @@ def foreach_batch_commit_flow(
     ``parallelism`` is the commitFlow knob (`CommitGraphStages.scala:16`:
     ``mapAsync(parallelism)`` over acks, default 1): the per-shard
     ack+checkpoint cycles run on a bounded thread pool of that size.
-    The tracker is lock-guarded, each shard's cycle is independent, and
-    the taxonomy is applied per shard — a fatal error in any shard's
-    cycle propagates after all cycles settle (first fatal wins,
-    matching the kill-switch's first-cause semantics).
+    An ack posts to its shard's inbox without a lock, and a checkpoint
+    applies its own shard's acks under that shard's lock, so each
+    shard's cycle is independent. The taxonomy is applied per shard — a
+    fatal error in any shard's cycle propagates after all cycles settle
+    (first fatal wins, matching the kill-switch's first-cause
+    semantics).
     """
 
     def run(df: DataFrame, batch_id: int) -> None:

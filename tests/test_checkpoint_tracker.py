@@ -206,6 +206,19 @@ def test_late_duplicate_acks_below_last_checkpoint_ignored(clock):
     t.process(SequenceNumber(1))  # re-ack after checkpoint: dropped
     t.track(sq(2, 3))
     assert t.checkpointable() == []  # the stale re-ack didn't leak into state
+    # late and duplicate acks never count as pending, and a drain leaves
+    # no number at or below the checkpoint
+    for s in sq(1, 3, 1, 3):
+        t.process(s)
+    assert t.snapshot()[:3] == (2, 1, SequenceNumber(1))
+    assert t._processed == {SequenceNumber(3)}
+    for s in sq(2, 2):  # queued before the checkpoint, repeated after it
+        t.process(s)
+    assert t.checkpoint_if_needed(cp) == SequenceNumber(3)
+    for s in sq(1, 2, 3, 3):
+        t.process(s)
+    assert t.snapshot()[:3] == (0, 0, SequenceNumber(3))
+    assert t._processed == set() and not t._inbox
 
 
 def test_sub_sequence_ordering(clock):
@@ -219,19 +232,25 @@ def test_sub_sequence_ordering(clock):
 
 
 def test_failed_checkpointer_leaves_state_intact(clock):
-    # actor replies Failure without mutating state
+    # actor replies Failure without mutating state; the acks drained for
+    # the failed call stay applied, so the retry commits the same number
     t = make(clock, buffer=1)
-    t.track(sq(1))
-    t.process(SequenceNumber(1))
+    t.track(sq(1, 2, 3))
+    for s in sq(2, 1):
+        t.process(s)
+    calls: list[SequenceNumber] = []
 
     def boom(seq: SequenceNumber) -> None:
+        calls.append(seq)
         raise IOError("throttled")
 
     with pytest.raises(IOError):
         t.checkpoint_if_needed(boom)
-    assert t.tracked == tuple(sq(1))
+    assert t.tracked == tuple(sq(1, 2, 3)) and t.last_checkpoint is None
+    assert t._processed == set(sq(1, 2)) and not t._inbox
     cp = RecordingCheckpointer()
-    assert t.checkpoint_if_needed(cp) == SequenceNumber(1)  # retry succeeds
+    assert t.checkpoint_if_needed(cp) == SequenceNumber(2)  # retry succeeds
+    assert calls == cp.calls == sq(2)
 
 
 def test_checkpoint_overrunning_timeout_is_fatal_and_leaves_state(clock):
@@ -412,6 +431,186 @@ def test_watcher_racing_the_completing_ack_is_never_lost():
     finally:
         sys.setswitchinterval(switch)
     assert fired == [[None]] * rounds
+
+
+# --- the mailbox: acks are posted, and applied when a read drains them ------
+
+
+def test_ack_during_a_blocked_checkpoint_returns_at_once():
+    """An ack sent while a checkpointer blocks does not wait for it: it
+    queues in the inbox, as a message queues in the actor's mailbox, and
+    the next read applies it."""
+    t = ShardCheckpointTracker("shard-b", CheckpointConfig(max_buffer_size=1))
+    t.track(sq(1, 2))
+    t.process(SequenceNumber(1))
+    entered, release, acked = threading.Event(), threading.Event(), threading.Event()
+
+    def blocking(seq: SequenceNumber) -> None:
+        entered.set()
+        release.wait(timeout=60.0)
+
+    def ack() -> None:
+        t.process(SequenceNumber(2))
+        acked.set()
+
+    commit = threading.Thread(target=t.checkpoint_if_needed, args=(blocking,), daemon=True)
+    acker = threading.Thread(target=ack, daemon=True)
+    commit.start()
+    try:
+        assert entered.wait(timeout=60.0)
+        acker.start()
+        assert acked.wait(timeout=5.0), "the ack waited for the checkpointer"
+    finally:
+        release.set()
+        commit.join(timeout=60.0)
+        acker.join(timeout=60.0)
+    assert not commit.is_alive() and not acker.is_alive()
+    assert t.last_checkpoint == SequenceNumber(1)
+    assert t.checkpoint(RecordingCheckpointer()) == SequenceNumber(2)
+
+
+def _contiguous_end(seqs: list[int], acked: set[int]) -> int | None:
+    """The model: the last number of the longest fully acked run."""
+    end = None
+    for s in seqs:
+        if s not in acked:
+            break
+        end = s
+    return end
+
+
+def test_concurrent_acks_checkpoints_and_snapshots_match_the_model():
+    """Four threads ack a shuffled schedule, with stragglers, duplicates
+    and late acks, while a fifth checkpoints and snapshots without pause.
+    A commit made mid-round may land anywhere between the model's
+    checkpoint before and after the round; once the round's acks have all
+    returned, a forced checkpoint and a snapshot must equal the model's,
+    and at the end no ack is lost."""
+    rounds, per_round, n_ackers = 20, 300, 4
+    rng = random.Random(3)
+    t = ShardCheckpointTracker("shard-m", CheckpointConfig(max_buffer_size=10**9))
+    commits: list[SequenceNumber] = []
+    seqs: list[int] = []
+    acked: set[int] = set()
+    last: int | None = None
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for r in range(rounds):
+            batch = list(range(r * per_round, (r + 1) * per_round))
+            t.track(sq(*batch))
+            seqs.extend(batch)
+            unacked = [s for s in seqs if s not in acked]
+            # about 2% of the open numbers straggle into a later round
+            fresh = [s for s in unacked if rng.random() >= 0.02 or r == rounds - 1]
+            repeats = rng.sample(sorted(acked), min(len(acked), 30))  # late or duplicate
+            schedule = fresh + repeats + rng.sample(fresh, min(len(fresh), 10))
+            rng.shuffle(schedule)
+            ceiling = _contiguous_end(seqs, acked | set(fresh))
+            running = threading.Event()
+            running.set()
+            seen: list[int] = []
+
+            def reads() -> None:
+                while running.is_set():
+                    t.snapshot()
+                    got = t.checkpoint_if_needed(commits.append, force=True)
+                    if got is not None:
+                        seen.append(got.seq)
+
+            def ack(part: list[int]) -> None:
+                for s in part:
+                    t.process(SequenceNumber(s))
+
+            reader = threading.Thread(target=reads, daemon=True)
+            ackers = [
+                threading.Thread(target=ack, args=(schedule[i::n_ackers],), daemon=True)
+                for i in range(n_ackers)
+            ]
+            for thread in (reader, *ackers):
+                thread.start()
+            for a in ackers:
+                a.join(timeout=60.0)
+                assert not a.is_alive()
+            running.clear()
+            reader.join(timeout=60.0)
+            assert not reader.is_alive()
+            assert all((last if last is not None else -1) < c <= ceiling for c in seen)
+            acked |= set(fresh)
+            last = _contiguous_end(seqs, acked)
+            t.checkpoint_if_needed(commits.append, force=True)
+            assert t.last_checkpoint == (None if last is None else SequenceNumber(last))
+            assert t.snapshot()[:3] == (
+                len(seqs) - (0 if last is None else last + 1),
+                sum(1 for s in acked if last is None or s > last),
+                t.last_checkpoint,
+            )
+    finally:
+        sys.setswitchinterval(switch)
+    assert commits == sorted(set(commits)) and commits[-1] == SequenceNumber(seqs[-1])
+    assert t.tracked == () and t._processed == set() and not t._inbox
+
+
+def test_watcher_registered_while_acks_race_in_fires_exactly_once():
+    """The watcher registers while four threads ack the shard; whichever
+    drain applies the completing ack, the watcher fires once."""
+    rounds, n, n_ackers = 40, 300, 4
+    rng = random.Random(5)
+    fired: list[list[BaseException | None]] = []
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for _ in range(rounds):
+            seqs = sq(*range(n))
+            t = ShardCheckpointTracker("shard-w")
+            t.track(seqs)
+            order = seqs[:]
+            rng.shuffle(order)
+            calls: list[BaseException | None] = []
+            fired.append(calls)
+            go = threading.Barrier(n_ackers + 1, timeout=60.0)
+
+            def register() -> None:
+                go.wait()
+                t.watch_completion(calls.append)
+
+            def ack(part: list[SequenceNumber]) -> None:
+                go.wait()
+                for s in part:
+                    t.process(s)
+
+            threads = [threading.Thread(target=register, daemon=True)] + [
+                threading.Thread(target=ack, args=(order[i::n_ackers],), daemon=True)
+                for i in range(n_ackers)
+            ]
+            for thread in threads:
+                thread.start()
+            for thread in threads:
+                thread.join(timeout=60.0)
+                assert not thread.is_alive()
+    finally:
+        sys.setswitchinterval(switch)
+    assert fired == [[None]] * rounds
+
+
+def test_inbox_bound_holds_under_duplicate_acks():
+    """``track`` drains an inbox holding more than ``max_buffer_size``
+    acks, so 100k duplicate acks never pile up between two tracks."""
+    bound, every = 1_000, 100
+    t = ShardCheckpointTracker("shard-f", CheckpointConfig(max_buffer_size=bound))
+    t.track(sq(*range(10)))
+    peak = 0
+    for i in range(100_000):
+        if i % every == 0:
+            t.track(sq(10 + i // every))
+            assert len(t._inbox) <= bound
+        if i == 50_000:
+            assert t.checkpoint(RecordingCheckpointer()) == SequenceNumber(9)
+        t.process(SequenceNumber(i % 10))
+        peak = max(peak, len(t._inbox))
+    assert peak <= bound + every
+    assert t.snapshot()[:3] == (1_000, 0, SequenceNumber(9))
+    assert t._processed == set()
 
 
 # --- CheckpointTrackerActorSpec (registry) cases -----------------------------
