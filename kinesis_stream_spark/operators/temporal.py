@@ -5,6 +5,17 @@ extension rows; no counterpart in the reference — kinesis-stream hands
 decoded records to user code and the time-series shaping happens
 downstream; these are that downstream, re-expressed declaratively).
 
+**The input schema.** The operators read the events table's own
+columns, ``events(event_id, user_id, event_type, ts, value)``, and the
+``sql_*`` twins read the ``events`` table, both by these names. A table
+named otherwise is renamed first, with one ``select`` of ``alias``-ed
+columns, which Catalyst folds into the scan. The only names left as
+parameters are ones a caller sets: the key column of
+:func:`gap_fill_forward`, :func:`linear_interpolation` and
+:func:`linear_trend` (and their twins), and the table of
+:func:`sql_rolling_distinct` and :func:`sql_seasonal_naive`, which tests
+point at a fixture table.
+
 Every operator keys its computation on integer epoch indexes
 (``EPOCH_US // unit``), not timestamps: integer floor-division is exact
 and identical on every engine, while a float divide or an interval
@@ -46,27 +57,32 @@ HOUR_US = 3_600_000_000
 DAY_US = 86_400_000_000
 
 
-def _bucket(ts_col: str, unit_us: int) -> Column:
-    """Integer bucket index of a timestamp column (floor division of
-    epoch microseconds — exact, tie-free)."""
-    return F.expr(f"unix_micros(cast({ts_col} as timestamp)) div {unit_us}")
+def _micros() -> Column:
+    """``ts`` as integer epoch microseconds."""
+    return F.expr("unix_micros(cast(ts as timestamp))")
+
+
+def _bucket(unit_us: int) -> Column:
+    """Integer bucket index of ``ts`` (floor division of epoch
+    microseconds — exact, tie-free)."""
+    return F.expr(f"unix_micros(cast(ts as timestamp)) div {unit_us}")
 
 
 #: fixed-point scale of the period series (2^20 fractional bits)
 EWMA_SCALE = 1 << 20
 
 
-def _period_fx(events: DataFrame, key_col: str, ts_col: str, value_col: str) -> DataFrame:
+def _period_fx(events: DataFrame, key_col: str) -> DataFrame:
     """The period series of the module docstring: ``(key, bucket, vfx)``,
     one row per occupied (key, bucket) cell. It is the one corpus-sized
     pass of the series family, a map-side-combinable aggregate, so
     everything downstream runs on a frame bounded by keys × buckets."""
     return (
-        events.where(F.col(ts_col).isNotNull())
+        events.where(F.col("ts").isNotNull())
         .groupBy(
-            F.col(key_col).alias("key"), _bucket(ts_col, DAY_US).alias("bucket")
+            F.col(key_col).alias("key"), _bucket(DAY_US).alias("bucket")
         )
-        .agg(dsum(value_col, "v"))
+        .agg(dsum("value", "v"))
         .select(
             "key",
             "bucket",
@@ -111,7 +127,7 @@ def _x_offsets(per: DataFrame) -> DataFrame:
     )
 
 
-def _dense_grid(events: DataFrame, key_col: str, ts_col: str, value_col: str) -> DataFrame:
+def _dense_grid(events: DataFrame, key_col: str) -> DataFrame:
     """``(key, bucket, n_events, bucket_sum)`` on each key's dense hour
     bucket range, from its first to its last occupied bucket. Empty buckets
     carry NULL ``n_events`` and ``bucket_sum``.
@@ -123,8 +139,8 @@ def _dense_grid(events: DataFrame, key_col: str, ts_col: str, value_col: str) ->
     occupied = (
         events.select(
             F.col(key_col).alias("key"),
-            _bucket(ts_col, HOUR_US).alias("bucket"),
-            F.col(value_col).alias("v"),
+            _bucket(HOUR_US).alias("bucket"),
+            F.col("value").alias("v"),
         )
         .groupBy("key", "bucket")
         .agg(F.count(F.lit(1)).alias("n_events"), dsum(F.col("v"), "bucket_sum"))
@@ -138,13 +154,7 @@ def _dense_grid(events: DataFrame, key_col: str, ts_col: str, value_col: str) ->
     return grid.join(occupied, ["key", "bucket"], "left")
 
 
-def gap_fill_forward(
-    events: DataFrame,
-    *,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def gap_fill_forward(events: DataFrame, *, key_col: str = "event_type") -> DataFrame:
     """Regularize an event stream onto a dense per-key time grid and
     forward-fill observation gaps — the resample + ffill step every
     time-series feature pipeline needs before windowed training data
@@ -168,7 +178,7 @@ def gap_fill_forward(
         .orderBy("bucket")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    return _dense_grid(events, key_col, ts_col, value_col).select(
+    return _dense_grid(events, key_col).select(
         F.col("key"),
         F.col("bucket"),
         F.coalesce("n_events", F.lit(0)).alias("n_events"),
@@ -177,13 +187,7 @@ def gap_fill_forward(
     )
 
 
-def scd2_compact(
-    events: DataFrame,
-    *,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    status_col: str = "event_type",
-) -> DataFrame:
+def scd2_compact(events: DataFrame) -> DataFrame:
     """Slowly-changing-dimension (type 2) compaction: collapse a stream
     of per-key status observations into effective-dated intervals
     [valid_from, valid_to) with an ``is_current`` marker — the standard
@@ -205,17 +209,17 @@ def scd2_compact(
     after the first shuffle everything is narrow. Day buckets are
     integer epoch-day indexes (exact; see module docstring).
     """
-    day = _bucket(ts_col, DAY_US)
+    day = _bucket(DAY_US)
     # NULL timestamps carry no temporal meaning and (worse) sort
     # differently across engines (Spark NULLS FIRST vs DuckDB NULLS
     # LAST in ascending windows) — excluded by contract.
     snap = (
-        events.where(F.col(ts_col).isNotNull()).select(
-            F.col(key_col).alias("key"),
+        events.where(F.col("ts").isNotNull()).select(
+            F.col("user_id").alias("key"),
             day.alias("day"),
             F.struct(
-                F.expr(f"unix_micros(cast({ts_col} as timestamp))").alias("us"),
-                F.col(status_col).alias("status"),
+                _micros().alias("us"),
+                F.col("event_type").alias("status"),
             ).alias("obs"),
         )
         .groupBy("key", "day")
@@ -252,14 +256,7 @@ def scd2_compact(
     )
 
 
-def transition_matrix(
-    events: DataFrame,
-    *,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    state_col: str = "event_type",
-    id_col: str = "event_id",
-) -> DataFrame:
+def transition_matrix(events: DataFrame) -> DataFrame:
     """Behavioral transition matrix: per-key event sequences in time
     order, folded into global (from_state → to_state) counts and
     transition probabilities — the Markov-chain summary behind funnel
@@ -282,15 +279,15 @@ def transition_matrix(
     filter, identically in the oracle. ``prob`` is one IEEE divide of
     two exact integers.
     """
-    w = Window.partitionBy(key_col).orderBy(
-        F.expr(f"unix_micros(cast({ts_col} as timestamp))"),
-        F.col(id_col).asc_nulls_last(),
+    w = Window.partitionBy("user_id").orderBy(
+        _micros(),
+        F.col("event_id").asc_nulls_last(),
     )
     steps = (
-        events.where(F.col(ts_col).isNotNull())
+        events.where(F.col("ts").isNotNull())
         .select(
-            F.lag(state_col).over(w).alias("from_state"),
-            F.col(state_col).alias("to_state"),
+            F.lag("event_type").over(w).alias("from_state"),
+            F.col("event_type").alias("to_state"),
         )
         .where(F.col("from_state").isNotNull())
     )
@@ -309,13 +306,7 @@ def transition_matrix(
     )
 
 
-def multires_rollup(
-    events: DataFrame,
-    *,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def multires_rollup(events: DataFrame) -> DataFrame:
     """Multi-resolution time rollup (continuous-aggregate style): hour,
     day, and whole-range aggregates per key from ONE scan, via a rollup
     over (key, day, hour) on integer epoch buckets. Spark plans a single
@@ -328,11 +319,11 @@ def multires_rollup(
     carry both day and hour buckets, day rows NULL the hour, key totals
     NULL both — standard rollup nesting, disambiguated by GROUPING().
     """
-    day = _bucket(ts_col, DAY_US)
-    hour = _bucket(ts_col, HOUR_US)
+    day = _bucket(DAY_US)
+    hour = _bucket(HOUR_US)
     base = events.select(
-        F.col(key_col).alias("key"), day.alias("day"), hour.alias("hour"),
-        F.col(value_col).alias("v"),
+        F.col("event_type").alias("key"), day.alias("day"), hour.alias("hour"),
+        F.col("value").alias("v"),
     )
     g = (
         base.rollup("key", "day", "hour")
@@ -362,12 +353,7 @@ def _pct(col: str, p: float):
     return F.expr(f"percentile({col}, {p!r})")
 
 
-def winsorize_stats(
-    events: DataFrame,
-    *,
-    key_col: str = "event_type",
-    value_col: str = "value",
-) -> DataFrame:
+def winsorize_stats(events: DataFrame) -> DataFrame:
     """Per-key winsorization: clamp values into the exact
     [5%, 95%] percentile band and report, per key, how many rows
     clamped on each side plus the winsorized sum/mean — the standard
@@ -394,13 +380,13 @@ def winsorize_stats(
     through fixed-point (as the centroid math does via CENTROID_SCALE)
     before the clamp.
     """
-    bounds = events.groupBy(key_col).agg(
-        _pct(value_col, 0.05).alias("lo"),
-        _pct(value_col, 0.95).alias("hi"),
+    bounds = events.groupBy("event_type").agg(
+        _pct("value", 0.05).alias("lo"),
+        _pct("value", 0.95).alias("hi"),
     )
-    v = F.col(value_col)
-    clamped = events.join(F.broadcast(bounds), key_col).select(
-        key_col,
+    v = F.col("value")
+    clamped = events.join(F.broadcast(bounds), "event_type").select(
+        "event_type",
         v.alias("v"),
         # explicit NULL gate: least/greatest SKIP nulls on both engines,
         # so a bare clamp would resurrect a NULL value as `lo`
@@ -412,7 +398,7 @@ def winsorize_stats(
         F.col("lo"),
         F.col("hi"),
     )
-    agg = clamped.groupBy(key_col).agg(
+    agg = clamped.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.count("v").alias("n_values"),
         F.sum("is_low").alias("n_clamped_low"),
@@ -422,7 +408,7 @@ def winsorize_stats(
         F.min("hi").alias("p_high"),
     )
     return agg.select(
-        key_col,
+        "event_type",
         "n_rows",
         "n_clamped_low",
         "n_clamped_high",
@@ -435,13 +421,7 @@ def winsorize_stats(
     )
 
 
-def mad_outliers(
-    events: DataFrame,
-    *,
-    key_col: str = "event_type",
-    id_col: str = "event_id",
-    value_col: str = "value",
-) -> DataFrame:
+def mad_outliers(events: DataFrame) -> DataFrame:
     """Robust per-key outlier detection via median absolute deviation:
     flag rows with |x − median| > 3·MAD. Median/MAD resist the exact
     failure mode that breaks mean/stddev monitoring — the outliers
@@ -458,40 +438,35 @@ def mad_outliers(
     (degenerate scale — also keeps the score divide off Spark 4's
     ANSI double/0 error path).
     """
-    med = events.groupBy(key_col).agg(
-        _pct(value_col, 0.5).alias("med")
+    med = events.groupBy("event_type").agg(
+        _pct("value", 0.5).alias("med")
     )
     dev = (
-        events.join(F.broadcast(med), key_col)
-        .select(key_col, F.abs(F.col(value_col) - F.col("med")).alias("adev"))
-        .groupBy(key_col)
+        events.join(F.broadcast(med), "event_type")
+        .select("event_type", F.abs(F.col("value") - F.col("med")).alias("adev"))
+        .groupBy("event_type")
         .agg(_pct("adev", 0.5).alias("mad"))
     )
-    stats = med.join(dev, key_col)
+    stats = med.join(dev, "event_type")
     return (
-        events.join(F.broadcast(stats), key_col)
+        events.join(F.broadcast(stats), "event_type")
         .where(
             (F.col("mad") > 0)
-            & (F.abs(F.col(value_col) - F.col("med")) > 3.0 * F.col("mad"))
+            & (F.abs(F.col("value") - F.col("med")) > 3.0 * F.col("mad"))
         )
         .select(
-            id_col,
-            key_col,
-            value_col,
+            "event_id",
+            "event_type",
+            "value",
             "med",
             "mad",
-            ((F.col(value_col) - F.col("med")) / F.col("mad")).alias("mad_score"),
+            ((F.col("value") - F.col("med")) / F.col("mad")).alias("mad_score"),
         )
     )
 
 
-def simpson_diversity(
-    events: DataFrame,
-    *,
-    key_col: str = "user_id",
-    cat_col: str = "event_type",
-) -> DataFrame:
-    """Per-entity Simpson diversity over a categorical column: with
+def simpson_diversity(events: DataFrame) -> DataFrame:
+    """Per-user Simpson diversity over ``event_type``: with
     per-category counts c_i and n = Σc_i, the Simpson index Σc_i²/n² is
     the probability two independently drawn events share a category;
     ``diversity`` = 1 − that. The log-free stand-in for Shannon entropy
@@ -507,14 +482,14 @@ def simpson_diversity(
     that made cluster_balance's Σn² DECIMAL. The two divides at the end
     are single IEEE ops on exactly-represented integers.
     """
-    per_cat = events.where(F.col(cat_col).isNotNull()).groupBy(
-        key_col, cat_col
+    per_cat = events.where(F.col("event_type").isNotNull()).groupBy(
+        "user_id", "event_type"
     ).agg(F.count(F.lit(1)).alias("c"))
     # cast each operand BEFORE the multiply (the cluster_balance
     # pattern): a long*long square overflows at c > 3.03e9 and a cast
     # of the wrapped product would launder the corruption into DECIMAL
     sq = F.col("c").cast("decimal(19,0)") * F.col("c").cast("decimal(19,0)")
-    agg = per_cat.groupBy(key_col).agg(
+    agg = per_cat.groupBy("user_id").agg(
         F.sum("c").alias("n_events"),
         F.count(F.lit(1)).alias("n_categories"),
         F.sum(sq).cast("decimal(38,0)").alias("sum_sq"),
@@ -522,7 +497,7 @@ def simpson_diversity(
     n_d = F.col("n_events").cast("double")
     simpson = F.col("sum_sq").cast("double") / (n_d * n_d)
     return agg.select(
-        key_col,
+        "user_id",
         "n_events",
         "n_categories",
         F.col("sum_sq").cast("string").alias("sum_sq"),
@@ -531,13 +506,7 @@ def simpson_diversity(
     )
 
 
-def mann_kendall(
-    events: DataFrame,
-    *,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def mann_kendall(events: DataFrame) -> DataFrame:
     """Mann-Kendall trend statistic per key: S = Σ_{i<j} sign(v_j − v_i)
     over the key's bucketed period sums — the standard non-parametric
     monotone-trend test statistic (Mann 1945; Kendall's tau numerator).
@@ -563,12 +532,12 @@ def mann_kendall(
     # double cast and no 2^20 floor, so two sums that differ only past
     # double precision (or below 2^-20) still sign correctly.
     daily = (
-        events.where(F.col(ts_col).isNotNull())
+        events.where(F.col("ts").isNotNull())
         .groupBy(
-            F.col(key_col).alias("key"),
-            _bucket(ts_col, DAY_US).alias("bucket"),
+            F.col("user_id").alias("key"),
+            _bucket(DAY_US).alias("bucket"),
         )
-        .agg(F.sum(F.col(value_col).cast(DEC)).alias("v"))
+        .agg(F.sum(F.col("value").cast(DEC)).alias("v"))
     )
     a, b = daily.alias("a"), daily.alias("b")
     sgn = (
@@ -599,13 +568,7 @@ def mann_kendall(
     )
 
 
-def ewma(
-    events: DataFrame,
-    *,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def ewma(events: DataFrame) -> DataFrame:
     """Per-key exponentially-weighted moving average (α = 1/4) over the
     bucketed period sums, in exact integer fixed point: the recurrence
     ``s ← ⌊(3·s + v)/4⌋`` folds over the key's periods in bucket order,
@@ -624,7 +587,7 @@ def ewma(
     window), never by event count; the fold is a per-row array op on
     that bounded list. The sequential recurrence lives entirely inside
     one row — no cross-row window, no serialized global pass."""
-    per_key = _period_lists(_period_fx(events, key_col, ts_col, value_col))
+    per_key = _period_lists(_period_fx(events, "user_id"))
     first, rest = _first_and_rest()
     folded = F.aggregate(
         rest,
@@ -639,13 +602,7 @@ def ewma(
     )
 
 
-def cusum(
-    events: DataFrame,
-    *,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def cusum(events: DataFrame) -> DataFrame:
     """Per-key two-sided CUSUM drift detection (Page 1954) over the
     bucketed period sums, in exact integer fixed point: with per-key
     center μ (floor-mean of the period values) and scale m (floor-mean
@@ -673,7 +630,7 @@ def cusum(
     |x−μ| ≤ 2·max|v|·2^20 and the fold caps S at max excursion ≤
     Σ|x−μ| ≤ P·2^42-ish for bounded values — far inside BIGINT for
     any bucket grid."""
-    per = _period_fx(events, key_col, ts_col, value_col)
+    per = _period_fx(events, "user_id")
     center = per.groupBy("key").agg(
         F.floor(
             F.sum("vfx").cast("double") / F.count(F.lit(1))
@@ -724,13 +681,7 @@ def cusum(
     )
 
 
-def holt(
-    events: DataFrame,
-    *,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def holt(events: DataFrame) -> DataFrame:
     """Per-key Holt linear (double-exponential) smoothing of the
     bucketed period sums — the trend-aware upgrade of :func:`ewma`,
     in the same exact integer fixed point (α = β = 1/4):
@@ -749,7 +700,7 @@ def holt(
     engines on negatives). Headroom: l tracks the data range and b its
     per-step delta — both bounded by max|v|·2^21-ish, far inside
     BIGINT."""
-    per_key = _period_lists(_period_fx(events, key_col, ts_col, value_col))
+    per_key = _period_lists(_period_fx(events, "user_id"))
     first, rest = _first_and_rest()
     zero = F.lit(0).cast("long")
 
@@ -775,8 +726,6 @@ def holt(
 def peak_concurrency(
     events: DataFrame,
     *,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
     duration_us: int = 15 * 60 * 1_000_000,
 ) -> DataFrame:
     """Peak concurrency per key via the classic sweep line: each event
@@ -801,11 +750,11 @@ def peak_concurrency(
     100 TB are windowed per key anyway — a single global sort is never
     needed because keys are independent). The endpoint frame is built
     by one explode (±1 deltas), map-only."""
-    us = F.expr(f"unix_micros(cast({ts_col} as timestamp))")
+    us = _micros()
     pts = (
-        events.where(F.col(ts_col).isNotNull())
+        events.where(F.col("ts").isNotNull())
         .select(
-            F.col(key_col).alias("key"),
+            F.col("event_type").alias("key"),
             us.alias("t0"),
         )
         .select(
@@ -846,16 +795,7 @@ def peak_concurrency(
     )
 
 
-def top_paths(
-    events: DataFrame,
-    *,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    state_col: str = "event_type",
-    id_col: str = "event_id",
-    depth: int = 3,
-    k: int = 20,
-) -> DataFrame:
+def top_paths(events: DataFrame, *, depth: int = 3, k: int = 20) -> DataFrame:
     """Top-k behavioral paths: the ``depth``-step state sequences
     (n-grams of the per-key event stream in time order) ranked by
     global frequency — the generalization of :func:`transition_matrix`
@@ -876,20 +816,20 @@ def top_paths(
     |distinct paths| frame, not the corpus."""
     if depth < 2:
         raise ValueError(f"depth must be >= 2, got {depth}")
-    us = F.expr(f"unix_micros(cast({ts_col} as timestamp))")
-    w = Window.partitionBy(key_col).orderBy(
-        us.asc(), F.col(id_col).asc_nulls_last()
+    us = _micros()
+    w = Window.partitionBy("user_id").orderBy(
+        us.asc(), F.col("event_id").asc_nulls_last()
     )
     base = events.where(
-        F.col(ts_col).isNotNull() & F.col(state_col).isNotNull()
+        F.col("ts").isNotNull() & F.col("event_type").isNotNull()
     )
-    steps = [F.col(state_col)] + [
-        F.lag(state_col, i).over(w) for i in range(1, depth)
+    steps = [F.col("event_type")] + [
+        F.lag("event_type", i).over(w) for i in range(1, depth)
     ]
     # steps[j] is the state j positions BACK: reverse for left-to-right
     path = F.concat_ws(" > ", *reversed(steps))
     grams = base.select(
-        F.col(key_col).alias("key"),
+        F.col("user_id").alias("key"),
         F.when(steps[depth - 1].isNotNull(), path).alias("path"),
     ).where(F.col("path").isNotNull())
     return (
@@ -903,13 +843,7 @@ def top_paths(
     )
 
 
-def linear_trend(
-    events: DataFrame,
-    *,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def linear_trend(events: DataFrame, *, key_col: str = "user_id") -> DataFrame:
     """Per-key ordinary-least-squares linear trend of the bucketed
     period sums: slope and intercept of yfx ~ x where x is the BUCKET
     OFFSET relative to the key's first occupied bucket (0-based, with
@@ -939,7 +873,7 @@ def linear_trend(
     key-partitioned MIN window on the period frame, then one
     combinable moment aggregate per key — no per-row state, no
     iteration, no driver math."""
-    per = _x_offsets(_period_fx(events, key_col, ts_col, value_col))
+    per = _x_offsets(_period_fx(events, key_col))
     d38 = "decimal(38,0)"
     m = per.groupBy("key").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -971,13 +905,7 @@ def linear_trend(
     )
 
 
-def sql_linear_trend(
-    *,
-    table: str = "events",
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> str:
+def sql_linear_trend(*, key_col: str = "user_id") -> str:
     """DuckDB oracle twin of :func:`linear_trend` — identical fx
     encoding, DECIMAL(38,0) moments, and pinned-order final divides."""
     s = float(EWMA_SCALE)
@@ -988,9 +916,9 @@ def sql_linear_trend(
       -- agree even for pre-epoch timestamps; pinned by
       -- tests/test_round11_review_fixes.py::TestPreEpochBucketParity
       SELECT {key_col} AS key,
-             EPOCH_US({ts_col}) // {DAY_US} AS bucket,
-             CAST(SUM(CAST({value_col} AS DECIMAL(27,6))) AS DOUBLE) AS v
-      FROM {table} WHERE {ts_col} IS NOT NULL GROUP BY 1, 2),
+             EPOCH_US(ts) // {DAY_US} AS bucket,
+             CAST(SUM(CAST(value AS DECIMAL(27,6))) AS DOUBLE) AS v
+      FROM events WHERE ts IS NOT NULL GROUP BY 1, 2),
     per AS (
       SELECT key,
              CAST(bucket - MIN(bucket) OVER (PARTITION BY key) AS BIGINT) AS x,
@@ -1029,13 +957,7 @@ def sql_linear_trend(
     """
 
 
-def seasonal_profile(
-    events: DataFrame,
-    *,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def seasonal_profile(events: DataFrame) -> DataFrame:
     """Per-key day-of-week seasonality profile: each weekday slot's
     share of activity and its seasonal index (slot mean ÷ key mean) —
     the calendar-pattern diagnostic behind load forecasting and
@@ -1055,14 +977,14 @@ def seasonal_profile(
     never a second corpus pass. NULL timestamps are excluded by
     contract."""
     per = (
-        events.where(F.col(ts_col).isNotNull())
+        events.where(F.col("ts").isNotNull())
         .groupBy(
-            F.col(key_col).alias("key"),
-            (_bucket(ts_col, DAY_US) % 7).cast("int").alias("dow_slot"),
+            F.col("event_type").alias("key"),
+            (_bucket(DAY_US) % 7).cast("int").alias("dow_slot"),
         )
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.sum(F.col(value_col).cast(DEC)).alias("_s"),
+            F.sum(F.col("value").cast(DEC)).alias("_s"),
         )
     )
     tot = per.groupBy("key").agg(
@@ -1087,21 +1009,15 @@ def seasonal_profile(
     )
 
 
-def sql_seasonal_profile(
-    *,
-    table: str = "events",
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> str:
+def sql_seasonal_profile() -> str:
     """DuckDB oracle twin of :func:`seasonal_profile`."""
     return f"""
     WITH per AS (
-      SELECT {key_col} AS key,
-             CAST((EPOCH_US({ts_col}) // {DAY_US}) % 7 AS INT) AS dow_slot,
+      SELECT event_type AS key,
+             CAST((EPOCH_US(ts) // {DAY_US}) % 7 AS INT) AS dow_slot,
              CAST(COUNT(*) AS BIGINT) AS n_events,
-             SUM(CAST({value_col} AS DECIMAL(27,6))) AS _s
-      FROM {table} WHERE {ts_col} IS NOT NULL GROUP BY 1, 2),
+             SUM(CAST(value AS DECIMAL(27,6))) AS _s
+      FROM events WHERE ts IS NOT NULL GROUP BY 1, 2),
     tot AS (
       SELECT key, CAST(SUM(n_events) AS BIGINT) AS _tn, SUM(_s) AS _ts
       FROM per GROUP BY key)
@@ -1121,12 +1037,7 @@ def sql_seasonal_profile(
 KM_SCALE = 1 << 30
 
 
-def survival_curve(
-    events: DataFrame,
-    *,
-    unit_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def survival_curve(events: DataFrame) -> DataFrame:
     """Kaplan-Meier survival curve of unit lifetimes (Kaplan & Meier
     1958) — the churn/retention estimator that handles CENSORING
     honestly: a unit's lifetime is the span (in buckets) between its
@@ -1152,11 +1063,11 @@ def survival_curve(
     grid-bounded T). NULL timestamps are excluded; the observation end
     is the corpus max bucket (a deployment passes its own)."""
     per_unit = (
-        events.where(F.col(ts_col).isNotNull() & F.col(unit_col).isNotNull())
-        .groupBy(F.col(unit_col).alias("unit"))
+        events.where(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
+        .groupBy(F.col("user_id").alias("unit"))
         .agg(
-            F.min(_bucket(ts_col, DAY_US)).alias("fd"),
-            F.max(_bucket(ts_col, DAY_US)).alias("ld"),
+            F.min(_bucket(DAY_US)).alias("fd"),
+            F.max(_bucket(DAY_US)).alias("ld"),
         )
     )
     horizon = per_unit.agg(F.max("ld").alias("horizon"))
@@ -1185,11 +1096,11 @@ def survival_curve(
     with_surv = with_na.withColumn(
         "surv",
         F.expr(
-            f"transform(sequence(1, size(s)), i -> "
+            "transform(sequence(1, size(s)), i -> "
             f"aggregate(sequence(1, i), CAST({KM_SCALE} AS BIGINT), "
-            f"(acc, j) -> CASE WHEN element_at(s, j).d > 0 "
-            f"THEN CAST((acc * (element_at(na, j) - element_at(s, j).d)) "
-            f"div element_at(na, j) AS BIGINT) ELSE acc END))"
+            "(acc, j) -> CASE WHEN element_at(s, j).d > 0 "
+            "THEN CAST((acc * (element_at(na, j) - element_at(s, j).d)) "
+            "div element_at(na, j) AS BIGINT) ELSE acc END))"
         ),
     )
     return with_surv.select(
@@ -1209,22 +1120,17 @@ def survival_curve(
     )
 
 
-def sql_survival_curve(
-    *,
-    table: str = "events",
-    unit_col: str = "user_id",
-    ts_col: str = "ts",
-) -> str:
+def sql_survival_curve() -> str:
     """DuckDB oracle twin of :func:`survival_curve` — identical grid,
     at-risk prefix arithmetic, and fx fold (LIST_REDUCE with the
     prepended-seed packing, since DuckDB has no 3-arg reduce)."""
     return f"""
     WITH per_unit AS (
-      SELECT {unit_col} AS unit,
-             MIN(EPOCH_US({ts_col}) // {DAY_US}) AS fd,
-             MAX(EPOCH_US({ts_col}) // {DAY_US}) AS ld
-      FROM {table}
-      WHERE {ts_col} IS NOT NULL AND {unit_col} IS NOT NULL
+      SELECT user_id AS unit,
+             MIN(EPOCH_US(ts) // {DAY_US}) AS fd,
+             MAX(EPOCH_US(ts) // {DAY_US}) AS ld
+      FROM events
+      WHERE ts IS NOT NULL AND user_id IS NOT NULL
       GROUP BY 1),
     hz AS (SELECT MAX(ld) AS horizon FROM per_unit),
     lifetimes AS (
@@ -1266,13 +1172,7 @@ def sql_survival_curve(
     """
 
 
-def active_user_windows(
-    events: DataFrame,
-    *,
-    unit_col: str = "user_id",
-    ts_col: str = "ts",
-    window_days: int = 7,
-) -> DataFrame:
+def active_user_windows(events: DataFrame, *, window_days: int = 7) -> DataFrame:
     """Rolling distinct active units per day: for every day in the
     corpus, the exact count of distinct units active that day (DAU)
     and within the trailing ``window_days`` window (WAU), plus the
@@ -1302,10 +1202,10 @@ def active_user_windows(
     if window_days < 1:
         raise ValueError(f"window_days must be >= 1, got {window_days}")
     act = (
-        events.where(F.col(ts_col).isNotNull() & F.col(unit_col).isNotNull())
+        events.where(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
         .select(
-            F.col(unit_col).alias("unit"),
-            _bucket(ts_col, DAY_US).alias("day"),
+            F.col("user_id").alias("unit"),
+            _bucket(DAY_US).alias("day"),
         )
         .distinct()
     )
@@ -1351,21 +1251,15 @@ def active_user_windows(
     )
 
 
-def sql_active_user_windows(
-    *,
-    table: str = "events",
-    unit_col: str = "user_id",
-    ts_col: str = "ts",
-    window_days: int = 7,
-) -> str:
+def sql_active_user_windows(*, window_days: int = 7) -> str:
     """DuckDB oracle twin of :func:`active_user_windows` — identical
     contribution-explode identity."""
     return f"""
     WITH act AS (
-      SELECT DISTINCT {unit_col} AS unit,
-             EPOCH_US({ts_col}) // {DAY_US} AS day
-      FROM {table}
-      WHERE {ts_col} IS NOT NULL AND {unit_col} IS NOT NULL),
+      SELECT DISTINCT user_id AS unit,
+             EPOCH_US(ts) // {DAY_US} AS day
+      FROM events
+      WHERE ts IS NOT NULL AND user_id IS NOT NULL),
     span AS (SELECT MIN(day) AS d0, MAX(day) AS d1 FROM act),
     grid AS (SELECT g.day FROM span, UNNEST(RANGE(d0, d1 + 1)) AS g(day)),
     dau AS (
@@ -1444,9 +1338,6 @@ def lead_lag_correlation(
     type_a: str,
     type_b: str,
     max_lag: int = 2,
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
 ) -> DataFrame:
     """Lead–lag cross-correlation between two event types' daily value
     series: Pearson r of (a[t], b[t + lag]) for lag ∈ [−max_lag,
@@ -1473,10 +1364,7 @@ def lead_lag_correlation(
         raise ValueError(f"max_lag must be >= 0, got {max_lag}")
     daily = pin(
         _period_fx(
-            events.where(F.col(type_col).isin([type_a, type_b])),
-            type_col,
-            ts_col,
-            value_col,
+            events.where(F.col("event_type").isin([type_a, type_b])), "event_type"
         )
         # a bucket whose events all carry NULL values has no
         # observation (vfx NULL): drop it, or COUNT(*) in the moment
@@ -1496,16 +1384,7 @@ def lead_lag_correlation(
     )
 
 
-def sql_lead_lag_correlation(
-    *,
-    table: str = "events",
-    type_a: str,
-    type_b: str,
-    max_lag: int = 2,
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> str:
+def sql_lead_lag_correlation(*, type_a: str, type_b: str, max_lag: int = 2) -> str:
     """DuckDB oracle twin of :func:`lead_lag_correlation`."""
     s = float(EWMA_SCALE)
     selects = []
@@ -1545,26 +1424,19 @@ def sql_lead_lag_correlation(
     body = " UNION ALL ".join(selects)
     return f"""
     WITH daily AS (
-      SELECT {type_col} AS t, EPOCH_US({ts_col}) // {DAY_US} AS bucket,
-             CAST(FLOOR(CAST(SUM(CAST({value_col} AS DECIMAL(27,6)))
+      SELECT event_type AS t, EPOCH_US(ts) // {DAY_US} AS bucket,
+             CAST(FLOOR(CAST(SUM(CAST(value AS DECIMAL(27,6)))
                              AS DOUBLE) * {s!r}) AS BIGINT) AS vfx
-      FROM {table}
-      WHERE {ts_col} IS NOT NULL AND {type_col} IN ('{type_a}', '{type_b}')
+      FROM events
+      WHERE ts IS NOT NULL AND event_type IN ('{type_a}', '{type_b}')
       GROUP BY 1, 2
-      HAVING CAST(FLOOR(CAST(SUM(CAST({value_col} AS DECIMAL(27,6)))
+      HAVING CAST(FLOOR(CAST(SUM(CAST(value AS DECIMAL(27,6)))
                              AS DOUBLE) * {s!r}) AS BIGINT) IS NOT NULL)
     {body}
     """
 
 
-def strict_funnel(
-    events: DataFrame,
-    steps: list[str],
-    *,
-    unit_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
+def strict_funnel(events: DataFrame, steps: list[str]) -> DataFrame:
     """Strictly-ordered funnel with a PER-STEP time budget: a unit
     reaches step k+1 only with an event of that type STRICTLY AFTER
     its step-k completion and within one day of it — the
@@ -1585,11 +1457,11 @@ def strict_funnel(
     if len(steps) < 2:
         raise ValueError("steps must have at least 2 entries")
     base = events.where(
-        F.col(ts_col).isNotNull() & F.col(unit_col).isNotNull()
+        F.col("ts").isNotNull() & F.col("user_id").isNotNull()
     ).select(
-        F.col(unit_col).alias("unit"),
-        F.col(type_col).alias("et"),
-        F.expr(f"unix_micros(cast({ts_col} as timestamp))").alias("us"),
+        F.col("user_id").alias("unit"),
+        F.col("event_type").alias("et"),
+        _micros().alias("us"),
     )
     reached = [
         base.where(F.col("et") == steps[0])
@@ -1634,20 +1506,13 @@ def strict_funnel(
     return out
 
 
-def sql_strict_funnel(
-    *,
-    table: str = "events",
-    steps: list[str],
-    unit_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-) -> str:
+def sql_strict_funnel(*, steps: list[str]) -> str:
     """DuckDB oracle twin of :func:`strict_funnel`."""
     ctes = [
-        f"""base AS (
-      SELECT {unit_col} AS unit, {type_col} AS et, EPOCH_US({ts_col}) AS us
-      FROM {table}
-      WHERE {ts_col} IS NOT NULL AND {unit_col} IS NOT NULL)""",
+        """base AS (
+      SELECT user_id AS unit, event_type AS et, EPOCH_US(ts) AS us
+      FROM events
+      WHERE ts IS NOT NULL AND user_id IS NOT NULL)""",
         f"""r0 AS (
       SELECT unit, MIN(us) AS t FROM base
       WHERE et = '{steps[0]}' GROUP BY unit)""",
@@ -1681,14 +1546,7 @@ def sql_strict_funnel(
     return "WITH " + ",\n    ".join(ctes) + "\n    " + rows
 
 
-def ohlc_bars(
-    events: DataFrame,
-    *,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    id_col: str = "event_id",
-) -> DataFrame:
+def ohlc_bars(events: DataFrame) -> DataFrame:
     """OHLC candlestick downsampling: per (key, bucket) the Open
     (value at the earliest event), High, Low, Close (value at the
     latest event), event count, and exact-decimal volume — the
@@ -1704,15 +1562,15 @@ def ohlc_bars(
     Scale shape: ONE map-side-combinable (key, bucket) aggregate over
     the corpus — no window, no join, no second pass. NULL timestamps
     are excluded by contract."""
-    us = F.expr(f"unix_micros(cast({ts_col} as timestamp))")
+    us = _micros()
     return (
-        events.where(F.col(ts_col).isNotNull())
+        events.where(F.col("ts").isNotNull())
         .select(
-            F.col(key_col).alias("key"),
-            _bucket(ts_col, DAY_US).alias("bucket"),
+            F.col("event_type").alias("key"),
+            _bucket(DAY_US).alias("bucket"),
             us.alias("us"),
-            F.col(id_col).alias("eid"),
-            F.col(value_col).alias("v"),
+            F.col("event_id").alias("eid"),
+            F.col("value").alias("v"),
         )
         .groupBy("key", "bucket")
         .agg(
@@ -1726,40 +1584,26 @@ def ohlc_bars(
     )
 
 
-def sql_ohlc_bars(
-    *,
-    table: str = "events",
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    id_col: str = "event_id",
-) -> str:
+def sql_ohlc_bars() -> str:
     """DuckDB oracle twin of :func:`ohlc_bars` (identical struct
     extrema and decimal volume)."""
     return f"""
-    SELECT {key_col} AS key, EPOCH_US({ts_col}) // {DAY_US} AS bucket,
+    SELECT event_type AS key, EPOCH_US(ts) // {DAY_US} AS bucket,
            CAST(COUNT(*) AS BIGINT) AS n_events,
-           (MIN({{'us': EPOCH_US({ts_col}), 'eid': {id_col},
-                  'v': {value_col}}})).v AS open,
-           MAX({value_col}) AS high,
-           MIN({value_col}) AS low,
-           (MAX({{'us': EPOCH_US({ts_col}), 'eid': {id_col},
-                  'v': {value_col}}})).v AS close,
-           CAST(SUM(CAST({value_col} AS DECIMAL(27,6))) AS DOUBLE) AS volume
-    FROM {table}
-    WHERE {ts_col} IS NOT NULL
+           (MIN({{'us': EPOCH_US(ts), 'eid': event_id,
+                  'v': value}})).v AS open,
+           MAX(value) AS high,
+           MIN(value) AS low,
+           (MAX({{'us': EPOCH_US(ts), 'eid': event_id,
+                  'v': value}})).v AS close,
+           CAST(SUM(CAST(value AS DECIMAL(27,6))) AS DOUBLE) AS volume
+    FROM events
+    WHERE ts IS NOT NULL
     GROUP BY 1, 2
     """
 
 
-def seasonal_residual_outliers(
-    events: DataFrame,
-    *,
-    key_col: str = "event_type",
-    id_col: str = "event_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def seasonal_residual_outliers(events: DataFrame) -> DataFrame:
     """Seasonally-adjusted robust outliers: subtract each row's
     (key, weekday-slot) baseline mean, then flag rows whose RESIDUAL
     deviates more than 3·MAD from the key's median residual — the
@@ -1780,11 +1624,11 @@ def seasonal_residual_outliers(
     percentile passes on the residual, one broadcast flag join. NULL
     timestamps are excluded by contract; keys whose MAD is 0 flag
     nothing (degenerate scale — the mad_outliers convention)."""
-    base = events.where(F.col(ts_col).isNotNull()).select(
-        F.col(id_col).alias("eid"),
-        F.col(key_col).alias("key"),
-        (_bucket(ts_col, DAY_US) % 7).cast("int").alias("dow_slot"),
-        F.col(value_col).alias("v"),
+    base = events.where(F.col("ts").isNotNull()).select(
+        F.col("event_id").alias("eid"),
+        F.col("event_type").alias("key"),
+        (_bucket(DAY_US) % 7).cast("int").alias("dow_slot"),
+        F.col("value").alias("v"),
     )
     slots = base.groupBy("key", "dow_slot").agg(
         (
@@ -1824,10 +1668,10 @@ def seasonal_residual_outliers(
             )
         )
         .select(
-            F.col("eid").alias(id_col),
-            F.col("key").alias(key_col),
+            F.col("eid").alias("event_id"),
+            F.col("key").alias("event_type"),
             "dow_slot",
-            F.col("v").alias(value_col),
+            F.col("v").alias("value"),
             "baseline",
             F.col("res").alias("residual"),
             "med_res",
@@ -1839,21 +1683,14 @@ def seasonal_residual_outliers(
     )
 
 
-def sql_seasonal_residual_outliers(
-    *,
-    table: str = "events",
-    key_col: str = "event_type",
-    id_col: str = "event_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> str:
+def sql_seasonal_residual_outliers() -> str:
     """DuckDB oracle twin of :func:`seasonal_residual_outliers`."""
     return f"""
     WITH base AS (
-      SELECT {id_col} AS eid, {key_col} AS key,
-             CAST((EPOCH_US({ts_col}) // {DAY_US}) % 7 AS INT) AS dow_slot,
-             {value_col} AS v
-      FROM {table} WHERE {ts_col} IS NOT NULL),
+      SELECT event_id AS eid, event_type AS key,
+             CAST((EPOCH_US(ts) // {DAY_US}) % 7 AS INT) AS dow_slot,
+             value AS v
+      FROM events WHERE ts IS NOT NULL),
     slots AS (
       SELECT key, dow_slot,
              CAST(SUM(CAST(v AS DECIMAL(27,6))) AS DOUBLE)
@@ -1870,8 +1707,8 @@ def sql_seasonal_residual_outliers(
       FROM resid r JOIN med m USING (key) GROUP BY r.key),
     stats AS (SELECT med.key, med.med_res, mad.mad_res
               FROM med JOIN mad USING (key))
-    SELECT r.eid AS {id_col}, r.key AS {key_col}, r.dow_slot,
-           r.v AS {value_col}, r.baseline, r.res AS residual,
+    SELECT r.eid AS event_id, r.key AS event_type, r.dow_slot,
+           r.v AS value, r.baseline, r.res AS residual,
            s.med_res, s.mad_res,
            (r.res - s.med_res) / s.mad_res AS score
     FROM resid r JOIN stats s USING (key)
@@ -1880,14 +1717,7 @@ def sql_seasonal_residual_outliers(
     """
 
 
-def time_weighted_avg(
-    events: DataFrame,
-    *,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    value_col: str = "value",
-) -> DataFrame:
+def time_weighted_avg(events: DataFrame) -> DataFrame:
     """Per-key time-weighted average under last-observation-carried-
     forward (LOCF) semantics — the TSDB ``time_weight`` operator
     (TimescaleDB toolkit / InfluxDB integral): each observation's
@@ -1928,15 +1758,13 @@ def time_weighted_avg(
     w = Window.partitionBy("key").orderBy("ts_us", "eid")
     base = (
         events.where(
-            F.col(ts_col).isNotNull() & F.col(value_col).isNotNull()
+            F.col("ts").isNotNull() & F.col("value").isNotNull()
         )
         .select(
-            F.col(key_col).alias("key"),
-            F.expr(f"unix_micros(cast({ts_col} as timestamp))").alias(
-                "ts_us"
-            ),
-            F.col(id_col).alias("eid"),
-            F.col(value_col).cast("decimal(19,6)").alias("v"),
+            F.col("event_type").alias("key"),
+            _micros().alias("ts_us"),
+            F.col("event_id").alias("eid"),
+            F.col("value").cast("decimal(19,6)").alias("v"),
         )
         .withColumn("next_us", F.lead("ts_us").over(w))
     )
@@ -1963,27 +1791,20 @@ def time_weighted_avg(
     )
 
 
-def sql_time_weighted_avg(
-    *,
-    table: str = "events",
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    value_col: str = "value",
-) -> str:
+def sql_time_weighted_avg() -> str:
     """DuckDB oracle twin of :func:`time_weighted_avg` (identical LOCF
     lead chain and decimal products; VARCHAR-routed double casts)."""
-    return f"""
+    return """
     WITH base AS (
-      SELECT {key_col} AS key,
-             EPOCH_US({ts_col}) AS ts_us,
-             {id_col} AS eid,
-             CAST({value_col} AS DECIMAL(19,6)) AS v,
-             LEAD(EPOCH_US({ts_col})) OVER (
-               PARTITION BY {key_col}
-               ORDER BY EPOCH_US({ts_col}), {id_col}) AS next_us
-      FROM {table}
-      WHERE {ts_col} IS NOT NULL AND {value_col} IS NOT NULL),
+      SELECT event_type AS key,
+             EPOCH_US(ts) AS ts_us,
+             event_id AS eid,
+             CAST(value AS DECIMAL(19,6)) AS v,
+             LEAD(EPOCH_US(ts)) OVER (
+               PARTITION BY event_type
+               ORDER BY EPOCH_US(ts), event_id) AS next_us
+      FROM events
+      WHERE ts IS NOT NULL AND value IS NOT NULL),
     agg AS (
       SELECT key,
              CAST(COUNT(*) AS BIGINT) AS n_points,
@@ -2000,14 +1821,7 @@ def sql_time_weighted_avg(
     """
 
 
-def state_durations(
-    events: DataFrame,
-    *,
-    entity_col: str = "user_id",
-    state_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
+def state_durations(events: DataFrame) -> DataFrame:
     """Time-in-state aggregate (the TSDB ``state_agg`` operator): each
     entity's event stream is an LOCF state machine — the entity is "in"
     a state from that event until its next event — and the output is,
@@ -2028,15 +1842,13 @@ def state_durations(
     w = Window.partitionBy("ent").orderBy("ts_us", "eid")
     intervals = (
         events.where(
-            F.col(entity_col).isNotNull() & F.col(ts_col).isNotNull()
+            F.col("user_id").isNotNull() & F.col("ts").isNotNull()
         )
         .select(
-            F.col(entity_col).alias("ent"),
-            F.col(state_col).alias("state"),
-            F.expr(f"unix_micros(cast({ts_col} as timestamp))").alias(
-                "ts_us"
-            ),
-            F.col(id_col).alias("eid"),
+            F.col("user_id").alias("ent"),
+            F.col("event_type").alias("state"),
+            _micros().alias("ts_us"),
+            F.col("event_id").alias("eid"),
         )
         .withColumn("next_us", F.lead("ts_us").over(w))
         .where(F.col("next_us").isNotNull())
@@ -2062,25 +1874,18 @@ def state_durations(
     )
 
 
-def sql_state_durations(
-    *,
-    table: str = "events",
-    entity_col: str = "user_id",
-    state_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> str:
+def sql_state_durations() -> str:
     """DuckDB oracle twin of :func:`state_durations` (identical LOCF
     lead chain, closed-interval filter, and HUGEINT ppm floor)."""
-    return f"""
+    return """
     WITH iv AS (
-      SELECT {state_col} AS state,
-             LEAD(EPOCH_US({ts_col})) OVER (
-               PARTITION BY {entity_col}
-               ORDER BY EPOCH_US({ts_col}), {id_col})
-               - EPOCH_US({ts_col}) AS dur
-      FROM {table}
-      WHERE {entity_col} IS NOT NULL AND {ts_col} IS NOT NULL),
+      SELECT event_type AS state,
+             LEAD(EPOCH_US(ts)) OVER (
+               PARTITION BY user_id
+               ORDER BY EPOCH_US(ts), event_id)
+               - EPOCH_US(ts) AS dur
+      FROM events
+      WHERE user_id IS NOT NULL AND ts IS NOT NULL),
     per_state AS (
       SELECT state, CAST(COUNT(*) AS BIGINT) AS n_intervals,
              CAST(SUM(dur) AS BIGINT) AS total_us
@@ -2096,14 +1901,7 @@ def sql_state_durations(
     """
 
 
-def autocorrelation(
-    events: DataFrame,
-    *,
-    max_lag: int = 3,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def autocorrelation(events: DataFrame, *, max_lag: int = 3) -> DataFrame:
     """Per-key autocorrelation function (ACF): Pearson r of
     (v[t], v[t + lag]) over the key's own daily value series for
     lag ∈ [1, max_lag] — the seasonality/persistence screen read
@@ -2125,7 +1923,7 @@ def autocorrelation(
     if max_lag < 1:
         raise ValueError(f"max_lag must be >= 1, got {max_lag}")
     daily = pin(
-        _period_fx(events, key_col, ts_col, value_col).where(
+        _period_fx(events, "event_type").where(
             F.col("vfx").isNotNull()
         ),
         eager=False,
@@ -2139,14 +1937,7 @@ def autocorrelation(
     )
 
 
-def sql_autocorrelation(
-    *,
-    table: str = "events",
-    max_lag: int = 3,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> str:
+def sql_autocorrelation(*, max_lag: int = 3) -> str:
     """DuckDB oracle twin of :func:`autocorrelation` (identical fx
     quantization, HUGEINT moments, VARCHAR-routed double casts)."""
     s = float(EWMA_SCALE)
@@ -2184,26 +1975,20 @@ def sql_autocorrelation(
       -- `div` (verified on 1.0.0: -7 // 2 = -3), so the bucket grids
       -- agree even for pre-epoch timestamps; pinned by
       -- tests/test_round11_review_fixes.py::TestPreEpochBucketParity
-      SELECT {key_col} AS key,
-             EPOCH_US({ts_col}) // {DAY_US} AS bucket,
-             CAST(FLOOR(CAST(SUM(CAST({value_col} AS DECIMAL(27,6)))
+      SELECT event_type AS key,
+             EPOCH_US(ts) // {DAY_US} AS bucket,
+             CAST(FLOOR(CAST(SUM(CAST(value AS DECIMAL(27,6)))
                              AS DOUBLE) * {s!r}) AS BIGINT) AS vfx
-      FROM {table}
-      WHERE {ts_col} IS NOT NULL
+      FROM events
+      WHERE ts IS NOT NULL
       GROUP BY 1, 2
-      HAVING CAST(FLOOR(CAST(SUM(CAST({value_col} AS DECIMAL(27,6)))
+      HAVING CAST(FLOOR(CAST(SUM(CAST(value AS DECIMAL(27,6)))
                              AS DOUBLE) * {s!r}) AS BIGINT) IS NOT NULL)
     {body}
     """
 
 
-def interarrival_burstiness(
-    events: DataFrame,
-    *,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
+def interarrival_burstiness(events: DataFrame) -> DataFrame:
     """Per-key inter-arrival burstiness (Goh & Barabási 2008): from
     the gaps Δt between consecutive events, B = (σ − μ)/(σ + μ) —
     −1 for a perfectly regular stream, → 0 for Poisson, → 1 for
@@ -2226,13 +2011,11 @@ def interarrival_burstiness(
     w = Window.partitionBy("key").orderBy("ts_us", "eid")
     d19, d38 = "decimal(19,0)", "decimal(38,0)"
     gaps = (
-        events.where(F.col(ts_col).isNotNull())
+        events.where(F.col("ts").isNotNull())
         .select(
-            F.col(key_col).alias("key"),
-            F.expr(f"unix_micros(cast({ts_col} as timestamp))").alias(
-                "ts_us"
-            ),
-            F.col(id_col).alias("eid"),
+            F.col("event_type").alias("key"),
+            _micros().alias("ts_us"),
+            F.col("event_id").alias("eid"),
         )
         .withColumn("dt", F.col("ts_us") - F.lag("ts_us").over(w))
         .where(F.col("dt").isNotNull())
@@ -2265,21 +2048,15 @@ def interarrival_burstiness(
     )
 
 
-def sql_interarrival_burstiness(
-    *,
-    table: str = "events",
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> str:
+def sql_interarrival_burstiness() -> str:
     """DuckDB oracle twin of :func:`interarrival_burstiness`."""
-    return f"""
+    return """
     WITH gaps AS (
-      SELECT {key_col} AS key,
-             EPOCH_US({ts_col}) - LAG(EPOCH_US({ts_col})) OVER (
-               PARTITION BY {key_col}
-               ORDER BY EPOCH_US({ts_col}), {id_col}) AS dt
-      FROM {table} WHERE {ts_col} IS NOT NULL),
+      SELECT event_type AS key,
+             EPOCH_US(ts) - LAG(EPOCH_US(ts)) OVER (
+               PARTITION BY event_type
+               ORDER BY EPOCH_US(ts), event_id) AS dt
+      FROM events WHERE ts IS NOT NULL),
     m AS (
       SELECT key, CAST(COUNT(*) AS BIGINT) AS n,
              CAST(SUM(dt) AS HUGEINT) AS sdt,
@@ -2311,14 +2088,7 @@ def sql_interarrival_burstiness(
     """
 
 
-def rfm_segments(
-    events: DataFrame,
-    *,
-    entity_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def rfm_segments(events: DataFrame) -> DataFrame:
     """RFM segmentation (Hughes 1994, the classic CRM model): per
     entity, Recency (µs from the entity's last conversion to the
     corpus's last conversion), Frequency (conversion count), Monetary
@@ -2346,13 +2116,13 @@ def rfm_segments(
     count, not event count), both broadcast back — rows never
     shuffle after the per-entity collapse."""
     conv = events.where(
-        (F.col(type_col) == "purchase")
-        & F.col(entity_col).isNotNull()
-        & F.col(ts_col).isNotNull()
+        (F.col("event_type") == "purchase")
+        & F.col("user_id").isNotNull()
+        & F.col("ts").isNotNull()
     ).select(
-        F.col(entity_col).alias("ent"),
-        F.expr(f"unix_micros(cast({ts_col} as timestamp))").alias("us"),
-        F.col(value_col).alias("val"),
+        F.col("user_id").alias("ent"),
+        _micros().alias("us"),
+        F.col("value").alias("val"),
     )
     # COALESCE: an entity whose conversions all carry NULL values has
     # monetary 0, not NULL — otherwise the score compare degrades to
@@ -2392,7 +2162,7 @@ def rfm_segments(
         return s
 
     return base.join(F.broadcast(bounds)).select(
-        F.col("ent").alias(entity_col),
+        F.col("ent").alias("user_id"),
         "recency_us",
         "frequency",
         "monetary",
@@ -2402,14 +2172,7 @@ def rfm_segments(
     )
 
 
-def sql_rfm_segments(
-    *,
-    table: str = "events",
-    entity_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> str:
+def sql_rfm_segments() -> str:
     """DuckDB oracle twin of :func:`rfm_segments` (identical boundary
     compares against QUANTILE_CONT p20/p40/p60/p80)."""
 
@@ -2432,11 +2195,11 @@ def sql_rfm_segments(
     )
     return f"""
     WITH conv AS (
-      SELECT {entity_col} AS ent, EPOCH_US({ts_col}) AS us,
-             {value_col} AS val
-      FROM {table}
-      WHERE {type_col} = 'purchase'
-        AND {entity_col} IS NOT NULL AND {ts_col} IS NOT NULL),
+      SELECT user_id AS ent, EPOCH_US(ts) AS us,
+             value AS val
+      FROM events
+      WHERE event_type = 'purchase'
+        AND user_id IS NOT NULL AND ts IS NOT NULL),
     per_ent AS (
       SELECT ent, MAX(us) AS last_us,
              CAST(COUNT(*) AS BIGINT) AS frequency,
@@ -2449,7 +2212,7 @@ def sql_rfm_segments(
              p.frequency, p.monetary
       FROM per_ent p CROSS JOIN gmax g),
     b AS (SELECT {bounds_cols} FROM base)
-    SELECT base.ent AS {entity_col}, base.recency_us, base.frequency,
+    SELECT base.ent AS user_id, base.recency_us, base.frequency,
            base.monetary,
            CAST(6 - {score('base.recency_us', 'r')} AS INT) AS r_score,
            CAST({score('base.frequency', 'f')} AS INT) AS f_score,
@@ -2458,13 +2221,7 @@ def sql_rfm_segments(
     """
 
 
-def theil_sen_trend(
-    events: DataFrame,
-    *,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def theil_sen_trend(events: DataFrame) -> DataFrame:
     """Per-key Theil-Sen robust trend (Theil 1950 / Sen 1968): the
     MEDIAN of all pairwise slopes between the key's bucketed period
     sums. The robust sibling of :func:`linear_trend` — a single
@@ -2490,7 +2247,7 @@ def theil_sen_trend(
     so corpus growth adds rows per bucket, not pairs), and the median
     window is key-partitioned. The oracle replays the identical pair
     frame and selection."""
-    daily = _period_fx(events, key_col, ts_col, value_col).select(
+    daily = _period_fx(events, "event_type").select(
         "key", F.col("bucket").alias("x"), F.col("vfx").alias("yfx")
     )
     a, b = daily.alias("a"), daily.alias("b")
@@ -2548,23 +2305,17 @@ def theil_sen_trend(
     )
 
 
-def sql_theil_sen_trend(
-    *,
-    table: str = "events",
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> str:
+def sql_theil_sen_trend() -> str:
     """DuckDB oracle twin of :func:`theil_sen_trend` — identical fx
     pair frame, identical middle-element selection."""
     s = float(EWMA_SCALE)
     return f"""
     WITH daily AS (
-      SELECT {key_col} AS key,
-             CAST(EPOCH_US({ts_col}) // {DAY_US} AS BIGINT) AS x,
-             CAST(FLOOR(CAST(SUM(CAST({value_col} AS DECIMAL(27,6)))
+      SELECT event_type AS key,
+             CAST(EPOCH_US(ts) // {DAY_US} AS BIGINT) AS x,
+             CAST(FLOOR(CAST(SUM(CAST(value AS DECIMAL(27,6)))
                              AS DOUBLE) * {s!r}) AS BIGINT) AS yfx
-      FROM {table} WHERE {ts_col} IS NOT NULL GROUP BY 1, 2),
+      FROM events WHERE ts IS NOT NULL GROUP BY 1, 2),
     pairs AS (
       SELECT a.key,
              CAST(b.yfx - a.yfx AS DOUBLE)
@@ -2593,12 +2344,7 @@ def sql_theil_sen_trend(
     """
 
 
-def mix_shift(
-    events: DataFrame,
-    *,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
+def mix_shift(events: DataFrame) -> DataFrame:
     """Population-mix drift audit between the observed span's first
     and second halves — the integer-exact screen behind a PSI
     (population stability index) alarm. PSI's (p−q)·ln(p/q) term needs
@@ -2627,9 +2373,9 @@ def mix_shift(
     map-side-combinable per-key conditional count, one broadcast
     1-row totals join — no window, no self-join, no per-row state."""
     d38 = "decimal(38,0)"
-    ev = events.where(F.col(ts_col).isNotNull()).select(
-        F.col(key_col).alias("key"),
-        F.expr(f"unix_micros(cast({ts_col} as timestamp))").alias("us"),
+    ev = events.where(F.col("ts").isNotNull()).select(
+        F.col("event_type").alias("key"),
+        _micros().alias("us"),
     )
     span = ev.agg(
         F.expr("(min(us) + max(us)) div 2").alias("mid_us")
@@ -2676,18 +2422,13 @@ def mix_shift(
     )
 
 
-def sql_mix_shift(
-    *,
-    table: str = "events",
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-) -> str:
+def sql_mix_shift() -> str:
     """DuckDB oracle twin of :func:`mix_shift` — identical midpoint,
     conditional counts, and HUGEINT ppm arithmetic."""
-    return f"""
+    return """
     WITH ev AS (
-      SELECT {key_col} AS key, EPOCH_US({ts_col}) AS us
-      FROM {table} WHERE {ts_col} IS NOT NULL),
+      SELECT event_type AS key, EPOCH_US(ts) AS us
+      FROM events WHERE ts IS NOT NULL),
     span AS (SELECT (MIN(us) + MAX(us)) // 2 AS mid_us FROM ev),
     per AS (
       SELECT key,
@@ -2724,15 +2465,7 @@ def sql_mix_shift(
 MARKOV_SCALE = 1 << 40
 
 
-def markov_stationary(
-    events: DataFrame,
-    *,
-    iterations: int = 5,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    state_col: str = "event_type",
-    id_col: str = "event_id",
-) -> DataFrame:
+def markov_stationary(events: DataFrame, *, iterations: int = 5) -> DataFrame:
     """Stationary distribution of the behavioral Markov chain — where
     the :func:`transition_matrix` process settles if it runs forever,
     i.e. the long-run share of attention each state captures (the
@@ -2767,15 +2500,15 @@ def markov_stationary(
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
     d38 = "decimal(38,0)"
-    w = Window.partitionBy(key_col).orderBy(
-        F.expr(f"unix_micros(cast({ts_col} as timestamp))"),
-        F.col(id_col).asc_nulls_last(),
+    w = Window.partitionBy("user_id").orderBy(
+        _micros(),
+        F.col("event_id").asc_nulls_last(),
     )
     steps = (
-        events.where(F.col(ts_col).isNotNull())
+        events.where(F.col("ts").isNotNull())
         .select(
-            F.lag(state_col).over(w).alias("from_state"),
-            F.col(state_col).alias("to_state"),
+            F.lag("event_type").over(w).alias("from_state"),
+            F.col("event_type").alias("to_state"),
         )
         .where(
             F.col("from_state").isNotNull() & F.col("to_state").isNotNull()
@@ -2846,26 +2579,18 @@ def markov_stationary(
     )
 
 
-def sql_markov_stationary(
-    *,
-    iterations: int = 5,
-    table: str = "events",
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    state_col: str = "event_type",
-    id_col: str = "event_id",
-) -> str:
+def sql_markov_stationary(*, iterations: int = 5) -> str:
     """DuckDB oracle twin of :func:`markov_stationary` — the identical
     integer rounds unrolled as CTEs."""
     s = float(MARKOV_SCALE)
     ctes = [
-        f"""steps AS (
-          SELECT LAG({state_col}) OVER (
-                   PARTITION BY {key_col}
-                   ORDER BY EPOCH_US({ts_col}), {id_col} NULLS LAST)
+        """steps AS (
+          SELECT LAG(event_type) OVER (
+                   PARTITION BY user_id
+                   ORDER BY EPOCH_US(ts), event_id NULLS LAST)
                    AS from_state,
-                 {state_col} AS to_state
-          FROM {table} WHERE {ts_col} IS NOT NULL)""",
+                 event_type AS to_state
+          FROM events WHERE ts IS NOT NULL)""",
         """counts AS (
           SELECT from_state, to_state, CAST(COUNT(*) AS BIGINT) AS n
           FROM steps
@@ -2916,13 +2641,7 @@ def sql_markov_stationary(
     )
 
 
-def changepoint(
-    events: DataFrame,
-    *,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def changepoint(events: DataFrame) -> DataFrame:
     """Per-key single-changepoint detection (binary segmentation, the
     first split of Scott & Knott / standard BinSeg): over the key's
     bucketed period sums in time order, find the split that maximizes
@@ -2957,9 +2676,7 @@ def changepoint(
     S_r = S − S_l does the work the pairwise Theil-Sen join needs), no
     global window, no driver math."""
     d38 = "decimal(38,0)"
-    daily = _period_fx(
-        events, key_col, ts_col, value_col
-    ).withColumnRenamed("vfx", "yfx")
+    daily = _period_fx(events, "event_type").withColumnRenamed("vfx", "yfx")
     w_ord = Window.partitionBy("key").orderBy("bucket")
     w_all = Window.partitionBy("key")
     per = daily.select(
@@ -3026,23 +2743,17 @@ def changepoint(
     )
 
 
-def sql_changepoint(
-    *,
-    table: str = "events",
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> str:
+def sql_changepoint() -> str:
     """DuckDB oracle twin of :func:`changepoint` — identical fx
     encoding, HUGEINT prefix sums, pinned score chain, same argmax."""
     s = float(EWMA_SCALE)
     return f"""
     WITH daily AS (
-      SELECT {key_col} AS key,
-             CAST(EPOCH_US({ts_col}) // {DAY_US} AS BIGINT) AS bucket,
-             CAST(FLOOR(CAST(SUM(CAST({value_col} AS DECIMAL(27,6)))
+      SELECT event_type AS key,
+             CAST(EPOCH_US(ts) // {DAY_US} AS BIGINT) AS bucket,
+             CAST(FLOOR(CAST(SUM(CAST(value AS DECIMAL(27,6)))
                              AS DOUBLE) * {s!r}) AS BIGINT) AS yfx
-      FROM {table} WHERE {ts_col} IS NOT NULL GROUP BY 1, 2),
+      FROM events WHERE ts IS NOT NULL GROUP BY 1, 2),
     per AS (
       SELECT key, bucket,
              CAST(ROW_NUMBER() OVER w AS BIGINT) AS t,
@@ -3080,13 +2791,7 @@ def sql_changepoint(
     """
 
 
-def anomaly_episodes(
-    events: DataFrame,
-    *,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def anomaly_episodes(events: DataFrame) -> DataFrame:
     """Per-key anomaly EPISODES: maximal runs of consecutive periods
     whose value sum exceeds 3/2 × the key's mean
     period sum — the detector outputs an incident LIST (start, end,
@@ -3115,9 +2820,7 @@ def anomaly_episodes(
     totals join, a key-partitioned rank window over the FLAGGED subset
     only, one combinable island reduce."""
     d38 = "decimal(38,0)"
-    daily = _period_fx(
-        events, key_col, ts_col, value_col
-    ).withColumnRenamed("vfx", "yfx")
+    daily = _period_fx(events, "event_type").withColumnRenamed("vfx", "yfx")
     tot = daily.groupBy("key").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(F.col("yfx").cast(d38)).cast(d38).alias("s"),
@@ -3146,22 +2849,16 @@ def anomaly_episodes(
     ).drop("island")
 
 
-def sql_anomaly_episodes(
-    *,
-    table: str = "events",
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> str:
+def sql_anomaly_episodes() -> str:
     """DuckDB oracle twin of :func:`anomaly_episodes`."""
     s = float(EWMA_SCALE)
     return f"""
     WITH daily AS (
-      SELECT {key_col} AS key,
-             CAST(EPOCH_US({ts_col}) // {DAY_US} AS BIGINT) AS bucket,
-             CAST(FLOOR(CAST(SUM(CAST({value_col} AS DECIMAL(27,6)))
+      SELECT event_type AS key,
+             CAST(EPOCH_US(ts) // {DAY_US} AS BIGINT) AS bucket,
+             CAST(FLOOR(CAST(SUM(CAST(value AS DECIMAL(27,6)))
                              AS DOUBLE) * {s!r}) AS BIGINT) AS yfx
-      FROM {table} WHERE {ts_col} IS NOT NULL GROUP BY 1, 2),
+      FROM events WHERE ts IS NOT NULL GROUP BY 1, 2),
     tot AS (
       SELECT key, CAST(COUNT(*) AS BIGINT) AS n,
              CAST(SUM(CAST(yfx AS HUGEINT)) AS HUGEINT) AS s
@@ -3187,14 +2884,7 @@ def sql_anomaly_episodes(
 WEEK_US = 7 * DAY_US
 
 
-def cohort_ltv(
-    events: DataFrame,
-    *,
-    entity_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def cohort_ltv(events: DataFrame) -> DataFrame:
     """Cohort lifetime-value curve: entities cohorted by their FIRST
     conversion week, each cohort's per-age revenue and its running
     cumulative — the LTV triangle finance reads payback periods off.
@@ -3218,13 +2908,13 @@ def cohort_ltv(
     rows)."""
     d38 = "decimal(38,0)"
     conv = events.where(
-        (F.col(type_col) == "purchase")
-        & F.col(entity_col).isNotNull()
-        & F.col(ts_col).isNotNull()
+        (F.col("event_type") == "purchase")
+        & F.col("user_id").isNotNull()
+        & F.col("ts").isNotNull()
     ).select(
-        F.col(entity_col).alias("ent"),
-        _bucket(ts_col, WEEK_US).cast("long").alias("week"),
-        F.col(value_col).alias("val"),
+        F.col("user_id").alias("ent"),
+        _bucket(WEEK_US).cast("long").alias("week"),
+        F.col("value").alias("val"),
     )
     first = conv.groupBy("ent").agg(F.min("week").alias("cohort_week"))
     aged = conv.join(first, "ent").select(
@@ -3261,23 +2951,16 @@ def cohort_ltv(
     )
 
 
-def sql_cohort_ltv(
-    *,
-    table: str = "events",
-    entity_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> str:
+def sql_cohort_ltv() -> str:
     """DuckDB oracle twin of :func:`cohort_ltv`."""
     return f"""
     WITH conv AS (
-      SELECT {entity_col} AS ent,
-             CAST(EPOCH_US({ts_col}) // {WEEK_US} AS BIGINT) AS week,
-             {value_col} AS val
-      FROM {table}
-      WHERE {type_col} = 'purchase'
-        AND {entity_col} IS NOT NULL AND {ts_col} IS NOT NULL),
+      SELECT user_id AS ent,
+             CAST(EPOCH_US(ts) // {WEEK_US} AS BIGINT) AS week,
+             value AS val
+      FROM events
+      WHERE event_type = 'purchase'
+        AND user_id IS NOT NULL AND ts IS NOT NULL),
     first AS (SELECT ent, MIN(week) AS cohort_week FROM conv GROUP BY 1),
     aged AS (
       SELECT c.ent, f.cohort_week, c.week - f.cohort_week AS age_weeks,
@@ -3303,13 +2986,7 @@ def sql_cohort_ltv(
 SESSION_GAP_US = 30 * 60 * 1_000_000
 
 
-def session_stats(
-    events: DataFrame,
-    *,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
+def session_stats(events: DataFrame) -> DataFrame:
     """Daily session-quality rollup from idle-gap sessionization: per
     day (of session start), session count, bounce count and rate
     (single-event sessions), exact total/closed duration, and events
@@ -3336,11 +3013,11 @@ def session_stats(
     d38 = "decimal(38,0)"
     w = Window.partitionBy("ent").orderBy("us", F.col("eid").asc_nulls_last())
     ev = events.where(
-        F.col(ts_col).isNotNull() & F.col(key_col).isNotNull()
+        F.col("ts").isNotNull() & F.col("user_id").isNotNull()
     ).select(
-        F.col(key_col).alias("ent"),
-        F.expr(f"unix_micros(cast({ts_col} as timestamp))").alias("us"),
-        F.col(id_col).alias("eid"),
+        F.col("user_id").alias("ent"),
+        _micros().alias("us"),
+        F.col("event_id").alias("eid"),
     )
     flagged = ev.select(
         "ent",
@@ -3391,20 +3068,14 @@ def session_stats(
     )
 
 
-def sql_session_stats(
-    *,
-    table: str = "events",
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> str:
+def sql_session_stats() -> str:
     """DuckDB oracle twin of :func:`session_stats`."""
     return f"""
     WITH ev AS (
-      SELECT {key_col} AS ent, EPOCH_US({ts_col}) AS us,
-             {id_col} AS eid
-      FROM {table}
-      WHERE {ts_col} IS NOT NULL AND {key_col} IS NOT NULL),
+      SELECT user_id AS ent, EPOCH_US(ts) AS us,
+             event_id AS eid
+      FROM events
+      WHERE ts IS NOT NULL AND user_id IS NOT NULL),
     flagged AS (
       SELECT ent, us, eid,
              CASE WHEN LAG(us) OVER w IS NULL
@@ -3441,14 +3112,7 @@ def sql_session_stats(
     """
 
 
-def rolling_regression(
-    events: DataFrame,
-    *,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    window_rows: int = 7,
-) -> DataFrame:
+def rolling_regression(events: DataFrame, *, window_rows: int = 7) -> DataFrame:
     """Per-key ROLLING ordinary-least-squares trend: at every occupied
     bucket, the OLS slope of the key's last ``window_rows`` occupied
     period sums — the time-local refinement of :func:`linear_trend`
@@ -3482,7 +3146,7 @@ def rolling_regression(
     corpus pass. Headroom: x is grid-sized (≤ days of history),
     yfx ≤ 2^20·Σ|value|/day — x·yfx stays inside BIGINT to ~10^4 days
     of ~10^14-fx daily mass."""
-    per = _x_offsets(_period_fx(events, key_col, ts_col, value_col)).select(
+    per = _x_offsets(_period_fx(events, "event_type")).select(
         "key",
         "bucket",
         "x",
@@ -3524,14 +3188,7 @@ def rolling_regression(
     )
 
 
-def sql_rolling_regression(
-    *,
-    table: str = "events",
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    window_rows: int = 7,
-) -> str:
+def sql_rolling_regression(*, window_rows: int = 7) -> str:
     """DuckDB oracle twin of :func:`rolling_regression` (HUGEINT
     num/den routed through VARCHAR for the correctly-rounded double —
     the profiler's int128→double note)."""
@@ -3541,10 +3198,10 @@ def sql_rolling_regression(
       -- `div` (verified on 1.0.0: -7 // 2 = -3), so the bucket grids
       -- agree even for pre-epoch timestamps; pinned by
       -- tests/test_round11_review_fixes.py::TestPreEpochBucketParity
-      SELECT {key_col} AS key,
-             EPOCH_US({ts_col}) // {DAY_US} AS bucket,
-             CAST(SUM(CAST({value_col} AS DECIMAL(27,6))) AS DOUBLE) AS v
-      FROM {table} WHERE {ts_col} IS NOT NULL GROUP BY 1, 2),
+      SELECT event_type AS key,
+             EPOCH_US(ts) // {DAY_US} AS bucket,
+             CAST(SUM(CAST(value AS DECIMAL(27,6))) AS DOUBLE) AS v
+      FROM events WHERE ts IS NOT NULL GROUP BY 1, 2),
     per AS (
       SELECT key, bucket,
              CAST(bucket - MIN(bucket) OVER (PARTITION BY key) AS BIGINT)
@@ -3580,13 +3237,7 @@ def sql_rolling_regression(
     """
 
 
-def growth_accounting(
-    events: DataFrame,
-    *,
-    unit_col: str = "user_id",
-    ts_col: str = "ts",
-    dormancy_days: int = 7,
-) -> DataFrame:
+def growth_accounting(events: DataFrame, *, dormancy_days: int = 7) -> DataFrame:
     """Daily growth accounting — the new / retained / resurrected /
     churned decomposition every growth dashboard opens with, built
     from the same distinct (unit, day) activity frame the DAU rollup
@@ -3613,11 +3264,11 @@ def growth_accounting(
     r = int(dormancy_days)
     act = (
         events.where(
-            F.col(unit_col).isNotNull() & F.col(ts_col).isNotNull()
+            F.col("user_id").isNotNull() & F.col("ts").isNotNull()
         )
         .select(
-            F.col(unit_col).alias("unit"),
-            _bucket(ts_col, DAY_US).cast("long").alias("day"),
+            F.col("user_id").alias("unit"),
+            _bucket(DAY_US).cast("long").alias("day"),
         )
         .distinct()
     )
@@ -3659,21 +3310,15 @@ def growth_accounting(
     )
 
 
-def sql_growth_accounting(
-    *,
-    table: str = "events",
-    unit_col: str = "user_id",
-    ts_col: str = "ts",
-    dormancy_days: int = 7,
-) -> str:
+def sql_growth_accounting(*, dormancy_days: int = 7) -> str:
     """DuckDB oracle twin of :func:`growth_accounting`."""
     r = int(dormancy_days)
     return f"""
     WITH act AS (
-      SELECT DISTINCT {unit_col} AS unit,
-             CAST(EPOCH_US({ts_col}) // {DAY_US} AS BIGINT) AS day
-      FROM {table}
-      WHERE {unit_col} IS NOT NULL AND {ts_col} IS NOT NULL),
+      SELECT DISTINCT user_id AS unit,
+             CAST(EPOCH_US(ts) // {DAY_US} AS BIGINT) AS day
+      FROM events
+      WHERE user_id IS NOT NULL AND ts IS NOT NULL),
     per AS (
       SELECT unit, day,
              MIN(day) OVER (PARTITION BY unit) AS first_day,
@@ -3697,13 +3342,7 @@ def sql_growth_accounting(
     """
 
 
-def runs_test(
-    events: DataFrame,
-    *,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def runs_test(events: DataFrame) -> DataFrame:
     """Wald–Wolfowitz runs test on each key's daily up/down moves —
     the randomness audit beside the trend tests: Mann-Kendall asks "is
     there a monotone trend", the runs test asks "is the SEQUENCE of
@@ -3734,7 +3373,7 @@ def runs_test(
     windows over the period frame (days×keys rows): the lag for
     differences and the lag for alternation counts. No joins, no
     corpus-sized window."""
-    daily = _period_fx(events, key_col, ts_col, value_col)
+    daily = _period_fx(events, "event_type")
     w = Window.partitionBy("key").orderBy("bucket")
     diffs = daily.select(
         "key",
@@ -3787,13 +3426,7 @@ def runs_test(
     )
 
 
-def sql_runs_test(
-    *,
-    table: str = "events",
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> str:
+def sql_runs_test() -> str:
     """DuckDB oracle twin of :func:`runs_test`."""
     return f"""
     WITH daily AS (
@@ -3801,10 +3434,10 @@ def sql_runs_test(
       -- `div` (verified on 1.0.0: -7 // 2 = -3), so the bucket grids
       -- agree even for pre-epoch timestamps; pinned by
       -- tests/test_round11_review_fixes.py::TestPreEpochBucketParity
-      SELECT {key_col} AS key,
-             EPOCH_US({ts_col}) // {DAY_US} AS bucket,
-             CAST(SUM(CAST({value_col} AS DECIMAL(27,6))) AS DOUBLE) AS v
-      FROM {table} WHERE {ts_col} IS NOT NULL GROUP BY 1, 2),
+      SELECT event_type AS key,
+             EPOCH_US(ts) // {DAY_US} AS bucket,
+             CAST(SUM(CAST(value AS DECIMAL(27,6))) AS DOUBLE) AS v
+      FROM events WHERE ts IS NOT NULL GROUP BY 1, 2),
     fx AS (
       SELECT key, bucket,
              CAST(FLOOR(v * {float(EWMA_SCALE)!r}) AS BIGINT) AS vfx
@@ -3855,8 +3488,6 @@ def linear_interpolation(
     events: DataFrame,
     *,
     key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
 ) -> DataFrame:
     """Regularize an event stream onto a dense per-key time grid and
     LINEARLY interpolate observation gaps — the `interpolate()`
@@ -3900,7 +3531,7 @@ def linear_interpolation(
         .orderBy("bucket")
         .rowsBetween(Window.currentRow, Window.unboundedFollowing)
     )
-    j = _dense_grid(events, key_col, ts_col, value_col).select(
+    j = _dense_grid(events, key_col).select(
         "key",
         "bucket",
         "n_events",
@@ -3934,22 +3565,16 @@ def linear_interpolation(
     )
 
 
-def sql_linear_interpolation(
-    *,
-    table: str = "events",
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> str:
+def sql_linear_interpolation(*, key_col: str = "event_type") -> str:
     """DuckDB oracle twin of :func:`linear_interpolation` — identical
     grid, struct-carried neighbors, and pinned interpolation chain."""
     return f"""
     WITH occ AS (
-      SELECT {key_col} AS key, EPOCH_US({ts_col}) // {HOUR_US} AS bucket,
+      SELECT {key_col} AS key, EPOCH_US(ts) // {HOUR_US} AS bucket,
              COUNT(*) AS n_events,
-             CAST(SUM(CAST({value_col} AS DECIMAL(27,6))) AS DOUBLE)
+             CAST(SUM(CAST(value AS DECIMAL(27,6))) AS DOUBLE)
                AS bucket_sum
-      FROM {table} GROUP BY 1, 2),
+      FROM events GROUP BY 1, 2),
     spans AS (SELECT key, MIN(bucket) AS b0, MAX(bucket) AS b1
               FROM occ GROUP BY key),
     grid AS (SELECT key, t.bucket
@@ -3979,14 +3604,7 @@ def sql_linear_interpolation(
     """
 
 
-def seasonal_naive(
-    events: DataFrame,
-    *,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    season: int = 7,
-) -> DataFrame:
+def seasonal_naive(events: DataFrame, *, season: int = 7) -> DataFrame:
     """Per-key seasonal-naive forecast skill — the missing member of
     the forecasting fold family (EWMA / Holt / CUSUM): the forecast
     for period t is simply the value one SEASON earlier, v(t −
@@ -4026,12 +3644,7 @@ def seasonal_naive(
     no skew surface beyond the grid."""
     if season < 1:
         raise ValueError(f"season must be >= 1, got {season}")
-    daily = _period_fx(
-        events.where(F.col(value_col).isNotNull()),
-        key_col,
-        ts_col,
-        value_col,
-    )
+    daily = _period_fx(events.where(F.col("value").isNotNull()), "event_type")
     sn = daily.select(
         "key",
         (F.col("bucket") + season).alias("bucket"),
@@ -4107,14 +3720,7 @@ def seasonal_naive(
     )
 
 
-def sql_seasonal_naive(
-    *,
-    table: str = "events",
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    season: int = 7,
-) -> str:
+def sql_seasonal_naive(*, table: str = "events", season: int = 7) -> str:
     """DuckDB oracle twin of :func:`seasonal_naive` — identical grid,
     calendar lags, fx floors, and integer divisions."""
     s = float(EWMA_SCALE)
@@ -4124,12 +3730,12 @@ def sql_seasonal_naive(
       -- `div` (verified on 1.0.0: -7 // 2 = -3), so the bucket grids
       -- agree even for pre-epoch timestamps; pinned by
       -- tests/test_round11_review_fixes.py::TestPreEpochBucketParity
-      SELECT {key_col} AS key,
-             EPOCH_US({ts_col}) // {DAY_US} AS bucket,
-             CAST(FLOOR(CAST(SUM(CAST({value_col} AS DECIMAL(27,6)))
+      SELECT event_type AS key,
+             EPOCH_US(ts) // {DAY_US} AS bucket,
+             CAST(FLOOR(CAST(SUM(CAST(value AS DECIMAL(27,6)))
                              AS DOUBLE) * {s!r}) AS BIGINT) AS vfx
       FROM {table}
-      WHERE {ts_col} IS NOT NULL AND {value_col} IS NOT NULL
+      WHERE ts IS NOT NULL AND value IS NOT NULL
       GROUP BY 1, 2),
     j AS (
       SELECT d.key, d.bucket, d.vfx, sn.vfx AS sn_fx, nv.vfx AS nv_fx
@@ -4169,13 +3775,7 @@ def sql_seasonal_naive(
     """
 
 
-def rolling_distinct(
-    events: DataFrame,
-    *,
-    id_col: str = "user_id",
-    ts_col: str = "ts",
-    window: int = 7,
-) -> DataFrame:
+def rolling_distinct(events: DataFrame, *, window: int = 7) -> DataFrame:
     """Exact rolling distinct-count engagement curve — per grid day d:
     DAU (distinct ids active on d), WAU (distinct ids active in
     [d−window+1, d]), and the DAU/WAU stickiness ratio — the
@@ -4201,10 +3801,10 @@ def rolling_distinct(
     if window < 1:
         raise ValueError(f"window must be >= 1, got {window}")
     pairs = (
-        events.where(F.col(ts_col).isNotNull() & F.col(id_col).isNotNull())
+        events.where(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
         .select(
-            F.col(id_col).alias("id"),
-            _bucket(ts_col, DAY_US).alias("bucket"),
+            F.col("user_id").alias("id"),
+            _bucket(DAY_US).alias("bucket"),
         )
         .distinct()
     )
@@ -4246,22 +3846,16 @@ def rolling_distinct(
     )
 
 
-def sql_rolling_distinct(
-    *,
-    table: str = "events",
-    id_col: str = "user_id",
-    ts_col: str = "ts",
-    window: int = 7,
-) -> str:
+def sql_rolling_distinct(*, table: str = "events", window: int = 7) -> str:
     """DuckDB oracle twin of :func:`rolling_distinct` — identical
     grid, contribution explode, and integer ratio."""
     return f"""
     WITH pairs AS (
       -- integer // truncates like Spark div: sql_seasonal_naive's note
-      SELECT DISTINCT {id_col} AS id,
-             EPOCH_US({ts_col}) // {DAY_US} AS bucket
+      SELECT DISTINCT user_id AS id,
+             EPOCH_US(ts) // {DAY_US} AS bucket
       FROM {table}
-      WHERE {ts_col} IS NOT NULL AND {id_col} IS NOT NULL),
+      WHERE ts IS NOT NULL AND user_id IS NOT NULL),
     dau AS (
       SELECT bucket AS day_bucket, CAST(COUNT(*) AS BIGINT) AS dau
       FROM pairs GROUP BY 1),

@@ -3107,7 +3107,7 @@ def profile_ks_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").where(
         F.col("ts").isNotNull()
     )
-    day = _ks_bucket("ts", _KS_DAY_US)
+    day = _ks_bucket(_KS_DAY_US)
     a = ev.where(day % 2 == 0).select(F.col("value").alias("v"))
     b = ev.where(day % 2 == 1).select(F.col("value").alias("v"))
     return ks_two_sample(a, b)

@@ -9,34 +9,86 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kinesis_stream_spark.operators.asof import (
+    asof_join,
+    sql_asof_join,
+)
+from kinesis_stream_spark.operators.attribution import (
+    conversion_lag_histogram,
+    first_last_touch,
+    sql_conversion_lag_histogram,
+    sql_first_last_touch,
+)
 from kinesis_stream_spark.operators.temporal import (
     DAY_US,
-    HOUR_US,
     EWMA_SCALE,
+    HOUR_US,
+    _bucket,
+    active_user_windows,
+    anomaly_episodes,
+    autocorrelation,
+    changepoint,
+    cohort_ltv,
     cusum,
     ewma,
-    holt,
-    peak_concurrency,
-    top_paths,
     gap_fill_forward,
-    linear_trend,
-    mann_kendall,
-    scd2_compact,
-    seasonal_profile,
-    sql_linear_trend,
-    sql_seasonal_profile,
-    sql_survival_curve,
-    survival_curve,
-    active_user_windows,
-    sql_active_user_windows,
+    growth_accounting,
+    holt,
+    interarrival_burstiness,
     lead_lag_correlation,
+    linear_interpolation,
+    linear_trend,
+    mad_outliers,
+    mann_kendall,
+    markov_stationary,
+    mix_shift,
+    multires_rollup,
     ohlc_bars,
-    sql_lead_lag_correlation,
-    sql_ohlc_bars,
+    peak_concurrency,
+    rfm_segments,
+    rolling_distinct,
+    rolling_regression,
+    runs_test,
+    scd2_compact,
+    seasonal_naive,
+    seasonal_profile,
     seasonal_residual_outliers,
+    session_stats,
+    simpson_diversity,
+    sql_active_user_windows,
+    sql_anomaly_episodes,
+    sql_autocorrelation,
+    sql_changepoint,
+    sql_cohort_ltv,
+    sql_growth_accounting,
+    sql_interarrival_burstiness,
+    sql_lead_lag_correlation,
+    sql_linear_interpolation,
+    sql_linear_trend,
+    sql_markov_stationary,
+    sql_mix_shift,
+    sql_ohlc_bars,
+    sql_rfm_segments,
+    sql_rolling_distinct,
+    sql_rolling_regression,
+    sql_runs_test,
+    sql_seasonal_naive,
+    sql_seasonal_profile,
     sql_seasonal_residual_outliers,
+    sql_session_stats,
+    sql_state_durations,
     sql_strict_funnel,
+    sql_survival_curve,
+    sql_theil_sen_trend,
+    sql_time_weighted_avg,
+    state_durations,
     strict_funnel,
+    survival_curve,
+    theil_sen_trend,
+    time_weighted_avg,
+    top_paths,
+    transition_matrix,
+    winsorize_stats,
 )
 from kinesis_stream_spark.queries import make_q
 from kinesis_stream_spark.sources.batch import load_table
@@ -85,15 +137,9 @@ def events_linear_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
     (right for rate-like series where a carried-forward plateau lies).
     Pinned double interpolation chain between struct-carried observed
     neighbors; see operators/temporal.py:linear_interpolation."""
-    from kinesis_stream_spark.operators.temporal import linear_interpolation
-
     ev = load_table(spark, sf_dir, "events")
     return linear_interpolation(ev)
 
-
-from kinesis_stream_spark.operators.temporal import (  # noqa: E402
-    sql_linear_interpolation,
-)
 
 ORACLE["events_linear_interpolation"] = sql_linear_interpolation()
 
@@ -162,8 +208,6 @@ def events_multires_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     grains of the events stream from one scan (single Expand + hash
     aggregate). Buckets are integer epoch indexes; sums are exact
     DECIMAL accumulation on both engines."""
-    from kinesis_stream_spark.operators.temporal import multires_rollup
-
     return multires_rollup(load_table(spark, sf_dir, "events"))
 
 
@@ -188,8 +232,6 @@ def events_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type robust outliers (|x − median| > 3·MAD). The oracle
     replays both exact-percentile passes and the flagging rule, pinning
     the flagged set and the per-row scores."""
-    from kinesis_stream_spark.operators.temporal import mad_outliers
-
     return mad_outliers(load_table(spark, sf_dir, "events"))
 
 
@@ -218,8 +260,6 @@ def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     (from_state, to_state) counts + row-normalized probabilities. The
     oracle replays the (epoch-micros, event_id)-ordered lag chain and
     the normalizing divide."""
-    from kinesis_stream_spark.operators.temporal import transition_matrix
-
     return transition_matrix(load_table(spark, sf_dir, "events")).orderBy(
         "from_state", "to_state"
     )
@@ -258,8 +298,6 @@ def events_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts on each side, and the winsorized sum/mean under exact-decimal
     accumulation. The oracle replays the percentile fit, the NULL-gated
     clamp, and the decimal sums."""
-    from kinesis_stream_spark.operators.temporal import winsorize_stats
-
     return winsorize_stats(load_table(spark, sf_dir, "events")).orderBy("event_type")
 
 
@@ -291,8 +329,6 @@ def events_user_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     probability and its 1−x complement — the log-free entropy stand-in
     for behavioral profiling. Integer counts, exact-DECIMAL Σc², two
     IEEE divides; the oracle replays both aggregate levels."""
-    from kinesis_stream_spark.operators.temporal import simpson_diversity
-
     return simpson_diversity(load_table(spark, sf_dir, "events")).orderBy(
         "user_id"
     )
@@ -672,8 +708,6 @@ def events_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     overweights chatty periods; TWA weights by holding time (operator
     docstring for the exactness chain and the VARCHAR-routed DuckDB
     casts)."""
-    from kinesis_stream_spark.operators.temporal import time_weighted_avg
-
     return time_weighted_avg(load_table(spark, sf_dir, "events")).orderBy(
         "key"
     )
@@ -689,17 +723,10 @@ def events_state_durations(spark: SparkSession, sf_dir: str) -> DataFrame:
     dwell time in integer microseconds, interval counts, and the
     integer-ppm share of all observed dwell time. Last-event intervals
     are censored out by contract."""
-    from kinesis_stream_spark.operators.temporal import state_durations
-
     return state_durations(load_table(spark, sf_dir, "events")).orderBy(
         "state"
     )
 
-
-from kinesis_stream_spark.operators.temporal import (  # noqa: E402
-    sql_state_durations,
-    sql_time_weighted_avg,
-)
 
 ORACLE["events_time_weighted_avg"] = (
     sql_time_weighted_avg() + " ORDER BY key"
@@ -716,16 +743,10 @@ def events_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside a 7-day lookback, aggregated per touch type with
     exact-decimal credited value (operator docstring in
     operators/attribution.py for the bounded-join scale shape)."""
-    from kinesis_stream_spark.operators.attribution import first_last_touch
-
     return first_last_touch(load_table(spark, sf_dir, "events")).orderBy(
         "touch_type"
     )
 
-
-from kinesis_stream_spark.operators.attribution import (  # noqa: E402
-    sql_first_last_touch,
-)
 
 ORACLE["events_touch_attribution"] = (
     sql_first_last_touch() + " ORDER BY touch_type"
@@ -738,8 +759,6 @@ def events_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     persistence/seasonality screen beside the lead-lag
     cross-correlation, same fixed-point moment discipline (operator
     docstring)."""
-    from kinesis_stream_spark.operators.temporal import autocorrelation
-
     return autocorrelation(load_table(spark, sf_dir, "events")).orderBy(
         "key", "lag"
     )
@@ -751,19 +770,10 @@ def events_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the arrival-process anomaly screen (metronome-regular scrapers
     score B ≈ −1); exact HUGEINT/DECIMAL38 moments, VARCHAR-routed
     finals (operator docstring)."""
-    from kinesis_stream_spark.operators.temporal import (
-        interarrival_burstiness,
-    )
-
     return interarrival_burstiness(
         load_table(spark, sf_dir, "events")
     ).orderBy("key")
 
-
-from kinesis_stream_spark.operators.temporal import (  # noqa: E402
-    sql_autocorrelation,
-    sql_interarrival_burstiness,
-)
 
 ORACLE["events_autocorrelation"] = (
     sql_autocorrelation() + " ORDER BY key, lag"
@@ -852,20 +862,16 @@ def integrity_sequence_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_daily_percentile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-(type, day) exact percentile bands (p50/p90/p99) — the
-    latency-dashboard aggregate, one grouped percentile pass; the
-    interpolation parity between Spark percentile and DuckDB
-    QUANTILE_CONT is pinned by the relational percentile oracles. At
-    100 TB the approx_percentile swap applies (the *_approx family's
-    documented contract); NULL timestamps are excluded by the family
-    convention."""
+    """Per-(type, day) percentile bands (p50/p90/p99) — the
+    latency-dashboard aggregate, one grouped pass of Spark's exact
+    ``percentile``. The oracle pins it against DuckDB's
+    ``QUANTILE_CONT``: both interpolate linearly at rank p·(n−1). NULL
+    timestamps are excluded by the family convention."""
     ev = load_table(spark, sf_dir, "events").where(F.col("ts").isNotNull())
-    from kinesis_stream_spark.operators.temporal import _bucket
-
     return (
         ev.groupBy(
             F.col("event_type").alias("key"),
-            _bucket("ts", DAY_US).alias("day"),
+            _bucket(DAY_US).alias("day"),
         )
         .agg(
             F.count("value").alias("n"),
@@ -883,16 +889,10 @@ def events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     monetary plus 1-5 quintile scores from broadcast exact-percentile
     boundaries (threshold compares, not a global-sort ntile — operator
     docstring)."""
-    from kinesis_stream_spark.operators.temporal import rfm_segments
-
     return rfm_segments(load_table(spark, sf_dir, "events")).orderBy(
         "user_id"
     )
 
-
-from kinesis_stream_spark.operators.temporal import (  # noqa: E402
-    sql_rfm_segments,
-)
 
 ORACLE["events_rfm_segments"] = sql_rfm_segments() + " ORDER BY user_id"
 
@@ -904,18 +904,10 @@ def events_conversion_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     funnel-velocity readout sharing attribution's single value-RANGE
     window (operators/attribution.py); the oracle replays the
     independent join formulation."""
-    from kinesis_stream_spark.operators.attribution import (
-        conversion_lag_histogram,
-    )
-
     return conversion_lag_histogram(
         load_table(spark, sf_dir, "events")
     ).orderBy("lag_bucket")
 
-
-from kinesis_stream_spark.operators.attribution import (  # noqa: E402
-    sql_conversion_lag_histogram,
-)
 
 ORACLE["events_conversion_lag"] = (
     sql_conversion_lag_histogram() + " ORDER BY lag_bucket"
@@ -929,8 +921,6 @@ def events_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     day OLS (events_linear_trend) chases; fx-encoded period sums,
     pair slopes as single pinned IEEE divides, order-statistic median
     (operator docstring for the grid-bounded pair-frame shape)."""
-    from kinesis_stream_spark.operators.temporal import theil_sen_trend
-
     return theil_sen_trend(load_table(spark, sf_dir, "events")).orderBy(
         "key"
     )
@@ -944,8 +934,6 @@ def events_mix_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume spikes surface as drift instead of moving the boundary
     (operator docstring for why the ln(p/q) term stays out of the
     cross-engine surface)."""
-    from kinesis_stream_spark.operators.temporal import mix_shift
-
     return mix_shift(load_table(spark, sf_dir, "events")).orderBy("key")
 
 
@@ -959,18 +947,10 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor-division mass discipline) over the per-user lag-chain
     transition counts; the steady-state event mix next to the observed
     one (operator docstring; oracle unrolls the identical rounds)."""
-    from kinesis_stream_spark.operators.temporal import markov_stationary
-
     return markov_stationary(
         load_table(spark, sf_dir, "events"), iterations=_MARKOV_ITERS
     ).orderBy("state")
 
-
-from kinesis_stream_spark.operators.temporal import (  # noqa: E402
-    sql_markov_stationary,
-    sql_mix_shift,
-    sql_theil_sen_trend,
-)
 
 ORACLE["events_theil_sen_trend"] = sql_theil_sen_trend() + " ORDER BY key"
 ORACLE["events_mix_shift"] = sql_mix_shift() + " ORDER BY key"
@@ -986,14 +966,8 @@ def events_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     contrast, with before/after means — CUSUM alarms the drift, this
     names the day; exact fx prefix sums, one pinned IEEE score chain,
     deterministic argmax (operator docstring)."""
-    from kinesis_stream_spark.operators.temporal import changepoint
-
     return changepoint(load_table(spark, sf_dir, "events")).orderBy("key")
 
-
-from kinesis_stream_spark.operators.temporal import (  # noqa: E402
-    sql_changepoint,
-)
 
 ORACLE["events_changepoint"] = sql_changepoint() + " ORDER BY key"
 
@@ -1005,8 +979,6 @@ def events_anomaly_episodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     (start, end, duration, peak) — the point detectors stitched into
     what actually gets paged; integer cross-multiplied threshold,
     bucket−rank islands (operator docstring)."""
-    from kinesis_stream_spark.operators.temporal import anomaly_episodes
-
     return anomaly_episodes(load_table(spark, sf_dir, "events")).orderBy(
         "key", "start_bucket"
     )
@@ -1019,17 +991,10 @@ def events_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     running cumulative a payback analysis reads — integer end to end,
     cohort-partitioned window on the grid frame (operator
     docstring)."""
-    from kinesis_stream_spark.operators.temporal import cohort_ltv
-
     return cohort_ltv(load_table(spark, sf_dir, "events")).orderBy(
         "cohort_week", "age_weeks"
     )
 
-
-from kinesis_stream_spark.operators.temporal import (  # noqa: E402
-    sql_anomaly_episodes,
-    sql_cohort_ltv,
-)
 
 ORACLE["events_anomaly_episodes"] = (
     sql_anomaly_episodes() + " ORDER BY key, start_bucket"
@@ -1046,14 +1011,8 @@ def events_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     session, exact closed durations — the batch twin of the streaming
     session window, one entity shuffle powering both lag windows
     (operator docstring)."""
-    from kinesis_stream_spark.operators.temporal import session_stats
-
     return session_stats(load_table(spark, sf_dir, "events")).orderBy("day")
 
-
-from kinesis_stream_spark.operators.temporal import (  # noqa: E402
-    sql_session_stats,
-)
 
 ORACLE["events_session_stats"] = sql_session_stats() + " ORDER BY day"
 
@@ -1065,16 +1024,10 @@ def events_rolling_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     events_linear_trend: exact fx window moments, closed-form slope,
     true grid offsets so gaps don't flatten the trend
     (operators/temporal.py)."""
-    from kinesis_stream_spark.operators.temporal import rolling_regression
-
     return rolling_regression(load_table(spark, sf_dir, "events")).orderBy(
         "key", "bucket"
     )
 
-
-from kinesis_stream_spark.operators.temporal import (  # noqa: E402
-    sql_rolling_regression,
-)
 
 ORACLE["events_rolling_regression"] = (
     sql_rolling_regression() + " ORDER BY key, bucket"
@@ -1088,16 +1041,10 @@ def events_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     one distinct activity pass, one unit-partitioned window serving
     min/lag/lead at once, churn asserted only inside the corpus
     horizon (operators/temporal.py)."""
-    from kinesis_stream_spark.operators.temporal import growth_accounting
-
     return growth_accounting(load_table(spark, sf_dir, "events")).orderBy(
         "day", "status"
     )
 
-
-from kinesis_stream_spark.operators.temporal import (  # noqa: E402
-    sql_growth_accounting,
-)
 
 ORACLE["events_growth_accounting"] = (
     sql_growth_accounting() + " ORDER BY day, status"
@@ -1111,14 +1058,8 @@ def events_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     oscillation scores high), the randomness audit beside the
     Mann-Kendall trend: exact sign/run counts, pinned z chain
     (operators/temporal.py)."""
-    from kinesis_stream_spark.operators.temporal import runs_test
-
     return runs_test(load_table(spark, sf_dir, "events")).orderBy("key")
 
-
-from kinesis_stream_spark.operators.temporal import (  # noqa: E402
-    sql_runs_test,
-)
 
 ORACLE["events_runs_test"] = sql_runs_test() + " ORDER BY key"
 
@@ -1133,8 +1074,6 @@ def join_asof_error_before_purchase(
     no recent error keep NULLs) — the union-window single-exchange
     plan, not a candidate-pair join
     (operators/asof.py:asof_join)."""
-    from kinesis_stream_spark.operators.asof import asof_join
-
     ev = load_table(spark, sf_dir, "events")
     purchases = ev.where(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"
@@ -1154,8 +1093,6 @@ def join_asof_error_before_purchase(
         tolerance_us=6 * 3600 * 1_000_000,
     ).orderBy("event_id")
 
-
-from kinesis_stream_spark.operators.asof import sql_asof_join  # noqa: E402
 
 ORACLE["join_asof_error_before_purchase"] = (
     sql_asof_join(
@@ -1192,8 +1129,6 @@ def join_asof_next_purchase_after_error(
     time-to-recovery readout. Same union-window single-exchange
     plan; only the timeline walk direction flips
     (operators/asof.py:asof_join)."""
-    from kinesis_stream_spark.operators.asof import asof_join
-
     ev = load_table(spark, sf_dir, "events")
     errors = ev.where(F.col("event_type") == "error").select(
         "event_id", "user_id", "ts"
@@ -1247,15 +1182,9 @@ def events_seasonal_naive_forecast(
     MASE twin, and the next-day forecast — the baseline every
     seasonal model must beat
     (operators/temporal.py:seasonal_naive)."""
-    from kinesis_stream_spark.operators.temporal import seasonal_naive
-
     ev = load_table(spark, sf_dir, "events")
     return seasonal_naive(ev, season=7).orderBy("key")
 
-
-from kinesis_stream_spark.operators.temporal import (  # noqa: E402
-    sql_seasonal_naive,
-)
 
 ORACLE["events_seasonal_naive_forecast"] = (
     sql_seasonal_naive(season=7) + " ORDER BY key"
@@ -1269,17 +1198,11 @@ def events_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed as a bounded contribution explode (window × distinct
     pairs), never a per-day range self-join
     (operators/temporal.py:rolling_distinct)."""
-    from kinesis_stream_spark.operators.temporal import rolling_distinct
-
     ev = load_table(spark, sf_dir, "events")
     return rolling_distinct(ev, window=7).orderBy(
         "day_bucket"
     )
 
-
-from kinesis_stream_spark.operators.temporal import (  # noqa: E402
-    sql_rolling_distinct,
-)
 
 ORACLE["events_rolling_distinct"] = (
     sql_rolling_distinct(window=7) + " ORDER BY day_bucket"

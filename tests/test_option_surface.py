@@ -12,8 +12,12 @@ with the default as source text, so ``DAY_US`` passed for a default of
 ``DAY_US`` does not count as setting it. A parameter of a function
 with a ``sql_*`` DuckDB twin (or of the twin) counts as set when the
 same-named parameter of either one is set, since the pair must keep
-one contract. Parameters that name the input schema — column and table
-names, keys, timestamps — are out of scope.
+one contract.
+
+Parameters that name the input schema (column and table names, keys,
+timestamps) are in scope only for the families bound to their schema,
+listed in :data:`SCHEMA_BOUND`; a family joins the tuple once its
+unset names have become literals. Elsewhere they are still skipped.
 """
 
 from __future__ import annotations
@@ -28,6 +32,8 @@ PACKAGE = ROOT / "kinesis_stream_spark"
 SURFACE = (PACKAGE / "operators", PACKAGE / "queries")
 CALLERS = (PACKAGE, ROOT / "perfbench", ROOT / "tests")
 SCHEMA_NAME = re.compile(r"_col|_cols|table|key|_key|_ts")
+#: operator families whose schema-name parameters the census covers
+SCHEMA_BOUND = ("operators/temporal.py",)
 
 
 def _parse(path: Path) -> ast.Module:
@@ -117,7 +123,7 @@ def unset_options() -> list[str]:
     dead = []
     for (module, name), params in sorted(options.items()):
         for param in params:
-            if SCHEMA_NAME.search(param):
+            if SCHEMA_NAME.search(param) and module not in SCHEMA_BOUND:
                 continue
             pair = [(module, name)] + [
                 t for t in _twins(options, name) if param in options[t]
@@ -150,3 +156,8 @@ def test_census_sees_a_knob_only_its_default_reaches(tmp_path, monkeypatch):
     monkeypatch.setitem(globals(), "PACKAGE", surface.parent)
     monkeypatch.setitem(globals(), "CALLERS", (surface,))
     assert unset_options() == ["operators/m.py:op(unit_us=DAY_US)"]
+    monkeypatch.setitem(globals(), "SCHEMA_BOUND", ("operators/m.py",))
+    assert unset_options() == [
+        "operators/m.py:op(unit_us=DAY_US)",
+        "operators/m.py:op(value_col='v')",
+    ]

@@ -30,9 +30,7 @@ def test_gap_fill_dense_grid_and_forward_fill(spark):
     )
     out = {
         (r.key, r.bucket): r
-        for r in gap_fill_forward(
-            ev, key_col="key", ts_col="ts", value_col="value"
-        ).collect()
+        for r in gap_fill_forward(ev, key_col="key").collect()
     }
     a_buckets = sorted(b for k, b in out if k == "a")
     assert a_buckets == list(range(a_buckets[0], a_buckets[0] + 4))
@@ -60,9 +58,7 @@ def test_linear_interpolation_hand_computed(spark):
     )
     out = {
         (r.key, r.bucket): r
-        for r in linear_interpolation(
-            ev, key_col="key", ts_col="ts", value_col="value"
-        ).collect()
+        for r in linear_interpolation(ev, key_col="key").collect()
     }
     a_buckets = sorted(b for k, b in out if k == "a")
     assert a_buckets == list(range(a_buckets[0], a_buckets[0] + 4))
@@ -79,10 +75,7 @@ def test_linear_interpolation_hand_computed(spark):
 
 def test_gap_fill_empty_input(spark):
     ev = spark.createDataFrame([], "key string, ts timestamp, value double")
-    assert (
-        gap_fill_forward(ev, key_col="key", ts_col="ts", value_col="value").count()
-        == 0
-    )
+    assert gap_fill_forward(ev, key_col="key").count() == 0
 
 
 def test_scd2_runs_collapse_and_intervals_chain(spark):
@@ -100,8 +93,7 @@ def test_scd2_runs_collapse_and_intervals_chain(spark):
         "user_id string, ts timestamp, event_type string",
     )
     rows = sorted(
-        scd2_compact(ev, key_col="user_id", ts_col="ts", status_col="event_type")
-        .collect(),
+        scd2_compact(ev).collect(),
         key=lambda r: (r.key, r.valid_from),
     )
     u1 = [r for r in rows if r.key == "u1"]
@@ -437,7 +429,7 @@ def test_period_fx_matches_python_replay(spark):
         ("b", ts(5, 10), None),      # a NULL beside a value is skipped
         ("c", None, 4.0),            # a key with only NULL timestamps
     ]
-    df = spark.createDataFrame(rows, "k string, ts timestamp, v double")
+    df = spark.createDataFrame(rows, "k string, ts timestamp, value double")
 
     cells: dict = {}
     for k, t, v in rows:
@@ -449,7 +441,7 @@ def test_period_fx_matches_python_replay(spark):
         vals = [Decimal(repr(v)) for v in vs if v is not None]
         want[cell] = math.floor(float(sum(vals)) * EWMA_SCALE) if vals else None
 
-    out = _period_fx(df, "k", "ts", "v")
+    out = _period_fx(df, "k")
     assert out.columns == ["key", "bucket", "vfx"]
     assert dict(out.dtypes)["bucket"] == "bigint" and dict(out.dtypes)["vfx"] == "bigint"
     got = {(r.key, r.bucket): r.vfx for r in out.collect()}
