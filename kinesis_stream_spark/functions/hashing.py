@@ -8,6 +8,29 @@ seed, which is how multiple independent minhash permutations are built.
 
 At 100 TB this stays a pure map-side JVM expression (md5 + conv are
 codegen'd); no Python, no shuffle.
+
+The 60-bit identity contract. Some operators take two strings as equal
+when their :func:`md5_int64` values are equal:
+
+- ``operators/setjoin.py`` carries every shingle as its hash, so its df
+  counts, rarity order, prefix join and verify intersection compare
+  hashes;
+- ``operators/kmv.py`` counts distinct hashes as the exact distinct
+  count;
+- the minhash signatures (``operators/dedup.py``, replayed by
+  ``operators/minhash_sql.py``) hash each shingle once and permute the
+  hash (folded mod 2^31 − 1 first, so a signature is an estimate
+  anyway).
+
+That is exact only while no two distinct inputs collide. For n distinct
+inputs spread uniformly over 2^60 values the expected number of
+colliding pairs is n(n − 1)/2 / 2^60 ≈ n²/2^61: about 4·10⁻⁷ at
+n = 10⁶, 0.43 at 10⁹, and roughly 43 at 10¹⁰ distinct shingles. A
+colliding pair is one token where there were two, so a setjoin
+intersection or a kmv count is off by one per pair; past about 10⁹
+distinct inputs that is the error bound these operators carry.
+``tests/test_hashing_contract.py`` fails when the range or the
+cross-engine identity breaks.
 """
 
 from __future__ import annotations

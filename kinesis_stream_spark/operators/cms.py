@@ -34,6 +34,9 @@ broadcast of the DEPTH·WIDTH cells. (The vocabulary-sized exact
 aggregate itself remains because exact_cnt/overcount are this
 operator's parity diagnostic; a pure-sketch deployment drops those
 columns and estimates candidates straight off the broadcast cells.)
+
+Input: the ``text`` column of ``documents`` (the text module's
+contract); the DuckDB twin reads the table ``documents``.
 """
 
 from __future__ import annotations
@@ -69,12 +72,7 @@ def _cm_bucket_expr(h: str, i: int) -> str:
     return f"((({CM_A[i]} * {h} + {CM_B[i]}) % {CM_P}) % {CM_WIDTH})"
 
 
-def cm_heavy_hitters(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    top_k: int = 20,
-) -> DataFrame:
+def cm_heavy_hitters(docs: DataFrame, *, top_k: int = 20) -> DataFrame:
     """Exact top-``top_k`` tokens (by count desc, token asc) with their
     Count-Min estimates: (token, exact_cnt, cm_est, overcount).
     ``overcount = cm_est − exact_cnt ≥ 0`` always (CM never
@@ -84,7 +82,7 @@ def cm_heavy_hitters(
     the result is identical to a direct global top-k, so the oracle
     replays the direct form."""
     tok_counts = (
-        docs.select(F.explode(tokens(F.col(text_col))).alias("token"))
+        docs.select(F.explode(tokens(F.col("text"))).alias("token"))
         .where(F.col("token") != "")
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("exact_cnt"))
@@ -128,15 +126,10 @@ def cm_heavy_hitters(
     )
 
 
-def sql_cm_heavy_hitters(
-    *,
-    table: str,
-    text_col: str = "text",
-    top_k: int = 20,
-) -> str:
+def sql_cm_heavy_hitters(*, top_k: int = 20) -> str:
     """DuckDB oracle twin of :func:`cm_heavy_hitters` — identical
     tokenization, md5-derived row hashes, cell sums, and min-estimate."""
-    toks = sql_tokens(text_col)
+    toks = sql_tokens("text")
     h = sql_md5_int64("token")
     buckets = ", ".join(
         f"{_cm_bucket_expr('h', i)} AS b{i}" for i in range(len(CM_A))
@@ -147,7 +140,7 @@ def sql_cm_heavy_hitters(
     )
     return f"""
     WITH tok AS (
-      SELECT t.token FROM {table}, UNNEST({toks}) AS t(token)
+      SELECT t.token FROM documents, UNNEST({toks}) AS t(token)
       WHERE t.token <> ''
     ),
     counts AS (

@@ -19,11 +19,12 @@ rounds — and per-round ``localCheckpoint`` keeps the plan from growing
 (at 100 TB, a durable checkpoint dir instead). Components are never
 materialized as rows-per-pair.
 
-The operator is a drop-in for ``connected_components`` — same
-(v, comp) output with comp = minimum reachable id — so the existing
-recursive-CTE DuckDB oracle verifies it unchanged, and equality with
-the propagation twin is pinned by test on fixtures, fuzz graphs, and a
-long-chain round-count case.
+The operator is a drop-in for ``connected_components``: the same
+``(id_a, id_b)`` edge input (the contract ``operators/dedup.py``
+states) and the same (v, comp) output with comp = minimum reachable
+id. So the existing recursive-CTE DuckDB oracle verifies it unchanged,
+and equality with the propagation twin is pinned by test on fixtures,
+fuzz graphs, and a long-chain round-count case.
 
 Why both kernels stay: each wins one kind of traffic. On the
 ``dedup_connected_components`` chain-copy edges at sf0.1 (11,124 edges;
@@ -103,13 +104,7 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def connected_components_bigstar(
-    edges: DataFrame,
-    *,
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    max_rounds: int = 30,
-) -> DataFrame:
+def connected_components_bigstar(edges: DataFrame, *, max_rounds: int = 30) -> DataFrame:
     """Connected components via alternating large-star / small-star:
     (v, comp) with comp = minimum id reachable from v — the same
     contract as ``connected_components``, in O(log² n) rounds instead
@@ -124,7 +119,7 @@ def connected_components_bigstar(
     A non-converged exit raises instead of returning silently-partial
     clusters — wrong components mean wrong keep-decisions downstream.
     """
-    raw = edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
+    raw = edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
     n_rows = F.count(F.lit(1)).alias("n")
     cur, m = pin_observed(raw.where(F.col("u") != F.col("v")).distinct(), n_rows)
     cur_count = int(m["n"] or 0)
@@ -173,16 +168,11 @@ def connected_components_bigstar(
     return labeled.unionAll(selfloop_singletons)
 
 
-def duplicate_clusters_bigstar(
-    edges: DataFrame,
-    *,
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-) -> DataFrame:
+def duplicate_clusters_bigstar(edges: DataFrame) -> DataFrame:
     """Cluster summary over :func:`connected_components_bigstar` — one
     row per duplicate cluster, (canonical_id, cluster_size, max_id) —
     the same contract (and DuckDB oracle) as ``duplicate_clusters``."""
-    comp = connected_components_bigstar(edges, src_col=src_col, dst_col=dst_col)
+    comp = connected_components_bigstar(edges)
     return comp.groupBy("comp").agg(
         F.count(F.lit(1)).alias("cluster_size"), F.max("v").alias("max_id")
     ).select(

@@ -26,6 +26,17 @@ Scale design (100 TB):
 Everything is deterministic md5-derived hashing (functions/hashing.py), so
 the DuckDB oracle replays the IDENTICAL algorithm — the parity check covers
 the pipeline end-to-end, not just row counts.
+
+Input contract: document operators read ``documents(doc_id, text)`` by
+those names (other columns pass through or are ignored; the blocked
+pair operators also read their ``group_cols``), the ``sql_*`` twins
+read the table ``documents``, and the seen-hash index is
+``(content_hash)`` as :func:`seen_hashes` writes it. Pair operators
+emit the edge frame ``(id_a, id_b, …)``, and :func:`connected_components`
+reads exactly that: ``(id_a, id_b)``, the contract it shares with
+``components.connected_components_bigstar``. A frame whose columns are
+named otherwise is renamed once with a ``select(... .alias(...))``;
+Catalyst folds that projection into the scan.
 """
 
 from __future__ import annotations
@@ -34,6 +45,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from kinesis_stream_spark.functions.hashing import (
+    WS_RUN,
     bind_once,
     md5_int64,
     shingles,
@@ -51,28 +63,21 @@ def normalized_text(col: Column) -> Column:
     """Canonical form for exact dedup: casefold + whitespace collapse.
     Uses the explicit whitespace class (functions/hashing.py WS_RUN):
     Java's \\s matches \\x0B, RE2's does not."""
-    from kinesis_stream_spark.functions.hashing import WS_RUN
-
     return F.trim(F.regexp_replace(F.lower(col), WS_RUN, " "))
 
 
-def exact_dedup(docs: DataFrame, *, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Exact dedup on normalized content hash: keeps the lowest id per
     group, reports group size. One hash-shuffle; deterministic winner."""
-    h = F.md5(normalized_text(F.col(text_col))).alias("content_hash")
+    h = F.md5(normalized_text(F.col("text"))).alias("content_hash")
     return (
-        docs.select(F.col(id_col), h)
+        docs.select(F.col("doc_id"), h)
         .groupBy("content_hash")
-        .agg(F.min(id_col).alias("kept_id"), F.count(F.lit(1)).alias("n_copies"))
+        .agg(F.min("doc_id").alias("kept_id"), F.count(F.lit(1)).alias("n_copies"))
     )
 
 
-def dedup_pipeline(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def dedup_pipeline(docs: DataFrame) -> DataFrame:
     """The complete multi-stage dedup pass in the order the runbook
     prescribes: EXACT-hash dedup first (so LSH never wastes bands on
     byte-identical copies — they'd collide in every band and dominate
@@ -86,25 +91,21 @@ def dedup_pipeline(
     composition a production corpus actually runs, end-to-end
     oracle-replayed including which near-dup pairs LSH surfaces.
     """
-    winners = exact_dedup(docs, text_col=text_col, id_col=id_col).select(
-        F.col("kept_id").alias(id_col)
-    )
+    winners = exact_dedup(docs).select(F.col("kept_id").alias("doc_id"))
     # Materialize the exact-survivor frame ONCE (r12): it feeds the
     # near-dup stage and the final keep-list anti-join, and without the
     # cut each consumer re-runs the input union + digest aggregate +
     # winners join. Intra-query lineage cut, recomputed every call.
-    survivors = pin(docs.join(winners, id_col).select(id_col, text_col))
+    survivors = pin(docs.join(winners, "doc_id").select("doc_id", "text"))
     # near_duplicates_minhash shares ONE checkpointed tokenization pass
     # across signatures and both verify sides since r13 (guide §2.4 —
     # see its docstring; 1.7× on this composed query when it landed)
-    edges = near_duplicates_minhash(
-        survivors, threshold=0.5, text_col=text_col, id_col=id_col
-    )
+    edges = near_duplicates_minhash(survivors, threshold=0.5)
     comp = connected_components(edges.select("id_a", "id_b"))
     dropped = comp.where(F.col("v") != F.col("comp")).select(
-        F.col("v").alias(id_col)
+        F.col("v").alias("doc_id")
     )
-    return survivors.join(dropped, id_col, "left_anti").select(id_col)
+    return survivors.join(dropped, "doc_id", "left_anti").select("doc_id")
 
 
 MINHASH_MOD = 2_147_483_647  # 2^31 - 1 (prime): a*h + b < 2^62, no overflow
@@ -125,18 +126,13 @@ def minhash_perm_coeffs(num_hashes: int = DEFAULT_NUM_HASHES) -> list[tuple[int,
     ]
 
 
-def _shingle_frame(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def _shingle_frame(docs: DataFrame) -> DataFrame:
     """(id, sh array<string>) of 3-token shingles — the tokenization pass every MinHash
     stage derives from. ``spread``: shingling is the expensive map
     stage; a single-row-group scan would run it all in one task."""
     return spread(
-        docs.select(F.col(id_col).alias("id"), F.col(text_col)), "id"
-    ).select("id", shingles(F.col(text_col), 3).alias("sh"))
+        docs.select(F.col("doc_id").alias("id"), F.col("text")), "id"
+    ).select("id", shingles(F.col("text"), 3).alias("sh"))
 
 
 def _signatures_from_shingles(sh_df: DataFrame) -> DataFrame:
@@ -155,12 +151,7 @@ def _signatures_from_shingles(sh_df: DataFrame) -> DataFrame:
     )
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def minhash_signatures(docs: DataFrame) -> DataFrame:
     """(id, sig array<bigint>): sig[j] = min over shingles of
     (a_j * md5(shingle) + b_j) mod P.
 
@@ -170,7 +161,7 @@ def minhash_signatures(
     composed under Catalyst's project collapsing, recomputes the whole
     shingle pipeline per signature element — measured 50× slower.
     """
-    return _signatures_from_shingles(_shingle_frame(docs, text_col=text_col, id_col=id_col))
+    return _signatures_from_shingles(_shingle_frame(docs))
 
 
 def lsh_band_hashes(sig: Column) -> Column:
@@ -229,13 +220,7 @@ def _jaccard_from_shingles(pairs: DataFrame, sh: DataFrame) -> DataFrame:
     )
 
 
-def near_duplicates_minhash(
-    docs: DataFrame,
-    *,
-    threshold: float = 0.9,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def near_duplicates_minhash(docs: DataFrame, *, threshold: float = 0.9) -> DataFrame:
     """Full near-dup pipeline: shingle → minhash → LSH bands → candidate
     join → exact-Jaccard verify ≥ threshold.
 
@@ -245,7 +230,7 @@ def near_duplicates_minhash(
     connected-components edge source). The shared ``(id, sh)`` frame is
     lazily checkpointed because it feeds all three consumers; derived
     data, recomputed from the input on every invocation."""
-    sh = pin(_shingle_frame(docs, text_col=text_col, id_col=id_col), eager=False)
+    sh = pin(_shingle_frame(docs), eager=False)
     cands = _candidates_from_sigs(_signatures_from_shingles(sh))
     return _jaccard_from_shingles(cands, sh).where(
         F.col("jaccard") >= threshold
@@ -261,7 +246,7 @@ def near_duplicates_minhash(
 SIMHASH_BITS = 60
 
 
-def simhash(docs: DataFrame, *, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def simhash(docs: DataFrame) -> DataFrame:
     """Per-doc 60-bit SimHash as a BIGINT (bit i = sign of the i-th
     signed bit-count).
 
@@ -270,8 +255,8 @@ def simhash(docs: DataFrame, *, text_col: str = "text", id_col: str = "doc_id") 
     shift-and-mask and the Hamming verify a single xor+bit_count —
     constant work per candidate pair instead of 32 string allocations.
     """
-    tok = spread(docs.select(F.col(id_col).alias("id"), F.col(text_col)), "id").select(
-        "id", F.explode(tokens(F.col(text_col))).alias("tok")
+    tok = spread(docs.select(F.col("doc_id").alias("id"), F.col("text")), "id").select(
+        "id", F.explode(tokens(F.col("text"))).alias("tok")
     ).withColumn("h", md5_int64(F.col("tok")))
     bit_sums = tok.groupBy("id").agg(
         *[
@@ -301,8 +286,6 @@ def near_duplicates_simhash(
     *,
     max_hamming: int = 3,
     blocks: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """SimHash near-dup: block-equality blocking (pigeonhole: hamming ≤ k
     with blocks > k ⇒ at least one of the blocks is identical), then exact
@@ -319,19 +302,13 @@ def near_duplicates_simhash(
     """
     assert blocks > max_hamming, "pigeonhole needs blocks > max_hamming"
     return (
-        _simhash_blocked_pairs(docs, blocks=blocks, text_col=text_col, id_col=id_col)
+        _simhash_blocked_pairs(docs, blocks=blocks)
         .where(F.col("hamming") <= max_hamming)  # filter BEFORE the dedup shuffle
         .distinct()
     )
 
 
-def _simhash_blocked_pairs(
-    docs: DataFrame,
-    *,
-    blocks: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def _simhash_blocked_pairs(docs: DataFrame, *, blocks: int = 4) -> DataFrame:
     """Blocked SimHash candidate pairs (id_a, id_b, hamming), PRE-distinct:
     a pair colliding in several blocks appears once per collision. Callers
     dedupe after their own filtering so the threshold path shuffles only
@@ -345,7 +322,7 @@ def _simhash_blocked_pairs(
     # no shuffle for ReuseExchange to dedupe). The checkpoint is two
     # columns (id, bigint) per doc — the block explode recomputed per
     # side is four shift-and-masks. Intra-query cut, recomputed per call.
-    sims = pin(simhash(docs, text_col=text_col, id_col=id_col))
+    sims = pin(simhash(docs))
     blocked = sims.select(
         "id",
         "simhash",
@@ -379,13 +356,7 @@ def _simhash_blocked_pairs(
     )
 
 
-def pair_distance_histogram(
-    docs: DataFrame,
-    *,
-    blocks: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def pair_distance_histogram(docs: DataFrame, *, blocks: int = 4) -> DataFrame:
     """Dedup-difficulty profile: the distribution of SimHash Hamming
     distances over blocked candidate pairs — (hamming, n_pairs), one row
     per observed distance. Read it before committing to a threshold: a
@@ -409,30 +380,24 @@ def pair_distance_histogram(
     sample within blocks). Integer-only output, no float parity risk.
     """
     pairs = _simhash_blocked_pairs(
-        docs, blocks=blocks, text_col=text_col, id_col=id_col
+        docs, blocks=blocks
     ).distinct()
     return pairs.groupBy("hamming").agg(
         F.count(F.lit(1)).alias("n_pairs")
     )
 
 
-def seen_hashes(corpus: DataFrame, *, text_col: str = "text") -> DataFrame:
+def seen_hashes(corpus: DataFrame) -> DataFrame:
     """Hash index of an ingested corpus: one row per distinct normalized
     content hash. At scale this table is maintained incrementally —
     append each ingest round's surviving hashes — never re-derived from
     the full corpus."""
     return corpus.select(
-        F.md5(normalized_text(F.col(text_col))).alias("content_hash")
+        F.md5(normalized_text(F.col("text"))).alias("content_hash")
     ).distinct()
 
 
-def exact_dedup_incremental(
-    batch: DataFrame,
-    seen: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def exact_dedup_incremental(batch: DataFrame, seen: DataFrame) -> DataFrame:
     """Incremental exact dedup: keep only batch documents whose
     normalized content hash is NEW — first (minimum id) within the batch
     AND absent from the already-ingested corpus's hash index.
@@ -444,11 +409,11 @@ def exact_dedup_incremental(
     construction, so no skew — and AQE broadcasts whichever side is
     small. Only digests shuffle; text never leaves the scan.
     """
-    h = F.md5(normalized_text(F.col(text_col)))
+    h = F.md5(normalized_text(F.col("text")))
     batch_winners = (
-        batch.select(F.col(id_col), h.alias("content_hash"))
+        batch.select(F.col("doc_id"), h.alias("content_hash"))
         .groupBy("content_hash")
-        .agg(F.min(id_col).alias(id_col))
+        .agg(F.min("doc_id").alias("doc_id"))
     )
     return batch_winners.join(
         seen.select("content_hash"), "content_hash", "left_anti"
@@ -466,13 +431,7 @@ def _label_sum() -> Column:
     return F.sum(F.col("comp").cast("decimal(38,0)")).alias("label_sum")
 
 
-def connected_components(
-    edges: DataFrame,
-    *,
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    max_iterations: int = 25,
-) -> DataFrame:
+def connected_components(edges: DataFrame, *, max_iterations: int = 25) -> DataFrame:
     """Resolve pairwise duplicate edges into clusters: each vertex gets
     the MINIMUM vertex id reachable from it (the canonical document).
 
@@ -500,14 +459,15 @@ def connected_components(
     (the :func:`~kinesis_stream_spark.operators.components.connected_components_bigstar`
     contract; that kernel is the one for long chains).
 
-    Returns (v, component) — component = min id of the vertex's cluster.
+    Reads the edge frame ``(id_a, id_b)`` (module docstring) and returns
+    (v, comp) — comp = min id of the vertex's cluster.
     """
     # Materialize the edge list ONCE. Each round joins against `sym`;
     # without this the (possibly very expensive) upstream pair pipeline
     # re-executes every iteration — measured 64s → ~8s at sf0.1.
     sym = pin(
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .unionAll(edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")))
+        edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+        .unionAll(edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
     )
     labels, m = pin_observed(
         sym.select(F.col("src").alias("v"))
@@ -559,16 +519,11 @@ def connected_components(
     return labels
 
 
-def duplicate_clusters(
-    edges: DataFrame,
-    *,
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-) -> DataFrame:
+def duplicate_clusters(edges: DataFrame) -> DataFrame:
     """Cluster summary over :func:`connected_components`: one row per
     duplicate cluster — (canonical_id = min id, cluster_size, max_id).
     The keep-list is the canonical ids; everything else is droppable."""
-    comp = connected_components(edges, src_col=src_col, dst_col=dst_col)
+    comp = connected_components(edges)
     return comp.groupBy("comp").agg(
         F.min("v").alias("canonical_id"),
         F.count(F.lit(1)).alias("cluster_size"),
@@ -584,15 +539,13 @@ def _set_overlap_pairs(
     group_cols: list[str],
     doc_set: Column,
     *,
-    text_col: str,
-    id_col: str,
     max_df: int | None,
 ) -> DataFrame:
     """The sparse set-overlap kernel of :func:`ngram_jaccard_pairs` and
     :func:`containment_pairs`: one row (group…, id_a < id_b, inter,
     sz_a, sz_b) per pair of documents in a group that share an element
     of ``doc_set`` (a per-document distinct array built from
-    ``text_col``). ``inter`` = |A∩B| is a count over the (group, gram)
+    ``text``). ``inter`` = |A∩B| is a count over the (group, gram)
     equi-join; the sizes are the uncapped set sizes.
 
     ``max_df`` drops rows whose gram appears in more than ``max_df``
@@ -606,7 +559,7 @@ def _set_overlap_pairs(
     # visibly before the self-join.
     base = pin(
         spread(
-            docs.select(*group_cols, F.col(id_col).alias("id"), F.col(text_col)), "id"
+            docs.select(*group_cols, F.col("doc_id").alias("id"), F.col("text")), "id"
         ).select(*group_cols, "id", doc_set.alias("set"))
     )
     sizes = base.select(*group_cols, "id", F.size("set").alias("sz"))
@@ -642,8 +595,6 @@ def ngram_jaccard_pairs(
     group_cols: list[str],
     *,
     threshold: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_df: int | None = None,
 ) -> DataFrame:
     """All-pairs token-set Jaccard, bounded to pairs sharing ``group_cols``
@@ -674,9 +625,7 @@ def ngram_jaccard_pairs(
     pairs = _set_overlap_pairs(
         docs,
         group_cols,
-        F.array_distinct(tokens(F.col(text_col))),
-        text_col=text_col,
-        id_col=id_col,
+        F.array_distinct(tokens(F.col("text"))),
         max_df=max_df,
     )
     jaccard = F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter"))
@@ -690,8 +639,6 @@ def containment_pairs(
     group_cols: list[str],
     *,
     threshold: float = 0.9,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_df: int | None = None,
 ) -> DataFrame:
     """Shingle CONTAINMENT near-dup: |S(A) ∩ S(B)| / min(|S(A)|, |S(B)|)
@@ -739,9 +686,7 @@ def containment_pairs(
     pairs = _set_overlap_pairs(
         docs,
         group_cols,
-        shingles(F.col(text_col), 3),
-        text_col=text_col,
-        id_col=id_col,
+        shingles(F.col("text"), 3),
         max_df=max_df,
     )
     containment = F.col("inter") / F.least("sz_a", "sz_b")
@@ -753,13 +698,7 @@ def containment_pairs(
 # --- C4-style duplicated-span (chunk) removal ---------------------------------
 
 
-def duplicate_chunk_removal(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    chunk_tokens: int = 10,
-) -> DataFrame:
+def duplicate_chunk_removal(docs: DataFrame, *, chunk_tokens: int = 10) -> DataFrame:
     """Corpus-level duplicated-span removal at fixed-chunk granularity —
     the C4 cleanup step ("discard all but one of any three-sentence span
     occurring more than once in the dataset", Raffel et al. 2020 §2.2)
@@ -786,7 +725,7 @@ def duplicate_chunk_removal(
     # token array let-bound (bind_once) so the regex split runs once
     # per row, not once per chunk (r12)
     chunks = bind_once(
-        tokens(F.col(text_col)),
+        tokens(F.col("text")),
         lambda toks: F.transform(
             F.sequence(
                 F.lit(0),
@@ -797,7 +736,7 @@ def duplicate_chunk_removal(
             ),
         ),
     )
-    occ = spread(docs.select(F.col(id_col).alias("id"), F.col(text_col)), "id").select(
+    occ = spread(docs.select(F.col("doc_id").alias("id"), F.col("text")), "id").select(
         "id", F.posexplode(chunks).alias("idx", "chunk")
     )
     wc = Window.partitionBy("chunk")
@@ -833,7 +772,7 @@ def duplicate_chunk_removal(
             ).alias("clean_text"),
         )
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("doc_id"),
             "n_chunks",
             "n_dropped",
             (
@@ -863,7 +802,7 @@ def _bloom_positions(key: Column) -> Column:
     )
 
 
-def bloom_bitmap(keys: DataFrame, *, key_col: str = "content_hash") -> DataFrame:
+def bloom_bitmap(keys: DataFrame) -> DataFrame:
     """Distributed Bloom-filter build: explode each key's K positions,
     aggregate per 60-bit word with ``bit_or`` — a map-side-combinable
     integer aggregate, so the shuffle carries at most
@@ -871,7 +810,7 @@ def bloom_bitmap(keys: DataFrame, *, key_col: str = "content_hash") -> DataFrame
     the bitmap as (word, bits) rows: ~17k rows / ~280 KB at m=2^20,
     comfortably broadcastable to every probe task."""
     return (
-        keys.select(F.explode(_bloom_positions(F.col(key_col))).alias("pos"))
+        keys.select(F.explode(_bloom_positions(F.col("content_hash"))).alias("pos"))
         .select(
             F.expr(f"pos div {BLOOM_WORD_BITS}").alias("word"),
             F.expr(
@@ -883,13 +822,7 @@ def bloom_bitmap(keys: DataFrame, *, key_col: str = "content_hash") -> DataFrame
     )
 
 
-def bloom_prefilter_dedup(
-    batch: DataFrame,
-    seen: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def bloom_prefilter_dedup(batch: DataFrame, seen: DataFrame) -> DataFrame:
     """Ingest dedup against a massive seen-hash index, Bloom-prefiltered:
     instead of anti-joining every batch row against the full index, probe
     a broadcast Bloom bitmap of the index (map-only, no shuffle of the
@@ -908,15 +841,15 @@ def bloom_prefilter_dedup(
     bitmaps and OR them lazily; the build and probe shapes here are
     per-shard unchanged.
     """
-    h = F.md5(normalized_text(F.col(text_col)))
-    keyed = batch.select(F.col(id_col), h.alias("content_hash"))
+    h = F.md5(normalized_text(F.col("text")))
+    keyed = batch.select(F.col("doc_id"), h.alias("content_hash"))
     bitmap = bloom_bitmap(seen)
     probe = keyed.select(
-        id_col,
+        "doc_id",
         "content_hash",
         F.explode(_bloom_positions(F.col("content_hash"))).alias("pos"),
     ).select(
-        id_col,
+        "doc_id",
         "content_hash",
         F.expr(f"pos div {BLOOM_WORD_BITS}").alias("word"),
         F.expr(
@@ -925,7 +858,7 @@ def bloom_prefilter_dedup(
     )
     hits = (
         probe.join(F.broadcast(bitmap), "word", "left")
-        .groupBy(id_col, "content_hash")
+        .groupBy("doc_id", "content_hash")
         .agg(
             (
                 F.min(
@@ -946,12 +879,12 @@ def bloom_prefilter_dedup(
             "content_hash",
             "left_semi",
         )
-        .select(id_col, F.lit(True).alias("is_dup"))
+        .select("doc_id", F.lit(True).alias("is_dup"))
     )
     return (
-        hits.join(dups, id_col, "left")
+        hits.join(dups, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             "content_hash",
             "bloom_hit",
             F.coalesce("is_dup", F.lit(False)).alias("is_dup"),
@@ -959,13 +892,7 @@ def bloom_prefilter_dedup(
     )
 
 
-def lsh_pair_recall(
-    docs: DataFrame,
-    group_cols: list[str],
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def lsh_pair_recall(docs: DataFrame, group_cols: list[str]) -> DataFrame:
     """Measure the MinHash-LSH candidate generator against exhaustive
     ground truth — the quality gate a dedup deployment needs before
     trusting banding parameters: recall (what fraction of true
@@ -993,10 +920,10 @@ def lsh_pair_recall(
     """
     grams = pin(  # computed once, read by both pipelines
         spread(
-            docs.select(*group_cols, F.col(id_col).alias("id"), F.col(text_col)),
+            docs.select(*group_cols, F.col("doc_id").alias("id"), F.col("text")),
             "id",
         )
-        .select(*group_cols, "id", F.explode(shingles(F.col(text_col), 3)).alias("g"))
+        .select(*group_cols, "id", F.explode(shingles(F.col("text"), 3)).alias("g"))
     )
     sizes = grams.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
     pairs = (
@@ -1093,8 +1020,6 @@ def lsh_pair_recall(
 def rare_term_cosine_pairs(
     docs: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_df: int = 20,
     min_cosine_ppm: int = 500_000,
     top_k: int = 50,
@@ -1146,7 +1071,7 @@ def rare_term_cosine_pairs(
     # token array let-bound (bind_once) so the regex split runs once
     # per row, not once per shingle position (r12)
     grams = bind_once(
-        tokens(F.col(text_col)),
+        tokens(F.col("text")),
         lambda toks: F.when(
             F.size(toks) >= 3,
             F.transform(
@@ -1158,9 +1083,9 @@ def rare_term_cosine_pairs(
     # tf feeds the df aggregate and the rare-subspace join —
     # checkpoint so the gram explode + tf aggregate runs once
     tf = pin(
-        docs.where(F.col(text_col).isNotNull())
+        docs.where(F.col("text").isNotNull())
         .select(
-            F.col(id_col).alias("doc"),
+            F.col("doc_id").alias("doc"),
             F.explode(grams).alias("tok"),
         )
         .where(F.col("tok") != "")
@@ -1237,19 +1162,16 @@ def rare_term_cosine_pairs(
 
 def sql_rare_term_cosine_pairs(
     *,
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_df: int = 20,
     min_cosine_ppm: int = 500_000,
     top_k: int = 50,
 ) -> str:
     """DuckDB oracle twin of :func:`rare_term_cosine_pairs`."""
-    toks = sql_tokens(text_col)
+    toks = sql_tokens("text")
     return f"""
     WITH d AS (
-      SELECT {id_col} AS doc, {toks} AS toks
-      FROM {table} WHERE {text_col} IS NOT NULL),
+      SELECT doc_id AS doc, {toks} AS toks
+      FROM documents WHERE text IS NOT NULL),
     tok AS (
       SELECT doc,
              UNNEST(CASE WHEN LEN(toks) >= 3 THEN

@@ -21,6 +21,9 @@ dedup pipeline uses (bucketed, never all-pairs); signatures re-attach
 by two id equi-joins (candidates ≪ corpus); agreement is a zip_with
 fold over two 16-element arrays, map-side; the final aggregate is a
 hash agg onto ≤ 17 keys.
+
+Input: ``documents(doc_id, text)``, by those names (the dedup module's
+contract).
 """
 
 from __future__ import annotations
@@ -34,14 +37,10 @@ from kinesis_stream_spark.operators.dedup import (
     minhash_signatures,
 )
 from kinesis_stream_spark.operators.lineage import pin
+from kinesis_stream_spark.operators.minhash_sql import sql_minhash_candidate_ctes
 
 
-def minhash_agreement_histogram(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def minhash_agreement_histogram(docs: DataFrame) -> DataFrame:
     """(n_matching, n_pairs, est_jaccard) over LSH candidate pairs,
     ordered by n_matching. ``est_jaccard`` is the MinHash estimator
     n_matching / DEFAULT_NUM_HASHES (single IEEE divide off exact integers).
@@ -52,9 +51,7 @@ def minhash_agreement_histogram(
     stage — so it is computed ONCE and localCheckpointed, the same
     measured ~2× trick ``lsh_pair_recall`` documents. Candidates are
     then derived from the checkpointed signatures directly."""
-    sigs = pin(minhash_signatures(
-        docs, text_col=text_col, id_col=id_col,
-    ))
+    sigs = pin(minhash_signatures(docs))
     cands = _candidates_from_sigs(sigs)
     paired = (
         cands.join(sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a")), "id_a")
@@ -88,8 +85,6 @@ def sql_minhash_agreement_histogram(input_cte: str) -> str:
     in round 7, one source of truth for the hash/permutation/banding
     replay shared with ``queries/dedup._sql_minhash_pipeline``) plus
     this profile's position-agreement tail."""
-    from kinesis_stream_spark.operators.minhash_sql import sql_minhash_candidate_ctes
-
     return f"""
     WITH {sql_minhash_candidate_ctes(input_cte)},
     agree AS (

@@ -52,12 +52,14 @@ all any stage needs, and longs shuffle/compare/intersect far cheaper
 than shingle strings; plus a ``spread`` on the corpus scan (the
 tokenize+hash map stage must not serialize on a single-row-group
 file). 28.7 → 7.2 s at sf1 solo interleaved, output bit-identical at
-sf0.01/0.1/1 (the inline comment carries the collision contract).
+sf0.01/0.1/1. Exactness therefore rests on the 60-bit identity
+contract stated in ``functions/hashing.py``.
 
-Determinism: the prefix order is (df, hash) — the md5 key
-(``functions/hashing.py``) avoids relying on cross-engine string
-collation and is unique wherever the old trailing-token tiebreak was
-reachable (distinct below a 60-bit collision). Counts are integers
+Input: ``documents(doc_id, text)``, by those names (the dedup module's
+contract).
+
+Determinism: the prefix order is (df, hash) — the md5 key avoids
+relying on cross-engine string collation. Counts are integers
 end-to-end; the single IEEE divide per output row is the Jaccard
 itself.
 """
@@ -67,28 +69,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from kinesis_stream_spark.functions.hashing import (
-    md5_int64,
-    shingles,
-    sql_md5_int64,
-    sql_shingles,
-)
+from kinesis_stream_spark.functions.hashing import md5_int64, shingles, sql_md5_int64, sql_shingles
 from kinesis_stream_spark.operators.lineage import pin
+from kinesis_stream_spark.sources.batch import spread
 
 
-def prefix_filter_jaccard_pairs(
-    docs: DataFrame,
-    *,
-    threshold: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def prefix_filter_jaccard_pairs(docs: DataFrame, *, threshold: float = 0.5) -> DataFrame:
     """All pairs with shingle-set Jaccard ≥ ``threshold`` — EXACT (no
     LSH false negatives): (id_a, id_b, jaccard), id_a < id_b."""
     if not (0.0 < threshold <= 1.0):
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    from kinesis_stream_spark.sources.batch import spread
-
     # TOKENS ARE 60-BIT HASHES end-to-end (r13): every downstream
     # consumer — df counts, the global rarity order, the prefix
     # equi-join, the verify intersection — only needs token IDENTITY,
@@ -96,12 +86,8 @@ def prefix_filter_jaccard_pairs(
     # ``transform``) to its md5 60-bit key and the pipeline carries
     # 8-byte longs instead of ~25-char strings: smaller explode store,
     # narrower df shuffle, a long equi-join key, and a hash-array
-    # verify. Distinct shingles map to distinct hashes — the SAME
-    # unreachable-collision contract kmv.py's exact counts and the
-    # minhash signatures already stake exactness on (functions/
-    # hashing.py); the rarity order (df, h) stays formally total
-    # because hashes are unique exactly where the old (df, md5(tok),
-    # tok) tiebreak was reachable. Measured at sf1: 28.7 → 7.2 s solo
+    # verify, exact under the 60-bit identity contract
+    # (functions/hashing.py). Measured at sf1: 28.7 → 7.2 s solo
     # interleaved (with the spread below); output bit-identical at
     # sf0.01/0.1/1.
     #
@@ -117,11 +103,11 @@ def prefix_filter_jaccard_pairs(
     # a handful of tasks (measured: 7.6 s on 4 tasks at sf1); no-op
     # on well-partitioned inputs.
     sh_sets = pin(
-        spread(docs.select(F.col(id_col).alias("id"), F.col(text_col)), "id")
+        spread(docs.select(F.col("doc_id").alias("id"), F.col("text")), "id")
         .select(
             "id",
             F.transform(
-                shingles(F.col(text_col), 3), lambda s: md5_int64(s)
+                shingles(F.col("text"), 3), lambda s: md5_int64(s)
             ).alias("sh"),
         )
         .where(F.size("sh") > 0),

@@ -19,6 +19,19 @@ Scale design (100 TB):
 - Fingerprints are bounded-magnitude modular arithmetic (fits BIGINT;
   no overflow at any scale) and derive from md5 (functions/hashing.py) so
   the DuckDB oracle replays them bit-for-bit.
+
+Input contract: the operators read the ``documents`` schema,
+``documents(doc_id, text, lang, source, n_chars)``, by those names, and
+the ``sql_*`` twins read the table ``documents``. ``lang`` is the
+stratum of :func:`term_stats_topk`, :func:`stratified_sample` and
+:func:`language_id`'s label; ``source`` is the stream of
+:func:`pack_sequences`, :func:`domain_cap` and
+:func:`weighted_mixture`. Two operators take a second frame:
+:func:`exact_substring_decontaminate` reads ``probes(probe_id,
+probe)`` and :func:`leakage_safe_split` reads ``clusters(doc_id,
+cluster_id)``. A corpus whose columns are named otherwise is renamed
+once with a ``select(... .alias(...))``; Catalyst folds that
+projection into the scan.
 """
 
 from __future__ import annotations
@@ -69,21 +82,21 @@ def _count_in_set(toks: Column, words: tuple[str, ...]) -> Column:
     return F.size(F.filter(toks, lambda t: t.isin(*words)))
 
 
-def token_stats(docs: DataFrame, *, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def token_stats(docs: DataFrame) -> DataFrame:
     """Per-document token accounting: whitespace tokens, BPE-ish subword
     count, distinct tokens, chars-per-token. Map-only."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(toks).alias("n_tokens"),
         F.size(F.array_distinct(toks)).alias("n_distinct"),
-        F.size(F.regexp_extract_all(F.col(text_col), F.lit(BPE_PATTERN), 0)).alias("n_subwords"),
-        F.length(text_col).alias("n_chars"),
-        (F.length(text_col).cast("double") / F.size(toks)).alias("chars_per_token"),
+        F.size(F.regexp_extract_all(F.col("text"), F.lit(BPE_PATTERN), 0)).alias("n_subwords"),
+        F.length("text").alias("n_chars"),
+        (F.length("text").cast("double") / F.size(toks)).alias("chars_per_token"),
     )
 
 
-def quality_columns(text_col: str = "text") -> dict[str, Column]:
+def quality_columns() -> dict[str, Column]:
     """The per-document quality signals as named Column expressions —
     shared by :func:`quality_features` and any composite pipeline that
     wants the signals fused into its own single map stage.
@@ -91,7 +104,7 @@ def quality_columns(text_col: str = "text") -> dict[str, Column]:
     All components are single IEEE divisions of integer counts (engine-
     independent); the composite is a fixed-weight sum of four ratios.
     """
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     n = F.size(toks)
     distinct_ratio = F.size(F.array_distinct(toks)).cast("double") / n
     stop_ratio = _count_in_set(toks, STOPWORDS).cast("double") / n
@@ -100,8 +113,8 @@ def quality_columns(text_col: str = "text") -> dict[str, Column]:
     # the fuzz-parity suite); an empty doc scores alpha_ratio 0. The
     # token-count divisors are safe — split("") yields [""], so n >= 1.
     alpha_ratio = (
-        F.length(F.regexp_replace(F.col(text_col), "[^a-zA-Z]", "")).cast("double")
-        / F.greatest(F.length(text_col), F.lit(1))
+        F.length(F.regexp_replace(F.col("text"), "[^a-zA-Z]", "")).cast("double")
+        / F.greatest(F.length("text"), F.lit(1))
     )
     # length factor: 1 at >=100 tokens, proportional below (min(n,100)/100)
     length_factor = F.least(n, F.lit(100)).cast("double") / 100.0
@@ -118,20 +131,18 @@ def quality_columns(text_col: str = "text") -> dict[str, Column]:
     }
 
 
-def quality_features(
-    docs: DataFrame, *, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def quality_features(docs: DataFrame) -> DataFrame:
     """Per-document quality signals + composite score in [0, 1]."""
-    cols = quality_columns(text_col)
+    cols = quality_columns()
     return docs.select(
-        F.col(id_col), *[c.alias(name) for name, c in cols.items()]
+        F.col("doc_id"), *[c.alias(name) for name, c in cols.items()]
     )
 
 
-def pred_lang_col(text_col: str = "text") -> Column:
+def pred_lang_col() -> Column:
     """Marker-word language argmax as a single Column expression (ties
     break on language code — deterministic)."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     scores = {
         lang: _count_in_set(toks, markers)
         for lang, markers in sorted(LANG_MARKERS.items())
@@ -142,15 +153,15 @@ def pred_lang_col(text_col: str = "text") -> Column:
     )
 
 
-def language_id(docs: DataFrame, *, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def language_id(docs: DataFrame) -> DataFrame:
     """Marker-word language ID: per-language hit counts + argmax label
     (ties break on language code — deterministic). Map-only."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     scores = [
         _count_in_set(toks, markers).alias(f"score_{lang}")
         for lang, markers in sorted(LANG_MARKERS.items())
     ]
-    scored = docs.select(F.col(id_col), F.col("lang").alias("true_lang"), *scores)
+    scored = docs.select(F.col("doc_id"), F.col("lang").alias("true_lang"), *scores)
     # argmax via greatest + first-match chain (stable tiebreak by code)
     best = F.greatest(*[F.col(f"score_{lang}") for lang in sorted(LANG_MARKERS)])
     pred = F.coalesce(
@@ -162,21 +173,19 @@ def language_id(docs: DataFrame, *, text_col: str = "text", id_col: str = "doc_i
     return scored.withColumn("pred_lang", pred)
 
 
-def rolling_fingerprint(
-    docs: DataFrame, *, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def rolling_fingerprint(docs: DataFrame) -> DataFrame:
     """Order-sensitive whole-document fingerprint: left fold
     ``h = (h*31 + md5(token) % 2^20) % 2^31`` over the token sequence.
     Unlike the shingle/minhash set signatures this is position-aware —
     permuted documents get different fingerprints."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     hashes = F.transform(toks, lambda t: md5_int64(t) % FP_TOKEN_MOD)
     fp = F.aggregate(
         hashes,
         F.lit(0).cast("bigint"),
         lambda acc, x: (acc * 31 + x) % FP_MOD,
     )
-    return docs.select(F.col(id_col), fp.alias("fingerprint"))
+    return docs.select(F.col("doc_id"), fp.alias("fingerprint"))
 
 
 #: winnowing: tokens per gram, grams per window
@@ -184,12 +193,7 @@ WINNOW_K = 3
 WINNOW_WINDOW = 4
 
 
-def winnowed_fingerprints(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def winnowed_fingerprints(docs: DataFrame) -> DataFrame:
     """Winnowing (MOSS-style): hash every ``WINNOW_K``-token gram, take
     the min hash of each sliding window of ``WINNOW_WINDOW`` grams, emit
     the distinct sorted mins. Robust to local edits; the standard
@@ -211,9 +215,9 @@ def winnowed_fingerprints(
     """
     order = Window.partitionBy("id").orderBy("pos")
     whole = Window.partitionBy("id")
-    tok = spread(docs.select(F.col(id_col).alias("id"), F.col(text_col)), "id").select(
+    tok = spread(docs.select(F.col("doc_id").alias("id"), F.col("text")), "id").select(
         "id",
-        F.posexplode(tokens(F.col(text_col))).alias("pos", "tok"),
+        F.posexplode(tokens(F.col("text"))).alias("pos", "tok"),
     )
     # gram at pos p = hash of tokens p..p+K-1 (short tail rows filtered:
     # only pos <= max(n_tokens - K, 0) is a gram start, which also keeps
@@ -242,17 +246,11 @@ def winnowed_fingerprints(
     return (
         win_min.groupBy("id")
         .agg(F.array_sort(F.collect_set("wmin")).alias("fingerprints"))
-        .select(F.col("id").alias(id_col), "fingerprints")
+        .select(F.col("id").alias("doc_id"), "fingerprints")
     )
 
 
-def term_stats_topk(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    group_col: str = "lang",
-) -> DataFrame:
+def term_stats_topk(docs: DataFrame) -> DataFrame:
     """Per-group top-5 terms by collection frequency among the terms in
     at least 2 documents, with document frequency. Integer counts only
     (no idf-log — cross-engine exact).
@@ -261,8 +259,8 @@ def term_stats_topk(
     map-side so the (group, token) shuffle carries pre-combined rows.
     """
     tok = docs.select(
-        F.col(group_col).alias("grp"), F.col(id_col).alias("id"),
-        F.explode(tokens(F.col(text_col))).alias("token"),
+        F.col("lang").alias("grp"), F.col("doc_id").alias("id"),
+        F.explode(tokens(F.col("text"))).alias("token"),
     )
     stats = tok.groupBy("grp", "token").agg(
         F.count(F.lit(1)).alias("tf"),
@@ -273,16 +271,14 @@ def term_stats_topk(
         stats.where(F.col("df") >= 2)
         .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= 5)
-        .select(F.col("grp").alias(group_col), "token", "tf", "df", "rank")
+        .select(F.col("grp").alias("lang"), "token", "tf", "df", "rank")
     )
 
 
 # --- repetition filtering (Gopher-style quality rules) ------------------------
 
 
-def repetition_stats(
-    docs: DataFrame, *, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """Gopher-style repetition signals per document: the fraction of
     tokens taken by the single most frequent token, the fraction of
     token occurrences that are duplicates (count ≥ 2), and the same two
@@ -297,8 +293,8 @@ def repetition_stats(
     lead() window inside the same per-doc partitioning the counts need
     anyway. Integer counts + one IEEE divide — cross-engine exact.
     """
-    toks = tokens(F.col(text_col))
-    base = spread(docs.select(F.col(id_col).alias("id"), F.col(text_col)), "id")
+    toks = tokens(F.col("text"))
+    base = spread(docs.select(F.col("doc_id").alias("id"), F.col("text")), "id")
     uni = base.select("id", F.explode(toks).alias("g"))
     uni_stats = _gram_repetition(uni, "uni")
     order = Window.partitionBy("id").orderBy("pos")
@@ -318,7 +314,7 @@ def repetition_stats(
     return (
         uni_stats.join(bi_stats, "id", "left")
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("doc_id"),
             F.col("uni_total").alias("n_tokens"),
             (F.col("uni_top").cast("double") / F.col("uni_total")).alias(
                 "top_token_fraction"
@@ -348,12 +344,7 @@ def _gram_repetition(exploded: DataFrame, prefix: str) -> DataFrame:
     )
 
 
-def boilerplate_fraction(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def boilerplate_fraction(docs: DataFrame) -> DataFrame:
     """Corpus-level boilerplate measurement: per document, the fraction
     of its distinct 3-gram shingles that are HIGH-document-frequency
     across the whole corpus (df ≥ 5). High fractions flag
@@ -368,15 +359,13 @@ def boilerplate_fraction(
     side is ever collected or broadcast (the gram-df table is
     corpus-sized).
     """
-    from kinesis_stream_spark.functions.hashing import shingles
-
-    grams = spread(docs.select(id_col, text_col), id_col).select(
-        F.col(id_col), F.explode(shingles(F.col(text_col), 3)).alias("g")
+    grams = spread(docs.select("doc_id", "text"), "doc_id").select(
+        F.col("doc_id"), F.explode(shingles(F.col("text"), 3)).alias("g")
     )  # shingles() emits the distinct set per doc
     gram_df = grams.groupBy("g").agg(F.count(F.lit(1)).alias("df"))
     return (
         grams.join(gram_df, "g")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_grams"),
             F.sum(
@@ -384,7 +373,7 @@ def boilerplate_fraction(
             ).alias("n_boilerplate"),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_grams",
             F.col("n_boilerplate").cast("long").alias("n_boilerplate"),
             (F.col("n_boilerplate").cast("double") / F.col("n_grams")).alias(
@@ -394,12 +383,7 @@ def boilerplate_fraction(
     )
 
 
-def token_rarity(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def token_rarity(docs: DataFrame) -> DataFrame:
     """Per-document rarity score from corpus token statistics: rank every
     token by global frequency (1 = most common, ties by token string),
     then score each document by the mean rank of its token occurrences.
@@ -417,8 +401,8 @@ def token_rarity(
     counts, or put a min-count floor on the vocabulary first — the rank
     join and per-doc agg shapes don't change.
     """
-    tok = spread(docs.select(F.col(id_col).alias("id"), F.col(text_col)), "id").select(
-        "id", F.explode(tokens(F.col(text_col))).alias("tok")
+    tok = spread(docs.select(F.col("doc_id").alias("id"), F.col("text")), "id").select(
+        "id", F.explode(tokens(F.col("text"))).alias("tok")
     )
     vocab = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("tf"))
     # deliberate single-partition window over the POST-AGG vocabulary —
@@ -438,7 +422,7 @@ def token_rarity(
             F.sum("rank").alias("rank_sum"),
         )
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("doc_id"),
             "n_tokens",
             F.col("rank_sum").cast("long").alias("rank_sum"),
             (F.col("rank_sum").cast("double") / F.col("n_tokens")).alias("mean_rank"),
@@ -458,12 +442,7 @@ PII_PATTERNS: dict[str, str] = {
 }
 
 
-def pii_scrub(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def pii_scrub(docs: DataFrame) -> DataFrame:
     """Detect-and-mask PII spans: per document, the match count for each
     pattern plus the scrubbed text (every match replaced by a
     ``<KIND>`` tag), summarized as md5 + length so the output stays
@@ -479,8 +458,8 @@ def pii_scrub(
     span consumed by an earlier pattern is never double-counted and
     counts always agree with what the scrub actually replaced.
     """
-    out_cols = [F.col(id_col)]
-    scrubbed = F.col(text_col)
+    out_cols = [F.col("doc_id")]
+    scrubbed = F.col("text")
     for name, pat in sorted(PII_PATTERNS.items()):
         out_cols.append(
             F.size(F.regexp_extract_all(scrubbed, F.lit(pat), F.lit(0))).alias(
@@ -510,13 +489,7 @@ def sql_pii_scrub_columns(text_expr: str) -> tuple[str, str]:
 # --- training-set curation: decontamination / mixing / packing ---------------
 
 
-def decontaminate_ngram_overlap(
-    corpus: DataFrame,
-    probe: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def decontaminate_ngram_overlap(corpus: DataFrame, probe: DataFrame) -> DataFrame:
     """Benchmark decontamination: per corpus document, the fraction of its
     distinct 5-grams that appear in ANY probe (eval-set) document.
 
@@ -530,25 +503,23 @@ def decontaminate_ngram_overlap(
     Returns (doc_id, n_grams, n_contaminated, contamination) — callers
     filter on ``contamination`` to taste.
     """
-    from kinesis_stream_spark.functions.hashing import shingles
-
     probe_grams = (
-        probe.select(F.explode(shingles(F.col(text_col), 5)).alias("g")).distinct()
+        probe.select(F.explode(shingles(F.col("text"), 5)).alias("g")).distinct()
     )
     corpus_grams = corpus.select(
-        F.col(id_col),
-        F.explode(shingles(F.col(text_col), 5)).alias("g"),  # already distinct
+        F.col("doc_id"),
+        F.explode(shingles(F.col("text"), 5)).alias("g"),  # already distinct
     )
     hit = F.broadcast(probe_grams.withColumn("hit", F.lit(1)))
     return (
         corpus_grams.join(hit, "g", "left")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_grams"),
             F.sum(F.coalesce(F.col("hit"), F.lit(0))).alias("n_contaminated"),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_grams",
             "n_contaminated",
             (F.col("n_contaminated") / F.col("n_grams")).alias("contamination"),
@@ -561,14 +532,8 @@ def decontaminate_ngram_overlap(
 MIX_BUCKETS = 1000
 
 
-def stratified_sample(
-    docs: DataFrame,
-    rates: dict[str, float],
-    *,
-    stratum_col: str = "lang",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Deterministic per-stratum sampling — the data-mixing primitive
+def stratified_sample(docs: DataFrame, rates: dict[str, float]) -> DataFrame:
+    """Deterministic per-stratum (``lang``) sampling — the data-mixing primitive
     (e.g. upweight rare languages, downsample boilerplate sources).
 
     Keep rule: md5(id) mod MIX_BUCKETS < rate[stratum] * MIX_BUCKETS; a
@@ -578,24 +543,17 @@ def stratified_sample(
     and auditable (the keep-set is recomputable from the rule alone) —
     everything df.sample's RNG is not.
     """
-    bucket = md5_int64(F.col(id_col).cast("string")) % MIX_BUCKETS
+    bucket = md5_int64(F.col("doc_id").cast("string")) % MIX_BUCKETS
     keep = F.lit(False)
     for stratum, rate in sorted(rates.items()):
         keep = F.when(
-            F.col(stratum_col) == stratum, bucket < int(rate * MIX_BUCKETS)
+            F.col("lang") == stratum, bucket < int(rate * MIX_BUCKETS)
         ).otherwise(keep)
     keep = F.coalesce(keep, bucket < MIX_BUCKETS)
     return docs.where(keep)
 
 
-def pack_sequences(
-    docs: DataFrame,
-    *,
-    capacity: int,
-    partition_col: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def pack_sequences(docs: DataFrame, *, capacity: int) -> DataFrame:
     """Assign documents to fixed-capacity training chunks (context-window
     packing): concatenate docs in id order within each partition stream
     and cut every ``capacity`` tokens — chunk_id = floor(cum_tokens_before
@@ -603,40 +561,33 @@ def pack_sequences(
 
     This is sequential packing (how most pre-training pipelines pack),
     not bin-packing: deterministic, one running-sum window per
-    partition-stream. Partitioning by ``partition_col`` keeps the window
+    partition-stream. Partitioning by ``source`` keeps the window
     distributed — a GLOBAL orderBy window would serialize 100 TB through
     one task; packing within a shard/source is the scale-correct unit
     (and what a sharded dataset loader does anyway). Integer-only
     arithmetic — exact on any engine.
     """
     w = (
-        Window.partitionBy(partition_col)
-        .orderBy(id_col)
+        Window.partitionBy("source")
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    n_toks = F.size(tokens(F.col(text_col)))
+    n_toks = F.size(tokens(F.col("text")))
     return docs.select(
-        partition_col,
-        id_col,
+        "source",
+        "doc_id",
         n_toks.alias("n_toks"),
         F.coalesce(F.sum(n_toks).over(w), F.lit(0)).alias("cum_before"),
     ).select(
-        partition_col,
-        id_col,
+        "source",
+        "doc_id",
         "n_toks",
         F.expr(f"cum_before DIV {capacity}").alias("chunk_id"),  # exact int div
         (F.col("cum_before") % capacity).alias("chunk_offset"),
     )
 
 
-def chunk_windows(
-    docs: DataFrame,
-    *,
-    window: int,
-    stride: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def chunk_windows(docs: DataFrame, *, window: int, stride: int) -> DataFrame:
     """Sliding-window token chunking: split each document into chunks of
     ``window`` tokens starting every ``stride`` tokens (overlap =
     window − stride) — the standard RAG-indexing / pretraining chunker,
@@ -653,9 +604,9 @@ def chunk_windows(
     both engines)."""
     if window <= 0 or stride <= 0:
         raise ValueError(f"window ({window}) and stride ({stride}) must be > 0")
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     sized = docs.select(
-        F.col(id_col).alias("doc_id"), toks.alias("toks"), F.size(toks).alias("n_toks")
+        F.col("doc_id"), toks.alias("toks"), F.size(toks).alias("n_toks")
     )
     starts = sized.select(
         "doc_id",
@@ -681,21 +632,14 @@ def chunk_windows(
 # --- DuckDB twins ------------------------------------------------------------
 
 
-def sql_chunk_windows(
-    *,
-    window: int,
-    stride: int,
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> str:
+def sql_chunk_windows(*, window: int, stride: int) -> str:
     """DuckDB twin of :func:`chunk_windows` (same 1-based slice, same
     inclusive-end stepped series, same clamped tail length)."""
-    toks = sql_tokens(text_col)
+    toks = sql_tokens("text")
     return f"""
     WITH sized AS (
-      SELECT {id_col} AS doc_id, {toks} AS toks, LEN({toks}) AS n_toks
-      FROM {table}
+      SELECT doc_id AS doc_id, {toks} AS toks, LEN({toks}) AS n_toks
+      FROM documents
     ),
     st AS (
       SELECT doc_id, toks, n_toks,
@@ -744,16 +688,10 @@ def sql_winnowed_fingerprints(text_expr: str) -> str:
     return f"(SELECT LIST_SORT(LIST_DISTINCT({mins})) FROM (SELECT {grams} AS g) _w)"
 
 
-def domain_cap(
-    docs: DataFrame,
-    *,
-    domain_col: str = "source",
-    id_col: str = "doc_id",
-    cap: int = 15,
-) -> DataFrame:
+def domain_cap(docs: DataFrame, *, cap: int = 15) -> DataFrame:
     """Per-domain document cap — the web-crawl balancing step that stops
     a handful of mega-domains from dominating the training mix: keep at
-    most ``cap`` documents per domain, selected by a deterministic
+    most ``cap`` documents per domain (``source``), selected by a deterministic
     seeded-hash ranking (an unbiased per-domain sample that is stable
     across runs, partitionings, and incremental re-crawls — unlike
     "first N seen", which depends on scan order).
@@ -766,16 +704,14 @@ def domain_cap(
     exact rank runs on ≤ cap × n_salts rows per domain (same result:
     rank ≤ cap survivors survive phase 1 unconditionally).
     """
-    from kinesis_stream_spark.functions.hashing import md5_int64
-
-    w = Window.partitionBy(domain_col).orderBy(
-        md5_int64(F.concat_ws("|", domain_col, id_col)).asc(), F.col(id_col).asc()
+    w = Window.partitionBy("source").orderBy(
+        md5_int64(F.concat_ws("|", "source", "doc_id")).asc(), F.col("doc_id").asc()
     )
-    wc = Window.partitionBy(domain_col)
+    wc = Window.partitionBy("source")
     return (
         docs.select(
-            id_col,
-            domain_col,
+            "doc_id",
+            "source",
             F.row_number().over(w).alias("pick_rank"),
             F.count(F.lit(1)).over(wc).alias("n_domain_docs"),
         )
@@ -783,7 +719,7 @@ def domain_cap(
     )
 
 
-def normalize_summary(docs: DataFrame, *, text_col: str = "text") -> DataFrame:
+def normalize_summary(docs: DataFrame) -> DataFrame:
     """Whitespace canonicalization with an audit summary: collapse every
     whitespace run (tabs, newlines, multi-space) to one space and trim,
     then report — in ONE aggregate row — how many documents changed, the
@@ -799,9 +735,9 @@ def normalize_summary(docs: DataFrame, *, text_col: str = "text") -> DataFrame:
     engine-safe core. Map-only scan + one partial-agg row; NULL texts
     pass through every aggregate untouched on both engines.
     """
-    norm = F.trim(F.regexp_replace(F.col(text_col), WS_RUN, " "))
+    norm = F.trim(F.regexp_replace(F.col("text"), WS_RUN, " "))
     return docs.select(
-        F.col(text_col).alias("t"), norm.alias("norm")
+        F.col("text").alias("t"), norm.alias("norm")
     ).agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.coalesce(
@@ -815,13 +751,7 @@ def normalize_summary(docs: DataFrame, *, text_col: str = "text") -> DataFrame:
     )
 
 
-def weighted_mixture(
-    docs: DataFrame,
-    weights: dict[str, float],
-    *,
-    stratum_col: str = "source",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def weighted_mixture(docs: DataFrame, weights: dict[str, float]) -> DataFrame:
     """Source-weighted data mixing WITH up-sampling — the epoch-style
     repeat-factor generalization of :func:`stratified_sample` (which can
     only keep/drop). A weight of 2.25 means every doc of that source is
@@ -842,7 +772,7 @@ def weighted_mixture(
     are filtered before the explode — a 0.01-weight source never
     materializes 99% dead rows.
     """
-    bucket = md5_int64(F.col(id_col).cast("string")) % MIX_BUCKETS
+    bucket = md5_int64(F.col("doc_id").cast("string")) % MIX_BUCKETS
 
     def copies(w: float) -> Column:
         whole, frac_b = int(w), int(round((w - int(w)) * MIX_BUCKETS))
@@ -852,29 +782,21 @@ def weighted_mixture(
 
     n_copies = F.lit(None).cast("long")
     for stratum, w in sorted(weights.items()):
-        n_copies = F.when(F.col(stratum_col) == stratum, copies(w)).otherwise(n_copies)
+        n_copies = F.when(F.col("source") == stratum, copies(w)).otherwise(n_copies)
     n_copies = F.coalesce(n_copies, copies(1.0))
     return (
-        docs.select(id_col, stratum_col, n_copies.alias("n_copies"))
+        docs.select("doc_id", "source", n_copies.alias("n_copies"))
         .where(F.col("n_copies") > 0)
         .select(
-            id_col,
-            stratum_col,
+            "doc_id",
+            "source",
             "n_copies",
             F.explode(F.sequence(F.lit(1), F.col("n_copies"))).alias("copy_idx"),
         )
     )
 
 
-def exact_substring_decontaminate(
-    corpus: DataFrame,
-    probes: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    probe_col: str = "probe",
-    probe_id_col: str = "probe_id",
-) -> DataFrame:
+def exact_substring_decontaminate(corpus: DataFrame, probes: DataFrame) -> DataFrame:
     """Exact-match decontamination: per corpus document, how many probe
     strings (verbatim eval answers / canary strings / PII literals)
     appear as substrings. Complements :func:`decontaminate_ngram_overlap`
@@ -906,30 +828,24 @@ def exact_substring_decontaminate(
     all-clean corpus; gate on the probe count upstream if the
     distinction matters.
     """
-    probes = probes.where(F.length(F.col(probe_col)) > 0)
+    probes = probes.where(F.length(F.col("probe")) > 0)
     hits = corpus.join(F.broadcast(probes)).select(
-        F.col(id_col),
-        F.col(probe_id_col),
+        F.col("doc_id"),
+        F.col("probe_id"),
         # NULL gate: instr(NULL, p) is NULL, and a SUM over an all-NULL
         # group is NULL — a NULL-text document must report 0 hits
         # (clean), matching the oracle's CASE ... ELSE 0 arithmetic
         F.coalesce(
-            F.instr(F.col(text_col), F.col(probe_col)) > 0, F.lit(False)
+            F.instr(F.col("text"), F.col("probe")) > 0, F.lit(False)
         ).alias("hit"),
     )
-    return hits.groupBy(id_col).agg(
+    return hits.groupBy("doc_id").agg(
         F.sum(F.col("hit").cast("long")).alias("n_probes_hit"),
-        F.min(F.when(F.col("hit"), F.col(probe_id_col))).alias("first_probe_id"),
+        F.min(F.when(F.col("hit"), F.col("probe_id"))).alias("first_probe_id"),
     )
 
 
-def leakage_safe_split(
-    docs: DataFrame,
-    clusters: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    cluster_col: str = "cluster_id",
-) -> DataFrame:
+def leakage_safe_split(docs: DataFrame, clusters: DataFrame) -> DataFrame:
     """Train/val/test assignment that cannot leak duplicates across
     splits: the split decision hashes the CLUSTER id, not the document
     id, so every member of a duplicate cluster lands in the same split.
@@ -945,15 +861,13 @@ def leakage_safe_split(
     this repo (seed 23; buckets 0–79 train, 80–89 val, 90–99 test):
     map-only, reproducible, append-stable.
     """
-    from kinesis_stream_spark.functions.hashing import md5_int64
-
-    joined = docs.select(id_col).join(clusters, id_col, "left").select(
-        F.col(id_col),
-        F.coalesce(F.col(cluster_col), F.col(id_col)).alias("cluster_id"),
+    joined = docs.select("doc_id").join(clusters, "doc_id", "left").select(
+        F.col("doc_id"),
+        F.coalesce(F.col("cluster_id"), F.col("doc_id")).alias("cluster_id"),
     )
     bucket = md5_int64(F.col("cluster_id").cast("string"), 23) % 100
     return joined.select(
-        id_col,
+        "doc_id",
         "cluster_id",
         F.when(bucket < 80, "train")
         .when(bucket < 90, "val")
@@ -962,12 +876,7 @@ def leakage_safe_split(
     )
 
 
-def collocations(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    min_count: int = 2,
-) -> DataFrame:
+def collocations(docs: DataFrame, *, min_count: int = 2) -> DataFrame:
     """Collocation mining via integer lift: adjacent-token bigrams scored
     by lift = N · c(ab) / (c(a) · c(b)) — how much more often the pair
     co-occurs than independence predicts. High-lift bigrams are the
@@ -995,7 +904,7 @@ def collocations(
     (the vast majority of distinct bigrams) BEFORE the joins, so join
     input is the interesting vocabulary, not the corpus.
     """
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     # let-bound (bind_once) so the regex split runs once per row, not
     # once per bigram position (r12)
     bg = bind_once(
@@ -1008,7 +917,7 @@ def collocations(
             ),
         ).otherwise(F.array().cast("array<array<string>>")),
     )
-    base = spread(docs.select(text_col), None)
+    base = spread(docs.select("text"), None)
     uni = (
         base.select(F.explode(toks).alias("tok"))
         .groupBy("tok")
@@ -1042,13 +951,7 @@ def collocations(
     )
 
 
-def bigram_novelty(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_df: int = 2,
-) -> DataFrame:
+def bigram_novelty(docs: DataFrame, *, min_df: int = 2) -> DataFrame:
     """Per-document bigram novelty: what fraction of a document's
     DISTINCT word bigrams appear in fewer than ``min_df`` documents
     corpus-wide — the out-of-vocabulary / gibberish scorer that flags
@@ -1077,8 +980,8 @@ def bigram_novelty(
     # the gram equi-join dominate, and re-running the cheap shingle
     # map is faster than materializing it
     grams = docs.select(
-        F.col(id_col).alias("doc"),
-        F.explode(shingles(F.col(text_col), 2)).alias("g"),
+        F.col("doc_id").alias("doc"),
+        F.explode(shingles(F.col("text"), 2)).alias("g"),
     )
     df = grams.groupBy("g").agg(F.count(F.lit(1)).cast("long").alias("gdf"))
     per = (
@@ -1092,27 +995,21 @@ def bigram_novelty(
         )
     )
     return per.select(
-        F.col("doc").alias(id_col),
+        F.col("doc").alias("doc_id"),
         "n_bigrams",
         "n_novel",
         F.expr("(n_novel * 1000000) div n_bigrams").alias("novelty_ppm"),
     )
 
 
-def sql_bigram_novelty(
-    *,
-    table: str = "documents",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_df: int = 2,
-) -> str:
+def sql_bigram_novelty(*, min_df: int = 2) -> str:
     """DuckDB oracle twin of :func:`bigram_novelty` (identical shingle
     set, df counts, and integer ppm)."""
-    sh = sql_shingles(text_col, 2)
+    sh = sql_shingles("text", 2)
     return f"""
     WITH grams AS (
-      SELECT {id_col} AS doc, UNNEST({sh}) AS g
-      FROM {table} WHERE {text_col} IS NOT NULL),
+      SELECT doc_id AS doc, UNNEST({sh}) AS g
+      FROM documents WHERE text IS NOT NULL),
     gdf AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS gdf FROM grams GROUP BY g),
     per AS (
       SELECT doc, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
@@ -1120,19 +1017,13 @@ def sql_bigram_novelty(
                AS n_novel
       FROM grams JOIN gdf USING (g)
       GROUP BY doc)
-    SELECT doc AS {id_col}, n_bigrams, n_novel,
+    SELECT doc AS doc_id, n_bigrams, n_novel,
            (n_novel * 1000000) // n_bigrams AS novelty_ppm
     FROM per
     """
 
 
-def keyword_extraction(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-) -> DataFrame:
+def keyword_extraction(docs: DataFrame, *, k: int = 3) -> DataFrame:
     """Per-document keyword extraction: the top-k tokens by tf·idf —
     the corpus-tagging/labeling primitive behind search facets and
     weak-label generation. Log-free idf in the BM25 rational form
@@ -1153,11 +1044,11 @@ def keyword_extraction(
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     tok = docs.select(
-        F.col(id_col).alias("doc"), F.explode(tokens(F.col(text_col))).alias("tok")
+        F.col("doc_id").alias("doc"), F.explode(tokens(F.col("text"))).alias("tok")
     )
     tf = tok.groupBy("doc", "tok").agg(F.count(F.lit(1)).cast("long").alias("tf"))
     dfc = tf.groupBy("tok").agg(F.count(F.lit(1)).cast("long").alias("df"))
-    n = docs.where(F.col(text_col).isNotNull()).agg(
+    n = docs.where(F.col("text").isNotNull()).agg(
         F.count(F.lit(1)).cast("long").alias("n_docs")
     )
     idf = dfc.crossJoin(F.broadcast(n)).select(
@@ -1185,7 +1076,7 @@ def keyword_extraction(
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select(
-            F.col("doc").alias(id_col),
+            F.col("doc").alias("doc_id"),
             F.col("rank").cast("int").alias("rank"),
             F.col("tok").alias("keyword"),
             "tf",
@@ -1195,24 +1086,18 @@ def keyword_extraction(
     )
 
 
-def sql_keyword_extraction(
-    *,
-    table: str = "documents",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-) -> str:
+def sql_keyword_extraction(*, k: int = 3) -> str:
     """DuckDB oracle twin of :func:`keyword_extraction`."""
-    toks = sql_tokens(text_col)
+    toks = sql_tokens("text")
     return f"""
     WITH tok AS (
-      SELECT {id_col} AS doc, t.tok
-      FROM {table}, UNNEST({toks}) AS t(tok)),
+      SELECT doc_id AS doc, t.tok
+      FROM documents, UNNEST({toks}) AS t(tok)),
     tf AS (SELECT doc, tok, CAST(COUNT(*) AS BIGINT) AS tf
            FROM tok GROUP BY 1, 2),
     dfc AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY tok),
-    nd AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM {table}
-           WHERE {text_col} IS NOT NULL),
+    nd AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents
+           WHERE text IS NOT NULL),
     idf AS (
       SELECT tok, df,
              CAST(FLOOR(CAST(2 * (n_docs - df) + 1 AS DOUBLE)
@@ -1227,19 +1112,13 @@ def sql_keyword_extraction(
              ROW_NUMBER() OVER (PARTITION BY doc
                                 ORDER BY score_fx DESC, tok) AS rank
       FROM scored)
-    SELECT doc AS {id_col}, CAST(rank AS INT) AS rank, tok AS keyword,
+    SELECT doc AS doc_id, CAST(rank AS INT) AS rank, tok AS keyword,
            tf, df, score_fx
     FROM ranked WHERE rank <= {k}
     """
 
 
-def vocabulary_drift(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    top_k: int = 30,
-) -> DataFrame:
+def vocabulary_drift(docs: DataFrame, *, top_k: int = 30) -> DataFrame:
     """Vocabulary drift between two deterministic corpus halves (docs
     with even vs odd id — in production, yesterday's snapshot vs
     today's): per-token share of each half in integer ppm, and the
@@ -1265,10 +1144,10 @@ def vocabulary_drift(
     alignment on the token vocabulary, two one-row totals broadcast
     back, and a top-k that is per-partition pre-list + driver merge."""
     tok = (
-        docs.where(F.col(id_col).isNotNull())
+        docs.where(F.col("doc_id").isNotNull())
         .select(
-            (F.col(id_col) % 2 == 0).alias("in_a"),
-            F.explode(tokens(F.col(text_col))).alias("token"),
+            (F.col("doc_id") % 2 == 0).alias("in_a"),
+            F.explode(tokens(F.col("text"))).alias("token"),
         )
         .where(F.col("token") != "")
         .groupBy("token")
@@ -1304,20 +1183,14 @@ def vocabulary_drift(
     ).limit(top_k)
 
 
-def sql_vocabulary_drift(
-    *,
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    top_k: int = 30,
-) -> str:
+def sql_vocabulary_drift(*, top_k: int = 30) -> str:
     """DuckDB oracle twin of :func:`vocabulary_drift`."""
-    toks = sql_tokens(text_col)
+    toks = sql_tokens("text")
     return f"""
     WITH tok AS (
-      SELECT {id_col} % 2 = 0 AS in_a, t.token
-      FROM {table}, UNNEST({toks}) AS t(token)
-      WHERE {id_col} IS NOT NULL AND t.token <> ''),
+      SELECT doc_id % 2 = 0 AS in_a, t.token
+      FROM documents, UNNEST({toks}) AS t(token)
+      WHERE doc_id IS NOT NULL AND t.token <> ''),
     counts AS (
       SELECT token,
              CAST(SUM(CASE WHEN in_a THEN 1 ELSE 0 END) AS BIGINT) AS cnt_a,
@@ -1344,12 +1217,7 @@ def sql_vocabulary_drift(
     """
 
 
-def zipf_profile(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    top_k: int = 20,
-) -> DataFrame:
+def zipf_profile(docs: DataFrame, *, top_k: int = 20) -> DataFrame:
     """Corpus Zipf (rank-frequency) profile: the top-k vocabulary
     terms with their rank, frequency, corpus share, and the two
     integer diagnostics a Zipf fit reduces to once the log-log
@@ -1377,7 +1245,7 @@ def zipf_profile(
         raise ValueError(f"top_k must be >= 1, got {top_k}")
     d38 = "decimal(38,0)"
     tok = docs.select(
-        F.explode(tokens(F.col(text_col))).alias("tok")
+        F.explode(tokens(F.col("text"))).alias("tok")
     ).where(F.col("tok") != "")
     freq = tok.groupBy("tok").agg(
         F.count(F.lit(1)).cast("long").alias("freq")
@@ -1405,16 +1273,11 @@ def zipf_profile(
     )
 
 
-def sql_zipf_profile(
-    *,
-    table: str = "documents",
-    text_col: str = "text",
-    top_k: int = 20,
-) -> str:
+def sql_zipf_profile(*, top_k: int = 20) -> str:
     """DuckDB oracle twin of :func:`zipf_profile`."""
     return f"""
     WITH tok AS (
-      SELECT UNNEST({sql_tokens(text_col)}) AS tok FROM {table}),
+      SELECT UNNEST({sql_tokens("text")}) AS tok FROM documents),
     freq AS (
       SELECT tok, CAST(COUNT(*) AS BIGINT) AS freq
       FROM tok WHERE tok != '' GROUP BY 1),
@@ -1438,12 +1301,7 @@ def sql_zipf_profile(
     """
 
 
-def lexical_diversity(
-    docs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def lexical_diversity(docs: DataFrame) -> DataFrame:
     """Per-document lexical-diversity profile: token count, type
     (distinct-token) count, hapax legomena (types occurring once),
     type-token ratio and hapax share in integer ppm — the
@@ -1466,10 +1324,10 @@ def lexical_diversity(
     corpus pass."""
     d38 = "decimal(38,0)"
     tf = (
-        docs.where(F.col(text_col).isNotNull())
+        docs.where(F.col("text").isNotNull())
         .select(
-            F.col(id_col).alias("doc"),
-            F.explode(tokens(F.col(text_col))).alias("tok"),
+            F.col("doc_id").alias("doc"),
+            F.explode(tokens(F.col("text"))).alias("tok"),
         )
         .where(F.col("tok") != "")
         .groupBy("doc", "tok")
@@ -1496,17 +1354,12 @@ def lexical_diversity(
     )
 
 
-def sql_lexical_diversity(
-    *,
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> str:
+def sql_lexical_diversity() -> str:
     """DuckDB oracle twin of :func:`lexical_diversity`."""
     return f"""
     WITH tok AS (
-      SELECT {id_col} AS doc, UNNEST({sql_tokens(text_col)}) AS tok
-      FROM {table} WHERE {text_col} IS NOT NULL),
+      SELECT doc_id AS doc, UNNEST({sql_tokens("text")}) AS tok
+      FROM documents WHERE text IS NOT NULL),
     tf AS (
       SELECT doc, tok, CAST(COUNT(*) AS BIGINT) AS tf
       FROM tok WHERE tok != '' GROUP BY 1, 2),
@@ -1525,12 +1378,7 @@ def sql_lexical_diversity(
     """
 
 
-def lm_plausibility(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def lm_plausibility(docs: DataFrame) -> DataFrame:
     """Bigram language-model plausibility scoring — the CCNet-style
     quality gate (Wenzek et al. 2020 filter CommonCrawl by LM
     perplexity; the signal is "how probable is this document under a
@@ -1569,9 +1417,9 @@ def lm_plausibility(
     # per row, not once per bigram position (r12: the split inside the
     # index lambda re-evaluated per element)
     bigrams = bind_once(
-        tokens(F.col(text_col)),
+        tokens(F.col("text")),
         lambda toks: F.when(
-            F.col(text_col).isNotNull() & (F.size(toks) >= 2),
+            F.col("text").isNotNull() & (F.size(toks) >= 2),
             F.transform(
                 F.sequence(F.lit(1), F.size(toks) - 1),
                 lambda i: F.array_join(F.slice(toks, i, 2), " "),
@@ -1585,10 +1433,10 @@ def lm_plausibility(
     # re-ran it. One spread pass, evaluated once per invocation:
     # 9.1 → 3.2 s at sf1.
     base = pin(
-        spread(docs.select(F.col(id_col), F.col(text_col)), id_col)
+        spread(docs.select(F.col("doc_id"), F.col("text")), "doc_id")
         .select(
-            F.col(id_col).alias("doc"),
-            (F.col(id_col) % 2 == 0).alias("is_train"),
+            F.col("doc_id").alias("doc"),
+            (F.col("doc_id") % 2 == 0).alias("is_train"),
             bigrams.alias("bgs"),
         ),
         eager=False,
@@ -1632,7 +1480,7 @@ def lm_plausibility(
             F.sum("p_ppm").cast("double") / F.count(F.lit(1)).cast("double")
         ).alias("mean_prob_ppm"),
     ).select(
-        F.col("doc").alias(id_col),
+        F.col("doc").alias("doc_id"),
         "n_bigrams",
         "n_unseen",
         "sum_prob_ppm",
@@ -1657,26 +1505,21 @@ def tokens_of_bigrams(bgs: Column) -> Column:
     return F.concat(firsts, last_tail)
 
 
-def sql_lm_plausibility(
-    *,
-    table: str = "documents",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> str:
+def sql_lm_plausibility() -> str:
     """DuckDB oracle twin of :func:`lm_plausibility` — identical
     split, bigram lists, Laplace ppm floors, and pinned mean."""
-    toks = sql_tokens(text_col)
+    toks = sql_tokens("text")
     bgs = (
-        f"CASE WHEN {text_col} IS NOT NULL AND LEN({toks}) >= 2 THEN "
+        f"CASE WHEN text IS NOT NULL AND LEN({toks}) >= 2 THEN "
         f"[ARRAY_TO_STRING({toks}[i:i+1], ' ') "
         f"FOR i IN RANGE(1, LEN({toks}))] "
         f"ELSE [] END"
     )
     return f"""
     WITH base AS (
-      SELECT {id_col} AS doc, {id_col} % 2 = 0 AS is_train,
+      SELECT doc_id AS doc, doc_id % 2 = 0 AS is_train,
              {bgs} AS bgs
-      FROM {table}),
+      FROM documents),
     train_b AS (
       SELECT b, CAST(COUNT(*) AS BIGINT) AS cb
       FROM (SELECT UNNEST(bgs) AS b FROM base WHERE is_train)
@@ -1705,7 +1548,7 @@ def sql_lm_plausibility(
       LEFT JOIN train_b USING (b)
       LEFT JOIN train_c USING (ctx)
       CROSS JOIN vocab)
-    SELECT doc AS {id_col},
+    SELECT doc AS doc_id,
            CAST(COUNT(*) AS BIGINT) AS n_bigrams,
            CAST(SUM(CASE WHEN unseen THEN 1 ELSE 0 END) AS BIGINT)
              AS n_unseen,

@@ -17,28 +17,44 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kinesis_stream_spark.functions.hashing import (
-    WS_RUN,
-    sql_md5_int64,
-    sql_shingles,
-    sql_tokens,
-)
-from kinesis_stream_spark.functions.vectors import sql_cosine
+from kinesis_stream_spark.functions.hashing import WS_RUN, sql_md5_int64, sql_shingles, sql_tokens
+from kinesis_stream_spark.functions.vectors import sql_cosine, valid_vector
+from kinesis_stream_spark.operators.components import duplicate_clusters_bigstar
 from kinesis_stream_spark.operators.dedup import (
+    BLOOM_K,
+    BLOOM_M_BITS,
+    BLOOM_WORD_BITS,
     DEFAULT_BANDS,
     DEFAULT_NUM_HASHES,
+    MINHASH_MOD,
+    SIMHASH_BITS,
+    bloom_prefilter_dedup,
+    containment_pairs,
+    dedup_pipeline,
+    duplicate_chunk_removal,
     duplicate_clusters,
     exact_dedup,
+    exact_dedup_incremental,
+    lsh_pair_recall,
+    minhash_perm_coeffs,
     near_duplicates_minhash,
     near_duplicates_simhash,
     ngram_jaccard_pairs,
+    normalized_text,
+    pair_distance_histogram,
+    rare_term_cosine_pairs,
+    seen_hashes,
+    sql_rare_term_cosine_pairs,
 )
+from kinesis_stream_spark.operators.minhash_sql import sql_minhash_candidate_ctes
 from kinesis_stream_spark.operators.setjoin import (
     prefix_filter_jaccard_pairs,
     sql_prefix_filter_jaccard_pairs,
 )
 from kinesis_stream_spark.operators.similarity import cosine_pairs
+from kinesis_stream_spark.operators.text import leakage_safe_split
 from kinesis_stream_spark.queries import make_q
+from kinesis_stream_spark.queries._emb_family import guard_oracles as _guard
 from kinesis_stream_spark.sources.batch import load_table
 
 QUERIES = {}
@@ -88,8 +104,6 @@ def _sql_minhash_pipeline(input_cte: str, threshold: float) -> str:
     chain (``operators/minhash_sql.py`` — one source of truth for the
     hash/permutation/banding replay) plus this pipeline's Jaccard-verify
     tail over the shingle sets."""
-    from kinesis_stream_spark.operators.minhash_sql import sql_minhash_candidate_ctes
-
     return f"""
     WITH {sql_minhash_candidate_ctes(input_cte)}
     SELECT c.id_a, c.id_b,
@@ -166,8 +180,6 @@ def _sql_simhash_pipeline(
     CTE (defaults to documents ∪ exact copies). ``histogram=True``
     replays pair_distance_histogram instead: no hamming threshold,
     distinct pairs folded to (hamming, n_pairs)."""
-    from kinesis_stream_spark.operators.dedup import SIMHASH_BITS
-
     if input_cte is None:
         input_cte = SQL_EXACT_COPIES
 
@@ -234,8 +246,6 @@ def dedup_pair_distance_histogram(spark: SparkSession, sf_dir: str) -> DataFrame
     pairs — the spike near 0 is the planted near-dups, the tail is
     block-collision background. Integer-only output; the oracle replays
     fingerprints, blocking, pair-dedup, and the fold."""
-    from kinesis_stream_spark.operators.dedup import pair_distance_histogram
-
     docs = _with_truncated_copies(load_table(spark, sf_dir, "documents"))
     return pair_distance_histogram(docs, blocks=4).orderBy("hamming")
 
@@ -346,8 +356,6 @@ def dedup_clusters_bigstar(spark: SparkSession, sf_dir: str) -> DataFrame:
     membership is algorithm-independent), so both variants are held to
     one truth; equality with the propagation twin plus the round-count
     win on a long-chain graph are pinned in tests/test_components.py."""
-    from kinesis_stream_spark.operators.components import duplicate_clusters_bigstar
-
     return duplicate_clusters_bigstar(_chain_copy_edges(spark, sf_dir)).orderBy("canonical_id")
 
 
@@ -371,8 +379,6 @@ def dedup_embedding_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     one worker's memory at every test SF), so the hot-group guard's
     window count is skipped — a caller with unknown key skew would pass
     a bound instead (tests/test_similarity_guard.py covers that path)."""
-    from kinesis_stream_spark.functions.vectors import valid_vector
-
     emb = load_table(spark, sf_dir, "embeddings").where(
         valid_vector(F.col("embedding"), 64)
     )
@@ -434,8 +440,6 @@ def dedup_pipeline_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     transitive-closure semantics the components stage exists for (~2%
     of docs at sf0.1). The oracle replays all three stages — the
     end-to-end path every training-corpus build runs."""
-    from kinesis_stream_spark.operators.dedup import dedup_pipeline
-
     docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), WS_RUN)
     trunc = F.array_join(F.slice(toks, 1, F.greatest(F.size(toks) - 3, F.lit(1))), " ")
@@ -507,8 +511,6 @@ def dedup_containment_prefix_copies(spark: SparkSession, sf_dir: str) -> DataFra
     fires on. Blocked on (lang, source) with the ``max_df`` hot-gram cap
     on (the 100 TB boilerplate-skew guard); same sparse gram join as the
     Jaccard operator, oracle replays the identical capped pipeline."""
-    from kinesis_stream_spark.operators.dedup import containment_pairs
-
     docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), WS_RUN)
     half_len = F.floor((F.size(toks) + 1) / 2).cast("int")
@@ -522,7 +524,6 @@ def dedup_containment_prefix_copies(spark: SparkSession, sf_dir: str) -> DataFra
     return containment_pairs(
         both, ["lang", "source"], threshold=0.9, max_df=_CONTAIN_MAX_DF
     ).orderBy("lang", "source", "id_a", "id_b")
-
 
 
 @_q(
@@ -559,11 +560,6 @@ def dedup_exact_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the odds (must drop: in-batch duplicate, min id wins). Survivors
     are exactly the original odd ids — O(batch) work per round, the
     historical corpus is touched only through its digest index."""
-    from kinesis_stream_spark.operators.dedup import (
-        exact_dedup_incremental,
-        seen_hashes,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     even = docs.where(F.col("doc_id") % 2 == 0)
     odd = docs.where(F.col("doc_id") % 2 == 1)
@@ -613,19 +609,11 @@ def dedup_duplicate_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept in the original), each copy's final partial chunk is unique and
     survives. The oracle replays chunking, global occurrence counting,
     first-occurrence ranking, and document reassembly."""
-    from kinesis_stream_spark.operators.dedup import duplicate_chunk_removal
-
     docs = _with_truncated_copies(load_table(spark, sf_dir, "documents"))
     return duplicate_chunk_removal(docs, chunk_tokens=_CHUNK_K)
 
 
 def _sql_bloom_prefilter() -> str:
-    from kinesis_stream_spark.operators.dedup import (
-        BLOOM_K,
-        BLOOM_M_BITS,
-        BLOOM_WORD_BITS,
-    )
-
     def pos(seed: int) -> str:
         return f"({sql_md5_int64('content_hash', seed)} % {BLOOM_M_BITS})"
 
@@ -681,11 +669,6 @@ def dedup_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     bitmap, word-join probe, exact-membership confirm — so parity covers
     the bitmap content and any false positives of the fixed geometry,
     not just the final verdicts."""
-    from kinesis_stream_spark.operators.dedup import (
-        bloom_prefilter_dedup,
-        seen_hashes,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     even = docs.where(F.col("doc_id") % 2 == 0)
     odd = docs.where(F.col("doc_id") % 2 == 1)
@@ -719,9 +702,6 @@ def text_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash), so a document and its copies always share a split — the
     leakage guard a doc-level random split lacks. The oracle replays
     clustering and the seeded split rule, pinning every assignment."""
-    from kinesis_stream_spark.operators.dedup import normalized_text
-    from kinesis_stream_spark.operators.text import leakage_safe_split
-
     docs = _with_exact_copies(load_table(spark, sf_dir, "documents"))
     h = F.md5(normalized_text(F.col("text")))
     hashes = docs.select("doc_id", h.alias("content_hash"))
@@ -740,8 +720,6 @@ _SQL_META_TRUNC_COPIES = f"""
 
 
 def _sql_lsh_recall() -> str:
-    from kinesis_stream_spark.operators.dedup import MINHASH_MOD, minhash_perm_coeffs
-
     n, bands = DEFAULT_NUM_HASHES, DEFAULT_BANDS
     rows = n // bands
     sig_elems = ", ".join(
@@ -807,8 +785,6 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     J ≥ 0.5, over documents ∪ tail-truncated copies. The oracle replays
     BOTH pipelines (exhaustive sparse-join truth and the banded
     candidate generator), so parity pins the measurement itself."""
-    from kinesis_stream_spark.operators.dedup import lsh_pair_recall
-
     docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), WS_RUN)
     trunc = F.array_join(
@@ -827,8 +803,6 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Corrupt-vector guard for the embedding-cosine oracle (twin of the
 # valid_vector filter on the Spark side); the shared helper restricts
 # the rewrite to FROM/JOIN positions and fails loudly otherwise.
-from kinesis_stream_spark.queries._emb_family import guard_oracles as _guard
-
 ORACLE["dedup_embedding_cosine_pairs"] = _guard(
     {"dedup_embedding_cosine_pairs": ORACLE["dedup_embedding_cosine_pairs"]}
 )["dedup_embedding_cosine_pairs"]
@@ -842,8 +816,6 @@ def dedup_rare_term_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join it scores with; integer dot/norms, integer cosine²
     threshold prune, one sqrt+divide per surviving pair
     (operators/dedup.py)."""
-    from kinesis_stream_spark.operators.dedup import rare_term_cosine_pairs
-
     return rare_term_cosine_pairs(
         load_table(spark, sf_dir, "documents"),
         max_df=20,
@@ -851,10 +823,6 @@ def dedup_rare_term_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         top_k=50,
     )
 
-
-from kinesis_stream_spark.operators.dedup import (  # noqa: E402
-    sql_rare_term_cosine_pairs,
-)
 
 ORACLE["dedup_rare_term_cosine"] = sql_rare_term_cosine_pairs(
     max_df=20, min_cosine_ppm=500_000, top_k=50

@@ -12,29 +12,52 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kinesis_stream_spark.operators.text import (
-    BPE_PATTERN,
-    sql_bigram_novelty,
-    sql_keyword_extraction,
-    LANG_MARKERS,
-    STOPWORDS,
-    chunk_windows,
-    decontaminate_ngram_overlap,
-    language_id,
-    pack_sequences,
-    quality_features,
-    rolling_fingerprint,
-    sql_chunk_windows,
-    sql_count_in_set,
-    sql_rolling_fingerprint,
-    sql_winnowed_fingerprints,
-    stratified_sample,
-    term_stats_topk,
-    token_stats,
-    winnowed_fingerprints,
-)
 from kinesis_stream_spark.functions.hashing import sql_md5_int64, sql_shingles, sql_tokens
 from kinesis_stream_spark.operators.cms import cm_heavy_hitters, sql_cm_heavy_hitters
+from kinesis_stream_spark.operators.dedup import normalized_text
+from kinesis_stream_spark.operators.text import (
+    BPE_PATTERN,
+    LANG_MARKERS,
+    STOPWORDS,
+    bigram_novelty,
+    boilerplate_fraction,
+    chunk_windows,
+    collocations,
+    decontaminate_ngram_overlap,
+    domain_cap,
+    exact_substring_decontaminate,
+    keyword_extraction,
+    language_id,
+    lexical_diversity,
+    lm_plausibility,
+    normalize_summary,
+    pack_sequences,
+    pii_scrub,
+    pred_lang_col,
+    quality_columns,
+    quality_features,
+    repetition_stats,
+    rolling_fingerprint,
+    sql_bigram_novelty,
+    sql_chunk_windows,
+    sql_count_in_set,
+    sql_keyword_extraction,
+    sql_lexical_diversity,
+    sql_lm_plausibility,
+    sql_pii_scrub_columns,
+    sql_rolling_fingerprint,
+    sql_vocabulary_drift,
+    sql_winnowed_fingerprints,
+    sql_zipf_profile,
+    stratified_sample,
+    term_stats_topk,
+    token_rarity,
+    token_stats,
+    vocabulary_drift,
+    weighted_mixture,
+    winnowed_fingerprints,
+    zipf_profile,
+)
 from kinesis_stream_spark.queries import make_q
 from kinesis_stream_spark.sources.batch import load_table
 
@@ -211,7 +234,7 @@ def text_top_terms_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Collection-frequency top-5 terms per language with document
     frequency (integer-only tf/df — no idf log, so cross-engine exact)."""
     docs = load_table(spark, sf_dir, "documents")
-    return term_stats_topk(docs, group_col="lang").orderBy("lang", "rank")
+    return term_stats_topk(docs).orderBy("lang", "rank")
 
 
 def _sql_curation_pipeline(threshold: float = 0.65) -> str:
@@ -274,17 +297,14 @@ def text_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles are exactly the dedup groupBy, the winners join-back, and
     the final per-language aggregate — the shape a 100 TB curation run
     wants."""
-    from kinesis_stream_spark.operators.dedup import normalized_text
-    from kinesis_stream_spark.operators.text import pred_lang_col, quality_columns
-
     docs = load_table(spark, sf_dir, "documents")
-    q = quality_columns("text")
+    q = quality_columns()
     kept = docs.select(
         "doc_id",
         "text",
         q["n_tokens"].alias("n_tokens"),
         q["quality_score"].alias("quality_score"),
-        pred_lang_col("text").alias("pred_lang"),
+        pred_lang_col().alias("pred_lang"),
     ).where(F.col("quality_score") >= 0.65)
     deduped = (
         kept.groupBy(F.md5(normalized_text(F.col("text"))).alias("h"))
@@ -389,7 +409,7 @@ def text_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     appends; summarized per language for the gate."""
     docs = load_table(spark, sf_dir, "documents")
     return (
-        stratified_sample(docs, _MIX_RATES, stratum_col="lang")
+        stratified_sample(docs, _MIX_RATES)
         .groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_kept"),
@@ -475,8 +495,6 @@ def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "repetitious document" drop rules in pre-training curation. Two
     hash aggregations per gram order, map-side combined; nothing held
     per-row, so document length is unbounded."""
-    from kinesis_stream_spark.operators.text import repetition_stats
-
     docs = load_table(spark, sf_dir, "documents")
     return repetition_stats(docs).orderBy("doc_id")
 
@@ -493,8 +511,6 @@ _PII_TEXT_SQL = (
 
 
 def _sql_pii_scrub() -> str:
-    from kinesis_stream_spark.operators.text import sql_pii_scrub_columns
-
     counts, scrubbed = sql_pii_scrub_columns(_PII_TEXT_SQL)
     return f"""
     SELECT doc_id, {counts},
@@ -512,8 +528,6 @@ def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     the regex subset Java and RE2 interpret identically; replacement
     order is part of the operator contract. Pure map stage — the
     redaction pass before tokenization in a compliance-bound pipeline."""
-    from kinesis_stream_spark.operators.text import pii_scrub
-
     docs = load_table(spark, sf_dir, "documents")
     injected = docs.withColumn(
         "text",
@@ -556,8 +570,6 @@ def text_boilerplate_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-gram shingles whose corpus document-frequency is >= 5 — flags
     template-dominated documents (the complement of the within-doc
     repetition filters). Gram-keyed shuffles only; nothing broadcast."""
-    from kinesis_stream_spark.operators.text import boilerplate_fraction
-
     docs = load_table(spark, sf_dir, "documents")
     return boilerplate_fraction(docs).orderBy("doc_id")
 
@@ -587,8 +599,6 @@ def text_token_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the deterministic stand-in for unigram-LM quality scoring (integer
     ranks avoid libm log, whose last-ulp rounding differs across
     engines). The oracle replays ranking and scoring end-to-end."""
-    from kinesis_stream_spark.operators.text import token_rarity
-
     docs = load_table(spark, sf_dir, "documents")
     return token_rarity(docs).orderBy("doc_id")
 
@@ -612,8 +622,6 @@ def text_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-domain cap over the documents table (≤15 docs per source,
     deterministic hash-ranked sample). Oracle replays the seeded-hash
     ordering, so parity pins WHICH documents survive, not just counts."""
-    from kinesis_stream_spark.operators.text import domain_cap
-
     return domain_cap(load_table(spark, sf_dir, "documents"), cap=15)
 
 
@@ -655,10 +663,8 @@ def text_weighted_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     stratified sampling — how pre-training mixes are actually specified.
     Map + explode only; the oracle replays copy counts AND the exploded
     copy identities."""
-    from kinesis_stream_spark.operators.text import weighted_mixture
-
     docs = load_table(spark, sf_dir, "documents")
-    return weighted_mixture(docs, _MIX_WEIGHTS, stratum_col="source").orderBy(
+    return weighted_mixture(docs, _MIX_WEIGHTS).orderBy(
         "doc_id", "copy_idx"
     )
 
@@ -699,8 +705,6 @@ def text_substring_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     n-gram overlap misses for short literal strings. Probe set
     broadcasts; the corpus scan is map-only with one partial-agg
     exchange carrying a single row per document."""
-    from kinesis_stream_spark.operators.text import exact_substring_decontaminate
-
     docs = load_table(spark, sf_dir, "documents")
     probes = docs.where(F.col("doc_id") < _SUB_PROBE_N).select(
         F.col("doc_id").alias("probe_id"),
@@ -733,8 +737,6 @@ def text_normalize_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     interesting inputs — tabs, newlines, multi-space runs, unicode — are
     exercised by the fuzz-parity corpus; the clean token-soup corpus
     normalizes to itself, which the zero n_changed here certifies."""
-    from kinesis_stream_spark.operators.text import normalize_summary
-
     return normalize_summary(load_table(spark, sf_dir, "documents"))
 
 
@@ -767,8 +769,6 @@ def text_collocation_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     PMI's monotone twin without the cross-engine log. The oracle replays
     the explode, both count aggregates, and the identical
     double-multiply/divide lift arithmetic."""
-    from kinesis_stream_spark.operators.text import collocations
-
     docs = load_table(spark, sf_dir, "documents")
     return collocations(docs, min_count=2).orderBy(
         F.desc("lift"), "tok_a", "tok_b"
@@ -797,7 +797,7 @@ def text_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q(
     "text_cms_heavy_hitters",
-    sql_cm_heavy_hitters(table="documents", text_col="text", top_k=20)
+    sql_cm_heavy_hitters(top_k=20)
     + " ORDER BY exact_cnt DESC, token",
 )
 def text_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -808,7 +808,7 @@ def text_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 2-universal hashing and KB-sized mergeable-cell scale
     story)."""
     docs = load_table(spark, sf_dir, "documents")
-    return cm_heavy_hitters(docs, text_col="text", top_k=20).orderBy(
+    return cm_heavy_hitters(docs, top_k=20).orderBy(
         F.desc("exact_cnt"), F.asc("token")
     )
 
@@ -822,8 +822,6 @@ def text_bigram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     < 2 documents corpus-wide) — the OOV/gibberish scorer complementing
     the boilerplate fraction; exact integer arithmetic end to end
     (operator docstring for the explode/agg/join diamond)."""
-    from kinesis_stream_spark.operators.text import bigram_novelty
-
     docs = load_table(spark, sf_dir, "documents")
     return bigram_novelty(docs).orderBy("doc_id")
 
@@ -837,8 +835,6 @@ def text_keyword_extraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     2^20 fixed point (one pinned divide per VOCABULARY term), exact
     BIGINT scores, (score desc, token) tie-break (operator
     docstring)."""
-    from kinesis_stream_spark.operators.text import keyword_extraction
-
     docs = load_table(spark, sf_dir, "documents")
     return keyword_extraction(docs, k=3).orderBy("doc_id", "rank")
 
@@ -850,14 +846,8 @@ def text_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ppm shares and the top-30 |Δppm| movers — the log-free
     distribution-shift screen (operator docstring in
     operators/text.py)."""
-    from kinesis_stream_spark.operators.text import vocabulary_drift
-
     return vocabulary_drift(load_table(spark, sf_dir, "documents"))
 
-
-from kinesis_stream_spark.operators.text import (  # noqa: E402
-    sql_vocabulary_drift,
-)
 
 ORACLE["text_vocab_drift"] = sql_vocabulary_drift()
 
@@ -869,14 +859,10 @@ def text_zipf_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit (flat head = template corpus, cliff = tokenizer bug);
     one combinable count pass + TakeOrderedAndProject
     (operators/text.py)."""
-    from kinesis_stream_spark.operators.text import zipf_profile
-
     return zipf_profile(
         load_table(spark, sf_dir, "documents"), top_k=20
     ).orderBy("rank")
 
-
-from kinesis_stream_spark.operators.text import sql_zipf_profile  # noqa: E402
 
 ORACLE["text_zipf_profile"] = sql_zipf_profile(top_k=20) + " ORDER BY rank"
 
@@ -888,16 +874,10 @@ def text_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     beside the repetition filter (low TTR = template slot-filling,
     hapax ≈ 1 on long docs = OCR noise); one explode, one reduce
     (operators/text.py)."""
-    from kinesis_stream_spark.operators.text import lexical_diversity
-
     return lexical_diversity(
         load_table(spark, sf_dir, "documents")
     ).orderBy("doc_id")
 
-
-from kinesis_stream_spark.operators.text import (  # noqa: E402
-    sql_lexical_diversity,
-)
 
 ORACLE["text_lexical_diversity"] = (
     sql_lexical_diversity() + " ORDER BY doc_id"
@@ -911,16 +891,10 @@ def text_lm_plausibility(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality gate, log-free (exact Laplace ppm; the ln is
     presentation, the ranking is the product). See
     operators/text.py:lm_plausibility."""
-    from kinesis_stream_spark.operators.text import lm_plausibility
-
     return lm_plausibility(load_table(spark, sf_dir, "documents")).orderBy(
         "doc_id"
     )
 
-
-from kinesis_stream_spark.operators.text import (  # noqa: E402
-    sql_lm_plausibility,
-)
 
 ORACLE["text_lm_plausibility"] = (
     sql_lm_plausibility() + " ORDER BY doc_id"

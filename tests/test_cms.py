@@ -12,7 +12,7 @@ def test_cms_overcount_nonnegative_and_topk_order(spark):
         [(i, ("alpha " * (20 - i) + f"tok{i} beta").strip()) for i in range(10)],
         "doc_id long, text string",
     )
-    rows = cm_heavy_hitters(docs, text_col="text", top_k=5).collect()
+    rows = cm_heavy_hitters(docs, top_k=5).collect()
     assert len(rows) == 5
     for r in rows:
         assert r.overcount >= 0
@@ -30,7 +30,7 @@ def test_cms_exact_when_tokens_fit_without_collisions(spark):
     docs = spark.createDataFrame(
         [(1, "a a a b b c")], "doc_id long, text string"
     )
-    rows = cm_heavy_hitters(docs, text_col="text", top_k=3).collect()
+    rows = cm_heavy_hitters(docs, top_k=3).collect()
     got = {r.token: (r.exact_cnt, r.cm_est) for r in rows}
     assert got["a"][0] == 3 and got["b"][0] == 2 and got["c"][0] == 1
     for exact, est in got.values():

@@ -56,7 +56,7 @@ def test_text_family_empty(spark, empties):
     assert text.boilerplate_fraction(docs).count() == 0
     assert text.pii_scrub(docs).count() == 0
     assert text.winnowed_fingerprints(docs).count() == 0
-    assert text.pack_sequences(docs, capacity=10, partition_col="source").count() == 0
+    assert text.pack_sequences(docs, capacity=10).count() == 0
     assert text.stratified_sample(docs, {"en": 0.5}).count() == 0
     assert text.decontaminate_ngram_overlap(docs, docs).count() == 0
 

@@ -388,7 +388,7 @@ def test_weighted_mixture_vs_hashlib_replay(spark, seed):
     weights = {"s0": 2.5, "s1": 0.25, "s2": 0.0}
     df = spark.createDataFrame(docs, "doc_id long, source string")
     got = {}
-    for r in weighted_mixture(df, weights, stratum_col="source").collect():
+    for r in weighted_mixture(df, weights).collect():
         got.setdefault((r.doc_id, r.source), []).append((r.n_copies, r.copy_idx))
 
     want = {}
@@ -505,7 +505,7 @@ def test_weighted_mixture_row_count_identity(spark):
         "doc_id long, source string",
     )
     weights = {f"s{j}": rng.choice([0.0, 0.4, 1.0, 1.7, 3.25]) for j in range(4)}
-    out = weighted_mixture(docs, weights, stratum_col="source").collect()
+    out = weighted_mixture(docs, weights).collect()
     per_doc: dict[int, list] = {}
     for r in out:
         per_doc.setdefault(r.doc_id, []).append(r)

@@ -33,7 +33,15 @@ SURFACE = (PACKAGE / "operators", PACKAGE / "queries")
 CALLERS = (PACKAGE, ROOT / "perfbench", ROOT / "tests")
 SCHEMA_NAME = re.compile(r"_col|_cols|table|key|_key|_ts")
 #: operator families whose schema-name parameters the census covers
-SCHEMA_BOUND = ("operators/temporal.py",)
+SCHEMA_BOUND = (
+    "operators/cms.py",
+    "operators/components.py",
+    "operators/dedup.py",
+    "operators/minhash_profile.py",
+    "operators/setjoin.py",
+    "operators/temporal.py",
+    "operators/text.py",
+)
 
 
 def _parse(path: Path) -> ast.Module:

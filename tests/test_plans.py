@@ -60,7 +60,7 @@ def test_stratified_sample_is_map_only(spark, sf_dir):
     from kinesis_stream_spark.operators.text import stratified_sample
 
     docs = load_table(spark, sf_dir, "documents")
-    plan = _explain(stratified_sample(docs, {"en": 0.5}, stratum_col="lang"))
+    plan = _explain(stratified_sample(docs, {"en": 0.5}))
     # a sampling FILTER must never shuffle: no exchange of any kind
     assert "Exchange" not in plan
 

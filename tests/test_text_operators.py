@@ -127,7 +127,7 @@ def test_weighted_mixture_repeat_factors(spark):
     )
     # integer weights are exact (no hash fraction): 2 copies of every
     # 'a' doc, 'b' dropped entirely, default 1.0 for 'c'
-    out = weighted_mixture(docs, {"a": 2.0, "b": 0.0}, stratum_col="source").collect()
+    out = weighted_mixture(docs, {"a": 2.0, "b": 0.0}).collect()
     by_doc = {}
     for r in out:
         by_doc.setdefault(r.doc_id, []).append(r)
@@ -141,8 +141,8 @@ def test_weighted_mixture_repeat_factors(spark):
     assert len(by_doc) == 20  # the 10 'b' docs vanished
     # fractional weights: realized rate lands within the bucket rule's
     # quantization and is identical under repartitioning
-    frac = weighted_mixture(docs, {"a": 1.5}, stratum_col="source")
-    again = weighted_mixture(docs.repartition(7), {"a": 1.5}, stratum_col="source")
+    frac = weighted_mixture(docs, {"a": 1.5})
+    again = weighted_mixture(docs.repartition(7), {"a": 1.5})
     assert sorted(map(tuple, frac.collect())) == sorted(map(tuple, again.collect()))
 
 

@@ -17,7 +17,15 @@ across processes and trees:
 - each distinct-aggregate ``Expand`` has its grouping columns and
   projections sorted and its group ids renumbered in that order, since
   Spark's distinct-aggregate rewrite orders the distinct groups by hash
-  (of expression ids), which changes from run to run.
+  (of expression ids), which changes from run to run;
+- the generated name of an ``Observation`` and the dataset id in each
+  ``CollectMetrics`` node are numbered by first appearance;
+- the optimized plan of every frame the build passes to
+  ``lineage.pin`` follows the query's own, in call order, so work
+  below a lineage cut (an iterative loop's rounds, a pinned
+  intermediate) shows in the dump and not only the ``LogicalRDD`` that
+  reads it. The whole dump is normalized in one pass, so an expression
+  id keeps one number across the query's plan and its pins' plans.
 
 So ``diff -r`` of two trees' dumps, each made in its own checkout with
 the same ``--tag`` and SF directory, decides "plans identical" in one
@@ -38,6 +46,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 _EXPR_ID = re.compile(r"#(\d+)L?\b")
 _LAMBDA = re.compile(r"(?<=lambda )([A-Za-z]+)_\d+\b")
+_METRICS = re.compile(r"(?<=CollectMetrics )([^,]+)(, .*, )(\d+)$", re.M)
 
 
 def _split(text: str) -> list[str]:
@@ -100,12 +109,42 @@ def _sort_expands(plan: str) -> str:
 def normalize(plan: str) -> str:
     """The plan text with run-dependent numbering made canonical."""
     plan = _sort_expands(plan)
+    observations: dict[str, str] = {}
+    datasets: dict[str, str] = {}
+    plan = _METRICS.sub(
+        lambda m: observations.setdefault(m.group(1), f"observation_{len(observations)}")
+        + m.group(2)
+        + datasets.setdefault(m.group(3), str(len(datasets))),
+        plan,
+    )
     names: dict[str, str] = {}
     plan = _LAMBDA.sub(
         lambda m: names.setdefault(m.group(0), f"{m.group(1)}_{len(names)}"), plan
     )
     ids: dict[str, str] = {}
     return _EXPR_ID.sub(lambda m: "#" + ids.setdefault(m.group(1), str(len(ids))), plan)
+
+
+def _record_pins() -> list:
+    """Wrap ``lineage.pin`` so each frame it cuts is appended to the
+    returned list. Call it before the query modules are imported: they
+    bind ``pin`` by name at import, and ``pin_observed`` and ``advance``
+    call the module global."""
+    from kinesis_stream_spark.operators import lineage
+
+    frames = []
+    cut = lineage.pin
+
+    def pin(df, *, eager=True):
+        frames.append(df)
+        return cut(df, eager=eager)
+
+    lineage.pin = pin
+    return frames
+
+
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
 
 
 def main() -> None:
@@ -118,6 +157,7 @@ def main() -> None:
     if args.names and not args.suffix:
         ap.error("--suffix is required with query names")
 
+    pinned = [] if args.names else _record_pins()
     from kinesis_stream_spark.queries import all_queries
     from kinesis_stream_spark.session import get_spark
 
@@ -130,9 +170,11 @@ def main() -> None:
     os.makedirs(outdir, exist_ok=True)
     if not args.names:
         for name, build in registry.items():
-            plan = build(spark, args.sf_dir)._jdf.queryExecution().optimizedPlan()
+            pinned.clear()
+            plans = [_optimized(build(spark, args.sf_dir))]
+            plans += [f"== pin {i} ==\n{_optimized(df)}" for i, df in enumerate(pinned, 1)]
             with open(os.path.join(outdir, f"{name}.txt"), "w") as fh:
-                fh.write(normalize(plan.toString()) + "\n")
+                fh.write(normalize("\n".join(plans)) + "\n")
         print(f"{len(registry)} optimized plans -> {outdir}")
         return
     for name in args.names:
