@@ -1,17 +1,41 @@
-"""Extension operators: the LLM-data-pipeline surface built on the engine
-core (SURVEY.md §2.3 extension rows; BASELINE north star).
+"""Extension operators: the analytics surface built on the engine core
+(SURVEY.md §2.3 extension rows; BASELINE north star). Everything is
+composed from DataFrame built-ins and the cross-engine hash/vector
+primitives in :mod:`kinesis_stream_spark.functions`; Python appears
+only in Arrow-batched steps where built-ins can't express the work.
 
-- :mod:`dedup` — exact, MinHash+LSH, SimHash, n-gram Jaccard,
-  embedding-cosine near-dup
-- :mod:`similarity` — brute-force cosine top-k; hyperplane-LSH and IVF
-  scale paths
-- :mod:`text` — language ID, quality scoring, token counting, document
-  fingerprints, tf-idf
-- :mod:`multimodal` — opaque binary payloads + typed metadata; Arrow-batched
-  decode/feature plumbing (decoders stubbed: no image/audio libs here)
+**Input schemas.** The reference's consumer hands every stage one fixed
+``Record``; in the same way each operator family reads its input by
+fixed names, and the ``sql_*`` oracle twins read the tables of the same
+names:
 
-All composed from DataFrame built-ins + the cross-engine hash/vector
-primitives in :mod:`kinesis_stream_spark.functions`; Python appears only in
-Arrow-batched ``mapInPandas`` where built-ins genuinely can't express the
-work (multimodal decode).
+====================================================  ========================
+input (columns read by name)                          modules
+====================================================  ========================
+``events(event_id, user_id, event_type, ts, value)``  temporal, attribution,
+                                                      experiment, profile
+``documents(doc_id, text, lang, source, n_chars)``    text, dedup, setjoin,
+                                                      cms, minhash_profile,
+                                                      retrieval, multimodal
+dedup edges ``(id_a, id_b)``                          dedup, components
+``embeddings(vec_id, embedding, label)``              similarity, quantization,
+                                                      opq, evaluation
+vector queries ``(query_id, embedding)``              the same four
+ranked top-k ``(query_id, vec_id, rank)``             evaluation
+text queries ``(query_id, qtext)``                    retrieval
+graph edges ``(src, dst)``, weight ``w``              graph
+graph sources and seeds ``(node)``                    graph
+baskets ``(basket, item)``                            basket
+media ``(media_id, payload)``                         multimodal
+files ``(part_key, file_id)``                         layout
+snapshots ``(doc_id, fp)``, CDC changes ``(k, op)``   profile
+====================================================  ========================
+
+A frame whose columns are named otherwise is renamed once with a
+``select(... .alias(...))``; Catalyst folds that projection into the
+scan. Names stay parameters only where callers set them: the operators
+meant for any table (the profilers in ``profile``, ``skew``,
+``quantiles``, ``sampling``, ``pareto``, ``modeleval``, ``encoding``,
+``fuzzy`` and ``asof``) and the few a module's docstring names.
+FIXTURES.md §B lists the tables' types.
 """

@@ -53,30 +53,22 @@ LOOKBACK_US = 7 * 24 * 3600 * 1_000_000
 LAG_BUCKET_US = 3_600_000_000
 
 
-def _tagged_frame(
-    events: DataFrame,
-    *,
-    entity_col: str,
-    type_col: str,
-    ts_col: str,
-    id_col: str,
-    value_col: str | None,
-):
+def _tagged_frame(events: DataFrame, *, value_col: str | None):
     """The shared attribution scaffolding: NULL-filtered projection,
     conversion tagging, the orderable touch struct (NULL on conversion
     rows), and the per-entity value-RANGE window spec. One definition
     so the lookback boundary and NULL contracts cannot drift between
     :func:`first_last_touch` and :func:`conversion_lag_histogram`."""
     cols = [
-        F.col(entity_col).alias("ent"),
-        F.col(type_col).alias("etype"),
-        F.expr(f"unix_micros(cast({ts_col} as timestamp))").alias("us"),
-        F.col(id_col).alias("eid"),
+        F.col("user_id").alias("ent"),
+        F.col("event_type").alias("etype"),
+        F.expr("unix_micros(cast(ts as timestamp))").alias("us"),
+        F.col("event_id").alias("eid"),
     ]
     if value_col is not None:
         cols.append(F.col(value_col).alias("val"))
     base = events.where(
-        F.col(entity_col).isNotNull() & F.col(ts_col).isNotNull()
+        F.col("user_id").isNotNull() & F.col("ts").isNotNull()
     ).select(*cols)
     is_conv = F.col("etype") == CONVERSION_TYPE
     out = [
@@ -105,15 +97,7 @@ def _tagged_frame(
     return tagged, w
 
 
-def first_last_touch(
-    events: DataFrame,
-    *,
-    entity_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    value_col: str = "value",
-) -> DataFrame:
+def first_last_touch(events: DataFrame) -> DataFrame:
     """Per-touch-type attribution report: for every conversion (an
     event of ``CONVERSION_TYPE``), find the entity's touches (any
     other event type) with ``conv_us − LOOKBACK_US ≤ touch_us ≤
@@ -131,14 +115,7 @@ def first_last_touch(
     tie-free total order (touch_us, touch_id) — encoded here as a
     struct MIN/MAX over the range frame, replayed by the oracle as a
     join + ROW_NUMBER (identical results, independent plans)."""
-    tagged, w = _tagged_frame(
-        events,
-        entity_col=entity_col,
-        type_col=type_col,
-        ts_col=ts_col,
-        id_col=id_col,
-        value_col=value_col,
-    )
+    tagged, w = _tagged_frame(events, value_col="value")
     conv_rows = (
         tagged.select(
             "is_conv",
@@ -178,23 +155,15 @@ def first_last_touch(
     )
 
 
-def sql_first_last_touch(
-    *,
-    table: str = "events",
-    entity_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    value_col: str = "value",
-) -> str:
+def sql_first_last_touch() -> str:
     """DuckDB oracle twin of :func:`first_last_touch` (identical
     interval join, tie-free ROW_NUMBER selection, DECIMAL sums)."""
     return f"""
     WITH base AS (
-      SELECT {entity_col} AS ent, {type_col} AS etype,
-             EPOCH_US({ts_col}) AS us, {id_col} AS eid, {value_col} AS val
-      FROM {table}
-      WHERE {entity_col} IS NOT NULL AND {ts_col} IS NOT NULL),
+      SELECT user_id AS ent, event_type AS etype,
+             EPOCH_US(ts) AS us, event_id AS eid, value AS val
+      FROM events
+      WHERE user_id IS NOT NULL AND ts IS NOT NULL),
     conv AS (
       SELECT ent, eid AS conv_id, us AS conv_us, val AS conv_val
       FROM base WHERE etype = '{CONVERSION_TYPE}'),
@@ -230,14 +199,7 @@ def sql_first_last_touch(
     """
 
 
-def conversion_lag_histogram(
-    events: DataFrame,
-    *,
-    entity_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
+def conversion_lag_histogram(events: DataFrame) -> DataFrame:
     """Time-to-convert distribution: for every conversion, the lag from
     the entity's FIRST in-window touch, bucketed by the hour —
     the funnel-velocity readout next to :func:`first_last_touch`
@@ -252,14 +214,7 @@ def conversion_lag_histogram(
     Scale shape: the shared :func:`_tagged_frame` value-RANGE window
     (no join — cost accounting in the module docstring), then one
     combinable bucket count."""
-    tagged, w = _tagged_frame(
-        events,
-        entity_col=entity_col,
-        type_col=type_col,
-        ts_col=ts_col,
-        id_col=id_col,
-        value_col=None,
-    )
+    tagged, w = _tagged_frame(events, value_col=None)
     conv_rows = tagged.select(
         "is_conv",
         "us",
@@ -277,22 +232,15 @@ def conversion_lag_histogram(
     )
 
 
-def sql_conversion_lag_histogram(
-    *,
-    table: str = "events",
-    entity_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> str:
+def sql_conversion_lag_histogram() -> str:
     """DuckDB oracle twin of :func:`conversion_lag_histogram` — the
     independent join formulation (MIN over the candidate join)."""
     return f"""
     WITH base AS (
-      SELECT {entity_col} AS ent, {type_col} AS etype,
-             EPOCH_US({ts_col}) AS us, {id_col} AS eid
-      FROM {table}
-      WHERE {entity_col} IS NOT NULL AND {ts_col} IS NOT NULL),
+      SELECT user_id AS ent, event_type AS etype,
+             EPOCH_US(ts) AS us, event_id AS eid
+      FROM events
+      WHERE user_id IS NOT NULL AND ts IS NOT NULL),
     conv AS (SELECT ent, eid AS conv_id, us AS conv_us FROM base
              WHERE etype = '{CONVERSION_TYPE}'),
     touch AS (SELECT ent, us AS touch_us FROM base

@@ -36,13 +36,7 @@ from pyspark.sql import functions as F
 D38 = "decimal(38,0)"
 
 
-def association_rules(
-    baskets: DataFrame,
-    *,
-    basket_col: str = "basket",
-    item_col: str = "item",
-    min_support: int = 2,
-) -> DataFrame:
+def association_rules(baskets: DataFrame, *, min_support: int = 2) -> DataFrame:
     """Directional pair association rules over (basket, item) rows.
 
     Output per rule: (antecedent, consequent, n_baskets, sup_a, sup_b,
@@ -53,10 +47,8 @@ def association_rules(
     if min_support < 1:
         raise ValueError(f"min_support must be >= 1, got {min_support}")
     bi = (
-        baskets.where(
-            F.col(basket_col).isNotNull() & F.col(item_col).isNotNull()
-        )
-        .select(F.col(basket_col).alias("b"), F.col(item_col).alias("i"))
+        baskets.where(F.col("basket").isNotNull() & F.col("item").isNotNull())
+        .select(F.col("basket").alias("b"), F.col("item").alias("i"))
         .distinct()
     )
     n = bi.select(F.count_distinct("b").cast("long").alias("n_baskets"))
@@ -141,8 +133,6 @@ def sql_association_rules(
 def item_jaccard(
     baskets: DataFrame,
     *,
-    basket_col: str = "basket",
-    item_col: str = "item",
     min_common: int = 2,
     top_k: int = 30,
 ) -> DataFrame:
@@ -173,10 +163,8 @@ def item_jaccard(
     if min_common < 1:
         raise ValueError(f"min_common must be >= 1, got {min_common}")
     bi = (
-        baskets.where(
-            F.col(basket_col).isNotNull() & F.col(item_col).isNotNull()
-        )
-        .select(F.col(basket_col).alias("b"), F.col(item_col).alias("i"))
+        baskets.where(F.col("basket").isNotNull() & F.col("item").isNotNull())
+        .select(F.col("basket").alias("b"), F.col("item").alias("i"))
         .distinct()
     )
     deg = bi.groupBy("i").agg(F.count(F.lit(1)).cast("long").alias("deg"))
@@ -244,13 +232,7 @@ def sql_item_jaccard(
     """
 
 
-def item_cosine(
-    baskets: DataFrame,
-    *,
-    basket_col: str = "basket",
-    item_col: str = "item",
-    min_common: int = 2,
-) -> DataFrame:
+def item_cosine(baskets: DataFrame, *, min_common: int = 2) -> DataFrame:
     """Item-item cosine similarity over basket co-membership — the
     OTHER classic item-based-CF kernel (Sarwar et al. WWW 2001 §3.1):
     on binary basket vectors,
@@ -274,10 +256,8 @@ def item_cosine(
     if min_common < 1:
         raise ValueError(f"min_common must be >= 1, got {min_common}")
     bi = (
-        baskets.where(
-            F.col(basket_col).isNotNull() & F.col(item_col).isNotNull()
-        )
-        .select(F.col(basket_col).alias("b"), F.col(item_col).alias("i"))
+        baskets.where(F.col("basket").isNotNull() & F.col("item").isNotNull())
+        .select(F.col("basket").alias("b"), F.col("item").alias("i"))
         .distinct()
     )
     deg = bi.groupBy("i").agg(F.count(F.lit(1)).cast("long").alias("deg"))
@@ -307,7 +287,7 @@ def item_cosine(
                 / F.sqrt(
                     F.expr(
                         f"cast(cast(cast(deg_a as {D38}) * deg_b"
-                        f" as string) as double)"
+                        " as string) as double)"
                     )
                 )
             ).alias("cosine"),

@@ -27,16 +27,14 @@ Everything is deterministic md5-derived hashing (functions/hashing.py), so
 the DuckDB oracle replays the IDENTICAL algorithm — the parity check covers
 the pipeline end-to-end, not just row counts.
 
-Input contract: document operators read ``documents(doc_id, text)`` by
-those names (other columns pass through or are ignored; the blocked
-pair operators also read their ``group_cols``), the ``sql_*`` twins
-read the table ``documents``, and the seen-hash index is
-``(content_hash)`` as :func:`seen_hashes` writes it. Pair operators
-emit the edge frame ``(id_a, id_b, …)``, and :func:`connected_components`
-reads exactly that: ``(id_a, id_b)``, the contract it shares with
-``components.connected_components_bigstar``. A frame whose columns are
-named otherwise is renamed once with a ``select(... .alias(...))``;
-Catalyst folds that projection into the scan.
+Input contract: ``documents`` and the dedup edge frame, read by name
+(the schema table in :mod:`kinesis_stream_spark.operators`). Document
+operators read ``doc_id`` and ``text``; the blocked pair operators also
+read their ``group_cols``, the one name left a parameter. The
+seen-hash index is ``(content_hash)`` as :func:`seen_hashes` writes
+it. Pair operators emit ``(id_a, id_b, …)``, and
+:func:`connected_components` reads exactly ``(id_a, id_b)``, the
+contract it shares with ``components.connected_components_bigstar``.
 """
 
 from __future__ import annotations

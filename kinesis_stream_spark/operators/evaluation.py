@@ -70,14 +70,7 @@ def _lut(values: tuple[int, ...]) -> Column:
     return F.array(F.lit(0).cast("long"), *[F.lit(v).cast("long") for v in values])
 
 
-def ranking_quality(
-    truth: DataFrame,
-    approx: DataFrame,
-    *,
-    k: int = 10,
-    query_id_col: str = "query_id",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def ranking_quality(truth: DataFrame, approx: DataFrame, *, k: int = 10) -> DataFrame:
     """Per-query ranking agreement of an approximate top-k against the
     exact one: (query_id, n_truth, n_hits, first_hit_rank, rr, ndcg).
 
@@ -100,10 +93,10 @@ def ranking_quality(
     )
 
     t = truth.where(F.col("rank") <= k).select(
-        F.col(query_id_col).alias("qid"), F.col(id_col).alias("item")
+        F.col("query_id").alias("qid"), F.col("vec_id").alias("item")
     )
     a = approx.where(F.col("rank") <= k).select(
-        F.col(query_id_col).alias("qid"), F.col(id_col).alias("item"), "rank"
+        F.col("query_id").alias("qid"), F.col("vec_id").alias("item"), "rank"
     )
     joined = a.join(
         t.withColumn("rel", F.lit(1)), ["qid", "item"], "left"
@@ -122,7 +115,7 @@ def ranking_quality(
     return (
         totals.join(per, "qid", "left")
         .select(
-            F.col("qid").alias(query_id_col),
+            F.col("qid").alias("query_id"),
             "n_truth",
             F.coalesce("n_hits", F.lit(0).cast("long")).alias("n_hits"),
             F.coalesce("first_hit_rank", F.lit(0).cast("int")).alias(
@@ -141,7 +134,7 @@ def ranking_quality(
                 ).cast("double")
             ).alias("ndcg"),
         )
-        .orderBy(query_id_col)
+        .orderBy("query_id")
     )
 
 
@@ -150,10 +143,6 @@ def exact_score_topk(
     queries: DataFrame,
     *,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k under the PQ family's ranking metric ``2·q·v − ‖v‖²``
     (argmin Euclidean distance), SELF INCLUDED — the ground truth an ADC
@@ -162,10 +151,8 @@ def exact_score_topk(
     measured against the metric the index optimizes. Exact BIGINT
     fixed-point scores; broadcast query side; one shuffle for the
     per-query k-selection."""
-    q = queries.select(
-        F.col(query_id_col).alias("qid"), F.col(query_vec_col).alias("qv")
-    )
-    v = corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
+    q = queries.select(F.col("query_id").alias("qid"), F.col("embedding").alias("qv"))
+    v = corpus.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("v"))
     scored = v.join(F.broadcast(q)).select(
         "qid",
         "vid",
@@ -180,8 +167,8 @@ def exact_score_topk(
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select(
-            F.col("qid").alias(query_id_col),
-            F.col("vid").alias(id_col),
+            F.col("qid").alias("query_id"),
+            F.col("vid").alias("vec_id"),
             "score",
             "rank",
         )
@@ -268,8 +255,6 @@ def embedding_drift(
     k: int = 4,
     dim: int = 64,
     iterations: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Distribution drift between two corpus snapshots, measured in the
     trained cluster space: train k-means on snapshot A, assign BOTH
@@ -301,19 +286,17 @@ def embedding_drift(
         kmeans_fit,
     )
 
-    fit = kmeans_fit(
-        emb_a, k=k, dim=dim, iterations=iterations, id_col=id_col, vec_col=vec_col
-    )
+    fit = kmeans_fit(emb_a, k=k, dim=dim, iterations=iterations)
     # k rows in a local relation: both assignment passes collect them
     # without a job
     cents = fit.select("cid", "centroid")
     a_counts = (
-        assign_to_centroids(emb_a, cents, id_col=id_col, vec_col=vec_col)
+        assign_to_centroids(emb_a, cents)
         .groupBy("cid")
         .agg(F.count(F.lit(1)).alias("n_a"))
     )
     b_stats = (
-        assign_to_centroids(emb_b, cents, id_col=id_col, vec_col=vec_col)
+        assign_to_centroids(emb_b, cents)
         .groupBy("cid")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -360,12 +343,7 @@ def embedding_drift(
 INERTIA_SCALE = 1 << 20
 
 
-def label_inertia(
-    emb: DataFrame,
-    *,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def label_inertia(emb: DataFrame) -> DataFrame:
     """Per-label cluster inertia (within-class sum of squared
     distances to the class centroid) plus the grand '__all__' row —
     the k-means objective read off EXISTING labels: how compact each
@@ -396,10 +374,8 @@ def label_inertia(
     d38 = "decimal(38,0)"
     s2 = float(INERTIA_SCALE) * float(INERTIA_SCALE)
     base = emb.select(
-        F.coalesce(F.col(label_col).cast("string"), F.lit("__null__")).alias(
-            "lbl"
-        ),
-        F.posexplode(F.col(vec_col)).alias("pos", "x"),
+        F.coalesce(F.col("label").cast("string"), F.lit("__null__")).alias("lbl"),
+        F.posexplode(F.col("embedding")).alias("pos", "x"),
     ).select(
         "lbl",
         "pos",
@@ -448,22 +424,17 @@ def label_inertia(
     )
 
 
-def sql_label_inertia(
-    *,
-    table: str = "embeddings",
-    label_col: str = "label",
-    vec_col: str = "embedding",
-) -> str:
+def sql_label_inertia() -> str:
     """DuckDB oracle twin of :func:`label_inertia`."""
     s2 = float(INERTIA_SCALE) * float(INERTIA_SCALE)
     return f"""
     WITH base AS (
-      SELECT COALESCE(CAST(t.{label_col} AS VARCHAR), '__null__') AS lbl,
+      SELECT COALESCE(CAST(t.label AS VARCHAR), '__null__') AS lbl,
              r.pos,
-             CAST(FLOOR(CAST(t.{vec_col}[r.pos] AS DOUBLE)
+             CAST(FLOOR(CAST(t.embedding[r.pos] AS DOUBLE)
                         * {float(INERTIA_SCALE)!r}) AS BIGINT) AS xfx
-      FROM {table} t,
-           UNNEST(RANGE(1, LEN(t.{vec_col}) + 1)) r(pos)),
+      FROM embeddings t,
+           UNNEST(RANGE(1, LEN(t.embedding) + 1)) r(pos)),
     levels AS (
       SELECT lbl, pos, xfx FROM base
       UNION ALL SELECT '__all__', pos, xfx FROM base),
@@ -489,13 +460,7 @@ def sql_label_inertia(
     """
 
 
-def _centroid_sq_dists(
-    emb: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    label_col: str = "label",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def _centroid_sq_dists(emb: DataFrame) -> DataFrame:
     """Shared core of :func:`simplified_silhouette` and
     :func:`centroid_confusion`: the (point × label-centroid) squared
     distance frame (vid, lbl, clabel, d2), centroid-free — per (point,
@@ -507,11 +472,9 @@ def _centroid_sq_dists(
     d19, d38 = "decimal(19,0)", "decimal(38,0)"
     s2 = float(INERTIA_SCALE) * float(INERTIA_SCALE)
     base = emb.select(
-        F.col(id_col).alias("vid"),
-        F.coalesce(F.col(label_col).cast("string"), F.lit("__null__")).alias(
-            "lbl"
-        ),
-        F.posexplode(F.col(vec_col)).alias("pos", "x"),
+        F.col("vec_id").alias("vid"),
+        F.coalesce(F.col("label").cast("string"), F.lit("__null__")).alias("lbl"),
+        F.posexplode(F.col("embedding")).alias("pos", "x"),
     ).select(
         "vid",
         "lbl",
@@ -544,13 +507,7 @@ def _centroid_sq_dists(
     return pd.select("vid", "lbl", "clabel", d2.alias("d2"))
 
 
-def simplified_silhouette(
-    emb: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    label_col: str = "label",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def simplified_silhouette(emb: DataFrame) -> DataFrame:
     """Simplified (centroid-based) silhouette per label plus the grand
     '__all__' row — the separation companion to :func:`label_inertia`:
     inertia says how COMPACT each class is; silhouette says whether
@@ -585,9 +542,7 @@ def simplified_silhouette(
     combinable (point, label) distance reduction → per-point k-row
     pivot → label rollup. Linear in n·dim·k; no point-point pairs, no
     corpus shuffle beyond the two combinable aggregates."""
-    pd = _centroid_sq_dists(
-        emb, id_col=id_col, label_col=label_col, vec_col=vec_col
-    )
+    pd = _centroid_sq_dists(emb)
     dist = F.sqrt(F.col("d2"))
     per = (
         pd.select("vid", "lbl", "clabel", dist.alias("d"))
@@ -634,24 +589,18 @@ def simplified_silhouette(
     )
 
 
-def sql_simplified_silhouette(
-    *,
-    table: str = "embeddings",
-    id_col: str = "vec_id",
-    label_col: str = "label",
-    vec_col: str = "embedding",
-) -> str:
+def sql_simplified_silhouette() -> str:
     """DuckDB oracle twin of :func:`simplified_silhouette`."""
     s2 = float(INERTIA_SCALE) * float(INERTIA_SCALE)
     return f"""
     WITH base AS (
-      SELECT t.{id_col} AS vid,
-             COALESCE(CAST(t.{label_col} AS VARCHAR), '__null__') AS lbl,
+      SELECT t.vec_id AS vid,
+             COALESCE(CAST(t.label AS VARCHAR), '__null__') AS lbl,
              r.pos,
-             CAST(FLOOR(CAST(t.{vec_col}[r.pos] AS DOUBLE)
+             CAST(FLOOR(CAST(t.embedding[r.pos] AS DOUBLE)
                         * {float(INERTIA_SCALE)!r}) AS BIGINT) AS xfx
-      FROM {table} t,
-           UNNEST(RANGE(1, LEN(t.{vec_col}) + 1)) r(pos)),
+      FROM embeddings t,
+           UNNEST(RANGE(1, LEN(t.embedding) + 1)) r(pos)),
     cent AS (
       SELECT lbl AS clabel, pos, CAST(COUNT(*) AS BIGINT) AS n_c,
              CAST(SUM(CAST(xfx AS HUGEINT)) AS HUGEINT) AS sx
@@ -697,13 +646,7 @@ def sql_simplified_silhouette(
     """
 
 
-def centroid_confusion(
-    emb: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    label_col: str = "label",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def centroid_confusion(emb: DataFrame) -> DataFrame:
     """Nearest-centroid confusion matrix: assign every vector to its
     closest label centroid and cross-tabulate assignments against the
     true labels — the "would a centroid classifier recover these
@@ -728,9 +671,7 @@ def centroid_confusion(
     per-point k-row window (partitioned by point id — never global) +
     one combinable pair count; the row totals ride a broadcast join of
     the k-row label-total frame."""
-    pd = _centroid_sq_dists(
-        emb, id_col=id_col, label_col=label_col, vec_col=vec_col
-    )
+    pd = _centroid_sq_dists(emb)
     # asc_nulls_last matches DuckDB's ASC default (NULLS LAST): a NULL
     # distance (a label NULL at every position the point occupies) must
     # lose the argmin on BOTH engines, not win Spark's NULLS-FIRST sort
@@ -765,24 +706,18 @@ def centroid_confusion(
     )
 
 
-def sql_centroid_confusion(
-    *,
-    table: str = "embeddings",
-    id_col: str = "vec_id",
-    label_col: str = "label",
-    vec_col: str = "embedding",
-) -> str:
+def sql_centroid_confusion() -> str:
     """DuckDB oracle twin of :func:`centroid_confusion`."""
     s2 = float(INERTIA_SCALE) * float(INERTIA_SCALE)
     return f"""
     WITH base AS (
-      SELECT t.{id_col} AS vid,
-             COALESCE(CAST(t.{label_col} AS VARCHAR), '__null__') AS lbl,
+      SELECT t.vec_id AS vid,
+             COALESCE(CAST(t.label AS VARCHAR), '__null__') AS lbl,
              r.pos,
-             CAST(FLOOR(CAST(t.{vec_col}[r.pos] AS DOUBLE)
+             CAST(FLOOR(CAST(t.embedding[r.pos] AS DOUBLE)
                         * {float(INERTIA_SCALE)!r}) AS BIGINT) AS xfx
-      FROM {table} t,
-           UNNEST(RANGE(1, LEN(t.{vec_col}) + 1)) r(pos)),
+      FROM embeddings t,
+           UNNEST(RANGE(1, LEN(t.embedding) + 1)) r(pos)),
     cent AS (
       SELECT lbl AS clabel, pos, CAST(COUNT(*) AS BIGINT) AS n_c,
              CAST(SUM(CAST(xfx AS HUGEINT)) AS HUGEINT) AS sx

@@ -36,23 +36,18 @@ from kinesis_stream_spark.functions.hashing import md5_int64, sql_md5_int64
 from kinesis_stream_spark.operators.lineage import pin
 
 
-def ab_conversion_ztest(
-    events: DataFrame,
-    *,
-    unit_col: str = "user_id",
-    metric_col: str = "event_type",
-) -> DataFrame:
+def ab_conversion_ztest(events: DataFrame) -> DataFrame:
     """Per-metric two-proportion z-test under a deterministic 50/50
     hash split of the units.
 
     A unit "converts" on metric m if it has ≥ 1 event with
-    ``metric_col = m``. Output per metric: (metric, n_control,
+    ``event_type = m``. Output per metric: (metric, n_control,
     n_treatment, conv_control, conv_treatment, p_control, p_treatment,
     lift, z_score) — z NULL when the pooled rate is 0 or 1 (se = 0).
     NULL units are excluded (no identity to randomize on)."""
     units = (
-        events.where(F.col(unit_col).isNotNull())
-        .select(F.col(unit_col).alias("unit"))
+        events.where(F.col("user_id").isNotNull())
+        .select(F.col("user_id").alias("unit"))
         .distinct()
         .select(
             "unit",
@@ -71,8 +66,8 @@ def ab_conversion_ztest(
         )
     )
     conv = (
-        events.where(F.col(unit_col).isNotNull() & F.col(metric_col).isNotNull())
-        .select(F.col(metric_col).alias("metric"), F.col(unit_col).alias("unit"))
+        events.where(F.col("user_id").isNotNull() & F.col("event_type").isNotNull())
+        .select(F.col("event_type").alias("metric"), F.col("user_id").alias("unit"))
         .distinct()
         .join(units, "unit")
         .groupBy("metric")
@@ -120,20 +115,15 @@ def ab_conversion_ztest(
     )
 
 
-def sql_ab_conversion_ztest(
-    *,
-    table: str = "events",
-    unit_col: str = "user_id",
-    metric_col: str = "event_type",
-) -> str:
+def sql_ab_conversion_ztest() -> str:
     """DuckDB oracle twin of :func:`ab_conversion_ztest` — identical
     hash split, counts, and pinned-order z arithmetic."""
-    h = sql_md5_int64(f"CAST(unit AS VARCHAR)")
+    h = sql_md5_int64("CAST(unit AS VARCHAR)")
     return f"""
     WITH units AS (
       SELECT unit, {h} % 2 AS variant
-      FROM (SELECT DISTINCT {unit_col} AS unit FROM {table}
-            WHERE {unit_col} IS NOT NULL)),
+      FROM (SELECT DISTINCT user_id AS unit FROM events
+            WHERE user_id IS NOT NULL)),
     totals AS (
       SELECT CAST(SUM(CASE WHEN variant = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_c,
              CAST(SUM(CASE WHEN variant = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_t
@@ -142,9 +132,9 @@ def sql_ab_conversion_ztest(
       SELECT metric,
              CAST(SUM(CASE WHEN variant = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c_c,
              CAST(SUM(CASE WHEN variant = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c_t
-      FROM (SELECT DISTINCT {metric_col} AS metric, {unit_col} AS unit
-            FROM {table}
-            WHERE {unit_col} IS NOT NULL AND {metric_col} IS NOT NULL)
+      FROM (SELECT DISTINCT event_type AS metric, user_id AS unit
+            FROM events
+            WHERE user_id IS NOT NULL AND event_type IS NOT NULL)
       JOIN units USING (unit)
       GROUP BY metric)
     SELECT metric,
@@ -172,13 +162,7 @@ def sql_ab_conversion_ztest(
     """
 
 
-def apdex_score(
-    events: DataFrame,
-    *,
-    threshold: float,
-    key_col: str = "event_type",
-    value_col: str = "value",
-) -> DataFrame:
+def apdex_score(events: DataFrame, *, threshold: float) -> DataFrame:
     """Per-key Apdex score (Apdex Alliance spec): with a target
     threshold T, an observation is *satisfied* at value ≤ T,
     *tolerating* at value ≤ 4T, *frustrated* beyond —
@@ -203,8 +187,8 @@ def apdex_score(
     d38 = "decimal(38,0)"
     t = F.lit(float(threshold))
     per = (
-        events.where(F.col(value_col).isNotNull())
-        .select(F.col(key_col).alias("key"), F.col(value_col).alias("v"))
+        events.where(F.col("value").isNotNull())
+        .select(F.col("event_type").alias("key"), F.col("value").alias("v"))
         .groupBy("key")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n"),
@@ -235,24 +219,18 @@ def apdex_score(
     )
 
 
-def sql_apdex_score(
-    *,
-    threshold: float,
-    table: str = "events",
-    key_col: str = "event_type",
-    value_col: str = "value",
-) -> str:
+def sql_apdex_score(*, threshold: float) -> str:
     """DuckDB oracle twin of :func:`apdex_score`."""
     t = float(threshold)
     return f"""
     WITH per AS (
-      SELECT {key_col} AS key, CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM(CASE WHEN {value_col} <= {t!r} THEN 1 ELSE 0 END)
+      SELECT event_type AS key, CAST(COUNT(*) AS BIGINT) AS n,
+             CAST(SUM(CASE WHEN value <= {t!r} THEN 1 ELSE 0 END)
                   AS BIGINT) AS n_satisfied,
-             CAST(SUM(CASE WHEN {value_col} > {t!r}
-                            AND {value_col} <= {t!r} * 4
+             CAST(SUM(CASE WHEN value > {t!r}
+                            AND value <= {t!r} * 4
                            THEN 1 ELSE 0 END) AS BIGINT) AS n_tolerating
-      FROM {table} WHERE {value_col} IS NOT NULL GROUP BY 1)
+      FROM events WHERE value IS NOT NULL GROUP BY 1)
     SELECT key, n, n_satisfied, n_tolerating,
            n - n_satisfied - n_tolerating AS n_frustrated,
            CAST((CAST(n_satisfied AS HUGEINT) * 2 + n_tolerating) * 1000000
@@ -283,12 +261,7 @@ ANOVA_SCALE = 1 << 20
 FX_V_CAP = float(1 << 40)
 
 
-def _per_unit_fx(
-    events: DataFrame,
-    *,
-    unit_col: str,
-    value_col: str,
-) -> DataFrame:
+def _per_unit_fx(events: DataFrame) -> DataFrame:
     """Shared unit frame for the continuous-metric A/B tests
     (:func:`ab_welch_ttest`, :func:`ab_mann_whitney`): one combinable
     per-unit aggregate — exact DECIMAL(27,6) value total (NULL values
@@ -296,11 +269,11 @@ def _per_unit_fx(
     the deterministic md5 50/50 variant. One definition so the two
     companion tests can never drift onto different splits."""
     return (
-        events.where(F.col(unit_col).isNotNull())
-        .groupBy(F.col(unit_col).alias("unit"))
+        events.where(F.col("user_id").isNotNull())
+        .groupBy(F.col("user_id").alias("unit"))
         .agg(
             F.coalesce(
-                F.sum(F.col(value_col).cast("decimal(27,6)")),
+                F.sum(F.col("value").cast("decimal(27,6)")),
                 F.lit(0).cast("decimal(27,6)"),
             ).alias("_v")
         )
@@ -314,24 +287,19 @@ def _per_unit_fx(
     )
 
 
-def _sql_per_unit_fx(table: str, unit_col: str, value_col: str) -> str:
+def _sql_per_unit_fx() -> str:
     """DuckDB twin of :func:`_per_unit_fx` (the per_unit CTE body)."""
     s = float(WELCH_SCALE)
     return f"""
-      SELECT {unit_col} AS unit,
-             CAST(FLOOR(CAST(COALESCE(SUM(CAST({value_col}
+      SELECT user_id AS unit,
+             CAST(FLOOR(CAST(COALESCE(SUM(CAST(value
                     AS DECIMAL(27,6))), 0) AS DOUBLE) * {s!r}) AS BIGINT)
                AS xfx,
-             {sql_md5_int64(f"CAST({unit_col} AS VARCHAR)")} % 2 AS variant
-      FROM {table} WHERE {unit_col} IS NOT NULL GROUP BY {unit_col}"""
+             {sql_md5_int64("CAST(user_id AS VARCHAR)")} % 2 AS variant
+      FROM events WHERE user_id IS NOT NULL GROUP BY user_id"""
 
 
-def ab_welch_ttest(
-    events: DataFrame,
-    *,
-    unit_col: str = "user_id",
-    value_col: str = "value",
-) -> DataFrame:
+def ab_welch_ttest(events: DataFrame) -> DataFrame:
     """Welch's unequal-variance t-test on a CONTINUOUS per-unit metric
     under the same deterministic 50/50 hash split as
     :func:`ab_conversion_ztest` — the readout for "did treatment move
@@ -366,7 +334,7 @@ def ab_welch_ttest(
     no join, no skew surface."""
     d19, d38 = "decimal(19,0)", "decimal(38,0)"
     s = float(WELCH_SCALE)
-    per_unit = _per_unit_fx(events, unit_col=unit_col, value_col=value_col)
+    per_unit = _per_unit_fx(events)
     mom = per_unit.groupBy().agg(
         *[
             agg
@@ -452,12 +420,7 @@ def ab_welch_ttest(
     )
 
 
-def sql_ab_welch_ttest(
-    *,
-    table: str = "events",
-    unit_col: str = "user_id",
-    value_col: str = "value",
-) -> str:
+def sql_ab_welch_ttest() -> str:
     """DuckDB oracle twin of :func:`ab_welch_ttest`."""
     s = float(WELCH_SCALE)
     num = lambda tag: (  # noqa: E731
@@ -474,7 +437,7 @@ def sql_ab_welch_ttest(
         f" / {s * s!r} END"
     )
     return f"""
-    WITH per_unit AS ({_sql_per_unit_fx(table, unit_col, value_col)}),
+    WITH per_unit AS ({_sql_per_unit_fx()}),
     mom AS (
       SELECT
         COALESCE(CAST(SUM(CASE WHEN variant = 0 THEN 1 ELSE 0 END)
@@ -523,12 +486,7 @@ def sql_ab_welch_ttest(
     """
 
 
-def anova_oneway(
-    events: DataFrame,
-    *,
-    group_col: str = "event_type",
-    value_col: str = "value",
-) -> DataFrame:
+def anova_oneway(events: DataFrame) -> DataFrame:
     """One-way ANOVA F-test of a continuous value across k groups —
     the k-arm completion of the stats-test family (χ²/Cramér's V for
     categorical×categorical, z/Welch-t for two arms): does the group
@@ -570,10 +528,10 @@ def anova_oneway(
     d19, d38 = "decimal(19,0)", "decimal(38,0)"
     s2 = float(ANOVA_SCALE) * float(ANOVA_SCALE)
     base = events.where(
-        F.col(group_col).isNotNull() & F.col(value_col).isNotNull()
+        F.col("event_type").isNotNull() & F.col("value").isNotNull()
     ).select(
-        F.col(group_col).alias("g"),
-        F.floor(F.col(value_col).cast("double") * F.lit(float(ANOVA_SCALE)))
+        F.col("event_type").alias("g"),
+        F.floor(F.col("value").cast("double") * F.lit(float(ANOVA_SCALE)))
         .cast("long")
         .alias("xfx"),
     )
@@ -644,23 +602,18 @@ def anova_oneway(
     )
 
 
-def sql_anova_oneway(
-    *,
-    table: str = "events",
-    group_col: str = "event_type",
-    value_col: str = "value",
-) -> str:
+def sql_anova_oneway() -> str:
     """DuckDB oracle twin of :func:`anova_oneway` (HUGEINT `//` is
     exact one-stage integer division; the SSB clamp mirrors the Spark
     side)."""
     s2 = float(ANOVA_SCALE) * float(ANOVA_SCALE)
     return f"""
     WITH base AS (
-      SELECT {group_col} AS g,
-             CAST(FLOOR(CAST({value_col} AS DOUBLE)
+      SELECT event_type AS g,
+             CAST(FLOOR(CAST(value AS DOUBLE)
                         * {float(ANOVA_SCALE)!r}) AS BIGINT) AS xfx
-      FROM {table}
-      WHERE {group_col} IS NOT NULL AND {value_col} IS NOT NULL),
+      FROM events
+      WHERE event_type IS NOT NULL AND value IS NOT NULL),
     grp AS (
       SELECT g, CAST(COUNT(*) AS BIGINT) AS n_g,
              CAST(SUM(CAST(xfx AS HUGEINT)) AS HUGEINT) AS s_g,
@@ -702,12 +655,7 @@ def sql_anova_oneway(
     """
 
 
-def ab_mann_whitney(
-    events: DataFrame,
-    *,
-    unit_col: str = "user_id",
-    value_col: str = "value",
-) -> DataFrame:
+def ab_mann_whitney(events: DataFrame) -> DataFrame:
     """Mann–Whitney U (Wilcoxon rank-sum) test on per-unit value
     totals under the deterministic md5 50/50 split — the
     distribution-free companion to :func:`ab_welch_ttest`: Welch
@@ -744,7 +692,7 @@ def ab_mann_whitney(
     from kinesis_stream_spark.operators.skew import distributed_cumsums
 
     d19, d38 = "decimal(19,0)", "decimal(38,0)"
-    per_unit = _per_unit_fx(events, unit_col=unit_col, value_col=value_col)
+    per_unit = _per_unit_fx(events)
     vals = per_unit.groupBy("xfx").agg(
         F.sum(F.when(F.col("variant") == 0, 1).otherwise(0))
         .cast("long")
@@ -823,15 +771,10 @@ def ab_mann_whitney(
     )
 
 
-def sql_ab_mann_whitney(
-    *,
-    table: str = "events",
-    unit_col: str = "user_id",
-    value_col: str = "value",
-) -> str:
+def sql_ab_mann_whitney() -> str:
     """DuckDB oracle twin of :func:`ab_mann_whitney`."""
     return f"""
-    WITH per_unit AS ({_sql_per_unit_fx(table, unit_col, value_col)}),
+    WITH per_unit AS ({_sql_per_unit_fx()}),
     vals AS (
       SELECT xfx,
              CAST(SUM(CASE WHEN variant = 0 THEN 1 ELSE 0 END) AS BIGINT)
@@ -888,13 +831,7 @@ def sql_ab_mann_whitney(
     """
 
 
-def ab_delta_ratio(
-    events: DataFrame,
-    *,
-    unit_col: str = "user_id",
-    value_col: str = "value",
-    type_col: str = "event_type",
-) -> DataFrame:
+def ab_delta_ratio(events: DataFrame) -> DataFrame:
     """Delta-method z-test on a RATIO metric (revenue per event) under
     the same deterministic md5 50/50 split as the other A/B tests —
     the missing readout next to the z-test (conversion) and Welch
@@ -927,13 +864,13 @@ def ab_delta_ratio(
     nothing unit-sized leaves its partition after the first shuffle."""
     d19, d38 = "decimal(19,0)", "decimal(38,0)"
     per_unit = (
-        events.where(F.col(unit_col).isNotNull())
-        .groupBy(F.col(unit_col).alias("unit"))
+        events.where(F.col("user_id").isNotNull())
+        .groupBy(F.col("user_id").alias("unit"))
         .agg(
             F.coalesce(
                 F.sum(
                     F.when(
-                        F.col(type_col) == "purchase", F.col(value_col)
+                        F.col("event_type") == "purchase", F.col("value")
                     ).cast("decimal(27,6)")
                 ),
                 F.lit(0).cast("decimal(27,6)"),
@@ -1030,25 +967,19 @@ def ab_delta_ratio(
     )
 
 
-def sql_ab_delta_ratio(
-    *,
-    table: str = "events",
-    unit_col: str = "user_id",
-    value_col: str = "value",
-    type_col: str = "event_type",
-) -> str:
+def sql_ab_delta_ratio() -> str:
     """DuckDB oracle twin of :func:`ab_delta_ratio` — identical split,
     fx quantization, HUGEINT moments, VARCHAR-routed pinned finals."""
     s = float(WELCH_SCALE)
     return f"""
     WITH per_unit AS (
-      SELECT CAST(FLOOR(CAST(COALESCE(SUM(CASE WHEN {type_col}
-                     = 'purchase' THEN CAST({value_col}
+      SELECT CAST(FLOOR(CAST(COALESCE(SUM(CASE WHEN event_type
+                     = 'purchase' THEN CAST(value
                      AS DECIMAL(27,6)) END), 0) AS DOUBLE) * {s!r})
                AS BIGINT) AS x,
              CAST(COUNT(*) AS BIGINT) AS y,
-             {sql_md5_int64(f"CAST({unit_col} AS VARCHAR)")} % 2 AS variant
-      FROM {table} WHERE {unit_col} IS NOT NULL GROUP BY {unit_col}),
+             {sql_md5_int64("CAST(user_id AS VARCHAR)")} % 2 AS variant
+      FROM events WHERE user_id IS NOT NULL GROUP BY user_id),
     arms AS (
       SELECT variant, CAST(COUNT(*) AS BIGINT) AS n,
              CAST(SUM(CAST(x AS HUGEINT)) AS HUGEINT) AS sx,
@@ -1109,11 +1040,7 @@ def sql_ab_delta_ratio(
     """
 
 
-def ab_srm_check(
-    events: DataFrame,
-    *,
-    unit_col: str = "user_id",
-) -> DataFrame:
+def ab_srm_check(events: DataFrame) -> DataFrame:
     """Sample-ratio-mismatch check — the experiment-health gate that
     must pass BEFORE any A/B readout is trusted (Fabijan et al.,
     "Diagnosing Sample Ratio Mismatch", KDD 2019): under the
@@ -1145,8 +1072,8 @@ def ab_srm_check(
     aggregate on the unit key), then a 2-value fold on one row —
     nothing else."""
     units = (
-        events.where(F.col(unit_col).isNotNull())
-        .select(F.col(unit_col).alias("unit"))
+        events.where(F.col("user_id").isNotNull())
+        .select(F.col("user_id").alias("unit"))
         .distinct()
         .select((md5_int64(F.col("unit").cast("string")) % 2).alias("variant"))
     )
@@ -1179,18 +1106,14 @@ def ab_srm_check(
     )
 
 
-def sql_ab_srm_check(
-    *,
-    table: str = "events",
-    unit_col: str = "user_id",
-) -> str:
+def sql_ab_srm_check() -> str:
     """DuckDB oracle twin of :func:`ab_srm_check` — identical split,
     integer numerator, and pinned divide."""
-    h = sql_md5_int64(f"CAST(unit AS VARCHAR)")
+    h = sql_md5_int64("CAST(unit AS VARCHAR)")
     return f"""
     WITH units AS (
-      SELECT DISTINCT {unit_col} AS unit FROM {table}
-      WHERE {unit_col} IS NOT NULL),
+      SELECT DISTINCT user_id AS unit FROM events
+      WHERE user_id IS NOT NULL),
     arms AS (
       SELECT
         COALESCE(CAST(SUM(CASE WHEN {h} % 2 = 0 THEN 1 END) AS BIGINT), 0)
@@ -1218,14 +1141,7 @@ def sql_ab_srm_check(
     """
 
 
-def ab_cuped(
-    events: DataFrame,
-    *,
-    unit_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    split_us: int = 0,
-) -> DataFrame:
+def ab_cuped(events: DataFrame, *, split_us: int = 0) -> DataFrame:
     """CUPED variance-reduced A/B readout (Deng, Xu, Kohavi & Walker,
     WSDM 2013): adjust each unit's experiment-period metric Y by its
     pre-period covariate X,
@@ -1270,8 +1186,8 @@ def ab_cuped(
     d19, d38 = "decimal(19,0)", "decimal(38,0)"
     s = float(WELCH_SCALE)
     per = (
-        events.where(F.col(unit_col).isNotNull() & F.col(ts_col).isNotNull())
-        .groupBy(F.col(unit_col).alias("unit"))
+        events.where(F.col("user_id").isNotNull() & F.col("ts").isNotNull())
+        .groupBy(F.col("user_id").alias("unit"))
         .agg(
             *[
                 F.floor(
@@ -1279,9 +1195,7 @@ def ab_cuped(
                         F.greatest(
                             F.coalesce(
                                 F.sum(
-                                    F.when(cond, F.col(value_col)).cast(
-                                        "decimal(27,6)"
-                                    )
+                                    F.when(cond, F.col("value")).cast("decimal(27,6)")
                                 ),
                                 F.lit(0).cast("decimal(27,6)"),
                             ).cast("double"),
@@ -1297,13 +1211,13 @@ def ab_cuped(
                     (
                         "xfx",
                         F.expr(
-                            f"unix_micros(cast({ts_col} as timestamp))"
+                            "unix_micros(cast(ts as timestamp))"
                         ) < F.lit(int(split_us)),
                     ),
                     (
                         "yfx",
                         F.expr(
-                            f"unix_micros(cast({ts_col} as timestamp))"
+                            "unix_micros(cast(ts as timestamp))"
                         ) >= F.lit(int(split_us)),
                     ),
                 )
@@ -1444,14 +1358,7 @@ def ab_cuped(
     )
 
 
-def sql_ab_cuped(
-    *,
-    table: str = "events",
-    unit_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    split_us: int = 0,
-) -> str:
+def sql_ab_cuped(*, table: str = "events", split_us: int = 0) -> str:
     """DuckDB oracle twin of :func:`ab_cuped` — identical split,
     conditional per-unit totals, HUGEINT moments, and pinned double
     chains (VARCHAR-routed casts, explicit multiplies, same
@@ -1489,36 +1396,36 @@ def sql_ab_cuped(
             f"CASE WHEN n_{tag} > 0 THEN {d(f'sy_{tag}')}"
             f" / CAST(n_{tag} AS DOUBLE)"
             f" - theta * ({d(f'sx_{tag}')} / CAST(n_{tag} AS DOUBLE)"
-            f" - xbar) END"
+            " - xbar) END"
         )
         scv = (
             f"{d(f'{cn} * syy_{tag} - sy_{tag} * sy_{tag}')}"
             f" - 2.0 * theta * {d(f'{cn} * sxy_{tag} - sx_{tag} * sy_{tag}')}"
-            f" + theta * theta"
+            " + theta * theta"
             f" * {d(f'{cn} * sxx_{tag} - sx_{tag} * sx_{tag}')}"
         )
         vcv = (
             f"CASE WHEN n_{tag} > 1 THEN ({scv})"
             f" / (CAST(n_{tag} AS DOUBLE) * (CAST(n_{tag} AS DOUBLE) - 1.0))"
-            f" END"
+            " END"
         )
         arm_cols.append(f"{mcv} AS _mcv_{tag}, {vcv} AS _vcv_{tag}")
     return f"""
     WITH per AS (
       SELECT
         CAST(FLOOR(LEAST(GREATEST(
-                 CAST(COALESCE(SUM(CASE WHEN EPOCH_US({ts_col})
-                 < {int(split_us)} THEN CAST({value_col} AS DECIMAL(27,6))
+                 CAST(COALESCE(SUM(CASE WHEN EPOCH_US(ts)
+                 < {int(split_us)} THEN CAST(value AS DECIMAL(27,6))
                  END), 0) AS DOUBLE), {-FX_V_CAP!r}), {FX_V_CAP!r})
                  * {s!r}) AS BIGINT) AS xfx,
         CAST(FLOOR(LEAST(GREATEST(
-                 CAST(COALESCE(SUM(CASE WHEN EPOCH_US({ts_col})
-                 >= {int(split_us)} THEN CAST({value_col} AS DECIMAL(27,6))
+                 CAST(COALESCE(SUM(CASE WHEN EPOCH_US(ts)
+                 >= {int(split_us)} THEN CAST(value AS DECIMAL(27,6))
                  END), 0) AS DOUBLE), {-FX_V_CAP!r}), {FX_V_CAP!r})
                  * {s!r}) AS BIGINT) AS yfx,
         {h} % 2 AS variant
-      FROM (SELECT {unit_col} AS unit, {ts_col}, {value_col} FROM {table}
-            WHERE {unit_col} IS NOT NULL AND {ts_col} IS NOT NULL)
+      FROM (SELECT user_id AS unit, ts, value FROM {table}
+            WHERE user_id IS NOT NULL AND ts IS NOT NULL)
       GROUP BY unit),
     mom AS (
       SELECT
@@ -1587,8 +1494,6 @@ POISSON_T = tuple(
 def bootstrap_ci(
     df: DataFrame,
     *,
-    id_col: str,
-    value_col: str,
     b_replicates: int = 64,
     alpha_ppm: int = 50_000,
 ) -> DataFrame:
@@ -1643,13 +1548,13 @@ def bootstrap_ci(
     from kinesis_stream_spark.sources.batch import spread
 
     rows = spread(
-        df.where(F.col(id_col).isNotNull() & F.col(value_col).isNotNull()),
-        id_col,
+        df.where(F.col("event_id").isNotNull() & F.col("value").isNotNull()),
+        "event_id",
     ).select(
-        F.col(id_col).cast("string").alias("_id"),
+        F.col("event_id").cast("string").alias("_id"),
         F.floor(
             F.least(
-                F.greatest(F.col(value_col).cast("double"), F.lit(-FX_V_CAP)),
+                F.greatest(F.col("value").cast("double"), F.lit(-FX_V_CAP)),
                 F.lit(FX_V_CAP),
             )
             * F.lit(s)
@@ -1740,8 +1645,6 @@ def bootstrap_ci(
 def sql_bootstrap_ci(
     *,
     table: str = "events",
-    id_col: str = "event_id",
-    value_col: str = "value",
     b_replicates: int = 64,
     alpha_ppm: int = 50_000,
 ) -> str:
@@ -1761,11 +1664,11 @@ def sql_bootstrap_ci(
     )
     return f"""
     WITH rows_t AS (
-      SELECT CAST({id_col} AS VARCHAR) AS _id,
-             CAST(FLOOR(LEAST(GREATEST(CAST({value_col} AS DOUBLE),
+      SELECT CAST(event_id AS VARCHAR) AS _id,
+             CAST(FLOOR(LEAST(GREATEST(CAST(value AS DOUBLE),
                   {-FX_V_CAP!r}), {FX_V_CAP!r}) * {s!r}) AS BIGINT) AS xfx
       FROM {table}
-      WHERE {id_col} IS NOT NULL AND {value_col} IS NOT NULL),
+      WHERE event_id IS NOT NULL AND value IS NOT NULL),
     repl AS (
       SELECT _id, xfx, b, ({w}) AS w
       FROM rows_t, (SELECT UNNEST(RANGE(0, {b})) AS b)),

@@ -172,7 +172,12 @@ def fuzzy_pair_histogram(
     blocking, length band, salting and conjunct order all mirror
     :func:`fuzzy_pairs`; the string-level pair ordering uses s_u < s_v
     (strings within a group are equal, across groups distinct, so each
-    unordered string pair is enumerated exactly once)."""
+    unordered string pair is enumerated exactly once).
+
+    Precondition: ``id_col`` is unique in ``df``, a key (the one caller
+    passes ``part.p_partkey``). The counts above are row counts, so a
+    repeated id would add the pairs between its own rows, which the
+    id-level join's ``a.id < b.id`` never forms."""
     if max_dist < 0:
         raise ValueError(f"max_dist must be >= 0, got {max_dist}")
     if salt_buckets < 1:

@@ -51,14 +51,12 @@ from kinesis_stream_spark.operators.lineage import (
 PR_SCALE = 1 << 40
 
 
-def _directed_edges(
-    edges: DataFrame, src_col: str, dst_col: str
-) -> DataFrame:
+def _directed_edges(edges: DataFrame) -> DataFrame:
     """Non-null distinct (src, dst) edges, pinned — the directed view
     shared by the PageRank family, HITS and the degree statistics.
     Callers release it when done."""
     return pin(
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        edges.select("src", "dst")
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .distinct()
     )
@@ -74,14 +72,12 @@ def _nodes(e: DataFrame) -> DataFrame:
     )
 
 
-def _canonical_edges(
-    edges: DataFrame, src_col: str, dst_col: str
-) -> DataFrame:
+def _canonical_edges(edges: DataFrame) -> DataFrame:
     """The undirected simple graph as distinct (a, b) pairs with a < b:
     NULL endpoints and self-loops drop, each edge appears once. Lazy —
     :func:`triangle_stats` and :func:`modularity` pin it as it is,
     :func:`_undirected_edges` pins its doubled form."""
-    uu, vv = F.col(src_col), F.col(dst_col)
+    uu, vv = F.col("src"), F.col("dst")
     return (
         edges.where(uu.isNotNull() & vv.isNotNull())
         .where(uu != vv)
@@ -90,9 +86,7 @@ def _canonical_edges(
     )
 
 
-def _undirected_edges(
-    edges: DataFrame, src_col: str, dst_col: str
-) -> DataFrame:
+def _undirected_edges(edges: DataFrame) -> DataFrame:
     """Cleaned, doubled, deduped adjacency, pinned: every undirected
     edge appears as both (a, b) and (b, a). Shared by the fixed-round
     operators (:func:`kcore`, :func:`label_propagation`, the BFS) —
@@ -101,7 +95,7 @@ def _undirected_edges(
     instead of 2|E| doubled rows — half the dedup shuffle — and
     doubling afterwards cannot re-introduce duplicates (self-loops are
     gone, so (u,v) != (v,u))."""
-    e = _canonical_edges(edges, src_col, dst_col)
+    e = _canonical_edges(edges)
     return pin(e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))))
 
 
@@ -177,13 +171,7 @@ def _power_iterate(
     )
 
 
-def pagerank(
-    edges: DataFrame,
-    *,
-    iterations: int = 3,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def pagerank(edges: DataFrame, *, iterations: int = 3) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list (module
     docstring for the exact integer semantics). Returns one row per
     node: (node, rank_fx BIGINT, rank double = rank_fx / 2^40).
@@ -199,7 +187,7 @@ def pagerank(
     corpus-sized edge checkpoint. The cost is that construction runs
     the computation (standard for the iterative operators here;
     connected_components does the same)."""
-    e = _directed_edges(edges, src_col, dst_col)
+    e = _directed_edges(edges)
     nodes = _nodes(e)
     nn = nodes.agg(F.count(F.lit(1)).cast("long").alias("n"))
     outdeg = _out_degrees(e)
@@ -268,14 +256,7 @@ def sql_pagerank(
     )
 
 
-def kcore(
-    edges: DataFrame,
-    *,
-    k: int,
-    rounds: int,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def kcore(edges: DataFrame, *, k: int, rounds: int) -> DataFrame:
     """k-core peeling over an undirected view of the edge list: for a
     fixed number of ``rounds``, drop every node whose current degree is
     below ``k`` (with all its incident edges), then recompute degrees —
@@ -300,7 +281,7 @@ def kcore(
     one aggregate + two joins, never a growing lineage."""
     if k < 1 or rounds < 1:
         raise ValueError(f"k ({k}) and rounds ({rounds}) must be >= 1")
-    und = _undirected_edges(edges, src_col, dst_col)
+    und = _undirected_edges(edges)
     for _ in range(rounds):
         deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("degree"))
         keep = deg.where(F.col("degree") >= k).select("a")
@@ -353,13 +334,7 @@ def sql_kcore(
     )
 
 
-def label_propagation(
-    edges: DataFrame,
-    *,
-    rounds: int,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def label_propagation(edges: DataFrame, *, rounds: int) -> DataFrame:
     """Fixed-round semi-synchronous label propagation (community
     detection): every node starts labeled with its own id; each round,
     every node simultaneously adopts the most frequent label among its
@@ -384,7 +359,7 @@ def label_propagation(
     superseded block released (the pagerank discipline)."""
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
-    und = _undirected_edges(edges, src_col, dst_col)
+    und = _undirected_edges(edges)
     lab = pin(
         und.select(F.col("a").alias("node"))
         .distinct()
@@ -458,12 +433,7 @@ def sql_label_propagation(
     )
 
 
-def triangle_stats(
-    edges: DataFrame,
-    *,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def triangle_stats(edges: DataFrame) -> DataFrame:
     """Per-node triangle participation over an undirected simple graph:
     (node, degree, n_triangles, clustering_coeff), where the local
     clustering coefficient is 2·T/(d·(d−1)) (0.0 when d < 2 — a
@@ -480,7 +450,7 @@ def triangle_stats(
     swapping the comparator is a one-line deployment knob. The edge
     list is checkpointed once and reused by all three join legs and
     the degree count."""
-    e = pin(_canonical_edges(edges, src_col, dst_col))
+    e = pin(_canonical_edges(edges))
     deg = (
         e.select(F.col("a").alias("node"))
         .union(e.select(F.col("b").alias("node")))
@@ -558,20 +528,14 @@ def sql_triangle_stats(edges_cte: str) -> str:
     """
 
 
-def _sources_at_zero(
-    und: DataFrame, sources: DataFrame, node_col: str, name: str
-) -> DataFrame:
+def _sources_at_zero(und: DataFrame, sources: DataFrame, name: str) -> DataFrame:
     """The graph nodes of ``sources`` at distance 0 in column ``name``,
     pinned — the first frontier of the relaxation loops. Sources that
     aren't graph nodes drop in the semi join."""
     return pin(
         und.select(F.col("a").alias("node"))
         .distinct()
-        .join(
-            sources.select(F.col(node_col).alias("node")).distinct(),
-            "node",
-            "left_semi",
-        )
+        .join(sources.select("node").distinct(), "node", "left_semi")
         .select("node", F.lit(0).cast("long").alias(name))
     )
 
@@ -581,9 +545,6 @@ def bfs_hops(
     sources: DataFrame,
     *,
     rounds: int,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    node_col: str = "node",
     frontier_sizes: list | None = None,
 ) -> DataFrame:
     """Multi-source BFS hop distance over the undirected view of the
@@ -621,8 +582,8 @@ def bfs_hops(
     exactly the ≤k-hop minimum, matching the unrolled oracle."""
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
-    und = _undirected_edges(edges, src_col, dst_col)
-    frontier = _sources_at_zero(und, sources, node_col, "dist")
+    und = _undirected_edges(edges)
+    frontier = _sources_at_zero(und, sources, "dist")
     dist = frontier
     # r12 loop shape: ONE job per hop instead of three. The frontier
     # row count rides the checkpoint materialization as an Observation
@@ -700,9 +661,6 @@ def personalized_pagerank(
     seeds: DataFrame,
     *,
     iterations: int = 3,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    node_col: str = "node",
 ) -> DataFrame:
     """Personalized PageRank: the :func:`pagerank` power iteration with
     the teleport (and dangling) mass concentrated on the ``seeds`` set
@@ -727,14 +685,10 @@ def personalized_pagerank(
     checkpoints with release); the seed flag rides as one extra
     node-sized left join per round (:func:`_pagerank_round` with a
     seed set)."""
-    e = _directed_edges(edges, src_col, dst_col)
+    e = _directed_edges(edges)
     nodes = _nodes(e)
     seedset = pin(
-        nodes.join(
-            seeds.select(F.col(node_col).alias("v")).distinct(),
-            "v",
-            "left_semi",
-        )
+        nodes.join(seeds.select(F.col("node").alias("v")).distinct(), "v", "left_semi")
         .select("v", F.lit(1).alias("is_seed"))
     )
     ns = seedset.agg(F.count(F.lit(1)).cast("long").alias("n"))
@@ -827,10 +781,6 @@ def cheapest_path(
     sources: DataFrame,
     *,
     rounds: int,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    weight_col: str = "w",
-    node_col: str = "node",
     frontier_sizes: list | None = None,
 ) -> DataFrame:
     """Multi-source cheapest path (Bellman-Ford relaxation) over the
@@ -877,12 +827,12 @@ def cheapest_path(
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
     e = (
-        edges.where(F.col(src_col).isNotNull() & F.col(dst_col).isNotNull())
-        .where(F.col(src_col) != F.col(dst_col))
+        edges.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
+        .where(F.col("src") != F.col("dst"))
         .select(
-            F.col(src_col).alias("a"),
-            F.col(dst_col).alias("b"),
-            F.col(weight_col).cast("long").alias("w"),
+            F.col("src").alias("a"),
+            F.col("dst").alias("b"),
+            F.col("w").cast("long").alias("w"),
         )
     )
     und = pin(
@@ -890,7 +840,7 @@ def cheapest_path(
         .groupBy("a", "b")
         .agg(F.min("w").alias("w"))
     )
-    frontier = cost = _sources_at_zero(und, sources, node_col, "cost")
+    frontier = cost = _sources_at_zero(und, sources, "cost")
     if frontier_sizes is not None:
         frontier_sizes.append(frontier.count())
     for _ in range(rounds):
@@ -979,8 +929,6 @@ def sql_cheapest_path(
 def link_prediction_ra(
     edges: DataFrame,
     *,
-    src_col: str = "src",
-    dst_col: str = "dst",
     max_intermediate_degree: int = 20,
     min_common: int = 2,
     top_k: int = 30,
@@ -1024,7 +972,7 @@ def link_prediction_ra(
     # of the src-keyed self-join — without them the upstream edge build
     # runs 3× and the degree cap twice (intra-query, recomputed per call)
     e = pin(
-        edges.select(F.col(src_col).alias("w"), F.col(dst_col).alias("v"))
+        edges.select(F.col("src").alias("w"), F.col("dst").alias("v"))
         .where(F.col("w").isNotNull() & F.col("v").isNotNull())
         .distinct()
     )
@@ -1084,12 +1032,7 @@ def sql_link_prediction_ra(
     """
 
 
-def degree_profile(
-    edges: DataFrame,
-    *,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def degree_profile(edges: DataFrame) -> DataFrame:
     """Log2-bucketed degree distribution of a directed edge list, per
     node role — the first thing to read before ANY graph job here:
     PageRank cost, the k-core peel count, the link-prediction cap, and
@@ -1114,7 +1057,7 @@ def degree_profile(
     joined broadcast — no window, no iteration."""
     # e feeds four consumers (per role: the degree bucketing and the
     # role total) — checkpoint so the edge build + distinct runs once
-    e = _directed_edges(edges, src_col, dst_col)
+    e = _directed_edges(edges)
     d38 = "decimal(38,0)"
     out = []
     for role, node in (("out", "src"), ("in", "dst")):
@@ -1143,7 +1086,7 @@ def degree_profile(
                 "deg_max",
                 F.expr(
                     f"cast(cast(n_nodes as {d38}) * 1000000"
-                    f" div role_nodes as long)"
+                    " div role_nodes as long)"
                 ).alias("share_ppm"),
             )
         )
@@ -1179,12 +1122,7 @@ def sql_degree_profile(edges_cte: str) -> str:
     )
 
 
-def degree_assortativity(
-    edges: DataFrame,
-    *,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def degree_assortativity(edges: DataFrame) -> DataFrame:
     """Degree assortativity of a directed edge list (Newman 2002): the
     Pearson correlation, over EDGES, between the source's out-degree
     and the destination's in-degree — positive means hubs wire to
@@ -1212,13 +1150,9 @@ def degree_assortativity(
     d19, d38 = "decimal(19,0)", "decimal(38,0)"
     # e feeds both degree aggregates and the per-edge join — checkpoint
     # so the upstream edge build + distinct runs once, not three times
-    e = _directed_edges(edges, src_col, dst_col)
-    outd = e.groupBy("src").agg(
-        F.count(F.lit(1)).cast("long").alias("x")
-    )
-    ind = e.groupBy("dst").agg(
-        F.count(F.lit(1)).cast("long").alias("y")
-    )
+    e = _directed_edges(edges)
+    outd = e.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("x"))
+    ind = e.groupBy("dst").agg(F.count(F.lit(1)).cast("long").alias("y"))
     per_edge = e.join(outd, "src").join(ind, "dst")
     m = per_edge.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -1326,12 +1260,7 @@ def sql_degree_assortativity(edges_cte: str) -> str:
     """
 
 
-def reciprocity(
-    edges: DataFrame,
-    *,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def reciprocity(edges: DataFrame) -> DataFrame:
     """Directed-graph reciprocity: the fraction of edges whose reverse
     edge also exists (Garlaschelli & Loffredo 2004) — on an
     interaction graph this is the mutual-relationship rate; on a
@@ -1358,7 +1287,7 @@ def reciprocity(
     # 2.7→3.0 s and 3.2→3.9 s) — see degree_assortativity for the
     # same-shape site where the cut DID win.
     e = (
-        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .where(
             F.col("a").isNotNull()
             & F.col("b").isNotNull()
@@ -1379,7 +1308,7 @@ def reciprocity(
             F.col("n_edges") > 0,
             F.expr(
                 f"cast(cast(n_reciprocated as {d38}) * 1000000"
-                f" div n_edges as long)"
+                " div n_edges as long)"
             ),
         ).alias("reciprocity_ppm"),
     )
@@ -1441,13 +1370,7 @@ def _hits_half_round(
     return raw, raw.select("v", norm.alias("s"))
 
 
-def hits_scores(
-    edges: DataFrame,
-    *,
-    iterations: int = 3,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def hits_scores(edges: DataFrame, *, iterations: int = 3) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg, "Authoritative sources in
     a hyperlinked environment", JACM 1999) over a directed edge list —
     the OTHER eigenvector centrality beside :func:`pagerank`: PageRank
@@ -1486,7 +1409,7 @@ def hits_scores(
     0-round HITS state — the uniform init is a hub-only frame)."""
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
-    e = _directed_edges(edges, src_col, dst_col)
+    e = _directed_edges(edges)
     nodes = _nodes(e)
     h_ck = pin(nodes.select("v", F.lit(HITS_SCALE).cast("long").alias("s")))
     h = h_ck
@@ -1580,13 +1503,7 @@ def sql_hits_scores(edges_cte: str, *, iterations: int = 3) -> str:
     )
 
 
-def modularity(
-    edges: DataFrame,
-    *,
-    rounds: int,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def modularity(edges: DataFrame, *, rounds: int) -> DataFrame:
     """Newman modularity of the label-propagation partition — the
     "are these communities real" score the detection step itself
     can't provide (Newman & Girvan 2004): Q = Σ_c [L_c/m − (D_c/2m)²]
@@ -1627,10 +1544,8 @@ def modularity(
     adds one edge-sized join pass. Measured at sf0.1 in the full-suite
     min-of-2 bench: 9.9 s, vs 6.7 s for the bare LPA query on the same
     graph (both under local[32] full-suite contention)."""
-    ce = pin(_canonical_edges(edges, src_col, dst_col))
-    lbl = label_propagation(
-        edges, rounds=rounds, src_col=src_col, dst_col=dst_col
-    )
+    ce = pin(_canonical_edges(edges))
+    lbl = label_propagation(edges, rounds=rounds)
     m = ce.agg(F.count(F.lit(1)).cast("long").alias("m"))
     deg = (
         ce.select(F.col("a").alias("node"))

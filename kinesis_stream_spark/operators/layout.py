@@ -277,8 +277,6 @@ def sql_zonemap_skipping(
 def compaction_plan(
     files: DataFrame,
     *,
-    part_col: str = "part_key",
-    file_col: str = "file_id",
     bytes_col: str = "bytes",
     target_bytes: int = 1 << 27,
 ) -> DataFrame:
@@ -315,17 +313,13 @@ def compaction_plan(
     metadata-sized; nothing touches the table bytes."""
     binned = (
         files.where(F.col(bytes_col).isNotNull())
-        .select(
-            F.col(part_col).alias("part_key"),
-            F.col(file_col).alias("file_id"),
-            F.col(bytes_col).cast("long").alias("b"),
-        )
+        .select("part_key", "file_id", F.col(bytes_col).cast("long").alias("b"))
         .select(
             "part_key",
             "b",
             F.expr(
-                f"coalesce(sum(b) over (partition by part_key"
-                f" order by file_id rows between unbounded preceding"
+                "coalesce(sum(b) over (partition by part_key"
+                " order by file_id rows between unbounded preceding"
                 f" and 1 preceding), 0) div {target_bytes}"
             )
             .cast("long")
@@ -336,7 +330,7 @@ def compaction_plan(
         F.count(F.lit(1)).cast("long").alias("n_files"),
         F.sum("b").cast("long").alias("bin_bytes"),
         F.expr(
-            f"cast(cast(sum(b) as decimal(38,0)) * 1000000"
+            "cast(cast(sum(b) as decimal(38,0)) * 1000000"
             f" div {target_bytes} as long)"
         ).alias("fill_ppm"),
     )

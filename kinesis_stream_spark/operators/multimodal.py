@@ -123,9 +123,7 @@ def byte_stats(media: DataFrame) -> DataFrame:
     )
 
 
-def exact_dedup_assets(
-    media: DataFrame, *, id_col: str = "media_id", payload_col: str = "payload"
-) -> DataFrame:
+def exact_dedup_assets(media: DataFrame) -> DataFrame:
     """Content-addressed exact dedup of binary assets: group by a hash
     of the payload bytes, one row per distinct content with copy count
     and the canonical (minimum) id — the FIRST dedup pass of any
@@ -139,11 +137,11 @@ def exact_dedup_assets(
     (uniform by construction — no skew possible), map-side partial agg;
     payload bytes never shuffle, only their 32-char digests do.
     """
-    key = F.md5(F.hex(F.col(payload_col)))
+    key = F.md5(F.hex(F.col("payload")))
     return media.groupBy(key.alias("content_hash")).agg(
         F.count(F.lit(1)).alias("n_copies"),
-        F.min(id_col).alias("canonical_id"),
-        F.max(id_col).alias("max_id"),
+        F.min("media_id").alias("canonical_id"),
+        F.max("media_id").alias("max_id"),
     )
 
 
@@ -170,12 +168,7 @@ def hex_shingle_text(hex_col: Column) -> Column:
     return F.array_join(sh, " ")
 
 
-def payload_near_duplicates(
-    media: DataFrame,
-    *,
-    id_col: str = "media_id",
-    payload_col: str = "payload",
-) -> DataFrame:
+def payload_near_duplicates(media: DataFrame) -> DataFrame:
     """Binary-asset NEAR-dup without decoding: 60-bit SimHash over
     sliding byte shingles of the raw payload, 15-bit block-equality
     candidates, exact Hamming ≤ 3 verify — catches re-encoded-with-tweaks /
@@ -192,8 +185,8 @@ def payload_near_duplicates(
     from kinesis_stream_spark.operators.dedup import near_duplicates_simhash
 
     docs_like = media.select(
-        F.col(id_col).alias("doc_id"),
-        hex_shingle_text(F.hex(F.col(payload_col))).alias("text"),
+        F.col("media_id").alias("doc_id"),
+        hex_shingle_text(F.hex(F.col("payload"))).alias("text"),
     # payloads too short to shingle (or NULL) are excluded BEFORE
     # fingerprinting: their empty text would tokenize to a single ''
     # token, giving every tiny asset the SAME SimHash and an O(n²)

@@ -105,10 +105,9 @@ def rotate_embeddings(
     *,
     dim: int = 64,
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Apply the fixed orthonormal rotation to every vector:
-    (id, rotated ``vec_col``). Map-only, no shuffle.
+    (id, rotated ``embedding``). Map-only, no shuffle.
 
     Implementation is an Arrow-batched Pandas UDF replaying the exact
     fixed-point semantics in numpy: per term one IEEE multiply ``x·r``,
@@ -154,7 +153,7 @@ def rotate_embeddings(
             out.append((fx.sum(axis=1, dtype=np.int64) / scale).tolist())
         return pd.Series(out)
 
-    return emb.select(F.col(id_col), _rot(F.col(vec_col)).alias(vec_col))
+    return emb.select(F.col(id_col), _rot(F.col("embedding")).alias("embedding"))
 
 
 def rrpq_topk_adc(
@@ -166,9 +165,6 @@ def rrpq_topk_adc(
     ksub: int = 4,
     dim: int = 64,
     iterations: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """Rotated-PQ search end-to-end: rotate corpus and queries with the
     SAME matrix, then train/encode/ADC-rank with the flat-PQ operators
@@ -188,25 +184,15 @@ def rrpq_topk_adc(
     # re-runs the dim² fixed-point rotation (measured 23.5 s → 9 s at
     # sf0.1). At 100 TB this line is "write the rotated corpus once",
     # the same deployment-artifact argument as the encoded index.
-    rot_c = pin(rotate_embeddings(
-        corpus, dim=dim, id_col=id_col, vec_col=vec_col
-    ))
-    rot_q = rotate_embeddings(
-        queries, dim=dim, id_col=query_id_col, vec_col=vec_col
-    )
-    book = pq_train(
-        rot_c, m=m, ksub=ksub, dim=dim, iterations=iterations,
-        id_col=id_col, vec_col=vec_col,
-    )
-    codes = pq_encode(rot_c, book, m=m, dim=dim, id_col=id_col, vec_col=vec_col)
-    return pq_topk_adc(
-        codes, book, rot_q, k=k, m=m, dim=dim,
-        query_id_col=query_id_col, query_vec_col=vec_col,
-    )
+    rot_c = pin(rotate_embeddings(corpus, dim=dim))
+    rot_q = rotate_embeddings(queries, dim=dim, id_col="query_id")
+    book = pq_train(rot_c, m=m, ksub=ksub, dim=dim, iterations=iterations)
+    codes = pq_encode(rot_c, book, m=m, dim=dim)
+    return pq_topk_adc(codes, book, rot_q, k=k, m=m, dim=dim)
 
 
 @lru_cache(maxsize=8)
-def _variance_sum_cols(dim: int, vec_col: str) -> tuple[tuple, tuple]:
+def _variance_sum_cols(dim: int) -> tuple[tuple, tuple]:
     """Memoized (second-moment, first-moment) fixed-point sum aggregate
     Columns — unresolved name-keyed expression trees, reusable across
     plans; rebuilding the 2·dim expressions per call cost ~1 s of py4j
@@ -214,8 +200,8 @@ def _variance_sum_cols(dim: int, vec_col: str) -> tuple[tuple, tuple]:
     sq = tuple(
         F.sum(
             F.floor(
-                F.element_at(vec_col, i + 1).cast("double")
-                * F.element_at(vec_col, i + 1).cast("double")
+                F.element_at("embedding", i + 1).cast("double")
+                * F.element_at("embedding", i + 1).cast("double")
                 * F.lit(float(SCALE))
             ).cast("decimal(38,0)")
         ).alias(f"q{i}")
@@ -224,7 +210,7 @@ def _variance_sum_cols(dim: int, vec_col: str) -> tuple[tuple, tuple]:
     sm = tuple(
         F.sum(
             F.floor(
-                F.element_at(vec_col, i + 1).cast("double") * F.lit(float(SCALE))
+                F.element_at("embedding", i + 1).cast("double") * F.lit(float(SCALE))
             ).cast("decimal(38,0)")
         ).alias(f"s{i}")
         for i in range(dim)
@@ -232,14 +218,7 @@ def _variance_sum_cols(dim: int, vec_col: str) -> tuple[tuple, tuple]:
     return sq, sm
 
 
-def subspace_variance(
-    emb: DataFrame,
-    *,
-    m: int = 4,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def subspace_variance(emb: DataFrame, *, m: int = 4, dim: int = 64) -> DataFrame:
     """Per-subspace variance share — the diagnostic that justifies (or
     retires) the rotation: (sub, var_sum, var_share). Flat PQ wants
     these M shares equal; a share ratio of 10:1 means one subquantizer
@@ -254,7 +233,7 @@ def subspace_variance(
     HUGEINT sum exactly."""
     subdim = dim // m
     assert subdim * m == dim
-    sq, sm = _variance_sum_cols(dim, vec_col)
+    sq, sm = _variance_sum_cols(dim)
     # empty corpus: the global agg emits one n=0 row whose divides
     # would NaN — the empty-input contract is zero rows out
     stats = emb.agg(F.count(F.lit(1)).alias("n"), *sq, *sm).where(F.col("n") > 0)

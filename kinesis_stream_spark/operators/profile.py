@@ -52,13 +52,7 @@ def profile_columns(df: DataFrame, cols: list[str]) -> DataFrame:
     )
 
 
-def snapshot_diff(
-    old: DataFrame,
-    new: DataFrame,
-    *,
-    key_col: str = "doc_id",
-    fingerprint_col: str = "fp",
-) -> DataFrame:
+def snapshot_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     """Snapshot diff for migration/backfill verification: classify every
     primary key across two table versions as added / removed / changed /
     same, returning per-status row counts plus an order-independent
@@ -82,13 +76,13 @@ def snapshot_diff(
     # value and must not masquerade as a missing side; changed/same then
     # compare fingerprints null-safely (NULL vs NULL is 'same').
     o = old.select(
-        F.col(key_col).alias("k"),
-        F.col(fingerprint_col).alias("ofp"),
+        F.col("doc_id").alias("k"),
+        F.col("fp").alias("ofp"),
         F.lit(True).alias("in_old"),
     )
     n = new.select(
-        F.col(key_col).alias("k"),
-        F.col(fingerprint_col).alias("nfp"),
+        F.col("doc_id").alias("k"),
+        F.col("fp").alias("nfp"),
         F.lit(True).alias("in_new"),
     )
     status = (
@@ -309,9 +303,7 @@ def cdc_apply(
     snapshot: DataFrame,
     changes: DataFrame,
     *,
-    key_col: str,
     val_cols: list[str],
-    op_col: str = "op",
 ) -> DataFrame:
     """Apply a CDC change set to a snapshot — batch MERGE semantics
     (the lakehouse ``MERGE INTO`` re-expressed as one full-outer join,
@@ -322,7 +314,7 @@ def cdc_apply(
                         not (idempotent — replaying a change batch
                         converges)
 
-    Returns the merged snapshot with ``key_col`` + ``val_cols``.
+    Returns the merged snapshot with key ``k`` + ``val_cols``.
     Multiple changes per key in one batch are a caller error (the
     operator takes the change set as-is; sequence-collapse first —
     the streaming SCD1 sink in streaming/delivery.py shows that
@@ -333,14 +325,14 @@ def cdc_apply(
     bucketed-by-key storage it degrades to a zipped merge with no
     exchange; nothing driver-side; output size = |snapshot| +
     |inserts| − |deletes|."""
-    s = snapshot.where(F.col(key_col).isNotNull()).select(
-        F.col(key_col).alias("k"),
+    s = snapshot.where(F.col("k").isNotNull()).select(
+        "k",
         *[F.col(c).alias(f"_s_{c}") for c in val_cols],
         F.lit(True).alias("_in_s"),
     )
-    c = changes.where(F.col(key_col).isNotNull()).select(
-        F.col(key_col).alias("k"),
-        F.col(op_col).alias("_op"),
+    c = changes.where(F.col("k").isNotNull()).select(
+        "k",
+        F.col("op").alias("_op"),
         *[F.col(col).alias(f"_c_{col}") for col in val_cols],
     )
     j = s.join(c, "k", "full")
@@ -351,18 +343,12 @@ def cdc_apply(
         .alias(col)
         for col in val_cols
     ]
-    return j.where(keep).select(F.col("k").alias(key_col), *out_cols)
+    return j.where(keep).select("k", *out_cols)
 
 
-def sql_cdc_apply(
-    snapshot_cte: str,
-    changes_cte: str,
-    *,
-    key_col: str,
-    val_cols: list[str],
-) -> str:
+def sql_cdc_apply(snapshot_cte: str, changes_cte: str, *, val_cols: list[str]) -> str:
     """DuckDB oracle twin of :func:`cdc_apply`. The CTEs must yield
-    ``key_col`` + ``val_cols`` (+ ``op`` for changes)."""
+    ``k`` + ``val_cols`` (+ ``op`` for changes)."""
     outs = ", ".join(
         f"CASE WHEN c.op IS NOT NULL THEN c.{col} ELSE s.{col} END AS {col}"
         for col in val_cols
@@ -370,10 +356,10 @@ def sql_cdc_apply(
     return f"""
     WITH snap AS ({snapshot_cte}),
     chg AS ({changes_cte}),
-    s AS (SELECT * FROM snap WHERE {key_col} IS NOT NULL),
-    c AS (SELECT * FROM chg WHERE {key_col} IS NOT NULL)
-    SELECT COALESCE(s.{key_col}, c.{key_col}) AS {key_col}, {outs}
-    FROM s FULL JOIN c ON s.{key_col} = c.{key_col}
+    s AS (SELECT * FROM snap WHERE k IS NOT NULL),
+    c AS (SELECT * FROM chg WHERE k IS NOT NULL)
+    SELECT COALESCE(s.k, c.k) AS k, {outs}
+    FROM s FULL JOIN c ON s.k = c.k
     WHERE c.op IS NULL OR c.op <> 'D'
     """
 
@@ -995,12 +981,7 @@ def sql_cramers_v(
     """
 
 
-def ks_two_sample(
-    a: DataFrame,
-    b: DataFrame,
-    *,
-    val_col: str = "v",
-) -> DataFrame:
+def ks_two_sample(a: DataFrame, b: DataFrame) -> DataFrame:
     """Two-sample Kolmogorov–Smirnov drift statistic between two
     numeric samples — the distribution-level drift alarm beside the
     categorical chi-square: D = max_v |F_a(v) − F_b(v)|, the largest
@@ -1031,15 +1012,11 @@ def ks_two_sample(
     from kinesis_stream_spark.operators.skew import distributed_cumsums
 
     u = (
-        a.where(F.col(val_col).isNotNull())
-        .select(
-            F.col(val_col).alias("v"),
-            F.lit(1).alias("ia"),
-            F.lit(0).alias("ib"),
-        )
+        a.where(F.col("v").isNotNull())
+        .select("v", F.lit(1).alias("ia"), F.lit(0).alias("ib"))
         .unionAll(
-            b.where(F.col(val_col).isNotNull()).select(
-                F.col(val_col).alias("v"),
+            b.where(F.col("v").isNotNull()).select(
+                "v",
                 F.lit(0).alias("ia"),
                 F.lit(1).alias("ib"),
             )
@@ -1329,9 +1306,6 @@ _FX_GRID_CAP = int(FX_V_CAP) * HELLINGER_SCALE
 def hellinger_drift(
     df: DataFrame,
     *,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
     lo: float = 0.0,
     hi: float = 500.0,
     n_bins: int = 20,
@@ -1378,12 +1352,10 @@ def hellinger_drift(
         raise ValueError(f"n_bins must be >= 1, got {n_bins}")
     if not hi > lo:
         raise ValueError(f"need hi > lo, got [{lo}, {hi}]")
-    ev = df.where(
-        F.col(ts_col).isNotNull() & F.col(value_col).isNotNull()
-    ).select(
-        F.col(key_col).alias("key"),
-        F.expr(f"unix_micros(cast({ts_col} as timestamp))").alias("us"),
-        F.col(value_col).alias("v"),
+    ev = df.where(F.col("ts").isNotNull() & F.col("value").isNotNull()).select(
+        F.col("event_type").alias("key"),
+        F.expr("unix_micros(cast(ts as timestamp))").alias("us"),
+        F.col("value").alias("v"),
     )
     # min + (max-min) div 2 (ADVICE r10): the dividend max-min is
     # always >= 0, so the midpoint is identical under ANY integer
@@ -1448,9 +1420,6 @@ def hellinger_drift(
 def sql_hellinger_drift(
     *,
     table: str = "events",
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
     lo: float = 0.0,
     hi: float = 500.0,
     n_bins: int = 20,
@@ -1460,9 +1429,9 @@ def sql_hellinger_drift(
     scale = float(HELLINGER_SCALE)
     return f"""
     WITH ev AS (
-      SELECT {key_col} AS key, EPOCH_US({ts_col}) AS us, {value_col} AS v
+      SELECT event_type AS key, EPOCH_US(ts) AS us, value AS v
       FROM {table}
-      WHERE {ts_col} IS NOT NULL AND {value_col} IS NOT NULL),
+      WHERE ts IS NOT NULL AND value IS NOT NULL),
     span AS (SELECT MIN(us) + (MAX(us) - MIN(us)) // 2 AS mid_us FROM ev),
     cells AS (
       SELECT key,

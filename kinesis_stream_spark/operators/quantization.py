@@ -98,8 +98,6 @@ def pq_train(
     ksub: int = 4,
     dim: int = 64,
     iterations: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Train the PQ codebook: (sub, cid, n_members, centroid) with one
     deterministic Lloyd run per subspace, all M in one driver-iterated
@@ -112,9 +110,7 @@ def pq_train(
     similarity.artifact_frame` (the training artifact a deployment
     would write to a table): downstream consumers need no lineage cut
     and collect it without a job."""
-    rows = lloyd_rows(
-        emb, m=m, k=ksub, dim=dim, iterations=iterations, id_col=id_col, vec_col=vec_col
-    )
+    rows = lloyd_rows(emb, m=m, k=ksub, dim=dim, iterations=iterations)
     return artifact_frame(
         emb.sparkSession, "sub int, cid int, n_members bigint, centroid array<double>", rows
     )
@@ -196,8 +192,6 @@ def pq_topk_adc(
     k: int = 10,
     m: int = 4,
     dim: int = 64,
-    query_id_col: str = "query_id",
-    query_vec_col: str = "embedding",
 ) -> DataFrame:
     """Compressed-domain top-k via ADC: (query_id, vec_id, approx_score,
     rank). ``codes`` is :func:`pq_encode` output; the full-precision
@@ -228,10 +222,10 @@ def pq_topk_adc(
     if sorted(books) != list(range(m)):
         # the old ALL-M-contributions guard (_n == m): a codebook
         # missing a whole subspace can never score any candidate
-        q0 = queries.where(F.lit(False)).select(F.col(query_id_col))
+        q0 = queries.where(F.lit(False)).select(F.col("query_id"))
         c0 = codes.where(F.lit(False)).select(F.col("vid").alias("vec_id"))
         return q0.crossJoin(c0).select(
-            query_id_col,
+            "query_id",
             "vec_id",
             F.lit(0.0).alias("approx_score"),
             F.lit(0).alias("rank"),
@@ -255,7 +249,7 @@ def pq_topk_adc(
         ]
     )
     q = queries.select(
-        F.col(query_id_col).alias("qid"), F.col(query_vec_col).alias("qv")
+        F.col("query_id").alias("qid"), F.col("embedding").alias("qv")
     ).select("qid", lut.alias("lut"))
     code_rows = codes.where(F.size("codes") == m).select("vid", "codes")
     # codes[j] not present in subspace j's table (index/codebook version
@@ -288,7 +282,7 @@ def pq_topk_adc(
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select(
-            F.col("qid").alias(query_id_col),
+            F.col("qid").alias("query_id"),
             F.col("vid").alias("vec_id"),
             "approx_score",
             "rank",
@@ -303,8 +297,6 @@ def pq_reconstruction_mse(
     *,
     m: int = 4,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Codebook quality diagnostic: per-subspace and overall mean squared
     reconstruction error — the number that decides whether ksub/m are
@@ -321,7 +313,7 @@ def pq_reconstruction_mse(
     good codebook — to 0.0."""
     assert dim % m == 0
     subdim = dim // m
-    sub_rows = _exploded_subvectors(corpus, m, subdim, id_col, vec_col)
+    sub_rows = _exploded_subvectors(corpus, m, subdim)
     assigned = sub_rows.join(
         codes.select("vid", F.posexplode("codes").alias("sub", "cid")),
         ["vid", "sub"],
@@ -357,8 +349,6 @@ def pq_reconstruction_mse_direct(
     *,
     m: int = 4,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """:func:`pq_reconstruction_mse` for the codes-are-this-codebook's-
     encode case, fused to a single map-only pass (r12): because
@@ -381,7 +371,7 @@ def pq_reconstruction_mse_direct(
     present = [j for j in range(m) if books.get(j)]
     sub_errs = []
     for j in present:
-        subv = _subvector(F.col(vec_col), j, subdim)
+        subv = _subvector(F.col("embedding"), j, subdim)
         best = F.array_max(
             F.transform(
                 _cents_array_expr(books[j]),
@@ -446,8 +436,6 @@ def ivfpq_train(
     ksub: int = 4,
     dim: int = 64,
     iterations: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ):
     """Train the IVF-PQ index (the standard FAISS IVFPQ architecture):
     a coarse k-means quantizer routes vectors to inverted lists, and a
@@ -464,24 +452,18 @@ def ivfpq_train(
     against the literal coarse centroids instead of a windowed
     assignment + centroid re-join."""
     spark = emb.sparkSession
-    coarse_stats = lloyd_rows(
-        emb, m=1, k=k_coarse, dim=dim, iterations=iterations,
-        id_col=id_col, vec_col=vec_col,
-    )
+    coarse_stats = lloyd_rows(emb, m=1, k=k_coarse, dim=dim, iterations=iterations)
     coarse_rows = [(c, cent) for _s, c, _n, cent in coarse_stats]
     coarse = artifact_frame(spark, "cid int, centroid array<double>", coarse_rows)
     book_schema = "sub int, cid int, centroid array<double>"
     if not coarse_rows:
         return coarse, artifact_frame(spark, book_schema, [])
-    win = best_centroid_struct(_cents_array_expr(coarse_rows), F.col(vec_col))
+    win = best_centroid_struct(_cents_array_expr(coarse_rows), F.col("embedding"))
     residuals = emb.select(
-        F.col(id_col).alias(id_col),
-        _residual(F.col(vec_col), win["centroid"]).alias(vec_col),
+        "vec_id",
+        _residual(F.col("embedding"), win["centroid"]).alias("embedding"),
     )
-    book_rows = lloyd_rows(
-        residuals, m=m, k=ksub, dim=dim, iterations=iterations,
-        id_col=id_col, vec_col=vec_col,
-    )
+    book_rows = lloyd_rows(residuals, m=m, k=ksub, dim=dim, iterations=iterations)
     book = artifact_frame(
         spark, book_schema, [(s, c, cent) for s, c, _n, cent in book_rows]
     )
@@ -495,8 +477,6 @@ def ivfpq_encode(
     *,
     m: int = 4,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Index the corpus: (vid, list_id, codes). Map-ONLY since r12:
     the literal coarse centroids and residual codebooks turn coarse
@@ -504,7 +484,7 @@ def ivfpq_encode(
     over the corpus scan — zero joins, zero shuffles; the
     full-precision vector is read once and never stored."""
     coarse_rows = collect_cent_rows(coarse)
-    v = corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
+    v = corpus.select(F.col("vec_id").alias("vid"), F.col("embedding").alias("v"))
     if not coarse_rows:
         # empty quantizer: the old windowed assignment produced no rows
         return v.where(F.lit(False)).select(
@@ -534,8 +514,6 @@ def ivfpq_topk(
     nprobe: int = 2,
     m: int = 4,
     dim: int = 64,
-    query_id_col: str = "query_id",
-    query_vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-PQ search: route each query to its ``nprobe`` best lists,
     then ADC-score ONLY vectors in probed lists, in the compressed
@@ -552,14 +530,9 @@ def ivfpq_topk(
     """
     assert dim % m == 0
     subdim = dim // m
-    q = queries.select(
-        F.col(query_id_col).alias("qid"), F.col(query_vec_col).alias("qv")
-    )
+    q = queries.select(F.col("query_id").alias("qid"), F.col("embedding").alias("qv"))
     qlist = _route_queries(q, collect_cent_rows(coarse), nprobe=nprobe)
-    return _adc_topk(
-        index, qlist, _collect_books(book), k=k, m=m, subdim=subdim,
-        query_id_col=query_id_col,
-    )
+    return _adc_topk(index, qlist, _collect_books(book), k=k, m=m, subdim=subdim)
 
 
 def _route_queries(
@@ -639,7 +612,6 @@ def _adc_topk(
     k: int,
     m: int,
     subdim: int,
-    query_id_col: str,
 ) -> DataFrame:
     """ADC-score the (vid, list_id, codes) index rows against routed
     queries and keep each query's top k (the scoring half shared by
@@ -656,11 +628,7 @@ def _adc_topk(
     to ≤ k rows per partition). A code id absent from its subspace's
     table (index/codebook version mismatch) folds to NULL and drops
     the candidate — the old _n == m guard's outcome."""
-    return _topk_from_scored(
-        _adc_scored(index, qlist, books, m=m, subdim=subdim),
-        k=k,
-        query_id_col=query_id_col,
-    )
+    return _topk_from_scored(_adc_scored(index, qlist, books, m=m, subdim=subdim), k=k)
 
 
 def _adc_scored(
@@ -731,7 +699,7 @@ def _adc_scored(
     )
 
 
-def _topk_from_scored(scored: DataFrame, *, k: int, query_id_col: str) -> DataFrame:
+def _topk_from_scored(scored: DataFrame, *, k: int) -> DataFrame:
     """Per-query top-k over an ADC-scored candidate frame — the window
     half of :func:`_adc_topk` (same ordering and tie-break:
     approx_score DESC, vid ASC; WindowGroupLimit bounds the exchange
@@ -741,7 +709,7 @@ def _topk_from_scored(scored: DataFrame, *, k: int, query_id_col: str) -> DataFr
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select(
-            F.col("qid").alias(query_id_col),
+            F.col("qid").alias("query_id"),
             F.col("vid").alias("vec_id"),
             "approx_score",
             "rank",
@@ -759,8 +727,6 @@ def ivfpq_topk_sweep(
     nprobes: tuple[int, ...] = (1, 2, 4),
     m: int = 4,
     dim: int = 64,
-    query_id_col: str = "query_id",
-    query_vec_col: str = "embedding",
 ) -> dict[int, DataFrame]:
     """Top-k per query for EVERY probe budget in ``nprobes`` from ONE
     routing + scoring pass — bit-identical to calling
@@ -784,9 +750,7 @@ def ivfpq_topk_sweep(
     (the same discipline as the sweep's index/truth checkpoints)."""
     assert dim % m == 0
     assert nprobes, "ivfpq_topk_sweep needs at least one nprobe setting"
-    q = queries.select(
-        F.col(query_id_col).alias("qid"), F.col(query_vec_col).alias("qv")
-    )
+    q = queries.select(F.col("query_id").alias("qid"), F.col("embedding").alias("qv"))
     qlist = _route_queries(
         q, collect_cent_rows(coarse), nprobe=max(nprobes), with_rank=True
     )
@@ -802,7 +766,6 @@ def ivfpq_topk_sweep(
         p: _topk_from_scored(
             scored.where(F.col("probe_rank") <= p).drop("probe_rank"),
             k=k,
-            query_id_col=query_id_col,
         )
         for p in nprobes
     }
@@ -831,8 +794,6 @@ def ivfpq_topk_pruned(
     nprobe: int = 2,
     m: int = 4,
     dim: int = 64,
-    query_id_col: str = "query_id",
-    query_vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-PQ search against a :func:`write_partitioned_index` layout:
     identical routing, scoring, and results to :func:`ivfpq_topk`, but
@@ -849,24 +810,15 @@ def ivfpq_topk_pruned(
     unchanged because pruning only removes rows the broadcast-filter
     path discarded after the scan."""
     assert dim % m == 0
-    q = queries.select(
-        F.col(query_id_col).alias("qid"), F.col(query_vec_col).alias("qv")
-    )
+    q = queries.select(F.col("query_id").alias("qid"), F.col("embedding").alias("qv"))
     # Q·nprobe rows, map-only from the query scan since r12 — cheap
     # enough that the probed-list collect and the scoring join each
     # just re-run it (the old windowed routing needed a localCheckpoint
     # to avoid replaying its exchange twice).
     qlist = _route_queries(q, collect_cent_rows(coarse), nprobe=nprobe)
-    probed = sorted(
-        r.list_id for r in qlist.select("list_id").distinct().collect()
-    )
-    index = spark.read.parquet(index_path).where(
-        F.col("list_id").isin(probed)
-    )
-    return _adc_topk(
-        index, qlist, _collect_books(book), k=k, m=m, subdim=dim // m,
-        query_id_col=query_id_col,
-    )
+    probed = sorted(r.list_id for r in qlist.select("list_id").distinct().collect())
+    index = spark.read.parquet(index_path).where(F.col("list_id").isin(probed))
+    return _adc_topk(index, qlist, _collect_books(book), k=k, m=m, subdim=dim // m)
 
 
 def exact_rerank(
@@ -875,10 +827,6 @@ def exact_rerank(
     queries: DataFrame,
     *,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "embedding",
 ) -> DataFrame:
     """Stage two of two-stage retrieval: exact re-scoring of an ADC
     shortlist against the FULL-PRECISION corpus — the standard
@@ -904,14 +852,12 @@ def exact_rerank(
     # displacing a genuine candidate from the top-k (round-8 ADVICE fix;
     # cost is negligible at R·Q broadcast-side rows)
     sl = shortlist.select(
-        F.col(query_id_col).alias("qid"), F.col(id_col).alias("vid")
+        F.col("query_id").alias("qid"), F.col("vec_id").alias("vid")
     ).distinct()
-    q = queries.select(
-        F.col(query_id_col).alias("qid"), F.col(query_vec_col).alias("qv")
-    )
-    cand = corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v")).join(
-        F.broadcast(sl), "vid"
-    )
+    q = queries.select(F.col("query_id").alias("qid"), F.col("embedding").alias("qv"))
+    cand = corpus.select(
+        F.col("vec_id").alias("vid"), F.col("embedding").alias("v")
+    ).join(F.broadcast(sl), "vid")
     scored = cand.join(F.broadcast(q), "qid").select(
         "qid",
         "vid",
@@ -926,7 +872,7 @@ def exact_rerank(
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select(
-            F.col("qid").alias(query_id_col),
+            F.col("qid").alias("query_id"),
             F.col("vid").alias("vec_id"),
             "exact_score",
             "rank",

@@ -74,28 +74,19 @@ from kinesis_stream_spark.operators.skew import distributed_cumsum
 BM25_SCALE = 1 << 20
 
 
-def bm25_topk(
-    docs: DataFrame,
-    queries: DataFrame,
-    *,
-    k: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    query_id_col: str = "query_id",
-    query_text_col: str = "qtext",
-) -> DataFrame:
+def bm25_topk(docs: DataFrame, queries: DataFrame, *, k: int = 10) -> DataFrame:
     """Top-``k`` documents per query under rational-idf BM25 (module
     docstring). Returns (query_id, doc_id, score, rank); ties break to
     the lower doc_id; queries matching nothing return no rows."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     posted = docs.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id").alias("doc_id"),
         F.size(toks).alias("dlen"),
         F.explode(toks).alias("term"),
     )
     qterms = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.explode(F.array_distinct(tokens(F.col(query_text_col)))).alias("term"),
+        F.col("query_id").alias("query_id"),
+        F.explode(F.array_distinct(tokens(F.col("qtext")))).alias("term"),
     )
     tot = docs.agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -143,16 +134,7 @@ def bm25_topk(
     )
 
 
-def rsj_topk(
-    docs: DataFrame,
-    queries: DataFrame,
-    *,
-    k: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    query_id_col: str = "query_id",
-    query_text_col: str = "qtext",
-) -> DataFrame:
+def rsj_topk(docs: DataFrame, queries: DataFrame, *, k: int = 10) -> DataFrame:
     """Top-``k`` documents per query under the binary-independence
     (Robertson–Spärck Jones) model: each DISTINCT matched query term
     contributes the corpus idf ``(2·(N − df) + 1)/(2·df + 1)`` and
@@ -168,15 +150,15 @@ def rsj_topk(
     postings prefiltered to the broadcast query vocabulary before any
     shuffle; df here counts docs containing the term (identical to the
     BM25 df since tf ≥ 1 ⇔ present)."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     posted = docs.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id").alias("doc_id"),
         # binary model: presence only — one row per (doc, distinct term)
         F.explode(F.array_distinct(toks)).alias("term"),
     )
     qterms = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.explode(F.array_distinct(tokens(F.col(query_text_col)))).alias("term"),
+        F.col("query_id").alias("query_id"),
+        F.explode(F.array_distinct(tokens(F.col("qtext")))).alias("term"),
     )
     tot = docs.agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
     matched = posted.join(F.broadcast(qterms.select("term").distinct()), "term")
@@ -211,11 +193,7 @@ def rsj_topk(
 COVERAGE_PCTS = (50, 90, 99)
 
 
-def vocab_coverage(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-) -> DataFrame:
+def vocab_coverage(docs: DataFrame) -> DataFrame:
     """Tokenizer vocabulary sizing: for each ``COVERAGE_PCTS`` threshold, the
     smallest top-k vocabulary (terms ranked by frequency desc, term asc)
     whose occurrences cover ≥ that share of all token occurrences.
@@ -229,7 +207,7 @@ def vocab_coverage(
     (:func:`~kinesis_stream_spark.operators.skew.distributed_cumsum` —
     no single-partition window over the vocab), then a ~|vocab|·|pcts|
     conditional aggregate down to one row per threshold."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col("text"))
     counts = (
         docs.select(F.explode(toks).alias("term"))
         .groupBy("term")
@@ -327,13 +305,7 @@ def rrf_fuse(
     )
 
 
-def phrase_search(
-    docs: DataFrame,
-    phrases: list[str],
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def phrase_search(docs: DataFrame, phrases: list[str]) -> DataFrame:
     """Exact phrase search over positional postings: for each query
     phrase (a space-joined word sequence), count the documents and
     occurrences where the words appear CONSECUTIVELY in token order —
@@ -358,8 +330,8 @@ def phrase_search(
     words = sorted({w for p in phrases for w in p.split()})
     post = pin(
         docs.select(
-            F.col(id_col).alias("doc"),
-            F.posexplode(tokens(F.col(text_col))).alias("pos", "tok"),
+            F.col("doc_id").alias("doc"),
+            F.posexplode(tokens(F.col("text"))).alias("pos", "tok"),
         )
         .where(F.col("tok").isin(words)),
         eager=False,
@@ -392,31 +364,25 @@ def phrase_search(
     return out
 
 
-def sql_phrase_search(
-    *,
-    table: str,
-    phrases: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> str:
+def sql_phrase_search(*, phrases: list[str]) -> str:
     """Oracle for :func:`phrase_search` via the INDEPENDENT per-row
     array-scan strategy: slide a window over each document's token
     array and compare the slice to the phrase."""
     from kinesis_stream_spark.functions.hashing import sql_tokens
 
-    toks = sql_tokens(text_col)
+    toks = sql_tokens("text")
     branches = []
     for phrase in phrases:
         ws = phrase.split()
         lit = "', '".join(w.replace("'", "''") for w in ws)
         branches.append(f"""
         SELECT '{phrase.replace("'", "''")}' AS phrase,
-               CAST(COUNT(DISTINCT {id_col}) AS BIGINT) AS n_docs,
+               CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
                CAST(COUNT(*) AS BIGINT) AS n_occurrences,
-               CAST(MIN({id_col}) AS BIGINT) AS sample_doc_id
+               CAST(MIN(doc_id) AS BIGINT) AS sample_doc_id
         FROM (
-          SELECT {id_col}, i
-          FROM (SELECT {id_col}, {toks} AS arr FROM {table}),
+          SELECT doc_id, i
+          FROM (SELECT doc_id, {toks} AS arr FROM documents),
                UNNEST(RANGE(1, LEN(arr) - {len(ws) - 1} + 1)) AS t(i)
           WHERE arr[i:i+{len(ws) - 1}] = ['{lit}']
         )
@@ -430,10 +396,6 @@ def prf_expansion(
     *,
     m: int = 5,
     t: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    query_id_col: str = "query_id",
-    query_text_col: str = "qtext",
 ) -> DataFrame:
     """Pseudo-relevance-feedback query expansion (Rocchio's positive
     step, tf·idf term selection — Rocchio 1971; Buckley et al. TREC):
@@ -464,25 +426,17 @@ def prf_expansion(
         raise ValueError(f"m must be >= 1, got {m}")
     if t < 1:
         raise ValueError(f"t must be >= 1, got {t}")
-    short = bm25_topk(
-        docs,
-        queries,
-        k=m,
-        id_col=id_col,
-        text_col=text_col,
-        query_id_col=query_id_col,
-        query_text_col=query_text_col,
-    ).select("query_id", "doc_id")
+    short = bm25_topk(docs, queries, k=m).select("query_id", "doc_id")
     tf = (
         docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(tokens(F.col(text_col))).alias("term"),
+            F.col("doc_id").alias("doc_id"),
+            F.explode(tokens(F.col("text"))).alias("term"),
         )
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
     )
     dfc = tf.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
-    n = docs.where(F.col(text_col).isNotNull()).agg(
+    n = docs.where(F.col("text").isNotNull()).agg(
         F.count(F.lit(1)).cast("long").alias("n_docs")
     )
     idf = dfc.crossJoin(F.broadcast(n)).select(
@@ -496,10 +450,8 @@ def prf_expansion(
         .alias("idf_fx"),
     )
     qterms = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.explode(
-            F.array_distinct(tokens(F.col(query_text_col)))
-        ).alias("term"),
+        F.col("query_id").alias("query_id"),
+        F.explode(F.array_distinct(tokens(F.col("qtext")))).alias("term"),
     )
     pooled = (
         tf.join(F.broadcast(short), "doc_id")

@@ -14,17 +14,10 @@ from kinesis_stream_spark.functions.hashing import sql_tokens
 from kinesis_stream_spark.operators.retrieval import BM25_SCALE, COVERAGE_PCTS
 
 
-def sql_bm25_topk(
-    query_values: tuple[tuple[int, str], ...],
-    *,
-    k: int = 10,
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> str:
+def sql_bm25_topk(query_values: tuple[tuple[int, str], ...], *, k: int = 10) -> str:
     """Oracle for :func:`~kinesis_stream_spark.operators.retrieval.bm25_topk`
     over literal (query_id, qtext) rows."""
-    toks = sql_tokens(text_col)
+    toks = sql_tokens("text")
     # single-quote doubling: query text is data, not SQL — an apostrophe
     # must not break (or rewrite) the oracle
     values = ", ".join(
@@ -46,8 +39,8 @@ def sql_bm25_topk(
     )
     return f"""
     WITH posted AS (
-      SELECT {id_col} AS doc_id, LEN(toks) AS dlen, UNNEST(toks) AS term
-      FROM (SELECT {id_col}, {toks} AS toks FROM {table})
+      SELECT doc_id AS doc_id, LEN(toks) AS dlen, UNNEST(toks) AS term
+      FROM (SELECT doc_id, {toks} AS toks FROM documents)
     ),
     qraw AS (SELECT * FROM (VALUES {values}) AS q(query_id, qtext)),
     qterms AS (
@@ -58,7 +51,7 @@ def sql_bm25_topk(
     tot AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
              CAST(SUM(LEN({toks})) AS BIGINT) AS n_tokens
-      FROM {table}
+      FROM documents
     ),
     tf AS (
       SELECT term, doc_id, dlen, CAST(COUNT(*) AS BIGINT) AS tf
@@ -95,19 +88,12 @@ def sql_bm25_topk(
     """
 
 
-def sql_rsj_topk(
-    query_values: tuple[tuple[int, str], ...],
-    *,
-    k: int = 10,
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> str:
+def sql_rsj_topk(query_values: tuple[tuple[int, str], ...], *, k: int = 10) -> str:
     """Oracle for :func:`~kinesis_stream_spark.operators.retrieval.rsj_topk`
     over literal (query_id, qtext) rows: idf-only binary-independence
     scoring, same rational idf / floor-fx / HUGEINT-sum discipline as
     the BM25 twin."""
-    toks = sql_tokens(text_col)
+    toks = sql_tokens("text")
     values = ", ".join(
         "({}, '{}')".format(qid, qtext.replace("'", "''"))
         for qid, qtext in query_values
@@ -118,8 +104,8 @@ def sql_rsj_topk(
     )
     return f"""
     WITH posted AS (
-      SELECT {id_col} AS doc_id, UNNEST(LIST_DISTINCT(toks)) AS term
-      FROM (SELECT {id_col}, {toks} AS toks FROM {table})
+      SELECT doc_id AS doc_id, UNNEST(LIST_DISTINCT(toks)) AS term
+      FROM (SELECT doc_id, {toks} AS toks FROM documents)
     ),
     qraw AS (SELECT * FROM (VALUES {values}) AS q(query_id, qtext)),
     qterms AS (
@@ -127,7 +113,7 @@ def sql_rsj_topk(
              UNNEST(LIST_DISTINCT({sql_tokens('qtext')})) AS term
       FROM qraw
     ),
-    tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM {table}),
+    tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents),
     matched AS (
       SELECT term, doc_id FROM posted
       WHERE term IN (SELECT DISTINCT term FROM qterms)
@@ -157,22 +143,18 @@ def sql_rsj_topk(
     """
 
 
-def sql_vocab_coverage(
-    *,
-    table: str = "documents",
-    text_col: str = "text",
-) -> str:
+def sql_vocab_coverage() -> str:
     """Oracle for
     :func:`~kinesis_stream_spark.operators.retrieval.vocab_coverage`.
     The oracle's running sum is a plain global window (DuckDB needs no
     scale-out); values match the distributed prefix sum because the
     order key (n desc, term asc) is unique per row."""
-    toks = sql_tokens(text_col)
+    toks = sql_tokens("text")
     values = ", ".join(f"({p})" for p in COVERAGE_PCTS)
     return f"""
     WITH counts AS (
       SELECT term, CAST(COUNT(*) AS BIGINT) AS n
-      FROM (SELECT UNNEST({toks}) AS term FROM {table})
+      FROM (SELECT UNNEST({toks}) AS term FROM documents)
       GROUP BY 1
     ),
     tot AS (
@@ -212,18 +194,13 @@ def sql_prf_expansion(
     *,
     m: int = 5,
     t: int = 5,
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> str:
     """Oracle for
     :func:`~kinesis_stream_spark.operators.retrieval.prf_expansion`:
     the full BM25 oracle rides as a derived-table shortlist, then the
     keyword-extraction idf chain scores the pooled vocabulary."""
-    toks = sql_tokens(text_col)
-    bm25 = sql_bm25_topk(
-        query_values, k=m, table=table, id_col=id_col, text_col=text_col
-    )
+    toks = sql_tokens("text")
+    bm25 = sql_bm25_topk(query_values, k=m)
     values = ", ".join(
         "({}, '{}')".format(qid, qtext.replace("'", "''"))
         for qid, qtext in query_values
@@ -233,12 +210,12 @@ def sql_prf_expansion(
       SELECT query_id, doc_id FROM ({bm25})),
     tf AS (
       SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-      FROM (SELECT {id_col} AS doc_id, UNNEST({toks}) AS term
-            FROM {table})
+      FROM (SELECT doc_id AS doc_id, UNNEST({toks}) AS term
+            FROM documents)
       GROUP BY 1, 2),
     dfc AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY 1),
-    n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM {table}
-          WHERE {text_col} IS NOT NULL),
+    n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents
+          WHERE text IS NOT NULL),
     idf AS (
       SELECT term,
              CAST(FLOOR(CAST(2*(n_docs - df) + 1 AS DOUBLE)

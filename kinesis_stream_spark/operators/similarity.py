@@ -198,28 +198,21 @@ def _cosine_pairs_vectorized(
     return emb.select(*in_cols).groupBy(*group_cols).applyInPandas(pairs, out_schema)
 
 
-def _scored_pairs(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str,
-    vec_col: str,
-    query_id_col: str,
-) -> DataFrame:
+def _scored_pairs(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """Shared exact scoring prologue for :func:`topk_bruteforce` and
     :func:`range_search`: broadcast the queries (with precomputed
     norms), map-side nested-loop join excluding self-matches, one
     fixed-point dot + single-IEEE-op cosine per pair. One definition
     so the two query APIs can never drift onto different arithmetic."""
     q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        norm_decimal(F.col(vec_col)).alias("nq"),
+        F.col("query_id").alias("query_id"),
+        F.col("embedding").alias("qv"),
+        norm_decimal(F.col("embedding")).alias("nq"),
     )
     return corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        norm_decimal(F.col(vec_col)).alias("nc"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("cv"),
+        norm_decimal(F.col("embedding")).alias("nc"),
     ).join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id")).select(
         "query_id",
         "neighbor_id",
@@ -227,28 +220,14 @@ def _scored_pairs(
     )
 
 
-def topk_bruteforce(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
+def topk_bruteforce(corpus: DataFrame, queries: DataFrame, *, k: int = 10) -> DataFrame:
     """Exact top-k neighbors per query vector by cosine.
 
     ``broadcast(queries)`` makes the scoring a map-side nested loop over
     the corpus (no shuffle for the join); the per-query top-k window is
     the single shuffle, on the (small-cardinality) query id.
     """
-    scored = _scored_pairs(
-        corpus,
-        queries,
-        id_col=id_col,
-        vec_col=vec_col,
-        query_id_col=query_id_col,
-    )
+    scored = _scored_pairs(corpus, queries)
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -307,9 +286,6 @@ def topk_lsh(
     *,
     k: int = 10,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """Approximate top-k: candidates share the full hyperplane-signature
     bucket; exact cosine re-ranks inside the bucket.
@@ -321,16 +297,16 @@ def topk_lsh(
     """
     sig = lambda c: hyperplane_signature(c, dim=dim)  # noqa: E731
     corp = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cv"),
-        norm_decimal(F.col(vec_col)).alias("nc"),
-        sig(F.col(vec_col)).alias("bucket"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("cv"),
+        norm_decimal(F.col("embedding")).alias("nc"),
+        sig(F.col("embedding")).alias("bucket"),
     )
     q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        norm_decimal(F.col(vec_col)).alias("nq"),
-        sig(F.col(vec_col)).alias("bucket"),
+        F.col("query_id").alias("query_id"),
+        F.col("embedding").alias("qv"),
+        norm_decimal(F.col("embedding")).alias("nq"),
+        sig(F.col("embedding")).alias("bucket"),
     )
     scored = corp.join(F.broadcast(q), ["bucket"]).where(
         F.col("neighbor_id") != F.col("query_id")
@@ -392,9 +368,6 @@ def topk_ivf(
     k: int = 10,
     nprobe: int = 2,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF search: route each query to its ``nprobe`` nearest label
@@ -405,21 +378,23 @@ def topk_ivf(
     deployment computes it once, and the nprobe sweep would otherwise
     re-aggregate it per setting."""
     cents = label_centroids(corpus, dim=dim) if centroids is None else centroids
-    q = queries.select(F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qv"))
+    q = queries.select(
+        F.col("query_id").alias("query_id"), F.col("embedding").alias("qv")
+    )
     routed = q.join(F.broadcast(cents)).select(
         "query_id", "qv", "label", dot_decimal(F.col("qv"), F.col("centroid")).alias("score")
     )
     wr = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("label"))
     probes = routed.withColumn("pr", F.row_number().over(wr)).where(F.col("pr") <= nprobe)
-    scored = corpus.withColumn("nc", norm_decimal(F.col(vec_col))).join(
+    scored = corpus.withColumn("nc", norm_decimal(F.col("embedding"))).join(
         F.broadcast(
             probes.select("query_id", "qv", F.col("label"), norm_decimal(F.col("qv")).alias("nq"))
         ),
         ["label"],
-    ).where(F.col(id_col) != F.col("query_id")).select(
+    ).where(F.col("vec_id") != F.col("query_id")).select(
         "query_id",
-        F.col(id_col).alias("neighbor_id"),
-        (dot_decimal(F.col("qv"), F.col(vec_col)) / (F.col("nq") * F.col("nc"))).alias("cosine"),
+        F.col("vec_id").alias("neighbor_id"),
+        (dot_decimal(F.col("qv"), F.col("embedding")) / (F.col("nq") * F.col("nc"))).alias("cosine"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
@@ -464,9 +439,6 @@ def ivf_recall_sweep(
     nprobes: tuple[int, ...] = (1, 2, 4),
     k: int = 10,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """Recall@k of IVF search as a function of ``nprobe`` — one row per
     setting: (nprobe, n_hits, n_exact, recall), micro-averaged over the
@@ -490,9 +462,7 @@ def ivf_recall_sweep(
     # sweep point plus once for the totals, and each topk_ivf call
     # re-aggregates the centroids for its broadcast. Intra-query
     # lineage cuts, recomputed from parquet every call.
-    exact = pin(topk_bruteforce(
-        corpus, queries, k=k, id_col=id_col, vec_col=vec_col, query_id_col=query_id_col
-    ).select("query_id", "neighbor_id"))
+    exact = pin(topk_bruteforce(corpus, queries, k=k).select("query_id", "neighbor_id"))
     cents = pin(label_centroids(corpus, dim=dim))
     totals = exact.agg(F.count(F.lit(1)).alias("n_exact"))
     parts = []
@@ -503,9 +473,6 @@ def ivf_recall_sweep(
             k=k,
             nprobe=nprobe,
             dim=dim,
-            id_col=id_col,
-            vec_col=vec_col,
-            query_id_col=query_id_col,
             centroids=cents,
         ).select("query_id", "neighbor_id")
         hits = approx.join(exact, ["query_id", "neighbor_id"]).agg(
@@ -633,8 +600,6 @@ def _exploded_subvectors(
     corpus: DataFrame,
     m: int,
     subdim: int,
-    id_col: str,
-    vec_col: str,
     passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
     """(vid, *passthrough, sub, subv): M rows per vector, built with one
@@ -645,13 +610,13 @@ def _exploded_subvectors(
         *[
             F.struct(
                 F.lit(j).alias("sub"),
-                _subvector(F.col(vec_col), j, subdim).alias("subv"),
+                _subvector(F.col("embedding"), j, subdim).alias("subv"),
             )
             for j in range(m)
         ]
     )
     return corpus.select(
-        F.col(id_col).alias("vid"), *passthrough, F.explode(subs).alias("s")
+        F.col("vec_id").alias("vid"), *passthrough, F.explode(subs).alias("s")
     ).select("vid", *passthrough, "s.sub", "s.subv")
 
 
@@ -662,8 +627,6 @@ def lloyd_rows(
     k: int,
     dim: int,
     iterations: int,
-    id_col: str,
-    vec_col: str,
 ) -> list[tuple[int, int, int, list[float]]]:
     """Driver-iterated deterministic Lloyd's k-means in each of the ``m``
     subspaces of ``dim``-wide vectors: flat k-means is ``m=1``, and
@@ -696,9 +659,9 @@ def lloyd_rows(
     subdim = dim // m
     seed_rows = (
         emb.select(
-            F.col(id_col).alias("sid"),
-            F.col(vec_col).alias("sv"),
-            md5_int64(F.col(id_col).cast("string")).alias("_h"),
+            F.col("vec_id").alias("sid"),
+            F.col("embedding").alias("sv"),
+            md5_int64(F.col("vec_id").cast("string")).alias("_h"),
         )
         .orderBy("_h", "sid")
         .limit(k)
@@ -710,11 +673,9 @@ def lloyd_rows(
         for j in range(m)
     }
     if m == 1:
-        points = emb.select(F.lit(0).alias("sub"), F.col(vec_col).alias("subv"))
+        points = emb.select(F.lit(0).alias("sub"), F.col("embedding").alias("subv"))
     else:
-        points = _exploded_subvectors(emb, m, subdim, id_col, vec_col).select(
-            "sub", "subv"
-        )
+        points = _exploded_subvectors(emb, m, subdim).select("sub", "subv")
     rows: list[tuple[int, int, int, list[float]]] = []
     for _ in range(iterations):
         # every corpus row assigns to one cluster per subspace, so the
@@ -751,8 +712,6 @@ def kmeans_fit(
     k: int = 4,
     dim: int = 64,
     iterations: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Deterministic Lloyd's k-means — the offline training step for the
     IVF coarse quantizer (topk_ivf routes against label centroids at
@@ -781,9 +740,7 @@ def kmeans_fit(
 
     Returns (cid, n_members, centroid) from the final iteration.
     """
-    rows = lloyd_rows(
-        emb, m=1, k=k, dim=dim, iterations=iterations, id_col=id_col, vec_col=vec_col
-    )
+    rows = lloyd_rows(emb, m=1, k=k, dim=dim, iterations=iterations)
     return artifact_frame(
         emb.sparkSession,
         "cid int, n_members bigint, centroid array<double>",
@@ -809,7 +766,6 @@ def assign_to_centroids(
     cents: DataFrame,
     *,
     id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Assign every vector to its nearest centroid by the training
     metric (argmax of ``2·v·c − c·c``, fixed-point dots, ties to the
@@ -825,7 +781,7 @@ def assign_to_centroids(
     struct-max tie-breaks score ties to the lower cid exactly as the
     window's ORDER BY did."""
     rows = collect_cent_rows(cents)
-    v = corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
+    v = corpus.select(F.col(id_col).alias("vid"), F.col("embedding").alias("v"))
     if not rows:
         return v.where(F.lit(False)).select(
             "vid", "v", F.lit(None).cast("int").alias("cid")
@@ -837,14 +793,7 @@ def assign_to_centroids(
     )
 
 
-def cluster_balance(
-    emb: DataFrame,
-    *,
-    k: int = 4,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cluster_balance(emb: DataFrame, *, k: int = 4, dim: int = 64) -> DataFrame:
     """Inverted-list balance diagnostics for a trained IVF index: per-
     cluster member counts/fractions plus the global imbalance factor
     ``k_actual · Σn² / N²`` (the standard FAISS-style metric — 1.0 for
@@ -864,11 +813,9 @@ def cluster_balance(
     IEEE doubles (counts are exact in double to 2^53) — the same three
     float ops on both engines, no divergence surface.
     """
-    cents = kmeans_fit(
-        emb, k=k, dim=dim, iterations=2, id_col=id_col, vec_col=vec_col
-    ).select("cid", "centroid")
+    cents = kmeans_fit(emb, k=k, dim=dim, iterations=2).select("cid", "centroid")
     sizes = (
-        assign_to_centroids(emb, cents, id_col=id_col, vec_col=vec_col)
+        assign_to_centroids(emb, cents)
         .groupBy("cid")
         .agg(F.count(F.lit(1)).alias("n_members"))
     )
@@ -898,8 +845,6 @@ def semantic_dedup(
     *,
     threshold: float = 0.3,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023, public):
     cluster the embedding space with deterministic k-means (4 clusters,
@@ -928,10 +873,8 @@ def semantic_dedup(
     """
     from kinesis_stream_spark.operators.dedup import connected_components
 
-    cents = kmeans_fit(
-        emb, k=4, dim=dim, iterations=2, id_col=id_col, vec_col=vec_col
-    ).select("cid", "centroid")
-    assigned = assign_to_centroids(emb, cents, id_col=id_col, vec_col=vec_col)
+    cents = kmeans_fit(emb, k=4, dim=dim, iterations=2).select("cid", "centroid")
+    assigned = assign_to_centroids(emb, cents)
     # guard window skipped: k-means clusters are size-bounded by
     # construction (~N/k); a deployment with pathological cluster skew
     # re-trains with larger k before dedup anyway
@@ -946,7 +889,7 @@ def semantic_dedup(
     comp = connected_components(pairs.select("id_a", "id_b"))
     return (
         comp.where(F.col("v") != F.col("comp"))
-        .select(F.col("v").alias(id_col), F.col("comp").alias("canonical_id"))
+        .select(F.col("v").alias("vec_id"), F.col("comp").alias("canonical_id"))
     )
 
 
@@ -956,9 +899,6 @@ def topk_ivf_trained(
     *,
     k: int = 10,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """IVF search over a TRAINED index: k-means centroids from
     :func:`kmeans_fit` (4 clusters, 2 Lloyd rounds) replace the label
@@ -973,21 +913,14 @@ def topk_ivf_trained(
     (partition the corpus by cid) and only this search path runs per
     query batch.
     """
-    cents = kmeans_fit(
-        corpus,
-        k=4,
-        dim=dim,
-        iterations=2,
-        id_col=id_col,
-        vec_col=vec_col,
-    ).select("cid", "centroid")
+    cents = kmeans_fit(corpus, k=4, dim=dim, iterations=2).select("cid", "centroid")
     score = (
         2 * dot_decimal(F.col("v"), F.col("centroid"))
         - dot_decimal(F.col("centroid"), F.col("centroid"))
     ).alias("score")
-    assigned = assign_to_centroids(corpus, cents, id_col=id_col, vec_col=vec_col)
+    assigned = assign_to_centroids(corpus, cents)
     q = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("v")
+        F.col("query_id").alias("query_id"), F.col("embedding").alias("v")
     )
     w_route = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("cid"))
     probes = (
@@ -1020,13 +953,7 @@ def topk_ivf_trained(
 # --- SQ8 scalar quantization --------------------------------------------------
 
 
-def sq8_codes(
-    emb: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-) -> DataFrame:
+def sq8_codes(emb: DataFrame, *, dim: int = 64) -> DataFrame:
     """Per-dimension scalar quantization (FAISS SQ8-style): one corpus
     pass learns [min, max] per dimension, then each float collapses to
     an 8-bit code ``floor((x-min)/(max-min)*255)`` clamped to [0,255].
@@ -1043,14 +970,14 @@ def sq8_codes(
     """
     stats = emb.agg(
         F.array(
-            *[F.min(F.col(vec_col)[i].cast("double")) for i in range(dim)]
+            *[F.min(F.col("embedding")[i].cast("double")) for i in range(dim)]
         ).alias("mn"),
         F.array(
-            *[F.max(F.col(vec_col)[i].cast("double")) for i in range(dim)]
+            *[F.max(F.col("embedding")[i].cast("double")) for i in range(dim)]
         ).alias("mx"),
     )
     code = F.transform(
-        F.col(vec_col),
+        F.col("embedding"),
         lambda x, i: F.when(
             F.element_at(F.col("mx"), i + 1) == F.element_at(F.col("mn"), i + 1),
             F.lit(0).cast("bigint"),
@@ -1072,7 +999,7 @@ def sq8_codes(
         ),
     )
     return emb.crossJoin(F.broadcast(stats)).select(
-        F.col(id_col), code.alias("codes")
+        F.col("vec_id"), code.alias("codes")
     )
 
 
@@ -1081,8 +1008,6 @@ def topk_sq8(
     queries_ids: DataFrame,
     *,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
 ) -> DataFrame:
     """Top-k per query by quantized integer dot product over SQ8 codes —
@@ -1093,17 +1018,17 @@ def topk_sq8(
     score is a BIGINT, so ranking has no float ties for engines to
     break differently.
     """
-    codes = sq8_codes(emb, id_col=id_col, vec_col=vec_col, dim=dim)
+    codes = sq8_codes(emb, dim=dim)
     q = codes.join(
-        queries_ids.select(F.col(id_col)), id_col, "left_semi"
-    ).select(F.col(id_col).alias("query_id"), F.col("codes").alias("qc"))
+        queries_ids.select(F.col("vec_id")), "vec_id", "left_semi"
+    ).select(F.col("vec_id").alias("query_id"), F.col("codes").alias("qc"))
     score = F.aggregate(
         F.zip_with(F.col("qc"), F.col("codes"), lambda a, b: a * b),
         F.lit(0).cast("bigint"),
         lambda acc, x: acc + x,
     )
     scored = codes.select(
-        F.col(id_col).alias("neighbor_id"), "codes"
+        F.col("vec_id").alias("neighbor_id"), "codes"
     ).join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id")).select(
         "query_id", "neighbor_id", score.alias("qscore")
     )
@@ -1120,9 +1045,6 @@ def range_search(
     queries: DataFrame,
     *,
     threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """Exact RANGE search per query vector — every corpus neighbor
     with cosine ≥ ``threshold`` — the other half of the vector-store
@@ -1149,11 +1071,5 @@ def range_search(
     and applies the SAME threshold inside buckets — identical
     semantics on the candidates, same recall caveats as their top-k
     variants."""
-    scored = _scored_pairs(
-        corpus,
-        queries,
-        id_col=id_col,
-        vec_col=vec_col,
-        query_id_col=query_id_col,
-    )
+    scored = _scored_pairs(corpus, queries)
     return scored.where(F.col("cosine") >= F.lit(threshold))

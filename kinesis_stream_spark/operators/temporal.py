@@ -5,11 +5,8 @@ extension rows; no counterpart in the reference — kinesis-stream hands
 decoded records to user code and the time-series shaping happens
 downstream; these are that downstream, re-expressed declaratively).
 
-**The input schema.** The operators read the events table's own
-columns, ``events(event_id, user_id, event_type, ts, value)``, and the
-``sql_*`` twins read the ``events`` table, both by these names. A table
-named otherwise is renamed first, with one ``select`` of ``alias``-ed
-columns, which Catalyst folds into the scan. The only names left as
+**The input schema** is ``events``, read by name (the schema table in
+:mod:`kinesis_stream_spark.operators`). The only names left as
 parameters are ones a caller sets: the key column of
 :func:`gap_fill_forward`, :func:`linear_interpolation` and
 :func:`linear_trend` (and their twins), and the table of

@@ -20,18 +20,15 @@ Scale design (100 TB):
   no overflow at any scale) and derive from md5 (functions/hashing.py) so
   the DuckDB oracle replays them bit-for-bit.
 
-Input contract: the operators read the ``documents`` schema,
-``documents(doc_id, text, lang, source, n_chars)``, by those names, and
-the ``sql_*`` twins read the table ``documents``. ``lang`` is the
-stratum of :func:`term_stats_topk`, :func:`stratified_sample` and
+Input contract: ``documents``, read by name (the schema table in
+:mod:`kinesis_stream_spark.operators`). ``lang`` is the stratum of
+:func:`term_stats_topk`, :func:`stratified_sample` and
 :func:`language_id`'s label; ``source`` is the stream of
 :func:`pack_sequences`, :func:`domain_cap` and
 :func:`weighted_mixture`. Two operators take a second frame:
 :func:`exact_substring_decontaminate` reads ``probes(probe_id,
 probe)`` and :func:`leakage_safe_split` reads ``clusters(doc_id,
-cluster_id)``. A corpus whose columns are named otherwise is renamed
-once with a ``select(... .alias(...))``; Catalyst folds that
-projection into the scan.
+cluster_id)``.
 """
 
 from __future__ import annotations

@@ -11,7 +11,11 @@ from pyspark.sql import functions as F
 
 from kinesis_stream_spark.operators.basket import (
     association_rules,
+    item_cosine,
+    item_jaccard,
     sql_association_rules,
+    sql_item_cosine,
+    sql_item_jaccard,
 )
 from kinesis_stream_spark.queries import make_q
 from kinesis_stream_spark.sources.batch import load_table
@@ -51,8 +55,6 @@ def basket_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         "antecedent", "consequent"
     )
 
-from kinesis_stream_spark.operators.basket import sql_item_jaccard  # noqa: E402
-
 
 @_q(
     "basket_item_jaccard",
@@ -68,17 +70,12 @@ def basket_item_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     directional rules: top-30 pairs by basket-set overlap, exact
     integer counts, one IEEE divide per pair (operators/basket.py for
     the basket-size-bounded pair-join shape)."""
-    from kinesis_stream_spark.operators.basket import item_jaccard
-
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     baskets = li.join(F.broadcast(p), li.l_partkey == p.p_partkey).select(
         F.col("l_orderkey").alias("basket"), F.col("p_brand").alias("item")
     )
     return item_jaccard(baskets, min_common=2, top_k=30)
-
-
-from kinesis_stream_spark.operators.basket import sql_item_cosine  # noqa: E402
 
 
 @_q(
@@ -93,8 +90,6 @@ def basket_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     geometric-mean CF kernel beside basket_item_jaccard's union one;
     exact integer counts, degree product VARCHAR-routed to double, one
     sqrt + one divide per pair (operators/basket.py)."""
-    from kinesis_stream_spark.operators.basket import item_cosine
-
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     baskets = li.join(F.broadcast(p), li.l_partkey == p.p_partkey).select(

@@ -17,28 +17,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kinesis_stream_spark.queries import make_q
-from kinesis_stream_spark.queries._emb_family import (
-    emb_scan,
-    guard_oracles,
-    queries_df,
-)
 from kinesis_stream_spark.operators.evaluation import (
+    centroid_confusion,
     embedding_drift,
     exact_score_topk,
     ivfpq_recall_sweep,
+    label_inertia,
     ranking_quality,
+    simplified_silhouette,
+    sql_centroid_confusion,
+    sql_label_inertia,
+    sql_simplified_silhouette,
 )
 from kinesis_stream_spark.operators.evaluation_sql import (
     sql_embedding_drift,
     sql_ivfpq_recall_sweep,
     sql_pq_rank_quality,
 )
-from kinesis_stream_spark.operators.quantization import (
-    pq_encode,
-    pq_topk_adc,
-    pq_train,
-)
+from kinesis_stream_spark.operators.quantization import pq_encode, pq_topk_adc, pq_train
+from kinesis_stream_spark.queries import make_q
+from kinesis_stream_spark.queries._emb_family import emb_scan, guard_oracles, queries_df
 QUERIES = {}
 ORACLE = {}
 _q = make_q(QUERIES, ORACLE)
@@ -131,12 +129,6 @@ def similarity_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE = guard_oracles(ORACLE)
 
 
-from kinesis_stream_spark.operators.evaluation import (  # noqa: E402
-    label_inertia,
-    sql_label_inertia,
-)
-
-
 @_q("similarity_label_inertia", None)  # assigned (guarded) below
 def similarity_label_inertia(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label cluster inertia + the grand '__all__' row — the
@@ -158,12 +150,6 @@ ORACLE["similarity_label_inertia"] = guard_oracles(
 )["similarity_label_inertia"]
 
 
-from kinesis_stream_spark.operators.evaluation import (  # noqa: E402
-    simplified_silhouette,
-    sql_simplified_silhouette,
-)
-
-
 @_q("similarity_silhouette", None)  # assigned (guarded) below
 def similarity_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Simplified silhouette per label + '__all__' — the separation
@@ -183,12 +169,6 @@ ORACLE["similarity_silhouette"] = guard_oracles(
         + " ORDER BY label_key"
     }
 )["similarity_silhouette"]
-
-
-from kinesis_stream_spark.operators.evaluation import (  # noqa: E402
-    centroid_confusion,
-    sql_centroid_confusion,
-)
 
 
 @_q("similarity_centroid_confusion", None)  # assigned (guarded) below

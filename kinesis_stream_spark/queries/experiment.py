@@ -6,10 +6,33 @@ assignment + per-metric conversion lift scoring.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from kinesis_stream_spark.operators.experiment import (
     ab_conversion_ztest,
+    ab_cuped,
+    ab_delta_ratio,
+    ab_mann_whitney,
+    ab_srm_check,
+    ab_welch_ttest,
+    anova_oneway,
+    apdex_score,
+    bootstrap_ci,
     sql_ab_conversion_ztest,
+    sql_ab_cuped,
+    sql_ab_delta_ratio,
+    sql_ab_mann_whitney,
+    sql_ab_srm_check,
+    sql_ab_welch_ttest,
+    sql_anova_oneway,
+    sql_apdex_score,
+    sql_bootstrap_ci,
+)
+from kinesis_stream_spark.operators.modeleval import (
+    calibration_bins,
+    roc_auc_per_class,
+    sql_calibration_bins,
+    sql_roc_auc_per_class,
 )
 from kinesis_stream_spark.queries import make_q
 from kinesis_stream_spark.sources.batch import load_table
@@ -44,25 +67,13 @@ def events_apdex_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     plays the latency role): satisfied ≤ T, tolerating ≤ 4T, score =
     ⌊10^6·(2·sat+tol)/(2·n)⌋ — integer end to end, one combinable
     aggregate (operator docstring)."""
-    from kinesis_stream_spark.operators.experiment import apdex_score
-
     return apdex_score(
         load_table(spark, sf_dir, "events"), threshold=_APDEX_T
     ).orderBy("key")
 
 
-from kinesis_stream_spark.operators.experiment import (  # noqa: E402
-    sql_apdex_score,
-)
-
 ORACLE["events_apdex_score"] = (
     sql_apdex_score(threshold=_APDEX_T) + " ORDER BY key"
-)
-
-
-from kinesis_stream_spark.operators.experiment import (  # noqa: E402
-    ab_welch_ttest,
-    sql_ab_welch_ttest,
 )
 
 
@@ -77,12 +88,6 @@ def events_ab_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ab_welch_ttest(ev)
 
 
-from kinesis_stream_spark.operators.experiment import (  # noqa: E402
-    anova_oneway,
-    sql_anova_oneway,
-)
-
-
 @_q("events_anova_value_by_type", sql_anova_oneway())
 def events_anova_value_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-way ANOVA of event value across event types — does the mean
@@ -92,12 +97,6 @@ def events_anova_value_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/experiment.py)."""
     ev = load_table(spark, sf_dir, "events")
     return anova_oneway(ev)
-
-
-from kinesis_stream_spark.operators.experiment import (  # noqa: E402
-    ab_mann_whitney,
-    sql_ab_mann_whitney,
-)
 
 
 @_q("events_ab_mann_whitney", sql_ab_mann_whitney())
@@ -111,12 +110,6 @@ def events_ab_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ab_mann_whitney(ev)
 
 
-from kinesis_stream_spark.operators.experiment import (  # noqa: E402
-    ab_delta_ratio,
-    sql_ab_delta_ratio,
-)
-
-
 @_q("events_ab_delta_ratio", sql_ab_delta_ratio())
 def events_ab_delta_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Delta-method z-test on the revenue-per-event RATIO metric under
@@ -128,12 +121,6 @@ def events_ab_delta_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ab_delta_ratio(ev)
 
 
-from kinesis_stream_spark.operators.experiment import (  # noqa: E402
-    ab_srm_check,
-    sql_ab_srm_check,
-)
-
-
 @_q("events_ab_srm_check", sql_ab_srm_check())
 def events_ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sample-ratio-mismatch health gate for the shared md5 50/50
@@ -143,11 +130,6 @@ def events_ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     return ab_srm_check(ev)
 
-
-from kinesis_stream_spark.operators.experiment import (  # noqa: E402
-    ab_cuped,
-    sql_ab_cuped,
-)
 
 #: pre/post boundary for the CUPED covariate: 2024-01-11 00:00 UTC —
 #: the events table spans January 2024, so the first ten days form
@@ -166,12 +148,6 @@ def events_ab_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ab_cuped(ev, split_us=_CUPED_SPLIT_US)
 
 
-from kinesis_stream_spark.operators.experiment import (  # noqa: E402
-    bootstrap_ci,
-    sql_bootstrap_ci,
-)
-
-
 @_q("events_bootstrap_ci", sql_bootstrap_ci())
 def events_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Poisson-bootstrap 95% percentile CI for the mean event value —
@@ -180,17 +156,7 @@ def events_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     replicate sums, nearest-rank order-statistic bounds
     (operators/experiment.py:bootstrap_ci)."""
     ev = load_table(spark, sf_dir, "events")
-    return bootstrap_ci(ev, id_col="event_id", value_col="value")
-
-
-from pyspark.sql import functions as F  # noqa: E402
-
-from kinesis_stream_spark.operators.modeleval import (  # noqa: E402
-    calibration_bins,
-    roc_auc_per_class,
-    sql_calibration_bins,
-    sql_roc_auc_per_class,
-)
+    return bootstrap_ci(ev)
 
 
 @_q(

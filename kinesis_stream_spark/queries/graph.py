@@ -16,18 +16,28 @@ from pyspark.sql import functions as F
 from kinesis_stream_spark.operators.graph import (
     bfs_hops,
     cheapest_path,
+    degree_assortativity,
+    degree_profile,
     hits_scores,
     kcore,
     label_propagation,
+    link_prediction_ra,
+    modularity,
     pagerank,
     personalized_pagerank,
+    reciprocity,
     sql_bfs_hops,
     sql_cheapest_path,
+    sql_degree_assortativity,
+    sql_degree_profile,
     sql_hits_scores,
     sql_kcore,
     sql_label_propagation,
+    sql_link_prediction_ra,
+    sql_modularity,
     sql_pagerank,
     sql_personalized_pagerank,
+    sql_reciprocity,
     sql_triangle_stats,
     triangle_stats,
 )
@@ -288,11 +298,6 @@ def graph_cheapest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cheapest_path(edges, sources, rounds=_BFS_ROUNDS).orderBy("node")
 
 
-from kinesis_stream_spark.operators.graph import (  # noqa: E402
-    link_prediction_ra,
-    sql_link_prediction_ra,
-)
-
 _RA_CAP, _RA_MIN_COMMON, _RA_TOP_K = 20, 2, 30
 
 
@@ -320,12 +325,6 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from kinesis_stream_spark.operators.graph import (  # noqa: E402
-    degree_profile,
-    sql_degree_profile,
-)
-
-
 @_q(
     "graph_degree_profile",
     sql_degree_profile(_EDGES_CTE) + " ORDER BY role, bucket",
@@ -340,12 +339,6 @@ def graph_degree_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from kinesis_stream_spark.operators.graph import (  # noqa: E402
-    degree_assortativity,
-    sql_degree_assortativity,
-)
-
-
 @_q(
     "graph_assortativity",
     sql_degree_assortativity(_EDGES_CTE),
@@ -358,11 +351,6 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/graph.py)."""
     return degree_assortativity(_purchase_edges(spark, sf_dir))
 
-
-from kinesis_stream_spark.operators.graph import (  # noqa: E402
-    reciprocity,
-    sql_reciprocity,
-)
 
 #: purchase-forward / return-backward edges: c→s for every purchase,
 #: s→c where goods flowed back (l_returnflag = 'R') — reciprocity is
@@ -399,12 +387,6 @@ def graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("dst"),
     )
     return reciprocity(fwd.unionAll(back))
-
-
-from kinesis_stream_spark.operators.graph import (  # noqa: E402
-    modularity,
-    sql_modularity,
-)
 
 
 @_q(

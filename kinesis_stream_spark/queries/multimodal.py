@@ -15,11 +15,14 @@ from pyspark.sql import functions as F
 from kinesis_stream_spark.operators.multimodal import (
     byte_stats,
     decode_features,
+    exact_dedup_assets,
     frame_sample,
     media_from_documents,
+    payload_near_duplicates,
 )
 from kinesis_stream_spark.queries import make_q
-from kinesis_stream_spark.queries._util import sql_davg
+from kinesis_stream_spark.queries._util import davg, sql_davg
+from kinesis_stream_spark.queries.dedup import _sql_simhash_pipeline
 from kinesis_stream_spark.sources.batch import load_table
 
 QUERIES = {}
@@ -69,8 +72,6 @@ def multimodal_catalog_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Metadata-only — the payload column's bytes are summed via
     octet_length without ever decoding (and at scale, parquet reads only
     the touched column chunks)."""
-    from kinesis_stream_spark.queries._util import davg
-
     media = media_from_documents(load_table(spark, sf_dir, "documents"))
     return (
         media.groupBy("kind")
@@ -179,8 +180,6 @@ def multimodal_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     double-ingest scenario), so every content hash has exactly two
     copies and the canonical-id choice is exercised. Only 32-char
     digests shuffle; payloads never leave their scan tasks."""
-    from kinesis_stream_spark.operators.multimodal import exact_dedup_assets
-
     media = media_from_documents(load_table(spark, sf_dir, "documents")).select(
         "media_id", "payload"
     )
@@ -201,8 +200,6 @@ def _sql_hex_shingle_text(hex_expr: str, n_bytes: int = 4) -> str:
 
 
 def _sql_payload_near_dup() -> str:
-    from kinesis_stream_spark.queries.dedup import _sql_simhash_pipeline
-
     orig = _sql_hex_shingle_text("HEX(payload)")
     corr = _sql_hex_shingle_text("('00' || SUBSTR(HEX(payload), 3))")
     # LENGTH(text) > 0 mirrors payload_near_duplicates' too-short-to-
@@ -227,8 +224,6 @@ def multimodal_payload_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     + Hamming verify finds them without decoding anything; the oracle
     replays shingling, fingerprints, blocking, and the verify, so even
     the fingerprint pairs the blocking misses must match exactly."""
-    from kinesis_stream_spark.operators.multimodal import payload_near_duplicates
-
     media = media_from_documents(load_table(spark, sf_dir, "documents")).select(
         "media_id", "payload"
     )

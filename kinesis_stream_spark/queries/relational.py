@@ -22,21 +22,68 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from kinesis_stream_spark.operators.profile import (
-    fd_profile,
-    sql_benford_audit,
-    sql_chisq_independence,
-    sql_cdc_apply,
-    sql_fd_profile,
-    sql_numeric_correlations,
+from kinesis_stream_spark.functions.hashing import md5_int64, sql_md5_int64
+from kinesis_stream_spark.operators.encoding import sql_target_encoding, target_encoding
+from kinesis_stream_spark.operators.layout import (
+    compaction_plan,
+    sql_compaction_plan,
+    sql_zonemap_skipping,
+    sql_zorder_census,
+    zonemap_skipping,
+    zorder_census,
 )
-from kinesis_stream_spark.operators.layout import sql_zorder_census
+from kinesis_stream_spark.operators.profile import (
+    benford_audit,
+    category_balance,
+    cdc_apply,
+    chisq_independence,
+    cramers_v,
+    fd_profile,
+    hellinger_drift,
+    ks_two_sample,
+    numeric_correlations,
+    profile_columns,
+    quality_scorecard,
+    snapshot_diff,
+    spearman_correlation,
+    sql_benford_audit,
+    sql_category_balance,
+    sql_cdc_apply,
+    sql_chisq_independence,
+    sql_cramers_v,
+    sql_fd_profile,
+    sql_hellinger_drift,
+    sql_ks_two_sample,
+    sql_numeric_correlations,
+    sql_profile_columns,
+    sql_quality_scorecard,
+    sql_spearman_correlation,
+    sql_total_reconciliation,
+    sql_uniqueness_profile,
+    total_reconciliation,
+    uniqueness_profile,
+)
+from kinesis_stream_spark.operators.quantiles import sql_weighted_median, weighted_median
+from kinesis_stream_spark.operators.sampling import (
+    sql_weighted_priority_sample,
+    weighted_priority_sample,
+)
 from kinesis_stream_spark.operators.skew import (
+    abc_classification,
+    distributed_cumsum,
+    gini_concentration,
+    join_cardinality_profile,
     key_concentration_deciles,
+    quantile_normalize,
+    salted_agg,
+    salted_join,
     sql_abc_classification,
+    sql_gini_concentration,
+    sql_join_cardinality_profile,
     sql_key_concentration_deciles,
     sql_quantile_normalize,
 )
+from kinesis_stream_spark.operators.temporal import DAY_US as _KS_DAY_US, _bucket as _ks_bucket
 from kinesis_stream_spark.queries import make_q
 from kinesis_stream_spark.queries._util import davg, dsum, sql_davg, sql_dsum
 from kinesis_stream_spark.sources.batch import load_table
@@ -1285,8 +1332,6 @@ def layout_zorder_census_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     give a reader, and the census shows they form rectangles (both
     columns prune). Pure BIGINT bit arithmetic, map-only keying
     (operators/layout.py)."""
-    from kinesis_stream_spark.operators.layout import zorder_census
-
     part = load_table(spark, sf_dir, "part").select(
         F.col("p_size").cast("long").alias("x"),
         F.floor("p_retailprice").cast("long").alias("y"),
@@ -1312,8 +1357,6 @@ def agg_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed prefix sum (no single-partition window), integer-ppm
     thresholds A ≤ 80% / B ≤ 95% / C — bit-stable classification
     (operators/skew.py)."""
-    from kinesis_stream_spark.operators.skew import abc_classification
-
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_partkey"),
         "l_extendedprice",
@@ -1412,8 +1455,6 @@ def sample_hash_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     retries (df.sample's RNG is none of those), stable under appends,
     and a pure map-side filter. This is how a 100 TB pipeline takes
     auditable subsets for eval sets or quality probes."""
-    from kinesis_stream_spark.functions.hashing import md5_int64
-
     li = load_table(spark, sf_dir, "lineitem")
     bucket = md5_int64(F.concat_ws("|", "l_orderkey", "l_linenumber")) % 100
     return li.where(bucket < 10).agg(
@@ -1435,8 +1476,6 @@ _PROFILE_COLS = [
 
 
 def _sql_profile_orders() -> str:
-    from kinesis_stream_spark.operators.profile import sql_profile_columns
-
     return (
         "SELECT * FROM ("
         + sql_profile_columns("orders", _PROFILE_COLS)
@@ -1451,8 +1490,6 @@ def profile_orders_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingestion pipeline runs on every new data drop. One scan, one
     aggregate (the N exact distincts share a single Expand), stack
     unpivot."""
-    from kinesis_stream_spark.operators.profile import profile_columns
-
     orders = load_table(spark, sf_dir, "orders")
     return profile_columns(orders, _PROFILE_COLS).orderBy("column_name")
 
@@ -1542,8 +1579,6 @@ def agg_salted_skew_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     The ORACLE is the plain GROUP BY: proof that salting changes the
     physical plan only, never a value (counts add exactly; sums stay in
     the exact-DECIMAL discipline end-to-end)."""
-    from kinesis_stream_spark.operators.skew import salted_agg
-
     li = load_table(spark, sf_dir, "lineitem")
     return salted_agg(
         li,
@@ -1593,8 +1628,6 @@ def events_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_checksum() -> str:
-    from kinesis_stream_spark.functions.hashing import sql_md5_int64
-
     okey = (
         "CONCAT_WS('|', o_orderkey, o_custkey, o_orderstatus, "
         "CAST(FLOOR(o_totalprice * 100) AS BIGINT), "
@@ -1632,8 +1665,6 @@ def integrity_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row aggregate per table; checksum returned as a string (a 38-digit
     decimal overflows int64 consumers). At 100 TB this is the cheapest
     full-table verification that exists — one scan, a few bytes out."""
-    from kinesis_stream_spark.functions.hashing import md5_int64
-
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     okey = F.concat_ws(
@@ -1723,8 +1754,6 @@ def agg_equidepth_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a map-side higher-order filter into a ~10-group aggregate.
     ``v`` is unique post-agg, so the distributed prefix is exactly the
     global one and the oracle is unchanged."""
-    from kinesis_stream_spark.operators.skew import distributed_cumsum
-
     li = load_table(spark, sf_dir, "lineitem")
     vc = li.groupBy(F.col("l_extendedprice").alias("v")).agg(
         F.count(F.lit(1)).alias("cnt")
@@ -2489,8 +2518,6 @@ def integrity_referential_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_snapshot_diff() -> str:
-    from kinesis_stream_spark.functions.hashing import sql_md5_int64
-
     mutated = (
         "CASE WHEN doc_id % 50 = 0 THEN text || ' v2' ELSE text END"
     )
@@ -2531,8 +2558,6 @@ def integrity_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     every 50th text amended), exercising all four statuses; row
     fingerprints are md5 over the NULL-skipping canonical concat. One
     co-partitioned full-outer join + a 4-row aggregate."""
-    from kinesis_stream_spark.operators.profile import snapshot_diff
-
     docs = load_table(spark, sf_dir, "documents")
     fp = F.md5(F.concat_ws("|", "text", "lang", "source"))
     old = docs.where(F.col("doc_id") < 400).select("doc_id", fp.alias("fp"))
@@ -2549,7 +2574,7 @@ def integrity_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("fp"),
     )
-    return snapshot_diff(old, new, key_col="doc_id").orderBy("status")
+    return snapshot_diff(old, new).orderBy("status")
 
 
 @_q(
@@ -2617,8 +2642,6 @@ def profile_lineitem_correlations(spark: SparkSession, sf_dir: str) -> DataFrame
     sums over 2^20-quantized values, pinned-order sqrt/divide finals —
     quantity and extendedprice must correlate strongly (price scales
     with quantity), discount with neither (operators/profile.py)."""
-    from kinesis_stream_spark.operators.profile import numeric_correlations
-
     li = load_table(spark, sf_dir, "lineitem")
     return numeric_correlations(li, _CORR_PAIRS).orderBy("col_x", "col_y")
 
@@ -2647,9 +2670,7 @@ _CDC_CHG_CTE = """
 
 @_q(
     "integrity_cdc_merge",
-    sql_cdc_apply(
-        _CDC_SNAP_CTE, _CDC_CHG_CTE, key_col="k", val_cols=["status", "price"]
-    )
+    sql_cdc_apply(_CDC_SNAP_CTE, _CDC_CHG_CTE, val_cols=["status", "price"])
     + " ORDER BY k",
 )
 def integrity_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2659,8 +2680,6 @@ def integrity_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-outer join + CASE — the lakehouse MERGE INTO shape
     (operators/profile.py). Output is the merged snapshot itself, so
     parity pins every surviving/updated/inserted row."""
-    from kinesis_stream_spark.operators.profile import cdc_apply
-
     o = load_table(spark, sf_dir, "orders")
     snap = o.select(
         F.col("o_orderkey").alias("k"),
@@ -2688,9 +2707,7 @@ def integrity_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey").cast("double").alias("price"),
     )
     changes = dels.unionAll(upds).unionAll(ins)
-    return cdc_apply(
-        snap, changes, key_col="k", val_cols=["status", "price"]
-    ).orderBy("k")
+    return cdc_apply(snap, changes, val_cols=["status", "price"]).orderBy("k")
 
 
 @_q(
@@ -2707,8 +2724,6 @@ def feature_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-reducer CUME_DIST window); the oracle replays the textbook
     single-window formulation, so two prefix-sum strategies must agree
     (operators/skew.py)."""
-    from kinesis_stream_spark.operators.skew import quantile_normalize
-
     p = load_table(spark, sf_dir, "part")
     return quantile_normalize(
         p, id_col="p_partkey", val_col="p_retailprice"
@@ -2724,8 +2739,6 @@ def profile_benford_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     leading-digit shares in integer ppm (expectations injected as
     precomputed literals — no in-engine log) — the fraud / synthetic-
     data smoke test (operators/profile.py)."""
-    from kinesis_stream_spark.operators.profile import benford_audit
-
     o = load_table(spark, sf_dir, "orders")
     return benford_audit(o, "o_totalprice").orderBy("digit")
 
@@ -2740,8 +2753,6 @@ def profile_orders_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
     status: per contingency cell, observed vs independence-expected
     counts and the cell's χ² contribution in pinned-order doubles over
     exact marginals (operators/profile.py)."""
-    from kinesis_stream_spark.operators.profile import chisq_independence
-
     o = load_table(spark, sf_dir, "orders")
     return chisq_independence(o, "o_orderpriority", "o_orderstatus").orderBy(
         "o_orderpriority", "o_orderstatus"
@@ -2756,8 +2767,6 @@ def profile_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     priority (orders) and return flag ~ line status (lineitem).
     Per-cell contributions quantize to 2^20 fixed point so the χ²
     total sums order-free (operators/profile.py)."""
-    from kinesis_stream_spark.operators.profile import cramers_v
-
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     return (
@@ -2774,8 +2783,6 @@ def agg_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     inequality of the distribution — exact micro-unit totals,
     DECIMAL(38,0) rank products, integer-ppm Gini, group-partitioned
     rank window (operators/skew.py)."""
-    from kinesis_stream_spark.operators.skew import gini_concentration
-
     o = load_table(spark, sf_dir, "orders")
     return gini_concentration(
         o,
@@ -2784,10 +2791,6 @@ def agg_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         val_col="o_totalprice",
     ).orderBy("group_key")
 
-
-from kinesis_stream_spark.operators.skew import (  # noqa: E402
-    sql_gini_concentration,
-)
 
 ORACLE["agg_gini_concentration"] = (
     sql_gini_concentration(
@@ -2810,8 +2813,6 @@ def profile_category_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     the integer-exact stand-ins for entropy (whose ln rounds
     differently across engines), plus top-share and cardinality
     (operators/profile.py)."""
-    from kinesis_stream_spark.operators.profile import category_balance
-
     o = load_table(spark, sf_dir, "orders")
     return category_balance(o, _BALANCE_COLS).orderBy("column_name")
 
@@ -2828,17 +2829,9 @@ def integrity_uniqueness_profile(
     PRIMARY KEY verdict (no dups, no NULLs) — o_orderkey should pass,
     o_custkey and o_orderstatus should fail with measured distance
     (operators/profile.py)."""
-    from kinesis_stream_spark.operators.profile import uniqueness_profile
-
     o = load_table(spark, sf_dir, "orders")
     return uniqueness_profile(o, _UNIQ_COLS).orderBy("column_name")
 
-
-from kinesis_stream_spark.operators.profile import (  # noqa: E402
-    sql_category_balance,
-    sql_cramers_v,
-    sql_uniqueness_profile,
-)
 
 ORACLE["profile_cramers_v"] = (
     "SELECT * FROM (("
@@ -2869,8 +2862,6 @@ def layout_zonemap_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-ppm skip rate; the measured case for range-clustering the
     100 TB write (operators/layout.py; global rank rides the
     distributed prefix sum)."""
-    from kinesis_stream_spark.operators.layout import zonemap_skipping
-
     o = load_table(spark, sf_dir, "orders").select(
         F.expr("unix_micros(cast(o_orderdate as timestamp)) div 86400000000")
         .alias("k_day"),
@@ -2885,10 +2876,6 @@ def layout_zonemap_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         buckets=_ZM_BUCKETS,
     ).orderBy("layout")
 
-
-from kinesis_stream_spark.operators.layout import (  # noqa: E402
-    sql_zonemap_skipping,
-)
 
 ORACLE["layout_zonemap_skipping"] = (
     sql_zonemap_skipping(
@@ -2912,8 +2899,6 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     traded); lower-median selection rule, zero float arithmetic, the
     value collapse then a group-partitioned cumulative window
     (operators/quantiles.py)."""
-    from kinesis_stream_spark.operators.quantiles import weighted_median
-
     li = load_table(spark, sf_dir, "lineitem")
     return weighted_median(
         li,
@@ -2922,10 +2907,6 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         weight_col="l_quantity",
     ).orderBy("group_key")
 
-
-from kinesis_stream_spark.operators.quantiles import (  # noqa: E402
-    sql_weighted_median,
-)
 
 ORACLE["agg_weighted_median"] = (
     sql_weighted_median(
@@ -3008,8 +2989,6 @@ def join_salted_skew_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of one — values identical to the plain equi-join the
     oracle runs (operators/skew.py salted_join; the plan pins
     SortMergeJoin with the salt in the keys)."""
-    from kinesis_stream_spark.operators.skew import salted_join
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "value"
     )
@@ -3050,8 +3029,6 @@ def layout_compaction_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix-sum binning into ~2 KB output files with a per-bin fill
     audit — the planner half of OPTIMIZE, all metadata-sized
     (operators/layout.py)."""
-    from kinesis_stream_spark.operators.layout import compaction_plan
-
     d = load_table(spark, sf_dir, "documents").select(
         F.col("source").alias("part_key"),
         F.col("doc_id").alias("file_id"),
@@ -3059,29 +3036,16 @@ def layout_compaction_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return compaction_plan(
         d,
-        part_col="part_key",
-        file_col="file_id",
         bytes_col="b",
         target_bytes=_COMPACT_TARGET,
     ).orderBy("part_key", "bin_id")
 
-
-from kinesis_stream_spark.operators.layout import (  # noqa: E402
-    sql_compaction_plan,
-)
 
 ORACLE["layout_compaction_bins"] = (
     sql_compaction_plan(_COMPACT_FILES_CTE, target_bytes=_COMPACT_TARGET)
     + " ORDER BY part_key, bin_id"
 )
 
-
-from kinesis_stream_spark.operators.temporal import (  # noqa: E402
-    DAY_US as _KS_DAY_US,
-)
-from kinesis_stream_spark.operators.temporal import (  # noqa: E402
-    _bucket as _ks_bucket,
-)
 
 _KS_A_CTE = (
     "SELECT value AS v FROM events WHERE ts IS NOT NULL"
@@ -3102,8 +3066,6 @@ def profile_ks_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed prefix-sum exchange; only the reported D and the
     Kolmogorov-scaled statistic are (pinned) floats
     (operators/profile.py)."""
-    from kinesis_stream_spark.operators.profile import ks_two_sample
-
     ev = load_table(spark, sf_dir, "events").where(
         F.col("ts").isNotNull()
     )
@@ -3112,10 +3074,6 @@ def profile_ks_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = ev.where(day % 2 == 1).select(F.col("value").alias("v"))
     return ks_two_sample(a, b)
 
-
-from kinesis_stream_spark.operators.profile import (  # noqa: E402
-    sql_ks_two_sample,
-)
 
 ORACLE["profile_ks_value_drift"] = sql_ks_two_sample(_KS_A_CTE, _KS_B_CTE)
 
@@ -3127,8 +3085,6 @@ def profile_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     a Pearson≫Spearman gap is the outlier-leverage alarm. Exact
     2×-midranks over distributed prefix sums, DECIMAL(38,0) moments,
     pinned finals (operators/profile.py:spearman_correlation)."""
-    from kinesis_stream_spark.operators.profile import spearman_correlation
-
     li = load_table(spark, sf_dir, "lineitem")
     return spearman_correlation(
         li,
@@ -3137,10 +3093,6 @@ def profile_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         y_col="l_extendedprice",
     ).orderBy("group_key")
 
-
-from kinesis_stream_spark.operators.profile import (  # noqa: E402
-    sql_spearman_correlation,
-)
 
 ORACLE["profile_spearman_corr"] = (
     sql_spearman_correlation(
@@ -3160,14 +3112,8 @@ def profile_hellinger_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift number beside the KS gap and the chi-square; the binned
     cell frame is the mergeable 100 TB sketch
     (operators/profile.py:hellinger_drift)."""
-    from kinesis_stream_spark.operators.profile import hellinger_drift
-
     return hellinger_drift(load_table(spark, sf_dir, "events")).orderBy("key")
 
-
-from kinesis_stream_spark.operators.profile import (  # noqa: E402
-    sql_hellinger_drift,
-)
 
 ORACLE["profile_hellinger_drift"] = (
     sql_hellinger_drift() + " ORDER BY key"
@@ -3181,17 +3127,11 @@ def join_cardinality_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     join — the planning pass behind salting/broadcast decisions
     (operators/skew.py:join_cardinality_profile). '__total__' row +
     top-10 contributing keys with ppm shares."""
-    from kinesis_stream_spark.operators.skew import join_cardinality_profile
-
     li = load_table(spark, sf_dir, "lineitem")
     return join_cardinality_profile(
         li, li, left_key="l_partkey", right_key="l_partkey"
     )
 
-
-from kinesis_stream_spark.operators.skew import (  # noqa: E402
-    sql_join_cardinality_profile,
-)
 
 ORACLE["join_cardinality_estimate"] = sql_join_cardinality_profile(
     left_table="lineitem",
@@ -3245,18 +3185,12 @@ def integrity_quality_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate pass + one keys-sized anti-join per referential rule;
     the publish gate is WHERE NOT passed
     (operators/profile.py:quality_scorecard)."""
-    from kinesis_stream_spark.operators.profile import quality_scorecard
-
     return quality_scorecard(
         load_table(spark, sf_dir, "orders"),
         _SCORECARD_SPECS,
         ref_frames={"customer": load_table(spark, sf_dir, "customer")},
     ).orderBy("check_name")
 
-
-from kinesis_stream_spark.operators.profile import (  # noqa: E402
-    sql_quality_scorecard,
-)
 
 ORACLE["integrity_quality_scorecard"] = (
     sql_quality_scorecard(
@@ -3275,10 +3209,6 @@ def sample_weighted_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5(id)/weight; the integer-exact ES-A-Res sibling): re-runs,
     retries, and backfills pick the same rows
     (operators/sampling.py:weighted_priority_sample)."""
-    from kinesis_stream_spark.operators.sampling import (
-        weighted_priority_sample,
-    )
-
     return weighted_priority_sample(
         load_table(spark, sf_dir, "events"),
         group_col="event_type",
@@ -3287,10 +3217,6 @@ def sample_weighted_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=5,
     ).orderBy("group_key", "sample_rank")
 
-
-from kinesis_stream_spark.operators.sampling import (  # noqa: E402
-    sql_weighted_priority_sample,
-)
 
 ORACLE["sample_weighted_per_type"] = (
     sql_weighted_priority_sample(
@@ -3311,8 +3237,6 @@ def feature_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     price of the OTHER orders sharing its priority, shrunk toward the
     global mean — the leakage-guarded categorical encoding a training
     pipeline feeds the model (operators/encoding.py:target_encoding)."""
-    from kinesis_stream_spark.operators.encoding import target_encoding
-
     orders = load_table(spark, sf_dir, "orders")
     return target_encoding(
         orders,
@@ -3322,10 +3246,6 @@ def feature_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
         smoothing=10,
     ).orderBy("id")
 
-
-from kinesis_stream_spark.operators.encoding import (  # noqa: E402
-    sql_target_encoding,
-)
 
 ORACLE["feature_target_encoding"] = (
     sql_target_encoding(
@@ -3349,8 +3269,6 @@ def integrity_total_reconciliation(
     the population into match / mismatch / missing_children /
     orphan_children with exact diff totals
     (operators/profile.py:total_reconciliation)."""
-    from kinesis_stream_spark.operators.profile import total_reconciliation
-
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem").withColumn(
         "contribution",
@@ -3368,10 +3286,6 @@ def integrity_total_reconciliation(
         tolerance_fx=10485,  # floor(0.01 * 2^20) — one cent
     ).orderBy("bucket")
 
-
-from kinesis_stream_spark.operators.profile import (  # noqa: E402
-    sql_total_reconciliation,
-)
 
 ORACLE["integrity_total_reconciliation"] = (
     sql_total_reconciliation(

@@ -13,17 +13,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kinesis_stream_spark.operators.retrieval import (
-    sql_phrase_search,
     RRF_K,
     RRF_SCALE,
     bm25_topk,
     phrase_search,
+    prf_expansion,
     rrf_fuse,
     rsj_topk,
+    sql_phrase_search,
     vocab_coverage,
 )
 from kinesis_stream_spark.operators.retrieval_sql import (
     sql_bm25_topk,
+    sql_prf_expansion,
     sql_rsj_topk,
     sql_vocab_coverage,
 )
@@ -154,7 +156,7 @@ PHRASES = ("slow query", "fast scan", "value table part")
 
 @_q(
     "text_phrase_search",
-    sql_phrase_search(table="documents", phrases=list(PHRASES))
+    sql_phrase_search(phrases=list(PHRASES))
     + " ORDER BY phrase",
 )
 def text_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -167,11 +169,6 @@ def text_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return phrase_search(docs, list(PHRASES)).orderBy("phrase")
 
-
-from kinesis_stream_spark.operators.retrieval import prf_expansion  # noqa: E402
-from kinesis_stream_spark.operators.retrieval_sql import (  # noqa: E402
-    sql_prf_expansion,
-)
 
 _PRF_M, _PRF_T = 5, 5
 

@@ -12,20 +12,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kinesis_stream_spark.functions.hashing import sql_md5_int64
 from kinesis_stream_spark.functions.vectors import sql_cosine, sql_dot
 from kinesis_stream_spark.operators.similarity import (
+    ann_recall,
+    cluster_balance,
+    ivf_recall_sweep,
+    kmeans_fit,
     plane_signs,
+    range_search,
+    semantic_dedup,
     topk_bruteforce,
     topk_ivf,
+    topk_ivf_trained,
     topk_lsh,
+    topk_sq8,
 )
 from kinesis_stream_spark.queries import make_q
-from kinesis_stream_spark.queries._emb_family import (
-    DIM,
-    emb_scan,
-    guard_oracles,
-    queries_df,
-)
+from kinesis_stream_spark.queries._emb_family import DIM, emb_scan, guard_oracles, queries_df
 
 QUERIES = {}
 ORACLE = {}
@@ -74,12 +78,12 @@ def similarity_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     return topk_bruteforce(emb, _queries_df(emb), k=K).orderBy("query_id", "rank")
 
 
-def _sql_signature(vec_expr: str) -> str:
+def _sql_signature() -> str:
     """DuckDB replay of hyperplane_signature: left-assoc ±1 dot folds."""
     bits = []
     for signs in plane_signs(DIM):
         terms = " + ".join(
-            f"CAST({vec_expr}[{i + 1}] AS DOUBLE) * {signs[i]:.1f}" for i in range(DIM)
+            f"CAST(embedding[{i + 1}] AS DOUBLE) * {signs[i]:.1f}" for i in range(DIM)
         )
         bits.append(f"CASE WHEN (0.0 + {terms}) >= 0 THEN '1' ELSE '0' END")
     return "CONCAT(" + ", ".join(bits) + ")"
@@ -89,7 +93,7 @@ def _sql_signature(vec_expr: str) -> str:
     "similarity_topk_lsh",
     f"""
     WITH sig AS (
-      SELECT vec_id, embedding, {_sql_signature('embedding')} AS bucket
+      SELECT vec_id, embedding, {_sql_signature()} AS bucket
       FROM embeddings
     ),
     q AS (SELECT vec_id AS query_id, embedding AS qv, bucket FROM sig
@@ -127,9 +131,9 @@ def similarity_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CSCALE = "1000000000000.0"
 
 
-def _sql_centroid_sums(vec_expr: str = "embedding") -> str:
+def _sql_centroid_sums() -> str:
     return ", ".join(
-        f"SUM(CAST(FLOOR(CAST({vec_expr}[{i + 1}] AS DOUBLE) * {_CSCALE}) AS BIGINT))"
+        f"SUM(CAST(FLOOR(CAST(embedding[{i + 1}] AS DOUBLE) * {_CSCALE}) AS BIGINT))"
         f" AS s{i}"
         for i in range(DIM)
     )
@@ -219,8 +223,6 @@ def similarity_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF). Both rankings are deterministic on both engines, so the oracle
     replays the *measurement*, not just the inputs. The recall join
     itself is O(k·Q) — noise next to producing the rankings."""
-    from kinesis_stream_spark.operators.similarity import ann_recall
-
     emb = _emb(spark, sf_dir)
     q = _queries_df(emb)
     exact = topk_bruteforce(emb, q, k=K)
@@ -234,8 +236,6 @@ def _kmeans_ctes(k: int = 4, iterations: int = 2) -> list[str]:
     assignment, floor-fixed-point means for the update), same tie-breaks.
     Ends with ``c{iterations}`` (final centroids) and ``m{iterations-1}``
     (final members + sums)."""
-    from kinesis_stream_spark.functions.hashing import sql_md5_int64
-
     md5i = sql_md5_int64("CAST(vec_id AS VARCHAR)")
     sums = _sql_centroid_sums()
     means = ", ".join(_sql_centroid_mean(i) for i in range(DIM))
@@ -299,8 +299,6 @@ def similarity_kmeans_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     computation, not just shapes. Centroids are summarized as
     fixed-point checksums (floor(dim * 2^20): identical IEEE multiply +
     floor on both engines)."""
-    from kinesis_stream_spark.operators.similarity import kmeans_fit
-
     emb = _emb(spark, sf_dir)
     fitted = kmeans_fit(emb, k=4, dim=DIM, iterations=2)
     fixed = F.transform(
@@ -412,8 +410,6 @@ def similarity_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweep it, read the cost/recall knee, and pin the setting; the oracle
     replays the whole measurement (centroids, routing, ranking, recall
     join), so even IVF's misses at each nprobe must match exactly."""
-    from kinesis_stream_spark.operators.similarity import ivf_recall_sweep
-
     emb = _emb(spark, sf_dir)
     return ivf_recall_sweep(
         emb, _queries_df(emb), nprobes=_SWEEP_NPROBES, k=K, dim=DIM
@@ -460,8 +456,6 @@ def similarity_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     out. The oracle replays training, assignment, pair scoring, AND the
     transitive closure — the complete published-pipeline composition,
     every stage an operator this module already verifies in isolation."""
-    from kinesis_stream_spark.operators.similarity import semantic_dedup
-
     emb = _emb(spark, sf_dir)
     return semantic_dedup(
         emb, threshold=0.4, dim=DIM
@@ -476,8 +470,6 @@ def similarity_topk_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     only those inverted lists are scanned. The oracle replays training,
     assignment, routing, and ranking end-to-end — the complete
     train → index → search path a production ANN deployment runs."""
-    from kinesis_stream_spark.operators.similarity import topk_ivf_trained
-
     emb = _emb(spark, sf_dir)
     return topk_ivf_trained(
         emb, _queries_df(emb), k=K, dim=DIM
@@ -523,8 +515,6 @@ def similarity_topk_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantizer (same stats row, same clamp/floor tree) and the integer
     scoring, so parity pins the codes themselves, not just neighbor
     sets. No float ties exist for the two engines to break apart."""
-    from kinesis_stream_spark.operators.similarity import topk_sq8
-
     emb = _emb(spark, sf_dir)
     return topk_sq8(
         emb, emb.where(F.col("vec_id") < N_QUERIES), k=K, dim=DIM
@@ -563,12 +553,8 @@ def similarity_cluster_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     metric that predicts probe latency and triggers re-training. The
     oracle replays training, assignment, and the exact-integer Σn²
     before the (identical) IEEE ratio steps."""
-    from kinesis_stream_spark.operators.similarity import cluster_balance
-
     emb = _emb(spark, sf_dir)
     return cluster_balance(emb, k=4, dim=DIM).orderBy("cid")
-
-
 
 
 RANGE_TAU = 0.30
@@ -595,8 +581,6 @@ def similarity_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates, recall-complete retrieval). Map-side broadcast scoring
     + threshold filter: NO window, NO shuffle
     (operators/similarity.py:range_search)."""
-    from kinesis_stream_spark.operators.similarity import range_search
-
     emb = _emb(spark, sf_dir)
     return range_search(
         emb, _queries_df(emb), threshold=RANGE_TAU

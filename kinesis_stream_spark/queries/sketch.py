@@ -7,14 +7,21 @@ same row so the parity check grades the sketch's error itself.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from kinesis_stream_spark.operators.hll import (
     hll_distinct,
+    hll_set_ops,
     sql_hll_distinct,
     sql_hll_set_ops,
 )
-from kinesis_stream_spark.operators.kmv import sql_kmv_distinct
-from kinesis_stream_spark.operators.quantiles import sql_histogram_quantiles
+from kinesis_stream_spark.operators.kmv import (
+    kmv_distinct,
+    kmv_set_ops,
+    sql_kmv_distinct,
+    sql_kmv_set_ops,
+)
+from kinesis_stream_spark.operators.quantiles import histogram_quantiles, sql_histogram_quantiles
 from kinesis_stream_spark.queries import make_q
 from kinesis_stream_spark.sources.batch import load_table
 
@@ -61,10 +68,6 @@ def agg_hll_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     wise MAX of the two sketches — never a rescan), and their
     intersection (inclusion–exclusion), each next to the exact count
     (operators/hll.py)."""
-    from pyspark.sql import functions as F
-
-    from kinesis_stream_spark.operators.hll import hll_set_ops
-
     o = load_table(spark, sf_dir, "orders")
     a = o.where(F.col("o_orderpriority") == "1-URGENT")
     b = o.where(F.col("o_orderstatus") == "F")
@@ -85,8 +88,6 @@ def agg_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject over a map-side-combinable dedup; estimate =
     one pinned float literal over the k-th order statistic
     (operators/kmv.py)."""
-    from kinesis_stream_spark.operators.kmv import kmv_distinct
-
     li = load_table(spark, sf_dir, "lineitem")
     return kmv_distinct(li, _HLL_COLS).orderBy("column_name")
 
@@ -102,16 +103,8 @@ def agg_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the exact rank statistics — the exact side runs on the
     distributed prefix sum, the oracle on the textbook global window,
     so two rank strategies must agree (operators/quantiles.py)."""
-    from kinesis_stream_spark.operators.quantiles import histogram_quantiles
-
     li = load_table(spark, sf_dir, "lineitem")
     return histogram_quantiles(li, "l_extendedprice").orderBy("q_ppm")
-
-
-from kinesis_stream_spark.operators.kmv import (  # noqa: E402
-    kmv_set_ops,
-    sql_kmv_set_ops,
-)
 
 
 @_q(
@@ -125,8 +118,6 @@ def agg_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     ρ = |K_∪ ∩ K_A ∩ K_B|/|K_∪| (the estimator HLL cannot offer),
     plus the direct Jaccard row; exact counts ride alongside
     (operators/kmv.py)."""
-    from pyspark.sql import functions as F
-
     o = load_table(spark, sf_dir, "orders")
     a = o.where(F.col("o_orderpriority") == "1-URGENT")
     b = o.where(F.col("o_orderstatus") == "F")

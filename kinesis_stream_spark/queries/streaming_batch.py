@@ -19,12 +19,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from kinesis_stream_spark.operators.asof import sql_asof_join
 from kinesis_stream_spark.queries import make_q
 from kinesis_stream_spark.queries._util import sql_dsum
 from kinesis_stream_spark.sources.batch import load_table
+from kinesis_stream_spark.streaming.stateful import asof_enrich_batch, capped_sessions_batch
 from kinesis_stream_spark.streaming.windows import (
+    interval_join,
+    rate_anomaly,
+    session_funnel_agg,
     session_window_agg,
     sliding_window_agg,
+    static_enrich_agg,
     tumbling_window_agg,
     with_late_data_drop,
 )
@@ -212,8 +218,6 @@ def stream_session_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     on session state — one shuffle, stream-legal — instead of the
     quadratic click×purchase self-join. Oracle replays sessionization
     (gap-and-island) and the conditional aggregates."""
-    from kinesis_stream_spark.streaming.windows import session_funnel_agg
-
     return session_funnel_agg(load_table(spark, sf_dir, "events"), gap="10 minutes")
 
 
@@ -248,8 +252,6 @@ def stream_rate_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure integers (n·n_prev > 2·sum_prev) so no float mean/stddev can
     diverge between engines. The batch-side monitoring pass over a
     streaming count sink."""
-    from kinesis_stream_spark.streaming.windows import rate_anomaly
-
     return rate_anomaly(
         load_table(spark, sf_dir, "events"), duration="1 hour", lookback=3, factor=2
     )
@@ -275,8 +277,6 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the Kinesis source (enrich each record with reference data); on a
     stream Spark re-reads the dim per micro-batch, so dim updates are
     picked up without restarting the query."""
-    from kinesis_stream_spark.streaming.windows import static_enrich_agg
-
     return static_enrich_agg(
         load_table(spark, sf_dir, "events"),
         load_table(spark, sf_dir, "customer"),
@@ -304,8 +304,6 @@ def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream join would grow state forever); the batch plan is the same
     join minus state, which is what the oracle checks. The equi-key
     carries the shuffle; the range predicate evaluates post-join."""
-    from kinesis_stream_spark.streaming.windows import interval_join
-
     events = load_table(spark, sf_dir, "events")
     clicks = events.where(F.col("event_type") == "click").select(
         F.col("user_id").alias("l_user"), F.col("ts").alias("l_ts")
@@ -419,15 +417,11 @@ def stream_capped_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     splitting, the closed-only filter, and the close reasons. Chunk
     membership is tiebroken on event_id so the result is deterministic
     under equal timestamps."""
-    from kinesis_stream_spark.streaming.stateful import capped_sessions_batch
-
     ev = load_table(spark, sf_dir, "events")
     return capped_sessions_batch(
         ev, gap_us=600_000_000, cap=5, tiebreak_col="event_id"
     ).orderBy("key", "start_us")
 
-
-from kinesis_stream_spark.operators.asof import sql_asof_join  # noqa: E402
 
 _ASOF_ENRICH_ORACLE = (
     sql_asof_join(
@@ -465,7 +459,5 @@ def stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_stateful.py asserts stream == batch on a multi-batch
     drain. The batch twin runs the union-window asof_join — the plan
     the oracle checks here."""
-    from kinesis_stream_spark.streaming.stateful import asof_enrich_batch
-
     ev = load_table(spark, sf_dir, "events")
     return asof_enrich_batch(ev).orderBy("event_id")

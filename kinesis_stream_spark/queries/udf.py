@@ -13,8 +13,10 @@ from pyspark.sql import functions as F
 
 from kinesis_stream_spark.functions.hashing import sql_tokens
 from kinesis_stream_spark.functions.udfs import (
+    CHAR_STATS_ARROW_SCHEMA,
     TOKENIZE_SCHEMA,
     apply_zscore,
+    char_stats_map_in_arrow,
     mean_quantity_agg,
     price_band,
     tokenize_map_in_pandas,
@@ -137,11 +139,6 @@ def udf_map_in_arrow_char_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     RecordBatch with zero pandas conversion, the right shape when the
     per-batch work is itself columnar. Exact integer counts keep the
     Python path oracle-checkable."""
-    from kinesis_stream_spark.functions.udfs import (
-        CHAR_STATS_ARROW_SCHEMA,
-        char_stats_map_in_arrow,
-    )
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return docs.mapInArrow(char_stats_map_in_arrow, CHAR_STATS_ARROW_SCHEMA).orderBy(
         "doc_id"

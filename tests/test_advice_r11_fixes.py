@@ -120,9 +120,7 @@ class TestCupedFxSaturationClamp:
 
         rows = [(1, 3.0e13), (2, 5.0), (3, -3.0e13), (4, 7.5)]
         sdf = spark.createDataFrame(rows, "event_id bigint, value double")
-        got = _one_row(
-            bootstrap_ci(sdf, id_col="event_id", value_col="value")
-        )
+        got = _one_row(bootstrap_ci(sdf))
         con = duckdb.connect()
         con.register(
             "events_t", pd.DataFrame(rows, columns=["event_id", "value"])

@@ -90,7 +90,7 @@ def test_cdc_apply_merge_semantics(spark):
         [(2, "U", "B"), (3, "D", None), (4, "I", "d")],
         "k long, op string, v string",
     )
-    got = {r.k: r.v for r in cdc_apply(snap, chg, key_col="k", val_cols=["v"]).collect()}
+    got = {r.k: r.v for r in cdc_apply(snap, chg, val_cols=["v"]).collect()}
     # 1 untouched, 2 updated, 3 deleted, 4 inserted
     assert got == {1: "a", 2: "B", 4: "d"}
 
@@ -101,8 +101,8 @@ def test_cdc_apply_upsert_is_idempotent(spark):
     chg = spark.createDataFrame(
         [(1, "U", "z"), (9, "I", "n")], "k long, op string, v string"
     )
-    once = cdc_apply(snap, chg, key_col="k", val_cols=["v"])
-    twice = cdc_apply(once, chg, key_col="k", val_cols=["v"])
+    once = cdc_apply(snap, chg, val_cols=["v"])
+    twice = cdc_apply(once, chg, val_cols=["v"])
     assert sorted(map(tuple, once.collect())) == sorted(map(tuple, twice.collect()))
 
 

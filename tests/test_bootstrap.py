@@ -45,9 +45,7 @@ class TestMatchesPython:
         from kinesis_stream_spark.operators.experiment import bootstrap_ci
 
         rows = [(i, float((i * 17) % 31) + 0.5) for i in range(60)]
-        got = bootstrap_ci(
-            _df(spark, rows), id_col="event_id", value_col="value"
-        ).collect()[0]
+        got = bootstrap_ci(_df(spark, rows)).collect()[0]
         lo, hi = _python_boot(rows)
         assert got.n_rows == 60 and got.b_replicates == 64
         assert got.ci_lo == pytest.approx(lo, rel=1e-12)
@@ -63,9 +61,7 @@ class TestMatchesPython:
 
         def width(n):
             rows = [(i, float((i * 13) % 23)) for i in range(n)]
-            r = bootstrap_ci(
-                _df(spark, rows), id_col="event_id", value_col="value"
-            ).collect()[0]
+            r = bootstrap_ci(_df(spark, rows)).collect()[0]
             return r.ci_hi - r.ci_lo
 
         assert width(400) < width(40)
@@ -75,9 +71,7 @@ class TestContracts:
     def test_empty_one_row(self, spark):
         from kinesis_stream_spark.operators.experiment import bootstrap_ci
 
-        got = bootstrap_ci(
-            _df(spark, []), id_col="event_id", value_col="value"
-        ).collect()
+        got = bootstrap_ci(_df(spark, [])).collect()
         assert len(got) == 1
         assert got[0].n_rows == 0
         assert got[0].mean_value is None
@@ -87,39 +81,21 @@ class TestContracts:
         from kinesis_stream_spark.operators.experiment import bootstrap_ci
 
         rows = [(1, 2.0), (None, 9.0), (3, None)]
-        got = bootstrap_ci(
-            _df(spark, rows), id_col="event_id", value_col="value"
-        ).collect()[0]
+        got = bootstrap_ci(_df(spark, rows)).collect()[0]
         assert got.n_rows == 1
 
     def test_validation(self, spark):
         from kinesis_stream_spark.operators.experiment import bootstrap_ci
 
         with pytest.raises(ValueError, match="b_replicates"):
-            bootstrap_ci(
-                _df(spark, []), id_col="event_id", value_col="value",
-                b_replicates=2,
-            )
+            bootstrap_ci(_df(spark, []), b_replicates=2)
         with pytest.raises(ValueError, match="alpha_ppm"):
-            bootstrap_ci(
-                _df(spark, []), id_col="event_id", value_col="value",
-                alpha_ppm=0,
-            )
+            bootstrap_ci(_df(spark, []), alpha_ppm=0)
 
     def test_partition_invariance(self, spark):
         from kinesis_stream_spark.operators.experiment import bootstrap_ci
 
         rows = [(i, float((i * 7) % 19)) for i in range(80)]
-        base = str(
-            bootstrap_ci(
-                _df(spark, rows), id_col="event_id", value_col="value"
-            ).collect()
-        )
-        re9 = str(
-            bootstrap_ci(
-                _df(spark, rows).repartition(9),
-                id_col="event_id",
-                value_col="value",
-            ).collect()
-        )
+        base = str(bootstrap_ci(_df(spark, rows)).collect())
+        re9 = str(bootstrap_ci(_df(spark, rows).repartition(9)).collect())
         assert re9 == base

@@ -15,15 +15,14 @@ same-named parameter of either one is set, since the pair must keep
 one contract.
 
 Parameters that name the input schema (column and table names, keys,
-timestamps) are in scope only for the families bound to their schema,
-listed in :data:`SCHEMA_BOUND`; a family joins the tuple once its
-unset names have become literals. Elsewhere they are still skipped.
+timestamps) are options like any other: an operator family reads its
+input by name (the schema table in ``operators/__init__.py``), so a
+name no caller sets is a literal, not a parameter.
 """
 
 from __future__ import annotations
 
 import ast
-import re
 from collections import defaultdict
 from pathlib import Path
 
@@ -31,17 +30,6 @@ ROOT = Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "kinesis_stream_spark"
 SURFACE = (PACKAGE / "operators", PACKAGE / "queries")
 CALLERS = (PACKAGE, ROOT / "perfbench", ROOT / "tests")
-SCHEMA_NAME = re.compile(r"_col|_cols|table|key|_key|_ts")
-#: operator families whose schema-name parameters the census covers
-SCHEMA_BOUND = (
-    "operators/cms.py",
-    "operators/components.py",
-    "operators/dedup.py",
-    "operators/minhash_profile.py",
-    "operators/setjoin.py",
-    "operators/temporal.py",
-    "operators/text.py",
-)
 
 
 def _parse(path: Path) -> ast.Module:
@@ -131,8 +119,6 @@ def unset_options() -> list[str]:
     dead = []
     for (module, name), params in sorted(options.items()):
         for param in params:
-            if SCHEMA_NAME.search(param) and module not in SCHEMA_BOUND:
-                continue
             pair = [(module, name)] + [
                 t for t in _twins(options, name) if param in options[t]
             ]
@@ -163,8 +149,6 @@ def test_census_sees_a_knob_only_its_default_reaches(tmp_path, monkeypatch):
     monkeypatch.setitem(globals(), "SURFACE", (surface,))
     monkeypatch.setitem(globals(), "PACKAGE", surface.parent)
     monkeypatch.setitem(globals(), "CALLERS", (surface,))
-    assert unset_options() == ["operators/m.py:op(unit_us=DAY_US)"]
-    monkeypatch.setitem(globals(), "SCHEMA_BOUND", ("operators/m.py",))
     assert unset_options() == [
         "operators/m.py:op(unit_us=DAY_US)",
         "operators/m.py:op(value_col='v')",

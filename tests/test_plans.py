@@ -277,9 +277,50 @@ def test_bloom_probe_broadcasts_bitmap_and_chunk_windows_share_exchange(
 
     # chunk removal: the occurrence-count and first-occurrence-rank
     # windows partition identically, so they must share ONE exchange
-    # (3 total: spread, chunk key, doc reassembly)
+    # (2 planner exchanges: chunk key, doc reassembly). ``spread``'s
+    # repartition (REPARTITION_BY_NUM) is not counted: it is a no-op
+    # when the scan already has defaultParallelism partitions
     plan = _explain(QUERIES["dedup_duplicate_chunks"](spark, sf_dir))
-    assert len(re.findall(r"\(\d+\) Exchange\b", plan)) == 3, plan
+    assert len(re.findall(r"\bENSURE_REQUIREMENTS\b", plan)) == 2, plan
+
+
+def _conjuncts(cond: str) -> list[str]:
+    """Split a printed Catalyst condition ``((a AND b) AND c)`` into
+    ``[a, b, c]``, in the order codegen evaluates them."""
+    depth = 0
+    for i, ch in enumerate(cond):
+        depth += (ch == "(") - (ch == ")")
+        if depth == 0 and i < len(cond) - 1:
+            break
+    else:  # one pair of parentheses wraps the whole condition
+        inner, depth = cond[1:-1], 0
+        for i, ch in enumerate(inner):
+            depth += (ch == "(") - (ch == ")")
+            if depth == 0 and inner.startswith(" AND ", i):
+                return _conjuncts(inner[:i]) + _conjuncts(inner[i + 5 :])
+    return [cond]
+
+
+def test_fuzzy_join_runs_levenshtein_after_the_length_band(spark):
+    from kinesis_stream_spark.operators.fuzzy import fuzzy_pair_histogram, fuzzy_pairs
+
+    df = spark.createDataFrame(
+        [(1, "red apple"), (2, "red appel"), (3, "green pear")], "id long, name string"
+    )
+    for op in (fuzzy_pairs, fuzzy_pair_histogram):
+        plan = _explain(op(df, id_col="id", text_col="name", max_dist=2))
+        # the residual condition of the pair join: codegen short-circuits
+        # it left to right, so the banded DP must come last and run only
+        # on pairs inside the constant-time length band
+        [cond] = [
+            line.split(": ", 1)[1]
+            for line in plan.splitlines()
+            if line.startswith("Join condition: ") and "levenshtein(" in line
+        ]
+        parts = _conjuncts(cond)
+        dp = [i for i, p in enumerate(parts) if "levenshtein(" in p]
+        assert dp == [len(parts) - 1], cond
+        assert any(p.startswith("(abs(") for p in parts[:-1]), cond
 
 
 def test_domain_cap_single_shuffle_two_windows(spark, sf_dir):

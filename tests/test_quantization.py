@@ -311,9 +311,7 @@ def test_ivfpq_nprobe_prunes_lists(spark, corpus):
     # the query's own best list via the same assignment operator
     best = {
         r.vid: r.cid
-        for r in assign_to_centroids(
-            queries, coarse, id_col="query_id", vec_col="embedding"
-        ).collect()
+        for r in assign_to_centroids(queries, coarse, id_col="query_id").collect()
     }
     lists = {r.vid: r.list_id for r in index.collect()}
     assert out

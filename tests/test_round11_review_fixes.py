@@ -81,8 +81,6 @@ class TestWideSumHeadroom:
         rows = [(i, 2.5e12) for i in range(8)]  # beyond the cap
         got = bootstrap_ci(
             spark.createDataFrame(rows, "event_id long, value double"),
-            id_col="event_id",
-            value_col="value",
             b_replicates=8,
         ).collect()[0]
         means = []

@@ -98,10 +98,7 @@ def test_lloyd_rows_matches_python_reference(spark, case):
     # a coarse grid makes equal scores common, so the tie-break is exercised
     vecs = [list(rng.integers(-4, 5, DIM) / 4.0) for _ in range(n)]
     ids = [int(i) for i in rng.permutation(1000)[:n]]
-    got = lloyd_rows(
-        _emb(spark, vecs, ids), m=m, k=k, dim=DIM, iterations=iterations,
-        id_col="vec_id", vec_col="embedding",
-    )
+    got = lloyd_rows(_emb(spark, vecs, ids), m=m, k=k, dim=DIM, iterations=iterations)
     want = _reference_lloyd(ids, vecs, m=m, k=k, dim=DIM, iterations=iterations)
     assert got and _hex(got) == _hex(want)
 
@@ -110,10 +107,7 @@ def test_lloyd_rows_drops_clusters_when_k_exceeds_distinct_vectors(spark):
     vecs = [[1.0, 0.0, 0.5, 0.25], [-1.0, 0.5, 0.0, 2.0]] * 5
     ids = list(range(10))
     for m in (1, 2):
-        got = lloyd_rows(
-            _emb(spark, vecs, ids), m=m, k=6, dim=DIM, iterations=2,
-            id_col="vec_id", vec_col="embedding",
-        )
+        got = lloyd_rows(_emb(spark, vecs, ids), m=m, k=6, dim=DIM, iterations=2)
         want = _reference_lloyd(ids, vecs, m=m, k=6, dim=DIM, iterations=2)
         assert _hex(got) == _hex(want)
         # two distinct vectors: at most two clusters survive per subspace
@@ -124,9 +118,7 @@ def test_lloyd_rows_drops_clusters_when_k_exceeds_distinct_vectors(spark):
 def test_lloyd_rows_on_an_empty_corpus(spark):
     empty = _emb(spark, [])
     for m in (1, 2):
-        assert lloyd_rows(
-            empty, m=m, k=3, dim=DIM, iterations=2, id_col="vec_id", vec_col="embedding"
-        ) == []
+        assert lloyd_rows(empty, m=m, k=3, dim=DIM, iterations=2) == []
 
 
 def _jobs(spark, fn):
@@ -164,9 +156,7 @@ def test_trained_artifacts_collect_without_a_job_after_a_select(spark):
         for r in fit.orderBy("cid").collect()
     ] == [
         (c, n, [x.hex() for x in cent])
-        for _s, c, n, cent in lloyd_rows(
-            emb, m=1, k=3, dim=DIM, iterations=2, id_col="vec_id", vec_col="embedding"
-        )
+        for _s, c, n, cent in lloyd_rows(emb, m=1, k=3, dim=DIM, iterations=2)
     ]
 
 
